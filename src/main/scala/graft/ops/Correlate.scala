@@ -19,14 +19,15 @@ object Correlate {
 
   /** Flatten traces to (traceId, spanId), deduping duplicate traceIds with
     * last-write-wins in input order (reference dict comprehension
-    * `src/batch_tlb.py:27-30`).
+    * `src/batch_tlb.py:27-30`). Only the span ids cross the dedup
+    * exchange, not the whole span structs.
     */
   def traceSpans(traces: DataFrame): DataFrame =
     traces
       .withColumn("__seq", monotonically_increasing_id())
       .groupBy(col("traceId"))
-      .agg(max_by(col("spans"), col("__seq")).as("spans"))
-      .select(col("traceId"), explode(col("spans").getField("spanId")).as("spanId"))
+      .agg(max_by(col("spans").getField("spanId"), col("__seq")).as("spanIds"))
+      .select(col("traceId"), explode(col("spanIds")).as("spanId"))
 
   /** events ⋈ traceSpans ⋈ logs, keeping the event + log columns needed for
     * downstream conditional counts. Inner joins reproduce the reference's

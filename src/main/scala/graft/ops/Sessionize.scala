@@ -101,16 +101,34 @@ object Sessionize {
       orderBy: Seq[org.apache.spark.sql.Column],
       eventType: String,
       startType: String,
-      endType: String): DataFrame = {
+      endType: String): DataFrame =
+    pairEnds(df, key, tVal, orderBy, col(eventType) === startType, col(eventType) === endType)
+      .where(col("__paired"))
+      .select(col(key), col("duration"))
+
+  /** The pairing window behind [[pairedDurations]], on every row of `df`:
+    * adds `__paired`, true on an end event that closes a pending start,
+    * and `duration` (`tVal` minus that start's `tVal`, null on the other
+    * rows). `isStart`/`isEnd` are the event-kind predicates, so a caller
+    * can compute them before its exchange and ship two booleans instead of
+    * the event-type string. Helper columns `__t`, `__last_start` and
+    * `__last_end` stay on the result.
+    */
+  def pairEnds(
+      df: DataFrame,
+      key: String,
+      tVal: org.apache.spark.sql.Column,
+      orderBy: Seq[org.apache.spark.sql.Column],
+      isStart: org.apache.spark.sql.Column,
+      isEnd: org.apache.spark.sql.Column): DataFrame = {
     val w = Window.partitionBy(col(key)).orderBy(orderBy: _*)
       .rowsBetween(Window.unboundedPreceding, -1)
     df.withColumn("__t", tVal)
-      .withColumn("__last_start", max(when(col(eventType) === startType, col("__t"))).over(w))
-      .withColumn("__last_end", max(when(col(eventType) === endType, col("__t"))).over(w))
-      .where(
-        col(eventType) === endType && col("__last_start").isNotNull &&
-          (col("__last_end").isNull || col("__last_start") > col("__last_end")))
-      .select(col(key), (col("__t") - col("__last_start")).as("duration"))
+      .withColumn("__last_start", max(when(isStart, col("__t"))).over(w))
+      .withColumn("__last_end", max(when(isEnd, col("__t"))).over(w))
+      .withColumn("__paired", isEnd && col("__last_start").isNotNull &&
+        (col("__last_end").isNull || col("__last_start") > col("__last_end")))
+      .withColumn("duration", when(col("__paired"), col("__t") - col("__last_start")))
   }
 
   /** Gap-based session aggregation via Spark's native `session_window`:

@@ -1,5 +1,9 @@
 package graft.pipeline
 
+import java.util.concurrent.{Executors, TimeUnit}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+import scala.util.{Success, Try}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Io
@@ -68,6 +72,20 @@ object PipelineCompiler {
   /** Execute the pipeline for one `hour`. Returns each stage's output and
     * the final mapping DataFrames. Outputs are written as JSON when the
     * stage declares `output_file` (resolved through `resolve`).
+    *
+    * Work that does not depend on an earlier stage does not wait for it:
+    *  - every path is resolved up front on the calling thread, in stage
+    *    order (a stage's input, then its output when outputs are written);
+    *  - every stage input's schema inference runs at once;
+    *  - the enriched and mapping frames are built lazily in topological
+    *    order, as before, so the plans are unchanged;
+    *  - every stage write is submitted at once, so a long downstream chain
+    *    does not queue behind the upstream writes.
+    * Reads and writes run on a pool of one thread per stage, created and
+    * shut down inside the call; its threads inherit the caller's Spark
+    * local properties. When a stage fails, the stages that do not depend
+    * on it still run, and once every write has settled `run` throws the
+    * failure of the first failed stage in stage order.
     */
   def run(
       spark: SparkSession,
@@ -75,30 +93,53 @@ object PipelineCompiler {
       hour: String,
       resolve: PathResolver = s3aResolver,
       writeOutputs: Boolean = true): (Vector[StageResult], Map[String, DataFrame]) = {
-    var mappings = Map.empty[String, DataFrame]
-    val results = orderStages(spec).map { stage =>
-      val inputPath = stage.input match {
+    val stages = orderStages(spec)
+    val paths = stages.map { stage =>
+      val input = stage.input match {
         case LocalFileInput(p) => resolve(Io.templated(p, hour))
         case S3Input(bucket, prefix) => resolve(s"s3a://$bucket/${Io.templated(prefix, hour)}")
       }
-      val raw = spark.read.option("multiLine", value = true).json(inputPath)
-      val enriched = stage.mappingRead match {
-        case Some(MappingRead(name, keyField)) => Enrich(raw, mappings(name), keyField)
-        case None => raw
-      }
-      stage.mappingWrite.foreach { w =>
-        // Extraction runs on the enriched records (reference order:
-        // enrich, then extract — src/data_processor.py:24-34).
-        mappings += w.mappingName ->
-          Mappings.extract(enriched, w.keyPath, w.valueFields.toSeq, w.single)
-      }
-      stage.outputFile.foreach { out =>
-        if (writeOutputs)
-          Io.writeJson(enriched, resolve(Io.templated(out, hour)), singleFile = true)
-      }
-      StageResult(stage, enriched)
+      (input, stage.outputFile.filter(_ => writeOutputs).map(out => resolve(Io.templated(out, hour))))
     }
-    (results, mappings)
+    val pool = Executors.newFixedThreadPool(math.max(1, stages.size), { (r: Runnable) =>
+      val t = new Thread(r, s"graft-pipeline-$hour")
+      t.setDaemon(true)
+      t
+    })
+    try {
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      def settled[T](f: Future[T]): Try[T] = Try(Await.result(f, Duration.Inf))
+      val raws = paths.map { case (input, _) =>
+        Future(spark.read.option("multiLine", value = true).json(input))
+      }
+      var mappings = Map.empty[String, Try[DataFrame]]
+      val enriched = stages.zip(raws).map { case (stage, raw) =>
+        val df = settled(raw).flatMap { r =>
+          stage.mappingRead match {
+            case Some(MappingRead(name, keyField)) => mappings(name).flatMap(m => Try(Enrich(r, m, keyField)))
+            case None => Success(r)
+          }
+        }
+        stage.mappingWrite.foreach { w =>
+          // Extraction runs on the enriched records (reference order:
+          // enrich, then extract — src/data_processor.py:24-34).
+          mappings += w.mappingName ->
+            df.flatMap(e => Try(Mappings.extract(e, w.keyPath, w.valueFields.toSeq, w.single)))
+        }
+        df
+      }
+      // Every write is in flight before the first one is awaited.
+      val writes = enriched.zip(paths).map { case (df, (_, output)) =>
+        df.toOption.zip(output).map { case (e, out) => Future(Io.writeJson(e, out, singleFile = true)) }
+      }
+      val written = writes.map(_.fold[Try[Unit]](Success(()))(settled))
+      enriched.zip(written).foreach { case (df, w) => df.get; w.get }
+      (stages.zip(enriched).map { case (stage, df) => StageResult(stage, df.get) },
+        mappings.map { case (name, m) => name -> m.get })
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+    }
   }
 
   /** Arrival-driven execution — the native replacement for the reference's

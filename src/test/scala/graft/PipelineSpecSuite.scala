@@ -112,6 +112,74 @@ class PipelineSpecSuite extends SparkSpec {
       canon(s"$fixtures/log_processed_$hour.json", multiLine = true))
   }
 
+  /** The fixture resolver of the golden test, logging every call with the
+    * thread that made it.
+    */
+  private def loggingResolver(out: String, trace: String = s"$fixtures/trace_$hour.json")
+      : (PipelineCompiler.PathResolver, scala.collection.mutable.Buffer[(String, String)]) = {
+    val calls = java.util.Collections.synchronizedList(new java.util.ArrayList[(String, String)]())
+    val resolver: PipelineCompiler.PathResolver = { p =>
+      calls.add(p -> Thread.currentThread().getName)
+      if (p.startsWith("s3a://demo-trace-bucket/")) trace
+      else if (p.startsWith("s3a://demo-log-bucket/")) s"$fixtures/log_$hour.json"
+      else p.replace("{out}", out)
+    }
+    (resolver, scala.jdk.CollectionConverters.ListHasAsScala(calls).asScala)
+  }
+
+  private def poolThreads: Seq[Thread] =
+    scala.jdk.CollectionConverters.SetHasAsScala(Thread.getAllStackTraces.keySet).asScala.toSeq
+      .filter(_.getName.startsWith("graft-pipeline-"))
+
+  test("run resolves each input and written output once, in stage order, on the calling thread") {
+    val spec = PipelineSpec.fromYaml(yamlText)
+    val inputs = Seq(s"$fixtures/user_exp_$hour.json",
+      s"s3a://demo-trace-bucket/traces/$hour/", s"s3a://demo-log-bucket/logs/$hour/")
+    val outputs = Seq("user_exp", "trace", "log").map(n => s"{out}/${n}_processed_$hour.json")
+    val caller = Thread.currentThread().getName
+
+    val out = Files.createTempDirectory("graft_pipeline_resolve").toString
+    val (resolver, calls) = loggingResolver(out)
+    PipelineCompiler.run(spark, spec, hour, resolver)
+    assert(calls.toSeq == inputs.zip(outputs).flatMap { case (i, o) => Seq(i, o) }.map(_ -> caller))
+
+    // No outputs: only the inputs resolve, and the only jobs are the three
+    // schema inferences, no write.
+    val dry = Files.createTempDirectory("graft_pipeline_dry").toString
+    val (dryResolver, dryCalls) = loggingResolver(dry)
+    val jobs = org.apache.spark.JobCounter(spark.sparkContext) {
+      PipelineCompiler.run(spark, spec, hour, dryResolver, writeOutputs = false)
+    }
+    assert(dryCalls.toSeq == inputs.map(_ -> caller))
+    assert(jobs == 3, s"$jobs jobs")
+    assert(new java.io.File(dry).list().isEmpty)
+  }
+
+  test("a missing stage input fails run with that stage's error after the other writes settle") {
+    val spec = PipelineSpec.fromYaml(yamlText)
+    val out = Files.createTempDirectory("graft_pipeline_missing").toString
+    val missing = s"$out/no_such_trace_$hour.json"
+    val (resolver, _) = loggingResolver(out, trace = missing)
+    val e = intercept[org.apache.spark.sql.AnalysisException](PipelineCompiler.run(spark, spec, hour, resolver))
+    assert(e.getMessage.contains("no_such_trace"))
+    // stage 1 does not depend on stage 2: its write completed
+    assert(canon(s"$out/user_exp_processed_$hour.json", multiLine = false) ==
+      canon(s"$fixtures/user_exp_processed_$hour.json", multiLine = true))
+    // stage 3 reads stage 2's mapping: never written
+    assert(!new java.io.File(s"$out/log_processed_$hour.json").exists())
+    poolThreads.foreach(_.join(10000))
+    assert(poolThreads.isEmpty, s"pool threads alive: ${poolThreads.map(_.getName)}")
+  }
+
+  test("the reference hour runs in at most 12 Spark jobs") {
+    val out = Files.createTempDirectory("graft_pipeline_jobs").toString
+    val (resolver, _) = loggingResolver(out)
+    val jobs = org.apache.spark.JobCounter(spark.sparkContext) {
+      PipelineCompiler.run(spark, PipelineSpec.fromYaml(yamlText), hour, resolver)
+    }
+    assert(jobs <= 12, s"$jobs jobs")
+  }
+
   test("file arrival triggers the pipeline for that hour (sensor replacement)") {
     val watch = Files.createTempDirectory("graft_pipeline_watch").toString
     val out = Files.createTempDirectory("graft_pipeline_arrival").toString
