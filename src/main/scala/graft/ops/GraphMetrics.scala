@@ -309,13 +309,13 @@ object GraphMetrics {
     * semi-join of edges against surviving nodes (hash join on node id).
     * Nothing driver-side except the per-round convergence scalar — edge
     * count, a single Long — and rounds are capped: real graphs peel in
-    * few rounds (degeneracy ordering depth), and `maxRounds` bounds the
-    * adversarial chain case (a path peels one layer per round).
-    * Lineage is truncated each round ([[Staging.stage]], the iterative-op
-    * pattern shared with [[labelPropagation]] — caller-selectable fault
+    * few rounds (degeneracy ordering depth), while a path peels one layer
+    * per round. A peel cut short by `maxRounds` is not the k-core (it
+    * keeps nodes a later round would delete), so exhausting the bound
+    * throws `IllegalStateException`; raise it for deep cascades. Each
+    * round is staged ([[Fixpoint.peel]], caller-selectable fault
     * tolerance via `reliable`): the loop's plan would otherwise double
-    * per round. Eager/fault-tolerance trade documented at
-    * [[neighborhoodSize]].
+    * per round.
     */
   def kCore(
       pairs: DataFrame,
@@ -326,32 +326,14 @@ object GraphMetrics {
       reliable: Boolean = false): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
-    // Explode symmetrize (r18): computes canonicalEdges once, not once
-    // per union branch. Plain staging — per-round declared layouts
-    // regressed the peel-loop class locally (see [[coreDecomposition]]).
-    var sym = Staging.stage(
-      symmetrize(canonicalEdges(pairs, aCol, bCol)), reliable)
-    var nEdges = sym.count()
-    var round = 0
-    var converged = nEdges == 0L
-    while (!converged && round < maxRounds) {
+    val core = new Fixpoint(reliable).peel(symmetrize(canonicalEdges(pairs, aCol, bCol)),
+      maxRounds, Fixpoint.Fail("kCore", s"maxRounds=$maxRounds"))(_.count()) { sym =>
       val keep = sym.groupBy("src").agg(count(lit(1)).as("__d"))
         .where(col("__d") >= k).select(col("src").as("__keep"))
-      val next = Staging.stage(sym
-        .join(keep, col("src") === col("__keep"), "left_semi")
-        .join(keep, col("dst") === col("__keep"), "left_semi"),
-        reliable)
-      // count is the convergence probe AND the materializing action; on
-      // the reliable path the previous round's blocks can be released
-      // once the new round is on disk — at most two edge sets held.
-      val nNext = next.count()
-      if (reliable) sym.unpersist()
-      converged = nNext == nEdges
-      sym = next
-      nEdges = nNext
-      round += 1
+      sym.join(keep, col("src") === col("__keep"), "left_semi")
+        .join(keep, col("dst") === col("__keep"), "left_semi")
     }
-    sym.groupBy("src").agg(count(lit(1)).as("core_degree"))
+    core.groupBy("src").agg(count(lit(1)).as("core_degree"))
       .where(col("core_degree") >= k)
       .withColumnRenamed("src", "id")
   }
@@ -519,11 +501,11 @@ object GraphMetrics {
     * the caller picks a deterministic bounded set (md5 top-k, modular
     * slice), keeping state linear in the graph for fixed k. Per round:
     * one equi-join of the frontier with the (staged) symmetric edge
-    * list + one anti-join against visited — textbook frontier BFS,
-    * O(diameter) rounds, nothing collects. Unreachable pairs are simply
-    * absent (closeness is over the reached set, the standard
-    * disconnected-graph convention — Wasserman-Faust variants can be
-    * derived from the returned counts).
+    * list + one min-merge aggregation with visited ([[Fixpoint.relax]])
+    * — frontier BFS, O(diameter) rounds, nothing collects. Unreachable
+    * pairs are simply absent (closeness is over the reached set, the
+    * standard disconnected-graph convention — Wasserman-Faust variants
+    * can be derived from the returned counts).
     */
   def multiSourceCloseness(
       pairs: DataFrame,
@@ -534,62 +516,23 @@ object GraphMetrics {
       maxDepth: Int = 10,
       reliable: Boolean = false): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be >= 1: $maxDepth")
-    // Explode symmetrize (r18): one canonicalEdges pass, not two.
-    // Declared-layout staging + shuffle_hash hints were tried on this
-    // loop and measured 0.58x (q310, interleaved 2x2 A/B at sf0.1) —
-    // the pinned 32-way layout fragments frontier-sized per-round
-    // frames AQE was correctly coalescing; plain staging restored it.
-    val sym = Staging.stage(
-      symmetrize(canonicalEdges(pairs, aCol, bCol)), reliable)
-    var visited = Staging.stage(sources
-      .select(col(sourceCol).cast("long").as("source"))
-      .distinct()
-      .select(col("source"), col("source").as("node"), lit(0L).as("dist")),
-      reliable)
-    val visitedFrames = scala.collection.mutable.ArrayBuffer(visited)
-    var frontier = visited
-    var depth = 0
-    var exhausted = visited.isEmpty
-    while (!exhausted && depth < maxDepth) {
-      depth += 1
-      // ONE staged aggregation per round (r18, the temporalReachability
-      // fusion): raw frontier expansions union the visited table, each
-      // visited row carrying its own dist again as `old`; min(dist) keeps
-      // the first-reach depth (expansions arrive at depth > every prior
-      // dist), and `old is null` IS the newly-discovered set — so the
-      // previous shape's distinct + anti-join + separate next/grown
-      // staging jobs (2 jobs + 2 exchanges per round) collapse to one
-      // staging job over one exchange, same rows out.
-      val candRaw = frontier
-        .join(sym, col("node") === col("src"))
-        .select(col("source"), col("dst").as("node"),
-          lit(depth.toLong).as("dist"), lit(null).cast("long").as("old"))
-      val grown = Staging.stage(
-        visited.select(col("source"), col("node"), col("dist"), col("dist").as("old"))
-          .unionByName(candRaw)
-          .groupBy(col("source"), col("node"))
-          .agg(min(col("dist")).as("dist"), min(col("old")).as("old")),
-        reliable)
-      visitedFrames += grown
-      val next = grown.where(col("old").isNull)
-        .select(col("source"), col("node"), col("dist"))
-      exhausted = next.isEmpty
-      visited = grown.select(col("source"), col("node"), col("dist"))
-      frontier = next
+    val fx = new Fixpoint(reliable)
+    val sym = fx.stage(symmetrize(canonicalEdges(pairs, aCol, bCol)))
+    // min(dist) keeps the first-reach depth: round r's candidates arrive
+    // at depth r, beyond every dist already in the table
+    val (visited, _) = fx.relax(sources
+        .select(col(sourceCol).cast("long").as("source")).distinct()
+        .select(col("source"), col("source").as("node"), lit(0L).as("dist")),
+      Seq("source", "node"), "dist", maxDepth, Fixpoint.Truncate) { (frontier, depth) =>
+      frontier.join(sym, col("node") === col("src"))
+        .select(col("source"), col("dst").as("node"), lit(depth.toLong).as("dist"))
     }
-    val out = visited.groupBy("source")
+    fx.finish(visited.groupBy("source")
       .agg((count(lit(1)) - 1L).as("n_reached"), sum(col("dist")).as("sum_dist"))
       .select(col("source"), col("n_reached"), col("sum_dist"),
         when(col("sum_dist") > 0L,
           expr("(n_reached * 1000000L) div sum_dist")).otherwise(lit(0L))
-          .as("closeness_ppm"))
-    if (reliable) {
-      val pinned = Staging.stage(out, reliable)
-      pinned.count()
-      visitedFrames.foreach(_.unpersist())
-      sym.unpersist()
-      pinned
-    } else out
+          .as("closeness_ppm")))
   }
 
   /** TIME-RESPECTING reachability (temporal BFS): from each source, the
@@ -613,7 +556,7 @@ object GraphMetrics {
     * Scale shape per round: one equi-join of the improved frontier with
     * the (staged) temporal edge list + a non-equi `t ≥ arr` FILTER on
     * the join output (not a join condition — the plan stays a hash
-    * join), one min-agg, one merge join with the arrivals table. State
+    * join), one min-merge aggregation with the arrivals table. State
     * is (source, node, arrival) — |sources| × reach, the same explicit
     * bounded-source contract as [[multiSourceCloseness]]. Returns
     * (source, node, arrival) with arrival the source's own start row
@@ -630,63 +573,21 @@ object GraphMetrics {
       maxHops: Int = 10,
       reliable: Boolean = false): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1: $maxHops")
-    // Plain staging (r18 note): declared-layout stageHash(e, e_src) +
-    // shuffle_hash hints were tried and measured 0.80x (q311,
-    // interleaved 2x2 A/B at sf0.1) — pinned 32-way layouts fragment
-    // the small per-hop frames AQE was coalescing correctly.
-    val e = Staging.stage(edges.select(
+    val fx = new Fixpoint(reliable)
+    val e = fx.stage(edges.select(
       col(srcCol).cast("long").as("e_src"), col(dstCol).cast("long").as("e_dst"),
       col(timeCol).cast("long").as("e_t"))
-      .where(col("e_src").isNotNull && col("e_dst").isNotNull && col("e_t").isNotNull),
-      reliable)
+      .where(col("e_src").isNotNull && col("e_dst").isNotNull && col("e_t").isNotNull))
     // sources start "before all time": any first edge out is usable
-    var arrivals = Staging.stage(sources
-      .select(col(sourceCol).cast("long").as("source")).distinct()
-      .select(col("source"), col("source").as("node"), lit(Long.MinValue).as("arr")),
-      reliable)
-    val frames = scala.collection.mutable.ArrayBuffer(arrivals)
-    var frontier = arrivals
-    var hops = 0
-    var done = arrivals.isEmpty
-    while (!done && hops < maxHops) {
-      hops += 1
-      // ONE staged aggregation per hop (r18): raw relaxation candidates
-      // (frontier ⋈ edges, un-pre-aggregated — the map-side partial min
-      // combines them exactly where a separate pre-agg would) union the
-      // prior arrivals, each arrivals row carrying its own value again as
-      // `old`. Per (source, node): min(arr) is the merged earliest
-      // arrival, min(old) the prior one (null iff newly reached), and
-      // `old is null or arr < old` IS last round's improved set — so the
-      // previous shape's separate improved-stage + left-join + second
-      // merge-stage (2 staging jobs + 3 exchanges per hop) collapses to
-      // one staging job over one exchange, same row multiset out.
-      val candRaw = frontier
-        .join(e, col("node") === col("e_src"))
+    val (arrivals, _) = fx.relax(sources
+        .select(col(sourceCol).cast("long").as("source")).distinct()
+        .select(col("source"), col("source").as("node"), lit(Long.MinValue).as("arr")),
+      Seq("source", "node"), "arr", maxHops, Fixpoint.Truncate) { (frontier, _) =>
+      frontier.join(e, col("node") === col("e_src"))
         .where(col("e_t") >= col("arr"))
-        .select(col("source"), col("e_dst").as("node"),
-          col("e_t").as("arr"), lit(null).cast("long").as("old"))
-      val merged = Staging.stage(
-        arrivals.select(col("source"), col("node"), col("arr"), col("arr").as("old"))
-          .unionByName(candRaw)
-          .groupBy(col("source"), col("node"))
-          .agg(min(col("arr")).as("arr"), min(col("old")).as("old")),
-        reliable)
-      frames += merged
-      val improved = merged
-        .where(col("old").isNull || col("arr") < col("old"))
-        .select(col("source"), col("node"), col("arr"))
-      done = improved.isEmpty
-      arrivals = merged.select(col("source"), col("node"), col("arr"))
-      frontier = improved
+        .select(col("source"), col("e_dst").as("node"), col("e_t").as("arr"))
     }
-    val out = arrivals.where(col("arr") =!= Long.MinValue)
-    if (reliable) {
-      val pinned = Staging.stage(out, reliable)
-      pinned.count()
-      frames.foreach(_.unpersist())
-      e.unpersist()
-      pinned
-    } else out
+    fx.finish(arrivals.where(col("arr") =!= Long.MinValue))
   }
 
   def linkJaccard(
@@ -765,11 +666,11 @@ object GraphMetrics {
     * staged edge list (support carried through, so the CONVERGED
     * round's support table IS the result — no extra enumeration), count
     * as the convergence probe, the round's triangle cache released
-    * as soon as its output is materialized. Unlike [[kCore]] (whose
-    * truncation yields a conservative superset), an unconverged peel is
-    * NOT a k-truss — removal cascades can legitimately run one layer
-    * per round — so exhausting `maxRounds` throws rather than returning
-    * a silently wrong edge set; raise the bound for deep cascades.
+    * once its output is materialized. As in [[kCore]], an unconverged
+    * peel is NOT a k-truss — removal cascades can legitimately run one
+    * layer per round — so exhausting `maxRounds` throws rather than
+    * returning a silently wrong edge set; raise the bound for deep
+    * cascades.
     */
   def kTruss(
       pairs: DataFrame,
@@ -780,53 +681,19 @@ object GraphMetrics {
       reliable: Boolean = false): DataFrame = {
     require(k >= 3, s"k must be >= 3: $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
-    val spark = pairs.sparkSession
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "a_id BIGINT, b_id BIGINT, support BIGINT"))
-    var e = Staging.stage(canonicalEdges(pairs, aCol, bCol), reliable)
-    // `e` becomes a PROJECTION of the staged round output below, so the
-    // frame the CacheManager actually holds is tracked separately —
-    // unpersisting the projection is a silent no-op (uncache matches on
-    // sameResult, which a select over the persisted plan fails) and
-    // would leak one DISK_ONLY edge set per peel round.
-    var stagedPrev = e
-    var nEdges = e.count()
-    if (nEdges == 0L) {
-      // release the staged (empty) edge frame before bailing — the
-      // CacheManager otherwise holds it for the session (the same leak
-      // class stagedPrev exists to prevent inside the loop)
-      if (reliable) e.unpersist()
-      return empty
-    }
-    var result: DataFrame = null
-    var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
-      val (sup, oriented) = edgeSupport(e)
-      val next = Staging.stage(
-        e.join(sup, Seq("u", "v"), "left")
-          .select(col("u"), col("v"), coalesce(col("support"), lit(0L)).as("support"))
-          .where(col("support") >= k - 2),
-        reliable)
-      val nNext = next.count()
-      oriented.unpersist()
-      if (reliable) stagedPrev.unpersist()
-      stagedPrev = next
-      converged = nNext == nEdges
-      if (converged) result = next
-      e = next.select(col("u"), col("v"))
-      nEdges = nNext
-      round += 1
-      if (nEdges == 0L && !converged) { converged = true; result = next }
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"kTruss did not converge in $maxRounds rounds — the peel cascade is " +
-          "deeper than the bound; raise maxRounds (an unconverged edge set is " +
-          "not a k-truss, so returning it would be silently wrong)")
-    result.select(col("u").as("a_id"), col("v").as("b_id"), col("support"))
+    var oriented: Option[DataFrame] = None
+    val truss = try new Fixpoint(reliable).peel(
+      canonicalEdges(pairs, aCol, bCol).withColumn("support", lit(0L)),
+      maxRounds, Fixpoint.Fail("kTruss", s"maxRounds=$maxRounds"))(_.count()) { cur =>
+      oriented.foreach(_.unpersist())
+      val e = cur.select(col("u"), col("v"))
+      val (sup, o) = edgeSupport(e)
+      oriented = Some(o)
+      e.join(sup, Seq("u", "v"), "left")
+        .select(col("u"), col("v"), coalesce(col("support"), lit(0L)).as("support"))
+        .where(col("support") >= k - 2)
+    } finally oriented.foreach(_.unpersist())
+    truss.select(col("u").as("a_id"), col("v").as("b_id"), col("support"))
   }
 
   /** [[kTruss]] reduced to its support histogram: (support, n_edges).
@@ -867,7 +734,7 @@ object GraphMetrics {
     * list with the node-sized h table + one NODE-KEYED window
     * (`row_number` over neighbors sorted by value desc — max(min(rank,
     * value)) IS the H-index) + one agg. No global window, nothing
-    * collects; per-round state staged ([[Staging.stage]]). Rounds: on
+    * collects; per-round state staged ([[Fixpoint.peel]]). Rounds: on
     * real (core-dense) graphs a handful; pathological chains cascade one
     * layer per round like every peel does — `maxRounds` fails loudly
     * rather than returning a non-fixpoint (wrong) decomposition.
@@ -884,22 +751,8 @@ object GraphMetrics {
       maxRounds: Int = 100,
       reliable: Boolean = false): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
-    // Explode symmetrize (r18): computes canonicalEdges once, not once
-    // per union branch, inside the staging job. A declared-layout
-    // stageHash(sym, dst) was ALSO tried here (kill the per-update
-    // edge-list exchange) and measured 0.62x in an interleaved 2x2 A/B
-    // at sf0.1 — the pinned 32-way layout fragments the tiny per-update
-    // frames that AQE byte-coalescing was handling correctly, the same
-    // local-regression class as r17's bruteForceTopK Spread. Plain
-    // staging keeps AQE free to size the per-update exchanges.
     val sym = Staging.stage(
       symmetrize(canonicalEdges(pairs, aCol, bCol)), reliable)
-    var h = Staging.stage(sym.groupBy("src").agg(count(lit(1)).as("h")), reliable)
-    def total(df: DataFrame): Long =
-      Option(df.agg(sum(col("h"))).head().get(0)).fold(0L)(_.asInstanceOf[Long])
-    var prevSum = total(h)
-    var round = 0
-    var converged = prevSum == 0L
     // H-index from the VALUE HISTOGRAM, not per-neighbor ranks: with
     // c_v = #neighbors at value ≥ v, H = max over present values v of
     // min(v, c_v) (between present values c is constant, so the max over
@@ -933,23 +786,11 @@ object GraphMetrics {
     // only on sparse chain-y graphs where rounds are many and frontiers
     // tiny — revisit if such inputs become the workload.
     val batch = 3
-    while (!converged && round < maxRounds) {
-      val next = Staging.stage(
-        Iterator.iterate(h)(update).drop(batch).next(),
-        reliable)
-      // the sum is the convergence probe AND the materializing action
-      val nextSum = total(next)
-      if (reliable) h.unpersist()
-      converged = nextSum == prevSum
-      h = next
-      prevSum = nextSum
-      round += batch
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"coreDecomposition did not reach its fixpoint in $maxRounds " +
-          "rounds — raise maxRounds (peel cascades one layer per round " +
-          "on chain-like graphs); a non-fixpoint h overstates coreness")
+    val h = new Fixpoint(reliable).peel(sym.groupBy("src").agg(count(lit(1)).as("h")),
+      (maxRounds + batch - 1) / batch,
+      Fixpoint.Fail("coreDecomposition", s"maxRounds=$maxRounds"))(
+      cur => Option(cur.agg(sum(col("h"))).head().get(0)).fold(0L)(_.asInstanceOf[Long]))(
+      Iterator.iterate(_)(update).drop(batch).next())
     if (reliable) sym.unpersist()
     h.select(col("src").as("id"), col("h").as("coreness"))
   }
@@ -1339,7 +1180,7 @@ object GraphMetrics {
     * other components are separate double-sweep calls).
     *
     * Scale shape: two frontier BFS loops over the staged symmetric
-    * edge list (one equi-join + one anti-join per hop, exactly
+    * edge list (one equi-join + one min-merge aggregation per hop,
     * [[multiSourceCloseness]]'s kernel at |sources| = 1). The only
     * driver traffic is ONE (node, dist) row between the sweeps — the
     * pivot must seed the second BFS's plan, the same bounded fetch the
@@ -1353,45 +1194,15 @@ object GraphMetrics {
       maxDepth: Int = 32,
       reliable: Boolean = false): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be >= 1: $maxDepth")
-    // Explode symmetrize (r18): one canonicalEdges pass, not two.
-    // Declared-layout staging + hints were tried on this BFS and
-    // measured 0.52x (q313, interleaved 2x2 A/B at sf0.1) — see
-    // [[multiSourceCloseness]]; plain staging restored AQE's sizing.
-    val sym = Staging.stage(
-      symmetrize(canonicalEdges(pairs, aCol, bCol)), reliable)
+    val fx = new Fixpoint(reliable)
+    val sym = fx.stage(symmetrize(canonicalEdges(pairs, aCol, bCol)))
     val spark = sym.sparkSession
-    val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def bfs(source: Long): DataFrame = {
-      var visited = Staging.stage(
+    def bfs(source: Long): DataFrame = fx.relax(
         spark.range(1).select(lit(source).as("node"), lit(0L).as("dist")),
-        reliable)
-      frames += visited
-      var frontier = visited
-      var depth = 0
-      var exhausted = false
-      while (!exhausted && depth < maxDepth) {
-        depth += 1
-        // ONE staged aggregation per round (r18) — the
-        // [[multiSourceCloseness]] fusion, single-source form: min(dist)
-        // keeps the first-reach depth, `old is null` is the new frontier.
-        val candRaw = frontier
-          .join(sym, col("node") === col("src"))
-          .select(col("dst").as("node"), lit(depth.toLong).as("dist"),
-            lit(null).cast("long").as("old"))
-        val grown = Staging.stage(
-          visited.select(col("node"), col("dist"), col("dist").as("old"))
-            .unionByName(candRaw)
-            .groupBy(col("node"))
-            .agg(min(col("dist")).as("dist"), min(col("old")).as("old")),
-          reliable)
-        frames += grown
-        val next = grown.where(col("old").isNull).select(col("node"), col("dist"))
-        exhausted = next.isEmpty
-        visited = grown.select(col("node"), col("dist"))
-        frontier = next
-      }
-      visited
-    }
+        Seq("node"), "dist", maxDepth, Fixpoint.Truncate) { (frontier, depth) =>
+      frontier.join(sym, col("node") === col("src"))
+        .select(col("dst").as("node"), lit(depth.toLong).as("dist"))
+    }._1
     val first = bfs(startId)
     // the pivot row: farthest node of sweep 1, ties to the smallest id —
     // ONE row to the driver, it parameterizes the second sweep's plan
@@ -1399,18 +1210,10 @@ object GraphMetrics {
     val (farNode, eccStart) = (pivot.getLong(0), pivot.getLong(1))
     val nReached = first.count()
     val second = bfs(farNode)
-    val out = Staging.stage(
-      second.agg(max(col("dist")).as("diameter_lb"))
-        .select(lit(startId).as("start_id"), lit(eccStart).as("ecc_start"),
-          lit(nReached).as("n_reached"), lit(farNode).as("peripheral_id"),
-          col("diameter_lb")),
-      reliable)
-    if (reliable) {
-      out.count()
-      frames.foreach(_.unpersist())
-      sym.unpersist()
-    }
-    out
+    fx.finish(second.agg(max(col("dist")).as("diameter_lb"))
+      .select(lit(startId).as("start_id"), lit(eccStart).as("ecc_start"),
+        lit(nReached).as("n_reached"), lit(farNode).as("peripheral_id"),
+        col("diameter_lb")), eager = true)
   }
 
   /** Resource-allocation link prediction — [[linkJaccard]]'s weighted
@@ -1523,11 +1326,11 @@ object GraphMetrics {
     *    Nodes carrying no traffic are absent.
     *
     * Scale shape: `maxDepth` forward rounds (frontier ⋈ staged
-    * symmetric edges + σ-sum agg + anti-join vs the ball), ONE 3-way
-    * equi-join building the DAG, `maxDepth − 1` backward rounds (DAG
-    * level ⋈ deeper deltas + agg), one final agg. Nothing collects;
-    * every staged frame is released once the result is pinned on the
-    * reliable posture.
+    * symmetric edges + one min/σ-merge aggregation with the ball,
+    * [[Fixpoint.relax]]), ONE 3-way equi-join building the DAG,
+    * `maxDepth − 1` backward rounds (DAG level ⋈ deeper deltas + agg),
+    * one final agg. Nothing collects; every staged frame is released
+    * once the result is pinned on the reliable posture.
     */
   def betweennessSampled(
       pairs: DataFrame,
@@ -1538,88 +1341,47 @@ object GraphMetrics {
       maxDepth: Int = 4,
       reliable: Boolean = false): DataFrame = {
     require(maxDepth >= 2, s"maxDepth must be >= 2: $maxDepth")
-    // Explode symmetrize (r18): one canonicalEdges pass, not two. Plain
-    // staging — declared layouts regressed this loop class locally (see
-    // [[multiSourceCloseness]]).
-    val sym = Staging.stage(
-      symmetrize(canonicalEdges(pairs, aCol, bCol)), reliable)
-    val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    // forward: ball membership (source, node, dist, sigma)
-    var visited = Staging.stage(sources
-      .select(col(sourceCol).cast("long").as("source")).distinct()
-      .select(col("source"), col("source").as("node"), lit(0L).as("dist"),
-        lit(1L).as("sigma")),
-      reliable)
-    frames += visited
-    var frontier = visited
-    var depth = 0
-    // deepest level that actually received nodes — the backward pass
-    // starts there instead of maxDepth-1, so shallow balls don't pay
-    // (maxDepth - realDepth) empty-frame join/stage/count rounds
-    var deepest = 0
-    var exhausted = visited.isEmpty
-    while (!exhausted && depth < maxDepth) {
-      depth += 1
-      // ONE staged aggregation per round (r18, the temporalReachability
-      // fusion with a σ payload): raw frontier expansions union the
-      // visited rows (each carrying its dist again as `old`). Per
-      // (source, node): min(dist) keeps the first-reach depth, `old is
-      // null` is the newly-reached set, and σ folds conditionally — a
-      // previously-visited node keeps its recorded σ (min over the one
-      // old row), a new node sums σ over its distance-(d−1) predecessors
-      // (exactly the pre-agg the old shape ran before its anti-join; a
-      // predecessor seen twice is two distinct shortest paths).
-      val candRaw = frontier
-        .join(sym, col("node") === col("src"))
+    val fx = new Fixpoint(reliable)
+    val sym = fx.stage(symmetrize(canonicalEdges(pairs, aCol, bCol)))
+    // forward: ball membership (source, node, dist, sigma). A node
+    // already in the ball keeps its recorded σ (min over its one old
+    // row); a new node sums σ over its distance-(d−1) predecessors (a
+    // predecessor seen twice is two distinct shortest paths). `deepest`
+    // is the last level that received nodes: the backward pass starts
+    // there, so shallow balls skip the empty deeper levels.
+    val (visited, deepest) = fx.relax(sources
+        .select(col(sourceCol).cast("long").as("source")).distinct()
+        .select(col("source"), col("source").as("node"), lit(0L).as("dist"),
+          lit(1L).as("sigma")),
+      Seq("source", "node"), "dist", maxDepth, Fixpoint.Truncate,
+      Seq(coalesce(min(when(col("old").isNotNull, col("sigma"))),
+        sum(when(col("old").isNull, col("sigma")))).as("sigma"))) { (frontier, depth) =>
+      frontier.join(sym, col("node") === col("src"))
         .select(col("source"), col("dst").as("node"), lit(depth.toLong).as("dist"),
-          col("sigma"), lit(null).cast("long").as("old"))
-      val grown = Staging.stage(
-        visited.select(col("source"), col("node"), col("dist"), col("sigma"),
-            col("dist").as("old"))
-          .unionByName(candRaw)
-          .groupBy(col("source"), col("node"))
-          .agg(min(col("dist")).as("dist"),
-            coalesce(min(when(col("old").isNotNull, col("sigma"))),
-              sum(when(col("old").isNull, col("sigma")))).as("sigma"),
-            min(col("old")).as("old")),
-        reliable)
-      frames += grown
-      val next = grown.where(col("old").isNull)
-        .select(col("source"), col("node"), col("dist"), col("sigma"))
-      exhausted = next.isEmpty
-      if (!exhausted) deepest = depth
-      visited = grown.select(col("source"), col("node"), col("dist"), col("sigma"))
-      frontier = next
+          col("sigma"))
     }
     // shortest-path DAG within each ball: (v → w) iff dist(w) = dist(v)+1
-    val dag = Staging.stage(visited.select(
+    val dag = fx.stage(visited.select(
         col("source"), col("node").as("v"), col("dist").as("dv"), col("sigma").as("sv"))
       .join(sym, col("v") === col("src"))
       .join(visited.select(
           col("source"), col("node").as("w"), col("dist").as("dw"), col("sigma").as("sw")),
         Seq("source"))
       .where(col("w") === col("dst") && col("dw") === col("dv") + 1)
-      .select(col("source"), col("v"), col("w"), col("dv"), col("sv"), col("sw")),
-      reliable)
+      .select(col("source"), col("v"), col("w"), col("dv"), col("sv"), col("sw")))
     // backward: Brandes dependencies level by level, deepest first.
     // deltas holds the FINAL δ of every node strictly deeper than the
     // level being processed (nodes at the deepest level have no
-    // successors in the ball → δ = 0, represented by absence).
+    // successors in the ball → δ = 0, represented by absence). dag edges
+    // run dv → dv+1 ≤ deepest, so the deepest edge level is deepest-1.
     val spark = visited.sparkSession
-    var deltas = Staging.stage(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "source BIGINT, node BIGINT, delta BIGINT")),
-      reliable)
-    frames += deltas
-    // dag edges run dv → dv+1 ≤ deepest, so the deepest edge level is
-    // deepest-1; levels above that are structurally empty
-    var level = deepest - 1
-    while (level >= 1) {
+    val noDeltas = fx.stage(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "source BIGINT, node BIGINT, delta BIGINT")))
+    val deltas = (deepest - 1 to 1 by -1).foldLeft(noDeltas) { (deltas, level) =>
       // lv is referenced exactly once (by the union below), so it rides
-      // the grown staging LAZILY — its separate staging job bought no
-      // plan flatness (r18: one staging job per level instead of two)
+      // the level's staging lazily
       val lv = dag.where(col("dv") === level.toLong)
         .join(deltas.select(col("source"), col("node").as("w"), col("delta")),
           Seq("source", "w"), "left")
@@ -1627,25 +1389,13 @@ object GraphMetrics {
         .agg(sum(expr(
           "(cast(sv as decimal(38,0)) * (1000000000L + coalesce(delta, 0L))) div sw"))
           .cast("long").as("delta"))
-      val grown = Staging.stage(deltas.unionByName(lv), reliable)
-      frames += grown
-      deltas = grown
-      level -= 1
+      fx.stage(deltas.unionByName(lv))
     }
-    val out = Staging.stage(
-      deltas.alias("d")
-        .where(col("node") =!= col("source"))
-        .groupBy("node")
-        .agg(sum(col("delta")).as("bc_e9"), count(lit(1)).as("n_sources"))
-        .where(col("bc_e9") > 0L),
-      reliable)
-    if (reliable) {
-      out.count()
-      frames.foreach(_.unpersist())
-      dag.unpersist()
-      sym.unpersist()
-    }
-    out
+    fx.finish(deltas
+      .where(col("node") =!= col("source"))
+      .groupBy("node")
+      .agg(sum(col("delta")).as("bc_e9"), count(lit(1)).as("n_sources"))
+      .where(col("bc_e9") > 0L), eager = true)
   }
 
   def temporalRelayCount(

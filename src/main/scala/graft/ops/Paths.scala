@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Weighted path primitives over edge tables. */
@@ -17,14 +17,15 @@ object Paths {
     * can use). Returns `(source, node, dist)` for every reached node;
     * exact Long arithmetic end to end.
     *
-    * Scale shape per round: ONE node-keyed equi-join (distance
-    * frontier × staged edge list) + a map-side-combined min-agg;
-    * change detection is a limit-1 probe on the staged merge. The
+    * Scale shape per round: ONE node-keyed equi-join (last round's
+    * improved distances × staged edge list) + a map-side-combined
+    * min-merge with the distance table ([[Fixpoint.relax]]); change
+    * detection is a limit-1 probe on the improved rows. The
     * distance table is sources × reachable nodes — callers bound the
     * source set, exactly as [[GraphMetrics.betweennessSampled]]
-    * documents for its balls. `maxIter` caps the rounds and THROWS on
-    * exhaustion (negative weights are rejected upfront; with them
-    * Bellman–Ford's fixpoint is not a shortest path).
+    * documents for its balls. `maxIter` caps the rounds that improve a
+    * distance and THROWS on exhaustion (negative weights are rejected
+    * upfront; with them Bellman–Ford's fixpoint is not a shortest path).
     */
   def weightedSssp(
       edges: DataFrame,
@@ -36,19 +37,15 @@ object Paths {
       maxIter: Int = 60,
       reliable: Boolean = false): DataFrame = {
     require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
-    val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def staged(df: DataFrame): DataFrame = {
-      val s = Staging.stage(df, reliable); frames += s; s
-    }
+    val fx = new Fixpoint(reliable)
     val raw = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"), col(weightCol).cast("long").as("w"))
-    // The weight-sign census rides the multi-edge fold (r18): the old
-    // limit-1 probe executed the caller's whole upstream edge plan once
-    // just to check signs, then staging executed it again. min-of-mins
-    // over the folded leaf sees every negative weight (the fold keeps
-    // self-loops so none escape; they drop from e only below); the
-    // culprit row is fetched only on the failure path.
-    val eAll = staged(raw.groupBy(col("src"), col("dst")).agg(min(col("w")).as("w")))
+    // The weight-sign census reads the staged multi-edge fold, so the
+    // caller's upstream edge plan runs once. min-of-mins over the fold
+    // sees every negative weight (the fold keeps self-loops so none
+    // escape; they drop from e only below); the culprit row is fetched
+    // only on the failure path.
+    val eAll = fx.stage(raw.groupBy(col("src"), col("dst")).agg(min(col("w")).as("w")))
     val mn = eAll.agg(coalesce(min(col("w")), lit(0L))).head().getLong(0)
     if (mn < 0L) {
       val neg = raw.where(col("w") < 0L).limit(1).collect()
@@ -57,43 +54,16 @@ object Paths {
           s"on edge ${neg.headOption.map(r => s"${r.getLong(0)}->${r.getLong(1)}").getOrElse("")}")
     }
     val e = eAll.where(col("src") =!= col("dst"))
-    var dist = staged(sources.select(col(sourceCol).cast("long").as("source")).distinct()
-      .select(col("source"), col("source").as("node"), lit(0L).as("dist")))
-    var spent = 0
-    var changed = !dist.isEmpty
-    while (changed) {
-      // ONE staged aggregation per round (r18, the temporalReachability
-      // fusion): raw relaxations union the prior distances, each dist row
-      // carrying its own value again as `old`; min(dist) is the merged
-      // distance (map-side partial min combines the relaxations exactly
-      // where the separate pre-agg + full-outer merge join did), and
-      // `old is null or dist < old` is the changed set. One staging job
-      // over one exchange instead of two stagings + a full-outer join —
-      // and the old second staging was a pure projection of a staged
-      // leaf, bought no flatness at all.
-      val candRaw = dist.join(e, col("node") === col("src"))
-        .select(col("source"), col("dst").as("node"),
-          (col("dist") + col("w")).as("dist"), lit(null).cast("long").as("old"))
-      val merged = staged(
-        dist.select(col("source"), col("node"), col("dist"), col("dist").as("old"))
-          .unionByName(candRaw)
-          .groupBy(col("source"), col("node"))
-          .agg(min(col("dist")).as("dist"), min(col("old")).as("old")))
-      changed = !merged.where(col("old").isNull || col("dist") < col("old")).isEmpty
-      if (changed) {
-        spent += 1
-        if (spent > maxIter) throw new IllegalStateException(
-          s"weightedSssp: no fixpoint within maxIter=$maxIter relaxation rounds — " +
-            "deepest shortest path exceeds the budget (raise maxIter)")
-      }
-      dist = merged.select(col("source"), col("node"), col("dist"))
+    // maxIter improving rounds, plus the one that confirms the fixpoint
+    val (dist, _) = fx.relax(sources
+        .select(col(sourceCol).cast("long").as("source")).distinct()
+        .select(col("source"), col("source").as("node"), lit(0L).as("dist")),
+      Seq("source", "node"), "dist", maxIter + 1L,
+      Fixpoint.Fail("weightedSssp", s"maxIter=$maxIter")) { (frontier, _) =>
+      frontier.join(e, col("node") === col("src"))
+        .select(col("source"), col("dst").as("node"), (col("dist") + col("w")).as("dist"))
     }
-    val out = Staging.stage(dist, reliable)
-    if (reliable) {
-      out.count()
-      frames.foreach(_.unpersist())
-    }
-    out
+    fx.finish(dist, eager = true)
   }
 
 }

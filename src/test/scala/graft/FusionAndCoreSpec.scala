@@ -97,6 +97,17 @@ class FusionAndCoreSpec extends SparkSpec {
     assert(k1 == Map(0L -> 5L, 1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L))
   }
 
+  test("kCore throws when maxRounds ends the peel short of the k-core") {
+    // path 1-2-3-4-5-6 peels one layer per round: one round would leave
+    // {3, 4} standing, but its 2-core is empty
+    val path = (1L to 5L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    val e = intercept[IllegalStateException] {
+      GraphMetrics.kCore(path, k = 2, maxRounds = 1).collect()
+    }
+    assert(e.getMessage.contains("kCore") && e.getMessage.contains("maxRounds=1"))
+    assert(GraphMetrics.kCore(path, k = 2, maxRounds = 3).count() == 0L)
+  }
+
   // ------------------------------------------ vocabGrowth
 
   test("vocabGrowth counts distinct terms after the first N stream tokens") {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import graft.ops.{Components, GraphMetrics, Ngrams, PageRank}
+import graft.ops.{Components, GraphMetrics, Ngrams, PageRank, Paths}
 
 /** The `reliable` staging switch ([[graft.ops.Staging]]) must be
   * behavior-neutral: every iterative op threaded through it has to
@@ -63,6 +63,23 @@ class ReliableStagingSpec extends SparkSpec {
     val got = run(reliable = true)
     assert(got == run(reliable = false))
     assert(got.nonEmpty) // the two triangles survive k=2
+  }
+
+  test("GraphMetrics.doubleSweep: reliable=true matches the localCheckpoint path") {
+    def run(reliable: Boolean) = sortedRows(
+      GraphMetrics.doubleSweep(edges, startId = 5L, reliable = reliable))
+    val got = run(reliable = true)
+    assert(got == run(reliable = false))
+    assert(got == Seq("[5,3,5,1,3]")) // 5-4-3-{1,2}: pivot 1, diameter bound 3
+  }
+
+  test("Paths.weightedSssp: reliable=true matches the localCheckpoint path") {
+    val weighted = edges.withColumn("w", (col("a_id") * 3 + col("b_id")) % 5 + 1)
+    def run(reliable: Boolean) = sortedRows(Paths.weightedSssp(
+      weighted, Seq(1L, 10L).toDF("id"), "a_id", "b_id", reliable = reliable))
+    val got = run(reliable = true)
+    assert(got == run(reliable = false))
+    assert(got.size == 8) // 1 reaches 1..5, 10 reaches 10..12
   }
 
   // Registration order matters for the two pin tests: the shared
