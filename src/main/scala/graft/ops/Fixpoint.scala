@@ -1,18 +1,30 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.concurrent.{Await, TimeoutException}
+import scala.concurrent.duration._
+
+import org.apache.spark.internal.Logging
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** The staged fixpoint loop of the graph operators, written once.
   *
-  * One instance serves one operator run. Every round is staged through
-  * [[Staging.stage]] with the run's `reliable` flag, so the loop's plan
-  * stays flat on both postures. Two loop shapes:
+  * One instance serves one run of the operator `op`. Every round is
+  * staged through [[Staging.stage]] with the run's `reliable` flag, so
+  * the loop's plan stays flat on both postures. Two loop shapes:
   *  - [[relax]]: semi-naive min-merge (BFS depths, earliest arrivals,
   *    shortest distances). Each round expands only last round's
   *    improved rows; an empty frontier is the fixpoint.
   *  - [[peel]]: a whole-state update (k-core, k-truss, h-index rounds)
-  *    probed by a scalar that stops changing at the fixpoint.
+  *    measured by a scalar that stops changing at the fixpoint.
+  *
+  * Convergence is read off the job that stages the round: the value a
+  * loop decides on (improved-row count, peel scalar) is a
+  * `Dataset.observe` metric of the frame being staged, so a round runs
+  * no probe job of its own. The reliable posture's persist is lazy and
+  * runs no job when staged; there one action both materializes the
+  * round and measures it, and no observation is ever waited on. Each
+  * round logs its operator, number and measured value at DEBUG.
   *
   * The round cap says what reaching it means ([[Fixpoint.OnCap]]): a
   * BFS depth bound truncates by definition, while every other loop
@@ -24,7 +36,7 @@ import org.apache.spark.sql.functions._
   * interleaved 2×2 A/B at sf0.1): the pinned layout fragments the small
   * per-round frames that AQE coalesces correctly.
   */
-private[graft] final class Fixpoint(reliable: Boolean) {
+private[graft] final class Fixpoint(op: String, reliable: Boolean) extends Logging {
   import Fixpoint._
 
   private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -34,52 +46,106 @@ private[graft] final class Fixpoint(reliable: Boolean) {
     val s = Staging.stage(df, reliable); frames += s; s
   }
 
+  /** [[stage]] that also returns the BIGINT aggregate `m` over the
+    * staged rows, read off the staging job ([[measured]]).
+    */
+  def stage(df: DataFrame, m: Column): (DataFrame, Long) = {
+    val (s, Seq(v)) = measured(m)(_ => df); frames += s; (s, v)
+  }
+
+  /** Stages the frame `build` returns and gives the BIGINT aggregate `m`
+    * over the rows of every frame `build` passes through its argument,
+    * in call order, then over the staged frame. A frame passed through
+    * must be one the staged plan computes exactly once.
+    *
+    * Default posture: each value is a `Dataset.observe` metric of the
+    * staging job, read with a bounded wait; one that never arrives
+    * throws `IllegalStateException` (a missing value is never taken for
+    * convergence). Reliable posture: staging runs no job, so ONE action
+    * materializes the staged frame and measures every frame, recomputing
+    * the passed-through ones from their staged inputs.
+    */
+  private def measured(m: Column)(
+      build: (DataFrame => DataFrame) => DataFrame): (DataFrame, Seq[Long]) = {
+    val v = m.cast("long").as("v")
+    if (reliable) {
+      val inner = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      val s = Staging.stage(build { df => inner += df; df }, reliable)
+      val values = (inner :+ s).zipWithIndex
+        .map { case (f, i) => f.agg(v).select(lit(i).as("i"), col("v")) }
+        .reduce(_ unionByName _).collect().sortBy(_.getInt(0)).map(_.getLong(1))
+      (s, values.toSeq)
+    } else {
+      val obs = scala.collection.mutable.ArrayBuffer.empty[Observation]
+      def observe(df: DataFrame): DataFrame = {
+        val o = Observation(); obs += o; df.observe(o, v)
+      }
+      val s = Staging.stage(observe(build(observe)), reliable)
+      (s, obs.map { o =>
+        try Await.result(o.future, observationWait).getLong(0)
+        catch {
+          case _: TimeoutException => throw new IllegalStateException(
+            s"$op: the staging job's observation did not arrive within $observationWait")
+        }
+      }.toSeq)
+    }
+  }
+
   /** Semi-naive min-merge from `seed` (columns `keys`, the BIGINT
-    * `value`, and any payload columns). Round r stages ONE aggregation:
-    * `expand(frontier, r)` gives raw candidate rows (the seed's columns)
-    * reached from last round's improved rows; they union the state, whose
-    * rows carry their own value again as `old`. Per key, `min(value)` is
-    * the merged value and `min(old)` the prior one (null iff newly
-    * reached), so `old is null or value < old` is this round's improved
-    * set and next round's frontier. `payload` aggregates the other
-    * columns and may read `old`. Rounds stop at an empty frontier or at
+    * `value`, and any payload columns). Each round stages ONE
+    * aggregation: `expand(frontier)` gives raw candidate rows (the
+    * seed's columns) reached from last round's improved rows; they union
+    * the state, whose rows carry their own value again as `old`. Per
+    * key, `min(value)` is the merged value and `min(old)` the prior one
+    * (null iff newly reached), so `old is null or value < old` is this
+    * round's improved set and next round's frontier; its size is
+    * observed on the staging job. `payload` aggregates the other columns
+    * and may read `old`. Rounds stop at an empty frontier or at
     * `maxRounds`. Returns the state and the number of rounds that
     * improved a row.
     */
   def relax(seed: DataFrame, keys: Seq[String], value: String, maxRounds: Long,
       onCap: OnCap, payload: Seq[Column] = Nil)(
-      expand: (DataFrame, Int) => DataFrame): (DataFrame, Int) = {
+      expand: DataFrame => DataFrame): (DataFrame, Int) = {
     val cols = seed.columns.toSeq.map(col)
+    val improved = col("old").isNull || col(value) < col("old")
     val start = stage(seed)
     val ((state, _), improving) = loop((start, start), maxRounds, onCap) {
       case ((state, frontier), round) =>
-        val merged = stage(state.withColumn("old", col(value))
-          .unionByName(expand(frontier, round).withColumn("old", lit(null).cast("long")))
+        val (merged, n) = stage(state.withColumn("old", col(value))
+          .unionByName(expand(frontier).withColumn("old", lit(null).cast("long")))
           .groupBy(keys.map(col): _*)
-          .agg(min(col(value)).as(value), payload :+ min(col("old")).as("old"): _*))
-        val next = merged.where(col("old").isNull || col(value) < col("old")).select(cols: _*)
-        ((merged.select(cols: _*), next), !next.isEmpty)
+          .agg(min(col(value)).as(value), payload :+ min(col("old")).as("old"): _*),
+          count(when(improved, true)))
+        logDebug(s"$op round $round: frontier $n")
+        ((merged.select(cols: _*), merged.where(improved).select(cols: _*)), n > 0L)
     }
     (state, improving)
   }
 
-  /** Synchronous peel: stages `seed`, then `step` per round until `size`
-    * (a count or sum over the staged state) stops changing or reaches
-    * zero. `size` reads every row, so each round releases the previous
-    * state on the reliable posture; the returned state stays staged.
-    * Reaching `maxRounds` while still changing throws, naming the
-    * operator and bound given in `cap`.
+  /** Synchronous peel: stages `seed`, then per round `batch` chained
+    * `step` updates as one staged frame, until the BIGINT aggregate
+    * `size` (a count or sum over the state) stops changing or reaches
+    * zero. `size` is measured on every update of the batch inside the
+    * staging job, and the loop stops at the first update that left it
+    * unchanged; `size` must be monotone over updates, so an unchanged
+    * update means the state before it was the fixpoint. Each round
+    * releases the previous state on the reliable posture; the returned
+    * state stays staged. Reaching `maxRounds` rounds while still
+    * changing throws, naming the bound given in `cap`.
     */
-  def peel(seed: DataFrame, maxRounds: Long, cap: Fail)(size: DataFrame => Long)(
+  def peel(seed: DataFrame, maxRounds: Long, cap: Fail, size: Column, batch: Int = 1)(
       step: DataFrame => DataFrame): DataFrame = {
-    val start = Staging.stage(seed, reliable)
-    val n0 = size(start)
+    val (start, Seq(n0)) = measured(size)(_ => seed)
     if (n0 == 0L) start
-    else loop((start, n0), maxRounds, cap) { case ((cur, n), _) =>
-      val next = Staging.stage(step(cur), reliable)
-      val m = size(next)
+    else loop((start, n0), maxRounds, cap) { case ((cur, n), round) =>
+      val (next, sizes) = measured(size) { through =>
+        step((1 until batch).foldLeft(cur)((s, _) => through(step(s))))
+      }
+      logDebug(s"$op round $round: size ${sizes.mkString(", ")}")
       if (reliable) cur.unpersist()
-      ((next, m), m != n && m != 0L)
+      val m = sizes.last
+      ((next, m), m != 0L && (n +: sizes).sliding(2).forall { case Seq(a, b) => a != b })
     }._1._1
   }
 
@@ -98,20 +164,6 @@ private[graft] final class Fixpoint(reliable: Boolean) {
       }
       pinned
     }
-}
-
-private[graft] object Fixpoint {
-
-  /** What a loop does when `maxRounds` rounds ran and the last still
-    * changed the state.
-    */
-  sealed trait OnCap
-
-  /** Return the state: the cap is part of the result's definition. */
-  case object Truncate extends OnCap
-
-  /** Throw: a state short of the fixpoint is a wrong answer. */
-  final case class Fail(op: String, bound: String) extends OnCap
 
   /** Runs `round(state, r)` for r = 1, 2, … until it reports no change;
     * returns the last state and the number of rounds that changed it.
@@ -128,10 +180,30 @@ private[graft] object Fixpoint {
       changed = c
     }
     onCap match {
-      case Fail(op, bound) if changed => throw new IllegalStateException(
+      case Fail(bound) if changed => throw new IllegalStateException(
         s"$op did not reach its fixpoint within $bound; raise the bound " +
           "(a state short of the fixpoint is not the result)")
       case _ => (state, if (changed) rounds else rounds - 1)
     }
   }
+}
+
+private[graft] object Fixpoint {
+
+  /** What a loop does when `maxRounds` rounds ran and the last still
+    * changed the state.
+    */
+  sealed trait OnCap
+
+  /** Return the state: the cap is part of the result's definition. */
+  case object Truncate extends OnCap
+
+  /** Throw: a state short of the fixpoint is a wrong answer. */
+  final case class Fail(bound: String) extends OnCap
+
+  /** How long a round waits for its staging job's observation. Observed
+    * metrics arrive through the listener bus right after the job; the
+    * bound only turns a lost event into an error instead of a hang.
+    */
+  private val observationWait = 60.seconds
 }

@@ -308,9 +308,9 @@ object GraphMetrics {
     * aggregation (map-side combined; shuffle is node-sized) and one
     * semi-join of edges against surviving nodes (hash join on node id).
     * Nothing driver-side except the per-round convergence scalar — edge
-    * count, a single Long — and rounds are capped: real graphs peel in
-    * few rounds (degeneracy ordering depth), while a path peels one layer
-    * per round. A peel cut short by `maxRounds` is not the k-core (it
+    * count, a single Long observed on the staging job — and rounds are
+    * capped: real graphs peel in few rounds (degeneracy ordering depth),
+    * while a path peels one layer per round. A peel cut short by `maxRounds` is not the k-core (it
     * keeps nodes a later round would delete), so exhausting the bound
     * throws `IllegalStateException`; raise it for deep cascades. Each
     * round is staged ([[Fixpoint.peel]], caller-selectable fault
@@ -326,8 +326,8 @@ object GraphMetrics {
       reliable: Boolean = false): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
-    val core = new Fixpoint(reliable).peel(symmetrize(canonicalEdges(pairs, aCol, bCol)),
-      maxRounds, Fixpoint.Fail("kCore", s"maxRounds=$maxRounds"))(_.count()) { sym =>
+    val core = new Fixpoint("kCore", reliable).peel(symmetrize(canonicalEdges(pairs, aCol, bCol)),
+      maxRounds, Fixpoint.Fail(s"maxRounds=$maxRounds"), count(lit(1))) { sym =>
       val keep = sym.groupBy("src").agg(count(lit(1)).as("__d"))
         .where(col("__d") >= k).select(col("src").as("__keep"))
       sym.join(keep, col("src") === col("__keep"), "left_semi")
@@ -516,16 +516,17 @@ object GraphMetrics {
       maxDepth: Int = 10,
       reliable: Boolean = false): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be >= 1: $maxDepth")
-    val fx = new Fixpoint(reliable)
+    val fx = new Fixpoint("multiSourceCloseness", reliable)
     val sym = fx.stage(symmetrize(canonicalEdges(pairs, aCol, bCol)))
-    // min(dist) keeps the first-reach depth: round r's candidates arrive
-    // at depth r, beyond every dist already in the table
+    // min(dist) keeps the first-reach depth: round r's frontier sits at
+    // depth r − 1, so its candidates arrive at depth r, beyond every dist
+    // already in the table
     val (visited, _) = fx.relax(sources
         .select(col(sourceCol).cast("long").as("source")).distinct()
         .select(col("source"), col("source").as("node"), lit(0L).as("dist")),
-      Seq("source", "node"), "dist", maxDepth, Fixpoint.Truncate) { (frontier, depth) =>
+      Seq("source", "node"), "dist", maxDepth, Fixpoint.Truncate) { frontier =>
       frontier.join(sym, col("node") === col("src"))
-        .select(col("source"), col("dst").as("node"), lit(depth.toLong).as("dist"))
+        .select(col("source"), col("dst").as("node"), (col("dist") + 1L).as("dist"))
     }
     fx.finish(visited.groupBy("source")
       .agg((count(lit(1)) - 1L).as("n_reached"), sum(col("dist")).as("sum_dist"))
@@ -573,7 +574,7 @@ object GraphMetrics {
       maxHops: Int = 10,
       reliable: Boolean = false): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1: $maxHops")
-    val fx = new Fixpoint(reliable)
+    val fx = new Fixpoint("temporalReachability", reliable)
     val e = fx.stage(edges.select(
       col(srcCol).cast("long").as("e_src"), col(dstCol).cast("long").as("e_dst"),
       col(timeCol).cast("long").as("e_t"))
@@ -582,7 +583,7 @@ object GraphMetrics {
     val (arrivals, _) = fx.relax(sources
         .select(col(sourceCol).cast("long").as("source")).distinct()
         .select(col("source"), col("source").as("node"), lit(Long.MinValue).as("arr")),
-      Seq("source", "node"), "arr", maxHops, Fixpoint.Truncate) { (frontier, _) =>
+      Seq("source", "node"), "arr", maxHops, Fixpoint.Truncate) { frontier =>
       frontier.join(e, col("node") === col("e_src"))
         .where(col("e_t") >= col("arr"))
         .select(col("source"), col("e_dst").as("node"), col("e_t").as("arr"))
@@ -664,9 +665,10 @@ object GraphMetrics {
     * enumeration (wedge cost Σ min-deg per edge — the O(m^1.5) bound)
     * + one hash join to filter; per-round state is the (shrinking)
     * staged edge list (support carried through, so the CONVERGED
-    * round's support table IS the result — no extra enumeration), count
-    * as the convergence probe, the round's triangle cache released
-    * once its output is materialized. As in [[kCore]], an unconverged
+    * round's support table IS the result — no extra enumeration), its
+    * edge count observed on the staging job as the convergence scalar,
+    * the round's triangle cache released once its output is
+    * materialized. As in [[kCore]], an unconverged
     * peel is NOT a k-truss — removal cascades can legitimately run one
     * layer per round — so exhausting `maxRounds` throws rather than
     * returning a silently wrong edge set; raise the bound for deep
@@ -682,9 +684,9 @@ object GraphMetrics {
     require(k >= 3, s"k must be >= 3: $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
     var oriented: Option[DataFrame] = None
-    val truss = try new Fixpoint(reliable).peel(
+    val truss = try new Fixpoint("kTruss", reliable).peel(
       canonicalEdges(pairs, aCol, bCol).withColumn("support", lit(0L)),
-      maxRounds, Fixpoint.Fail("kTruss", s"maxRounds=$maxRounds"))(_.count()) { cur =>
+      maxRounds, Fixpoint.Fail(s"maxRounds=$maxRounds"), count(lit(1))) { cur =>
       oriented.foreach(_.unpersist())
       val e = cur.select(col("u"), col("v"))
       val (sup, o) = edgeSupport(e)
@@ -698,11 +700,11 @@ object GraphMetrics {
 
   /** [[kTruss]] reduced to its support histogram: (support, n_edges).
     * The peel itself must materialize per-edge state every round no
-    * matter what (the convergence probe counts it), so this costs
-    * nothing extra — what it buys is the operator-boundary guarantee
-    * that only the aggregate ever crosses to the consumer: at 100 TB a
-    * caller wanting just the cohesion profile never ships, collects or
-    * stores the (potentially edge-scale) surviving set.
+    * matter what (each round stages it and counts its edges), so this
+    * costs nothing extra — what it buys is the operator-boundary
+    * guarantee that only the aggregate ever crosses to the consumer: at
+    * 100 TB a caller wanting just the cohesion profile never ships,
+    * collects or stores the (potentially edge-scale) surviving set.
     */
   def kTrussSupportHistogram(
       pairs: DataFrame,
@@ -725,10 +727,10 @@ object GraphMetrics {
     * `h₀(v) = deg(v)`; `h_{t+1}(v) = H({h_t(u) : u ∈ N(v)})` where H is
     * the largest h with at least h neighbors at value ≥ h. The sequence
     * is pointwise non-increasing and its fixpoint is exactly coreness —
-    * so SUM(h) is a strictly decreasing convergence probe (one scalar
-    * agg per round, no frame diff). Unlike the sequential min-degree
-    * peel (inherently serial) this is a per-node local update, the
-    * distributed formulation of choice.
+    * so SUM(h) is a strictly decreasing convergence scalar (one
+    * aggregate observed per update, no frame diff). Unlike the
+    * sequential min-degree peel (inherently serial) this is a per-node
+    * local update, the distributed formulation of choice.
     *
     * Scale shape per round: one equi-join of the (staged) symmetric edge
     * list with the node-sized h table + one NODE-KEYED window
@@ -769,13 +771,14 @@ object GraphMetrics {
       .groupBy(col("src"), col("nh")).agg(count(lit(1)).as("cnt"))
       .select(col("src"), col("nh"), sum(col("cnt")).over(w).as("cum"))
       .groupBy("src").agg(max(least(col("nh"), col("cum"))).as("h"))
-    // Updates are BATCHED three per staged probe: each h-update
+    // Updates are BATCHED three per staged round: each h-update
     // references the previous h exactly ONCE (no self-join), so the
     // un-staged chain grows linearly (3 join+window+agg segments) and
-    // one staging + one sum probe amortizes over three rounds.
-    // Monotonicity makes the coarser probe safe: SUM(h) is
-    // non-increasing and equal sums mean NO node moved in any of the
-    // three updates, i.e. the fixpoint was already reached.
+    // one staging job amortizes over three updates. SUM(h) is observed
+    // after every update inside that job ([[Fixpoint.peel]]); h is
+    // pointwise non-increasing, so the first update whose sum did not
+    // change proves the state before it was the fixpoint, and the loop
+    // stops there without a confirming round.
     // Measured shape (sf0.1 part graph, 150k symmetric edges): 16
     // updates to fixpoint at ~0.5 s each — COMPUTE-bound, not
     // job-overhead-bound. A delta/frontier variant (recompute only
@@ -786,11 +789,9 @@ object GraphMetrics {
     // only on sparse chain-y graphs where rounds are many and frontiers
     // tiny — revisit if such inputs become the workload.
     val batch = 3
-    val h = new Fixpoint(reliable).peel(sym.groupBy("src").agg(count(lit(1)).as("h")),
-      (maxRounds + batch - 1) / batch,
-      Fixpoint.Fail("coreDecomposition", s"maxRounds=$maxRounds"))(
-      cur => Option(cur.agg(sum(col("h"))).head().get(0)).fold(0L)(_.asInstanceOf[Long]))(
-      Iterator.iterate(_)(update).drop(batch).next())
+    val h = new Fixpoint("coreDecomposition", reliable).peel(
+      sym.groupBy("src").agg(count(lit(1)).as("h")), (maxRounds + batch - 1) / batch,
+      Fixpoint.Fail(s"maxRounds=$maxRounds"), coalesce(sum(col("h")), lit(0L)), batch)(update)
     if (reliable) sym.unpersist()
     h.select(col("src").as("id"), col("h").as("coreness"))
   }
@@ -1194,14 +1195,14 @@ object GraphMetrics {
       maxDepth: Int = 32,
       reliable: Boolean = false): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be >= 1: $maxDepth")
-    val fx = new Fixpoint(reliable)
+    val fx = new Fixpoint("doubleSweep", reliable)
     val sym = fx.stage(symmetrize(canonicalEdges(pairs, aCol, bCol)))
     val spark = sym.sparkSession
     def bfs(source: Long): DataFrame = fx.relax(
         spark.range(1).select(lit(source).as("node"), lit(0L).as("dist")),
-        Seq("node"), "dist", maxDepth, Fixpoint.Truncate) { (frontier, depth) =>
+        Seq("node"), "dist", maxDepth, Fixpoint.Truncate) { frontier =>
       frontier.join(sym, col("node") === col("src"))
-        .select(col("dst").as("node"), lit(depth.toLong).as("dist"))
+        .select(col("dst").as("node"), (col("dist") + 1L).as("dist"))
     }._1
     val first = bfs(startId)
     // the pivot row: farthest node of sweep 1, ties to the smallest id —
@@ -1341,7 +1342,7 @@ object GraphMetrics {
       maxDepth: Int = 4,
       reliable: Boolean = false): DataFrame = {
     require(maxDepth >= 2, s"maxDepth must be >= 2: $maxDepth")
-    val fx = new Fixpoint(reliable)
+    val fx = new Fixpoint("betweennessSampled", reliable)
     val sym = fx.stage(symmetrize(canonicalEdges(pairs, aCol, bCol)))
     // forward: ball membership (source, node, dist, sigma). A node
     // already in the ball keeps its recorded σ (min over its one old
@@ -1355,9 +1356,9 @@ object GraphMetrics {
           lit(1L).as("sigma")),
       Seq("source", "node"), "dist", maxDepth, Fixpoint.Truncate,
       Seq(coalesce(min(when(col("old").isNotNull, col("sigma"))),
-        sum(when(col("old").isNull, col("sigma")))).as("sigma"))) { (frontier, depth) =>
+        sum(when(col("old").isNull, col("sigma")))).as("sigma"))) { frontier =>
       frontier.join(sym, col("node") === col("src"))
-        .select(col("source"), col("dst").as("node"), lit(depth.toLong).as("dist"),
+        .select(col("source"), col("dst").as("node"), (col("dist") + 1L).as("dist"),
           col("sigma"))
     }
     // shortest-path DAG within each ball: (v → w) iff dist(w) = dist(v)+1

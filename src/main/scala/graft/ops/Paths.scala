@@ -19,13 +19,14 @@ object Paths {
     *
     * Scale shape per round: ONE node-keyed equi-join (last round's
     * improved distances × staged edge list) + a map-side-combined
-    * min-merge with the distance table ([[Fixpoint.relax]]); change
-    * detection is a limit-1 probe on the improved rows. The
-    * distance table is sources × reachable nodes — callers bound the
-    * source set, exactly as [[GraphMetrics.betweennessSampled]]
-    * documents for its balls. `maxIter` caps the rounds that improve a
-    * distance and THROWS on exhaustion (negative weights are rejected
-    * upfront; with them Bellman–Ford's fixpoint is not a shortest path).
+    * min-merge with the distance table ([[Fixpoint.relax]]); the
+    * improved-row count is observed on the job that stages the merge,
+    * so change detection runs no job of its own. The distance table is
+    * sources × reachable nodes — callers bound the source set, exactly
+    * as [[GraphMetrics.betweennessSampled]] documents for its balls.
+    * `maxIter` caps the rounds that improve a distance and THROWS on
+    * exhaustion (negative weights are rejected upfront; with them
+    * Bellman–Ford's fixpoint is not a shortest path).
     */
   def weightedSssp(
       edges: DataFrame,
@@ -37,16 +38,16 @@ object Paths {
       maxIter: Int = 60,
       reliable: Boolean = false): DataFrame = {
     require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
-    val fx = new Fixpoint(reliable)
+    val fx = new Fixpoint("weightedSssp", reliable)
     val raw = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"), col(weightCol).cast("long").as("w"))
-    // The weight-sign census reads the staged multi-edge fold, so the
-    // caller's upstream edge plan runs once. min-of-mins over the fold
-    // sees every negative weight (the fold keeps self-loops so none
-    // escape; they drop from e only below); the culprit row is fetched
-    // only on the failure path.
-    val eAll = fx.stage(raw.groupBy(col("src"), col("dst")).agg(min(col("w")).as("w")))
-    val mn = eAll.agg(coalesce(min(col("w")), lit(0L))).head().getLong(0)
+    // The weight-sign census is observed on the job that stages the
+    // multi-edge fold, so the caller's upstream edge plan runs once.
+    // min-of-mins over the fold sees every negative weight (the fold
+    // keeps self-loops so none escape; they drop from e only below); the
+    // culprit row is fetched only on the failure path.
+    val (eAll, mn) = fx.stage(raw.groupBy(col("src"), col("dst")).agg(min(col("w")).as("w")),
+      coalesce(min(col("w")), lit(0L)))
     if (mn < 0L) {
       val neg = raw.where(col("w") < 0L).limit(1).collect()
       require(neg.isEmpty,
@@ -59,7 +60,7 @@ object Paths {
         .select(col(sourceCol).cast("long").as("source")).distinct()
         .select(col("source"), col("source").as("node"), lit(0L).as("dist")),
       Seq("source", "node"), "dist", maxIter + 1L,
-      Fixpoint.Fail("weightedSssp", s"maxIter=$maxIter")) { (frontier, _) =>
+      Fixpoint.Fail(s"maxIter=$maxIter")) { frontier =>
       frontier.join(e, col("node") === col("src"))
         .select(col("source"), col("dst").as("node"), (col("dist") + col("w")).as("dist"))
     }

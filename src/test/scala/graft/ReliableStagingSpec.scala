@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import graft.ops.{Components, GraphMetrics, Ngrams, PageRank, Paths}
+import graft.ops.{Components, GraphMetrics, Ngrams, PageRank, Paths, Staging}
 
 /** The `reliable` staging switch ([[graft.ops.Staging]]) must be
   * behavior-neutral: every iterative op threaded through it has to
@@ -80,6 +80,48 @@ class ReliableStagingSpec extends SparkSpec {
     val got = run(reliable = true)
     assert(got == run(reliable = false))
     assert(got.size == 8) // 1 reaches 1..5, 10 reaches 10..12
+  }
+
+  // The loops below read convergence off an observation of the staging
+  // job by default and off one probe action on the reliable posture, so
+  // both postures must also stage the same rounds.
+  private def rowsAndStages(run: => DataFrame): (Seq[String], Long) = {
+    val before = Staging.stageCalls.get()
+    val rows = sortedRows(run)
+    (rows, Staging.stageCalls.get() - before)
+  }
+
+  test("GraphMetrics.coreDecomposition: reliable=true matches rows and staged rounds") {
+    // the path 20–28 first reaches its fixpoint at update 4, inside the
+    // second batch of three: both postures stop after that batch
+    val g = edges.union((20L until 28L).map(i => (i, i + 1)).toDF("a_id", "b_id"))
+    def run(reliable: Boolean) =
+      rowsAndStages(GraphMetrics.coreDecomposition(g, reliable = reliable))
+    val (got, staged) = run(reliable = true)
+    assert((got, staged) == run(reliable = false))
+    assert(got.size == 17 && staged == 4L) // sym + seed + two batches
+    spark.catalog.clearCache()
+  }
+
+  test("GraphMetrics.kTruss: reliable=true matches rows and staged rounds") {
+    def run(reliable: Boolean) =
+      rowsAndStages(GraphMetrics.kTruss(edges, k = 3, reliable = reliable))
+    val (got, staged) = run(reliable = true)
+    assert((got, staged) == run(reliable = false))
+    assert(got.size == 6) // the two triangles
+    spark.catalog.clearCache()
+  }
+
+  test("GraphMetrics.multiSourceCloseness: reliable=true matches rows and staged rounds") {
+    def run(reliable: Boolean) = rowsAndStages(GraphMetrics.multiSourceCloseness(
+      edges, Seq(1L, 10L).toDF("id"), reliable = reliable))
+    val (got, staged) = run(reliable = true)
+    val (local, localStaged) = run(reliable = false)
+    assert(got == local)
+    assert(got == Seq("[1,4,7,571428]", "[10,2,2,1000000]"))
+    // the same rounds; the reliable posture also pins the result before
+    // releasing the rounds' frames (Fixpoint.finish)
+    assert(staged == localStaged + 1L)
   }
 
   // Registration order matters for the two pin tests: the shared
