@@ -42,22 +42,11 @@ object Components {
     // partition instead of failing the whole O(log n)-round job — the
     // preemptible-cluster posture; contraction is deterministic, so
     // recompute is bit-identical.
-    var edges = Staging.stage(pairs
+    val canonical = pairs
       .select(col(aCol).cast("long").as("x"), col(bCol).cast("long").as("y"))
       .where(col("x") =!= col("y") && col("x").isNotNull && col("y").isNotNull)
       .select(least(col("x"), col("y")).as("u"), greatest(col("x"), col("y")).as("v"))
-      .distinct(),
-      reliable)
-
-    // Cheap probabilistic fixpoint detector: (count, order-independent
-    // hash-sum) of the canonical edge set. A false "converged" needs a
-    // 64-bit hash-sum collision between consecutive rounds — negligible.
-    def checksum(e: DataFrame): (Long, BigDecimal) = {
-      // hash-sum accumulates in decimal — a long sum overflows under ANSI
-      val r = e.agg(count(lit(1)),
-        coalesce(sum(xxhash64(col("u"), col("v")).cast("decimal(28,0)")), lit(BigDecimal(0)))).head()
-      (r.getLong(0), BigDecimal(r.getDecimal(1)))
-    }
+      .distinct()
 
     // large-star: every node hooks its larger neighbors onto its minimum
     // neighborhood member; small-star does the same for smaller neighbors.
@@ -89,26 +78,17 @@ object Components {
         .distinct()
     }
 
-    var prev = checksum(edges)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val next = Staging.stage(smallStar(largeStar(edges)), reliable)
-      // checksum is an action: it materializes `next` (persist blocks /
-      // checkpoint) while the previous round's blocks are still alive,
-      // after which the previous round can be released — the reliable
-      // path keeps at most two edge sets on disk.
-      val sig = checksum(next)
-      if (reliable) edges.unpersist()
-      converged = sig == prev
-      prev = sig
-      edges = next
-      iter += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds — " +
-          "O(log n) rounds suffice for any input, so this is a bug, not a big graph")
+    // Fixpoint detector: (count, order-independent hash-sum) of the
+    // canonical edge set, observed on each round's staging job. A false
+    // "converged" needs a 64-bit hash-sum collision between consecutive
+    // rounds — negligible. The hash-sum accumulates in decimal: a long
+    // sum overflows under ANSI.
+    val signature = struct(count(lit(1)),
+      coalesce(sum(xxhash64(col("u"), col("v")).cast("decimal(28,0)")), lit(BigDecimal(0))))
+    val edges = new Fixpoint("connectedComponents", reliable).peel(canonical, maxIter,
+      Fixpoint.Fail(s"maxIter=$maxIter", "the contraction did not converge — O(log n) rounds " +
+        "suffice for any input, so this is a bug, not a big graph"),
+      signature)(e => smallStar(largeStar(e)))
 
     // Fixpoint edges form stars (root = component minimum): u is the root
     // on canonical edges. Roots map to themselves.

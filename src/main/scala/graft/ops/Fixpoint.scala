@@ -11,20 +11,26 @@ import org.apache.spark.sql.functions._
   *
   * One instance serves one run of the operator `op`. Every round is
   * staged through [[Staging.stage]] with the run's `reliable` flag, so
-  * the loop's plan stays flat on both postures. Two loop shapes:
+  * the loop's plan stays flat on both postures. Two loop shapes are
+  * written here:
   *  - [[relax]]: semi-naive min-merge (BFS depths, earliest arrivals,
   *    shortest distances). Each round expands only last round's
   *    improved rows; an empty frontier is the fixpoint.
-  *  - [[peel]]: a whole-state update (k-core, k-truss, h-index rounds)
-  *    measured by a scalar that stops changing at the fixpoint.
+  *  - [[peel]]: a whole-state update (k-core, k-truss, h-index rounds,
+  *    star contraction) measured by a value that stops changing at the
+  *    fixpoint.
+  * Loops of any other shape (SCC phases, matching rounds, pointer
+  * jumping, walks) run their rounds through [[loop]] and stage them
+  * through [[stage]]; [[finish]] pins the result and releases the run.
   *
   * Convergence is read off the job that stages the round: the value a
-  * loop decides on (improved-row count, peel scalar) is a
-  * `Dataset.observe` metric of the frame being staged, so a round runs
-  * no probe job of its own. The reliable posture's persist is lazy and
-  * runs no job when staged; there one action both materializes the
-  * round and measures it, and no observation is ever waited on. Each
-  * round logs its operator, number and measured value at DEBUG.
+  * loop decides on (improved-row count, peel value, frontier or
+  * remaining-row count) is a `Dataset.observe` metric of the frame
+  * being staged, so a round runs no probe job of its own. The reliable
+  * posture's persist is lazy and runs no job when staged; there one
+  * action both materializes the round and measures it, and no
+  * observation is ever waited on. Each [[relax]] and [[peel]] round
+  * logs its operator, number and measured value at DEBUG.
   *
   * The round cap says what reaching it means ([[Fixpoint.OnCap]]): a
   * BFS depth bound truncates by definition, while every other loop
@@ -50,13 +56,15 @@ private[graft] final class Fixpoint(op: String, reliable: Boolean) extends Loggi
     * staged rows, read off the staging job ([[measured]]).
     */
   def stage(df: DataFrame, m: Column): (DataFrame, Long) = {
-    val (s, Seq(v)) = measured(m)(_ => df); frames += s; (s, v)
+    val (s, Seq(v)) = measured(m.cast("long"))(_ => df); frames += s
+    (s, v.asInstanceOf[java.lang.Long].longValue) // a null aggregate throws, never reads as 0
   }
 
-  /** Stages the frame `build` returns and gives the BIGINT aggregate `m`
-    * over the rows of every frame `build` passes through its argument,
-    * in call order, then over the staged frame. A frame passed through
-    * must be one the staged plan computes exactly once.
+  /** Stages the frame `build` returns and gives the aggregate `m` (a
+    * BIGINT, or a struct when one number is not enough) over the rows of
+    * every frame `build` passes through its argument, in call order, then
+    * over the staged frame. A frame passed through must be one the staged
+    * plan computes exactly once.
     *
     * Default posture: each value is a `Dataset.observe` metric of the
     * staging job, read with a bounded wait; one that never arrives
@@ -66,14 +74,14 @@ private[graft] final class Fixpoint(op: String, reliable: Boolean) extends Loggi
     * the passed-through ones from their staged inputs.
     */
   private def measured(m: Column)(
-      build: (DataFrame => DataFrame) => DataFrame): (DataFrame, Seq[Long]) = {
-    val v = m.cast("long").as("v")
+      build: (DataFrame => DataFrame) => DataFrame): (DataFrame, Seq[Any]) = {
+    val v = m.as("v")
     if (reliable) {
       val inner = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       val s = Staging.stage(build { df => inner += df; df }, reliable)
       val values = (inner :+ s).zipWithIndex
         .map { case (f, i) => f.agg(v).select(lit(i).as("i"), col("v")) }
-        .reduce(_ unionByName _).collect().sortBy(_.getInt(0)).map(_.getLong(1))
+        .reduce(_ unionByName _).collect().sortBy(_.getInt(0)).map(_.get(1))
       (s, values.toSeq)
     } else {
       val obs = scala.collection.mutable.ArrayBuffer.empty[Observation]
@@ -82,7 +90,7 @@ private[graft] final class Fixpoint(op: String, reliable: Boolean) extends Loggi
       }
       val s = Staging.stage(observe(build(observe)), reliable)
       (s, obs.map { o =>
-        try Await.result(o.future, observationWait).getLong(0)
+        try Await.result(o.future, observationWait).get(0)
         catch {
           case _: TimeoutException => throw new IllegalStateException(
             s"$op: the staging job's observation did not arrive within $observationWait")
@@ -124,15 +132,15 @@ private[graft] final class Fixpoint(op: String, reliable: Boolean) extends Loggi
   }
 
   /** Synchronous peel: stages `seed`, then per round `batch` chained
-    * `step` updates as one staged frame, until the BIGINT aggregate
-    * `size` (a count or sum over the state) stops changing or reaches
-    * zero. `size` is measured on every update of the batch inside the
-    * staging job, and the loop stops at the first update that left it
-    * unchanged; `size` must be monotone over updates, so an unchanged
-    * update means the state before it was the fixpoint. Each round
-    * releases the previous state on the reliable posture; the returned
-    * state stays staged. Reaching `maxRounds` rounds while still
-    * changing throws, naming the bound given in `cap`.
+    * `step` updates as one staged frame, until the aggregate `size`
+    * stops changing or reaches zero. `size` is measured on every update
+    * of the batch inside the staging job, and the loop stops at the
+    * first update that left it unchanged. An unchanged `size` must mean
+    * the state before that update was the fixpoint: a count or sum that
+    * is monotone over updates, or (with `batch` 1) a signature of the
+    * whole state. Each round releases the previous state on the reliable
+    * posture; the returned state stays staged. Reaching `maxRounds`
+    * rounds while still changing throws the error of `cap`.
     */
   def peel(seed: DataFrame, maxRounds: Long, cap: Fail, size: Column, batch: Int = 1)(
       step: DataFrame => DataFrame): DataFrame = {
@@ -165,10 +173,13 @@ private[graft] final class Fixpoint(op: String, reliable: Boolean) extends Loggi
       pinned
     }
 
-  /** Runs `round(state, r)` for r = 1, 2, … until it reports no change;
-    * returns the last state and the number of rounds that changed it.
+  /** Runs `round(state, r)` for r = 1, 2, … until it reports no change
+    * or `maxRounds` rounds ran; returns the last state and the number of
+    * rounds that changed it. A round that reports no change is counted
+    * against `maxRounds` too, so a loop that charges only changing rounds
+    * passes its budget + 1.
     */
-  private def loop[S](init: S, maxRounds: Long, onCap: OnCap)(
+  def loop[S](init: S, maxRounds: Long, onCap: OnCap)(
       round: (S, Int) => (S, Boolean)): (S, Int) = {
     var state = init
     var rounds = 0
@@ -180,9 +191,8 @@ private[graft] final class Fixpoint(op: String, reliable: Boolean) extends Loggi
       changed = c
     }
     onCap match {
-      case Fail(bound) if changed => throw new IllegalStateException(
-        s"$op did not reach its fixpoint within $bound; raise the bound " +
-          "(a state short of the fixpoint is not the result)")
+      case Fail(bound, why) if changed => throw new IllegalStateException(
+        s"$op did not reach its fixpoint within $bound; $why")
       case _ => (state, if (changed) rounds else rounds - 1)
     }
   }
@@ -198,8 +208,12 @@ private[graft] object Fixpoint {
   /** Return the state: the cap is part of the result's definition. */
   case object Truncate extends OnCap
 
-  /** Throw: a state short of the fixpoint is a wrong answer. */
-  final case class Fail(bound: String) extends OnCap
+  /** Throw: a state short of the fixpoint is a wrong answer. The error
+    * names the `bound` and says `why` it ran out.
+    */
+  final case class Fail(bound: String,
+      why: String = "raise the bound (a state short of the fixpoint is not the result)")
+    extends OnCap
 
   /** How long a round waits for its staging job's observation. Observed
     * metrics arrive through the listener bus right after the job; the

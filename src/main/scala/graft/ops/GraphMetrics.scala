@@ -1010,35 +1010,12 @@ object GraphMetrics {
       bCol: String = "b_id",
       maxDegree: Int = Int.MaxValue,
       reliable: Boolean = false,
-      walkCol: String = ""): DataFrame = {
-    require(steps >= 1, s"steps must be >= 1: $steps")
-    require(maxDegree >= 1, s"maxDegree must be >= 1: $maxDegree")
-    import org.apache.spark.sql.expressions.Window
-    // explode symmetrize: one canonicalEdges pass, not two (r18)
-    val symAll = symmetrize(canonicalEdges(pairs, aCol, bCol))
-    val capped =
-      if (maxDegree == Int.MaxValue) symAll
-      else symAll
-        .withColumn("__rn", row_number().over(Window.partitionBy("src").orderBy("dst")))
-        .where(col("__rn") <= maxDegree).drop("__rn")
-    val sym = Staging.stage(capped, reliable)
-    val startRows =
-      if (walkCol.isEmpty)
-        starts.select(col(startCol).cast("long").as("walk_id")).distinct()
-          .select(col("walk_id"), col("walk_id").as("node"))
-      else
-        starts.select(col(walkCol).cast("long").as("walk_id"),
-          col(startCol).cast("long").as("node")).distinct()
-    var pos = Staging.stage(startRows, reliable)
-    val frames = scala.collection.mutable.ArrayBuffer(pos)
-    var corpus = pos.select(col("walk_id"), lit(0L).as("step"), col("node"))
-    var step = 0
-    var live = !pos.isEmpty
-    while (live && step < steps) {
-      step += 1
+      walkCol: String = ""): DataFrame =
+    walk("randomWalks", pairs, starts, steps, startCol, aCol, bCol, maxDegree, reliable,
+        walkCol)(identity) { (pos, sym, step) =>
       // the choice hash binds (walk, step, candidate): independent
       // draws per walk and per step, replayable as a SQL expression
-      val nxt = Staging.stage(pos
+      pos
         .join(sym, col("node") === col("src"))
         .select(col("walk_id"),
           struct(
@@ -1047,21 +1024,45 @@ object GraphMetrics {
               col("dst").cast("string"))).as("h"),
             col("dst").as("nxt")).as("pick"))
         .groupBy("walk_id").agg(min(col("pick")).as("m"))
-        .select(col("walk_id"), col("m.nxt").as("node")),
-        reliable)
-      frames += nxt
-      corpus = corpus.unionByName(
-        nxt.select(col("walk_id"), lit(step.toLong).as("step"), col("node")))
-      live = !nxt.isEmpty
-      pos = nxt
+        .select(col("walk_id"), col("m.nxt").as("node"))
     }
-    val out = Staging.stage(corpus, reliable)
-    if (reliable) {
-      out.count()
-      frames.foreach(_.unpersist())
-      sym.unpersist()
-    }
-    out
+
+  /** The step loop both walkers share: stages the symmetric adjacency
+    * (capped at `maxDegree` neighbors per node by neighbor id) and the
+    * start positions `seed((walk_id, node))`, then `hop(pos, sym, step)`
+    * per step until `steps` or until no walker moved; returns the corpus
+    * `(walk_id, step, node)` including step 0, staged.
+    */
+  private def walk(op: String, pairs: DataFrame, starts: DataFrame, steps: Int,
+      startCol: String, aCol: String, bCol: String, maxDegree: Int, reliable: Boolean,
+      walkCol: String)(seed: DataFrame => DataFrame)(
+      hop: (DataFrame, DataFrame, Int) => DataFrame): DataFrame = {
+    require(steps >= 1, s"steps must be >= 1: $steps")
+    require(maxDegree >= 1, s"maxDegree must be >= 1: $maxDegree")
+    import org.apache.spark.sql.expressions.Window
+    val fx = new Fixpoint(op, reliable)
+    // explode symmetrize: one canonicalEdges pass, not two (r18)
+    val symAll = symmetrize(canonicalEdges(pairs, aCol, bCol))
+    val sym = fx.stage(
+      if (maxDegree == Int.MaxValue) symAll
+      else symAll
+        .withColumn("__rn", row_number().over(Window.partitionBy("src").orderBy("dst")))
+        .where(col("__rn") <= maxDegree).drop("__rn"))
+    val startRows =
+      if (walkCol.isEmpty)
+        starts.select(col(startCol).cast("long").as("walk_id")).distinct()
+          .select(col("walk_id"), col("walk_id").as("node"))
+      else
+        starts.select(col(walkCol).cast("long").as("walk_id"),
+          col(startCol).cast("long").as("node")).distinct()
+    val (pos, walkers) = fx.stage(seed(startRows), count(lit(1)))
+    val start = pos.select(col("walk_id"), lit(0L).as("step"), col("node"))
+    fx.finish(if (walkers == 0L) start else fx.loop((pos, start), steps, Fixpoint.Truncate) {
+      case ((pos, corpus), step) =>
+        val (nxt, moved) = fx.stage(hop(pos, sym, step), count(lit(1)))
+        ((nxt, corpus.unionByName(
+          nxt.select(col("walk_id"), lit(step.toLong).as("step"), col("node")))), moved > 0L)
+    }._1._2, eager = true)
   }
 
   /** node2vec-BIASED deterministic walks (Grover & Leskovec, "node2vec:
@@ -1105,68 +1106,32 @@ object GraphMetrics {
       maxDegree: Int = Int.MaxValue,
       reliable: Boolean = false,
       walkCol: String = ""): DataFrame = {
-    require(steps >= 1, s"steps must be >= 1: $steps")
-    require(maxDegree >= 1, s"maxDegree must be >= 1: $maxDegree")
     require(returnWeight >= 1L && nearWeight >= 1L && farWeight >= 1L,
       s"class weights must be >= 1: ($returnWeight, $nearWeight, $farWeight)")
-    import org.apache.spark.sql.expressions.Window
-    // explode symmetrize: one canonicalEdges pass, not two (r18)
-    val symAll = symmetrize(canonicalEdges(pairs, aCol, bCol))
-    val capped =
-      if (maxDegree == Int.MaxValue) symAll
-      else symAll
-        .withColumn("__rn", row_number().over(Window.partitionBy("src").orderBy("dst")))
-        .where(col("__rn") <= maxDegree).drop("__rn")
-    val sym = Staging.stage(capped, reliable)
-    val startRows =
-      if (walkCol.isEmpty)
-        starts.select(col(startCol).cast("long").as("walk_id")).distinct()
-          .select(col("walk_id"), col("walk_id").as("node"))
-      else
-        starts.select(col(walkCol).cast("long").as("walk_id"),
-          col(startCol).cast("long").as("node")).distinct()
-    var pos = Staging.stage(
-      startRows.select(col("walk_id"), col("node").as("prev"), col("node")), reliable)
-    val frames = scala.collection.mutable.ArrayBuffer(pos)
-    var corpus = pos.select(col("walk_id"), lit(0L).as("step"), col("node"))
-    var step = 0
-    var live = !pos.isEmpty
-    while (live && step < steps) {
-      step += 1
-      val nxt = Staging.stage(pos
-        .join(sym, col("node") === col("src"))
-        .select(col("walk_id"), col("prev"), col("node"), col("dst"))
-        // distance-from-prev class: the (prev, dst) probe against the
-        // SAME capped adjacency — null means no edge, i.e. the outward
-        // class. dst = prev is checked first (the return move).
-        .join(sym.select(col("src").as("prev"), col("dst"), lit(1L).as("__near")),
-          Seq("prev", "dst"), "left")
-        .withColumn("__w",
-          when(col("dst") === col("prev"), lit(returnWeight))
-            .when(col("__near") === 1L, lit(nearWeight))
-            .otherwise(lit(farWeight)))
-        .withColumn("__u", graft.functions.TextFunctions.md5Prefix(
-          concat_ws(":", col("walk_id").cast("string"), lit(step.toString),
-            col("dst").cast("string")), 8))
-        .select(col("walk_id"), col("node"),
-          struct(expr("__u div __w").as("race"), col("dst").as("nxt")).as("pick"))
-        .groupBy("walk_id")
-        .agg(min(col("pick")).as("m"), min(col("node")).as("prev"))
-        .select(col("walk_id"), col("prev"), col("m.nxt").as("node")),
-        reliable)
-      frames += nxt
-      corpus = corpus.unionByName(
-        nxt.select(col("walk_id"), lit(step.toLong).as("step"), col("node")))
-      live = !nxt.isEmpty
-      pos = nxt
+    walk("node2vecWalks", pairs, starts, steps, startCol, aCol, bCol, maxDegree, reliable,
+        walkCol)(_.select(col("walk_id"), col("node").as("prev"), col("node"))) {
+      (pos, sym, step) =>
+        pos
+          .join(sym, col("node") === col("src"))
+          .select(col("walk_id"), col("prev"), col("node"), col("dst"))
+          // distance-from-prev class: the (prev, dst) probe against the
+          // SAME capped adjacency — null means no edge, i.e. the outward
+          // class. dst = prev is checked first (the return move).
+          .join(sym.select(col("src").as("prev"), col("dst"), lit(1L).as("__near")),
+            Seq("prev", "dst"), "left")
+          .withColumn("__w",
+            when(col("dst") === col("prev"), lit(returnWeight))
+              .when(col("__near") === 1L, lit(nearWeight))
+              .otherwise(lit(farWeight)))
+          .withColumn("__u", graft.functions.TextFunctions.md5Prefix(
+            concat_ws(":", col("walk_id").cast("string"), lit(step.toString),
+              col("dst").cast("string")), 8))
+          .select(col("walk_id"), col("node"),
+            struct(expr("__u div __w").as("race"), col("dst").as("nxt")).as("pick"))
+          .groupBy("walk_id")
+          .agg(min(col("pick")).as("m"), min(col("node")).as("prev"))
+          .select(col("walk_id"), col("prev"), col("m.nxt").as("node"))
     }
-    val out = Staging.stage(corpus, reliable)
-    if (reliable) {
-      out.count()
-      frames.foreach(_.unpersist())
-      sym.unpersist()
-    }
-    out
   }
 
   /** Double-sweep eccentricity: BFS from `startId`, hop to the farthest

@@ -36,8 +36,8 @@ object Matching {
     *
     * Scale shape per round: one vertex-keyed min-agg over the (u ∪ v)
     * incidence stream, two equi-joins to test "minimal at both ends",
-    * two semi-join shrinks — all node/edge keyed; change detection is
-    * a limit-1 probe on a staged leaf. Returns `(u, v, w)` with u < v.
+    * two semi-join shrinks — all node/edge keyed. Returns `(u, v, w)`
+    * with u < v.
     */
   def greedyMatching(
       edges: DataFrame,
@@ -48,26 +48,21 @@ object Matching {
       reliable: Boolean = false): DataFrame = {
     require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
     val spark = edges.sparkSession
-    val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def staged(df: DataFrame): DataFrame = {
-      val s = Staging.stage(df, reliable); frames += s; s
-    }
+    val fx = new Fixpoint("greedyMatching", reliable)
     val a = col(aCol).cast("long"); val b = col(bCol).cast("long")
-    var e = staged(edges
+    val (e0, n0) = fx.stage(edges
       .select(least(a, b).as("u"), greatest(a, b).as("v"),
         col(weightCol).cast("long").as("w"))
       .where(col("u") =!= col("v"))
-      .groupBy(col("u"), col("v")).agg(min(col("w")).as("w")))
-    var matched = staged(spark.createDataFrame(
+      .groupBy(col("u"), col("v")).agg(min(col("w")).as("w")), count(lit(1)))
+    val none = fx.stage(spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType.fromDDL("u BIGINT, v BIGINT, w BIGINT")))
-    var spent = 0
-    var remaining = !e.isEmpty
-    while (remaining) {
-      spent += 1
-      if (spent > maxIter) throw new IllegalStateException(
-        s"Matching.greedyMatching: not maximal within maxIter=$maxIter rounds — " +
-          "the edge order forms a long dependency chain (raise maxIter)")
+    // a round is charged while edges remain, so maxIter rounds may end
+    // with none left
+    val matched = if (n0 == 0L) none else fx.loop((e0, none), maxIter, Fixpoint.Fail(
+        s"maxIter=$maxIter", "the matching is not maximal yet — the edge order forms a long " +
+          "dependency chain (raise maxIter)")) { case ((e, matched), _) =>
       // each vertex's minimal incident edge under the (w, u, v) order
       val key = struct(col("w"), col("u"), col("v"))
       // explode, not union-of-selects: one scan of the staged edge leaf
@@ -75,26 +70,20 @@ object Matching {
       val nominations = e
         .select(explode(array(col("u"), col("v"))).as("node"), key.as("k"))
         .groupBy(col("node")).agg(min(col("k")).as("mk"))
-      val taken = staged(e
+      val taken = fx.stage(e
         .join(nominations.select(col("node").as("u"), col("mk").as("ku")), Seq("u"))
         .join(nominations.select(col("node").as("v"), col("mk").as("kv")), Seq("v"))
         .where(key === col("ku") && key === col("kv"))
         .select(col("u"), col("v"), col("w")))
-      // lazy union of staged per-round leaves (O(rounds) plan width,
-      // O(1) depth) — staging the accumulator would only buy a job
-      matched = matched.unionByName(taken)
       // explode, not union-of-selects: one scan of the staged taken leaf
       val gone = taken.select(explode(array(col("u"), col("v"))).as("node"))
-      e = staged(e
+      val (rest, left) = fx.stage(e
         .join(gone.select(col("node").as("u")), Seq("u"), "left_anti")
-        .join(gone.select(col("node").as("v")), Seq("v"), "left_anti"))
-      remaining = !e.isEmpty
-    }
-    val out = Staging.stage(matched, reliable)
-    if (reliable) {
-      out.count()
-      frames.foreach(_.unpersist())
-    }
-    out
+        .join(gone.select(col("node").as("v")), Seq("v"), "left_anti"), count(lit(1)))
+      // lazy union of staged per-round leaves (O(rounds) plan width,
+      // O(1) depth) — staging the accumulator would only buy a job
+      ((rest, matched.unionByName(taken)), left > 0L)
+    }._1._2
+    fx.finish(matched, eager = true)
   }
 }

@@ -50,11 +50,10 @@ import org.apache.spark.sql.functions._
   * budget of k covers up to 2k peels/steps/hops of those phases.
   *
   * Scale shape per round: node-keyed equi-joins and map-side-combined
-  * min-aggs only — no cross join, no collect (change detection is
-  * `isEmpty` = a limit-1 job). State frames are staged per round
-  * ([[Staging.stage]]) so self-joining lineage stays flat, and on the
+  * min-aggs only — no cross join, no collect. Every round is staged
+  * ([[Fixpoint]]) so self-joining lineage stays flat, and on the
   * `reliable` posture the final labels are pinned eagerly and every
-  * intermediate frame released ([[GraphMetrics.hits]] pattern).
+  * intermediate frame released.
   *
   * Returns `(id, component)` with `component` = min node id of the SCC;
   * isolated nodes of `edges`' endpoint universe label themselves.
@@ -69,47 +68,42 @@ object Scc {
       reliable: Boolean = false): DataFrame = {
     require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
     val spark = edges.sparkSession
-    val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def staged(df: DataFrame): DataFrame = {
-      val s = Staging.stage(df, reliable); frames += s; s
-    }
+    val fx = new Fixpoint("stronglyConnected", reliable)
     // self-loops are cycle-irrelevant (a node is always mutually
     // reachable with itself); duplicates only inflate the joins. The
     // node UNIVERSE keeps self-loop-only nodes — they are singleton SCCs
     val raw = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-    var e = staged(raw.where(col("src") =!= col("dst")).distinct())
-    var nodes = staged(
+    val e0 = fx.stage(raw.where(col("src") =!= col("dst")).distinct())
+    val (nodes0, n0) = fx.stage(
       // union-of-selects kept deliberately (r18): an explode variant (one
       // scan instead of two) measured 0.89x on q324 in an interleaved 2x2
       // A/B — the narrow projection is 1-2 map tasks at bench scale, so
       // halving the scans halves the map parallelism of the node build.
-      raw.select(col("src").as("id")).union(raw.select(col("dst").as("id"))).distinct())
-    var labels = staged(spark.createDataFrame(
+      raw.select(col("src").as("id")).union(raw.select(col("dst").as("id"))).distinct(),
+      count(lit(1)))
+    val labels0 = fx.stage(spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, component BIGINT")))
-    var spent = 0
-    def tick(phase: String): Unit = {
-      spent += 1
-      if (spent > maxIter) throw new IllegalStateException(
-        s"Scc.stronglyConnected: $phase did not converge within maxIter=$maxIter " +
-          "rounds — raise maxIter (the graph's condensation is deeper than the budget)")
+    // The phases share maxIter: each phase's cap is what is left of it.
+    // A phase charges only the rounds that changed its state (+ 1 to the
+    // cap for the confirming round); coloring also charges its outer
+    // round. Pure projections of staged leaves (label accumulation) stay
+    // LAZY — narrow maps over leaves add no lineage depth. The trim and
+    // color fixpoints run TWO propagation steps per staged round (these
+    // loops are scheduling-latency-bound): the steps are written
+    // SINGLE-REFERENCE (one explode over the input instead of a
+    // self-union), so nesting two of them costs exactly two steps' data
+    // work, and the one subplan that does appear twice (the double-peel's
+    // inner keep) is deduplicated by Spark's ReuseExchange.
+    var left = maxIter.toLong
+    def phase[S](name: String, init: S, charge: Int = 0)(round: S => (S, Boolean)): S = {
+      val (s, changed) = fx.loop(init, left + 1 - charge, Fixpoint.Fail(s"maxIter=$maxIter",
+        s"its $name phase did not converge — raise maxIter (the graph's condensation " +
+          "is deeper than the budget)")) { case (s, _) => round(s) }
+      left -= changed + charge
+      s
     }
-    // Job-count discipline (the dominant cost at bench scale is per-round
-    // scheduling, not data): every frame that gets an isEmpty probe is
-    // staged FIRST so the probe reads the materialized leaf instead of
-    // re-running the plan; pure projections of staged leaves (labels
-    // accumulation) stay LAZY — narrow maps over leaves add no lineage
-    // depth, so staging them would only buy extra jobs. On top of that,
-    // the trim and color fixpoints run TWO propagation steps per staged
-    // probe (r11 verdict item: these loops are scheduling-latency-bound,
-    // ~0.13 s/job × ~30 jobs): the steps are written SINGLE-REFERENCE
-    // (one explode over the input instead of a self-union), so nesting
-    // two of them costs exactly two steps' data work, and the one
-    // subplan that does appear twice (the double-peel's inner keep) is
-    // deduplicated by Spark's ReuseExchange. maxIter budgets count these
-    // doubled rounds — a budget of k now covers up to 2k peels/steps.
-    //
     // KEEP set of one trim peel (nodes with BOTH an in and an out edge),
     // from one pass over the edge frame: each edge emits a has-out vote
     // for src and a has-in vote for dst; max-agg folds the votes
@@ -125,26 +119,24 @@ object Scc {
     def restrict(ed: DataFrame, keep: DataFrame): DataFrame =
       ed.join(keep.select(col("id").as("src")), Seq("src"), "left_semi")
         .join(keep.select(col("id").as("dst")), Seq("dst"), "left_semi")
-    var done = nodes.isEmpty
-    while (!done) {
-      // ---- 1. trim the acyclic fringe (two peels per staged probe) --
-      var trimming = true
-      while (trimming) {
-        val keep = staged(keepOf(restrict(e, keepOf(e))))
-        val t = nodes.join(keep, Seq("id"), "left_anti")
-        trimming = !t.isEmpty
-        if (trimming) {
-          tick("trim")
-          labels = labels.unionByName(
-            t.select(col("id"), col("id").as("component")))
-          nodes = keep
-          e = staged(restrict(e, keep))
-        }
-      }
-      done = nodes.isEmpty
-      if (!done) {
-        tick("outer")
-        // ---- 2. forward min-coloring to fixpoint (two steps/probe) ---
+    // active graph: nodes, their count, edges among them, labels so far
+    type G = (DataFrame, Long, DataFrame, DataFrame)
+    // ---- 1. trim the acyclic fringe (two peels per staged round) ------
+    // keep ⊆ nodes, so a round peeled nodes iff it kept fewer
+    def trim(g: G): G = if (g._2 == 0L) g else phase("trim", g) {
+      case (nodes, n, e, labels) =>
+        val (keep, k) = fx.stage(keepOf(restrict(e, keepOf(e))), count(lit(1)))
+        if (k == n) ((nodes, n, e, labels), false)
+        else ((keep, k, fx.stage(restrict(e, keep)), labels.unionByName(
+          nodes.join(keep, Seq("id"), "left_anti").select(col("id"), col("id").as("component")))),
+          true)
+    }
+    @annotation.tailrec
+    def peel(g: G): DataFrame = {
+      val (nodes, n, e, labels) = g
+      if (n == 0L) labels
+      else {
+        // ---- 2. forward min-coloring to fixpoint (two steps/round) ----
         // one step: each (id, color) row left-joined to its out-edges
         // emits (id, color) — self-retention — and (dst, color) —
         // propagation; the min-agg folds both map-side. Single input
@@ -156,28 +148,23 @@ object Scc {
               struct(coalesce(col("dst"), col("id")).as("id"), col("color")))).as("p"))
             .select(col("p.id").as("id"), col("p.color").as("color"))
             .groupBy(col("id")).agg(min(col("color")).as("color"))
-        var color = nodes.select(col("id"), col("id").as("color"))
-        var changed = true
-        while (changed) {
-          val merged = staged(color.join(
-            colorStep(colorStep(color)).select(col("id"), col("color").as("nc")),
-            Seq("id"))
-            .select(col("id"), col("color"), col("nc")))
-          changed = !merged.where(col("nc") < col("color")).isEmpty
-          if (changed) tick("color")
-          color = merged.select(col("id"), col("nc").as("color"))
+        val color = phase("color", nodes.select(col("id"), col("id").as("color")), charge = 1) {
+          color =>
+            val (merged, lowered) = fx.stage(color.join(
+              colorStep(colorStep(color)).select(col("id"), col("color").as("nc")), Seq("id"))
+              .select(col("id"), col("color"), col("nc")),
+              count(when(col("nc") < col("color"), true)))
+            (merged.select(col("id"), col("nc").as("color")), lowered > 0L)
         }
-        val colorLeaf = staged(color)
+        val colorLeaf = fx.stage(color)
         // ---- 3+4. roots, then backward reach inside each color class -
         // reach accumulates as a lazy union of staged per-round leaves:
         // O(rounds) plan width, O(1) depth — no per-union staging job.
-        // Two hops per staged probe, like trim/color: the first hop's
+        // Two hops per staged round, like trim/color: the first hop's
         // lazy subplan appears more than once inside the second's (the
         // accumulate-then-anti shape is inherently multi-reference) and
         // is deduplicated by ReuseExchange; the hop frames are
         // frontier-sized either way.
-        var reach = staged(colorLeaf.where(col("color") === col("id"))
-          .select(col("color").as("component"), col("id")))
         def reachStep(r: DataFrame): DataFrame = r
           .join(e, col("id") === col("dst"))
           .select(col("component"), col("src").as("pid"))
@@ -186,34 +173,25 @@ object Scc {
           .select(col("component"), col("pid").as("id"))
           .distinct()
           .join(r, Seq("component", "id"), "left_anti")
-        var growing = true
-        while (growing) {
+        val reach = phase("reach", fx.stage(colorLeaf.where(col("color") === col("id"))
+          .select(col("color").as("component"), col("id")))) { reach =>
           val hop1 = reachStep(reach)
-          val hop2 = reachStep(reach.unionByName(hop1))
           // hop2 is anti-joined against reach ∪ hop1, so the two hop
           // sets are disjoint by construction — plain union, no distinct
-          val preds = staged(hop1.unionByName(hop2))
-          growing = !preds.isEmpty
-          if (growing) {
-            tick("reach")
-            reach = reach.unionByName(preds)
-          }
+          val (preds, grown) = fx.stage(
+            hop1.unionByName(reachStep(reach.unionByName(hop1))), count(lit(1)))
+          if (grown == 0L) (reach, false) else (reach.unionByName(preds), true)
         }
         // ---- 5. commit the peeled SCCs, shrink the active graph ------
-        labels = labels.unionByName(reach.select(col("id"), col("component")))
-        nodes = staged(nodes.join(reach.select(col("id")), Seq("id"), "left_anti"))
-        e = staged(e
-          .join(nodes.select(col("id").as("src")), Seq("src"), "left_semi")
-          .join(nodes.select(col("id").as("dst")), Seq("dst"), "left_semi"))
-        done = nodes.isEmpty
+        val (rest, m) = fx.stage(nodes.join(reach.select(col("id")), Seq("id"), "left_anti"),
+          count(lit(1)))
+        peel(trim((rest, m, fx.stage(e
+          .join(rest.select(col("id").as("src")), Seq("src"), "left_semi")
+          .join(rest.select(col("id").as("dst")), Seq("dst"), "left_semi")),
+          labels.unionByName(reach.select(col("id"), col("component"))))))
       }
     }
-    val out = Staging.stage(labels, reliable)
-    if (reliable) {
-      out.count()
-      frames.foreach(_.unpersist())
-    }
-    out
+    fx.finish(peel(trim((nodes0, n0, e0, labels0))), eager = true)
   }
 
   /** Longest-path LAYERING of a DAG: `layer(v)` = the length of the
@@ -222,17 +200,17 @@ object Scc {
     * or condensation-DAG planner assigns. The op REQUIRES acyclicity
     * and proves it operationally: on a cyclic input the max-propagation
     * never fixes and the `maxIter` budget throws (plus an upfront
-    * self-loop probe that names the cheapest cycle immediately), so a
+    * self-loop check that names the cheapest cycle immediately), so a
     * wrong layering is never returned — the [[stronglyConnected]] /
     * kTruss contract. Feed arbitrary directed graphs through
     * [[condensationEdges]] first.
     *
     * Scale shape per round: ONE node-keyed equi-join + a
-    * map-side-combined max-agg per step, TWO steps per staged probe
+    * map-side-combined max-agg per step, TWO steps per staged round
     * (the step is single-reference, so nesting costs exactly two
-    * steps' data work); rounds = ⌈DAG depth / 2⌉. Same staged-leaf
-    * probe discipline as [[stronglyConnected]]; `maxIter` budgets the
-    * doubled rounds, so k covers a DAG up to ~2k deep.
+    * steps' data work); rounds = ⌈DAG depth / 2⌉. `maxIter` budgets
+    * the doubled rounds that raise a layer, so k covers a DAG up to ~2k
+    * deep.
     */
   def dagLayers(
       edges: DataFrame,
@@ -241,25 +219,19 @@ object Scc {
       maxIter: Int = 60,
       reliable: Boolean = false): DataFrame = {
     require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
-    val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def staged(df: DataFrame): DataFrame = {
-      val s = Staging.stage(df, reliable); frames += s; s
-    }
+    val fx = new Fixpoint("dagLayers", reliable)
     val raw = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-    val e = staged(raw.distinct())
-    // bounded driver fetch (<= 1 row) on the STAGED leaf (r18 — the
-    // pre-staging probe executed the caller's whole upstream edge plan
-    // once just to look for self-loops; distinct preserves them, so the
-    // leaf sees every witness): a self-loop is the cheapest cycle
-    // witness — name it now instead of burning maxIter rounds
-    val loop = e.where(col("src") === col("dst")).limit(1).collect()
-    require(loop.isEmpty,
-      s"dagLayers: self-loop at node ${loop.headOption.map(_.getLong(0)).getOrElse(-1L)} — input is not a DAG")
-    val nodes = staged(
+    val (e, loops) = fx.stage(raw.distinct(), count(when(col("src") === col("dst"), true)))
+    // a self-loop is the cheapest cycle witness — name it now instead of
+    // burning maxIter rounds (the culprit is fetched only when one exists)
+    require(loops == 0L, "dagLayers: self-loop at node " +
+      s"${e.where(col("src") === col("dst")).limit(1).collect().head.get(0)} — input is not a DAG")
+    val (nodes, n) = fx.stage(
       // union-of-selects kept deliberately — explode measured 0.79x on
       // q328 (same class as the [[stronglyConnected]] node build above)
-      e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct())
+      e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct(),
+      count(lit(1)))
     // one longest-path step, single-reference (the colorStep idiom of
     // [[stronglyConnected]]): each (id, layer) row left-joined to its
     // out-edges emits (id, layer) — self-retention — and
@@ -272,28 +244,18 @@ object Scc {
             (col("layer") + when(col("dst").isNull, 0L).otherwise(1L)).as("layer")))).as("p"))
         .select(col("p.id").as("id"), col("p.layer").as("layer"))
         .groupBy(col("id")).agg(max(col("layer")).as("layer"))
-    var lvl = nodes.select(col("id"), lit(0L).as("layer"))
-    var spent = 0
-    var changed = !nodes.isEmpty
-    while (changed) {
-      val merged = staged(lvl.join(
+    val seed = nodes.select(col("id"), lit(0L).as("layer"))
+    // maxIter counts the rounds that raised a layer, not the confirming one
+    val layers = if (n == 0L) seed else fx.loop(seed, maxIter + 1L, Fixpoint.Fail(
+        s"maxIter=$maxIter", "the input has a cycle, or its depth exceeds the budget " +
+          "of 2 steps per round (raise maxIter)")) { case (lvl, _) =>
+      val (merged, raised) = fx.stage(lvl.join(
         layerStep(layerStep(lvl)).select(col("id"), col("layer").as("nl")), Seq("id"))
-        .select(col("id"), col("layer"), col("nl")))
-      changed = !merged.where(col("nl") > col("layer")).isEmpty
-      if (changed) {
-        spent += 1
-        if (spent > maxIter) throw new IllegalStateException(
-          s"dagLayers: no fixpoint within maxIter=$maxIter rounds (2 steps each) — " +
-            "the input has a cycle, or its depth exceeds the budget (raise maxIter)")
-      }
-      lvl = merged.select(col("id"), col("nl").as("layer"))
-    }
-    val out = Staging.stage(lvl, reliable)
-    if (reliable) {
-      out.count()
-      frames.foreach(_.unpersist())
-    }
-    out
+        .select(col("id"), col("layer"), col("nl")),
+        count(when(col("nl") > col("layer"), true)))
+      (merged.select(col("id"), col("nl").as("layer")), raised > 0L)
+    }._1
+    fx.finish(layers, eager = true)
   }
 
   /** Edges of the CONDENSATION — the DAG obtained by contracting every

@@ -92,30 +92,26 @@ object SequencePack {
       reliable: Boolean = false): DataFrame = {
     require(capacity >= 1, s"capacity must be >= 1: $capacity")
     val spark = docs.sparkSession
+    val fx = new Fixpoint("nextFitWindows", reliable)
     val base = docs.select(col(idCol).cast("long").as("doc_id"),
       col(nCol).cast("long").as("n")).where(col("n") > 0)
-    val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val ranked = Staging.stage(Normalize.rankedPrefixSum(
-      base, Seq(col("doc_id")), "n", "__rk", "__cum"), reliable)
-    frames += ranked
-    // bounded driver fetch (≤ 1 row) on the STAGED leaf (r18 — the
-    // pre-staging probe executed the caller's whole doc plan once just
-    // to check sizes; the ranked frame carries n, so the leaf sees every
-    // violation): the n ≤ capacity contract is what makes the 2-bucket
-    // as-of exact — violating it silently would mis-assign every later
-    // window, so fail loudly with the culprit
-    val oversized = ranked.where(col("n") > capacity)
-      .select(col("doc_id"), col("n")).limit(1).collect()
-    require(oversized.isEmpty,
-      s"doc ${oversized.headOption.map(_.getLong(0)).getOrElse(-1L)} has " +
-        s"${oversized.headOption.map(_.getLong(1)).getOrElse(-1L)} tokens > capacity $capacity — " +
-        "pre-split with concatChunk or truncate with Chunking.truncateTokens")
+    // the n ≤ capacity contract is what makes the 2-bucket as-of exact —
+    // violating it silently would mis-assign every later window, so fail
+    // loudly with the culprit. Oversized rows are counted on the job that
+    // stages the ranked frame (it carries n, so it sees every violation);
+    // the culprit is fetched only when there is one.
+    val (ranked, oversized) = fx.stage(Normalize.rankedPrefixSum(
+      base, Seq(col("doc_id")), "n", "__rk", "__cum"), count(when(col("n") > capacity, true)))
+    require(oversized == 0L, {
+      val r = ranked.where(col("n") > capacity).select(col("doc_id"), col("n")).limit(1)
+        .collect().head
+      s"doc ${r.get(0)} has ${r.get(1)} tokens > capacity $capacity — " +
+        "pre-split with concatChunk or truncate with Chunking.truncateTokens"
+    })
     // prefix-sum sequence with the S_0 = 0 sentinel (the stream start is
     // itself a window boundary)
-    val builds = Staging.stage(ranked.select(col("__rk").as("rk"), col("__cum").as("cum"))
-      .unionByName(spark.range(1).select(lit(0L).as("rk"), lit(0L).as("cum"))),
-      reliable)
-    frames += builds
+    val builds = fx.stage(ranked.select(col("__rk").as("rk"), col("__cum").as("cum"))
+      .unionByName(spark.range(1).select(lit(0L).as("rk"), lit(0L).as("cum"))))
     // jump(i) = max j with S_j ≤ S_i + C. Because consecutive prefix
     // sums differ by ≤ C (the enforced doc-size bound), the answer's cum
     // lies in [S_i, S_i + C] — within the probe's capacity-bucket or the
@@ -128,32 +124,23 @@ object SequencePack {
       expr(s"cum div ${capacity}L").as("__bkt"))
     // j > i filters the terminal self-loop (jump(N) = N): the orbit walk
     // below must STOP at the stream end, not spin on it
-    val jump1 = Staging.stage(
+    val jump1 = fx.stage(
       AsOfJoin.backward(probes, buildSide, key = "__bkt",
         probeOrder = "t", buildOrder = "cum", valueCols = Seq("jmp"), inner = false)
         .groupBy(col("i")).agg(max(col("jmp")).as("j"))
-        .where(col("j") > col("i")),
-      reliable)
-    frames += jump1
+        .where(col("j") > col("i")))
     // orbit of 0 under jump, by BATCHED pointer doubling (the
-    // [[SpanningForest]] probe pattern): with the orbit covering the
-    // first M iterates and the map at J^M, one staged round extends by
-    // J^M (→ 2M) and then by J^(2M) over the EXTENDED set (→ 4M,
-    // contiguous — applying J^(2M) to the unextended orbit would skip
-    // iterates [2M−1] and leave boundary holes), while the map squares
-    // twice lazily. Coverage quadruples per materialized round, so a
-    // trillion windows need ~20 rounds of three fused jobs each.
-    var orbit = Staging.stage(spark.range(1).select(lit(0L).as("b")), reliable)
-    frames += orbit
-    var jmap = jump1
-    var nOrbit = orbit.count()
-    var grew = true
-    var rounds = 0
-    while (grew) {
-      rounds += 1
-      require(rounds <= 32,
-        "next-fit orbit did not settle in 32 quadrupling rounds — 4^32 windows " +
-          "exceeds any real corpus; the jump map is inconsistent (data changed mid-job?)")
+    // [[SpanningForest]] pattern): with the orbit covering the first M
+    // iterates and the map at J^M, one staged round extends by J^M
+    // (→ 2M) and then by J^(2M) over the EXTENDED set (→ 4M, contiguous
+    // — applying J^(2M) to the unextended orbit would skip iterates
+    // [2M−1] and leave boundary holes), while the map squares twice.
+    // Coverage quadruples per materialized round, so a trillion windows
+    // need ~20 rounds; the orbit starts as the single point 0.
+    val ((orbit, _, _), _) = fx.loop(
+        (fx.stage(spark.range(1).select(lit(0L).as("b"))), jump1, 1L), 32, Fixpoint.Fail(
+          "32 quadrupling rounds", "4^32 windows exceeds any real corpus; the jump map is " +
+            "inconsistent (data changed mid-job?)")) { case ((orbit, jmap, size), _) =>
       // Stage the squared map ONCE per round (r18): j2 was previously a
       // LAZY self-join, recomputed inside the grown staging job (via e2)
       // AND twice inside the j4 staging job — the before-plans
@@ -161,42 +148,33 @@ object SequencePack {
       // 18- and 12-exchange jobs per round, three doc-scale
       // squarings where one suffices. With j2 staged, grown and j4 are
       // leaf joins (~6 and ~2 exchanges).
-      val j2 = Staging.stage(
+      val j2 = fx.stage(
         jmap.alias("a").join(jmap.alias("b"), col("a.j") === col("b.i"))
-          .select(col("a.i").as("i"), col("b.j").as("j")), reliable)
-      frames += j2
+          .select(col("a.i").as("i"), col("b.j").as("j")))
       val e1 = orbit.join(jmap, col("b") === col("i")).select(col("j").as("b"))
       val o1 = orbit.unionByName(e1)
       val e2 = o1.join(j2, col("b") === col("i")).select(col("j").as("b"))
       // ONE staged frame per round carries BOTH halves of the round's
       // state (r18): the grown orbit (tag 'o') and the twice-squared map
-      // J^4 (tag 'j') — previously two separate staging jobs. Both halves
-      // are leaf joins of already-staged frames, so fusing them loses no
-      // plan flatness; the j-half is computed speculatively on the FINAL
-      // round (the old shape skipped it once `grew` came back false) —
-      // one join of two staged leaves, paid once, against a scheduling
-      // round saved on EVERY round.
-      val both = Staging.stage(
+      // J^4 (tag 'j'). Both halves are leaf joins of already-staged
+      // frames, so fusing them loses no plan flatness; the j-half is
+      // computed speculatively on the FINAL round — one join of two
+      // staged leaves, paid once, against a scheduling round saved on
+      // EVERY round. The orbit's size is observed on the same job.
+      val (both, grown) = fx.stage(
         o1.unionByName(e2).distinct()
           .select(lit("o").as("tag"), col("b").as("i"), lit(null).cast("long").as("j"))
           .unionByName(j2.alias("a").join(j2.alias("b"), col("a.j") === col("b.i"))
             .select(lit("j").as("tag"), col("a.i").as("i"), col("b.j").as("j"))),
-        reliable)
-      frames += both
-      val grown = both.where(col("tag") === "o").select(col("i").as("b"))
-      val cnt = grown.count()
-      grew = cnt > nOrbit
-      nOrbit = cnt
-      orbit = grown
-      if (grew) jmap = both.where(col("tag") === "j").select(col("i"), col("j"))
+        count(when(col("tag") === "o", true)))
+      ((both.where(col("tag") === "o").select(col("i").as("b")),
+        both.where(col("tag") === "j").select(col("i"), col("j")), grown), grown > size)
     }
     // every orbit point except the terminal one (the only index with no
     // jump1 row) OPENS a window; number them 0.. in stream order
     val starts = orbit.join(jump1.select(col("i")), col("b") === col("i"), "left_semi")
       .join(builds, col("b") === col("rk")).select(col("b"), col("cum"))
-    val windows = Staging.stage(
-      Normalize.denseIds(starts, "cum", "b", "__wid"), reliable)
-    frames += windows
+    val windows = fx.stage(Normalize.denseIds(starts, "cum", "b", "__wid"))
     // assignment, again a 2-bucket as-of but in TOKEN space: a doc
     // belongs to the window of the last boundary strictly before its
     // cum, and window fill ≤ C bounds that gap at one capacity width
@@ -206,17 +184,12 @@ object SequencePack {
         expr(s"t div ${capacity}L"), expr(s"t div ${capacity}L - 1L"))))
     val bndSide = windows.select(col("__wid"), col("cum"),
       expr(s"cum div ${capacity}L").as("__bkt"))
-    val out = Staging.stage(
+    fx.finish(
       AsOfJoin.backward(docProbes, bndSide, key = "__bkt",
         probeOrder = "t", buildOrder = "cum", valueCols = Seq("__wid"), inner = false)
         .groupBy(col("doc_id"), col("n"))
         .agg(max(col("__wid")).as("window_id"))
         .select(col("doc_id"), col("window_id"), col("n").as("n_tokens")),
-      reliable)
-    if (reliable) {
-      out.count()
-      frames.foreach(_.unpersist())
-    }
-    out
+      eager = true)
   }
 }

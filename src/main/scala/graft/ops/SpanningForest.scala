@@ -42,9 +42,9 @@ import org.apache.spark.sql.functions._
   * self-joins. The doubling is batched: the 2-cycle break and two
   * squarings build lazily over the staged frames (the leafed staging
   * keeps the self-referencing plan a handful of leaves, not 2^jumps),
-  * so each staged probe raises the pointer map to its FOURTH power —
+  * so each staged jump raises the pointer map to its FOURTH power —
   * depth quarters per materialized job, and shallow rounds (hash-min
-  * elections mostly produce stars) settle on the first probe.
+  * elections mostly produce stars) settle on the first jump.
   *
   * Determinism: the elected edge per component is the minimum of a
   * total order, so the returned forest is a pure function of the input;
@@ -56,17 +56,17 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape per round: one per-component min aggregation (map-side
   * combined: one candidate row per component per partition), O(log
-  * depth / 2) component-sized pointer-jump probes, and one
+  * depth / 2) component-sized pointer-jump rounds, and one
   * relabel-and-compress (two joins + one agg) over the SHRINKING edge
-  * table; per-round state (edge table, elected edges) is staged
-  * ([[Staging.stage]], caller-selectable fault tolerance via
+  * table; per-round state (edge table, elected edges, pointer maps) is
+  * staged ([[Fixpoint]], caller-selectable fault tolerance via
   * `reliable`). Nothing ever collects. Resource lifecycle on the
-  * reliable posture: the final forest is pinned (count) and every
-  * per-round staged frame — including each round's elected-edge frame
-  * the forest union lazily referenced — is then released, so a
-  * reliable MSF run holds O(1), not O(log n), persisted frames after
-  * it returns (the house rule: CacheManager keeps strong references,
-  * so un-released loop frames outlive the query).
+  * reliable posture: the final forest is pinned and every per-round
+  * staged frame — including each round's elected-edge frame the forest
+  * union lazily referenced — is then released, so a reliable MSF run
+  * holds O(1), not O(log n), persisted frames after it returns (the
+  * house rule: CacheManager keeps strong references, so un-released
+  * loop frames outlive the query).
   */
 object SpanningForest {
 
@@ -83,49 +83,40 @@ object SpanningForest {
       maxRounds: Int = 50,
       reliable: Boolean = false): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
+    val fx = new Fixpoint("boruvka", reliable)
     // Loop state: the component-level multigraph compressed to its
     // minimum representative per pair — (w, u, v) is the ORIGINAL edge
     // (canonical u < v, the row the forest will emit), (cu, cv) the
     // current components of its endpoints. Initially components are the
     // nodes themselves.
-    var ec = Staging.stage(pairs
+    val (ec0, n0) = fx.stage(pairs
       .select(col(aCol).cast("long").as("x"), col(bCol).cast("long").as("y"),
         col(wCol).cast("long").as("w"))
       .where(col("x").isNotNull && col("y").isNotNull && col("x") =!= col("y"))
       .select(least(col("x"), col("y")).as("u"), greatest(col("x"), col("y")).as("v"), col("w"))
       .groupBy("u", "v").agg(min(col("w")).as("w"))
       .select(col("w"), col("u"), col("v"), col("u").as("cu"), col("v").as("cv")),
-      reliable)
-    var stagedEc = ec
-    val spark = ec.sparkSession
-    var forest = spark.createDataFrame(
+      count(lit(1)))
+    val spark = ec0.sparkSession
+    val none = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType.fromDDL("a_id BIGINT, b_id BIGINT, weight BIGINT"))
-    // The forest union lazily references each round's elected frame, so
-    // those stay persisted until the final forest is pinned; everything
-    // else is released as soon as its round completes (kCore pattern: at
-    // most two live frames per kind).
-    val electedFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var round = 0
-    var converged = ec.isEmpty
-    while (!converged && round < maxRounds) {
+    // a round is charged while edges between components remain
+    val forest = if (n0 == 0L) none else fx.loop((ec0, none), maxRounds, Fixpoint.Fail(
+        s"maxRounds=$maxRounds", "the contraction did not converge — components at least " +
+          "halve per round, so this is a bug, not a big graph")) { case ((ec, forest), _) =>
       // Per-component minimum outgoing edge, total order (w, u, v) —
       // keyed by the ELECTING component (both roles matter: distinct
       // (u, v, w) picks feed the forest; the comp → other-endpoint map
       // is the contraction's parent pointer). Compression keeps the min
       // (w, u, v) per pair, so this min-of-mins elects exactly the edge
       // the uncompressed multigraph would.
-      val elected = Staging.stage(ec
+      val elected = fx.stage(ec
         // explode, not union-of-selects: one scan of the staged edge
         // leaf per election instead of two (r18) — identical row multiset
         .select(explode(array(col("cu"), col("cv"))).as("comp"),
           struct(col("w"), col("u"), col("v"), col("cu"), col("cv")).as("pick"))
-        .groupBy("comp").agg(min(col("pick")).as("m")),
-        reliable)
-      electedFrames += elected
-      forest = forest.unionByName(
-        elected.select(col("m.u").as("a_id"), col("m.v").as("b_id"), col("m.w").as("weight"))
-          .distinct())
+        .groupBy("comp").agg(min(col("pick")).as("m")))
       // Contraction. Parent pointer: each electing component points at
       // the other endpoint of its elected edge. Every parent is itself
       // an electing component (the shared edge is outgoing for it too),
@@ -135,51 +126,39 @@ object SpanningForest {
       // Break the 2-cycles (the functional graph's only cycles — see
       // the scaladoc argument): the smaller endpoint becomes its own
       // root. What remains is a forest of rooted trees. Built lazily
-      // over the staged `elected` — it fuses into the first probe's job.
-      var par = par0.alias("a")
+      // over the staged `elected` — it fuses into the first jump's job.
+      val broken = par0.alias("a")
         .join(par0.alias("b"), col("a.p") === col("b.comp"))
         .select(col("a.comp").as("comp"),
           when(col("b.p") === col("a.comp") && col("a.comp") < col("a.p"), col("a.comp"))
             .otherwise(col("a.p")).as("p"))
-      // Batched pointer doubling to the roots: each staged probe squares
+      // Batched pointer doubling to the roots: each staged round squares
       // the map twice (break + two squarings fuse into one job on the
-      // first probe), so depth QUARTERS per materialized job; p^k equal
+      // first round), so depth QUARTERS per materialized job; p^k equal
       // to p^2k pointwise forces p^k(x) to be a fixpoint, i.e. a root
-      // (the break left self-loops as the only cycles), so nChanged == 0
-      // certifies full convergence. Depth < 2^63 needs 16 probes; 32 is
-      // a bug backstop (a surviving cycle), not a big-graph limit.
-      var stagedPar: DataFrame = null
-      var probes = 0
-      var settled = false
-      while (!settled && probes < 32) {
+      // (the break left self-loops as the only cycles), so no changed
+      // pointer certifies full convergence. Depth < 2^63 needs 16
+      // rounds; 32 is a bug backstop (a surviving cycle), not a
+      // big-graph limit.
+      val (par, _) = fx.loop(broken, 32, Fixpoint.Fail("32 pointer-jump rounds",
+          "tree depth quarters per round, so this is a bug (a surviving cycle in the " +
+            "elected-edge graph), not a big graph")) { case (par, _) =>
         val mid = par.alias("a")
           .join(par.alias("b"), col("a.p") === col("b.comp"))
           .select(col("a.comp").as("comp"), col("b.p").as("p"))
-        val nxt = Staging.stage(mid.alias("a")
+        val (nxt, moved) = fx.stage(mid.alias("a")
           .join(mid.alias("b"), col("a.p") === col("b.comp"))
           .select(col("a.comp").as("comp"), col("b.p").as("p"),
             (col("a.p") =!= col("b.p")).as("ch")),
-          reliable)
-        // the count is the convergence probe AND the materializing
-        // action; the previous probe's frame releases immediately after
-        val nChanged = nxt.where(col("ch")).count()
-        if (reliable && stagedPar != null) stagedPar.unpersist()
-        stagedPar = nxt
-        par = nxt.select(col("comp"), col("p"))
-        settled = nChanged == 0L
-        probes += 1
+          count(when(col("ch"), true)))
+        (nxt.select(col("comp"), col("p")), moved > 0L)
       }
-      if (!settled)
-        throw new IllegalStateException(
-          "boruvka contraction did not settle in 32 pointer-jump probes — " +
-            "tree depth quarters per probe, so this is a bug (a surviving " +
-            "cycle in the elected-edge graph), not a big graph")
       // Relabel the edge table through the root map and re-compress.
       // Inner joins: every cu/cv in `ec` has an outgoing edge, hence
       // elected, hence has a root. Edges inside a merged component drop;
       // parallel edges between merged components collapse to their min
       // representative — the table shrinks geometrically.
-      val next = Staging.stage(ec
+      val (next, n) = fx.stage(ec
         .join(par.select(col("comp").as("cu"), col("p").as("pu")), Seq("cu"))
         .join(par.select(col("comp").as("cv"), col("p").as("pv")), Seq("cv"))
         .where(col("pu") =!= col("pv"))
@@ -189,28 +168,12 @@ object SpanningForest {
         .agg(min(struct(col("w"), col("u"), col("v"))).as("m"))
         .select(col("m.w").as("w"), col("m.u").as("u"), col("m.v").as("v"),
           col("cu"), col("cv")),
-        reliable)
-      converged = next.count() == 0L
-      if (reliable) { stagedEc.unpersist(); stagedPar.unpersist() }
-      ec = next
-      stagedEc = next
-      round += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"boruvka did not converge in $maxRounds rounds — components at " +
-          "least halve per round, so this is a bug, not a big graph")
-    val out = Staging.stage(forest, reliable)
-    if (reliable) {
-      // Pin the result to disk, then release every loop frame it lazily
-      // referenced — lineage is kept (reliable = persist), so even a
-      // post-release block loss recomputes from source, per the posture's
-      // contract.
-      out.count()
-      electedFrames.foreach(_.unpersist())
-      stagedEc.unpersist()
-    }
-    out
+        count(lit(1)))
+      ((next, forest.unionByName(
+        elected.select(col("m.u").as("a_id"), col("m.v").as("b_id"), col("m.w").as("weight"))
+          .distinct())), n > 0L)
+    }._1._2
+    fx.finish(forest, eager = true)
   }
 
   /** Single-linkage clustering at `threshold`: `(id, cluster)` for every

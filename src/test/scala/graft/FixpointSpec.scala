@@ -2,12 +2,14 @@ package graft
 
 import org.apache.spark.JobCounter
 import org.apache.spark.sql.DataFrame
-import graft.ops.{GraphMetrics, Paths, Staging}
+import graft.ops.{Components, GraphMetrics, Matching, Paths, Scc, SequencePack, SpanningForest,
+  Staging}
 
 /** The staged-fixpoint graph operators ([[graft.ops.Fixpoint]]).
   *
   * Budgets: on fixed small graphs shaped like their catalogue queries
-  * (q172, q304, q308, q310, q311, q313, q316, q340), the `Staging.stage`
+  * (q172, q304, q308, q310, q311, q313, q316, q340; q324, q325, q328,
+  * q54, q319, q305, q341, q318, q312, q347), the `Staging.stage`
   * calls per run (one eager job per staged round) and the Spark jobs
   * started by building the result and writing it to the `noop` sink, the
   * way the benchmark consumes it. Each bound is the count measured once
@@ -19,9 +21,15 @@ import graft.ops.{GraphMetrics, Paths, Staging}
   * the first update that leaves sum(h) unchanged, so a graph already at
   * its fixpoint stages no confirming round.
   *
+  * Round caps: each operator that throws at its cap runs at exactly the
+  * `maxIter`/`maxRounds` a fixed input needs and throws one below it.
+  * `stronglyConnected` and `dagLayers` charge only rounds that change
+  * their state, never the confirming round.
+  *
   * Degenerate inputs: an empty source set, an edgeless graph and an
   * isolated start node return the operator's normal schema with empty or
-  * seed-only rows.
+  * seed-only rows; so do empty, all-null and self-loop-only edge lists on
+  * both staging postures (`dagLayers` refuses a self-loop by name).
   */
 class FixpointSpec extends SparkSpec {
   import spark.implicits._
@@ -96,6 +104,118 @@ class FixpointSpec extends SparkSpec {
   check("weightedSssp (q340 shape)", 9, 23) {
     val e = (0 until 400).map(i => ((i % 37).toLong, ((i * 11) % 41).toLong, (i % 7 + 1).toLong))
     Paths.weightedSssp(e.toDF("src", "dst", "w"), spark.range(4).toDF("id"))
+  }
+
+  /** The SCC queries' directed graph over anchors 0, 10, …, 390: a
+    * 3-cycle per anchor, downward bridges and two-edge DAG tails.
+    */
+  private val sccGraph = {
+    val n = 0L until 400L by 10L
+    (n.flatMap(x => Seq((x, x + 1), (x + 1, x + 2), (x + 2, x))) ++
+      n.filter(x => x % 20 == 0 && x > 0).map(x => (x, x / 2)) ++
+      n.filter(_ % 30 == 0).flatMap(x => Seq((x + 2, x + 5), (x + 5, x + 7)))).toDF("src", "dst")
+  }
+
+  check("stronglyConnected (q324 shape)", 15, 54) {
+    Scc.stronglyConnected(sccGraph)
+  }
+
+  check("condensationEdges (q325 shape)", 15, 59) {
+    Scc.condensationEdges(sccGraph)
+  }
+
+  check("dagLayers (q328 shape)", 8, 34) {
+    val n = 10L until 800L by 10L
+    Scc.dagLayers((n.map(x => (x, x / 2)) ++ n.filter(_ % 40 == 0).map(x => (x, x - 30)))
+      .toDF("src", "dst"))
+  }
+
+  check("connectedComponents (q54 shape)", 4, 19) {
+    Components.connectedComponents(chain)
+  }
+
+  check("mergeIncrement (q319 shape)", 8, 40) {
+    val fresh = (0L until 400L by 60L).map(a => (a + 2, a + 20)).toDF("a_id", "b_id")
+    Components.mergeIncrement(Components.connectedComponents(chain), fresh)
+  }
+
+  // jobs read 91–95 across runs of the same code: the bound is the highest
+  check("boruvka (q305 shape)", 17, 95) {
+    // co-occurrence weights: heavy ties
+    val e = (0 until 300).map(i =>
+      ((i % 31).toLong, ((i * 7 + 3) % 43).toLong + 31L, 1000000L / (1 + i % 6)))
+    SpanningForest.boruvka(e.toDF("a_id", "b_id", "weight"))
+  }
+
+  check("greedyMatching (q341 shape)", 15, 34) {
+    val rnd = new scala.util.Random(5)
+    val e = Seq.fill(600)((rnd.nextInt(120).toLong, rnd.nextInt(120).toLong, 1L + rnd.nextInt(97)))
+    Matching.greedyMatching(e.toDF("a_id", "b_id", "w"))
+  }
+
+  // jobs read 70–72 across runs of the same code: the bound is the highest
+  check("nextFitWindows (q318 shape)", 14, 72) {
+    val docs = (0L until 300L).map(i => (i, (i * 37) % 200 + 1)).toDF("doc_id", "n_tokens")
+    SequencePack.nextFitWindows(docs, capacity = 1024)
+  }
+
+  check("randomWalks (q312 shape)", 7, 18) {
+    GraphMetrics.randomWalks(chain, anchors.where($"id" % 100 === 0), steps = 4)
+  }
+
+  check("node2vecWalks (q347 shape)", 7, 22) {
+    GraphMetrics.node2vecWalks(chain, anchors.where($"id" % 100 === 0), steps = 4)
+  }
+
+  // ---- round caps -------------------------------------------------------
+
+  /** `run(need)` returns the full result; `run(need - 1)` throws an
+    * `IllegalStateException` whose message holds every fragment.
+    */
+  private def boundary(name: String, need: Int, fragments: String*)(run: Int => DataFrame): Unit =
+    test(s"$name runs at exactly the round budget it needs and throws one below") {
+      run(need).collect()
+      val e = intercept[IllegalStateException](run(need - 1).collect())
+      fragments.foreach(f => assert(e.getMessage.contains(f), s"'$f' missing from: ${e.getMessage}"))
+    }
+
+  private def directed(e: Seq[(Long, Long)]) = e.toDF("src", "dst")
+
+  boundary("stronglyConnected on a chain of SCCs with tails", 15,
+      "did not converge", "maxIter=14") { m =>
+    Scc.stronglyConnected(directed(Seq((1L, 2L), (2L, 1L), (3L, 4L), (4L, 3L), (5L, 6L), (6L, 5L),
+      (2L, 3L), (4L, 5L), (6L, 7L), (7L, 8L), (8L, 9L), (10L, 11L), (11L, 12L), (12L, 13L),
+      (13L, 14L), (14L, 10L), (0L, 1L))), maxIter = m)
+  }
+
+  boundary("stronglyConnected trimming a 6-chain", 2, "did not converge", "maxIter=1") { m =>
+    Scc.stronglyConnected(directed((1L to 5L).map(i => (i, i + 1))), maxIter = m)
+  }
+
+  boundary("stronglyConnected on a 17-cycle", 17, "did not converge", "maxIter=16") { m =>
+    Scc.stronglyConnected(directed((0L until 17L).map(i => (i + 1L, (i + 1L) % 17L + 1L))),
+      maxIter = m)
+  }
+
+  boundary("dagLayers on a 10-node path", 5, "cycle", "maxIter=4") { m =>
+    Scc.dagLayers(directed((1L to 9L).map(i => (i, i + 1))), maxIter = m)
+  }
+
+  boundary("connectedComponents on a 40-edge path", 7,
+      "connectedComponents", "did not converge") { m =>
+    Components.connectedComponents((0L until 40L).map(i => (i, i + 1)).toDF("a_id", "b_id"),
+      maxIter = m)
+  }
+
+  boundary("boruvka on a 24-edge path", 3, "boruvka", "did not converge") { m =>
+    val rnd = new scala.util.Random(41)
+    SpanningForest.boruvka((0L until 24L).map(i => (i, i + 1, 100L + rnd.nextInt(50)))
+      .toDF("a_id", "b_id", "weight"), maxRounds = m)
+  }
+
+  boundary("greedyMatching on a monotone path", 6, "greedyMatching", "maxIter=5") { m =>
+    val path = (1L to 12L).sliding(2).map(p => (p(0), p(1), p(0))).toSeq
+    Matching.greedyMatching(path.toDF("a_id", "b_id", "w"), maxIter = m)
   }
 
   // ---- coreDecomposition's batched rounds ------------------------------
@@ -232,5 +352,101 @@ class FixpointSpec extends SparkSpec {
     val got = GraphMetrics.kTruss(noPairs, k = 3)
     sameSchema(got, GraphMetrics.kTruss(triangle, k = 3))
     assert(got.count() == 0L)
+  }
+
+  // ---- degenerate edge lists, both postures -----------------------------
+
+  private val emptyEdges = Seq.empty[(Long, Long)].toDF("a_id", "b_id")
+  private val nullEdges = Seq[(java.lang.Long, java.lang.Long)](
+    (null, null), (null, 3L), (4L, null)).toDF("a_id", "b_id")
+  private val loopEdges = Seq((1L, 1L), (2L, 2L)).toDF("a_id", "b_id")
+
+  /** `run` on the empty, all-null and self-loop-only edge lists (columns
+    * `a_id`, `b_id`) returns `normal`'s schema and the rows in `want`, in
+    * that order, on both postures.
+    */
+  private def degenerate(name: String, want: Seq[Seq[String]])(normal: => DataFrame)(
+      run: (DataFrame, Boolean) => DataFrame): Unit =
+    test(s"$name: empty, all-null and self-loop-only inputs on both postures") {
+      val n = normal
+      for (reliable <- Seq(false, true);
+           (input, rowsWanted) <- Seq(emptyEdges, nullEdges, loopEdges).zip(want)) {
+        val got = run(input, reliable)
+        sameSchema(got, n)
+        assert(rows(got) == rowsWanted, s"reliable = $reliable")
+      }
+      spark.catalog.clearCache()
+    }
+
+  private val none = Seq.empty[String]
+  private val startRows = Seq("[1,0,1]", "[2,0,2]")
+  private def weighted(e: DataFrame, w: String) = e.withColumn(w, org.apache.spark.sql.functions.lit(3L))
+
+  degenerate("stronglyConnected", Seq(none, Seq("[3,3]", "[4,4]", "[null,null]"), Seq("[1,1]", "[2,2]")))(
+    Scc.stronglyConnected(sccGraph)) { (e, r) =>
+    Scc.stronglyConnected(e, "a_id", "b_id", reliable = r)
+  }
+
+  degenerate("condensationEdges", Seq(none, none, none))(Scc.condensationEdges(sccGraph)) { (e, r) =>
+    Scc.condensationEdges(e, "a_id", "b_id", reliable = r)
+  }
+
+  test("dagLayers: empty and all-null inputs on both postures; self-loops refused") {
+    val normal = Scc.dagLayers(directed(Seq((1L, 2L))))
+    for (reliable <- Seq(false, true)) {
+      for ((input, want) <- Seq(emptyEdges -> none, nullEdges -> Seq("[3,0]", "[4,0]"))) {
+        val got = Scc.dagLayers(input, "a_id", "b_id", reliable = reliable)
+        sameSchema(got, normal)
+        assert(rows(got) == want)
+      }
+      val e = intercept[IllegalArgumentException](
+        Scc.dagLayers(loopEdges, "a_id", "b_id", reliable = reliable))
+      assert(e.getMessage.contains("self-loop at node 1"))
+    }
+    spark.catalog.clearCache()
+  }
+
+  degenerate("connectedComponents", Seq(none, none, none))(Components.connectedComponents(chain)) {
+    (e, r) => Components.connectedComponents(e, reliable = r)
+  }
+
+  degenerate("mergeIncrement", Seq.fill(3)(Seq("[1,1]")))(Components.connectedComponents(chain)) {
+    (e, r) => Components.mergeIncrement(Seq((1L, 1L)).toDF("id", "component"), e, reliable = r)
+  }
+
+  degenerate("boruvka", Seq(none, none, none))(
+    SpanningForest.boruvka(Seq((1L, 2L, 3L)).toDF("a_id", "b_id", "weight"))) { (e, r) =>
+    SpanningForest.boruvka(weighted(e, "weight"), reliable = r)
+  }
+
+  degenerate("greedyMatching", Seq(none, none, none))(
+    Matching.greedyMatching(Seq((1L, 2L, 3L)).toDF("a_id", "b_id", "w"))) { (e, r) =>
+    Matching.greedyMatching(weighted(e, "w"), reliable = r)
+  }
+
+  degenerate("randomWalks", Seq.fill(3)(startRows))(
+    GraphMetrics.randomWalks(chain, anchors, steps = 2)) { (e, r) =>
+    GraphMetrics.randomWalks(e, twoSources, steps = 3, reliable = r)
+  }
+
+  degenerate("node2vecWalks", Seq.fill(3)(startRows))(
+    GraphMetrics.node2vecWalks(chain, anchors, steps = 2)) { (e, r) =>
+    GraphMetrics.node2vecWalks(e, twoSources, steps = 3, reliable = r)
+  }
+
+  test("randomWalks and node2vecWalks: no start rows give an empty corpus") {
+    for (reliable <- Seq(false, true)) {
+      val got = GraphMetrics.randomWalks(chain, noSources, steps = 3, reliable = reliable)
+      sameSchema(got, GraphMetrics.randomWalks(chain, anchors, steps = 2))
+      assert(got.count() == 0L)
+      assert(GraphMetrics.node2vecWalks(chain, noSources, steps = 3, reliable = reliable)
+        .count() == 0L)
+    }
+    spark.catalog.clearCache()
+  }
+
+  degenerate("nextFitWindows", Seq(none, Seq("[null,0,3]"), Seq("[1,0,1]", "[2,0,2]")))(
+    SequencePack.nextFitWindows(Seq((1L, 5L)).toDF("doc_id", "n_tokens"), capacity = 8)) {
+    (e, r) => SequencePack.nextFitWindows(e.toDF("doc_id", "n_tokens"), capacity = 8, reliable = r)
   }
 }

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import graft.ops.{Components, GraphMetrics, Ngrams, PageRank, Paths, Staging}
+import graft.ops.{Components, GraphMetrics, Matching, Ngrams, PageRank, Paths, Scc, SequencePack,
+  SpanningForest, Staging}
 
 /** The `reliable` staging switch ([[graft.ops.Staging]]) must be
   * behavior-neutral: every iterative op threaded through it has to
@@ -122,6 +123,61 @@ class ReliableStagingSpec extends SparkSpec {
     // the same rounds; the reliable posture also pins the result before
     // releasing the rounds' frames (Fixpoint.finish)
     assert(staged == localStaged + 1L)
+  }
+
+  test("Scc.dagLayers: reliable=true matches rows and staged rounds") {
+    val dag = Seq((9L, 4L), (4L, 2L), (2L, 1L), (9L, 8L), (8L, 1L), (7L, 3L))
+      .toDF("src", "dst")
+    def run(reliable: Boolean) = rowsAndStages(Scc.dagLayers(dag, reliable = reliable))
+    val (got, staged) = run(reliable = true)
+    assert((got, staged) == run(reliable = false))
+    assert(got.size == 7)
+    spark.catalog.clearCache()
+  }
+
+  test("Matching.greedyMatching: reliable=true matches rows and staged rounds") {
+    val w = Seq((1L, 2L, 4L), (2L, 3L, 3L), (3L, 4L, 2L), (4L, 5L, 1L), (5L, 6L, 5L),
+      (1L, 6L, 6L), (10L, 11L, 1L), (11L, 12L, 1L)).toDF("a_id", "b_id", "w")
+    def run(reliable: Boolean) = rowsAndStages(Matching.greedyMatching(w, reliable = reliable))
+    val (got, staged) = run(reliable = true)
+    assert((got, staged) == run(reliable = false))
+    assert(got.size == 4)
+    spark.catalog.clearCache()
+  }
+
+  // A reliable run persists its rounds; once its result is materialized
+  // only the result's frame may stay persisted (nextFitWindows also keeps
+  // the two range pins of its prefix sums and window ids, which are
+  // `Staging.pin` frames, not rounds).
+  private def residue(run: => DataFrame): Int = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    run.collect()
+    val left = (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+    spark.catalog.clearCache()
+    left
+  }
+
+  test("reliable staged-fixpoint runs leave only their result persisted") {
+    val directed = edges.toDF("src", "dst")
+    val w = edges.withColumn("w", col("a_id") + col("b_id"))
+    val docs = (1L to 80L).map(i => (i, 1L + (i * 7) % 20)).toDF("doc_id", "n_tokens")
+    val starts = Seq(1L, 10L).toDF("id")
+    for ((name, allowed, run) <- Seq[(String, Int, () => DataFrame)](
+        ("stronglyConnected", 1, () => Scc.stronglyConnected(directed, reliable = true)),
+        ("condensationEdges", 1, () => Scc.condensationEdges(directed, reliable = true)),
+        ("dagLayers", 1, () => Scc.dagLayers(directed.where(col("src") < col("dst")), reliable = true)),
+        ("connectedComponents", 1, () => Components.connectedComponents(edges, reliable = true)),
+        ("mergeIncrement", 1, () => Components.mergeIncrement(
+          Seq((20L, 20L)).toDF("id", "component"), edges, reliable = true)),
+        ("boruvka", 1, () => SpanningForest.boruvka(w.withColumnRenamed("w", "weight"), reliable = true)),
+        ("greedyMatching", 1, () => Matching.greedyMatching(w, reliable = true)),
+        ("nextFitWindows", 3, () => SequencePack.nextFitWindows(docs, capacity = 32, reliable = true)),
+        ("randomWalks", 1, () => GraphMetrics.randomWalks(edges, starts, steps = 3, reliable = true)),
+        ("node2vecWalks", 1, () => GraphMetrics.node2vecWalks(edges, starts, steps = 3, reliable = true)))) {
+      val left = residue(run())
+      info(s"$name: $left persisted RDDs left")
+      assert(left <= allowed, s"$name left $left persisted RDDs (allowed $allowed)")
+    }
   }
 
   // Registration order matters for the two pin tests: the shared

@@ -105,9 +105,14 @@ class SccSpec extends SparkSpec {
     val edges = Seq.fill(40)((rnd.nextInt(12).toLong, rnd.nextInt(12).toLong))
       .filter(e => e._1 != e._2)
     val a = run(edges)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val rel = Scc.stronglyConnected(edges.toDF("src", "dst"), reliable = true)
     val b = rel.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(a == b)
+    // only the returned labels' own frame may stay persisted
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.size <= 1, s"leaked persisted RDDs beyond the returned labels: $leaked")
+    spark.catalog.clearCache()
   }
 
   test("condensation edges form the SCC DAG with exact crossing counts") {
