@@ -85,16 +85,21 @@ object Components {
     // sum overflows under ANSI.
     val signature = struct(count(lit(1)),
       coalesce(sum(xxhash64(col("u"), col("v")).cast("decimal(28,0)")), lit(BigDecimal(0))))
-    val edges = new Fixpoint("connectedComponents", reliable).peel(canonical, maxIter,
+    val fx = new Fixpoint("connectedComponents", reliable)
+    val edges = fx.peel(canonical, maxIter,
       Fixpoint.Fail(s"maxIter=$maxIter", "the contraction did not converge — O(log n) rounds " +
         "suffice for any input, so this is a bug, not a big graph"),
       signature)(e => smallStar(largeStar(e)))
 
     // Fixpoint edges form stars (root = component minimum): u is the root
     // on canonical edges. Roots map to themselves.
-    // explode, not union-of-selects: one scan of the fixpoint leaf (r18)
-    edges.select(explode(array(col("v"), col("u"))).as("id"), col("u").as("component"))
-      .groupBy("id").agg(min(col("component")).as("component"))
+    // explode, not union-of-selects: one scan of the fixpoint leaf (r18).
+    // Pinned on the reliable posture, so a caller can release the result.
+    val out = fx.finish(
+      edges.select(explode(array(col("v"), col("u"))).as("id"), col("u").as("component"))
+        .groupBy("id").agg(min(col("component")).as("component")))
+    fx.release(edges)
+    out
   }
 
   /** Canonical-member election per cluster: given a membership table

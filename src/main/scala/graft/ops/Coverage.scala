@@ -40,21 +40,12 @@ object Coverage {
       featureCol: String = "token",
       reliable: Boolean = false): DataFrame = {
     require(k >= 1 && k <= 1000, s"k must be in [1,1000]: $k")
-    val spark = pairs.sparkSession
-    val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def staged(df: DataFrame): DataFrame = {
-      val s = Staging.stage(df, reliable); frames += s; s
-    }
-    var toks = staged(pairs
+    val fx = new Fixpoint("greedyMaxCoverage", reliable)
+    val picks = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
+    fx.loop(fx.stage(pairs
       .select(col(idCol).cast("long").as("id"),
         col(featureCol).cast("string").as("token"))
-      .distinct())
-    val picks = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-    var total = 0L
-    var round = 0
-    var exhausted = false
-    while (round < k && !exhausted) {
-      round += 1
+      .distinct()), k, Fixpoint.Truncate) { (toks, round) =>
       // toks holds only UNCOVERED (id, token) pairs, so each doc's
       // remaining gain is a plain count. ONE row to the driver: the
       // argmax doc of this round.
@@ -62,31 +53,24 @@ object Coverage {
         .groupBy(col("id")).agg(count(lit(1)).as("gain"))
         .orderBy(col("gain").desc, col("id").asc)
         .limit(1).collect()
-      if (win.isEmpty) exhausted = true
+      if (win.isEmpty) (toks, false)
       else {
         val id = win(0).getLong(0)
         val gain = win(0).getLong(1)
-        total += gain
-        picks += ((round.toLong, id, gain, total))
+        picks += ((round.toLong, id, gain, picks.lastOption.fold(0L)(_._4) + gain))
         // shrink instead of accumulate: anti-join the winner's token set
         // (one doc's features — broadcast side) out of the pair table.
         // Covered tokens leave every doc's rows at once, fully-covered
         // docs vanish with them, and round cost decreases monotonically.
         // Skipped after the final pick — nothing reads the result.
-        if (round < k) {
+        if (round == k) (toks, true)
+        else {
           val won = toks.where(col("id") === id).select(col("token"))
-          toks = staged(toks.join(broadcast(won), Seq("token"), "left_anti"))
+          (fx.stage(toks.join(broadcast(won), Seq("token"), "left_anti")), true)
         }
       }
     }
-    val out = Staging.stage(
-      spark.createDataFrame(picks.toSeq)
-        .toDF("pick", "doc_id", "gain", "covered_total"),
-      reliable)
-    if (reliable) {
-      out.count()
-      frames.foreach(_.unpersist())
-    }
-    out
+    fx.finish(pairs.sparkSession.createDataFrame(picks.toSeq)
+      .toDF("pick", "doc_id", "gain", "covered_total"), eager = true)
   }
 }

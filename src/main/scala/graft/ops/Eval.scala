@@ -459,8 +459,8 @@ object Eval {
     * scaled units (`scale` = 10⁶), every division is truncating, each
     * denominator term `(n_ij · scale²) div (s_i + s_j)` is computed in
     * DECIMAL(38,0) (n · 10¹² overflows Long at ~9M games per pair), and
-    * each round ends with [[hits]]-style max-normalization (one Long to
-    * the driver, documented bounded fetch) so magnitudes stay put — the
+    * each round ends with [[hits]]-style max-normalization (the max is
+    * read off the round's staging job as one Long) so magnitudes stay put — the
     * MM update is scale-equivariant, so normalizing is a relabeling,
     * not a different trajectory. Strengths are floored at 1 after each
     * update (the standard ε-regularization: a winless item otherwise
@@ -473,7 +473,7 @@ object Eval {
     *
     * Scale shape per round: one equi-join of the symmetric pair-count
     * table with the item-strength table (both keyed by item), one
-    * map-side-combinable sum, one max fetch. PageRank's cost model.
+    * map-side-combinable sum. PageRank's cost model.
     */
   def bradleyTerry(
       duels: DataFrame,
@@ -488,57 +488,38 @@ object Eval {
       col(loserCol).cast("long").as("l"))
       .where(col("w").isNotNull && col("l").isNotNull && col("w") =!= col("l"))
     val directed = d.groupBy(col("w"), col("l")).agg(count(lit(1)).as("c"))
+    val fx = new Fixpoint("bradleyTerry", reliable)
     // symmetric opponent table: (i, j, n_ij) both ways — the denominator
     // scans each item's opponent list once per round
-    val sym = Staging.stage(directed
+    val sym = fx.stage(directed
       .select(col("w").as("i"), col("l").as("j"), col("c"))
       .unionByName(directed.select(col("l").as("i"), col("w").as("j"), col("c")))
-      .groupBy(col("i"), col("j")).agg(sum(col("c")).as("n")),
-      reliable)
-    val stats = Staging.stage(sym.groupBy(col("i"))
+      .groupBy(col("i"), col("j")).agg(sum(col("c")).as("n")))
+    val stats = fx.stage(sym.groupBy(col("i"))
       .agg(sum(col("n")).as("games"))
       .join(directed.groupBy(col("w").as("i")).agg(sum(col("c")).as("wins")),
         Seq("i"), "left")
-      .select(col("i"), coalesce(col("wins"), lit(0L)).as("wins"), col("games")),
-      reliable)
-    val frames = scala.collection.mutable.ArrayBuffer(sym, stats)
-    var s = Staging.stage(stats.select(col("i"), lit(scale).as("s")), reliable)
-    frames += s
-    for (_ <- 1 to iterations) {
+      .select(col("i"), coalesce(col("wins"), lit(0L)).as("wins"), col("games")))
+    val (s, _) = fx.loop(fx.stage(stats.select(col("i"), lit(scale).as("s"))), iterations,
+        Fixpoint.Truncate) { (s, _) =>
       val denom = sym
         .join(s.select(col("i"), col("s").as("si")), Seq("i"))
         .join(s.select(col("i").as("j"), col("s").as("sj")), Seq("j"))
         .groupBy(col("i"))
         .agg(sum(expr(s"(cast(n as decimal(38,0)) * ${scale}L * ${scale}L) div (si + sj)"))
           .cast("long").as("d"))
-      val raw = Staging.stage(stats.join(denom, Seq("i"))
+      // an empty input has no max: any positive literal keeps the plan valid
+      val (raw, mx) = fx.stage(stats.join(denom, Seq("i"))
         .select(col("i"), greatest(lit(1L),
           expr(s"(cast(wins as decimal(38,0)) * ${scale}L * ${scale}L) div d")
             .cast("long")).as("s")),
-        reliable)
-      frames += raw
-      // bounded driver fetch: ONE Long per round (the hits normalizer
-      // justification — a broadcast crossJoin would deepen every
-      // subsequent round's plan instead); empty input → null max → no
-      // rows to normalize, any positive literal keeps the plan valid
-      val mx = Option(raw.agg(max(col("s"))).head().get(0))
-        .fold(scale)(_.asInstanceOf[Long])
-      val normed = Staging.stage(raw.select(col("i"),
+        coalesce(max(col("s")), lit(scale)))
+      (fx.stage(raw.select(col("i"),
         greatest(lit(1L), expr(s"(cast(s as decimal(38,0)) * ${scale}L) div ${mx}L")
-          .cast("long")).as("s")),
-        reliable)
-      frames += normed
-      s = normed
+          .cast("long")).as("s"))), true)
     }
-    val out = Staging.stage(
-      s.join(stats, Seq("i"))
-        .select(col("i").as("id"), col("s").as("strength_e6"),
-          col("wins"), col("games")),
-      reliable)
-    if (reliable) {
-      out.count()
-      frames.foreach(_.unpersist())
-    }
-    out
+    fx.finish(s.join(stats, Seq("i"))
+      .select(col("i").as("id"), col("s").as("strength_e6"), col("wins"), col("games")),
+      eager = true)
   }
 }

@@ -20,8 +20,10 @@ import org.apache.spark.sql.functions._
   *    star contraction) measured by a value that stops changing at the
   *    fixpoint.
   * Loops of any other shape (SCC phases, matching rounds, pointer
-  * jumping, walks) run their rounds through [[loop]] and stage them
-  * through [[stage]]; [[finish]] pins the result and releases the run.
+  * jumping, walks, fixed-count iterations, driver-elected picks) run
+  * their rounds through [[loop]] and stage them through [[stage]];
+  * [[finish]] pins the result and releases the run, and [[release]]
+  * lets a frame go earlier.
   *
   * Convergence is read off the job that stages the round: the value a
   * loop decides on (improved-row count, peel value, frontier or
@@ -47,9 +49,14 @@ private[graft] final class Fixpoint(op: String, reliable: Boolean) extends Loggi
 
   private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
-  /** Stages `df` as one of this run's frames, released by [[finish]]. */
-  def stage(df: DataFrame): DataFrame = {
-    val s = Staging.stage(df, reliable); frames += s; s
+  /** Stages `df` as one of this run's frames, released by [[finish]].
+    * With `keys`, the frame is a loop invariant staged with that declared
+    * hash layout ([[Staging.stageHash]]); never declare one on a
+    * frontier-sized frame (see the class doc).
+    */
+  def stage(df: DataFrame, keys: Seq[String] = Nil): DataFrame = {
+    val s = if (keys.isEmpty) Staging.stage(df, reliable) else Staging.stageHash(df, keys, reliable)
+    frames += s; s
   }
 
   /** [[stage]] that also returns the BIGINT aggregate `m` over the
@@ -151,7 +158,7 @@ private[graft] final class Fixpoint(op: String, reliable: Boolean) extends Loggi
         step((1 until batch).foldLeft(cur)((s, _) => through(step(s))))
       }
       logDebug(s"$op round $round: size ${sizes.mkString(", ")}")
-      if (reliable) cur.unpersist()
+      release(cur)
       val m = sizes.last
       ((next, m), m != 0L && (n +: sizes).sliding(2).forall { case Seq(a, b) => a != b })
     }._1._1
@@ -172,6 +179,13 @@ private[graft] final class Fixpoint(op: String, reliable: Boolean) extends Loggi
       }
       pinned
     }
+
+  /** Releases `df` now on the reliable posture (a frame of this run, or
+    * the pinned result of a nested run) instead of at [[finish]]. Call it
+    * only once every frame that reads `df` is materialized.
+    */
+  def release(df: DataFrame): Unit =
+    if (reliable) { df.unpersist(); frames -= df }
 
   /** Runs `round(state, r)` for r = 1, 2, … until it reports no change
     * or `maxRounds` rounds ran; returns the last state and the number of

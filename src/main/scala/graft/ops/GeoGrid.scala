@@ -104,14 +104,10 @@ object GeoGrid {
       reliable: Boolean = false): DataFrame = {
     require(minPts >= 1, s"minPts must be >= 1: $minPts")
     // the posture covers EVERY staged frame here, not just the nested
-    // components loop — on `reliable` the final labeling is pinned
-    // eagerly and the intermediates released (the hits/Scc pattern)
-    val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def staged(df: DataFrame): DataFrame = {
-      val s = Staging.stage(df, reliable); frames += s; s
-    }
-    val pts = staged(points.select(col(idCol).cast("long").as("id")))
-    val pairs = staged(
+    // components loop
+    val fx = new Fixpoint("dbscan", reliable)
+    val pts = fx.stage(points.select(col(idCol).cast("long").as("id")))
+    val pairs = fx.stage(
       radiusPairs(points, idCol, xCol, yCol, eps).select(col("a_id"), col("b_id")))
     // union-of-selects kept deliberately (r18): an explode variant (one
     // leaf scan instead of two) measured 0.85x on q330 in an interleaved
@@ -121,7 +117,7 @@ object GeoGrid {
     val deg = pairs.select(col("a_id").as("id"))
       .union(pairs.select(col("b_id").as("id")))
       .groupBy("id").agg(count(lit(1)).as("__nnb"))
-    val core = staged(pts.join(deg, Seq("id"), "left")
+    val core = fx.stage(pts.join(deg, Seq("id"), "left")
       .where(coalesce(col("__nnb"), lit(0L)) + 1L >= minPts.toLong)
       .select(col("id")))
     val coreEdges = pairs
@@ -129,7 +125,7 @@ object GeoGrid {
       .join(core.select(col("id").as("b_id")), Seq("b_id"), "left_semi")
     val comp = Components.connectedComponents(coreEdges,
       aCol = "a_id", bCol = "b_id", reliable = reliable)
-    val coreLabels = staged(core.join(comp, Seq("id"), "left")
+    val coreLabels = fx.stage(core.join(comp, Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("cluster")))
     // union-of-swap kept deliberately — same A/B evidence as `deg` above
     val adj = pairs.select(col("a_id").as("id"), col("b_id").as("nb"))
@@ -139,16 +135,13 @@ object GeoGrid {
       .join(coreLabels.select(col("id").as("nb"), col("cluster")), Seq("nb"))
       .groupBy(col("id")).agg(min(col("cluster")).as("cluster"))
       .select(col("id"), col("cluster"), lit("border").as("kind"))
-    val assigned = staged(
+    val assigned = fx.stage(
       coreLabels.select(col("id"), col("cluster"), lit("core").as("kind"))
         .unionByName(border))
     val noise = pts.join(assigned.select(col("id")), Seq("id"), "left_anti")
       .select(col("id"), lit(-1L).as("cluster"), lit("noise").as("kind"))
-    val out = Staging.stage(assigned.unionByName(noise), reliable)
-    if (reliable) {
-      out.count()
-      frames.foreach(_.unpersist())
-    }
+    val out = fx.finish(assigned.unionByName(noise), eager = true)
+    fx.release(comp)
     out
   }
 }

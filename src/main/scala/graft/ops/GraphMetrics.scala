@@ -139,13 +139,11 @@ object GraphMetrics {
     // physically AND declares it on the staged leaf; the explode
     // symmetrize builds the canonical edge set once, not once per union
     // branch.
-    val sym = Staging.stageHash(
-      symmetrize(canonicalEdges(pairs, aCol, bCol)), Seq("dst"), reliable)
-    var labels = Staging.stage(sym.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("label")), reliable)
-    val labels0 = labels
-    val staged = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (i <- 1 to rounds) {
+    val fx = new Fixpoint("labelPropagation", reliable)
+    val sym = fx.stage(symmetrize(canonicalEdges(pairs, aCol, bCol)), Seq("dst"))
+    val labels0 = fx.stage(sym.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("label")))
+    val (labels, _) = fx.loop(labels0, rounds, Fixpoint.Truncate) { (labels, i) =>
       // Neighbor-label tally: join on the label-carrier side (dst), so
       // the cached dst-hashed edge layout is reused every round and only
       // the narrow labels table moves.
@@ -159,30 +157,11 @@ object GraphMetrics {
         .select(col("src").as("id"), (-col("m.nl")).as("label"))
       // Label lineage is linear (one reference per round) — same
       // checkpoint cadence rationale as [[PageRank.ranksFixedPoint]]:
-      // truncate every 4th round and on the last (the result must
-      // outlive sym.unpersist below), skip the eager job otherwise.
-      if (i == rounds || i % 4 == 0) {
-        labels = Staging.stage(next, reliable)
-        staged += labels
-      } else labels = next
+      // truncate every 4th round and on the last, skip the eager job
+      // otherwise.
+      (if (i == rounds || i % 4 == 0) fx.stage(next) else next, true)
     }
-    // Same materialize-then-release dance as [[PageRank.ranksFixedPoint]]:
-    // the reliable persist is lazy, so pin the final labels to disk while
-    // the cached edge layout is still alive, then release intermediates —
-    // including the staged INPUTS (initial labels, canonical edges),
-    // which would otherwise stay persisted for the session.
-    if (reliable && rounds > 0) {
-      labels.count()
-      staged.dropRight(1).foreach(_.unpersist())
-      labels0.unpersist()
-    } else if (reliable) {
-      // zero rounds: the returned frame IS the staged initial labels —
-      // pin it so the staged edge input can be released (it would
-      // otherwise outlive the call in the CacheManager)
-      labels.count()
-    }
-    sym.unpersist()
-    labels
+    fx.finish(labels)
   }
 
   /** Exact 2-hop neighborhood size per node: (id, n_1hop, n_2hop) where
@@ -753,8 +732,8 @@ object GraphMetrics {
       maxRounds: Int = 100,
       reliable: Boolean = false): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
-    val sym = Staging.stage(
-      symmetrize(canonicalEdges(pairs, aCol, bCol)), reliable)
+    val fx = new Fixpoint("coreDecomposition", reliable)
+    val sym = fx.stage(symmetrize(canonicalEdges(pairs, aCol, bCol)))
     // H-index from the VALUE HISTOGRAM, not per-neighbor ranks: with
     // c_v = #neighbors at value ≥ v, H = max over present values v of
     // min(v, c_v) (between present values c is constant, so the max over
@@ -789,10 +768,11 @@ object GraphMetrics {
     // only on sparse chain-y graphs where rounds are many and frontiers
     // tiny — revisit if such inputs become the workload.
     val batch = 3
-    val h = new Fixpoint("coreDecomposition", reliable).peel(
+    val h = fx.peel(
       sym.groupBy("src").agg(count(lit(1)).as("h")), (maxRounds + batch - 1) / batch,
       Fixpoint.Fail(s"maxRounds=$maxRounds"), coalesce(sum(col("h")), lit(0L)), batch)(update)
-    if (reliable) sym.unpersist()
+    // the peel leaves h materialized, so the edge list can go
+    fx.release(sym)
     h.select(col("src").as("id"), col("h").as("coreness"))
   }
 
@@ -810,11 +790,10 @@ object GraphMetrics {
     * (their in_c = 0 rows still appear, keyed by their own id).
     *
     * Scale shape: the labeled edge set is STAGED (it feeds the degree
-    * union, the internal-edge agg and the edge count — unstaged, the
-    * caller's whole edge-building plan would execute three times), then
-    * one degree agg + one community-keyed agg; m enters the final
-    * projection as a driver literal (the bounded one-Long fetch the
-    * staging count already pays for). Deterministic and integer-exact
+    * union and the internal-edge agg — unstaged, the caller's whole
+    * edge-building plan would execute twice), then one degree agg + one
+    * community-keyed agg; m is counted on the staging job and enters the
+    * final projection as a driver literal. Deterministic and integer-exact
     * throughout — every multiply involving m or degree_sum runs in
     * DECIMAL(38,0) (both 4·m·in_c and d_c² overflow Long at ~3e9
     * edges); the one division is the final truncating div.
@@ -833,13 +812,14 @@ object GraphMetrics {
     // inflate m, degree_sum and n_internal all at once
     val lab = labels.select(col(idCol).cast("long").as("__id"),
       col(communityCol).cast("long").as("__c")).distinct()
-    // unlabeled nodes become singleton communities keyed by own id
-    val labeled = Staging.stage(e
+    val fx = new Fixpoint("modularity", reliable)
+    // unlabeled nodes become singleton communities keyed by own id; m is
+    // counted on the staging job
+    val (labeled, m) = fx.stage(e
       .join(lab.select(col("__id").as("u"), col("__c").as("cu")), Seq("u"), "left")
       .join(lab.select(col("__id").as("v"), col("__c").as("cv")), Seq("v"), "left")
       .select(coalesce(col("cu"), col("u")).as("cu"), coalesce(col("cv"), col("v")).as("cv")),
-      reliable)
-    val m = labeled.count()
+      count(lit(1)))
     // explode, not union-of-selects: one pass over the staged leaf (r18)
     val degrees = labeled
       .select(explode(array(col("cu"), col("cv"))).as("c"))
@@ -857,12 +837,7 @@ object GraphMetrics {
             (1000000L * (4L * cast(${m}L as decimal(38,0)) * n_internal
                          - cast(degree_sum as decimal(38,0)) * degree_sum))
             div (4L * cast(${m}L as decimal(38,0)) * ${m}L) as bigint)"""))
-    if (reliable) {
-      val pinned = Staging.stage(out, reliable)
-      pinned.count()
-      labeled.unpersist()
-      pinned
-    } else out
+    fx.finish(out)
   }
 
   /** Integer HITS (Kleinberg hubs & authorities) on a DIRECTED edge
@@ -883,18 +858,17 @@ object GraphMetrics {
     *
     * Scale shape per round: two equi-joins of the (staged) edge list
     * with a node-sized score table + two aggregations — exactly
-    * [[PageRank.ranksFixedPoint]]'s cost model. Each half-round's max
-    * is fetched to the driver as ONE Long (the bounded-driver trade the
-    * BPE trainer's per-round election already makes) and re-enters the
-    * plan as a literal: broadcasting it back via crossJoin instead
-    * would reference each score table twice (max side + normalize
-    * side) and add a per-half-round broadcast exchange; with the
-    * literal, the score chain is referenced once per round, staged
-    * every half-round (the max fetch is the materializing action), and
-    * the plan stays one join shallower on every posture. (Since
-    * [[Staging.stage]] leaf-wraps the reliable persist, double
-    * references no longer compound across rounds — the literal is now
-    * a per-round simplification, not a blow-up guard.)
+    * [[PageRank.ranksFixedPoint]]'s cost model. Each half-round's raw
+    * sums are staged, and their max is read off the staging job as ONE
+    * Long ([[Fixpoint.stage]]) and re-enters the plan as a literal:
+    * broadcasting it back via crossJoin instead would reference each
+    * score table twice (max side + normalize side) and add a
+    * per-half-round broadcast exchange; with the literal, the score
+    * chain is referenced once per round and the plan stays one join
+    * shallower on every posture. (Since [[Staging.stage]] leaf-wraps the
+    * reliable persist, double references no longer compound across
+    * rounds — the literal is now a per-round simplification, not a
+    * blow-up guard.)
     */
   def hits(
       edges: DataFrame,
@@ -911,20 +885,13 @@ object GraphMetrics {
     // interleaved 2x2 A/B at sf0.1 — the extra materialization plus the
     // pinned 32-way layouts cost more than the tiny per-iteration
     // exchanges they replaced (the same class as the BFS-loop reverts).
-    val e = Staging.stage(
-      edges.select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d")).distinct(),
-      reliable)
-    val nodes = Staging.stage(
-      e.select(explode(array(col("s"), col("d"))).as("id")).distinct(),
-      reliable)
-    // max-normalize to `scale`: stage the raw sums, fetch their max as
-    // one Long (bounded driver traffic; this action also materializes
-    // the staged frame), normalize against the literal.
-    val staged = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val fx = new Fixpoint("hits", reliable)
+    val e = fx.stage(
+      edges.select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d")).distinct())
+    val nodes = fx.stage(e.select(explode(array(col("s"), col("d"))).as("id")).distinct())
+    // max-normalize to `scale` against the max of the staged raw sums
     def normalized(scores: DataFrame, c: String): DataFrame = {
-      val s = Staging.stage(scores, reliable)
-      staged += s
-      val mx = Option(s.agg(max(col(c))).head().get(0)).fold(0L)(_.asInstanceOf[Long])
+      val (s, mx) = fx.stage(scores, coalesce(max(col(c)), lit(0L)))
       if (mx <= 0L) s.select(col("id"), lit(0L).as(c))
       // The multiply runs in DECIMAL(38,0): raw sums reach
       // maxInDegree·scale, so a Long `x·scale` silently wraps past
@@ -935,38 +902,24 @@ object GraphMetrics {
       else s.select(col("id"),
         expr(s"(cast($c as decimal(38,0)) * ${scale}L) div ${mx}L").as(c))
     }
-    var hubs = nodes.select(col("id"), lit(scale).as("hub"))
-    var auths = nodes.select(col("id"), lit(0L).as("auth"))
-    for (_ <- 1 to iterations) {
-      val a = nodes.join(
-        e.join(hubs.hint("shuffle_hash"), col("s") === col("id"))
-          .groupBy(col("d")).agg(sum(col("hub")).as("auth"))
-          .select(col("d").as("id"), col("auth")),
-        Seq("id"), "left")
-        .select(col("id"), coalesce(col("auth"), lit(0L)).as("auth"))
-      auths = normalized(a, "auth")
-      val h = nodes.join(
-        e.join(auths.hint("shuffle_hash"), col("d") === col("id"))
-          .groupBy(col("s")).agg(sum(col("auth")).as("hub"))
-          .select(col("s").as("id"), col("hub")),
-        Seq("id"), "left")
-        .select(col("id"), coalesce(col("hub"), lit(0L)).as("hub"))
-      hubs = normalized(h, "hub")
+    val ((auths, hubs), _) = fx.loop((nodes.select(col("id"), lit(0L).as("auth")),
+        nodes.select(col("id"), lit(scale).as("hub"))), iterations, Fixpoint.Truncate) {
+      case ((_, hubs), _) =>
+        val auths = normalized(nodes.join(
+          e.join(hubs.hint("shuffle_hash"), col("s") === col("id"))
+            .groupBy(col("d")).agg(sum(col("hub")).as("auth"))
+            .select(col("d").as("id"), col("auth")),
+          Seq("id"), "left")
+          .select(col("id"), coalesce(col("auth"), lit(0L)).as("auth")), "auth")
+        val next = normalized(nodes.join(
+          e.join(auths.hint("shuffle_hash"), col("d") === col("id"))
+            .groupBy(col("s")).agg(sum(col("auth")).as("hub"))
+            .select(col("s").as("id"), col("hub")),
+          Seq("id"), "left")
+          .select(col("id"), coalesce(col("hub"), lit(0L)).as("hub")), "hub")
+        ((auths, next), true)
     }
-    val out = auths.join(hubs, Seq("id"))
-    // Reliable staging is lazy: pin the result, then release the
-    // intermediate half-round frames AND the staged inputs (edge list,
-    // node universe) — the pinned result reads from disk; lineage is
-    // kept, so post-release block loss recomputes from source, per the
-    // posture's contract.
-    if (reliable) {
-      val pinned = Staging.stage(out, reliable)
-      pinned.count()
-      staged.foreach(_.unpersist())
-      e.unpersist()
-      nodes.unpersist()
-      pinned
-    } else out
+    fx.finish(auths.join(hubs, Seq("id")))
   }
 
   /** Deterministic hash-seeded random walks — the DeepWalk/node2vec

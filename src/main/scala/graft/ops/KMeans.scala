@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
 
@@ -51,28 +51,27 @@ object KMeans {
       iterations: Int,
       reliable: Boolean = false): (DataFrame, DataFrame) = {
     require(k > 0 && iterations >= 0, "k and iterations must be positive")
+    val fx = new Fixpoint("KMeans", reliable)
     // Quantize to the non-negative lattice [0, 254] (shift keeps integer
     // division = floor division in every engine). Staged ([[Staging
     // .stage]], caller-selectable fault tolerance — quantization is a
     // pure function of the input, so the reliable persist(DISK_ONLY)
     // path recomputes lost blocks bit-identically): q feeds every
     // round — unstaged, the source would rescan iterations+1 times.
-    val q = Staging.stage(points
+    val q = fx.stage(points
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("__v"))
       .withColumn("__m", VectorFunctions.maxAbs(col("__v")))
       .select(col("id"),
-        transform(VectorFunctions.quantizeInt8(col("__v"), col("__m")), x => x + 127L).as("qv")),
-      reliable)
+        transform(VectorFunctions.quantizeInt8(col("__v"), col("__m")), x => x + 127L).as("qv")))
 
     // Deterministic seed: k lowest ids, cid assigned in id order. The
     // window runs over k rows (post-limit), not the input.
     val seed = q.orderBy(col("id")).limit(k)
-    var centroids = Staging.stage(seed
+    val centroids0 = fx.stage(seed
       .withColumn("cid",
         row_number().over(org.apache.spark.sql.expressions.Window.orderBy(col("id")))
           .cast("long") - 1L)
-      .select(col("cid"), col("qv").as("cvec")),
-      reliable)
+      .select(col("cid"), col("qv").as("cvec")))
 
     // Map-only nearest-centroid scan against a broadcast codebook via a
     // codegen'd integer loop ([[graft.functions.expressions
@@ -81,8 +80,8 @@ object KMeans {
     // per-round centroid collect is k×dim longs — the same documented
     // bounded-broadcast trade as the IVF codebook ([[Similarity.ivfTopK]]);
     // the POINTS never leave the executors.
-    def assign(c: DataFrame): DataFrame = {
-      val rows = c.orderBy("cid").collect()
+    def codebook(c: DataFrame): Array[Row] = c.orderBy("cid").collect()
+    def assign(rows: Array[Row]): DataFrame = {
       val cb = graft.functions.expressions.LatticeCodebook(
         rows.map(_.getLong(0)),
         rows.map(_.getSeq[Long](1).toArray))
@@ -91,24 +90,26 @@ object KMeans {
         .select(col("id"), col("qv"), col("best")(0).as("cid"), col("best")(1).as("dist"))
     }
 
-    for (_ <- 0 until iterations) {
-      val assigned = assign(centroids)
+    val (centroids, _) = fx.loop(centroids0, iterations, Fixpoint.Truncate) { (centroids, _) =>
       // Long-form integer mean per (cid, dim): the shuffle after partial
       // aggregation is k × dim rows per map partition. Non-negative
       // lattice ⇒ `div` truncation ≡ floor division.
-      val means = assigned
+      val means = assign(codebook(centroids))
         .select(col("cid"), posexplode(col("qv")).as(Seq("dim", "v")))
         .groupBy(col("cid"), col("dim"))
         .agg(expr("sum(v) div count(1)").as("v"))
         .groupBy(col("cid"))
         .agg(transform(array_sort(collect_list(struct(col("dim"), col("v")))),
           s => s.getField("v")).as("cvec_new"))
-      centroids = Staging.stage(centroids
+      (fx.stage(centroids
         .join(means, Seq("cid"), "left")
-        .select(col("cid"), coalesce(col("cvec_new"), col("cvec")).as("cvec")),
-        reliable)
+        .select(col("cid"), coalesce(col("cvec_new"), col("cvec")).as("cvec"))), true)
     }
-    (centroids, assign(centroids).drop("qv"))
+    // the final codebook is on the driver already: the centroids are
+    // returned from it, so only the assignments need pinning
+    val last = codebook(centroids)
+    (q.sparkSession.createDataFrame(java.util.Arrays.asList(last: _*), centroids.schema),
+      fx.finish(assign(last).drop("qv")))
   }
 
   /** Per-cluster summary after `iterations` rounds: size, total squared

@@ -407,27 +407,21 @@ object Ngrams {
       reliable: Boolean = false): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
     require(batch >= 1, s"batch must be >= 1: $batch")
-    val spark = docs.sparkSession
+    val fx = new Fixpoint("bpeMerges", reliable)
     // Word-type table staged with the caller-selectable posture
     // ([[Staging.stage]]): `reliable = true` keeps lineage so an
     // executor loss mid-training recomputes the lost partition instead
     // of killing a multi-hundred-round vocabulary run; the rewrite chain
     // is deterministic, so recompute is bit-identical.
-    var vocab = Staging.stage(Dedup.parallelize(docs)
+    val vocab0 = fx.stage(Dedup.parallelize(docs)
       .select(explode(Dedup.wordTokens(col(textCol))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("n"))
-      .select(concat(split(col("word"), ""), array(lit(endOfWord))).as("syms"), col("n")),
-      reliable)
-    // On the reliable path each round's pair election (a collect — an
-    // action) materializes the most recent staged vocab; the staged
-    // generation BEFORE it can then be released, keeping at most two
-    // vocabulary snapshots on disk.
-    var toRelease: Option[DataFrame] = None
-    var lastStaged = vocab
+      .select(concat(split(col("word"), ""), array(lit(endOfWord))).as("syms"), col("n")))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
-    var sinceCheckpoint = 0
-    var done = false
-    while (merges.size < rounds && !done) {
+    // state: the vocabulary, its latest staged snapshot, the snapshot
+    // staged before that one, and the merges applied since the latest
+    val ((_, latest, older, _), _) = fx.loop((vocab0, vocab0, Option.empty[DataFrame], 0),
+        rounds, Fixpoint.Truncate) { case ((vocab, latest, older, since), _) =>
       val want = math.min(batch, rounds - merges.size)
       val top = vocab.select(col("n"),
           explode(zip_with(
@@ -438,8 +432,9 @@ object Ngrams {
         .agg(sum("n").as("cnt"))
         .orderBy(col("cnt").desc, col("l"), col("rt"))
         .limit(want).collect()
-      if (reliable) { toRelease.foreach(_.unpersist()); toRelease = None }
-      if (top.isEmpty) done = true
+      // the election read the latest snapshot: at most two stay on disk
+      older.foreach(fx.release)
+      if (top.isEmpty) ((vocab, latest, None, since), false)
       else {
         // Maximal conflict-free prefix of the election order: the first
         // pair always applies; later candidates apply only while no
@@ -453,26 +448,24 @@ object Ngrams {
         selected.foreach { row =>
           merges += ((merges.size + 1L, row.getString(0), row.getString(1), row.getLong(2)))
         }
-        vocab = vocab.select(
+        val next = vocab.select(
           selected.foldLeft(col("syms")) { (acc, row) =>
             TextFunctions.mergeAdjacentPair(acc, row.getString(0), row.getString(1))
           }.as("syms"), col("n"))
         // linear lineage; truncate periodically like the other fixpoints
-        sinceCheckpoint += selected.size
-        if (sinceCheckpoint >= 4) {
-          if (reliable) toRelease = Some(lastStaged)
-          vocab = Staging.stage(vocab, reliable)
-          lastStaged = vocab
-          sinceCheckpoint = 0
-        }
+        val state =
+          if (since + selected.size >= 4) { val s = fx.stage(next); (s, s, Some(latest), 0) }
+          else (next, latest, None, since + selected.size)
+        (state, merges.size < rounds)
       }
     }
-    // The merge table lives on the driver — every staged vocabulary
-    // snapshot can be released before returning.
-    if (reliable) { toRelease.foreach(_.unpersist()); lastStaged.unpersist() }
+    // the merge table lives on the driver: no snapshot outlives the call
+    older.foreach(fx.release)
+    fx.release(latest)
     // merge_rank/left_sym/right_sym: names chosen to stay clear of the
     // SQL keywords rank/left/right in every oracle engine.
-    spark.createDataFrame(merges.toSeq).toDF("merge_rank", "left_sym", "right_sym", "n")
+    docs.sparkSession.createDataFrame(merges.toSeq)
+      .toDF("merge_rank", "left_sym", "right_sym", "n")
   }
 
   /** BPE encode statistics: apply a learned merge table ([[bpeMerges]],

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Fixed-point integer PageRank — graph centrality over an edge list,
@@ -45,9 +45,8 @@ object PageRank {
       scale: Long = 1000000L,
       dampingNum: Long = 85L,
       reliable: Boolean = false): DataFrame = {
-    require(iterations >= 0, s"iterations must be >= 0: $iterations")
-    require(scale % 100 == 0, s"scale must be a multiple of 100 for an exact teleport term: $scale")
-    require(dampingNum >= 0 && dampingNum <= 100, s"dampingNum must be in [0,100]: $dampingNum")
+    checkArgs(iterations, scale, dampingNum)
+    val fx = new Fixpoint("ranksFixedPoint", reliable)
     // Materialize the (possibly expensive) upstream edge computation
     // once — nodes, degrees and the degree-joined edge list all derive
     // from it, and without this each derivation re-runs the caller's
@@ -56,73 +55,10 @@ object PageRank {
     // executor recomputes instead of failing — the preemptible-cluster
     // posture; the loop below is integer-exact, so recompute reproduces
     // every partition bit-identically.
-    val e = Staging.stage(
-      edges.select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d")),
-      reliable)
-    // Partition the loop-invariant sides ONCE and stage them with a
-    // DECLARED layout ([[Staging.stageHash]], r18). The r17 shape
-    // (`repartition(p, key).cache()`) intended exactly this, but under
-    // AQE both cache and checkpoint boundaries REPORT UnknownPartitioning
-    // at planning time (the cached plan is an AdaptiveSparkPlanExec), so
-    // every consumer re-exchanged anyway — the before-plan
-    // (plans/r18/q69_pagerank_before_stages) shows the full edge list
-    // re-shuffled once PER ITERATION (Exchange over InMemoryTableScan ×3)
-    // and nodes ×4. stageHash pins hash(key, defaultParallelism)
-    // physically (AQE-exempt explicit repartition) and re-attaches the
-    // partitioning to the staged leaf, so each iteration exchanges only
-    // the contribution aggregation — the irreducible PageRank shuffle.
-    // ONE explicit exchange also feeds the degree aggregation AND the
-    // degree join (guide §2.4 "share one exchange"): the previous shape
-    // shuffled the edge list for the join, the partial-agged degrees for
-    // `deg`, and the joined frame again for the layout pin.
-    val p = e.sparkSession.sparkContext.defaultParallelism
-    val nodes = Staging.stageHash(
-      e.select(col("s").as("id")).union(e.select(col("d").as("id"))).distinct(),
-      Seq("id"), reliable)
-    val eP = e.repartition(p, col("s"))
-    val deg = eP.groupBy("s").agg(count(lit(1)).as("outdeg"))
-    val withDeg = Staging.stageHash(eP.join(deg, "s"), Seq("s"), reliable)
-    val teleport = scale * (100 - dampingNum) / 100
-    var ranks = nodes.withColumn("rank", lit(scale))
-    val staged = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (i <- 1 to iterations) {
-      val contribs = contributions(withDeg, ranks, dampingNum)
-      val next = nodes.join(contribs.hint("shuffle_hash"), Seq("id"), "left")
-        .select(col("id"), (lit(teleport) + coalesce(col("c"), lit(0L))).as("rank"))
-      // Rank lineage grows LINEARLY (each iteration references the prior
-      // ranks exactly once), so staging every iteration buys nothing
-      // structurally while costing one materialization each round. Stage
-      // every 4th round and always on the last. Plan depth per posture:
-      // localCheckpoint and the reliablePin checkpoint() truncate to a
-      // leaf; the lineage-keeping reliable persist leaves the analyzed
-      // tree linear in rounds (execution stays flat — cache substitution
-      // plans each persisted subtree as a leaf; see [[Staging]]).
-      if (i == iterations || i % 4 == 0) {
-        ranks = Staging.stage(next, reliable)
-        staged += ranks
-      } else ranks = next
-    }
-    // The reliable persist is LAZY — force the final ranks onto disk now,
-    // while the loop-invariant caches are still alive (otherwise the
-    // caller's first action re-derives nodes/degrees once per iteration),
-    // then drop the intermediate staged frames (each referenced exactly
-    // once; only the final one backs the returned plan).
-    if (reliable) {
-      // no `iterations > 0` guard: a zero-iteration call must still
-      // release the staged input (it otherwise outlives the call in the
-      // CacheManager) — but then `ranks` was never staged by the loop,
-      // so stage it first or the count materializes nothing durable and
-      // every caller action re-derives the edge plan from source
-      if (iterations == 0) ranks = Staging.stage(ranks, reliable)
-      ranks.count()
-      staged.dropRight(1).foreach(_.unpersist())
-      // staged input too: the pinned ranks read from disk, and lineage
-      // is kept, so post-release block loss recomputes from source
-      e.unpersist()
-    }
-    nodes.unpersist()
-    withDeg.unpersist()
-    ranks
+    val e = fx.stage(
+      edges.select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d")))
+    iterate(fx, fx.stage(nodeIds(e), Seq("id")), e, count(lit(1)).as("outdeg"),
+      byOutDegree(dampingNum), lit(_), scale, dampingNum, iterations)
   }
 
   /** Personalized (topic-sensitive) PageRank: identical fixed-point loop,
@@ -150,53 +86,17 @@ object PageRank {
       scale: Long = 1000000L,
       dampingNum: Long = 85L,
       reliable: Boolean = false): DataFrame = {
-    require(iterations >= 0, s"iterations must be >= 0: $iterations")
-    require(scale % 100 == 0, s"scale must be a multiple of 100 for an exact teleport term: $scale")
-    require(dampingNum >= 0 && dampingNum <= 100, s"dampingNum must be in [0,100]: $dampingNum")
-    val e = Staging.stage(
-      edges.select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d")),
-      reliable)
-    val p = e.sparkSession.sparkContext.defaultParallelism
+    checkArgs(iterations, scale, dampingNum)
+    val fx = new Fixpoint("personalizedFixedPoint", reliable)
+    val e = fx.stage(
+      edges.select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d")))
     val seedFlag = seeds.select(col(seedCol).cast("long").as("id"))
       .distinct().withColumn("__seed", lit(true))
-    // declared-layout staging of the loop invariants — see
-    // [[ranksFixedPoint]] (r18)
-    val nodes = Staging.stageHash(
-      e.select(col("s").as("id")).union(e.select(col("d").as("id")))
-        .distinct()
-        .join(broadcast(seedFlag), Seq("id"), "left")
-        .withColumn("__seed", coalesce(col("__seed"), lit(false))),
-      Seq("id"), reliable)
-    val eP = e.repartition(p, col("s"))
-    val deg = eP.groupBy("s").agg(count(lit(1)).as("outdeg"))
-    val withDeg = Staging.stageHash(eP.join(deg, "s"), Seq("s"), reliable)
-    val teleport = scale * (100 - dampingNum) / 100
-    var ranks = nodes.select(col("id"),
-      when(col("__seed"), lit(scale)).otherwise(lit(0L)).as("rank"))
-    val staged = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (i <- 1 to iterations) {
-      val contribs = contributions(withDeg, ranks, dampingNum)
-      val next = nodes.join(contribs.hint("shuffle_hash"), Seq("id"), "left")
-        .select(col("id"),
-          (when(col("__seed"), lit(teleport)).otherwise(lit(0L)) +
-            coalesce(col("c"), lit(0L))).as("rank"))
-      if (i == iterations || i % 4 == 0) {
-        ranks = Staging.stage(next, reliable)
-        staged += ranks
-      } else ranks = next
-    }
-    // Same materialize-then-release dance as [[ranksFixedPoint]],
-    // staged input included (and released even at zero iterations,
-    // staging the never-looped ranks first so the pin holds something).
-    if (reliable) {
-      if (iterations == 0) ranks = Staging.stage(ranks, reliable)
-      ranks.count()
-      staged.dropRight(1).foreach(_.unpersist())
-      e.unpersist()
-    }
-    nodes.unpersist()
-    withDeg.unpersist()
-    ranks
+    val nodes = fx.stage(nodeIds(e)
+      .join(broadcast(seedFlag), Seq("id"), "left")
+      .withColumn("__seed", coalesce(col("__seed"), lit(false))), Seq("id"))
+    iterate(fx, nodes, e, count(lit(1)).as("outdeg"), byOutDegree(dampingNum),
+      v => when(col("__seed"), lit(v)).otherwise(lit(0L)), scale, dampingNum, iterations)
   }
 
   /** One iteration's incoming-contribution aggregation — split out so the
@@ -209,9 +109,13 @@ object PageRank {
       withDeg: DataFrame,
       ranks: DataFrame,
       dampingNum: Long): DataFrame =
-    withDeg.join(ranks.hint("shuffle_hash"), col("s") === col("id"))
-      .select(col("d").as("id"),
-        expr(s"(rank * $dampingNum) div (100 * outdeg)").as("c"))
+    contributions(withDeg, ranks, byOutDegree(dampingNum))
+
+  private def byOutDegree(dampingNum: Long): String = s"(rank * $dampingNum) div (100 * outdeg)"
+
+  private def contributions(edges: DataFrame, ranks: DataFrame, contrib: String): DataFrame =
+    edges.join(ranks.hint("shuffle_hash"), col("s") === col("id"))
+      .select(col("d").as("id"), expr(contrib).as("c"))
       .groupBy("id").agg(sum("c").as("c"))
 
   /** WEIGHTED PageRank: [[ranksFixedPoint]]'s loop with integer edge
@@ -238,9 +142,8 @@ object PageRank {
       scale: Long = 1000000L,
       dampingNum: Long = 85L,
       reliable: Boolean = false): DataFrame = {
-    require(iterations >= 0, s"iterations must be >= 0: $iterations")
-    require(scale % 100 == 0, s"scale must be a multiple of 100 for an exact teleport term: $scale")
-    require(dampingNum >= 0 && dampingNum <= 100, s"dampingNum must be in [0,100]: $dampingNum")
+    checkArgs(iterations, scale, dampingNum)
+    val fx = new Fixpoint("weightedRanksFixedPoint", reliable)
     val raw = edges.select(col(srcCol).cast("long").as("s"),
       col(dstCol).cast("long").as("d"), col(weightCol).cast("long").as("w"))
     // The weight-quality probe RIDES the weight-fold aggregation (min
@@ -248,11 +151,10 @@ object PageRank {
     // edge plan separately — a standalone limit-1 probe would execute
     // the caller's whole upstream join once just to check signs, then
     // staging would execute it again.
-    val eAll = Staging.stage(
+    val eAll = fx.stage(
       raw.groupBy(col("s"), col("d")).agg(sum(col("w")).as("w"),
         min(col("w")).as("__mn"),
-        (count(lit(1)) - count(col("w"))).as("__nn")),
-      reliable)
+        (count(lit(1)) - count(col("w"))).as("__nn")))
     // ONE tiny global-stats aggregation on the staged leaf (r18) carries
     // the weight-quality verdict AND the max weight the precision probe
     // below needs — previously a limit-1 filter job plus a separate
@@ -267,16 +169,7 @@ object PageRank {
         s"weightedRanksFixedPoint: non-positive or null weight on edge ${bad.headOption.map(r => (r.get(0), r.get(1))).getOrElse("")} — weights must be >= 1")
     }
     val e = eAll.select(col("s"), col("d"), col("w"))
-    val p = e.sparkSession.sparkContext.defaultParallelism
-    // declared-layout staging of the loop invariants — see
-    // [[ranksFixedPoint]] (r18)
-    val nodes = Staging.stageHash(
-      e.select(col("s").as("id")).union(e.select(col("d").as("id"))).distinct(),
-      Seq("id"), reliable)
-    val eP = e.repartition(p, col("s"))
-    val wsum = eP.groupBy("s").agg(sum(col("w")).as("wsum"))
-    val withW = Staging.stageHash(eP.join(wsum, "s"), Seq("s"), reliable)
-    val teleport = scale * (100 - dampingNum) / 100
+    val nodes = fx.stage(nodeIds(e), Seq("id"))
     // Adaptive precision: total rank mass is invariant-bounded by
     // n·scale (teleport injects n·(1−d)·scale per round, damping keeps
     // ≤ d of the rest), so the per-edge product rank·d·w is bounded by
@@ -286,36 +179,68 @@ object PageRank {
     // clears 2^62 — decimal(38,0) otherwise (the correctness floor; same
     // overflow posture as skipGramLift). Identical values either way:
     // exact integer floor division on both paths.
-    val nNodes = nodes.count()
-    val maxW = st.getLong(2)
     val longSafe =
-      BigInt(nNodes) * scale * dampingNum.max(1L) * maxW < BigInt(1L << 62)
-    val contribExpr =
+      BigInt(nodes.count()) * scale * dampingNum.max(1L) * st.getLong(2) < BigInt(1L << 62)
+    iterate(fx, nodes, e, sum(col("w")).as("wsum"),
       if (longSafe) s"(rank * $dampingNum * w) div (100 * wsum)"
-      else s"cast((cast(rank as decimal(38,0)) * $dampingNum * w) div (100 * cast(wsum as decimal(38,0))) as bigint)"
-    var ranks = nodes.withColumn("rank", lit(scale))
-    val staged = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (i <- 1 to iterations) {
-      val contribs = withW.join(ranks.hint("shuffle_hash"), col("s") === col("id"))
-        .select(col("d").as("id"), expr(contribExpr).as("c"))
-        .groupBy("id").agg(sum("c").as("c"))
-      val next = nodes.join(contribs.hint("shuffle_hash"), Seq("id"), "left")
-        .select(col("id"), (lit(teleport) + coalesce(col("c"), lit(0L))).as("rank"))
-      if (i == iterations || i % 4 == 0) {
-        ranks = Staging.stage(next, reliable)
-        staged += ranks
-      } else ranks = next
+      else s"cast((cast(rank as decimal(38,0)) * $dampingNum * w) div (100 * cast(wsum as decimal(38,0))) as bigint)",
+      lit(_), scale, dampingNum, iterations)
+  }
+
+  private def checkArgs(iterations: Int, scale: Long, dampingNum: Long): Unit = {
+    require(iterations >= 0, s"iterations must be >= 0: $iterations")
+    require(scale % 100 == 0, s"scale must be a multiple of 100 for an exact teleport term: $scale")
+    require(dampingNum >= 0 && dampingNum <= 100, s"dampingNum must be in [0,100]: $dampingNum")
+  }
+
+  /** Every endpoint of the staged edge list `e`, once. */
+  private def nodeIds(e: DataFrame): DataFrame =
+    e.select(col("s").as("id")).union(e.select(col("d").as("id"))).distinct()
+
+  /** The loop all three variants run: `iterations` rounds of
+    * `rank = at(teleport) + Σ_incoming contrib` from `rank₀ = at(scale)`,
+    * over the staged node table `nodes` (`id`, plus whatever `at` reads)
+    * and the staged edge list `e` (`s`, `d`, …). `contrib` reads the
+    * source's `rank` and its aggregate `norm` over its out-edges; `at(v)`
+    * is what a node receives of a per-node amount `v`.
+    */
+  private def iterate(fx: Fixpoint, nodes: DataFrame, e: DataFrame, norm: Column,
+      contrib: String, at: Long => Column, scale: Long, dampingNum: Long,
+      iterations: Int): DataFrame = {
+    val teleport = at(scale * (100 - dampingNum) / 100)
+    // Partition the loop-invariant sides ONCE and stage them with a
+    // DECLARED layout ([[Staging.stageHash]], r18). The r17 shape
+    // (`repartition(p, key).cache()`) intended exactly this, but under
+    // AQE both cache and checkpoint boundaries REPORT UnknownPartitioning
+    // at planning time (the cached plan is an AdaptiveSparkPlanExec), so
+    // every consumer re-exchanged anyway — the before-plan
+    // (plans/r18/q69_pagerank_before_stages) shows the full edge list
+    // re-shuffled once PER ITERATION (Exchange over InMemoryTableScan ×3)
+    // and nodes ×4. stageHash pins hash(key, defaultParallelism)
+    // physically (AQE-exempt explicit repartition) and re-attaches the
+    // partitioning to the staged leaf, so each iteration exchanges only
+    // the contribution aggregation — the irreducible PageRank shuffle.
+    // ONE explicit exchange also feeds the normalizer aggregation AND
+    // its join (guide §2.4 "share one exchange"): the previous shape
+    // shuffled the edge list for the join, the partial-agged degrees for
+    // `deg`, and the joined frame again for the layout pin.
+    val eP = e.repartition(e.sparkSession.sparkContext.defaultParallelism, col("s"))
+    val withNorm = fx.stage(eP.join(eP.groupBy("s").agg(norm), "s"), Seq("s"))
+    val (ranks, _) = fx.loop(nodes.select(col("id"), at(scale).as("rank")), iterations,
+        Fixpoint.Truncate) { (ranks, i) =>
+      val next = nodes.join(contributions(withNorm, ranks, contrib).hint("shuffle_hash"),
+        Seq("id"), "left")
+        .select(col("id"), (teleport + coalesce(col("c"), lit(0L))).as("rank"))
+      // Rank lineage grows LINEARLY (each iteration references the prior
+      // ranks exactly once), so staging every iteration buys nothing
+      // structurally while costing one materialization each round. Stage
+      // every 4th round and always on the last. Plan depth per posture:
+      // localCheckpoint and the reliablePin checkpoint() truncate to a
+      // leaf; the lineage-keeping reliable persist leaves the analyzed
+      // tree linear in rounds (execution stays flat — cache substitution
+      // plans each persisted subtree as a leaf; see [[Staging]]).
+      (if (i == iterations || i % 4 == 0) fx.stage(next) else next, true)
     }
-    if (reliable) {
-      if (iterations == 0) ranks = Staging.stage(ranks, reliable)
-      ranks.count()
-      staged.dropRight(1).foreach(_.unpersist())
-      // the staged frame is eAll — e is a projection of it, and uncache
-      // matches by sameResult, so releasing the projection would no-op
-      eAll.unpersist()
-    }
-    nodes.unpersist()
-    withW.unpersist()
-    ranks
+    fx.finish(ranks)
   }
 }

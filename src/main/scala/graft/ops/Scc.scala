@@ -71,7 +71,8 @@ object Scc {
     val fx = new Fixpoint("stronglyConnected", reliable)
     // self-loops are cycle-irrelevant (a node is always mutually
     // reachable with itself); duplicates only inflate the joins. The
-    // node UNIVERSE keeps self-loop-only nodes — they are singleton SCCs
+    // node UNIVERSE keeps self-loop-only nodes — they are singleton SCCs.
+    // A null endpoint is not a node; the other endpoint of its row is.
     val raw = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
     val e0 = fx.stage(raw.where(col("src") =!= col("dst")).distinct())
@@ -80,7 +81,8 @@ object Scc {
       // scan instead of two) measured 0.89x on q324 in an interleaved 2x2
       // A/B — the narrow projection is 1-2 map tasks at bench scale, so
       // halving the scans halves the map parallelism of the node build.
-      raw.select(col("src").as("id")).union(raw.select(col("dst").as("id"))).distinct(),
+      raw.select(col("src").as("id")).union(raw.select(col("dst").as("id"))).distinct()
+        .where(col("id").isNotNull),
       count(lit(1)))
     val labels0 = fx.stage(spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],

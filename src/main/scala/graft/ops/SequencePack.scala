@@ -79,8 +79,8 @@ object SequencePack {
     * push its fill past `capacity` — computed without any sequential
     * scan (see the object doc for the jump-orbit construction).
     *
-    * Every document must have 1..capacity tokens: an oversized document
-    * can never close (pre-split it with [[concatChunk]] or truncate with
+    * Every document must have a non-null id (refused otherwise) and
+    * 1..capacity tokens: an oversized document can never close (pre-split it with [[concatChunk]] or truncate with
     * [[Chunking.truncateTokens]] — which one is a data decision the
     * caller owns); zero-token documents are absent from the output.
     */
@@ -97,15 +97,18 @@ object SequencePack {
       col(nCol).cast("long").as("n")).where(col("n") > 0)
     // the n ≤ capacity contract is what makes the 2-bucket as-of exact —
     // violating it silently would mis-assign every later window, so fail
-    // loudly with the culprit. Oversized rows are counted on the job that
-    // stages the ranked frame (it carries n, so it sees every violation);
-    // the culprit is fetched only when there is one.
-    val (ranked, oversized) = fx.stage(Normalize.rankedPrefixSum(
-      base, Seq(col("doc_id")), "n", "__rk", "__cum"), count(when(col("n") > capacity, true)))
-    require(oversized == 0L, {
-      val r = ranked.where(col("n") > capacity).select(col("doc_id"), col("n")).limit(1)
-        .collect().head
-      s"doc ${r.get(0)} has ${r.get(1)} tokens > capacity $capacity — " +
+    // loudly with the culprit; a null id has no place in the stream order.
+    // Bad rows are counted on the job that stages the ranked frame (it
+    // carries every row); the culprit is fetched only when there is one.
+    val bad = col("doc_id").isNull || col("n") > capacity
+    val (ranked, nBad) = fx.stage(Normalize.rankedPrefixSum(
+      base, Seq(col("doc_id")), "n", "__rk", "__cum"), count(when(bad, true)))
+    require(nBad == 0L, {
+      val r = ranked.where(bad).select(col("doc_id"), col("n"))
+        .orderBy(col("doc_id").asc_nulls_first).limit(1).collect().head
+      if (r.isNullAt(0)) s"nextFitWindows: a document with ${r.get(1)} tokens has a null " +
+        s"$idCol — ids must be unique and non-null to fix the stream order"
+      else s"doc ${r.get(0)} has ${r.get(1)} tokens > capacity $capacity — " +
         "pre-split with concatChunk or truncate with Chunking.truncateTokens"
     })
     // prefix-sum sequence with the S_0 = 0 sentinel (the stream start is

@@ -118,10 +118,10 @@ private[graft] object Staging {
       // Leaf-wrapped persist (see scaladoc): the RDD carries the
       // fault-tolerance lineage; the DataFrame plan over it is a leaf,
       // so loop plans stay flat. Persisting the WRAPPER (not the input)
-      // keeps the CacheManager handle on the frame we return — callers'
-      // materialize-then-release choreography (`count()` then
-      // `unpersist()`) works unchanged, and uncaching matches because
-      // the returned object IS the persisted one (uncache is
+      // keeps the CacheManager handle on the frame we return — the
+      // materialize-then-release choreography of [[Fixpoint.finish]]
+      // (`count()` then `unpersist()`) works on it, and uncaching matches
+      // because the returned object IS the persisted one (uncache is
       // sameResult-based; a projection would silently no-op).
       GraftStagedLeaf(df).persist(StorageLevel.DISK_ONLY)
     } else GraftStagedLeaf.cappedCheckpoint(df.localCheckpoint(), df)

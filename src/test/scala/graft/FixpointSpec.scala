@@ -2,14 +2,16 @@ package graft
 
 import org.apache.spark.JobCounter
 import org.apache.spark.sql.DataFrame
-import graft.ops.{Components, GraphMetrics, Matching, Paths, Scc, SequencePack, SpanningForest,
-  Staging}
+import org.apache.spark.sql.functions.{expr, lit}
+import graft.ops.{Components, Coverage, Eval, GeoGrid, GraphMetrics, KMeans, Matching, Ngrams,
+  PageRank, Paths, Scc, SequencePack, SpanningForest, Staging}
 
-/** The staged-fixpoint graph operators ([[graft.ops.Fixpoint]]).
+/** The staged operators ([[graft.ops.Fixpoint]]).
   *
-  * Budgets: on fixed small graphs shaped like their catalogue queries
+  * Budgets: on fixed small inputs shaped like their catalogue queries
   * (q172, q304, q308, q310, q311, q313, q316, q340; q324, q325, q328,
-  * q54, q319, q305, q341, q318, q312, q347), the `Staging.stage`
+  * q54, q319, q305, q341, q318, q312, q347; q69, q192, q352, q80, q303,
+  * q309, q320, q78, q345, q135, q330), the `Staging.stage`
   * calls per run (one eager job per staged round) and the Spark jobs
   * started by building the result and writing it to the `noop` sink, the
   * way the benchmark consumes it. Each bound is the count measured once
@@ -29,7 +31,9 @@ import graft.ops.{Components, GraphMetrics, Matching, Paths, Scc, SequencePack, 
   * Degenerate inputs: an empty source set, an edgeless graph and an
   * isolated start node return the operator's normal schema with empty or
   * seed-only rows; so do empty, all-null and self-loop-only edge lists on
-  * both staging postures (`dagLayers` refuses a self-loop by name).
+  * both staging postures (`dagLayers` refuses a self-loop by name,
+  * `nextFitWindows` a null document id). A null endpoint is not a node;
+  * the other endpoint of its row is.
   */
 class FixpointSpec extends SparkSpec {
   import spark.implicits._
@@ -165,6 +169,78 @@ class FixpointSpec extends SparkSpec {
 
   check("node2vecWalks (q347 shape)", 7, 22) {
     GraphMetrics.node2vecWalks(chain, anchors.where($"id" % 100 === 0), steps = 4)
+  }
+
+  // ---- fixed-count and driver-elected loops, single-pass operators -----
+
+  /** The PageRank queries' graph: customers (even ids) and suppliers (odd
+    * ids) linked by co-orders, both directions.
+    */
+  private val coOrders = {
+    val e = (0 until 240).map(i => ((i % 40).toLong * 2, ((i * 7) % 23).toLong * 2 + 1))
+    (e ++ e.map(_.swap)).toDF("s", "d")
+  }
+
+  check("ranksFixedPoint (q69 shape)", 4, 13) {
+    PageRank.ranksFixedPoint(coOrders.distinct(), "s", "d", iterations = 3)
+  }
+
+  check("personalizedFixedPoint (q192 shape)", 4, 15) {
+    PageRank.personalizedFixedPoint(coOrders.distinct(), "s", "d",
+      (0L until 80L by 10L).toDF("seed"), "seed", iterations = 3)
+  }
+
+  check("weightedRanksFixedPoint (q352 shape)", 4, 17) {
+    PageRank.weightedRanksFixedPoint(coOrders.withColumn("w", lit(1L)), "s", "d", "w",
+      iterations = 3)
+  }
+
+  check("labelPropagation (q80 shape)", 3, 12) {
+    val parts = (0 until 200).map(i => ((i % 31).toLong * 4, ((i * 13) % 37).toLong * 4 + 124L))
+    GraphMetrics.labelPropagation(parts.toDF("a_id", "b_id"), rounds = 2)
+  }
+
+  check("hits (q303 shape)", 6, 31) {
+    GraphMetrics.hits(chain, "a_id", "b_id", iterations = 2)
+  }
+
+  check("modularity (q309 shape)", 1, 8) {
+    val nodes = chain.select($"a_id".as("id")).union(chain.select($"b_id".as("id"))).distinct()
+    GraphMetrics.modularity(chain, nodes.withColumn("community", expr("id div 64")))
+  }
+
+  check("bradleyTerry (q320 shape)", 8, 25) {
+    val duels = (0 until 300).map { i =>
+      val (a, b) = ((i * 17 % 100).toLong, (i * 29 % 97).toLong)
+      if ((i * 7) % 5 < 3) (a, b) else (b, a)
+    }
+    Eval.bradleyTerry(duels.toDF("winner", "loser"), iterations = 2)
+  }
+
+  check("KMeans.clusterStats (q78 shape)", 4, 22) {
+    val pts = (0 until 120).map(i =>
+      (i.toLong, Array.tabulate(8)(d => ((i * (d + 3)) % 17 - 8).toFloat)))
+    KMeans.clusterStats(pts.toDF("vec_id", "embedding"), "vec_id", "embedding",
+      k = 8, iterations = 2)
+  }
+
+  check("greedyMaxCoverage (q345 shape)", 11, 42) {
+    val pairs = (0 until 600).map(i => ((i % 50).toLong, s"t${(i * 31) % 173}"))
+    Coverage.greedyMaxCoverage(pairs.toDF("doc_id", "token"), k = 10)
+  }
+
+  check("bpeMerges (q135 shape)", 4, 24) {
+    val words = Seq("low", "lower", "lowest", "newer", "newest", "wide", "wider", "widest",
+      "tall", "taller", "tallest", "new")
+    val docs = (0 until 40).map(i => (0 until 12).map(j => words((i * 5 + j * 7) % 12))
+      .mkString(" "))
+    Ngrams.bpeMerges(docs.toDF("text"), rounds = 16, batch = 8)
+  }
+
+  check("dbscan (q330 shape)", 13, 58) {
+    val pts = (0L until 300L).map(k =>
+      (k, (k * k * 7919L + k * 104729L) % 10003L, (k * k * 6983L + k * 92821L) % 9991L))
+    GeoGrid.dbscan(pts.toDF("id", "x", "y"), "id", $"x", $"y", eps = 900L, minPts = 4)
   }
 
   // ---- round caps -------------------------------------------------------
@@ -382,7 +458,7 @@ class FixpointSpec extends SparkSpec {
   private val startRows = Seq("[1,0,1]", "[2,0,2]")
   private def weighted(e: DataFrame, w: String) = e.withColumn(w, org.apache.spark.sql.functions.lit(3L))
 
-  degenerate("stronglyConnected", Seq(none, Seq("[3,3]", "[4,4]", "[null,null]"), Seq("[1,1]", "[2,2]")))(
+  degenerate("stronglyConnected", Seq(none, Seq("[3,3]", "[4,4]"), Seq("[1,1]", "[2,2]")))(
     Scc.stronglyConnected(sccGraph)) { (e, r) =>
     Scc.stronglyConnected(e, "a_id", "b_id", reliable = r)
   }
@@ -445,8 +521,20 @@ class FixpointSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
-  degenerate("nextFitWindows", Seq(none, Seq("[null,0,3]"), Seq("[1,0,1]", "[2,0,2]")))(
-    SequencePack.nextFitWindows(Seq((1L, 5L)).toDF("doc_id", "n_tokens"), capacity = 8)) {
-    (e, r) => SequencePack.nextFitWindows(e.toDF("doc_id", "n_tokens"), capacity = 8, reliable = r)
+  test("nextFitWindows: empty, all-null and self-loop-only inputs on both postures") {
+    val normal = SequencePack.nextFitWindows(Seq((1L, 5L)).toDF("doc_id", "n_tokens"), capacity = 8)
+    def run(e: DataFrame, reliable: Boolean) =
+      SequencePack.nextFitWindows(e.toDF("doc_id", "n_tokens"), capacity = 8, reliable = reliable)
+    for (reliable <- Seq(false, true)) {
+      for ((input, want) <- Seq(emptyEdges -> none, loopEdges -> Seq("[1,0,1]", "[2,0,2]"))) {
+        val got = run(input, reliable)
+        sameSchema(got, normal)
+        assert(rows(got) == want)
+      }
+      // {(null, 3)} is the one row of the all-null list with tokens
+      val e = intercept[IllegalArgumentException](run(nullEdges, reliable))
+      assert(e.getMessage.contains("nextFitWindows") && e.getMessage.contains("null doc_id"))
+    }
+    spark.catalog.clearCache()
   }
 }

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import graft.ops.{Components, GraphMetrics, Matching, Ngrams, PageRank, Paths, Scc, SequencePack,
-  SpanningForest, Staging}
+import graft.ops.{Components, Coverage, Eval, GeoGrid, GraphMetrics, KMeans, Matching, Ngrams,
+  PageRank, Paths, Scc, SequencePack, SpanningForest, Staging}
 
 /** The `reliable` staging switch ([[graft.ops.Staging]]) must be
   * behavior-neutral: every iterative op threaded through it has to
@@ -145,10 +145,34 @@ class ReliableStagingSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  test("Coverage.greedyMaxCoverage: reliable=true matches rows and staged rounds") {
+    val pairs = (0 until 60).map(i => ((i % 9).toLong, s"t${(i * 7) % 23}")).toDF("doc_id", "token")
+    def run(reliable: Boolean) =
+      rowsAndStages(Coverage.greedyMaxCoverage(pairs, k = 4, reliable = reliable))
+    val (got, staged) = run(reliable = true)
+    assert((got, staged) == run(reliable = false))
+    assert(got.size == 4)
+    spark.catalog.clearCache()
+  }
+
+  test("GraphMetrics.modularity: reliable=true matches rows and staged rounds") {
+    val labels = Seq(1L, 2L, 3L, 10L, 11L, 12L).map(i => (i, i / 10)).toDF("id", "community")
+    def run(reliable: Boolean) = rowsAndStages(GraphMetrics.modularity(edges, labels,
+      reliable = reliable))
+    val (got, staged) = run(reliable = true)
+    val (local, localStaged) = run(reliable = false)
+    assert(got == local)
+    assert(got.size == 4) // communities 0 and 1, singletons 4 and 5
+    // the reliable posture also pins the result (Fixpoint.finish)
+    assert(staged == localStaged + 1L)
+    spark.catalog.clearCache()
+  }
+
   // A reliable run persists its rounds; once its result is materialized
   // only the result's frame may stay persisted (nextFitWindows also keeps
   // the two range pins of its prefix sums and window ids, which are
-  // `Staging.pin` frames, not rounds).
+  // `Staging.pin` frames, not rounds; KMeans.fit returns its centroids
+  // from the driver-held codebook, and bpeMerges a driver-built table).
   private def residue(run: => DataFrame): Int = {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     run.collect()
@@ -162,6 +186,9 @@ class ReliableStagingSpec extends SparkSpec {
     val w = edges.withColumn("w", col("a_id") + col("b_id"))
     val docs = (1L to 80L).map(i => (i, 1L + (i * 7) % 20)).toDF("doc_id", "n_tokens")
     val starts = Seq(1L, 10L).toDF("id")
+    val points = (0L until 30L).map(i => (i, i % 6 * 2 + i / 15 * 40, i / 6 % 3)).toDF("id", "x", "y")
+    val vectors = (0 until 30).map(i => (i.toLong, Array.tabulate(4)(d => ((i * (d + 2)) % 9).toFloat)))
+      .toDF("vec_id", "embedding")
     for ((name, allowed, run) <- Seq[(String, Int, () => DataFrame)](
         ("stronglyConnected", 1, () => Scc.stronglyConnected(directed, reliable = true)),
         ("condensationEdges", 1, () => Scc.condensationEdges(directed, reliable = true)),
@@ -173,7 +200,32 @@ class ReliableStagingSpec extends SparkSpec {
         ("greedyMatching", 1, () => Matching.greedyMatching(w, reliable = true)),
         ("nextFitWindows", 3, () => SequencePack.nextFitWindows(docs, capacity = 32, reliable = true)),
         ("randomWalks", 1, () => GraphMetrics.randomWalks(edges, starts, steps = 3, reliable = true)),
-        ("node2vecWalks", 1, () => GraphMetrics.node2vecWalks(edges, starts, steps = 3, reliable = true)))) {
+        ("node2vecWalks", 1, () => GraphMetrics.node2vecWalks(edges, starts, steps = 3, reliable = true)),
+        ("ranksFixedPoint", 1, () => PageRank.ranksFixedPoint(edges, "a_id", "b_id",
+          iterations = 5, reliable = true)),
+        ("personalizedFixedPoint", 1, () => PageRank.personalizedFixedPoint(edges, "a_id", "b_id",
+          starts, "id", iterations = 5, reliable = true)),
+        ("weightedRanksFixedPoint", 1, () => PageRank.weightedRanksFixedPoint(w, "a_id", "b_id", "w",
+          iterations = 5, reliable = true)),
+        ("labelPropagation", 1, () => GraphMetrics.labelPropagation(edges, rounds = 5, reliable = true)),
+        ("hits", 1, () => GraphMetrics.hits(directed, "src", "dst", iterations = 3, reliable = true)),
+        ("modularity", 1, () => GraphMetrics.modularity(edges, starts.withColumn("community",
+          col("id")), reliable = true)),
+        ("coreDecomposition", 1, () => GraphMetrics.coreDecomposition(edges, reliable = true)),
+        ("bradleyTerry", 1, () => Eval.bradleyTerry(directed, "src", "dst", iterations = 3,
+          reliable = true)),
+        ("greedyMaxCoverage", 1, () => Coverage.greedyMaxCoverage(
+          edges.select(col("a_id").as("doc_id"), col("b_id").cast("string").as("token")), k = 3,
+          reliable = true)),
+        ("dbscan", 1, () => GeoGrid.dbscan(points, "id", col("x"), col("y"), eps = 3L, minPts = 3,
+          reliable = true)),
+        ("KMeans.fit", 1, () => {
+          val (c, a) = KMeans.fit(vectors, "vec_id", "embedding", k = 3, iterations = 3,
+            reliable = true)
+          c.collect(); a
+        }),
+        ("bpeMerges", 0, () => Ngrams.bpeMerges(Seq("low low lower lowest newer newest").toDF("text"),
+          rounds = 12, reliable = true)))) {
       val left = residue(run())
       info(s"$name: $left persisted RDDs left")
       assert(left <= allowed, s"$name left $left persisted RDDs (allowed $allowed)")
