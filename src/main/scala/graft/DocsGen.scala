@@ -3,9 +3,9 @@ package graft
 /** Generator for `docs/ops.md` — the navigable index of every driver-query
   * operator (dev tooling, not part of the library surface). The README's
   * operator table stopped scaling past 300 rows; this index is DERIVED
-  * from the [[SparkEntry.queries]] / [[SparkEntry.oracleSql]] maps, so it
-  * can never drift from the real surface: `DocsDriftSpec` regenerates it
-  * and fails when the committed file differs.
+  * from [[SparkEntry.oracleSql]], whose keys are the catalogue's query
+  * names, so it can never drift from the real surface: `DocsDriftSpec`
+  * regenerates it and fails when the committed file differs.
   *
   * Usage: `sbt 'runMain graft.DocsGen'` rewrites docs/ops.md in place.
   */
@@ -34,17 +34,11 @@ object DocsGen {
   }
 
   def render(): String = {
-    val names = SparkEntry.queries.keys.toSeq.sortBy(n => split(n)._1)
     val oracles = SparkEntry.oracleSql
+    val names = oracles.keys.toSeq.sortBy(n => split(n)._1)
     val rows = names.map { n =>
-      val (_, label) = split(n)
-      val (check, tables) = oracles.get(n) match {
-        case Some(sql) => ("hash", tablesOf(sql).mkString(", "))
-        case None      => ("rows-only", "")
-      }
-      s"| `$n` | $label | $check | $tables |"
+      s"| `$n` | ${split(n)._2} | hash | ${tablesOf(oracles(n)).mkString(", ")} |"
     }
-    val oracled = names.count(oracles.contains)
     // rows are appended AFTER stripMargin — their leading table pipes
     // would otherwise be eaten as margin characters
     s"""# Operator query index
@@ -56,9 +50,10 @@ object DocsGen {
        |and a value hash; *tables* lists the testdata tables the oracle
        |reads (navigation metadata derived from the SQL). Implementations
        |live in `src/main/scala/graft/ops/` — grep the query key in
-       |`SparkEntry.scala` for the exact operator call and its scaladoc.
+       |`src/main/scala/graft/catalog/` for the exact operator call, its
+       |scaladoc and its oracle.
        |
-       |${names.size} queries, $oracled hash-oracled.
+       |${names.size} queries, ${names.size} hash-oracled.
        |
        |""".stripMargin +
       "| query | operator | check | tables |\n|---|---|---|---|\n" +

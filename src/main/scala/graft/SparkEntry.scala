@@ -1,35 +1,18 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.{TextFunctions, VectorFunctions}
-import graft.jobs.CorpusPrep
-import graft.functions.expressions.ZOrder
-import graft.ops.{AsOfJoin, Association, Attribution, Audit, Bm25, Cdc, Chunking, Cohort, Components, Correlate, Coverage, Crawl, Decontaminate, Dedup, Enrich, Eval, Funnel, FuzzyJoin, GeoGrid, GraphMetrics, Html, Indexing, IntervalJoin, KMeans, Lexical, Mappings, Metrics, Multimodal, Ngrams, Matching, Normalize, Outliers, PageRank, Paths, Repetition, Reshape, RuntimeFilter, Sampling, Scc, Scd, SequencePack, Sessionize, Similarity, Sketch, Skyline, SkewJoin, SpanningForest, Survivorship, TableDiff, TimeSeries, Transitions, Trend, Urls}
+import graft.catalog.{CrawlCatalog, GraphCatalog, MediaCatalog, QueryCase, TabularCatalog, TextCatalog, VectorCatalog}
+import graft.ops.Sessionize
 
-/** Driver contract — one `queries` entry per implemented operator from
-  * SURVEY.md §2 (+ the training-data-pipeline extensions), each with a
-  * DuckDB oracle where the semantics are ANSI-SQL-expressible.
-  *
-  * Oracle-parity rules used throughout:
-  *  - aggregate money/ratios in exact integer units (cents, milliseconds) —
-  *    cross-engine float summation order can differ, integer sums cannot;
-  *  - alias every computed column identically in Spark and SQL;
-  *  - only use primitives with identical semantics in both engines
-  *    (length/replace/md5/regexp/row_number/epoch-ms).
+/** Driver contract: the flagship [[entry]] query and the catalogue of
+  * operator queries, each with the DuckDB oracle that checks it. The
+  * queries live as [[graft.catalog.QueryCase]] records in one catalog
+  * file per domain (`src/main/scala/graft/catalog/`); [[queries]] and
+  * [[oracleSql]] are derived from that one list.
   */
 object SparkEntry {
 
-  /** Read a testdata table. `events.ts` has shipped as TIMESTAMP(NANOS)
-    * parquet in some generations (which Spark rejects by default — read
-    * nanos as long, floor to µs) and as timestamp[us] in others (loads as
-    * TIMESTAMP_NTZ — cast to session-TZ TimestampType; the session runs
-    * UTC, so the cast is an identity on the stored micros). Dispatching on
-    * the loaded type makes both generations land on the same µs-precision
-    * TimestampType that DuckDB (µs-native) sees, so ordering and epoch-ms
-    * math agree across engines either way.
-    */
   /** q213's synthetic point cloud — hash-scattered coordinates from the
     * customer key. ONE definition shared by the oracled query
     * (`bandOffset = 0`) and `ScaleSmoke`'s replica-banded sf1 variant
@@ -45,6 +28,15 @@ object SparkEntry {
       ((k * k * 6983L + k * 92821L) % 99991L).as("y"))
   }
 
+  /** Read a testdata table. `events.ts` has shipped as TIMESTAMP(NANOS)
+    * parquet in some generations (which Spark rejects by default — read
+    * nanos as long, floor to µs) and as timestamp[us] in others (loads as
+    * TIMESTAMP_NTZ — cast to session-TZ TimestampType; the session runs
+    * UTC, so the cast is an identity on the stored micros). Dispatching on
+    * the loaded type makes both generations land on the same µs-precision
+    * TimestampType that DuckDB (µs-native) sees, so ordering and epoch-ms
+    * math agree across engines either way.
+    */
   private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = s.read.parquet(s"$dir/$name.parquet")
@@ -57,28 +49,6 @@ object SparkEntry {
       }
     } else df
   }
-
-  /** Co-order part pairs — the deterministic synthetic graph shared by the
-    * triangle (q79) and label-propagation (q80) queries: parts appearing
-    * in the same order are linked, filtered to every 4th part key to keep
-    * the bench-scale pair count bounded.
-    */
-  private def partPairs(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem").where(col("l_partkey") % 4 === 0)
-      .select(col("l_orderkey"), col("l_partkey"))
-    li.alias("a").hint("shuffle_hash")
-      .join(li.alias("b").hint("shuffle_hash"),
-        col("a.l_orderkey") === col("b.l_orderkey") && col("a.l_partkey") < col("b.l_partkey"))
-      .select(col("a.l_partkey").as("a_id"), col("b.l_partkey").as("b_id"))
-  }
-
-  /** Spread a document-bearing input to all cores before regex/hash-heavy
-    * per-row work ([[graft.io.Spread]]) — an agg-first query should NOT use
-    * this (it would shuffle full rows that map-side partial aggregation
-    * would otherwise reduce first); it pays off only when per-row compute
-    * dominates the one cheap exchange. No-op on multi-split inputs.
-    */
-  private def spread(df: DataFrame): DataFrame = graft.io.Spread.toDefaultParallelism(df)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     *
@@ -102,13378 +72,17 @@ object SparkEntry {
       .na.fill(0L)
   }
 
+  /** Every catalogue query with its oracle, one record each. */
+  private[graft] lazy val catalog: Seq[QueryCase] =
+    TabularCatalog.cases ++ TextCatalog.cases ++ VectorCatalog.cases ++
+      GraphCatalog.cases ++ CrawlCatalog.cases ++ MediaCatalog.cases
+
   /** One per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- aggregation (A1/A3/A5): TPC-H-Q1-shaped pricing summary --------
-    "q1_pricing_agg" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          // integer units (quantities are integral) → exact, order-independent
-          // sums AND an int64-vs-float64 dtype match with the DuckDB oracle
-          sum(col("l_quantity").cast("long")).as("sum_qty"),
-          sum(round(col("l_extendedprice") * 100).cast("long")).as("sum_price_cents"),
-          sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100).cast("long"))
-            .as("sum_disc_price_cents"),
-          count(lit(1)).as("cnt"))
-    }),
-
-    // ---- conditional counts (A3) ----------------------------------------
-    "q2_conditional_counts" -> ((s, dir) => {
-      t(s, dir, "events")
-        .groupBy(col("user_id"))
-        .agg(
-          count_if(col("event_type") === "error").as("error_count"),
-          count_if(col("event_type") === "click").as("click_count"),
-          count_if(col("event_type") === "signup").as("signup_count"),
-          count(lit(1)).as("n_events"))
-    }),
-
-    // ---- zero-fill universe (A4) ----------------------------------------
-    "q3_zero_fill" -> ((s, dir) => {
-      val events = t(s, dir, "events")
-      val purchases = events.where(col("event_type") === "purchase")
-        .groupBy(col("user_id")).agg(count(lit(1)).as("purchase_count"))
-      events.select(col("user_id")).distinct()
-        .join(purchases, Seq("user_id"), "left")
-        .na.fill(0L, Seq("purchase_count"))
-    }),
-
-    // ---- enrichment lookup join (J1) via the Enrich operator -------------
-    "q4_enrich_join" -> ((s, dir) => {
-      val orders = t(s, dir, "orders")
-      val mapping = t(s, dir, "customer")
-        .select(col("c_custkey").as("key"), struct(col("c_name"), col("c_mktsegment")).as("value"))
-      Enrich(orders, mapping, "o_custkey")
-    }),
-
-    // ---- three-way correlation join + agg (J4+A3). Lineitem is partially
-    // aggregated to per-order (cnt, revenue) BEFORE the join — the classic
-    // push-agg-below-join: the fact-table shuffle carries one narrow row
-    // per order instead of every line item, and customer broadcast-joins. --
-    "q5_threeway_join" -> ((s, dir) => {
-      val perOrder = t(s, dir, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(
-          count(lit(1)).as("__cnt"),
-          sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100).cast("long"))
-            .as("__rev"))
-      perOrder
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(t(s, dir, "customer")), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_mktsegment"))
-        .agg(sum(col("__cnt")).as("n_items"), sum(col("__rev")).as("revenue_cents"))
-    }),
-
-    // ---- array fan-out / explode (P1/J2) ---------------------------------
-    "q6_explode" -> ((s, dir) => {
-      t(s, dir, "embeddings").select(col("vec_id"), explode(col("embedding")).as("val"))
-    }),
-
-    // ---- last-write-wins dedup by explicit sequence (J5/A6) --------------
-    "q7_last_write_wins" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(max_by(struct(col("o_orderkey"), col("o_totalprice")), col("o_orderkey")).as("last"))
-        .select(
-          col("o_custkey"),
-          col("last.o_orderkey").as("last_orderkey"),
-          col("last.o_totalprice").as("last_totalprice"))
-    }),
-
-    // ---- sessionization, reference A2 reset semantics (A2/O1) ------------
-    "q8_sessionize" -> ((s, dir) => {
-      Sessionize.pairedDurations(
-        t(s, dir, "events"), "user_id", unix_millis(col("ts")),
-        Seq(col("ts"), col("event_id")), "event_type", "view", "purchase")
-        .groupBy(col("user_id"))
-        .agg(sum(col("duration")).as("session_ms"), count(lit(1)).as("n_sessions"))
-    }),
-
-    // ---- per-key ordered scan / window sort (O1) -------------------------
-    "q9_window_rank" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      t(s, dir, "events")
-        .withColumn("rn", row_number().over(w))
-        .where(col("rn") === 1)
-        .select(col("user_id"), col("event_id").as("first_event_id"), col("event_type").as("first_event_type"))
-    }),
-
-    // ---- timestamp math (P5/P6) ------------------------------------------
-    "q10_ts_span" -> ((s, dir) => {
-      t(s, dir, "events")
-        .groupBy(col("user_id"))
-        .agg(
-          (max(unix_millis(col("ts"))) - min(unix_millis(col("ts")))).as("span_ms"),
-          count(lit(1)).as("n_events"))
-    }),
-
-    // ---- JSON scalar extraction (dynamic-schema surface) -----------------
-    "q11_json_extract" -> ((s, dir) => {
-      t(s, dir, "events")
-        .select(col("event_id"), get_json_object(col("props"), "$.k").cast("long").as("k_value"))
-    }),
-
-    // ---- exact dedup by content fingerprint ------------------------------
-    "q12_dedup_exact" -> ((s, dir) => Dedup.exact(t(s, dir, "documents"))),
-
-    // ---- text stats: char/word/token counts ------------------------------
-    "q13_text_stats" -> ((s, dir) => {
-      spread(t(s, dir, "documents")).select(
-        col("doc_id"),
-        length(col("text")).cast("long").as("char_len"),
-        TextFunctions.wordCount(col("text")).cast("long").as("word_count"),
-        TextFunctions.tokenCount(col("text")).as("token_count"))
-    }),
-
-    // ---- heuristic language ID (padded text staged: regexp once per row,
-    // not once per marker — mirrors the oracle's CTE) ----------------------
-    "q14_lang_id" -> ((s, dir) => {
-      spread(t(s, dir, "documents"))
-        .select(col("doc_id"), TextFunctions.paddedText(col("text")).as("__pt"))
-        .select(col("doc_id"), TextFunctions.langGuessFromPadded(col("__pt")).as("lang_guess"))
-    }),
-
-    // ---- quality score ----------------------------------------------------
-    "q15_quality" -> ((s, dir) => {
-      spread(t(s, dir, "documents"))
-        .select(col("doc_id"), TextFunctions.qualityScore(col("text")).as("quality"))
-    }),
-
-    // ---- MinHash + LSH near-dup survivors, exact-verified. The composite
-    // (LSH candidates → exact n-gram Jaccard → keep ≥ 0.5) IS fully
-    // oracle-able even though the murmur-based candidate step isn't: the
-    // synthetic corpus has a similarity gap (every true near-dup pair has
-    // J ≥ 0.9; no pair falls in (0.2, 0.9)), so 16 bands × 4 rows recalls
-    // every J ≥ 0.9 pair (per-pair miss odds ≈ (1−0.9⁴)¹⁶ ≈ 4e-8, and the
-    // fixed seeds make the outcome deterministic), and the ≥ 0.5 verify
-    // filter kills every false candidate. DuckDB recomputes the survivor
-    // set by brute force over all pairs — a full value oracle for the
-    // whole LSH→verify pipeline. est_jaccard (murmur-dependent) is
-    // dropped from the compared output. ----------------------------------
-    "q16_minhash_lsh" -> ((s, dir) => {
-      Dedup.lshVerifiedPairs(t(s, dir, "documents"), minJaccard = 0.2)
-        .where(col("jaccard") >= 0.5)
-        .select(col("a_id"), col("b_id"), col("jaccard"))
-    }),
-
-    // ---- SimHash signatures (murmur-based → pinned-fixture oracle) -------
-    "q17_simhash" -> ((s, dir) => Dedup.simhashText(t(s, dir, "documents"))),
-
-    // ---- n-gram Jaccard verification over a deterministic candidate list.
-    // The pair fixture (every 10th doc vs its +1 and +5 successors) is
-    // SQL-expressible, so DuckDB recomputes the exact same Jaccard values
-    // over the same normalized shingle strings — a full value oracle for
-    // the verification operator. The LSH→verify composite (murmur-based
-    // candidates, not SQL-expressible) is Dedup.lshVerifiedPairs, covered
-    // by DedupSpec with the shingle stage computed once and persisted. ----
-    "q18_ngram_jaccard" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pairs = docs
-        .where(col("doc_id") % 10 === 0)
-        .select(col("doc_id").as("a_id"),
-          explode(array(col("doc_id") + 1, col("doc_id") + 5)).as("b_id"))
-      Dedup.ngramJaccard(docs, pairs)
-    }),
-
-    // ---- Z-order (Morton) encoding: the multi-dimensional clustering
-    // key, as a native codegen expression (ZOrder.cluster uses it to
-    // range-partition the write layout). Inputs masked to 16 bits here so
-    // the oracle's BIGINT shift chain can replay the identical math. -----
-    "q68_zorder" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          ZOrder.interleave(col("l_partkey") % lit(65536L), col("l_suppkey") % lit(65536L))
-            .as("zval"))
-    }),
-
-    // ---- fixed-point integer PageRank over the customer↔supplier
-    // bipartite trade graph (both directions): per-iteration = one join +
-    // one agg on node ids, integer math ⇒ partitioning-independent.
-    // Node ids use a disjoint even/odd encoding (2·cust / 2·supp+1) — an
-    // additive offset would collide once customers outgrow it. ------------
-    "q69_pagerank" -> ((s, dir) => {
-      val e0 = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-        .join(t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("s"), (col("l_suppkey") * 2 + 1).as("d"))
-        .distinct()
-      // symmetrize by exploding each edge into both directions (r18): the
-      // union-of-swap shape recomputed the scan+join+distinct subtree
-      // TWICE inside PageRank's staging job (no ReusedExchange fires
-      // across the union branches); same row multiset, one computation.
-      val e = e0.select(explode(array(
-          struct(col("s"), col("d")),
-          struct(col("d").as("s"), col("s").as("d")))).as("e"))
-        .select(col("e.s").as("s"), col("e.d").as("d"))
-      PageRank.ranksFixedPoint(e, "s", "d", iterations = 3)
-        .select(col("id").as("node_id"), col("rank"))
-    }),
-
-    // ---- CDC changelog apply: base ⊕ (upserts+deletes) → next snapshot.
-    // The changelog collapses to last-change-per-key BEFORE touching the
-    // base, so the join shuffle carries one narrow row per changed key,
-    // not one per change. ------------------------------------------------
-    "q70_cdc_merge" -> ((s, dir) => {
-      val base = t(s, dir, "customer")
-        .select(col("c_custkey"), round(col("c_acctbal") * 100).cast("long").as("balance_cents"))
-      val changes = t(s, dir, "orders")
-        .select(col("o_custkey").as("c_custkey"), col("o_orderkey"),
-          when(col("o_orderstatus") === "P", lit("D")).otherwise(lit("U")).as("op"),
-          round(col("o_totalprice") * 100).cast("long").as("balance_cents"))
-      Cdc.applyChangelog(base, changes, "c_custkey", "o_orderkey", "op", Seq("balance_cents"))
-    }),
-
-    // ---- hopping (sliding) window aggregation: size 2h / slide 1h, each
-    // event expands map-side into its two covering windows, then a plain
-    // hash agg on (window, type) — no state, no sort. --------------------
-    "q71_sliding_window" -> ((s, dir) => {
-      t(s, dir, "events")
-        .groupBy(window(col("ts"), "2 hours", "1 hour").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(unix_millis(col("w.start")).as("w_start_ms"), col("event_type"), col("n"))
-    }),
-
-    // ---- bloom-filter runtime filter: fact rows pruned map-side against
-    // the dim key set before the exact semi-join (Spark's own bloom
-    // expressions). No false negatives ⇒ result is exactly the semi-join;
-    // the pre-filter only cuts the fact-side shuffle volume. --------------
-    "q72_bloom_prune" -> ((s, dir) => {
-      val dim = t(s, dir, "supplier").where(col("s_nationkey") < 5)
-      RuntimeFilter.bloomSemiJoin(t(s, dir, "lineitem"), dim, "l_suppkey", "s_suppkey",
-        expectedItems = 4096)
-        .groupBy(col("l_suppkey")).agg(count(lit(1)).as("n"),
-          sum(col("l_quantity").cast("long")).as("sum_qty"))
-    }),
-
-    // ---- ranking family: rank / percent_rank / cume_dist / ntile within
-    // nation — partitioned windows, so no global single-reducer sort (the
-    // global-ordering variant is q40's bounded top-k). ntile/row-number
-    // take an id tiebreak for a total order; rank/percent_rank/cume_dist
-    // are value-based and tie-stable. Long casts keep driver dtypes
-    // aligned with DuckDB's BIGINT window outputs. ------------------------
-    "q73_ranks" -> ((s, dir) => {
-      val rev = t(s, dir, "lineitem").groupBy(col("l_suppkey"))
-        .agg(sum(round(col("l_extendedprice") * 100).cast("long")).as("rev_cents"))
-      val sup = t(s, dir, "supplier").select(col("s_suppkey"), col("s_nationkey"))
-      val j = rev.join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-      val byVal = Window.partitionBy(col("s_nationkey")).orderBy(col("rev_cents"))
-      val total = Window.partitionBy(col("s_nationkey")).orderBy(col("rev_cents"), col("l_suppkey"))
-      j.select(col("s_nationkey"), col("l_suppkey"), col("rev_cents"),
-        rank().over(byVal).cast("long").as("rnk"),
-        percent_rank().over(byVal).as("pct_rank"),
-        cume_dist().over(byVal).as("cdist"),
-        ntile(4).over(total).cast("long").as("quartile"))
-    }),
-
-    // ---- edit-distance near-dup verification: blocked (lang, source)
-    // self-join + length-band prune + prefix-bounded Levenshtein. The
-    // third verifier family beside n-gram Jaccard (q18) and embedding
-    // cosine (q21) — catches small-edit duplicates shingles blur. --------
-    "q74_edit_distance" -> ((s, dir) => {
-      Dedup.editDistancePairs(t(s, dir, "documents"), "doc_id", "text",
-        blockCols = Seq("lang", "source"), prefixLen = 80, maxDist = 30)
-        .select(col("a_id"), col("b_id"), col("dist").cast("long").as("dist"))
-    }),
-
-    // ---- ordered funnel: staged min-after-previous aggregation (k narrow
-    // shuffles for k steps, one row per entity each — no window sort, no
-    // per-entity state; the A2 start/end pairing generalized to chains). --
-    "q75_funnel" -> ((s, dir) => {
-      Funnel.counts(t(s, dir, "events"), "user_id", "event_type", "ts",
-        Seq("view", "click", "purchase"))
-    }),
-
-    // ---- throttle-dedup (debounce): drop same-key events closer than the
-    // gap to their predecessor — one window, lag-based, full codegen. ----
-    "q76_debounce" -> ((s, dir) => {
-      TimeSeries.debounce(t(s, dir, "events"), Seq("user_id", "event_type"), "ts",
-        minGapMs = 60000L, tiebreaks = Seq("event_id"))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          unix_millis(col("ts")).as("ts_ms"))
-    }),
-
-    // ---- robust outlier screen: per-user activity counts vs the upper
-    // Tukey fence of their event_type peer group, exact integer quartiles
-    // (the scale path lowers approx_percentile accuracy — q36's exact-
-    // percentile trap documented at Outliers.upperIqr). ------------------
-    "q77_outliers" -> ((s, dir) => {
-      val counts = t(s, dir, "events")
-        .groupBy(col("event_type"), col("user_id"))
-        .agg(count(lit(1)).as("n"))
-      Outliers.upperIqr(counts, Seq("event_type"), "n")
-        .select(col("event_type"), col("user_id"), col("n"), col("q1"), col("q3"))
-    }),
-
-    // ---- integer-lattice k-means (2 Lloyd rounds, k=8): map-only
-    // assignment against a broadcast codebook + bounded-shuffle centroid
-    // update, all in exact integer arithmetic (same portability trick as
-    // the fixed-point PageRank) — output is the per-cluster integer
-    // fingerprint (size, inertia, centroid sum). -------------------------
-    "q78_kmeans" -> ((s, dir) => {
-      KMeans.clusterStats(t(s, dir, "embeddings"), "vec_id", "embedding",
-        k = 8, iterations = 2)
-    }),
-
-    // ---- triangle counting on the co-order part graph: two hash joins
-    // count each triangle once at its u<v<w orientation; per-node
-    // participation out. --------------------------------------------------
-    "q79_triangles" -> ((s, dir) => GraphMetrics.nodeTriangles(partPairs(s, dir))),
-
-    // ---- per-supplier revenue trend: least-squares slope as exact
-    // integer (numerator, denominator, sign) — regr_slope without float
-    // merge-order drift; one narrow two-level aggregation. ---------------
-    "q81_linear_trend" -> ((s, dir) => {
-      val monthly = t(s, dir, "lineitem")
-        .groupBy(col("l_suppkey"),
-          (year(col("l_shipdate")) * 12 + month(col("l_shipdate"))).cast("long").as("xm"))
-        .agg(sum(round(col("l_extendedprice") * 100).cast("long")).as("y"))
-      Trend.linear(monthly, Seq("l_suppkey"), col("xm"), col("y"))
-    }),
-
-    // ---- navigation window functions: per-user first/last/2nd event via
-    // one partitioned sort, collapsed to a single row per user. ----------
-    "q82_nav_windows" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val wf = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      t(s, dir, "events")
-        .select(col("user_id"),
-          first(col("event_type")).over(wf).as("first_type"),
-          last(col("event_type")).over(wf).as("last_type"),
-          nth_value(col("event_id"), 2).over(wf).as("second_event_id"),
-          row_number().over(w).as("__rn"))
-        .where(col("__rn") === 1)
-        .drop("__rn")
-    }),
-
-    // ---- mode-based label propagation (2 synchronous rounds) on the same
-    // co-order part graph: deterministic community labels via integer
-    // neighbor tallies with a (count desc, label asc) tie order. ----------
-    "q80_label_prop" -> ((s, dir) =>
-      GraphMetrics.labelPropagation(partPairs(s, dir), rounds = 2)),
-
-    // ---- SCD type-2 history: ordered change log → validity intervals,
-    // one shuffle, both windows on one sort. epoch-ms integers out so the
-    // cross-engine compare never sees timestamp dtype drift. --------------
-    "q65_scd2" -> ((s, dir) => {
-      Scd.history(t(s, dir, "events"), "user_id", "ts", Seq("event_type"), Seq("event_id"))
-        .select(col("user_id"), unix_millis(col("valid_from")).as("valid_from_ms"),
-          unix_millis(col("valid_to")).as("valid_to_ms"),
-          col("event_type"), col("is_current"))
-    }),
-
-    // ---- native session_window aggregation: gap-based sessions as a
-    // plain merging aggregate (the batch twin of streaming sessionize). --
-    "q66_session_window" -> ((s, dir) => {
-      Sessionize.sessionWindows(t(s, dir, "events"), "user_id", "ts", "30 minutes")
-        .select(col("user_id"), unix_millis(col("session_start")).as("start_ms"),
-          unix_millis(col("session_end")).as("end_ms"), col("n_events"))
-    }),
-
-    // ---- bucketized point-in-interval join: non-equi range match turned
-    // into a bucket equi-join + exact filter (no nested-loop against a
-    // large interval set). ------------------------------------------------
-    "q67_interval_join" -> ((s, dir) => {
-      val iv = t(s, dir, "orders").where(col("o_orderkey") % 100 === 0)
-        .select(col("o_orderkey"), col("o_orderdate").as("iv_start"),
-          (col("o_orderdate") + expr("INTERVAL 2 DAYS")).as("iv_end"))
-      val pts = t(s, dir, "lineitem").where(col("l_orderkey") % 10 === 0)
-        .select(col("l_shipdate"))
-      IntervalJoin.pointsInIntervals(iv, "iv_start", "iv_end", pts, "l_shipdate", 2 * 86400L)
-        .groupBy("o_orderkey").agg(count(lit(1)).as("n_points"))
-    }),
-
-    // ---- Count-Min frequency sketch: fixed-memory term counts, merged by
-    // elementwise addition (partitioning-independent). The oracled surface
-    // is the exact counts plus the sketch's two-sided error CONTRACT
-    // (never undercounts; over by ≤ ⌈e·N/width⌉) pinned TRUE — the raw
-    // estimates are sketch-internal, like q43's HLL. The exact-count
-    // branch exists only to oracle the contract; real use replaces it. --
-    "q64_countmin" -> ((s, dir) => {
-      val terms = Seq("table", "data", "spark", "vector", "nonexistentterm")
-      val words = spread(t(s, dir, "documents"))
-        .select(explode(Dedup.wordTokens(col("text"))).as("term"))
-      val cm = udaf(new graft.functions.Sketches.CountMinAgg(4, 2048, terms))
-      val est = words.agg(cm(col("term")).as("e"))
-        .select(posexplode(col("e.estimates")))
-        .select(element_at(typedlit(terms), col("pos").cast("int") + 1).as("term"),
-          col("col").as("__est"))
-      val exact = words.groupBy("term").agg(count(lit(1)).as("exact_count"))
-      est.join(exact, Seq("term"), "left")
-        .crossJoin(broadcast(words.agg(count(lit(1)).as("__n"))))
-        .select(col("term"),
-          coalesce(col("exact_count"), lit(0L)).as("exact_count"),
-          ceil(col("__n") * lit(math.E) / 2048).cast("long").as("eps_bound"),
-          (col("__est") >= coalesce(col("exact_count"), lit(0L))).as("never_undercounts"),
-          (col("__est") <= coalesce(col("exact_count"), lit(0L)) +
-            ceil(col("__n") * lit(math.E) / 2048).cast("long")).as("within_eps_n"))
-    }),
-
-    // ---- weighted deterministic sampling: keep orders with probability
-    // proportional to price (clamped) — the corpus-reweighting primitive,
-    // md5-coin-flipped so DuckDB replays the exact selected set. ---------
-    "q63_weighted_sample" -> ((s, dir) => {
-      Sampling.weighted(t(s, dir, "orders"), "o_orderkey",
-        col("o_totalprice") / 500000.0)
-        .select(col("o_orderkey"), col("o_totalprice"))
-    }),
-
-    // ---- time-series regularization: per-customer monthly spine, gap
-    // months zero-filled, last-observation-carried-forward value. Spine
-    // generated per key with sequence() (bounded by the key's own span —
-    // no global-calendar cross join). ------------------------------------
-    "q62_gap_fill" -> ((s, dir) => {
-      val filled = TimeSeries.gapFillMonthlyCounts(
-        t(s, dir, "orders"), "o_custkey", "o_orderdate",
-        round(col("o_totalprice") * 100).cast("long"))
-        .withColumn("__v", when(col("n_obs") > 0, col("cents")))
-      TimeSeries.forwardFill(filled, "o_custkey", "month", "__v")
-        .select(col("o_custkey"), date_format(col("month"), "yyyy-MM").as("month"),
-          col("n_obs"), col("cents"), col("__v").as("last_cents"))
-    }),
-
-    // ---- cross-document boilerplate: shingles shared by ≥3 docs, per-doc
-    // boilerplate fraction — integer counts → exact ratio both engines. --
-    "q61_boilerplate" -> ((s, dir) =>
-      Repetition.boilerplate(t(s, dir, "documents"), minDocs = 3)),
-
-    // ---- BM25 retrieval statistics: exact integer (tf, df, len) per
-    // (doc, query term) — the scoring formula itself is spec-tested, not
-    // oracled, because ln() may differ across engines in the last ulp. --
-    "q60_bm25_stats" -> ((s, dir) => {
-      Bm25.stats(t(s, dir, "documents"), Seq("table", "query", "vector"))
-        .select(col("doc_id"), col("term"), col("tf"), col("df"),
-          col("doc_len"), col("n_docs"))
-    }),
-
-    // ---- multimodal binary roundtrip: synthesize REAL BMP/WAV payloads
-    // (container params = pure functions of the id), then parse the
-    // headers back with the byte-level codecs. The oracle replays the
-    // parameter formulas — writer and parser must agree byte-for-byte for
-    // the metadata to land on the formula values. ------------------------
-    "q59_media_meta" -> ((s, dir) => {
-      Multimodal.parseMeta(Multimodal.syntheticMedia(t(s, dir, "documents")))
-        .toDF()
-        .select(col("media_id"), col("kind"),
-          col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"),
-          col("sample_rate").cast("long").as("sample_rate"),
-          col("duration_ms"))
-    }),
-
-    // ---- quota sampling: exactly n rows per stratum, selected in md5(id)
-    // order — deterministic corpus-composition caps (per domain/language/
-    // source). md5 hex ordering is engine-portable, so DuckDB replays the
-    // exact selected set. -------------------------------------------------
-    "q58_quota_sample" -> ((s, dir) => {
-      Sampling.exactPerGroup(t(s, dir, "orders"), "o_orderpriority", "o_orderkey", n = 40)
-        .select(col("o_orderkey"), col("o_orderpriority"))
-    }),
-
-    // ---- PII / identifier redaction: chained global regex rules over the
-    // customer names (digit-run ids) — map-only, codegen'd. ---------------
-    "q56_redact" -> ((s, dir) =>
-      t(s, dir, "customer")
-        .select(col("c_custkey"), TextFunctions.redact(col("c_name")).as("redacted"))),
-
-    // ---- sliding-window chunking for embedding pipelines: 32-word
-    // windows, 8-word overlap — a pure flatMap, no shuffle. ---------------
-    "q57_chunk" -> ((s, dir) =>
-      Chunking.byWords(t(s, dir, "documents"), chunkSize = 32, overlap = 8)),
-
-    // ---- Gopher-style repetition quality signals (word-level duplicate /
-    // top-bigram fractions); integer-count ratios → exact doubles both
-    // engines. -------------------------------------------------------------
-    "q55_repetition" -> ((s, dir) =>
-      Repetition.signals(t(s, dir, "documents"))),
-
-    // ---- connected components over a deterministic pair graph: the
-    // near-dup RESOLUTION step (pairs → clusters → keep min-id rep). The
-    // fixture builds chains + stars with bridges merging group pairs, so
-    // convergence requires real multi-hop propagation; DuckDB replays it
-    // with a recursive transitive closure. --------------------------------
-    "q54_connected_components" -> ((s, dir) =>
-      Components.connectedComponents(docChainPairs(s, dir))),
-
-    // ---- brute-force cosine top-k (exact ANN baseline) -------------------
-    "q19_embedding_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.bruteForceTopK(emb, emb.where(col("vec_id") < 10).select(col("vec_id").as("query_id"), col("embedding")), k = 10)
-        .select(col("query_id"), col("neighbor_id"), col("rank"))
-    }),
-
-    // ---- LSH-bucketed ANN (scale path; recall < 1 by design). The
-    // murmur-seeded hyperplanes make the neighbor set non-SQL-derivable,
-    // but fully DETERMINISTIC for fixed seeds + data — so the sf0.01
-    // result is pinned as a literal-VALUES oracle (q64 precedent:
-    // empirically verified fixture pin, regenerate via
-    // tools/pin_oracle.py if seeds/data ever change). The float cosine is
-    // dropped from the compared output (engine-specific summation order);
-    // rank order is deterministic (cosine desc, neighbor_id asc). --------
-    "q20_ann_lsh" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.lshTopK(emb, emb.where(col("vec_id") < 10).select(col("vec_id").as("query_id"), col("embedding")), k = 10)
-        .select(col("query_id"), col("neighbor_id"), col("rank"))
-    }),
-
-    // ---- embedding near-dup pairs (LSH-bucketed). Same pinned-fixture
-    // oracle scheme as q20: deterministic murmur hyperplane buckets →
-    // stable pair set at sf0.01, pinned as literal VALUES; the float
-    // cosine column is dropped from the compared output. -----------------
-    "q21_embedding_neardup" -> ((s, dir) => {
-      Dedup.embeddingNearDup(t(s, dir, "embeddings"), threshold = 0.25)
-        .select(col("a_id"), col("b_id"))
-    }),
-
-    // ---- multimodal binary-column pipeline over VALID containers: the
-    // REAL BMP dimension parser decodes the image and video legs (writer
-    // and parser must agree byte-for-byte), the audio leg falls through
-    // to the stub's deterministic RIFF-magic header read — so the oracle
-    // is an analytic formula, not a pinned fixture. ------------------------
-    "q22_multimodal" -> ((s, dir) => {
-      Multimodal.extractFeatures(Multimodal.syntheticMediaTri(t(s, dir, "documents")))
-        .toDF()
-        .select(col("media_id"), col("kind"), col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"),
-          col("n_frames").cast("long").as("n_frames"))
-    }),
-
-    // ---- IVF ANN: probe nearest centroid partitions. Deterministic given
-    // the fixed centroid rule (vec_id % 97 == 0), so the whole
-    // assign→probe→rank pipeline is SQL-oracled; the float cosine itself is
-    // dropped (engine-specific summation order), as in q19. ----------------
-    "q23_ivf_ann" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val centroids = emb.where(pmod(col("vec_id"), lit(97)) === 0)
-        .select(col("vec_id").as("centroid_id"), col("embedding"))
-      Similarity.ivfTopK(
-        emb,
-        emb.where(col("vec_id") < 10).select(col("vec_id").as("query_id"), col("embedding")),
-        centroids, k = 10, nProbe = 2)
-        .select(col("query_id"), col("neighbor_id"), col("rank"))
-    }),
-
-    // ---- rolling-hash document fingerprint -------------------------------
-    "q24_rolling_fp" -> ((s, dir) => {
-      spread(t(s, dir, "documents"))
-        .select(col("doc_id"), TextFunctions.rollingHash(col("text")).as("rolling_fp"))
-    }),
-
-    // ---- anti join: orders with no deeply-discounted line item -----------
-    "q25_anti_join" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .join(
-          t(s, dir, "lineitem").where(col("l_discount") > 0.05),
-          col("o_orderkey") === col("l_orderkey"), "left_anti")
-        .select(col("o_orderkey"), col("o_totalprice"))
-    }),
-
-    // ---- semi join: orders with a deeply-discounted line item ------------
-    "q26_semi_join" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .join(
-          t(s, dir, "lineitem").where(col("l_discount") > 0.05),
-          col("o_orderkey") === col("l_orderkey"), "left_semi")
-        .select(col("o_orderkey"), col("o_totalprice"))
-    }),
-
-    // ---- rollup: subtotals + grand total in one pass ---------------------
-    "q27_rollup" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(sum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("cnt"))
-    }),
-
-    // ---- lag window: max inter-event gap per user ------------------------
-    "q28_lag_gap" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      t(s, dir, "events")
-        .withColumn("__gap", unix_millis(col("ts")) - lag(unix_millis(col("ts")), 1).over(w))
-        .groupBy(col("user_id"))
-        .agg(max(col("__gap")).as("max_gap_ms"), count(lit(1)).as("n_events"))
-    }),
-
-    // ---- deterministic train/val/test split: content-hash bucketing ------
-    // (md5 exists on both engines → exact oracle; hash-based assignment is
-    // reproducible across runs/engines, unlike rand()-based sampling)
-    "q29_hash_split" -> ((s, dir) => {
-      val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 2), 16, 10).cast("long")
-      t(s, dir, "documents")
-        .withColumn("split",
-          when(bucket < 204, lit("train")).when(bucket < 230, lit("val")).otherwise(lit("test")))
-        .groupBy(col("split"))
-        .agg(count(lit(1)).as("n_docs"), sum(length(col("text"))).cast("long").as("total_chars"))
-    }),
-
-    // ---- top-k per group: 3 highest-value orders per market segment ------
-    "q30_topk_per_group" -> ((s, dir) => {
-      val w = Window.partitionBy(col("c_mktsegment"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      t(s, dir, "orders")
-        .join(broadcast(t(s, dir, "customer")), col("o_custkey") === col("c_custkey"))
-        .withColumn("rk", row_number().over(w))
-        .where(col("rk") <= 3)
-        .select(col("c_mktsegment"), col("rk"), col("o_orderkey"), col("o_totalprice"))
-    }),
-
-    // ---- histogram binning: order-value distribution ---------------------
-    "q31_histogram" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .groupBy(floor(col("o_totalprice") / 50000).cast("long").as("bin"))
-        .agg(count(lit(1)).as("n_orders"))
-    }),
-
-    // ---- data-quality profile: nulls / distincts / bounds in one pass ----
-    "q32_profile" -> ((s, dir) => {
-      t(s, dir, "orders").agg(
-        count(lit(1)).as("n_rows"),
-        count_distinct(col("o_custkey")).as("n_customers"),
-        count_if(col("o_orderstatus").isNull).as("null_status"),
-        min(col("o_orderkey")).as("min_key"),
-        max(col("o_orderkey")).as("max_key"),
-        sum(round(col("o_totalprice") * 100).cast("long")).as("total_cents"))
-    }),
-
-    // ---- as-of join: most recent view at-or-before each purchase ---------
-    // (single-shuffle union+window AsOfJoin operator; oracle is DuckDB's
-    // native ASOF JOIN — gap_ms is tie-insensitive by construction)
-    "q33_asof_join" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts")
-      val views = ev.where(col("event_type") === "view")
-        .select(col("user_id"), col("ts").as("v_ts"))
-      AsOfJoin.backward(purchases, views, "user_id", "ts", "v_ts", Seq("v_ts"))
-        .select(col("event_id"), col("user_id"),
-          (unix_millis(col("ts")) - unix_millis(col("v_ts"))).as("gap_ms"))
-    }),
-
-    // ---- range-band join: broadcast inequality join onto a tiny dim ------
-    "q34_range_band" -> ((s, dir) => {
-      import s.implicits._
-      val bands = Seq(
-        ("budget", 0L, 100000L), ("mid", 100000L, 250000L),
-        ("premium", 250000L, 400000L), ("luxury", 400000L, 1000000L))
-        .toDF("band", "lo", "hi")
-      t(s, dir, "orders")
-        .join(broadcast(bands), col("o_totalprice") >= col("lo") && col("o_totalprice") < col("hi"))
-        .groupBy(col("band"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum(round(col("o_totalprice") * 100).cast("long")).as("total_cents"))
-    }),
-
-    // ---- cumulative window: running revenue per customer -----------------
-    "q35_running_sum" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_custkey")).orderBy(col("o_orderdate"), col("o_orderkey"))
-      t(s, dir, "orders").select(
-        col("o_custkey"), col("o_orderkey"),
-        sum(round(col("o_totalprice") * 100).cast("long")).over(w).as("running_cents"))
-    }),
-
-    // ---- exact quartiles per priority class ------------------------------
-    // (integer cents → the linear interpolation a + (b-a)*frac is exact in
-    // doubles at frac ∈ {0, .25, .5, .75}, so Spark percentile() and DuckDB
-    // quantile_cont() agree bit-for-bit)
-    // SCALE CAVEAT: exact percentile buffers every group's values in the
-    // aggregation buffer — at 100 TB each priority group's cents column
-    // sits on a single reducer. Kept for oracle parity with quantile_cont;
-    // the scale path is q53_quartiles_approx (bounded GK sketch).
-    "q36_quartiles" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .withColumn("cents", round(col("o_totalprice") * 100).cast("long"))
-        .groupBy(col("o_orderpriority"))
-        .agg(
-          expr("percentile(cents, 0.25)").as("p25"),
-          expr("percentile(cents, 0.5)").as("p50"),
-          expr("percentile(cents, 0.75)").as("p75"),
-          count(lit(1)).as("n_orders"))
-    }),
-
-    // ---- approx quartiles: the 100 TB path. GK sketch, O(accuracy) memory
-    // per group however large the group; one pass, mergeable partials. With
-    // group cardinality below `accuracy` the sketch's rank error ε·n < 1,
-    // so the result is EXACTLY the discrete quantile (partitioning-
-    // independent) and DuckDB quantile_disc oracles it value-exact; above
-    // it (e.g. the sf0.1 bench) answers degrade gracefully to ±ε·n ranks. -
-    "q53_quartiles_approx" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .withColumn("cents", round(col("o_totalprice") * 100).cast("long"))
-        .groupBy(col("o_orderpriority"))
-        .agg(
-          expr("approx_percentile(cents, array(0.25, 0.5, 0.75), 10000)").as("q"),
-          count(lit(1)).as("n_orders"))
-        .select(col("o_orderpriority"),
-          col("q").getItem(0).as("p25"),
-          col("q").getItem(1).as("p50"),
-          col("q").getItem(2).as("p75"),
-          col("n_orders"))
-    }),
-
-    // ---- set ops: intersect / except / union in one result ---------------
-    "q37_setops" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val viewers = ev.where(col("event_type") === "view").select("user_id").distinct()
-      val buyers = ev.where(col("event_type") === "purchase").select("user_id").distinct()
-      viewers.intersect(buyers).withColumn("rel", lit("both"))
-        .union(viewers.except(buyers).withColumn("rel", lit("view_only")))
-    }),
-
-    // ---- pivot: event-type counts as columns (A3 is a fixed 3-way pivot;
-    // this is the general form with an explicit value list — never pivot on
-    // discovered values at scale, that's an extra pass + unstable schema) --
-    "q38_pivot" -> ((s, dir) => {
-      t(s, dir, "events")
-        .groupBy(col("user_id"))
-        .pivot("event_type", Seq("click", "view", "purchase", "signup", "error"))
-        .count()
-        .na.fill(0L)
-    }),
-
-    // ---- cube: all grouping-set combinations + grouping_id ---------------
-    "q39_cube" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .cube(col("o_orderpriority"), col("o_orderstatus"))
-        .agg(
-          grouping_id().as("gid"),
-          count(lit(1)).as("n_orders"),
-          sum(round(col("o_totalprice") * 100).cast("long")).as("total_cents"))
-    }),
-
-    // ---- global top-k: TakeOrderedAndProject, not a full sort ------------
-    "q40_global_topk" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .limit(100)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-    }),
-
-    // ---- calendar rollup: revenue per month (date_trunc + format) --------
-    "q41_monthly_revenue" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .groupBy(date_format(date_trunc("month", col("o_orderdate")), "yyyy-MM").as("month"))
-        .agg(
-          count(lit(1)).as("n_orders"),
-          sum(round(col("o_totalprice") * 100).cast("long")).as("revenue_cents"))
-    }),
-
-    // ---- salted skew join: same result set as the plain join oracle, but
-    // the hot key spreads across nSalts reducers --------------------------
-    "q42_salted_join" -> ((s, dir) => {
-      SkewJoin.salted(t(s, dir, "lineitem"), t(s, dir, "orders"), "l_orderkey", "o_orderkey",
-          saltCols = Seq("l_orderkey", "l_linenumber"))
-        .groupBy(col("o_orderpriority"))
-        .agg(
-          count(lit(1)).as("n_items"),
-          sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100).cast("long"))
-            .as("revenue_cents"))
-    }),
-
-    // ---- approx distinct (HLL++) next to exact. The raw sketch estimate is
-    // engine-specific, so the oracled surface is the exact count plus the
-    // sketch's error CONTRACT (|approx−exact| ≤ 5%·exact ⇔ rsd spec) as a
-    // boolean the oracle pins to TRUE; OpsSpec additionally asserts the
-    // ±5% bound on the raw estimate. ---------------------------------------
-    "q43_approx_distinct" -> ((s, dir) => {
-      t(s, dir, "events")
-        .groupBy(col("event_type"))
-        .agg(
-          approx_count_distinct(col("user_id")).as("__approx"),
-          count_distinct(col("user_id")).as("exact_users"))
-        .select(col("event_type"), col("exact_users"),
-          (abs(col("__approx") - col("exact_users")) <=
-            col("exact_users") * lit(0.05)).as("approx_within_5pct"))
-    }),
-
-    // ---- composite training-corpus prep: dedup → quality gate → tokens →
-    // deterministic split, one declarative plan (jobs.CorpusPrep) ----------
-    "q44_corpus_prep" -> ((s, dir) => CorpusPrep.prepare(t(s, dir, "documents"))),
-
-    // ---- VARIANT (Spark 4): the true dynamic-schema surface — parse once,
-    // extract typed fields lazily (vs q11's per-path get_json_object) ------
-    "q45_variant" -> ((s, dir) => {
-      t(s, dir, "events")
-        .select(col("event_id"), parse_json(col("props")).as("__v"))
-        .select(col("event_id"),
-          try_variant_get(col("__v"), "$.k", "long").as("k_value"))
-    }),
-
-    // ---- range-frame window: trailing 7-day revenue per customer ---------
-    // (RANGE frame over epoch seconds — value-based, not row-based)
-    "q46_range_frame" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("__epoch"))
-        .rangeBetween(-7L * 24 * 3600, Window.currentRow)
-      t(s, dir, "orders")
-        .withColumn("__epoch", unix_timestamp(col("o_orderdate")))
-        .withColumn("trailing_7d_cents",
-          sum(round(col("o_totalprice") * 100).cast("long")).over(w))
-        .groupBy(col("o_custkey"))
-        .agg(max(col("trailing_7d_cents")).as("peak_7d_cents"))
-    }),
-
-    // ---- vocabulary: global top-50 terms by document frequency -----------
-    // (partial agg before the shuffle: explode → per-partition combine →
-    // one narrow (term, count) exchange; top-k via TakeOrdered) ------------
-    // Perf note (r3 +42% review flag): this query's plan is UNCHANGED
-    // since r2 — the regression came from wordTokens moving to an
-    // interpreted filter() lambda in r3-wide refactoring, reverted to a
-    // codegen'd array_remove form in r4; the residual delta vs r2 is
-    // within the measured ±20% host variance (isolated best-of-2 swings
-    // 0.55–0.75 s run-to-run).
-    "q47_top_terms" -> ((s, dir) => {
-      spread(t(s, dir, "documents"))
-        .select(explode(array_distinct(Dedup.wordTokens(col("text")))).as("term"))
-        .groupBy(col("term"))
-        .agg(count(lit(1)).as("doc_freq"))
-        .orderBy(col("doc_freq").desc, col("term"))
-        .limit(50)
-    }),
-
-    // ---- deterministic stratified sampling: md5-bucket membership is a
-    // pure function of the id — reproducible at any parallelism, map-only,
-    // no RNG state (vs sampleBy's seed/partitioning dependence) ------------
-    "q48_stratified_sample" -> ((s, dir) => {
-      Sampling.stratified(t(s, dir, "events"), "event_type", "event_id",
-          Map("view" -> 0.1, "click" -> 0.5))
-        .select(col("event_id"), col("user_id"), col("event_type"))
-    }),
-
-    // ---- benchmark decontamination: train docs sharing any word n-gram
-    // with the held-out set (doc_id ≡ 0 mod 97); test grams broadcast, so
-    // the corpus is never shuffled --------------------------------------
-    "q49_decontaminate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Decontaminate.flagged(
-        docs.where(pmod(col("doc_id"), lit(97)) =!= 0),
-        docs.where(pmod(col("doc_id"), lit(97)) === 0),
-        n = 3)
-    }),
-
-    // ---- sequence packing: docs → ~2048-token shards, greedy fill in
-    // doc_id order within (split, shard) windows — no global sort ----------
-    "q50_pack_shards" -> ((s, dir) => {
-      CorpusPrep.packShards(t(s, dir, "documents"), budgetTokens = 2048, nShards = 16)
-        .groupBy(col("split"), col("shard"), col("pack_id"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("tok")).as("pack_tokens"))
-    }),
-
-    // ---- arbitrary GROUPING SETS (beyond rollup/cube's fixed lattices):
-    // one pass, Expand feeds a single hash agg ----------------------------
-    "q51_grouping_sets" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      o.groupingSets(
-          Seq(Seq(col("o_orderstatus"), col("o_orderpriority")), Seq(col("o_orderstatus")), Seq()),
-          col("o_orderstatus"), col("o_orderpriority"))
-        .agg(
-          grouping_id().as("gid"),
-          count(lit(1)).as("n_orders"),
-          sum(round(col("o_totalprice") * 100).cast("long")).as("total_cents"))
-    }),
-
-    // ---- int8 embedding quantization (ANN memory scale path); summarized
-    // to exact integer stats so the oracle compares scalars, not arrays ----
-    "q52_quantize" -> ((s, dir) => {
-      t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"),
-          VectorFunctions.maxAbs(col("embedding")).as("max_abs"))
-        .select(col("vec_id"), col("max_abs"),
-          VectorFunctions.quantizeInt8(col("embedding"), col("max_abs")).as("__q"))
-        .select(col("vec_id"), col("max_abs"),
-          aggregate(col("__q"), lit(0L), (a, x) => a + x).as("q_sum"),
-          array_min(col("__q")).as("q_min"),
-          array_max(col("__q")).as("q_max"))
-    }),
-
-    // ---- cohort retention: first-activity-period cohorts × age, one
-    // window shuffle on the entity key, no join. --------------------------
-    "q83_cohort_retention" -> ((s, dir) =>
-      Cohort.retention(t(s, dir, "orders"), "o_custkey",
-        year(col("o_orderdate")) * 12 + month(col("o_orderdate")))),
-
-    // ---- collocation mining: corpus bigram × unigram counts, Dice score
-    // in exact ppm; vocabulary-sized joins, never corpus-sized. -----------
-    "q84_collocations" -> ((s, dir) =>
-      Ngrams.collocations(t(s, dir, "documents"), "text", minCount = 10L)),
-
-    // ---- first-order Markov transitions over per-user event sequences:
-    // the lag-window sort + two narrow count aggs. ------------------------
-    "q85_transitions" -> ((s, dir) =>
-      Transitions.matrix(t(s, dir, "events"), "user_id", "event_type",
-        Seq(col("ts"), col("event_id")))),
-
-    // ---- blocked fuzzy match (entity resolution): (noun, adjective-
-    // initial) blocking key + codegen levenshtein verify — Σ|block|²
-    // comparisons instead of all-pairs. -----------------------------------
-    "q86_fuzzy_block" -> ((s, dir) =>
-      // Even-key slice: the 2-word vocab yields only ~64 blocks, so the
-      // candidate-pair count is quadratic in table size (~3M pairs at
-      // sf0.1 unsliced) — the slice keeps the bench query's work
-      // representative without drowning it in pair output. Blocks here
-      // are BALANCED, so saltBuckets stays 1 (the grid salt is for
-      // skewed blocks; measured neutral-to-negative on uniform ones).
-      FuzzyJoin.selfPairs(t(s, dir, "part").where(col("p_partkey") % 2 === 0),
-        "p_partkey", "p_name",
-        concat_ws("|", split(col("p_name"), " ")(1), substring(split(col("p_name"), " ")(0), 1, 1)),
-        maxDist = 3)),
-
-    // ---- LM-familiarity quality score: per-doc fraction of bigrams seen
-    // in the English reference slice, exact integer ppm. ------------------
-    "q87_lm_familiarity" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Ngrams.familiarity(docs, docs.where(col("lang") === "en"))
-    }),
-
-    // ---- rolling z-score anomaly flags in pure integer arithmetic over
-    // a 20-row trailing window (current row excluded from its baseline). --
-    "q88_rolling_zscore" -> ((s, dir) => {
-      val ev = t(s, dir, "events").select(col("user_id"), col("ts"), col("event_id"),
-        round(col("value") * 100).cast("long").as("cents"))
-      Outliers.rollingZ(ev, Seq("user_id"), Seq(col("ts"), col("event_id")), "cents", n = 20, z = 3)
-        .select(col("user_id"), col("event_id"), col("cents"),
-          col("win_sum"), col("win_sumsq"), col("is_anomaly"))
-    }),
-
-    // ---- 2-hop neighborhood size on the co-order part graph: one wedge
-    // join + distinct, no iteration. maxDegree=64 caps each middle node's
-    // second-hop fan-out (deterministic smallest-id truncation, mirrored
-    // in the oracle), bounding the wedge intermediate at 2·m·64 instead of
-    // the hub-unbounded Σdeg² — the power-law scale guard. ----------------
-    "q89_khop" -> ((s, dir) =>
-      GraphMetrics.neighborhoodSize(partPairs(s, dir), maxDegree = 64)),
-
-    // ---- per-language source-concentration profile (Herfindahl, exact
-    // ppm): the corpus-balance audit as two stacked count aggs. -----------
-    "q90_concentration" -> ((s, dir) =>
-      Metrics.concentration(t(s, dir, "documents"), Seq("lang"), "source")),
-
-    // ---- keyed snapshot reconciliation: added/removed/changed + column
-    // mask from one full outer join. Both snapshots derive
-    // deterministically from `orders` so the oracle replays them. ---------
-    "q91_table_diff" -> ((s, dir) => {
-      val base = t(s, dir, "orders").select(col("o_orderkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"), col("o_orderstatus"))
-      val oldSnap = base.where(col("o_orderkey") % 7 =!= 0)
-      val newSnap = base.where(col("o_orderkey") % 11 =!= 0)
-        .withColumn("cents",
-          when(col("o_orderkey") % 5 === 0, col("cents") + 1000).otherwise(col("cents")))
-      TableDiff.diff(oldSnap, newSnap, Seq("o_orderkey"), Seq("cents", "o_orderstatus"))
-    }),
-
-    // ---- last-touch attribution: purchases as-of-joined back to the
-    // latest preceding click/view (7-day lookback), revenue rolled up per
-    // touch channel — one AsOfJoin shuffle + one narrow agg. --------------
-    "q92_attribution" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("purchase_id"),
-          unix_millis(col("ts")).as("p_ms"),
-          round(col("value") * 100).cast("long").as("revenue_cents"))
-      val touches = ev.where(col("event_type").isin("click", "view"))
-        .select(col("user_id"), col("event_id").as("touch_id"),
-          col("event_type").as("touch_type"), unix_millis(col("ts")).as("t_ms"))
-      AsOfJoin.backward(purchases, touches, "user_id", "p_ms", "t_ms",
-          Seq("touch_id", "touch_type", "t_ms"), inner = true, tieBreak = Seq("touch_id"))
-        .where(col("p_ms") - col("t_ms") <= 7L * 86400 * 1000)
-        .groupBy("touch_type")
-        .agg(count(lit(1)).as("n_purchases"), sum("revenue_cents").as("attributed_cents"))
-    }),
-
-    // ---- group-wise min-max normalization to exact ppm of the group
-    // range: window extrema on one key shuffle, no join. ------------------
-    "q93_minmax_norm" -> ((s, dir) => {
-      val ev = t(s, dir, "events").select(col("event_id"), col("event_type"),
-        round(col("value") * 100).cast("long").as("cents"))
-      Normalize.minMaxPpm(ev, Seq("event_type"), "cents")
-    }),
-
-    // ---- inverted-index posting summary: term → df + first-20 posting
-    // ids; presence-distinct before the explode bounds the shuffle. -------
-    "q94_inverted_index" -> ((s, dir) =>
-      Indexing.postingSummary(t(s, dir, "documents"), k = 20)),
-
-    // ---- share-of-total (ratio-to-report): nation revenue as ppm of its
-    // region — agg-below-join, broadcast dims, window over 25 rows. -------
-    "q95_share_of_total" -> ((s, dir) => {
-      val perCust = t(s, dir, "orders")
-        .groupBy("o_custkey")
-        .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("cents"))
-      val cust = t(s, dir, "customer").select(col("c_custkey"), col("c_nationkey"))
-      val dims = t(s, dir, "nation")
-        .join(t(s, dir, "region"), col("n_regionkey") === col("r_regionkey"))
-        .select(col("n_nationkey"), col("n_name"), col("r_name"))
-      val perNation = perCust
-        .join(cust, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(dims), col("c_nationkey") === col("n_nationkey"))
-        .groupBy("n_name", "r_name").agg(sum("cents").as("nation_cents"))
-      val w = Window.partitionBy(col("r_name"))
-      perNation
-        .withColumn("region_cents", sum(col("nation_cents")).over(w))
-        .withColumn("share_ppm",
-          floor(lit(1000000L) * col("nation_cents") / col("region_cents")))
-    }),
-
-    // ---- declarative data-quality audit: completeness + uniqueness +
-    // range checks in ONE scan, pivoted to one row per check. -------------
-    "q96_quality_audit" -> ((s, dir) =>
-      Audit.constraints(t(s, dir, "orders"),
-        notNullCols = Seq("o_custkey", "o_orderdate"),
-        uniqueCols = Seq("o_orderkey"),
-        ranges = Seq(("o_totalprice_cents",
-          round(col("o_totalprice") * 100).cast("long"), 0L, 100000000L)))),
-
-    // ---- order-independent replication checksum per group: 40-bit md5
-    // fingerprints combined by SUM and XOR — partitioning-invariant. ------
-    "q97_group_checksum" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(col("l_returnflag"),
-        col("l_orderkey"), col("l_linenumber"),
-        col("l_quantity").cast("long").as("qty"),
-        round(col("l_extendedprice") * 100).cast("long").as("cents"))
-      Audit.groupChecksum(li, Seq("l_returnflag"),
-        Seq("l_orderkey", "l_linenumber", "qty", "cents"))
-    }),
-
-    // ---- exact lower weighted median (price weighted by quantity) via a
-    // cumulative-weight window over pre-aggregated distinct values. -------
-    "q98_weighted_median" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(col("l_returnflag"),
-        round(col("l_extendedprice") * 100).cast("long").as("cents"),
-        col("l_quantity").cast("long").as("qty"))
-      Metrics.weightedMedian(li, Seq("l_returnflag"), "cents", "qty")
-    }),
-
-    // ---- integer CUSUM changepoint per user on the event value series:
-    // score and peak position exact via n-scaled deviations. --------------
-    "q99_cusum" -> ((s, dir) => {
-      val ev = t(s, dir, "events").select(col("user_id"), col("ts"),
-        col("event_id"), round(col("value") * 100).cast("long").as("cents"))
-      Outliers.cusum(ev, Seq("user_id"), Seq(col("ts"), col("event_id")), "cents")
-    }),
-
-    // ---- one-pass sufficient statistics (n, Σx, Σy, Σx², Σxy, Σy²) for
-    // covariance/correlation per group — dollars not cents for Σy² room. --
-    "q100_suffstats" -> ((s, dir) =>
-      Metrics.suffStats(t(s, dir, "lineitem"), Seq("l_returnflag"),
-        col("l_quantity"), round(col("l_extendedprice")))),
-
-    // ---- 2-D skyline over per-part aggregates (minimize best price,
-    // maximize total quantity) — bucketed local frontiers, then global. ---
-    "q101_skyline" -> ((s, dir) => {
-      val perPart = t(s, dir, "lineitem").groupBy(col("l_partkey"))
-        .agg(min(round(col("l_extendedprice") * 100).cast("long")).as("min_cents"),
-          sum(col("l_quantity").cast("long")).as("total_qty"))
-      Skyline.frontier2d(perPart, "min_cents", "total_qty")
-    }),
-
-    // ---- equi-depth histogram: 10 equal-frequency price buckets per
-    // return flag; unique tiebreak keys make ntile engine-portable. -------
-    "q102_equidepth" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(col("l_returnflag"),
-        round(col("l_extendedprice") * 100).cast("long").as("cents"),
-        col("l_orderkey"), col("l_linenumber"))
-      Metrics.equiDepth(li, Seq("l_returnflag"), "cents",
-        Seq(col("l_orderkey"), col("l_linenumber")), k = 10)
-    }),
-
-    // ---- corpus-mixing schedule: content-addressed interleave positions
-    // with per-source strides — map-only, no per-source sequence. ---------
-    "q103_mix_schedule" -> ((s, dir) =>
-      Sampling.mixSchedule(t(s, dir, "documents"), "source", "doc_id", MixStrides)
-        .select(col("doc_id"), col("source"), col("mix_pos"))),
-
-    // ---- sorted-neighborhood blocking: rank-adjacent candidate pairs
-    // within digit-prefix blocks of the customer names. -------------------
-    "q104_sorted_neighborhood" -> ((s, dir) =>
-      FuzzyJoin.sortedNeighborhood(t(s, dir, "customer"), "c_custkey", "c_name",
-        substring(col("c_name"), 10, 4), w = 2)),
-
-    // ---- top session paths: first 6 ordered event types per user as an
-    // `a->b` string, counted across users. --------------------------------
-    "q105_session_paths" -> ((s, dir) =>
-      Transitions.topPaths(t(s, dir, "events"), "user_id", "event_type",
-        Seq(col("ts"), col("event_id")), maxSteps = 6)),
-
-    // ---- RFM segmentation of customers by their orders: one narrow agg
-    // + quintile scores with unique tiebreaks. ----------------------------
-    "q106_rfm" -> ((s, dir) =>
-      Cohort.rfm(t(s, dir, "orders"), "o_custkey", col("o_orderdate"),
-        round(col("o_totalprice") * 100).cast("long"), k = 5)),
-
-    // ---- survivorship merge over a sparse synthetic change log derived
-    // from orders: latest non-null per field, one hash agg, no sort. ------
-    "q107_survivorship" -> ((s, dir) => {
-      val log = t(s, dir, "orders").select(
-        col("o_custkey"), col("o_orderkey").as("seq"),
-        when(col("o_orderkey") % 3 =!= 0, col("o_orderstatus")).as("status"),
-        when(col("o_orderkey") % 4 =!= 0,
-          round(col("o_totalprice") * 100).cast("long")).as("cents"))
-      Survivorship.merge(log, Seq("o_custkey"), col("seq"), Seq("status", "cents"))
-    }),
-
-    // ---- month-over-month revenue growth per order priority: lag window
-    // on monthly integer sums; ratio is one exact-int double division. ----
-    "q108_mom_growth" -> ((s, dir) => {
-      val monthly = t(s, dir, "orders")
-        .groupBy(col("o_orderpriority"),
-          date_format(col("o_orderdate"), "yyyy-MM").as("month"))
-        .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("cents"))
-      TimeSeries.periodGrowth(monthly, Seq("o_orderpriority"), "month", "cents")
-    }),
-
-    // ---- run-length encoding (gaps-and-islands) of each user's event-
-    // type stream: double-row_number islands on one exchange. -------------
-    "q109_runs" -> ((s, dir) =>
-      TimeSeries.runs(t(s, dir, "events"), Seq("user_id"),
-        Seq(col("ts"), col("event_id")), "event_type")),
-
-    // ---- categorical presence bitmap per user: one Long mask via
-    // map-side-combined bit_or + popcount. --------------------------------
-    "q110_category_bitmap" -> ((s, dir) =>
-      Indexing.categoryBitmap(t(s, dir, "events"), Seq("user_id"), "event_type",
-        Seq("click", "error", "purchase", "signup", "view"))),
-
-    // ---- melt (wide→long): three measure columns to (variable, value)
-    // rows via the native Expand — map-only, one scan, no union. ----------
-    "q111_melt" -> ((s, dir) => {
-      val wide = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_linenumber"),
-        col("l_quantity").cast("long").as("qty"),
-        round(col("l_extendedprice") * 100).cast("long").as("price_cents"),
-        round(col("l_discount") * 1000000).cast("long").as("disc_ppm"))
-      Reshape.melt(wide, Seq("l_orderkey", "l_linenumber"),
-        Seq("qty", "price_cents", "disc_ppm"))
-    }),
-
-    // ---- time-weighted average of each user's value series: exact
-    // integer value·duration sums from one lead window. -------------------
-    "q112_twa" -> ((s, dir) => {
-      val ev = t(s, dir, "events").select(col("user_id"),
-        unix_millis(col("ts")).as("ms"), col("event_id"),
-        round(col("value") * 100).cast("long").as("cents"))
-      TimeSeries.timeWeighted(ev, Seq("user_id"), "ms", "cents",
-        tiebreaks = Seq("event_id"))
-    }),
-
-    // ---- dictionary encoding: dense sort-order codes assigned on the
-    // distinct values, broadcast back — the fact side never shuffles. -----
-    "q113_dict_encode" -> ((s, dir) =>
-      Normalize.dictEncode(t(s, dir, "documents").select(col("doc_id"), col("lang")),
-        "lang", "lang_code")),
-
-    // ---- nearest-event join: each purchase to its closest click/view in
-    // EITHER direction — one union, one sort, two window frames. ----------
-    "q114_nearest_event" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("purchase_id"),
-          unix_millis(col("ts")).as("p_ms"))
-      val touches = ev.where(col("event_type").isin("click", "view"))
-        .select(col("user_id"), col("event_id").as("touch_id"),
-          col("event_type").as("touch_type"), unix_millis(col("ts")).as("t_ms"))
-      AsOfJoin.nearest(purchases, touches, "user_id", "p_ms", "t_ms",
-        Seq("touch_id", "touch_type"), inner = true, tieBreak = Seq("touch_id"))
-    }),
-
-    // ---- Kneser–Ney continuation-count table: token counts + distinct
-    // left/right contexts per word — vocabulary-sized aggs, the corpus
-    // never shuffles whole rows. -----------------------------------------
-    "q115_lm_counts" -> ((s, dir) =>
-      Ngrams.continuationCounts(t(s, dir, "documents"), minTokens = 5)),
-
-    // ---- join-key skew profile: top-20 heaviest l_suppkey values with
-    // share + cumulative share — one combined count agg + TakeOrdered. ----
-    "q116_key_skew" -> ((s, dir) =>
-      Audit.keySkew(t(s, dir, "lineitem"), "l_suppkey", topN = 20)),
-
-    // ---- winsorization: clamp order totals to each priority class's
-    // exact [p05, p95] discrete quantiles — rank window + bounds join. ----
-    "q117_winsorize" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_orderpriority"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-      Normalize.winsorize(o, Seq("o_orderpriority"), "cents", 0.05, 0.95)
-    }),
-
-    // ---- Fellegi–Sunter agreement scoring over (nation, segment) blocks:
-    // integer log-odds weights, null-safe field agreement, codegen'd
-    // scoring inside the blocked equi-join. -------------------------------
-    "q118_agreement" -> ((s, dir) => {
-      val c = t(s, dir, "customer").select(col("c_custkey"),
-        col("c_nationkey"), col("c_mktsegment"),
-        (round(col("c_acctbal") * 100).cast("long") % 10).as("bal_digit"),
-        (col("c_acctbal") > 0).as("bal_pos"),
-        substring(col("c_name"), 18, 1).as("name_last"))
-      FuzzyJoin.agreementPairs(c, "c_custkey",
-        struct(col("c_nationkey"), col("c_mktsegment")),
-        Seq(("bal_digit", 5L, 1L), ("bal_pos", 1L, 1L), ("name_last", 3L, 2L)),
-        minScore = 3L)
-    }),
-
-    // ---- exact Gini (ppm) of source sizes per language — the inequality
-    // complement to q90's HHI; category-table window, all-integer. --------
-    "q119_gini" -> ((s, dir) =>
-      Metrics.gini(t(s, dir, "documents"), Seq("lang"), "source")),
-
-    // ---- market-basket co-occurrence with exact lift: order baskets over
-    // part classes (l_partkey mod 100) — basket-bounded pair join, never
-    // corpus². -------------------------------------------------------------
-    "q120_cooccurrence" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), (col("l_partkey") % 100).as("part_class"))
-      Indexing.coOccurrence(li, "l_orderkey", "part_class", minPairCount = 2)
-    }),
-
-    // ---- characteristic terms per document: all-integer TF-IDF surrogate,
-    // ranked (tf desc, df asc) — keyword extraction, bodies never shuffle. -
-    "q121_char_terms" -> ((s, dir) =>
-      Indexing.characteristicTerms(t(s, dir, "documents"), k = 3)),
-
-    // ---- vocabulary coverage / OOV rate against the corpus's own top-100
-    // terms — broadcast vocabulary, bodies never shuffle. ------------------
-    "q122_vocab_coverage" -> ((s, dir) =>
-      Ngrams.vocabCoverage(t(s, dir, "documents"), vocabSize = 100)),
-
-    // ---- incremental aggregate maintenance: signed delta merge into a
-    // per-customer (count, sum) view — fact data never re-read. -----------
-    "q123_delta_agg" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select(col("o_custkey"), col("o_orderkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-      val base = o.where(col("o_orderkey") % 7 =!= 0)
-        .groupBy("o_custkey").agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("sum_v"))
-      val deltas = o.where(col("o_orderkey") % 7 === 0).withColumn("op", lit("I"))
-        .unionByName(o.where(col("o_orderkey") % 7 =!= 0 && col("o_orderkey") % 11 === 0)
-          .withColumn("op", lit("D")))
-      Cdc.mergeAggregate(base, deltas, Seq("o_custkey"), "cents", "op")
-    }),
-
-    // ---- pre-flight join cardinality estimate on the events self-join:
-    // exact Σ n(k)² from two count aggs, never the join itself. -----------
-    "q124_join_estimate" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      Audit.joinEstimate(ev, "user_id", ev, "user_id", topN = 15)
-    }),
-
-    // ---- C4-style repeated-span coverage: words inside corpus-hot 3-gram
-    // windows, overlaps unioned — the span-dedup rewrite volume. ----------
-    "q125_span_coverage" -> ((s, dir) =>
-      Repetition.spanCoverage(t(s, dir, "documents"), minDocs = 3, k = 3)),
-
-    // ---- multi-probe LSH ANN: queries also probe every 1-bit-flip bucket
-    // per band — the recall lever that leaves the corpus index untouched.
-    // Pinned-fixture oracle like q20. --------------------------------------
-    "q126_ann_multiprobe" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.lshTopK(emb,
-        emb.where(col("vec_id") < 10).select(col("vec_id").as("query_id"), col("embedding")),
-        k = 10, probeHamming = 1)
-        .select(col("query_id"), col("neighbor_id"), col("rank"))
-    }),
-
-    // ---- ANN recall harness: recall@10 of the multi-probe index against
-    // the exact baseline — the oracle recomputes the exact side by brute
-    // force and re-derives recall from the pinned ANN rows. ---------------
-    "q127_ann_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val qs = emb.where(col("vec_id") < 10).select(col("vec_id").as("query_id"), col("embedding"))
-      Similarity.recallAt(
-        Similarity.lshTopK(emb, qs, k = 10, probeHamming = 1),
-        Similarity.bruteForceTopK(emb, qs, k = 10),
-        k = 10)
-    }),
-
-    // ---- cluster-representative election: the step AFTER near-dup
-    // resolution — q54's component structure, ranked by n_chars (quality
-    // proxy), emits the id→rep_id rewrite map a dedup materialization
-    // applies. One join + one max-struct agg, no windows. -----------------
-    "q128_cluster_rep" -> ((s, dir) => {
-      val membership = Components.connectedComponents(docChainPairs(s, dir))
-      val ranks = t(s, dir, "documents")
-        .select(col("doc_id").as("id"), col("n_chars").as("rank"))
-      Components.representatives(membership, ranks)
-    }),
-
-    // ---- interpolated Kneser–Ney bigram LM, exact integer ppm: the
-    // smoothing layer over q115's continuation counts — one rational per
-    // observed bigram, vocabulary-sized all the way. ----------------------
-    "q129_kneser_ney" -> ((s, dir) =>
-      Ngrams.kneserNeyBigrams(t(s, dir, "documents"), minCount = 3)),
-
-    // ---- EXACT set-similarity self-join via prefix filtering (AllPairs/
-    // PPJoin): every pair with word-set Jaccard ≥ 0.95, zero false
-    // negatives — the auditable complement to MinHash-LSH. Candidates come
-    // only from shared rarest-first prefix tokens + size filter. (The
-    // synthetic corpus's tiny vocabulary makes the MEDIAN pairwise Jaccard
-    // 0.63 — a production-like 0.2 dedup threshold would be all-pairs on
-    // this data, so the query uses the near-identity band.) ---------------
-    "q130_prefix_jaccard" -> ((s, dir) =>
-      Dedup.prefixFilterPairs(t(s, dir, "documents"), thresholdPpm = 950000L)),
-
-    // ---- per-doc k-gram novelty vs the whole corpus: share of a doc's
-    // distinct 3-grams first seen in THIS doc (min-doc-id first-occurrence
-    // order) — the incremental-corpus-drop pruning signal. --------------
-    "q131_novelty" -> ((s, dir) =>
-      Ngrams.novelty(t(s, dir, "documents"), k = 3)),
-
-    // ---- leave-one-out target encoding of market segment by account
-    // balance (cents): high-cardinality categorical → leak-free integer
-    // code; singleton categories yield NULL. ------------------------------
-    "q132_target_encode" -> ((s, dir) =>
-      Normalize.targetEncode(
-        t(s, dir, "customer").select(col("c_custkey"), col("c_mktsegment"),
-          round(col("c_acctbal") * 100).cast("long").as("bal_cents")),
-        Seq("c_mktsegment"), "bal_cents")
-        .select(col("c_custkey"), col("c_mktsegment"), col("bal_cents"), col("loo_code"))),
-
-    // ---- hard-negative mining for contrastive training: per query, the
-    // 10 most-similar embeddings with a DIFFERENT label — exact top-k with
-    // the label filter ahead of any scoring. -----------------------------
-    "q133_hard_negatives" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.hardNegatives(emb,
-        emb.where(col("vec_id") < 10).select(col("vec_id").as("query_id"),
-          col("embedding"), col("label")),
-        k = 10)
-    }),
-
-    // ---- dedup-aware train/val/test split: near-dup families (q54's
-    // components) bucket by GROUP id, never straddling splits — the
-    // leakage countermeasure; singleton docs key by their own id. ---------
-    "q134_leakfree_split" -> ((s, dir) =>
-      Sampling.groupSplit(
-        t(s, dir, "documents").select(col("doc_id"), col("n_chars")),
-        Components.connectedComponents(docChainPairs(s, dir)))
-        .select(col("doc_id"), col("group_id"), col("split"))),
-
-    // ---- distributed dense-id assignment (the scale-correct
-    // zipWithIndex): contiguous ids in (n_chars, doc_id) order via range
-    // partition + partition-count-sized offset table — no global window. -
-    "q137_dense_ids" -> ((s, dir) =>
-      Normalize.denseIds(t(s, dir, "documents").select(col("doc_id"), col("n_chars")),
-        orderCol = "n_chars", tieCol = "doc_id")
-        .select(col("doc_id"), col("n_chars"), col("dense_id"))),
-
-    // ---- BPE merge-table induction (16 rounds): the subword-tokenizer
-    // training algorithm over the corpus word-type table; deterministic
-    // (count desc, pair asc) election. Pinned-fixture oracle — the
-    // iterative argmax/rewrite loop is not SQL-replayable. --------------
-    "q135_bpe_merges" -> ((s, dir) =>
-      Ngrams.bpeMerges(t(s, dir, "documents"), rounds = 16, batch = 8)),
-
-    // ---- BPE ENCODE with the table q135 just trained: per-doc subword
-    // counts and fertility — the tokenizer-quality audit. The merge table
-    // is collected (vocabulary metadata, bounded) and applied map-only.
-    // Oracle: the PINNED sf0.01 merges replayed as a chain of spaced
-    // string replaces (the same leftmost-greedy semantics). -------------
-    "q136_bpe_encode" -> ((s, dir) => {
-      val merges = Ngrams.bpeMerges(t(s, dir, "documents"), rounds = 16, batch = 8)
-        .orderBy("merge_rank").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
-      Ngrams.bpeEncodeStats(t(s, dir, "documents"), merges)
-    }),
-
-    // ---- corpus-wide segment dedup (C4/RefinedWeb "line dedup" on
-    // unstructured text): 16-word blocks, corpus-wide first occurrence
-    // wins, docs reassembled from survivors. Election shuffles only
-    // (fingerprint, id, idx); bodies cross one exchange. ----------------
-    "q138_segment_dedup" -> ((s, dir) =>
-      Dedup.segmentDedup(t(s, dir, "documents"))
-        .select(col("doc_id"), col("clean_text"), col("n_segments"), col("n_dropped"))),
-
-    // ---- train/test contamination audit: the near-dup relation vs split
-    // borders. The naive per-doc hash split leaks related pairs across
-    // splits; the component-grouped split (q134) must PROVE zero. -------
-    "q139_split_leakage" -> ((s, dir) => {
-      val pairs = docChainPairs(s, dir)
-      val docs = t(s, dir, "documents").select(col("doc_id"))
-      val grouped = Sampling.groupSplit(docs, Components.connectedComponents(pairs))
-      val naiveBucket = conv(substring(md5(col("doc_id").cast("string")), 1, 2), 16, 10).cast("long")
-      val naive = docs.withColumn("split",
-        when(naiveBucket < 204, lit("train")).when(naiveBucket < 230, lit("val"))
-          .otherwise(lit("test")))
-      Audit.splitLeakage(pairs, grouped).withColumn("method", lit("grouped"))
-        .unionByName(
-          Audit.splitLeakage(pairs, naive).withColumn("method", lit("naive_hash")))
-        .select(col("method"), col("n_pairs"), col("cross_split_pairs"))
-    }),
-
-    // ---- context-length budgeting: whole-token truncation to 64 tokens
-    // with audit columns. Map-only — the 100 TB cost is the scan. -------
-    "q140_token_truncate" -> ((s, dir) =>
-      Chunking.truncateTokens(t(s, dir, "documents"), maxTokens = 64)
-        .select(col("doc_id"), col("n_tokens"), col("truncated"), col("out_text"))),
-
-    // ---- cross-corpus dedup ("what's new in this crawl"): even docs not
-    // content-identical to any odd doc. Bloom-definitely-novel rows
-    // bypass the anti-join shuffle entirely. ----------------------------
-    "q141_cross_corpus_dedup" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.crossCorpusNovel(
-        docs.where(pmod(col("doc_id"), lit(2)) === 0),
-        docs.where(pmod(col("doc_id"), lit(2)) === 1),
-        expectedItems = 1L << 16)
-        .select(col("doc_id"), col("source"))
-    }),
-
-    // ---- SemDeDup-style blocked semantic dedup: within each label block,
-    // drop vectors with a smaller-id cosine-≥0.9 neighbor. All-integer
-    // threshold test (quantize → codegen'd integer dot) — engine-exact. -
-    "q142_semantic_dedup" -> ((s, dir) =>
-      Similarity.semanticDedup(t(s, dir, "embeddings"))
-        .select(col("vec_id"), col("label"), col("dropped"))),
-
-    // ---- sequence packing WITH position offsets: q50's greedy fill plus
-    // the within-pack token offset each doc starts at — what the training
-    // loader needs to build position ids without re-tokenizing. ---------
-    "q143_pack_offsets" -> ((s, dir) =>
-      CorpusPrep.packOffsets(t(s, dir, "documents"), budgetTokens = 2048, nShards = 16)
-        .select(col("doc_id"), col("split"), col("shard"), col("pack_id"), col("tok"), col("offset_tok"))),
-
-    // ---- contamination DEGREE (q49 flags any-hit): per train doc, the
-    // distinct-3-gram count, shared-with-test count, and overlap ppm —
-    // the threshold-policy form of decontamination. Broadcast gram set;
-    // corpus bodies never shuffle. --------------------------------------
-    "q144_overlap_stats" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Decontaminate.overlapStats(
-        docs.where(pmod(col("doc_id"), lit(97)) =!= 0),
-        docs.where(pmod(col("doc_id"), lit(97)) === 0),
-        n = 3)
-    }),
-
-    // ---- per-label integer embedding centroids: exact coordinate sums
-    // and floor-means per (label, dim). Partial agg bounds the shuffle at
-    // partitions×labels×dim — the KMeans-update cost model. -------------
-    "q145_label_centroids" -> ((s, dir) =>
-      Similarity.blockCentroids(t(s, dir, "embeddings"))
-        .select(col("label"), col("dim"), col("n"), col("sum_q"), col("centroid"))),
-
-    // ---- corpus length distribution: log2 token-count histogram per
-    // source. Integer bit-length bucket — no float log2 boundary. -------
-    "q146_length_histogram" -> ((s, dir) =>
-      Metrics.log2Histogram(
-        t(s, dir, "documents")
-          .select(col("source"), TextFunctions.tokenCount(col("text")).as("tok")),
-        Seq("source"), "tok")),
-
-    // ---- segment-level duplication profile: how many identical 16-word
-    // blocks occur 1×, 2×, … — the boilerplate report that motivates
-    // segment dedup (doc-level dup rate here is ~0). --------------------
-    "q147_segment_dup_profile" -> ((s, dir) =>
-      Dedup.segmentDupProfile(t(s, dir, "documents"))),
-
-    // ---- cross-source content overlap (the corpus Venn): distinct
-    // 16-word blocks shared per source pair. ----------------------------
-    "q148_source_overlap" -> ((s, dir) =>
-      Dedup.crossGroupOverlap(t(s, dir, "documents"))
-        .select(col("source_a"), col("source_b"), col("n_shared"))),
-
-    // ---- REAL audio decode features: integer-exact PCM stats (energy,
-    // floor-mean |s|, peak) from an actual int16 sample scan of the
-    // synthesized WAVs — writer and parser must agree byte-for-byte AND
-    // the oracle replays the sample formula analytically. ---------------
-    "q149_audio_stats" -> ((s, dir) =>
-      Multimodal.audioStats(Multimodal.syntheticMedia(t(s, dir, "documents")))
-        .toDF()
-        .select(col("media_id"), col("sample_rate"), col("n_samples"),
-          col("energy"), col("mean_abs"), col("peak_abs"))),
-
-    // ---- REAL image decode features: integer-exact per-channel pixel
-    // sums (B, G, R) from an actual 24bpp BMP pixel walk over the
-    // synthesized images — row padding excluded on both sides; the oracle
-    // replays the writer's cycled-byte formula analytically. -------------
-    "q150_image_stats" -> ((s, dir) =>
-      Multimodal.imageStats(Multimodal.syntheticMedia(t(s, dir, "documents")))
-        .toDF()
-        .select(col("media_id"), col("width"), col("height"), col("n_pixels"),
-          col("sum_b"), col("sum_g"), col("sum_r"))),
-
-    // ---- functional-dependency audit: does source determine lang in the
-    // corpus? Violating determinants only — output bounded by violations,
-    // not key cardinality. ------------------------------------------------
-    "q151_fd_audit" -> ((s, dir) =>
-      Audit.functionalDependency(t(s, dir, "documents"), Seq("source"), "lang")
-        .select(col("source"), col("n_rows"), col("n_distinct_dep"),
-          col("top_count"), col("violations"))),
-
-    // ---- k-anonymity audit over (user_id, event_type) quasi-identifiers:
-    // equivalence classes an attacker could single out (< k members). -----
-    "q152_k_anonymity" -> ((s, dir) =>
-      Audit.kAnonymity(t(s, dir, "events"), Seq("user_id", "event_type"), k = 8L)
-        .select(col("user_id"), col("event_type"), col("group_size"))),
-
-    // ---- exact integer percent-rank of event value within event_type:
-    // rank-based feature normalization that is reproducible across engines
-    // (rank(), not float percent_rank). -----------------------------------
-    "q153_percent_rank" -> ((s, dir) => {
-      val ev = t(s, dir, "events").select(col("event_id"), col("event_type"),
-        round(col("value") * 100).cast("long").as("cents"))
-      Normalize.percentRankPpm(ev, Seq("event_type"), "cents")
-        .select(col("event_id"), col("event_type"), col("cents"), col("pr_ppm"))
-    }),
-
-    // ---- per-doc lexical diversity: type-token ratio, Simpson collision
-    // numerator, hapax count — all-integer quality signals; empty docs
-    // kept as zero rows. --------------------------------------------------
-    "q154_lexical_diversity" -> ((s, dir) =>
-      Lexical.diversity(t(s, dir, "documents"))
-        .select(col("doc_id"), col("n_tokens"), col("n_types"),
-          col("ttr_ppm"), col("simpson_sum"), col("hapax"))),
-
-    // ---- temporal split with a 2-day embargo before the 2024-01-24 cut:
-    // per-user counts on each side + the cross-presence leak list. --------
-    "q155_embargo_split" -> ((s, dir) =>
-      Sampling.temporalEmbargoSplit(t(s, dir, "events"), "user_id", "ts",
-          "2024-01-24 00:00:00", embargoSeconds = 2L * 86400)
-        .select(col("user_id"), col("n_train"), col("n_test"),
-          col("n_embargo"), col("cross_presence"))),
-
-    // ---- deterministic 3-epoch shuffle schedule: md5 re-keyed per-epoch
-    // permutation, positions via the range-partitioned dense-id path. -----
-    "q156_epoch_schedule" -> ((s, dir) =>
-      CorpusPrep.epochSchedule(t(s, dir, "documents").select(col("doc_id")),
-          "doc_id", epochs = 3)
-        .select(col("epoch"), col("doc_id"), col("schedule_pos"))),
-
-    // ---- one-pass pairwise sufficient statistics over four lineitem
-    // features — the exact-integer input to a correlation matrix. ---------
-    "q157_suffstats_matrix" -> ((s, dir) =>
-      Metrics.suffStatsMatrix(t(s, dir, "lineitem"), Seq(
-        "qty" -> col("l_quantity"),
-        "price_dollars" -> round(col("l_extendedprice")),
-        "discount_pct" -> round(col("l_discount") * 100),
-        "tax_pct" -> round(col("l_tax") * 100)))),
-
-    // ---- stratified interleave: source-round-robin training order via
-    // the range-partitioned dense-id path — no per-stratum global window.
-    "q158_stratified_interleave" -> ((s, dir) =>
-      Sampling.stratifiedInterleave(t(s, dir, "documents"), "doc_id", "source")
-        .select(col("doc_id"), col("source"), col("interleave_pos"))),
-
-    // ---- per-doc sentence-shape profile: readability-proxy integers. ----
-    "q159_sentence_stats" -> ((s, dir) =>
-      Lexical.sentenceStats(t(s, dir, "documents"))
-        .select(col("doc_id"), col("n_sentences"), col("n_chars"),
-          col("n_words"), col("chars_per_sentence_ppm"),
-          col("words_per_sentence_ppm"))),
-
-    // ---- per-doc character-class census: the raw signals under
-    // boilerplate/spam heuristics, exact and summing to n_chars. ----------
-    "q160_char_classes" -> ((s, dir) =>
-      Lexical.charClasses(t(s, dir, "documents"))
-        .select(col("doc_id"), col("n_chars"), col("n_digit"), col("n_upper"),
-          col("n_lower"), col("n_space"), col("n_other"), col("digit_ppm"))),
-
-    // ---- median/MAD robust outlier flags on event values per type:
-    // exact lower medians, integer MAD fence. -----------------------------
-    "q161_mad_outliers" -> ((s, dir) => {
-      val ev = t(s, dir, "events").select(col("event_id"), col("event_type"),
-        round(col("value") * 100).cast("long").as("cents"))
-      Outliers.madOutliers(ev, Seq("event_type"), "cents", k = 3L)
-        .select(col("event_id"), col("event_type"), col("cents"),
-          col("med"), col("mad"), col("is_outlier"))
-    }),
-
-    // ---- per-doc PII density: independent per-rule match counts + rate
-    // per kilochar — the drop-vs-redact triage signal before q56. ---------
-    "q162_pii_density" -> ((s, dir) =>
-      Lexical.piiDensity(t(s, dir, "documents"))
-        .select(col("doc_id"), col("n_chars"), col("n_email"), col("n_ip"),
-          col("n_longid"), col("n_phone"), col("pii_per_kilochar"))),
-
-    // ---- referential-integrity audit across the TPC-H-ish FK graph:
-    // anti-join on projected keys only. -----------------------------------
-    "q163_fk_orphans" -> ((s, dir) =>
-      Audit.fkOrphans(Seq(
-        ("lineitem.l_orderkey->orders", t(s, dir, "lineitem"), "l_orderkey",
-          t(s, dir, "orders"), "o_orderkey"),
-        ("orders.o_custkey->customer", t(s, dir, "orders"), "o_custkey",
-          t(s, dir, "customer"), "c_custkey"),
-        ("lineitem.l_partkey->part", t(s, dir, "lineitem"), "l_partkey",
-          t(s, dir, "part"), "p_partkey"),
-        ("customer.c_nationkey->nation", t(s, dir, "customer"), "c_nationkey",
-          t(s, dir, "nation"), "n_nationkey")))),
-
-    // ---- Benford first-digit census of order totals in cents. -----------
-    "q164_benford" -> ((s, dir) =>
-      Metrics.benfordDigits(
-        t(s, dir, "orders").select(
-          round(col("o_totalprice") * 100).cast("long").as("cents")),
-        "cents")),
-
-    // ---- corpus drift: pairwise L1 distance between per-source log2
-    // length histograms — shared buckets join, totals cover the rest. -----
-    "q165_histogram_distance" -> ((s, dir) => {
-      val hist = Metrics.log2Histogram(
-        t(s, dir, "documents").select(col("source"), col("n_chars")),
-        Seq("source"), "n_chars")
-        .select(col("source"), col("log2_bucket"), col("n"))
-      Metrics.histogramDistance(hist, "source", "log2_bucket", "n")
-        .select(col("group_a"), col("group_b"), col("l1_distance"),
-          col("distance_ppm"))
-    }),
-
-    // ---- largest-remainder apportionment of a 10k-token budget across
-    // sources, proportional to their token mass: Σ alloc = budget exactly.
-    "q166_token_apportion" -> ((s, dir) => {
-      val counts = t(s, dir, "documents")
-        .select(col("source"), TextFunctions.tokenCount(col("text")).as("tokens"))
-        .groupBy(col("source")).agg(sum(col("tokens")).as("tokens"))
-      Sampling.apportion(counts, "source", "tokens", budget = 10000L)
-        .select(col("source"), col("tokens"), col("alloc"))
-    }),
-
-    // ---- the selection step consuming q166's allocations: per source,
-    // take docs by (n_chars desc, md5) until the running token total
-    // passes the source's budget (boundary row included). ----------------
-    "q167_budget_fill" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val counts = docs
-        .select(col("source"), TextFunctions.tokenCount(col("text")).as("tokens"))
-        .groupBy(col("source")).agg(sum(col("tokens")).as("tokens"))
-      val budgets = Sampling.apportion(counts, "source", "tokens", budget = 10000L)
-      val d = docs.select(col("source"), col("doc_id"), col("n_chars"),
-        TextFunctions.tokenCount(col("text")).as("tok"))
-      Sampling.budgetFill(d, "source", "doc_id", "n_chars", "tok",
-          budgets, "source", "alloc")
-        .select(col("source"), col("doc_id"), col("n_chars"), col("tok"),
-          col("cum_weight"))
-    }),
-
-    // ---- reciprocal-rank fusion: suppliers ranked per nation by two
-    // uncalibrated signals (account balance; shipped revenue), fused by
-    // rank only — integer micro-unit RRF, top-5 per nation. --------------
-    "q168_rrf_fusion" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val sup = t(s, dir, "supplier")
-        .select(col("s_suppkey"), col("s_nationkey"),
-          round(col("s_acctbal") * 100).cast("long").as("bal_cents"))
-      val byBal = sup.withColumn("rnk", row_number().over(
-        Window.partitionBy("s_nationkey").orderBy(col("bal_cents").desc, col("s_suppkey"))))
-      val rev = t(s, dir, "lineitem")
-        .groupBy(col("l_suppkey").as("s_suppkey"))
-        .agg(sum(round(col("l_extendedprice") * 100).cast("long")).as("rev_cents"))
-      val byRev = sup.select(col("s_suppkey"), col("s_nationkey"))
-        .join(rev, Seq("s_suppkey"), "left")
-        .withColumn("rev_cents", coalesce(col("rev_cents"), lit(0L)))
-        .withColumn("rnk", row_number().over(
-          Window.partitionBy("s_nationkey").orderBy(col("rev_cents").desc, col("s_suppkey"))))
-      Indexing.rrfFuse(Seq(byBal, byRev), "s_nationkey", "s_suppkey", "rnk", topK = 5)
-        .select(col("s_nationkey"), col("s_suppkey"), col("rrf_score"),
-          col("n_lists"), col("fused_rank"))
-    }),
-
-    // ---- quantile normalization: per-returnflag price distributions
-    // mapped onto the global one — exact integer ranks both sides, the
-    // cross-source batch-effect remover. ---------------------------------
-    "q169_quantile_norm" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(
-        (col("l_orderkey") * 100 + col("l_linenumber")).as("tid"),
-        col("l_returnflag"),
-        round(col("l_extendedprice") * 100).cast("long").as("cents"))
-      Normalize.quantileNormalize(li, Seq("l_returnflag"), "cents", "tid")
-        .select(col("tid"), col("l_returnflag"), col("cents"),
-          col("pr_ppm"), col("q_norm"))
-    }),
-
-    // ---- tokenizer-budget coverage curve: corpus token share of the
-    // top-2^k terms — the rank window runs over VOCABULARY-sized data. ---
-    "q170_coverage_curve" -> ((s, dir) =>
-      Ngrams.coverageCurve(t(s, dir, "documents"))),
-
-    // ---- per-label embedding dispersion via the centroid identity:
-    // exact Σ pairwise distance² from ONE linear pass — no pair join. ----
-    "q171_dispersion" -> ((s, dir) =>
-      Similarity.dispersion(t(s, dir, "embeddings"))
-        .select(col("label"), col("n"), col("sum_sq_norm"),
-          col("norm_sq_sum"), col("pair_dist_sum"), col("mean_pair_dist"))),
-
-    // ---- 2-core of the deterministic divisor graph (doc_id — 2·doc_id /
-    // 3·doc_id): iterative peel, node-sized per-round shuffles. Oracle is
-    // the pinned sf0.01 fixture (peeling isn't SQL-replayable). ----------
-    "q172_kcore" -> ((s, dir) => {
-      val ids = t(s, dir, "documents").select(col("doc_id"))
-      val maxId = ids.groupBy().agg(max(col("doc_id")).as("__m"))
-      val edges = ids.crossJoin(broadcast(maxId))
-        .select(col("doc_id").as("a_id"), (col("doc_id") * 2).as("b_id"), col("__m"))
-        .union(ids.crossJoin(broadcast(maxId))
-          .select(col("doc_id").as("a_id"), (col("doc_id") * 3).as("b_id"), col("__m")))
-        .where(col("a_id") > 0 && col("b_id") <= col("__m"))
-        .drop("__m")
-      GraphMetrics.kCore(edges, k = 2).orderBy("id")
-    }),
-
-    // ---- recency-decayed activity score: dyadic-weight bounded-lag EMA
-    // over each user's event series — newest row weighs 2^7. -------------
-    "q173_decay_score" -> ((s, dir) =>
-      TimeSeries.decayedScore(
-        t(s, dir, "events").select(col("user_id"), col("ts"), col("event_id"),
-          round(col("value") * 100).cast("long").as("cents")),
-        Seq("user_id"), Seq(col("ts"), col("event_id")), "cents")
-        .select(col("user_id"), col("decayed_score"), col("n_obs"))),
-
-    // ---- Heaps-law vocabulary growth: distinct terms after the first N
-    // stream tokens — global index via denseIds, no corpus-wide window. --
-    "q174_vocab_growth" -> ((s, dir) =>
-      Ngrams.vocabGrowth(t(s, dir, "documents"))),
-
-    // ---- crawl-snapshot novelty accounting: per day, rows whose payload
-    // first appeared that day vs re-sent content — digest-only shuffles. -
-    "q175_novelty_by_period" -> ((s, dir) =>
-      Dedup.noveltyByPeriod(
-        t(s, dir, "events").select(
-          date_format(col("ts"), "yyyy-MM-dd").as("day"), col("props")),
-        "day", "props")),
-
-    // ---- corpus-mix drift: pairwise source unigram L1 in exact ppm;
-    // corpus-sized work is ONE token-count agg, distance runs on vocab. -
-    "q176_unigram_drift" -> ((s, dir) =>
-      Lexical.unigramDrift(t(s, dir, "documents"))),
-
-    // ---- temperature-1/2 source rebalance: √-damped token weights into
-    // an exact largest-remainder split — Σ alloc = 10000 always. --------
-    "q177_temperature_mix" -> ((s, dir) => {
-      val counts = t(s, dir, "documents")
-        .select(col("source"), TextFunctions.tokenCount(col("text")).as("tokens"))
-        .groupBy(col("source")).agg(sum(col("tokens")).as("tokens"))
-      Sampling.temperatureHalfApportion(counts, "source", "tokens", budget = 10000L)
-    }),
-
-    // ---- U-shaped multi-touch attribution: touches before each user's
-    // first purchase share 10000 bp (4000/2000-split/4000), one window
-    // shuffle on the user key, integer credit only. ----------------------
-    "q178_position_attribution" -> ((s, dir) =>
-      Attribution.positionBased(
-        t(s, dir, "events"),
-        "user_id", Seq(col("ts"), col("event_id")), "event_id",
-        isTouch = col("event_type").isin("view", "click"),
-        isConversion = col("event_type") === "purchase")),
-
-    // ---- k-NN label-noise audit: per query vector, the share of its 10
-    // exact-cosine neighbors with a different label. ---------------------
-    "q179_knn_label_noise" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.labelDisagreement(emb, emb.where(col("vec_id") < 50), k = 10)
-    }),
-
-    // ---- intra-doc sentence repetition: deterministic 5-word sentence
-    // segmentation (period every 5 words), dedup-if-cleaned counts. ------
-    "q180_sentence_dup" -> ((s, dir) =>
-      Lexical.sentenceDupProfile(
-        t(s, dir, "documents").select(col("doc_id"),
-          regexp_replace(col("text"),
-            "(\\w+ \\w+ \\w+ \\w+ \\w+) ", "$1. ").as("text")))),
-
-    // ---- calibration table for an md5-derived score vs the purchase
-    // outcome: 10 equal-width bins, one bins-sized counter shuffle. ------
-    "q181_calibration" -> ((s, dir) =>
-      Metrics.calibrationBins(
-        t(s, dir, "events").select(
-          expr("(conv(substring(md5(cast(event_id as string)), 1, 5), 16, 10)" +
-            " * 1000000L) div 1048576L").as("score_ppm"),
-          col("event_type")),
-        "score_ppm", col("event_type") === "purchase")),
-
-    // ---- integer medoid per label: the member vector nearest its mean,
-    // denominator-cleared distance — broadcast S, one linear scan. -------
-    "q182_medoids" -> ((s, dir) =>
-      Similarity.medoids(t(s, dir, "embeddings"))),
-
-    // ---- stratified 5-fold CV assignment: md5 round-robin within each
-    // event type; fold sizes differ by ≤1 per stratum. -------------------
-    "q183_strat_folds" -> ((s, dir) =>
-      Sampling.stratifiedFolds(t(s, dir, "events"), Seq("event_type"), "event_id", k = 5)
-        .select(col("event_id"), col("event_type"), col("fold"))),
-
-    // ---- vocabulary-subset pairs (containment = 1.0): the asymmetric
-    // quote/subset detector at its exact-subset point — prefix length 1
-    // (each doc's rarest token), directional prefix×full candidates. -----
-    "q184_containment" -> ((s, dir) =>
-      Dedup.containmentPairs(
-        t(s, dir, "documents").where(col("doc_id") % 5 === 0),
-        thresholdPpm = 1000000L)),
-
-    // ---- deterministic popularity-ranked negative sampling over the
-    // purchase interactions: 4 md5-derived draws per positive, user
-    // history anti-joined away. ------------------------------------------
-    "q185_neg_sampling" -> ((s, dir) =>
-      Sampling.popularityNegatives(
-        t(s, dir, "events").where(col("event_type") === "purchase")
-          .select(col("user_id"), col("props").as("item")),
-        "user_id", "item", k = 4)),
-
-    // ---- churn labels at a fixed cutoff with a 3-day lookback: future-
-    // blind by construction (post-cutoff rows never aggregate). ----------
-    "q186_churn_labels" -> ((s, dir) =>
-      TimeSeries.churnLabels(t(s, dir, "events"), "user_id", "ts",
-        cutoff = "2024-01-25 00:00:00", windowSec = 3L * 86400)),
-
-    // ---- survival labels: seconds to each user's next purchase, 7-day
-    // horizon, censoring explicit — one reverse-running-min window. ------
-    "q187_time_to_event" -> ((s, dir) =>
-      TimeSeries.timeToEvent(t(s, dir, "events"), "user_id", "ts", "event_id",
-        isTarget = col("event_type") === "purchase", horizonSec = 7L * 86400)
-        .select(col("user_id"), col("event_id"), col("tte_sec"), col("censored"))),
-
-    // ---- exact two-sample KS drift between returnflag A and R price
-    // distributions: supremum found in cross-multiplied integers. --------
-    "q188_ks_drift" -> ((s, dir) =>
-      Metrics.ksStatistic(
-        t(s, dir, "lineitem").select(col("l_returnflag"),
-          round(col("l_extendedprice") * 100).cast("long").as("cents")),
-        "l_returnflag", "cents", "A", "R")),
-
-    // ---- deterministic bucket-bootstrap error bar on the mean price:
-    // 32 md5 buckets → bucket-mean spread, all integer. ------------------
-    "q189_bucket_bootstrap" -> ((s, dir) =>
-      Metrics.bucketBootstrap(
-        t(s, dir, "lineitem").select(
-          (col("l_orderkey") * 100 + col("l_linenumber")).as("rid"),
-          round(col("l_extendedprice") * 100).cast("long").as("cents")),
-        "rid", "cents", buckets = 32)),
-
-    // ---- DAU / trailing-7-day WAU / stickiness: the rolling distinct
-    // via bounded activity fan-out, never a sliding distinct window. -----
-    "q190_active_users" -> ((s, dir) =>
-      Cohort.activeUsers(t(s, dir, "events"), "user_id", "ts", windowDays = 7)),
-
-    // ---- hierarchical path rollup: flag/status/ship-year subtree usage
-    // report — prefix fan-out in the map, one combined aggregation. ------
-    "q191_path_rollup" -> ((s, dir) =>
-      Indexing.pathRollup(
-        t(s, dir, "lineitem").select(
-          concat_ws("/", col("l_returnflag"), col("l_linestatus"),
-            year(col("l_shipdate"))).as("path"),
-          col("l_quantity").cast("long").as("qty")),
-        "path", "qty")),
-
-    // ---- personalized PageRank from every-50th customer as seed: rank
-    // mass = proximity to the seed set, same cached-edge loop as q69. ----
-    "q192_ppr" -> ((s, dir) => {
-      val e0 = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-        .join(t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("s"), (col("l_suppkey") * 2 + 1).as("d"))
-        .distinct()
-      // explode-symmetrize — same rationale as q69_pagerank (r18)
-      val e = e0.select(explode(array(
-          struct(col("s"), col("d")),
-          struct(col("d").as("s"), col("s").as("d")))).as("e"))
-        .select(col("e.s").as("s"), col("e.d").as("d"))
-      val seeds = t(s, dir, "customer").where(col("c_custkey") % 50 === 0)
-        .select((col("c_custkey") * 2).as("seed"))
-      PageRank.personalizedFixedPoint(e, "s", "d", seeds, "seed", iterations = 3)
-        .select(col("id").as("node_id"), col("rank"))
-    }),
-
-    // ---- item-item co-purchase graph: capped bipartite projection of
-    // (user, item) purchase facts — wedge volume bounded by the cap. -----
-    "q193_copurchase" -> ((s, dir) =>
-      GraphMetrics.bipartiteProject(
-        t(s, dir, "events").where(col("event_type") === "purchase")
-          .select(col("user_id"),
-            get_json_object(col("props"), "$.k").cast("long").as("item")),
-        "user_id", "item", maxDegree = 10)),
-
-    // ---- sentence-aligned chunking (q180's segmentation, 20-word
-    // budget): sentences never split; chunk id is a closed-form function
-    // of the prefix word counts — no sequential fold. --------------------
-    "q194_sentence_chunks" -> ((s, dir) =>
-      Chunking.bySentences(
-        t(s, dir, "documents").select(col("doc_id"),
-          regexp_replace(col("text"),
-            "(\\w+ \\w+ \\w+ \\w+ \\w+) ", "$1. ").as("text")),
-        budget = 20)),
-
-    // ---- exact ROC AUC per event type: does the amount predict a high
-    // payload k? Tie-aware Mann–Whitney over distinct-cent counts — the
-    // window walks score cardinality, never rows. ------------------------
-    "q195_auc" -> ((s, dir) =>
-      Eval.rocAuc(
-        t(s, dir, "events").select(col("event_type"),
-          round(col("value") * 100).cast("long").as("cents"), col("props")),
-        "event_type", "cents",
-        get_json_object(col("props"), "$.k").cast("long") >= 50)),
-
-    // ---- Cohen's kappa per source between the recorded lang and a
-    // second deterministic rater (disagrees on every 4th doc): the
-    // annotator-agreement audit, integer-exact with the truncate-
-    // toward-zero convention for negative kappa. -------------------------
-    "q196_kappa" -> ((s, dir) =>
-      Eval.cohensKappa(
-        t(s, dir, "documents").select(col("source"), col("lang"),
-          when(col("doc_id") % 4 === 0,
-            element_at(
-              map(lit("en"), lit("de"), lit("de"), lit("es"), lit("es"),
-                lit("fr"), lit("fr"), lit("zh"), lit("zh"), lit("en")),
-              col("lang")))
-            .otherwise(col("lang")).as("rater_b")),
-        "source", "lang", "rater_b")),
-
-    // ---- chi-square mix drift, per-cell decomposition: event-type
-    // distribution early vs late half of the month — the integer
-    // residual d = o·N − r·c carries all the precision. ------------------
-    "q197_chisq_drift" -> ((s, dir) =>
-      Eval.chiSquareCells(
-        t(s, dir, "events").select(col("event_type"),
-          when(col("ts") < lit("2024-01-16").cast("timestamp"), lit("early"))
-            .otherwise(lit("late")).as("period")),
-        "event_type", "period")),
-
-    // ---- mean reciprocal rank of the first purchase in each user's
-    // ts-ordered stream, per user-id cohort: misses score 0 and stay in
-    // the denominator (documented convention). ---------------------------
-    "q198_mrr" -> ((s, dir) =>
-      Eval.meanReciprocalRank(
-        t(s, dir, "events").select((col("user_id") % 10).as("cohort"),
-          col("user_id"), col("ts"), col("event_id"), col("event_type")),
-        "cohort", "user_id", "ts", "event_id",
-        col("event_type") === "purchase")),
-
-    // ---- local clustering coefficient on the q79 co-order graph:
-    // triangles over degree-pairs in exact ppm — topic-cohesion vs
-    // bridge hubs. ------------------------------------------------------
-    "q199_clustering_coef" -> ((s, dir) =>
-      GraphMetrics.localClustering(partPairs(s, dir))),
-
-    // ---- seasonal-naive backtest: day-of-week profile trained before
-    // Jan 22 scores the rest of the month; integer MAE + signed bias. ----
-    "q200_seasonal_backtest" -> ((s, dir) =>
-      TimeSeries.seasonalBacktest(
-        t(s, dir, "events").select(col("event_type"), col("ts"),
-          round(col("value") * 100).cast("long").as("cents")),
-        "event_type", "ts", "cents", "2024-01-22 00:00:00")),
-
-    // ---- l-diversity audit over (nation, segment) quasi-classes with a
-    // bucketed balance as the sensitive value: the homogeneity-attack
-    // gate k-anonymity alone misses. -------------------------------------
-    "q201_l_diversity" -> ((s, dir) =>
-      Audit.lDiversity(
-        t(s, dir, "customer").select(col("c_nationkey"), col("c_mktsegment"),
-          (abs(round(col("c_acctbal") * 100).cast("long")) % 7).as("bal_class")),
-        Seq("c_nationkey", "c_mktsegment"), "bal_class", l = 5)),
-
-    // ---- gains / cumulative-lift table per event type: score deciles
-    // (event_id total order) vs the high-k label — WHERE the score earns
-    // its AUC. ------------------------------------------------------------
-    "q202_gains" -> ((s, dir) =>
-      Eval.gainsTable(
-        t(s, dir, "events").select(col("event_type"),
-          round(col("value") * 100).cast("long").as("cents"),
-          col("event_id"), col("props")),
-        "event_type", "cents", "event_id",
-        get_json_object(col("props"), "$.k").cast("long") >= 50, buckets = 10)),
-
-    // ---- 10%-each-side trimmed price stats per return flag: the robust
-    // location estimate as a produced aggregate, rank-boundary ties
-    // value-interchangeable by construction. ------------------------------
-    "q203_trimmed" -> ((s, dir) =>
-      Outliers.trimmedStats(
-        t(s, dir, "lineitem").select(col("l_returnflag"),
-          round(col("l_extendedprice") * 100).cast("long").as("cents")),
-        Seq("l_returnflag"), "cents", trimPpm = 100000L)),
-
-    // ---- difference-in-differences on a 2×2 (odd users × post-Jan-16):
-    // four cell aggregates + the floor-mean DiD estimate in one row. ------
-    "q204_did" -> ((s, dir) =>
-      Cohort.diffInDiff(
-        t(s, dir, "events").select(col("user_id"), col("ts"),
-          round(col("value") * 100).cast("long").as("cents")),
-        col("user_id") % 2 === 1,
-        col("ts") >= lit("2024-01-16").cast("timestamp"), "cents")),
-
-    // ---- per-class precision/recall/F1 of the q196 noisy rater against
-    // the recorded lang: F1 fraction-free via 2·tp/(n_pred+n_gold). ------
-    "q205_class_prf" -> ((s, dir) =>
-      Eval.classPrf(
-        t(s, dir, "documents").select(col("lang"),
-          when(col("doc_id") % 4 === 0,
-            element_at(
-              map(lit("en"), lit("de"), lit("de"), lit("es"), lit("es"),
-                lit("fr"), lit("fr"), lit("zh"), lit("zh"), lit("en")),
-              col("lang")))
-            .otherwise(col("lang")).as("rater_b")),
-        "lang", "rater_b")),
-
-    // ---- semantic decontamination: even-id corpus vectors flagged when
-    // ANY odd-id (held-out) vector sits at cosine ≥ 0.9 — the paraphrase-
-    // level complement of q49's exact n-gram screen. Held-out side
-    // broadcast; corpus scanned once map-side, integer-exact threshold. -
-    "q206_semantic_decontaminate" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Decontaminate.semanticFlags(
-        emb.where(pmod(col("vec_id"), lit(2)) === 0),
-        emb.where(pmod(col("vec_id"), lit(2)) === 1))
-        .select(col("vec_id"), col("n_matches"), col("contaminated"))
-    }),
-
-    // ---- tokenizer fertility by language: tokens/word and chars/token
-    // ppm per lang bucket — vocab-allocation planning signal. Map-side
-    // counts (no explode) + one tiny hash agg. --------------------------
-    "q207_token_fertility" -> ((s, dir) =>
-      Lexical.tokenFertility(t(s, dir, "documents"))),
-
-    // ---- column-level drift between two snapshots (even/odd orderkey
-    // halves of lineitem): per column, (rows, nulls, distinct, min, max,
-    // sum) from each side — one full-scan agg per snapshot, unpivoted to
-    // a columns-count-sized report. ------------------------------------
-    "q208_column_drift" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      Audit.columnDrift(
-        li.where(pmod(col("l_orderkey"), lit(2)) === 0),
-        li.where(pmod(col("l_orderkey"), lit(2)) === 1),
-        Seq("l_quantity", "l_partkey", "l_suppkey", "l_linenumber"))
-    }),
-
-    // ---- inter-arrival-time histogram per event type: successive
-    // per-user gaps, 60 s bins capped at 10 — per-key window (never
-    // global) + one narrow (type, bucket) hash agg. ---------------------
-    "q209_interarrival" -> ((s, dir) =>
-      TimeSeries.interArrivalHistogram(
-        t(s, dir, "events"), "user_id", "event_type", "ts",
-        widthSec = 60L, maxBucket = 10L, tieCols = Seq("event_id"))),
-
-    // ---- per-language Spearman rank correlation between text length and
-    // token count: tie-broken integer ranks, exact Σd² suff-stats, floor
-    // ppm ρ — two per-lang rank windows + one narrow agg. ----------------
-    "q210_spearman" -> ((s, dir) =>
-      Trend.spearman(t(s, dir, "documents"), Seq("lang"),
-        length(col("text")), TextFunctions.tokenCount(col("text")), col("doc_id"))),
-
-    // ---- transposition-aware fuzzy linkage: blocked customer-name pairs
-    // within unrestricted Damerau–Levenshtein ≤ 1 — the native kernel
-    // charges digit swaps 1 where levenshtein says 2, so this output
-    // provably differs from any levenshtein filter (sf0.01: 675
-    // transposition-only pairs). Blocked equi-join (prefix key), codegen
-    // verify, never all-pairs. ------------------------------------------
-    "q211_damerau_pairs" -> ((s, dir) =>
-      FuzzyJoin.selfPairs(t(s, dir, "customer"), "c_custkey", "c_name",
-        substring(col("c_name"), 1, 16), maxDist = 1,
-        metric = TextFunctions.damerau(_, _))
-        .select(col("a_id").cast("long").as("a_id"),
-          col("b_id").cast("long").as("b_id"), col("dist"))),
-
-    // ---- Jaro–Winkler linkage: blocked supplier-name pairs at sim ≥
-    // 0.88 — native kernel bit-identical to the oracle engine's, so the
-    // double survives the hash compare. ---------------------------------
-    "q212_jaro_winkler" -> ((s, dir) =>
-      FuzzyJoin.similarityPairs(t(s, dir, "supplier"), "s_suppkey", "s_name",
-        substring(col("s_name"), 1, 15), minSim = 0.88,
-        sim = TextFunctions.jaroWinkler(_, _))
-        .select(col("a_id").cast("long").as("a_id"),
-          col("b_id").cast("long").as("b_id"), col("sim"))),
-
-    // ---- grid-blocked planar radius join: all point pairs within 1000
-    // units on a 100k×100k plane, exact integer distances; coordinates
-    // are a deterministic quadratic scatter of the customer key (a linear
-    // scatter collapses pairwise distances onto the Δkey lattice —
-    // engine-replayable test scaffolding; real callers pass real
-    // coordinates). -----------------------------------------------------
-    "q213_grid_radius_join" -> ((s, dir) =>
-      GeoGrid.radiusPairs(gridRadiusPoints(t(s, dir, "customer"), lit(0L)),
-        "id", col("x"), col("y"), radius = 1000L)),
-
-    // ---- 1-Wasserstein drift between click and view value
-    // distributions on a milli-unit grid — exact-integer earth-mover
-    // complement to q188's KS supremum; same rankedPrefixSum scan shape.
-    "q214_emd_drift" -> ((s, dir) =>
-      Metrics.wassersteinDrift(t(s, dir, "events"), "event_type",
-        floor(col("value") * 1000).cast("long"), "click", "view")),
-
-    // ---- Theil–Sen robust trend per user: lower-median of pairwise
-    // value-vs-time slopes (cents per second ×10⁶) — outlier-immune where
-    // q81's least squares is not. Group-keyed pair join, per-group rank
-    // window; Σ_g n_g² pairs is the estimator's intrinsic cost. ----------
-    "q215_theil_sen" -> ((s, dir) =>
-      Trend.theilSen(t(s, dir, "events"), Seq("user_id"),
-        unix_micros(col("ts")), floor(col("value") * 100).cast("long"),
-        scale = 1000000000000L)),
-
-    // ---- t-closeness audit (k-anon → l-diversity → THIS): per
-    // (mktsegment, nation) class, ordered-EMD distance between the
-    // class's acctbal-bucket distribution and the global one, exact
-    // cross-multiplied integers. ----------------------------------------
-    "q216_t_closeness" -> ((s, dir) =>
-      Audit.tCloseness(t(s, dir, "customer"), Seq("c_mktsegment", "c_nationkey"),
-        floor(col("c_acctbal") / 1000).cast("long"))),
-
-    // ---- Flesch reading-ease per document from exact integer counts
-    // (vowel-run syllables); map-only column math. ----------------------
-    "q217_readability" -> ((s, dir) =>
-      Lexical.readability(t(s, dir, "documents"))),
-
-    // ---- per-user value peaks: strict local maxima over a ±3-row
-    // neighborhood in event order — per-key frames only, never global. --
-    "q218_peaks" -> ((s, dir) =>
-      TimeSeries.peaks(
-        t(s, dir, "events").select(col("user_id"), col("event_id"),
-          unix_millis(col("ts")).as("ms"),
-          round(col("value") * 100).cast("long").as("cents")),
-        "user_id", Seq(col("ms"), col("event_id")), "event_id",
-        col("cents"), w = 3)),
-
-    // ---- CUPED variance-reduced A/B readout: per-user pre-metric (view
-    // spend) soaks variance out of the post-metric (purchase spend);
-    // arms by user-id parity. Integer suff-stats, pinned-order doubles
-    // only in the last mile. --------------------------------------------
-    "q219_cuped" -> ((s, dir) => {
-      val cents = round(col("value") * 100).cast("long")
-      val per = t(s, dir, "events").groupBy(col("user_id"))
-        .agg(
-          sum(when(col("event_type") === "view", cents).otherwise(0L)).as("x"),
-          sum(when(col("event_type") === "purchase", cents).otherwise(0L)).as("y"))
-      Eval.cuped(per, pmod(col("user_id"), lit(2)) === 1, col("x"), col("y"))
-    }),
-
-    // ---- discrete hazard table over purchase "durations": per event
-    // time, risk-set size via one descending rankedPrefixSum — the
-    // Kaplan–Meier ingredients as exact integers. -----------------------
-    "q220_hazard_table" -> ((s, dir) =>
-      TimeSeries.hazardTable(
-        t(s, dir, "events").where(col("event_type") === "purchase"),
-        floor(col("value")),
-        get_json_object(col("props"), "$.k").cast("long") >= 50)),
-
-    // ---- bivariate Mahalanobis scoring: (spend, payload-k) correlation
-    // outliers — exact integer suff-stats broadcast onto a map-only
-    // scoring scan; pinned-order double last mile. ----------------------
-    "q221_mahalanobis" -> ((s, dir) =>
-      Outliers.mahalanobis2d(
-        t(s, dir, "events")
-          .where(get_json_object(col("props"), "$.k").isNotNull),
-        "event_id", floor(col("value")),
-        get_json_object(col("props"), "$.k").cast("long"))),
-
-    // ---- dow×hour activity heatmap per event type: engine-neutral
-    // integer calendar math, one bounded agg + broadcast share join. ----
-    "q222_activity_heatmap" -> ((s, dir) =>
-      TimeSeries.activityProfile(t(s, dir, "events"), "event_type", "ts")),
-
-    // ---- per-user rolling lower-median smoothing over the trailing 5
-    // events — deterministic element pick, per-key frames only. ---------
-    "q223_rolling_median" -> ((s, dir) =>
-      TimeSeries.rollingMedian(
-        t(s, dir, "events").select(col("user_id"), col("event_id"),
-          unix_millis(col("ts")).as("ms"),
-          round(col("value") * 100).cast("long").as("cents")),
-        "user_id", Seq(col("ms"), col("event_id")), "event_id",
-        col("cents"), w = 4)),
-
-    // ---- peak concurrency per event type over [ts, ts+dur) synthetic
-    // sessions (dur = ⌊value⌋+1 s): sweep-line deltas + per-key running
-    // sum — never an interval self-join. --------------------------------
-    "q224_max_concurrency" -> ((s, dir) => {
-      val start = expr("unix_millis(ts) div 1000")
-      TimeSeries.maxConcurrency(
-        t(s, dir, "events").withColumn("__start", start)
-          .withColumn("__end", start + floor(col("value")).cast("long") + lit(1L)),
-        "event_type", col("__start"), col("__end"))
-    }),
-
-    // ---- hapax legomena share per language: type/token counts and the
-    // once-seen vocabulary share — corpus-maturity screen. --------------
-    "q225_hapax" -> ((s, dir) =>
-      Lexical.hapax(t(s, dir, "documents"))),
-
-    // ---- Goh–Barabási burstiness per user over inter-event gaps:
-    // metronome −1 … Poisson 0 … bursts → 1; exact long suff-stats,
-    // pinned-order double last mile. ------------------------------------
-    "q226_burstiness" -> ((s, dir) =>
-      TimeSeries.burstiness(t(s, dir, "events"), "user_id", "ts",
-        tieCols = Seq("event_id"))),
-
-    // ---- multiplicative seasonal index per event type and day-of-month
-    // (the corpus spans one month): cell mean vs type mean in ppm; one
-    // agg + 30-cell broadcast. ------------------------------------------
-    "q227_seasonal_index" -> ((s, dir) =>
-      TimeSeries.seasonalIndex(t(s, dir, "events"), "event_type",
-        dayofmonth(col("ts")), round(col("value") * 100))),
-
-    // ---- Q–Q table click vs view: exact lower-quantile element picks
-    // at nine levels — WHERE the distributions diverge, complementing
-    // q188's KS supremum and q214's EMD mass. ---------------------------
-    "q228_qq_table" -> ((s, dir) =>
-      Metrics.qqTable(t(s, dir, "events"), "event_type",
-        round(col("value") * 100), "click", "view")),
-
-    // ---- L-moment profile per event type: exact rank-weighted P-sums,
-    // integer λ2/λ3 numerators, floor-ppm L-CV and L-skewness. ----------
-    "q229_l_moments" -> ((s, dir) =>
-      Metrics.lMoments(t(s, dir, "events"), Seq("event_type"),
-        floor(col("value")))),
-
-    // ---- sliding event-type trigrams per user: higher-order sequence
-    // mining between q85's pairs and q105's prefix paths. ---------------
-    "q230_path_trigrams" -> ((s, dir) =>
-      Transitions.ngrams(t(s, dir, "events"), "user_id", "event_type",
-        Seq(col("ts"), col("event_id")), k = 3)),
-
-    // ---- pairwise vocabulary Jaccard between sources: the lexical Venn
-    // q148's verbatim 16-word blocks can't see; vocabulary-sized
-    // shuffles only. ----------------------------------------------------
-    "q231_vocab_jaccard" -> ((s, dir) =>
-      Lexical.vocabJaccard(t(s, dir, "documents"))),
-
-    // ---- classical moment profile per event type: exact power sums,
-    // pinned-order skew/kurtosis milli — q229's parametric sibling. -----
-    "q232_moments" -> ((s, dir) =>
-      Metrics.momentStats(t(s, dir, "events"), Seq("event_type"),
-        floor(col("value")))),
-
-    // ---- Gini concentration of spend per event type over the value
-    // distribution itself (q119 is over category counts): rank-weighted
-    // closed form, exact integers. --------------------------------------
-    "q233_value_gini" -> ((s, dir) =>
-      Metrics.valueGini(t(s, dir, "events"), Seq("event_type"),
-        floor(col("value")))),
-
-    // ---- Lorenz curve at decile resolution per event type: cumulative
-    // spend share by population slice — q233's curve. -------------------
-    "q234_lorenz_deciles" -> ((s, dir) =>
-      Metrics.lorenzDeciles(t(s, dir, "events"), Seq("event_type"),
-        round(col("value") * 100))),
-
-    // ---- activity-rank movers: users ranked by event count in each
-    // month half, two range-partitioned rankings joined — the trending
-    // diff without a sampled top-N. -------------------------------------
-    "q235_rank_movers" -> ((s, dir) =>
-      Trend.rankMovers(t(s, dir, "events"), "user_id",
-        when(dayofmonth(col("ts")) <= 15, lit("p1")).otherwise(lit("p2")),
-        "p1", "p2")),
-
-    // ---- weekly pulse check: lag-7 autocorrelation of per-type daily
-    // counts from exact suff-stats. -------------------------------------
-    "q236_autocorr" -> ((s, dir) =>
-      TimeSeries.dailyAutocorrelation(t(s, dir, "events"), "event_type", "ts",
-        lagDays = 7)),
-
-    // ---- one-row dataset card: the release headline numbers, all
-    // exact-integer; corpus collapses to fingerprint-distinct rows
-    // before the multi-distinct Expand. ---------------------------------
-    "q237_dataset_card" -> ((s, dir) =>
-      Audit.datasetCard(t(s, dir, "documents"))),
-
-    // ---- p10/p50/p90 daily value envelope: exact element picks per
-    // integer day; days partition richly. -------------------------------
-    "q238_daily_bands" -> ((s, dir) =>
-      TimeSeries.dailyBands(t(s, dir, "events"), "ts",
-        round(col("value") * 100))),
-
-    // ---- conversion lift per event type vs global (payload k ≥ 50 as
-    // the flag): cross-multiplied all-integer rates. --------------------
-    "q239_segment_lift" -> ((s, dir) =>
-      Audit.segmentLift(t(s, dir, "events"), Seq("event_type"),
-        get_json_object(col("props"), "$.k").cast("long") >= 50)),
-
-    // ---- sample-ratio-mismatch gate on the parity assignment: distinct
-    // units per arm, exact milli chi-square. ----------------------------
-    "q240_srm_check" -> ((s, dir) =>
-      Eval.srmCheck(t(s, dir, "events"), "user_id",
-        pmod(col("user_id"), lit(2)) === 1)),
-
-    // ---- language-ID confusion matrix vs the recorded label: where the
-    // classifier is wrong, not just what it guessed (q14). --------------
-    "q241_lang_confusion" -> ((s, dir) =>
-      Lexical.langConfusion(spread(t(s, dir, "documents")))),
-
-    // ---- blocking-key cost profile for q211's key: block-size classes
-    // with their candidate-pair mass — the pre-join planner read. -------
-    "q242_block_profile" -> ((s, dir) =>
-      FuzzyJoin.blockProfile(t(s, dir, "customer"),
-        substring(col("c_name"), 1, 16))),
-
-    // ---- dwell time per state: inter-event gaps attributed to the
-    // earlier event's type — how long each state HOLDS, where q85
-    // counts what follows. ----------------------------------------------
-    "q243_time_in_state" -> ((s, dir) =>
-      TimeSeries.timeInState(t(s, dir, "events"), "user_id", "event_type",
-        "ts", tieCols = Seq("event_id"))),
-
-    // ---- longest consecutive-day streak per user: gaps-and-islands
-    // over distinct active days, no iteration. --------------------------
-    "q244_daily_streaks" -> ((s, dir) =>
-      TimeSeries.longestStreak(t(s, dir, "events"), "user_id", "ts")),
-
-    // ---- rarity-ranked keywords: each doc's 3 rarest terms by global
-    // df (df order = idf order, no float log) — tf-idf's integer-exact
-    // cousin for routing and clustering seeds. --------------------------
-    "q245_rarest_terms" -> ((s, dir) =>
-      Lexical.rarestTerms(t(s, dir, "documents"), k = 3)),
-
-    // ---- token-sort duplicate keys over part names ("red widget" ≡
-    // "widget red"): the zero-cost ER pass before any edit-distance
-    // join; groups collect ids as a portable sorted string. -------------
-    "q246_token_sort_dups" -> ((s, dir) =>
-      Lexical.tokenSortDups(t(s, dir, "part"), "p_partkey", "p_name")),
-
-    // ---- D1/D7 return rates by first-active day: the growth activation
-    // read at day grain (q83 is the period-grain triangle). -------------
-    "q247_cohort_returns" -> ((s, dir) =>
-      Cohort.dailyReturns(t(s, dir, "events"), "user_id", "ts")),
-
-    // ---- whale check: the event share of the top 1% of users, exact
-    // cut through the range-partitioned ranking. ------------------------
-    "q248_power_share" -> ((s, dir) =>
-      Cohort.powerUserShare(t(s, dir, "events"), "user_id", pctPpm = 10000L)),
-
-    // ---- fulfillment lead time per order priority: order date → first
-    // ship date in exact day integers, with mean and exact p50/p90
-    // element picks (per-priority windows). -----------------------------
-    "q249_fulfillment_lag" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val ship = t(s, dir, "lineitem").groupBy(col("l_orderkey"))
-        .agg(min(col("l_shipdate")).as("__ship"))
-      val lags = t(s, dir, "orders")
-        .join(ship, col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_orderpriority").as("priority"),
-          datediff(col("__ship"), col("o_orderdate")).cast("long").as("__d"))
-      val w = Window.partitionBy(col("priority")).orderBy(col("__d"))
-      lags
-        .withColumn("__rk", row_number().over(w).cast("long"))
-        .withColumn("__n", count(lit(1)).over(Window.partitionBy(col("priority"))))
-        .groupBy(col("priority"))
-        .agg(count(lit(1)).as("n_orders"),
-          expr("(1000L * sum(__d)) div count(1)").as("mean_days_milli"),
-          max(when(col("__rk") === expr("((50 * (__n - 1)) div 100) + 1"), col("__d"))).as("p50_days"),
-          max(when(col("__rk") === expr("((90 * (__n - 1)) div 100) + 1"), col("__d"))).as("p90_days"))
-    }),
-
-    // ---- return rate by part brand: lineitem⋈part with exact ppm
-    // return shares — the classic fact⋈dim quality rollup. --------------
-    "q250_brand_returns" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "part"), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"))
-        .agg(count(lit(1)).as("n_items"),
-          count_if(col("l_returnflag") === "R").as("n_returned"))
-        .withColumn("return_ppm", expr("(1000000L * n_returned) div n_items"))),
-
-    // ---- Mann–Kendall monotone-trend test per event type over the
-    // DAILY count series: all-integer S and pair count, floor-ppm
-    // tau-a; the pair join runs on the days-sized aggregate. -----------
-    "q251_mann_kendall" -> ((s, dir) =>
-      Trend.mannKendall(
-        t(s, dir, "events")
-          .select(col("event_type"),
-            expr("unix_millis(ts) div 1000 div 86400").as("day"))
-          .groupBy(col("event_type"), col("day"))
-          .agg(count(lit(1)).as("c")),
-        Seq("event_type"), col("day"), col("c"))),
-
-    // ---- Kruskal–Wallis k-sample rank test per event type: does the
-    // metric's distribution differ across the day-of-week slices —
-    // ×2-integer midranks, pinned-double H, floor-milli. ---------------
-    "q252_kruskal_wallis" -> ((s, dir) =>
-      Eval.kruskalWallis(
-        t(s, dir, "events")
-          .select(col("event_type"),
-            expr("pmod(unix_millis(ts) div 1000 div 86400 + 4, 7)").as("dow"),
-            round(col("value") * 100).cast("long").as("cents")),
-        Seq("event_type"), col("dow"), col("cents"))),
-
-    // ---- market-basket association rules over order⋈part baskets:
-    // exact pair/item counts, truncated ppm support/confidence and
-    // milli lift; pair expansion bounded by order size. ----------------
-    "q253_assoc_rules" -> ((s, dir) =>
-      Association.rules(t(s, dir, "lineitem"),
-        col("l_orderkey"), col("l_partkey"), minPairCount = 2L)),
-
-    // ---- degree assortativity of the doc-chain graph: hubs-to-hubs
-    // vs hubs-to-leaves in one integer ratio, no sqrt (symmetrized
-    // Pearson over edge endpoint degrees). -----------------------------
-    "q254_assortativity" -> ((s, dir) =>
-      GraphMetrics.degreeAssortativity(docChainPairs(s, dir))),
-
-    // ---- landing-zone type sniffing over deterministically
-    // string-ified event fields: anchored-regex class per value, one
-    // melted hash agg — int/json/datetime/bool/other all exercised. ----
-    "q255_type_sniff" -> ((s, dir) =>
-      Audit.typeSniff(
-        t(s, dir, "events").select(
-          col("event_id").cast("string").as("c_id"),
-          col("event_type").as("c_type"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("c_ts"),
-          col("props").as("c_props"),
-          when(pmod(col("user_id"), lit(2)) === 0, "true").otherwise("false").as("c_flag"),
-          when(col("value") < 50, round(col("value") * 100).cast("long").cast("string"))
-            .as("c_mixed")),
-        Seq("c_id", "c_type", "c_ts", "c_props", "c_flag", "c_mixed"))),
-
-    // ---- best lead/lag between event-type daily curves: ±7-day lag
-    // fan-out on the days-sized table, pinned-double r, one row per
-    // pair with the argmax lag. ----------------------------------------
-    "q256_lead_lag" -> ((s, dir) =>
-      TimeSeries.leadLagCorrelation(t(s, dir, "events"), "event_type", "ts",
-        maxLagDays = 7)),
-
-    // ---- monthly revenue trend per nation WITH fit quality: exact
-    // integer slope parts plus sqrt-free R² (squared Pearson) ppm.
-    // Revenue in WHOLE dollars, not cents: Σy² must stay under 2⁶³ and
-    // monthly-nation revenue in cents squared would pass it at sf ≥ 0.1.
-    "q257_trend_fit" -> ((s, dir) =>
-      Trend.linearFit(
-        t(s, dir, "orders")
-          .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-          .groupBy(col("c_nationkey").as("nation"),
-            (year(col("o_orderdate")) * 12 + month(col("o_orderdate"))).as("m"))
-          .agg(sum(floor(col("o_totalprice")).cast("long")).as("rev")),
-        Seq("nation"), col("m"), col("rev"))),
-
-    // ---- SAX words over per-user daily activity: PAA means of 4-day
-    // windows binned against fixed milli breakpoints — whole-series
-    // shape as a short string, per-key windows only. --------------------
-    "q258_sax" -> ((s, dir) =>
-      TimeSeries.saxSymbols(
-        t(s, dir, "events")
-          .select(col("user_id"),
-            expr("unix_millis(ts) div 1000 div 86400").as("day"))
-          .groupBy(col("user_id"), col("day"))
-          .agg(count(lit(1)).as("c")),
-        Seq("user_id"), Seq(col("day")), col("c"),
-        w = 4, breakpointsMilli = Seq(1500L, 2500L, 4000L))),
-
-    // ---- Gini–Simpson behavioral diversity per user over event types:
-    // exact rational diversity + effective-category count. --------------
-    "q259_simpson" -> ((s, dir) =>
-      Metrics.simpsonDiversity(t(s, dir, "events"), Seq("user_id"),
-        col("event_type"))),
-
-    // ---- bottom-k (KMV) sketch Jaccard between source vocabularies:
-    // the fixed-memory estimate next to q231's exact matrix — md5
-    // bottom-256 per source, union-rank per pair. ----------------------
-    "q260_bottomk_jaccard" -> ((s, dir) =>
-      Dedup.bottomKJaccard(
-        t(s, dir, "documents")
-          .select(col("source"),
-            explode(split(lower(coalesce(col("text"), lit(""))), "\\s+")).as("tok"))
-          .where(length(col("tok")) > 0),
-        "source", col("tok"), k = 256)),
-
-    // ---- Average Precision @ 20 of the per-type user ranking against
-    // the deterministic id%3 relevance rule: per-term truncated-ppm
-    // P@i, one per-query window. ---------------------------------------
-    "q261_avg_precision" -> ((s, dir) =>
-      Eval.averagePrecision(
-        t(s, dir, "events").groupBy(col("event_type"), col("user_id"))
-          .agg(count(lit(1)).as("n")),
-        Seq("event_type"), Seq(col("n").desc, col("user_id")),
-        pmod(col("user_id"), lit(3)) === 0, k = 20)),
-
-    // ---- common-neighbor Jaccard link scoring on the q79/q199 co-order
-    // part graph: wedge-join candidates (capped), exact degrees,
-    // is_edge flag — predict where the high-score non-edges are. --------
-    "q262_link_jaccard" -> ((s, dir) =>
-      GraphMetrics.linkJaccard(partPairs(s, dir), maxDegree = 64)
-        .where(col("n_common") >= 2)),
-
-    // ---- co-missingness matrix over sparse derived attributes: does
-    // payload-k, purchase flag, and the id-cohort tag vanish together —
-    // one single-row agg, stack-melted. ---------------------------------
-    "q263_conull" -> ((s, dir) =>
-      Audit.coMissingness(
-        t(s, dir, "events").select(
-          when(get_json_object(col("props"), "$.k").cast("long") % 2 === 0,
-            get_json_object(col("props"), "$.k").cast("long")).as("k_even"),
-          when(col("event_type") === "purchase", lit(1L)).as("purchase_flag"),
-          when(col("user_id") % 5 === 0, col("user_id")).as("cohort_tag")),
-        Seq("k_even", "purchase_flag", "cohort_tag"))),
-
-    // ---- weekly stickiness (mean-DAU / WAU): one distinct triple pass,
-    // engine-neutral week/day integers. ---------------------------------
-    "q264_stickiness" -> ((s, dir) =>
-      Cohort.stickiness(t(s, dir, "events"), "user_id", "ts")),
-
-    // ---- hashing-trick collision profile of the document vocabulary:
-    // 256 md5-prefix buckets, bucket-load histogram. --------------------
-    "q265_hash_profile" -> ((s, dir) =>
-      Audit.hashBucketProfile(
-        t(s, dir, "documents")
-          .select(explode(split(lower(coalesce(col("text"), lit(""))), "\\s+")).as("tok"))
-          .where(length(col("tok")) > 0),
-        col("tok"), prefixLen = 2)),
-
-    // ---- harmonic centrality at radius 2 on the co-order part graph:
-    // q89's exact counts finished with 1/d weights. ---------------------
-    "q266_harmonic" -> ((s, dir) =>
-      GraphMetrics.harmonicCentrality2(partPairs(s, dir), maxDegree = 64)),
-
-    // ---- exact audience overlap between event-type segments: Jaccard +
-    // overlap coefficient per pair, actor-keyed self-join. --------------
-    "q267_audience_overlap" -> ((s, dir) =>
-      Cohort.audienceOverlap(t(s, dir, "events"), "event_type", "user_id")),
-
-    // ---- Unicode NFC hygiene audit per language: native normalizer
-    // kernel, map-side flags into one group agg. ------------------------
-    "q268_nfc_audit" -> ((s, dir) =>
-      Lexical.unicodeAudit(t(s, dir, "documents"), Seq("lang"), col("text"))),
-
-    // ---- phonetic blocking-key profile over part names: the native
-    // separator-variant Soundex kernel; per code, block sizes that bound
-    // the fuzzy-verify fan-in. ------------------------------------------
-    "q269_soundex" -> ((s, dir) =>
-      t(s, dir, "part")
-        .select(TextFunctions.soundexSep(col("p_name")).as("sx"), col("p_name"))
-        .groupBy(col("sx"))
-        .agg(count(lit(1)).as("n_parts"),
-          countDistinct(col("p_name")).as("n_distinct_names"))),
-
-    // ---- daily OHLC candles per event type over value cents: exact
-    // first/last picks on a pinned total order. --------------------------
-    "q270_ohlc" -> ((s, dir) =>
-      TimeSeries.ohlc(
-        t(s, dir, "events")
-          .select(col("event_type"), col("ts"), col("event_id"),
-            round(col("value") * 100).cast("long").as("cents"),
-            unix_millis(col("ts")).as("ms")),
-        Seq("event_type"), expr("unix_millis(ts) div 1000 div 86400"),
-        Seq(col("ms"), col("event_id")), col("cents"))),
-
-    // ---- orders→lineitem fan-out profile: exact p50/p90 children per
-    // order off the histogram prefix-sum, one-row report. ----------------
-    "q271_fanout" -> ((s, dir) =>
-      Audit.fanoutProfile(t(s, dir, "lineitem"), col("l_orderkey"))),
-
-    // ---- Unicode script profile per language: explicit-range char
-    // classes (the Java-regex/RE2-identical subset), mixed-script
-    // routing-bug detector. ----------------------------------------------
-    "q272_script_profile" -> ((s, dir) =>
-      Lexical.scriptProfile(t(s, dir, "documents"), Seq("lang"), col("text"))),
-
-    // ---- single least-SSE changepoint over each event type's daily
-    // count series: binary segmentation's first cut, all-integer costs,
-    // deterministic argmin. ----------------------------------------------
-    "q273_changepoint" -> ((s, dir) =>
-      TimeSeries.varianceChangepoint(
-        t(s, dir, "events")
-          .select(col("event_type"),
-            expr("unix_millis(ts) div 1000 div 86400").as("day"))
-          .groupBy(col("event_type"), col("day"))
-          .agg(count(lit(1)).as("c")),
-        Seq("event_type"), Seq(col("day")), col("c"))),
-
-    // ---- embedding hygiene audit per label: dim consistency, zero /
-    // non-finite vectors, quantized-norm spread — one map-side fold
-    // pass, no explode. --------------------------------------------------
-    "q274_embedding_audit" -> ((s, dir) =>
-      Similarity.embeddingAudit(t(s, dir, "embeddings"))),
-
-    // ---- weighted Jaccard between source vocabularies over token
-    // COUNTS (q231's set version, distribution-aware): common tokens
-    // only, Σmax by identity. --------------------------------------------
-    "q275_weighted_jaccard" -> ((s, dir) =>
-      Lexical.weightedJaccard(
-        t(s, dir, "documents")
-          .select(col("source"),
-            explode(split(lower(coalesce(col("text"), lit(""))), "\\s+")).as("tok"))
-          .where(length(col("tok")) > 0),
-        "source", col("tok"))),
-
-    // ---- log template mining over synthesized event log lines: hex
-    // then digit masking, per-template counts with deterministic
-    // examples. ----------------------------------------------------------
-    "q276_log_templates" -> ((s, dir) =>
-      Lexical.logTemplates(
-        t(s, dir, "events").select(
-          concat(col("event_type"), lit(" user="), col("user_id"),
-            lit(" took "), floor(col("value")).cast("long"), lit("ms"),
-            lit(" props="), col("props")).as("msg")),
-        col("msg"))),
-
-    // ---- cohort LTV curve over orders: first-order cohort month, age,
-    // active counts, exact cumulative revenue per cohort member. --------
-    "q277_ltv_curve" -> ((s, dir) =>
-      Cohort.ltvCurve(
-        t(s, dir, "orders"),
-        "o_custkey",
-        (year(col("o_orderdate")) * 12 + month(col("o_orderdate"))).cast("long"),
-        round(col("o_totalprice") * 100).cast("long"))),
-
-    // ---- floor-at-zero credit balance per user: purchases draw 3×,
-    // everything else accrues — the sequential clamp as two windows
-    // (Skorokhod reflection), plus the lost-to-floor shortfall. ---------
-    "q278_clamped_balance" -> ((s, dir) =>
-      TimeSeries.clampedBalance(
-        t(s, dir, "events")
-          .select(col("user_id"), col("event_id"), unix_millis(col("ts")).as("ms"),
-            when(col("event_type") === "purchase",
-              lit(-3L) * floor(col("value")).cast("long"))
-              .otherwise(floor(col("value")).cast("long")).as("d")),
-        Seq("user_id"), Seq(col("ms"), col("event_id")), col("d"))
-        .select(col("user_id"), col("event_id"), col("delta"), col("balance"),
-          col("shortfall"))),
-
-    // ---- net/gross revenue retention per month over orders: lag-1
-    // customer self-join from the prior-month base. ---------------------
-    "q279_revenue_retention" -> ((s, dir) =>
-      Cohort.revenueRetention(
-        t(s, dir, "orders"),
-        "o_custkey",
-        (year(col("o_orderdate")) * 12 + month(col("o_orderdate"))).cast("long"),
-        round(col("o_totalprice") * 100).cast("long"))),
-
-    // ---- weekly growth accounting over events: new / retained /
-    // resurrected / churned + quick ratio. ------------------------------
-    "q280_growth_accounting" -> ((s, dir) =>
-      Cohort.growthAccounting(t(s, dir, "events"), "user_id", "ts")),
-
-    // ---- interval-overlap join: order fulfillment windows × a sampled
-    // incident grid — bucket equi-join, first-shared-cell dedup-free
-    // matching, exact overlap micros. -----------------------------------
-    "q281_interval_overlap" -> ((s, dir) => {
-      val a = t(s, dir, "orders").where(col("o_orderkey") % 50 === 0)
-        .select(col("o_orderkey").as("a_id"), col("o_orderdate").as("a_start"),
-          (col("o_orderdate") + expr("INTERVAL 3 DAYS")).as("a_end"))
-      val b = t(s, dir, "orders").where(col("o_orderkey") % 70 === 0)
-        .select(col("o_orderkey").as("b_id"),
-          (col("o_orderdate") + expr("INTERVAL 1 DAY")).as("b_start"),
-          (col("o_orderdate") + expr("INTERVAL 4 DAYS")).as("b_end"))
-      IntervalJoin.overlapPairs(a, "a_start", "a_end", b, "b_start", "b_end",
-          bucketWidthSec = 3 * 86400L)
-        .select(col("a_id"), col("b_id"), col("overlap_micros"))
-    }),
-
-    // ---- rolling 7-point regression slope of each type's daily count
-    // series: one frame window, exact integer suff-stats. ---------------
-    "q282_rolling_slope" -> ((s, dir) =>
-      TimeSeries.rollingSlope(
-        t(s, dir, "events")
-          .select(col("event_type"),
-            expr("unix_millis(ts) div 1000 div 86400").as("day"))
-          .groupBy(col("event_type"), col("day"))
-          .agg(count(lit(1)).as("c")),
-        Seq("event_type"), col("day"), col("c"), w = 7)),
-
-    // ---- k-anonymity cell suppression (the release transform next to
-    // q152's audit): small quasi classes null out, flagged. -------------
-    "q283_k_suppress" -> ((s, dir) =>
-      Audit.kSuppress(
-        t(s, dir, "events")
-          .select(col("event_id"), col("event_type"),
-            expr("cast(get_json_object(props, '$.k') as bigint) div 10").as("k_band"),
-            pmod(col("user_id"), lit(25)).as("cohort")),
-        Seq("event_type", "k_band", "cohort"), k = 4)),
-
-    // ---- unordered activation funnel: did each user ever view, click
-    // AND purchase — and how long did the full set take. ----------------
-    "q284_set_completion" -> ((s, dir) =>
-      Funnel.setCompletion(t(s, dir, "events"), "user_id", col("event_type"),
-        "ts", Seq("view", "click", "purchase"))),
-
-    // ---- rich-club coefficient ladder on the co-order part graph: do
-    // the hub parts wire to each other. ---------------------------------
-    "q285_rich_club" -> ((s, dir) =>
-      GraphMetrics.richClub(partPairs(s, dir),
-        thresholds = Seq(4L, 8L, 16L, 24L, 32L))),
-
-    // ---- stylometric cosine between sources over function-word
-    // frequency vectors; pinned-double cosine last mile. ----------------
-    "q286_stylometry" -> ((s, dir) =>
-      Lexical.stylometricCosine(t(s, dir, "documents"), "source", col("text"))),
-
-    // ---- mix-shift decomposition of the purchase rate between month
-    // halves, by event-type segment: traffic-mix vs per-segment rate. ---
-    "q287_mix_shift" -> ((s, dir) =>
-      Metrics.mixShift(
-        t(s, dir, "events")
-          .withColumn("half", when(dayofmonth(col("ts")) <= 15, "h1").otherwise("h2")),
-        "event_type", col("half"), "h1", "h2",
-        get_json_object(col("props"), "$.k").cast("long") >= 50)),
-
-    // ---- ABC classification of parts by lineitem revenue: labeled
-    // working-set split off the range-partitioned cumulative curve. -----
-    "q288_abc_class" -> ((s, dir) =>
-      Metrics.abcClassification(
-        t(s, dir, "lineitem"),
-        "l_partkey",
-        round(col("l_extendedprice") * 100).cast("long"))),
-
-    // ---- seasonality-aware outliers: dow-median baseline per event
-    // type, then the MAD fence on residuals — exact picks only. ---------
-    "q289_seasonal_outliers" -> ((s, dir) =>
-      Outliers.seasonalResidualOutliers(
-        t(s, dir, "events").select(col("event_type"), col("event_id"), col("ts"),
-          round(col("value") * 100).cast("long").as("cents")),
-        Seq("event_type"), "ts", col("cents"))
-        .select(col("event_type"), col("event_id"), col("cents"), col("baseline"),
-          col("residual"), col("med_residual"), col("mad"), col("is_outlier"))),
-
-    // ---- spend-decile migration between month halves: two denseIds
-    // rankings, full-outer flow matrix with −1 entry/exit rows. ---------
-    "q290_decile_migration" -> ((s, dir) =>
-      Cohort.decileMigration(
-        t(s, dir, "events"),
-        "user_id",
-        when(dayofmonth(col("ts")) <= 15, "p1").otherwise("p2"),
-        "p1", "p2",
-        round(col("value") * 100).cast("long"))),
-
-    // ---- SLO compliance + burn rate per event type: "error" events
-    // spend the 99% budget; rolling 7-day windows. ----------------------
-    "q291_slo_burn" -> ((s, dir) =>
-      TimeSeries.sloBurn(
-        t(s, dir, "events").withColumn("__src", col("user_id") % 2),
-        Seq("__src"), "ts", col("event_type") =!= "error",
-        windowDays = 7, objectivePpm = 990000L)
-        .withColumnRenamed("__src", "src")),
-
-    // ---- candidate-key discovery over lineitem: which column subsets
-    // actually identify rows — one Expand agg, stack-melted. ------------
-    "q292_candidate_keys" -> ((s, dir) =>
-      Audit.candidateKeys(t(s, dir, "lineitem"), Seq(
-        Seq("l_orderkey"),
-        Seq("l_orderkey", "l_linenumber"),
-        Seq("l_partkey", "l_suppkey"),
-        Seq("l_orderkey", "l_partkey", "l_suppkey")))),
-
-    // ---- inter-label centroid separation on the embeddings: truncating
-    // quantized means, exact pairwise distance² over labels×dim rows. ---
-    "q293_centroid_separation" -> ((s, dir) =>
-      Similarity.centroidSeparation(t(s, dir, "embeddings"))),
-
-    // ---- burst detection: 3 same-type events from one user inside 10
-    // minutes — per-user rollup of completed bursts. --------------------
-    "q294_bursts" -> ((s, dir) =>
-      TimeSeries.bursts(t(s, dir, "events"), Seq("user_id"), col("event_type"),
-          "ts", k = 3, windowSec = 600L)
-        .groupBy(col("user_id"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          count_if(col("is_burst_end")).as("n_bursts"))),
-
-    // ---- daily vocabulary retention over document text: drops and
-    // entries per day, source-change early warning. ---------------------
-    "q295_vocab_retention" -> ((s, dir) =>
-      Lexical.vocabRetention(
-        t(s, dir, "documents")
-          .select((col("doc_id") % 20).as("day"),
-            explode(split(lower(coalesce(col("text"), lit(""))), "\\s+")).as("tok"))
-          .where(length(col("tok")) > 0),
-        col("day"), col("tok"))),
-
-    // ---- natural-breaks banding of order totals: 6 classes at the 5
-    // widest gaps between distinct cent values. --------------------------
-    "q296_gap_breaks" -> ((s, dir) =>
-      Normalize.naturalBreaks(
-        t(s, dir, "orders").select(round(col("o_totalprice") * 100).cast("long").as("c")),
-        col("c"), k = 6)),
-
-    // ---- intra-document half-overlap: does the back half restate the
-    // front — map-side template detector. -------------------------------
-    "q297_half_overlap" -> ((s, dir) =>
-      Lexical.halfVocabOverlap(t(s, dir, "documents"), "doc_id", col("text"))),
-
-    // ---- per-user silence audit over 2-day threshold: longest gap,
-    // silence count, silent-now flag at the corpus horizon. -------------
-    "q298_silences" -> ((s, dir) =>
-      TimeSeries.silences(t(s, dir, "events"), Seq("user_id"), "ts",
-        thresholdDays = 2L)),
-
-    // ---- order-header vs line-sum reconciliation in whole cents
-    // against the deterministic 7/10ths rule baked into the check:
-    // headers never equal line sums in this synthetic data, so the
-    // mismatch distribution itself is the verified output. --------------
-    "q299_reconcile" -> ((s, dir) =>
-      Audit.reconcileTotals(
-        t(s, dir, "orders"), "o_orderkey",
-        round(col("o_totalprice") * 100).cast("long"),
-        t(s, dir, "lineitem"), "l_orderkey",
-        round(col("l_extendedprice") * 100).cast("long"),
-        tolerancePpm = 800000L)),
-
-    // ---- the corpus release gate: four named checks, one audit-trail
-    // table — the composite the whole hygiene suite feeds. --------------
-    "q300_release_gate" -> ((s, dir) =>
-      Audit.releaseGate(t(s, dir, "documents"), col("text"), col("source"))),
-
-    // ---- q291's SLO burn on CALENDAR days: the input keeps only every
-    // third day (guaranteed gaps), so the densified path materializes
-    // zero-event days and the 7-day window ages on wall-clock, not on
-    // active rows — the semantics q291's active-days frame cannot give
-    // a sparse series. -------------------------------------------------
-    "q301_slo_calendar" -> ((s, dir) =>
-      TimeSeries.sloBurn(
-        t(s, dir, "events")
-          .withColumn("__src", col("user_id") % 2)
-          .where(expr("unix_millis(cast(ts as timestamp)) div 1000 div 86400 % 3") === 0),
-        Seq("__src"), "ts", col("event_type") =!= "error",
-        windowDays = 7, objectivePpm = 990000L, calendarDays = true)
-        .withColumnRenamed("__src", "src")),
-
-    // ---- the flagship three-way correlate through the SALTED skew path
-    // (per-row salt on the hot-trace join, span side replicated): the
-    // result multiset must equal the plain plan's exactly — this query
-    // keeps that identity under the hash oracle, not just a unit test. --
-    "q302_skew_correlate" -> ((s, dir) => {
-      val ev = t(s, dir, "orders").select(
-        col("o_custkey").cast("string").as("clientId"),
-        col("o_orderkey").cast("string").as("traceId"))
-      val spans = t(s, dir, "lineitem")
-        .select(col("l_orderkey").cast("string").as("traceId"),
-          concat_ws("_", col("l_orderkey"), col("l_linenumber")).as("spanId"))
-        .groupBy("traceId").agg(collect_list(struct(col("spanId"))).as("spans"))
-      val logs = t(s, dir, "lineitem").select(
-        concat_ws("_", col("l_orderkey"), col("l_linenumber")).as("spanId"),
-        col("l_returnflag").as("eventType"))
-      Correlate.skewSafe(ev, spans, logs)
-        .groupBy("clientId")
-        .agg(count(lit(1)).as("n_correlated"),
-          count_if(col("logEventType") === "R").as("n_returned"))
-    }),
-
-    // ---- integer HITS on the DIRECTED doc-chain graph: hub/authority
-    // separation PageRank's single score conflates; two synchronous
-    // rounds, max-normalized in exact integers (oracle unrolls both). --
-    "q303_hits" -> ((s, dir) =>
-      GraphMetrics.hits(docChainPairs(s, dir), "a_id", "b_id", iterations = 2)),
-
-    // ---- 5-truss of the co-order part graph: edge-level cohesion one
-    // notch above q172's k-core (only edges embedded in >=3 triangles
-    // within the surviving subgraph), reported as a support histogram
-    // with id-sum fingerprints. Oracle is PINNED from an independent
-    // driver-side reference peeler (tools/pin_ktruss.py) — peeling is
-    // not expressible in one SQL pass. ---------------------------------
-    "q304_ktruss" -> ((s, dir) =>
-      GraphMetrics.kTruss(partPairs(s, dir), k = 5)
-        .groupBy("support")
-        .agg(count(lit(1)).as("n_edges"),
-          sum(col("a_id")).as("sum_a"), sum(col("b_id")).as("sum_b"))),
-
-    // ---- Borůvka minimum spanning forest of the co-order part graph
-    // (weight = inverse co-order count — strong affinities are cheap),
-    // reported as per-component-size invariants: every correct MSF
-    // implementation agrees on edge count and total weight per
-    // component even under weight ties, so the PINNED oracle (an
-    // independent Python Kruskal, tools/pin_msf.py) is tie-safe. The
-    // (order, part) dedup mirrors the reference's set semantics. ------
-    "q305_spanning_forest" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").where(col("l_partkey") % 4 === 0)
-        .select(col("l_orderkey"), col("l_partkey")).distinct()
-      val weighted = li.alias("a")
-        .join(li.alias("b"),
-          col("a.l_orderkey") === col("b.l_orderkey") &&
-            col("a.l_partkey") < col("b.l_partkey"))
-        .groupBy(col("a.l_partkey").as("a_id"), col("b.l_partkey").as("b_id"))
-        .agg(expr("1000000L div count(1)").as("weight"))
-      val forest = SpanningForest.boruvka(weighted)
-      forest
-        .join(Components.connectedComponents(forest.select(col("a_id"), col("b_id")))
-          .withColumnRenamed("id", "a_id"), Seq("a_id"))
-        .groupBy("component")
-        .agg(count(lit(1)).as("__ne"), sum(col("weight")).as("__tw"))
-        .groupBy(col("__ne").as("n_edges"))
-        .agg(count(lit(1)).as("n_components"), sum(col("__tw")).as("sum_weight"))
-    }),
-
-    // ---- single-linkage clustering read off the Borůvka forest: weight
-    // the doc-chain graph deterministically, build the MSF ONCE, cut at
-    // the threshold. The oracle replays the DEFINITION instead (recursive
-    // components over the graph's <=threshold edges) — the two agree by
-    // the MSF minimax-path property, which holds for ANY minimum forest
-    // even under weight ties, so this is a strong engine-neutral check of
-    // the whole forest->threshold->components pipeline, not a pin. ------
-    "q306_single_linkage" -> ((s, dir) => {
-      val weighted = docChainPairs(s, dir)
-        .withColumn("weight", (col("a_id") * 7 + col("b_id") * 13) % 100)
-      SpanningForest.singleLinkage(weighted, threshold = 50)
-    }),
-
-    // ---- q304's truss peel consumed at its operator-boundary aggregate:
-    // only the (support, n_edges) histogram ever crosses to the caller —
-    // the shape a 100 TB cohesion profile would ship. Same pinned
-    // cross-implementation oracle as q304 (tools/pin_ktruss.py). --------
-    "q307_truss_histogram" -> ((s, dir) =>
-      GraphMetrics.kTrussSupportHistogram(partPairs(s, dir), k = 5)),
-
-    // ---- full core decomposition of the co-order part graph: per-node
-    // coreness via the distributed h-index fixpoint, reported as a
-    // (coreness, n_nodes, sum_ids) histogram. Oracle is PINNED from an
-    // independent sequential min-degree peel (tools/pin_coreness.py) —
-    // a structurally different algorithm, so agreement is a true
-    // cross-implementation check; `CorenessSpec` replays random graphs
-    // against a Scala peeler. ------------------------------------------
-    "q308_coreness" -> ((s, dir) =>
-      GraphMetrics.coreDecomposition(partPairs(s, dir))
-        .groupBy("coreness")
-        .agg(count(lit(1)).as("n_nodes"), sum(col("id")).as("sum_ids"))),
-
-    // ---- Newman modularity of a block partition of the doc-chain graph
-    // (community = id div 64): per-community internal edges, degree mass
-    // and exact ppm contribution — the partition-quality score for
-    // whatever labeling a pipeline produced. Fully SQL-replayable (the
-    // oracle recomputes the definition; division forced to truncate like
-    // Spark's div). -----------------------------------------------------
-    "q309_modularity" -> ((s, dir) => {
-      val e = docChainPairs(s, dir)
-      val nodes = e.select(col("a_id").as("id"))
-        .union(e.select(col("b_id").as("id"))).distinct()
-      GraphMetrics.modularity(e, nodes.withColumn("community", expr("id div 64")))
-    }),
-
-    // ---- exact BFS closeness from a deterministic source slice (every
-    // 5th chain anchor) of the doc-chain graph: per source, reach count,
-    // shortest-distance sum and integer closeness. The oracle replays
-    // the BFS exactly (recursive CTE, min dist per (source, node), the
-    // same depth bound) — exact distances from sampled sources is the
-    // scalable closeness trade; all-pairs BFS is O(n·m). -----------------
-    "q310_closeness" -> ((s, dir) =>
-      GraphMetrics.multiSourceCloseness(
-        docChainPairs(s, dir),
-        t(s, dir, "documents").where(col("doc_id") % 100 === 0)
-          .select(col("doc_id").as("id")),
-        maxDepth = 8)),
-
-    // ---- time-respecting reachability over the order event graph:
-    // customer→supplier edges fire on the order date, supplier→customer
-    // back-edges a day later, and a chain is valid only if edge times
-    // never decrease — the influence-path semantics static reachability
-    // gets wrong on event data. Earliest arrival per (source, node),
-    // aggregated per source. Oracle unrolls the 3-hop min-arrival DP
-    // stage by stage (a naive recursive closure would carry every
-    // distinct arrival per node and explode on hub suppliers). ---------
-    "q311_temporal_reach" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"),
-        datediff(col("o_orderdate"), lit("1970-01-01")).cast("long").as("d"))
-      val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-      val fwd = o.join(li, col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"),
-          col("d").as("t"))
-      val edges = fwd.unionByName(
-        fwd.select(col("dst").as("src"), col("src").as("dst"), (col("t") + 1).as("t")))
-      val sources = o.where(col("o_custkey") % 100 === 0)
-        .select((col("o_custkey") * 2).as("id")).distinct()
-      GraphMetrics.temporalReachability(edges, sources, maxHops = 3)
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_reached"), min(col("arr")).as("first_contact"),
-          sum(col("arr")).as("sum_arrival"))
-    }),
-
-    // ---- deterministic random walks (DeepWalk corpus prep) over the
-    // doc-chain graph: every 100th doc starts a 4-step walk; each hop
-    // picks the neighbor minimizing (md5(walk:step:nbr), nbr) — a
-    // content-addressed coin flip, so the corpus is a pure function of
-    // the graph and DuckDB replays every hop bit-for-bit (md5 hex
-    // ordering is engine-portable, the Sampling contract). -------------
-    "q312_random_walks" -> ((s, dir) =>
-      GraphMetrics.randomWalks(
-        docChainPairs(s, dir),
-        t(s, dir, "documents").where(col("doc_id") % 100 === 0)
-          .select(col("doc_id").as("id")),
-        steps = 4)),
-
-    // ---- double-sweep diameter bound on the doc-chain graph from
-    // anchor 20: BFS out, pivot to the farthest node (ONE row to the
-    // driver), BFS back — the second eccentricity is the classic
-    // diameter lower bound at 2 BFS instead of O(n·m) all-pairs. ------
-    "q313_double_sweep" -> ((s, dir) =>
-      GraphMetrics.doubleSweep(docChainPairs(s, dir), startId = 20L, maxDepth = 16)),
-
-    // ---- resource-allocation link prediction over the part co-order
-    // graph (same graph as q262): shared rare neighbors outweigh shared
-    // hubs via the exact rational weight 1e9 div deg(w) — the RA index,
-    // integer-exact where Adamic-Adar's log is not. --------------------
-    "q314_link_ra" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .where(col("l_partkey") % 4 === 0)
-        .select(col("l_orderkey"), col("l_partkey"))
-      val pairs = li.alias("a")
-        .join(li.alias("b"),
-          col("a.l_orderkey") === col("b.l_orderkey") &&
-            col("a.l_partkey") < col("b.l_partkey"))
-        .select(col("a.l_partkey").as("a_id"), col("b.l_partkey").as("b_id"))
-      GraphMetrics.linkResourceAllocation(pairs, maxDegree = 64, minCommon = 2L)
-    }),
-
-    // ---- temporal relay census over the q311 order event graph: per
-    // middle node, time-respecting u→v→w pairs within a 7-day window —
-    // the basic temporal motif a static 2-path count gets wrong. The
-    // time predicates are FILTERS on the node-keyed hash join, so the
-    // plan stays an equi-join at any scale; maxEvents = 64 caps a hub
-    // supplier's in×out blow-up at 64² pairs (earliest-first, the
-    // documented deterministic truncation the oracle replays). ---------
-    "q315_temporal_relay" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"),
-        datediff(col("o_orderdate"), lit("1970-01-01")).cast("long").as("d"))
-      val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-      val fwd = o.join(li, col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"),
-          col("d").as("t"))
-      val edges = fwd.unionByName(
-        fwd.select(col("dst").as("src"), col("src").as("dst"), (col("t") + 1).as("t")))
-      GraphMetrics.temporalRelayCount(edges, delta = 7L, maxEvents = 64)
-    }),
-
-    // ---- sampled Brandes betweenness over a runged doc-chain graph:
-    // the chain plus one (a+2)—(a+5) rung per anchor, so shortest-path
-    // counts genuinely exceed 1 (σ(a+2) = 2 from its anchor) and the
-    // backward pass exercises the σ_v/σ_w traffic split — a pure-chain
-    // graph would leave every ratio at 1 and test nothing. Sources =
-    // every chain anchor; depth-4 balls cross the a%40 bridges, so
-    // inter-component broker nodes (the bridge endpoints) surface with
-    // the highest bc_e9, which is exactly what betweenness is FOR. ----
-    "q316_betweenness" -> ((s, dir) => {
-      val b = t(s, dir, "documents").where(col("doc_id") % 20 === 0)
-        .select(col("doc_id").as("a"))
-      val pairs = b.select(col("a").as("a_id"), (col("a") + 1).as("b_id"))
-        .union(b.select((col("a") + 1).as("a_id"), (col("a") + 2).as("b_id")))
-        .union(b.select(col("a").as("a_id"), (col("a") + 5).as("b_id")))
-        .union(b.select((col("a") + 2).as("a_id"), (col("a") + 5).as("b_id")))
-        .union(b.where(col("a") % 40 === 0)
-          .select((col("a") + 5).as("a_id"), (col("a") + 22).as("b_id")))
-      GraphMetrics.betweennessSampled(
-        pairs, b.select(col("a").as("id")), maxDepth = 4)
-    }),
-
-    // ---- GPT-style concat-and-chunk sequence packing: the corpus laid
-    // end-to-end in doc-id order, sliced every 256 tokens, documents
-    // spanning boundaries — one global prefix sum then map-only
-    // arithmetic, the zero-padding packing a pretraining run feeds on. --
-    "q317_concat_chunk" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        TextFunctions.tokenCount(col("text")).as("n_tokens"))
-      SequencePack.concatChunk(d, windowSize = 256)
-    }),
-
-    // ---- next-fit whole-document packing at capacity 1024 (max doc is
-    // ~100 tokens at base scale and ~400 in the sf1 smoke's
-    // tag-prefixed replicas, so the n ≤ C contract holds with headroom
-    // at every scale the suite runs): exact sequential-greedy window
-    // assignment computed via the jump-function orbit in
-    // O(log #windows) pointer-doubling rounds — no sequential scan
-    // anywhere; the oracle walks the same recurrence with a recursive
-    // CTE. ---------------------------------------------------------------
-    "q318_pack_nextfit" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        TextFunctions.tokenCount(col("text")).as("n_tokens"))
-      SequencePack.nextFitWindows(d, capacity = 1024)
-    }),
-
-    // ---- incremental connected components (the daily crawl increment):
-    // yesterday's doc-chain clustering folded with today's new links —
-    // (a+2)—(a+20) for every third anchor — WITHOUT re-reading the old
-    // edge list; old components enter as min-id stars, so the merge is
-    // bit-identical to recomputing from scratch (the oracle does exactly
-    // that over the union graph). ---------------------------------------
-    "q319_incremental_components" -> ((s, dir) => {
-      val prev = Components.connectedComponents(docChainPairs(s, dir))
-      val fresh = t(s, dir, "documents").where(col("doc_id") % 60 === 0)
-        .select((col("doc_id") + 2).as("a_id"), (col("doc_id") + 20).as("b_id"))
-      Components.mergeIncrement(prev, fresh)
-    }),
-
-    // ---- Bradley–Terry preference strengths over supplier duels: each
-    // order's first two line items stage a head-to-head (bigger quantity
-    // wins, ties to the smaller player id), 100 players via suppkey%100,
-    // two MM iterations in scaled truncating integers — the
-    // preference-data curation primitive, replayed by the oracle with
-    // the iterations unrolled. --------------------------------------------
-    "q320_bradley_terry" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").where(col("l_linenumber") <= 2)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          (col("l_suppkey") % 100).as("p"), col("l_quantity").cast("long").as("q"))
-      val a = li.where(col("l_linenumber") === 1)
-        .select(col("l_orderkey").as("ok"), col("p").as("pa"), col("q").as("qa"))
-      val b = li.where(col("l_linenumber") === 2)
-        .select(col("l_orderkey").as("ok"), col("p").as("pb"), col("q").as("qb"))
-      val aWins = col("qa") > col("qb") ||
-        (col("qa") === col("qb") && col("pa") < col("pb"))
-      val duels = a.join(b, Seq("ok")).where(col("pa") =!= col("pb"))
-        .select(when(aWins, col("pa")).otherwise(col("pb")).as("winner"),
-          when(aWins, col("pb")).otherwise(col("pa")).as("loser"))
-      Eval.bradleyTerry(duels, iterations = 2)
-    }),
-
-    // ---- Duffield priority sampling: 200 documents drawn ∝ token count
-    // without replacement, each carrying the max(w, τ) estimator weight —
-    // subsample the corpus AND keep unbiased token-mass estimates. The
-    // uniform is the md5 contract, so the drawn set is a pure function of
-    // the corpus and the oracle replays it row for row. ------------------
-    "q321_priority_sample" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        TextFunctions.tokenCount(col("text")).as("n_tokens"))
-      Sampling.prioritySample(d, k = 200, weightCol = "n_tokens")
-    }),
-
-    // ---- word2vec-style skip-gram co-occurrence: symmetric window-3
-    // pair census over the corpus, minCount pruning the hapax tail at
-    // the aggregation (map-only pair stream, vocabulary-sized shuffle).
-    "q322_skipgrams" -> ((s, dir) =>
-      Ngrams.skipGrams(t(s, dir, "documents"), window = 3, minCount = 5L)),
-
-    // ---- PPMI-monotone association lift in exact fixed point over the
-    // window-2 skip-gram matrix: marginals from the FULL matrix,
-    // reported pairs pruned at n >= 20. lift_e6 > 1e6 <=> PMI > 0.
-    "q323_skipgram_lift" -> ((s, dir) =>
-      Ngrams.skipGramLift(t(s, dir, "documents"), window = 2, minCount = 20L)),
-
-    // ---- strongly connected components of the directed doc-id graph
-    // (sccPairs: 3-cycles + high->low halving bridges + a DAG tail).
-    // The decreasing bridges make every cycle's min node a root in the
-    // FIRST coloring round — the fixture exercises trim, coloring and
-    // backward reach without the adversarial chain-of-SCCs depth.
-    "q324_scc" -> ((s, dir) =>
-      Scc.stronglyConnected(sccPairs(s, dir))),
-
-    // ---- condensation DAG of the same graph: SCCs contracted to their
-    // canonical min-id node, one row per ordered pair with the exact
-    // crossing-edge count.
-    "q325_scc_condensation" -> ((s, dir) =>
-      Scc.condensationEdges(sccPairs(s, dir))),
-
-    // ---- product-quantization codes (m=4 subspaces x k=16 sampled
-    // centroids) on the int8 lattice: per (vector, subspace) the nearest
-    // centroid id and the exact squared distortion.
-    "q326_pq_codes" -> ((s, dir) =>
-      Similarity.pqCodes(t(s, dir, "embeddings"), m = 4, k = 16)),
-
-    // ---- PQ asymmetric-distance top-10: the first 8 vectors query the
-    // coded corpus; the ADC sum is exact Long on the shared lattice, so
-    // the ranking replays bit-for-bit in the oracle.
-    "q327_pq_adc_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.pqAdcTopK(emb,
-        emb.where(col("vec_id") < 8).select(col("vec_id").as("query_id"), col("embedding")),
-        m = 4, k = 16, topK = 10)
-    }),
-
-    // ---- longest-path layering of the halving DAG (dagPairs: strictly
-    // decreasing edges, depth grows log with the id range): the
-    // topological-schedule / critical-path primitive. ---------------------
-    "q328_dag_layers" -> ((s, dir) =>
-      Scc.dagLayers(dagPairs(s, dir))),
-
-    // ---- GloVe distance-weighted co-occurrence: window-3 pair census
-    // where a pair d apart adds floor(1e6/d) — X_ij and the raw count in
-    // one scan, all-integer. ---------------------------------------------
-    "q329_glove_cooc" -> ((s, dir) =>
-      Ngrams.gloveCooccurrence(t(s, dir, "documents"), window = 3, minCount = 5L)),
-
-    // ---- DBSCAN on the q213 synthetic point cloud (eps=2500, minPts=4:
-    // ~3 expected eps-neighbors at sf0.01 — a real core/border/noise
-    // mix); grid-blocked eps-graph, components over cores only,
-    // min-label border election keeps it a pure function of the input.
-    "q330_dbscan" -> ((s, dir) =>
-      GeoGrid.dbscan(gridRadiusPoints(t(s, dir, "customer"), lit(0L)),
-        "id", col("x"), col("y"), eps = 2500L, minPts = 4)),
-
-    // ---- Poisson bootstrap over line-item quantities: 32 one-pass
-    // replicates (each row enters replicate r Poisson(1)-many times via
-    // the md5 contract), per-replicate count+sum = the CI inputs for the
-    // mean quantity. --------------------------------------------------------
-    "q331_bootstrap_sums" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .select((col("l_orderkey") * 10 + col("l_linenumber")).as("id"),
-          col("l_quantity").cast("long").as("v"))
-      Sampling.poissonBootstrap(li, "id", "v", replicates = 32)
-    }),
-
-    // ---- deterministic HLL cardinality profile of l_partkey: md5-fixed
-    // registers (b=6), the raw estimator in exact fixed point, and the
-    // true distinct count beside it as the accuracy audit. ----------------
-    "q332_hll_profile" -> ((s, dir) =>
-      Sketch.hllProfile(t(s, dir, "lineitem"), "l_partkey", b = 6)),
-
-    // ---- KMV bottom-k distinct profile of the same column: the sketch
-    // with union AND intersection algebra, next to HLL for comparison. ----
-    "q333_kmv_distinct" -> ((s, dir) =>
-      Sketch.kmvProfile(t(s, dir, "lineitem"), "l_partkey", k = 256)),
-
-    // ---- count-min frequency estimates for the 20 busiest customers:
-    // 4x512 salted counters, estimate = min over rows — upper-bounds the
-    // exact count structurally. -------------------------------------------
-    "q334_count_min" -> ((s, dir) =>
-      Sketch.countMinTopK(t(s, dir, "orders"), "o_custkey",
-        rows = 4, width = 512, topK = 20)),
-
-    // ---- Bloom membership audit: every-7th-customer watchlist probed by
-    // all ordering customers; 2048 bits / 4 hashes sized to show a real,
-    // replayable false-positive rate. --------------------------------------
-    "q335_bloom_audit" -> ((s, dir) =>
-      Sketch.bloomAudit(t(s, dir, "orders"), "o_custkey",
-        t(s, dir, "customer").where(col("c_custkey") % 7 === 0), "c_custkey",
-        bits = 2048, hashes = 4)),
-
-    // ---- IVF-PQ ANN (the FAISS IndexIVFPQ layout): q23's coarse
-    // centroids route, queries probe 2 lists, distance is the exact-Long
-    // PQ ADC sum — both approximation layers deterministic, so the
-    // result replays bit-for-bit. -------------------------------------------
-    "q336_ivfpq_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.ivfPqTopK(emb,
-        emb.where(col("vec_id") < 8).select(col("vec_id").as("query_id"), col("embedding")),
-        emb.where(col("vec_id") % 97 === 0).select(col("vec_id").as("centroid_id"), col("embedding")),
-        m = 4, k = 16, topK = 10, nProbe = 2)
-    }),
-
-    // ---- KMV vocabulary resemblance: English vs non-English token sets,
-    // bottom-256 union sketch vs the exact Jaccard beside it. --------------
-    "q337_kmv_vocab_jaccard" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      def words(f: DataFrame) =
-        f.select(explode(Dedup.wordTokens(col("text"))).as("word"))
-      Sketch.kmvJaccard(
-        words(d.where(col("lang") === "en")),
-        words(d.where(col("lang") =!= "en")), "word", k = 256)
-    }),
-
-    // ---- domain-balanced priority sampling: 40 docs per source drawn
-    // proportional to token count, each group carrying its own unbiased
-    // max(w, τ) estimator. --------------------------------------------------
-    "q338_priority_per_group" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("source"), col("doc_id"),
-        TextFunctions.tokenCount(col("text")).as("n_tokens"))
-      Sampling.prioritySamplePerGroup(d, k = 40, weightCol = "n_tokens",
-        groupCol = "source")
-    }),
-
-    // ---- Benford first-digit audit of order totals (floor to integer
-    // units first — double-to-int casts round differently across
-    // engines, floor does not). --------------------------------------------
-    "q339_benford" -> ((s, dir) =>
-      Audit.benford(
-        t(s, dir, "orders").select(floor(col("o_totalprice")).cast("long").as("v")), "v")),
-
-    // ---- multi-source weighted shortest paths (Bellman-Ford rounds)
-    // over the event graph with per-edge costs 1..7. -----------------------
-    "q340_weighted_sssp" -> ((s, dir) => {
-      val e = t(s, dir, "events").select(
-        (col("user_id") % 300).as("src"), (col("event_id") % 300).as("dst"),
-        (col("event_id") % 7 + 1).as("w"))
-      Paths.weightedSssp(e, s.range(4).toDF("id"))
-    }),
-
-    // ---- greedy weighted matching over the event pair graph: the
-    // record-linkage assignment step; oracle = pinned sequential greedy
-    // (tools/pin_matching.py, the q304/q305 fixture-pin pattern). ----------
-    "q341_greedy_matching" -> ((s, dir) => {
-      val e = t(s, dir, "events").select(
-        (col("user_id") % 120).as("a_id"), (col("event_id") % 120).as("b_id"),
-        (col("event_id") % 97 + 1).as("w"))
-      Matching.greedyMatching(e)
-    }),
-
-    // ---- reciprocal rank fusion of the exact cosine ranking and the PQ
-    // ADC ranking — hybrid retrieval without score calibration, exact
-    // integer contributions. ------------------------------------------------
-    "q342_rrf_fusion" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val queries = emb.where(col("vec_id") < 8)
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      val exact = Similarity.bruteForceTopK(emb, queries, k = 10)
-        .select(col("query_id"), col("neighbor_id"), col("rank"))
-      val adc = Similarity.pqAdcTopK(emb, queries, m = 4, k = 16, topK = 10)
-      Similarity.rrfFuse(exact, adc, kConst = 60, topK = 10)
-    }),
-
-    // ---- per-group HLL: approximate distinct users per event type with
-    // the exact count beside it — the grouped-sketch usage pattern. --------
-    "q343_hll_by_group" -> ((s, dir) =>
-      Sketch.hllByGroup(t(s, dir, "events"), "event_type", "user_id", b = 6)),
-
-    // ---- truncated-RBO agreement between the exact cosine ranking and
-    // the PQ ADC ranking per query — the top-weighted ANN-quality
-    // metric, one C(max(ra, rb)) lookup per shared item. --------------------
-    "q344_rank_agreement" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val queries = emb.where(col("vec_id") < 8)
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      val exact = Similarity.bruteForceTopK(emb, queries, k = 10)
-        .select(col("query_id"), col("neighbor_id"), col("rank"))
-      val adc = Similarity.pqAdcTopK(emb, queries, m = 4, k = 16, topK = 10)
-      Similarity.rankAgreement(exact, adc, depth = 10, pE6 = 900000L)
-    }),
-
-    // ---- greedy max-coverage subset selection over doc bigrams (the
-    // word vocabulary is tiny on this corpus — bigrams give a real
-    // submodular frontier): 10 picks, each the doc adding the most
-    // uncovered bigrams; oracle = pinned sequential greedy
-    // (tools/pin_coverage.py, the q341 pattern). ----------------------------
-    "q345_greedy_coverage" -> ((s, dir) => {
-      val pairs = graft.io.Spread.toDefaultParallelism(t(s, dir, "documents"))
-        .select(col("doc_id"),
-          explode(array_distinct(Ngrams.bigrams(Dedup.wordTokens(col("text"))))).as("token"))
-      Coverage.greedyMaxCoverage(pairs, k = 10)
-    }),
-
-    // ---- the MERGEABLE HLL path on its own (q332 carries an exact
-    // audit column; this is the sketch-only 100 TB claim): registers
-    // built independently over the even- and odd-orderkey halves of
-    // lineitem, folded by per-register max, estimated WITHOUT any
-    // corpus-sized pass after the two register builds. ---------------------
-    "q346_hll_merge" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val a = Sketch.hllRegisters(li.where(col("l_orderkey") % 2 === 0), "l_partkey", b = 6)
-      val b = Sketch.hllRegisters(li.where(col("l_orderkey") % 2 === 1), "l_partkey", b = 6)
-      Sketch.hllEstimate(Sketch.hllMerge(a, b), b = 6)
-    }),
-
-    // ---- node2vec-biased walks on the doc-chain graph (q312's corpus
-    // primitive with the p/q search bias): weights (1, 2, 4) =
-    // node2vec p=2, q=1/2 — outward-exploring. The weighted integer
-    // race keeps every hop a pure function of the graph, so DuckDB
-    // replays the whole biased corpus bit-for-bit. ---------------------------
-    "q347_node2vec_walks" -> ((s, dir) =>
-      GraphMetrics.node2vecWalks(
-        docChainPairs(s, dir),
-        t(s, dir, "documents").where(col("doc_id") % 100 === 0)
-          .select(col("doc_id").as("id")),
-        steps = 4, returnWeight = 1L, nearWeight = 2L, farWeight = 4L)),
-
-    // ---- the span-removal REWRITE q125 only measures: words inside
-    // corpus-hot 3-gram windows dropped, cleaned text emitted (the Lee
-    // et al. ExactSubstr transform at k-gram granularity). ------------------
-    "q348_span_remove" -> ((s, dir) =>
-      Repetition.spanRemove(t(s, dir, "documents"), minDocs = 3, k = 3)),
-
-    // ---- perceptual image fingerprints from the REAL BMP decode: the
-    // 9x8 nearest-neighbor grayscale dHash per synthesized image — the
-    // image-level analogue of simhashText. ----------------------------------
-    "q349_image_dhash" -> ((s, dir) =>
-      Multimodal.imageDhash(Multimodal.syntheticMedia(t(s, dir, "documents")))
-        .toDF()
-        .select(col("media_id"), col("width"), col("height"), col("dhash"))),
-
-    // ---- banded Hamming near-dup join over those fingerprints: 8 bands
-    // of 8 bits (complete for hamming <= 7 by pigeonhole), popcount
-    // verify — image MinHash/LSH end to end. The oracle brute-forces
-    // all pairs, so it also PROVES the banding loses nothing. ---------------
-    "q350_dhash_neardup" -> ((s, dir) =>
-      Dedup.hammingPairs(
-        Multimodal.imageDhash(Multimodal.syntheticMedia(t(s, dir, "documents")))
-          .toDF().select(col("media_id").as("id"), col("dhash").as("hash")),
-        maxHamming = 7, bands = 8)),
-
-    // ---- exact integer Gram matrix of the quantized embedding corpus
-    // (upper triangle): the mergeable covariance scaffold — cells add
-    // across shards, so a 100 TB corpus builds it per partition and
-    // folds. ---------------------------------------------------------------
-    "q351_quantized_gram" -> ((s, dir) =>
-      Similarity.quantizedGram(t(s, dir, "embeddings"))),
-
-    // ---- WEIGHTED PageRank on q69's trade graph with co-order
-    // multiplicity as the edge weight (the DISTINCT dropped into a
-    // count): rank splits proportionally over out-weights, decimal-exact
-    // per-edge products. ----------------------------------------------------
-    "q352_weighted_pagerank" -> ((s, dir) => {
-      // Edge weight = co-order multiplicity. The operator's own weight
-      // FOLD (groupBy(s,d).sum(w)) computes exactly that count when each
-      // join row enters as w=1 — so the caller-side groupBy+count that
-      // used to precede the explode was a second full exchange producing
-      // the same table (r18: one Exchange+HashAggregate pair instead of
-      // two in the staged edge build; w values identical by sum(1)=count).
-      val e0 = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-        .join(t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("s"), (col("l_suppkey") * 2 + 1).as("d"),
-          lit(1L).as("w"))
-      // explode-symmetrize — same rationale as q69_pagerank (r18); the
-      // per-row weight rides along unchanged in both directions
-      val e = e0.select(explode(array(
-          struct(col("s"), col("d"), col("w")),
-          struct(col("d").as("s"), col("s").as("d"), col("w")))).as("e"))
-        .select(col("e.s").as("s"), col("e.d").as("d"), col("e.w").as("w"))
-      PageRank.weightedRanksFixedPoint(e, "s", "d", "w", iterations = 3)
-        .select(col("id").as("node_id"), col("rank"))
-    }),
-
-    // ---- TEXT near-dup pairs at Hamming <= 3 over q17's SimHash
-    // fingerprints, via the banded join (4 bands of 16 bits —
-    // pigeonhole-complete at this radius). The simhash-equality dedup
-    // q17 feeds becomes a tolerance search with no new fingerprint. ---------
-    "q353_simhash_neardup" -> ((s, dir) =>
-      Dedup.hammingPairs(
-        Dedup.simhashText(t(s, dir, "documents"))
-          .select(col("id"), col("simhash").as("hash")),
-        maxHamming = 3, bands = 4)),
-
-    // ---- URL canonicalization over deterministically derived URLs (the
-    // syntheticMedia pattern — every messy feature is a pure function of
-    // doc_id, so the oracle rebuilds and re-normalizes them): scheme/host
-    // case, default ports, tracking params, param order, fragments,
-    // trailing slashes, and the PSL-lite registered domain. ------------------
-    "q354_url_canonical" -> ((s, dir) => {
-      val url = concat(
-        when(col("doc_id") % 2 === 0, lit("HTTP")).otherwise(lit("https")),
-        lit("://WWW."), upper(col("source")), lit(".ExAmPle."),
-        when(col("doc_id") % 3 === 0, lit("co.uk"))
-          .when(col("doc_id") % 3 === 1, lit("com")).otherwise(lit("org")),
-        when(col("doc_id") % 4 === 0, lit(":80")).otherwise(lit("")),
-        lit("/Docs/"), col("doc_id").cast("string"),
-        when(col("doc_id") % 5 === 0, lit("/")).otherwise(lit("")),
-        when(col("doc_id") % 2 === 0, lit("?utm_source=feed&z=9&a=1")).otherwise(lit("?b=2")),
-        when(col("doc_id") % 7 === 0, lit("#sec2")).otherwise(lit("")))
-      Urls.canonicalize(t(s, dir, "documents").select(col("doc_id"), url.as("url")))
-        .select(col("doc_id"), col("canonical_url"), col("host"), col("registered_domain"))
-    }),
-
-    // ---- PSL registered domain over hosts that exercise every rule
-    // class of the bundled Public Suffix List snapshot: exact multi-label
-    // (co.uk, github.io, blogspot.co.uk longest-match over co.uk),
-    // wildcard (*.ck, *.kawasaki.jp, 3-label *.elb.amazonaws.com),
-    // exception (!www.ck, !city.kawasaki.jp), geographic SLDs (aichi.jp),
-    // hosts that ARE a public suffix (→ NULL), and the implicit default
-    // rule. The oracle joins the SAME rule table (rendered from the
-    // loaded snapshot) and replays the PSL algorithm in SQL. -----------------
-    "q355_psl_domain" -> ((s, dir) => {
-      val g = col("doc_id").cast("string")
-      val m = col("doc_id") % 12
-      val host = when(m === 0, concat(lit("a"), g, lit(".github.io")))
-        .when(m === 1, concat(lit("b"), g, lit(".s3.amazonaws.com")))
-        .when(m === 2, concat(lit("w"), g, lit(".pref.aichi.jp")))
-        .when(m === 3, concat(lit("f"), g, lit(".bar.ck")))
-        .when(m === 4, lit("www.ck"))
-        .when(m === 5, concat(lit("s"), g, lit(".co.uk")))
-        .when(m === 6, concat(lit("x"), g, lit(".example.com")))
-        .when(m === 7, concat(lit("p"), g, lit(".city.kawasaki.jp")))
-        .when(m === 8, lit("ne.jp"))
-        .when(m === 9, concat(lit("lb"), g, lit(".us-east-1.elb.amazonaws.com")))
-        .when(m === 10, concat(lit("z"), g, lit(".blogspot.co.uk")))
-        .otherwise(lit("ward.kawasaki.jp"))
-      Urls.withRegisteredDomain(
-        t(s, dir, "documents").select(col("doc_id"), host.as("host")), "host")
-        .select(col("doc_id"), col("host"), col("registered_domain"))
-    }),
-
-    // ---- perceptual audio fingerprints from the REAL PCM decode: the
-    // 65-window energy-difference hash per synthesized WAV — the audio
-    // analogue of q349's image dHash; the oracle replays the window
-    // energies analytically from the WAV writer's sample formula. ------------
-    "q356_audio_ehash" -> ((s, dir) =>
-      Multimodal.audioEnergyHash(Multimodal.syntheticMedia(t(s, dir, "documents")))
-        .toDF()
-        .select(col("media_id"), col("sample_rate"), col("n_samples"), col("ehash"))),
-
-    // ---- banded Hamming near-dup join over audio fingerprints, with the
-    // match set made PROVABLE: the corpus carries an amplitude-rescaled
-    // re-encode of every WAV (energy ratios preserved → identical hash),
-    // so each original/re-encode pair MUST surface at hamming 0. The
-    // oracle brute-forces all pairs — banding provably loses nothing. -------
-    "q357_audio_ehash_neardup" -> ((s, dir) =>
-      Dedup.hammingPairs(
-        Multimodal.audioEnergyHash(
-          Multimodal.syntheticAudioReencodes(t(s, dir, "documents")))
-          .toDF().select(col("media_id").as("id"), col("ehash").as("hash")),
-        maxHamming = 7, bands = 8)),
-
-    // ---- HTML markup strip over synthesized pages (every feature a pure
-    // function of doc_id + text): script/style/comment spans with content,
-    // tags to spaces, entity decode in single-pass order, whitespace
-    // squish. The oracle replays the same regex chain in DuckDB. ------------
-    "q358_html_strip" -> ((s, dir) =>
-      Html.stripMarkup(
-        t(s, dir, "documents").select(col("doc_id"), syntheticHtml.as("html")))
-        .select(col("doc_id"), col("clean_text"))),
-
-    // ---- main-content extraction via the link-density line filter over
-    // the same pages: nav/link-list lines drop, prose lines survive in
-    // order — entirely filter/transform lambdas on the split-line array
-    // (map-side, no explode, no shuffle). -----------------------------------
-    "q359_main_content" -> ((s, dir) =>
-      Html.mainContent(
-        t(s, dir, "documents").select(col("doc_id"), syntheticHtml.as("html")))
-        .select(col("doc_id"), col("main_text"))),
-
-    // ---- recall@10 of the IVF-PQ index (q336's exact configuration)
-    // against the brute-force cosine baseline — the number a user tuning
-    // nProbe/m/k actually needs: what the two approximation layers
-    // (coarse routing + product quantization) cost together. ----------------
-    "q360_ivfpq_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val qs = emb.where(col("vec_id") < 8)
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      Similarity.recallAt(
-        Similarity.ivfPqTopK(emb, qs,
-          emb.where(col("vec_id") % 97 === 0)
-            .select(col("vec_id").as("centroid_id"), col("embedding")),
-          m = 4, k = 16, topK = 10, nProbe = 2),
-        Similarity.bruteForceTopK(emb, qs, k = 10),
-        k = 10)
-    }),
-
-    // ---- recall@10 of banded-Hamming simhash retrieval (q353's 4x16
-    // banding as a top-k index) against exact Hamming ranking — what the
-    // band structure costs: neighbors sharing no band are unreachable. ------
-    "q361_simhash_recall" -> ((s, dir) => {
-      val hs = Dedup.simhashText(t(s, dir, "documents"))
-        .select(col("id"), col("simhash").as("hash"))
-      val qs = hs.where(col("id") < 8).select(col("id").as("query_id"), col("hash"))
-      Similarity.recallAt(
-        Dedup.hammingTopK(hs, qs, k = 10, bands = 4),
-        Dedup.hammingBruteTopK(hs, qs, k = 10),
-        k = 10)
-    }),
-
-    // ---- the web-corpus composition end-to-end: anchor extraction
-    // (quoted + unquoted hrefs) → RFC 3986 resolution against the page
-    // URL (absolute / protocol-relative / root-relative / path-relative /
-    // query / fragment / mailto) → canonicalization + PSL registered
-    // domain on BOTH ends → the per-domain outlink graph. The oracle
-    // derives every target domain INDEPENDENTLY from the id formula, so
-    // a misfire anywhere in the chain breaks the match. ---------------------
-    "q362_outlink_domains" -> ((s, dir) => {
-      val id = col("doc_id").cast("string")
-      val base = concat(lit("https://WWW.Site"), (col("doc_id") % 4).cast("string"),
-        lit(".github.io/dir/index.html"))
-      val html = concat(
-        lit("<p>Links:</p>\n<a href=\"https://ext"), (col("doc_id") % 7).cast("string"),
-        lit(".example.org/a\">Abs</a>\n"),
-        lit("<a href='//cdn"), (col("doc_id") % 5).cast("string"),
-        lit(".example.co.uk/lib.js'>Proto</a>\n"),
-        lit("<a href=/local/"), id, lit(">Root</a>\n"),
-        lit("<a href=sub/page"), (col("doc_id") % 3).cast("string"), lit(".html>Rel</a>\n"),
-        lit("<a href=?p=2>Query</a> <a href=#top>Frag</a>\n"),
-        lit("<a href=mailto:x@example.net>Mail</a>"))
-      val pages = t(s, dir, "documents")
-        .select(col("doc_id"), base.as("page_url"), html.as("html"))
-      val links = pages.select(col("page_url"),
-        explode(Html.extractLinks(col("html"))).as("ref"))
-      val resolved = links.select(col("page_url"),
-        Urls.resolve(col("page_url"), col("ref")).as("url"))
-      val tgt = Urls.canonicalize(resolved)
-        .select(col("page_url").as("url"), col("registered_domain").as("target_domain"))
-      Urls.canonicalize(tgt)
-        .select(col("registered_domain").as("page_domain"), col("target_domain"))
-        .where(col("target_domain").isNotNull)
-        .groupBy("page_domain", "target_domain")
-        .agg(count(lit(1)).as("n_links"))
-    }),
-
-    // ---- robots.txt admission (crawl-side filter): per-doc star-group
-    // bodies exercising group isolation (a foreign group disallows
-    // everything), longest-match, the Allow tie-break and the no-match
-    // default; the oracle derives every expected decision INDEPENDENTLY
-    // from the id formula. ---------------------------------------------------
-    "q363_robots_allowed" -> ((s, dir) => {
-      val m2 = (col("doc_id") % 2).cast("string")
-      val m3 = (col("doc_id") % 3).cast("string")
-      val robots = concat(
-        lit("User-agent: bot\nDisallow: /\n\nUser-agent: *\nDisallow: /private\n"),
-        when(col("doc_id") % 2 === 0,
-          concat(lit("Allow: /private/ok"), m2, lit("\n"))).otherwise(lit("")),
-        lit("Disallow: /tmp"), m3,
-        lit("\n\nUser-agent: other\nDisallow: /x\n"))
-      val path = when(col("doc_id") % 5 === 0, concat(lit("/private/ok"), m2, lit("/page")))
-        .when(col("doc_id") % 5 === 1, lit("/private/secret"))
-        .when(col("doc_id") % 5 === 2, lit("/public/a"))
-        .when(col("doc_id") % 5 === 3, concat(lit("/tmp"), m3, lit("/x")))
-        .otherwise(lit("/x/y"))
-      graft.ops.Robots.filterAllowed(
-        t(s, dir, "documents")
-          .select(col("doc_id"), robots.as("robots"), path.as("path")))
-        .select(col("doc_id"), col("path"), col("allowed"))
-    }),
-
-    // ---- compressed-corpus ingest roundtrip: every document's text is
-    // gzip'd distributed (writer half) and gunzip'd distributed with the
-    // zip-bomb cap (reader half); the oracle is the identity derivation —
-    // text and its byte length straight from the table. --------------------
-    "q364_gzip_roundtrip" -> ((s, dir) =>
-      Multimodal.gunzipText(Multimodal.syntheticGzipDocs(t(s, dir, "documents")))
-        .toDF()
-        .select(col("media_id"), col("n_bytes"), col("text_out"))),
-
-    // ---- the crawl-ingest COMPOSITE, end to end in one plan: gzip'd
-    // HTML pages decode distributed → robots admission drops /private
-    // paths → main-content extraction → token count + canonical URL.
-    // Every stage is individually oracled (q364/q363/q359/q354); this
-    // verifies their COMPOSITION, with the oracle reusing q359's replay
-    // chain and deriving admission/URL straight from the id formula. --------
-    "q365_crawl_ingest" -> ((s, dir) => {
-      val gz = Multimodal.syntheticGzipDocs(
-        t(s, dir, "documents").select(col("doc_id"), syntheticHtml.as("text")))
-      val pages = Multimodal.gunzipText(gz).toDF()
-        .select(col("media_id").as("doc_id"), col("text_out").as("html"))
-        .withColumn("path",
-          when(col("doc_id") % 7 === 0,
-            concat(lit("/private/p"), col("doc_id").cast("string")))
-            .otherwise(concat(lit("/dir/page"), col("doc_id").cast("string"))))
-        .withColumn("robots", lit("User-agent: *\nDisallow: /private"))
-      val admitted = graft.ops.Robots.filterAllowed(pages).where(col("allowed"))
-      val content = Html.mainContent(admitted)
-      val withUrl = content.withColumn("url",
-        concat(lit("https://WWW.Site"), (col("doc_id") % 4).cast("string"),
-          lit(".github.io"), col("path")))
-      Urls.canonicalize(withUrl)
-        .select(col("doc_id"), col("canonical_url"), col("registered_domain"),
-          TextFunctions.tokenCount(col("main_text")).as("n_tokens"))
-    }),
-
-    // ---- frontier politeness scheduling (the Mercator stage between
-    // link discovery and fetching): canonical-URL dedup where the max
-    // queued priority wins (every 3rd URL arrives twice — once with a
-    // tracking param and mixed host case — and must collapse), then
-    // per-host serial slots with the priority-desc/URL-asc order and the
-    // per-host admission cap. The oracle derives every canonical form
-    // independently from the id formula and replays the window. ------------
-    "q366_crawl_schedule" -> ((s, dir) => {
-      val id = col("doc_id")
-      val docs = t(s, dir, "documents")
-      val first = docs.select(
-        concat(lit("http://host"), (id % 20).cast("string"), lit(".example.com/p/"),
-          id.cast("string"),
-          when(id % 3 === 0, lit("?utm_source=feed&b=2")).otherwise(lit(""))).as("url"),
-        (id * 7919 % 101).as("priority"))
-      val dup = docs.where(id % 3 === 0).select(
-        concat(lit("http://HOST"), (id % 20).cast("string"), lit(".Example.com/p/"),
-          id.cast("string"), lit("?b=2")).as("url"),
-        (id * 7919 % 101 + 50).as("priority"))
-      Crawl.politenessSchedule(first.unionByName(dup),
-        delayMs = 100L, maxPerHost = 8)
-    }),
-
-    // ---- bottom-k quantile sketch (the DISTRIBUTION member of the
-    // mergeable-sketch family): price quantiles estimated from the
-    // hash-sampled k-row frame, AND re-derived through an actual
-    // two-shard merge — est_merged comes from union + re-bottom-k over
-    // the supplier-parity split, so matching the oracle (which replays
-    // only the direct path) proves the merge algebra loses nothing. --------
-    "q367_kmv_quantiles" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(
-        (col("l_orderkey") * 10 + col("l_linenumber")).as("rid"),
-        round(col("l_extendedprice") * 100).cast("long").as("cents"),
-        col("l_suppkey"))
-      val qs = Seq(10000L, 250000L, 500000L, 750000L, 990000L)
-      val direct = Sketch.quantileSketch(li, "rid", "cents", k = 512)
-      val merged = Sketch.quantileMerge(
-        Sketch.quantileSketch(li.where(col("l_suppkey") % 2 === 0), "rid", "cents", k = 512),
-        Sketch.quantileSketch(li.where(col("l_suppkey") % 2 === 1), "rid", "cents", k = 512),
-        k = 512)
-      Sketch.quantileEstimate(direct, qs)
-        .join(Sketch.quantileEstimate(merged, qs)
-          .select(col("q_ppm"), col("est").as("est_merged")), Seq("q_ppm"))
-    }),
-
-    // ---- the Gram scaffold's consumer: 4 exact-integer power-iteration
-    // steps on q351's cells yield the corpus's top principal direction;
-    // every vector projects onto it map-side (codegen'd int dot against
-    // the direction folded in as a literal), with the Rayleigh-quotient
-    // mass riding along. The oracle replays the quantization, the Gram,
-    // all 4 rescaled iterations and the projection in SQL. ------------------
-    "q368_principal_projection" -> ((s, dir) =>
-      Similarity.principalProjection(t(s, dir, "embeddings"))),
-
-    // ---- anchor-text aggregation (the classic inlink signal: what
-    // other pages CALL a target): anchors extracted WITH inner text —
-    // inner markup stripped, entities decoded, whitespace squished —
-    // resolved, canonicalized, and counted per (target domain, text).
-    // mailto anchors canonicalize to NULL and drop. The oracle derives
-    // every (domain, text) pair independently from the id formula. ---------
-    "q369_anchor_text" -> ((s, dir) => {
-      val id = col("doc_id")
-      val base = concat(lit("https://site"), (id % 4).cast("string"),
-        lit(".github.io/dir/index.html"))
-      val html = concat(
-        lit("<a href=\"https://ext"), (id % 7).cast("string"),
-        lit(".example.org/a\">Read   <b>more</b></a>\n"),
-        lit("<a href='//cdn"), (id % 5).cast("string"),
-        lit(".example.co.uk/lib.js'>R&amp;D "), (id % 3).cast("string"), lit("</a>\n"),
-        lit("<a href=/local/"), id.cast("string"), lit(">Home</a>\n"),
-        lit("<a href=mailto:x@example.net>Mail me</a>"))
-      val anchors = t(s, dir, "documents")
-        .select(base.as("page_url"), explode(Html.extractAnchors(html)).as("a"))
-        .select(col("page_url"), col("a.text").as("anchor_text"),
-          Urls.resolve(col("page_url"), col("a.href")).as("url"))
-      Urls.canonicalize(anchors)
-        .where(col("registered_domain").isNotNull)
-        .groupBy(col("registered_domain").as("target_domain"), col("anchor_text"))
-        .agg(count(lit(1)).as("n_links"))
-    }),
-
-    // ---- recrawl priority from fetch history (Cho & Garcia-Molina
-    // freshness): 100 synthetic URL histories carved from events by id
-    // residue (event_id is the fetch clock — unique, so the change-lag
-    // order is total), content hash varying per-URL by formula; change
-    // rate × staleness age, exact integers. asOf = corpus max + 1000 via
-    // a 1-row agg, so the fixture scales with the table. -------------------
-    "q370_recrawl_priority" -> ((s, dir) => {
-      val ev = t(s, dir, "events").select(col("event_id"))
-      val asOf = ev.agg(max(col("event_id"))).head().getLong(0) + 1000L
-      val hist = ev.select(
-        concat(lit("u"), (col("event_id") % 100).cast("string")).as("url"),
-        col("event_id").as("ts_ms"),
-        (expr("event_id div 100") * (lit(1) + col("event_id") % 100) % 5)
-          .cast("string").as("content_hash"))
-      Crawl.recrawlPriority(hist, asOfMs = asOf)
-    }),
-
-    // ---- largest-remainder fetch-budget apportionment: a 10000-slot
-    // global budget split across 97 supplier-derived domains
-    // proportional to their quantity mass — floor shares, then the
-    // leftover to the largest remainders, Σalloc = budget exactly. ---------
-    "q371_budget_allocation" -> ((s, dir) =>
-      Crawl.allocateBudget(
-        t(s, dir, "lineitem").select(
-          concat(lit("d"), (col("l_suppkey") % 97).cast("string")).as("domain"),
-          col("l_quantity").cast("long").as("weight")),
-        budget = 10000L)),
-
-    // ---- sitemap parsing (the publisher-declared half of discovery):
-    // per doc, a synthetic urlset with a lastmod'd page, a bare page, a
-    // loc-less entry (must drop) and — every 4th doc — a nested sitemap
-    // index entry. The oracle derives every entry from the id formula. ------
-    "q372_sitemap" -> ((s, dir) => {
-      val id = col("doc_id")
-      val host = concat(lit("s"), (id % 6).cast("string"), lit(".example.com"))
-      val xml = concat(
-        lit("<?xml version=\"1.0\"?><urlset>"),
-        lit("<url><loc> https://"), host, lit("/p/"), id.cast("string"),
-        lit(" </loc><lastmod>2024-0"), (id % 9 + 1).cast("string"),
-        lit("-01</lastmod></url>"),
-        lit("<url><loc>https://"), host, lit("/q/"), id.cast("string"),
-        lit("</loc></url>"),
-        lit("<url><lastmod>2024-01-01</lastmod></url>"),
-        when(id % 4 === 0, concat(lit("<sitemap><loc>https://"), host,
-          lit("/sitemap2.xml</loc></sitemap>"))).otherwise(lit("")),
-        lit("</urlset>"))
-      t(s, dir, "documents")
-        .select(id, posexplode(Crawl.sitemapEntries(xml)))
-        .select(col("doc_id"), col("pos").cast("long").as("pos"),
-          col("col.loc").as("loc"), col("col.lastmod").as("lastmod"),
-          col("col.is_index").as("is_index"))
-    }),
-
-    // ---- the frontier COMPOSITE, discovery to schedule in one plan:
-    // anchors extracted → RFC 3986 resolved → robots admission (drops
-    // the /private link) → canonicalized, inlink count becomes the
-    // frontier priority → per-host politeness slots under the cap. Every
-    // stage is individually oracled (q362/q363/q354/q366); the oracle
-    // derives admitted URLs and counts straight from the id formula and
-    // replays the window. ---------------------------------------------------
-    "q373_frontier_composite" -> ((s, dir) => {
-      val id = col("doc_id")
-      val base = concat(lit("https://site"), (id % 4).cast("string"),
-        lit(".github.io/dir/index.html"))
-      val html = concat(
-        lit("<a href=\"https://h"), (id % 10).cast("string"), lit(".example.org/page"),
-        (id % 25).cast("string"), lit("\">x</a>"),
-        lit("<a href='https://h"), ((id + 3) % 10).cast("string"),
-        lit(".example.org/private/p"), (id % 5).cast("string"), lit("'>y</a>"),
-        lit("<a href=/local/l"), (id % 8).cast("string"), lit(">z</a>"))
-      val links = t(s, dir, "documents")
-        .select(base.as("page_url"), explode(Html.extractLinks(html)).as("ref"))
-        .select(Urls.resolve(col("page_url"), col("ref")).as("url"))
-      val admitted = graft.ops.Robots.filterAllowed(
-        links
-          .withColumn("path", regexp_extract(col("url"), "^[a-z]+://[^/]*(/.*)$", 1))
-          .withColumn("robots", lit("User-agent: *\nDisallow: /private")))
-        .where(col("allowed"))
-      // Staged (r17 optimization): same cut as q422 — the grouped frontier
-      // is one URL + one count per row, but unstaged it drags the full
-      // link-extraction/admission/canonicalize tree (~470 KB formatted)
-      // under politenessSchedule's second canonicalize + PSL joins and
-      // every AQE pass re-walks it. Measured 7.4 s -> ~2.5 s at sf0.1.
-      val frontier = graft.ops.Staging.stage(
-        Urls.canonicalize(admitted)
-          .where(col("canonical_url").isNotNull)
-          .groupBy(col("canonical_url").as("url"))
-          .agg(count(lit(1)).as("priority")), reliable = false)
-      Crawl.politenessSchedule(frontier, delayMs = 200L, maxPerHost = 4)
-    }),
-
-    // ---- video container metadata: a real RIFF AVI header walk over
-    // the synthetic 4-frame corpus; every avih field derives from the
-    // anchor id, so the oracle is fully analytic. ---------------------------
-    "q374_video_meta" -> ((s, dir) =>
-      Multimodal.videoMeta(Multimodal.syntheticFrameVideos(t(s, dir, "documents")))
-        .toDF()
-        .select(col("media_id"), col("width"), col("height"),
-          col("n_frames"), col("usec_per_frame"))),
-
-    // ---- deterministic frame sampling (k = 2 of 4 → indices 0 and 2 by
-    // the evenly-spaced rule): frames extracted by the movi byte walk;
-    // each sampled frame is a real BMP whose byte length the oracle
-    // derives from the source doc's geometry formula. ------------------------
-    "q375_video_frame_sample" -> ((s, dir) =>
-      Multimodal.sampleVideoFrames(
-        Multimodal.syntheticFrameVideos(t(s, dir, "documents")), k = 2)
-        .toDF()
-        .select(col("media_id"), col("frame_idx"), col("n_bytes"))),
-
-    // ---- the video near-dup leg: sampled frames fingerprint through the
-    // REAL BMP dHash. Frame f of video v IS the q349 image of doc v+2f,
-    // so the oracle replays the full 9×8 analytic dHash chain and joins
-    // it to the frame table — a cross-modal identity any mistake in the
-    // sampler, the chunk walk, or the decoder breaks. ------------------------
-    "q376_video_frame_dhash" -> ((s, dir) =>
-      Multimodal.videoFrameDhash(
-        Multimodal.syntheticFrameVideos(t(s, dir, "documents")), k = 4)
-        .toDF()
-        .select(col("media_id"), col("frame_idx"), col("dhash"))),
-
-    // ---- VIDEO near-dup pairs: the sampled-frame fingerprints through
-    // the same banded Hamming join images (q350) and text (q353) use —
-    // the third modality of the family. The oracle brute-forces all
-    // frame pairs over the analytic dHash chain, so it again PROVES the
-    // banding drops nothing. -------------------------------------------------
-    "q377_video_neardup" -> ((s, dir) =>
-      Dedup.hammingPairs(
-        Multimodal.videoFrameDhash(
-          Multimodal.syntheticFrameVideos(t(s, dir, "documents")), k = 4)
-          .toDF()
-          .select((col("media_id") * 4 + col("frame_idx")).as("id"),
-            col("dhash").as("hash")),
-        maxHamming = 7, bands = 8)),
-
-    // ---- REAL thumbnailing: every synthetic image resizes to 8×8 by the
-    // integer nearest-neighbor map, then the real pixel walk sums the
-    // thumbnail's channels. The oracle recomputes every one of the 192
-    // sampled source bytes analytically — the resample map, the BMP
-    // round-trip and the stats walk all on the hook. -------------------------
-    "q378_image_resize" -> ((s, dir) =>
-      Multimodal.imageStats(
-        Multimodal.resizeImages(
-          Multimodal.syntheticMedia(t(s, dir, "documents")), w = 8, h = 8))
-        .toDF()
-        .select(col("media_id"), col("width"), col("height"), col("n_pixels"),
-          col("sum_b"), col("sum_g"), col("sum_r"))),
-
-    // ---- per-GROUP quantile sketch (hllByGroup's symmetry for
-    // distributions): document-length quartiles per source from the
-    // k-per-group bottom-k frame; the rank cap pushes down to a
-    // map-side WindowGroupLimit, so a mega-source never floods a
-    // reducer. The oracle replays hash, per-group bottom-k, and the
-    // rank arithmetic. -------------------------------------------------------
-    "q379_group_quantiles" -> ((s, dir) =>
-      Sketch.quantileEstimateByGroup(
-        Sketch.quantileSketchByGroup(
-          t(s, dir, "documents").select(col("source"), col("doc_id"),
-            length(coalesce(col("text"), lit(""))).cast("long").as("len")),
-          "source", "doc_id", "len", k = 128),
-        Seq(250000L, 500000L, 750000L, 990000L))
-        .select(col("group").as("source"), col("q_ppm"), col("est"), col("n_sample"))),
-
-    // ---- Crawl-delay-aware politeness: per-host delays parsed from the
-    // robots body ((h%3+1).5 s; every 5th host declares none → the 700 ms
-    // default), hosts slot independently at their own cadence. The
-    // oracle derives every delay and offset from the id formula. ------------
-    "q380_crawl_delay_schedule" -> ((s, dir) => {
-      val id = col("doc_id")
-      val h = id % 20
-      val robots = when(h % 5 === 0,
-        lit("User-agent: *\nDisallow: /private"))
-        .otherwise(concat(lit("User-agent: *\nCrawl-delay: "),
-          (h % 3 + 1).cast("string"), lit(".5\nDisallow: /private")))
-      val frontier = t(s, dir, "documents").select(
-        concat(lit("http://host"), h.cast("string"), lit(".example.com/p/"),
-          id.cast("string")).as("url"),
-        (id * 7919 % 101).as("priority"),
-        graft.ops.Robots.crawlDelay(robots).as("delay_ms"))
-      Crawl.politenessScheduleWithDelays(frontier,
-        defaultDelayMs = 700L, maxPerHost = 6)
-    }),
-
-    // ---- REAL audio downsampling: every synthetic WAV resamples to
-    // 6 kHz by the integer nearest-neighbor map, then the real PCM scan
-    // sums the result. The oracle recomputes every output sample from
-    // the source formula at the remapped index — resampler, WAV
-    // round-trip and stats walk all on the hook (q378's audio twin). --------
-    "q381_audio_resample" -> ((s, dir) =>
-      Multimodal.audioStats(
-        Multimodal.resampleAudio(
-          Multimodal.syntheticMedia(t(s, dir, "documents")), dstRate = 6000))
-        .toDF()
-        .select(col("media_id"), col("sample_rate"), col("n_samples"),
-          col("energy"), col("mean_abs"), col("peak_abs"))),
-
-    // ---- compressed BINARY ingest roundtrip (the WARC shape: gzip'd
-    // container members): synthetic AVIs gzip distributed, gunzip
-    // distributed under the zip-bomb cap, and parse — matching q374's
-    // oracle proves the binary roundtrip byte-preserving through the
-    // whole chain. -----------------------------------------------------------
-    "q382_gzip_video_ingest" -> ((s, dir) =>
-      Multimodal.videoMeta(
-        Multimodal.gunzipMedia(
-          Multimodal.gzipMedia(
-            Multimodal.syntheticFrameVideos(t(s, dir, "documents")))))
-        .toDF()
-        .select(col("media_id"), col("width"), col("height"),
-          col("n_frames"), col("usec_per_frame"))),
-
-    // ---- the vision-encoder preprocessing COMPOSITE: sample k frames,
-    // thumbnail each to 8×8, stat the pixels — movi walk, per-frame BMP
-    // decode, nearest-neighbor resample and the stats walk in one plan.
-    // The oracle recomputes every thumbnail byte from the frame-source
-    // identity (frame f of video v = image of doc v+2f, f=3 repeats 0)
-    // through q378's resample arithmetic. ------------------------------------
-    "q383_video_thumbnails" -> ((s, dir) => {
-      import s.implicits._
-      Multimodal.imageStats(
-        Multimodal.videoThumbnails(
-          Multimodal.syntheticFrameVideos(t(s, dir, "documents")),
-          k = 4, w = 8, h = 8)
-          .map(fr => Multimodal.MediaRow(fr.media_id * 4 + fr.frame_idx, "image",
-            fr.payload, "image/bmp", fr.n_bytes)))
-        .toDF()
-        .select(col("media_id"), col("width"), col("height"), col("n_pixels"),
-          col("sum_b"), col("sum_g"), col("sum_r"))
-    }),
-
-    // ---- WARC container ingest (the interchange format public crawls
-    // actually ship in): documents group 8-per-file into real .warc.gz
-    // bytes — one gzip member per record, the standard seekable layout —
-    // and the member walk + strict record framing parse them back
-    // distributed. The oracle derives every field (file grouping, record
-    // order, URI, type, byte length, text) straight from the id formula:
-    // the q364 identity-roundtrip idiom at container grain. -----------------
-    "q384_warc_ingest" -> ((s, dir) =>
-      graft.ops.Warc.parseWarc(graft.ops.Warc.syntheticWarc(t(s, dir, "documents")))
-        .toDF()
-        .select(col("media_id").as("file_id"), col("record_idx"),
-          col("warc_type"), col("target_uri"), col("n_bytes"),
-          col("payload").cast("string").as("text_out"))),
-
-    // ---- the crawl-ingest composite FROM the on-disk crawl format:
-    // q365's chain (robots admission → main-content → canonical URL +
-    // tokens) re-rooted at real WARC input — pages arrive as gzip-member
-    // response records whose Target-URI carries the admission path, so
-    // the whole pipeline now runs from the file a crawler writes. Oracle
-    // = the q359 replay chain + id-formula URI derivation (q365 idiom). ----
-    "q385_warc_crawl" -> ((s, dir) => {
-      val id = col("doc_id")
-      val docs = t(s, dir, "documents").select(
-        id, syntheticHtml.as("text"),
-        concat(lit("https://host"), (id % 20).cast("string"), lit(".example.com"),
-          when(id % 7 === 0, concat(lit("/private/p"), id.cast("string")))
-            .otherwise(concat(lit("/dir/page"), id.cast("string")))).as("uri"))
-      val pages = graft.ops.Warc.responsePages(
-        graft.ops.Warc.parseWarc(graft.ops.Warc.syntheticWarc(docs)))
-        .withColumn("path", regexp_extract(col("target_uri"), "^[a-z]+://[^/]*(/.*)$", 1))
-        .withColumn("robots", lit("User-agent: *\nDisallow: /private"))
-      val admitted = graft.ops.Robots.filterAllowed(pages).where(col("allowed"))
-      val content = Html.mainContent(admitted)
-      Urls.canonicalize(content.withColumn("url", col("target_uri")))
-        .select(
-          regexp_extract(col("target_uri"), "([0-9]+)$", 1).cast("long").as("doc_id"),
-          col("canonical_url"), col("registered_domain"),
-          TextFunctions.tokenCount(col("main_text")).as("n_tokens"))
-    }),
-
-    // ---- REAL PNG decode feature extraction: per-channel pixel sums
-    // through the full chunk-walk + zlib-inflate + filter-reconstruction
-    // decoder over synthesized real PNGs (every doc; geometry from the q150
-    // id formula, pixels the text bytes cycled top-down UNPADDED — PNG
-    // scanlines carry no row padding, so the oracle's byte formula is a
-    // plain modulus, RGB channel order). ------------------------------------
-    "q386_png_stats" -> ((s, dir) =>
-      Multimodal.imageStats(Multimodal.syntheticPngMedia(t(s, dir, "documents")))
-        .toDF()
-        .select(col("media_id"), col("width"), col("height"), col("n_pixels"),
-          col("sum_b"), col("sum_g"), col("sum_r"))),
-
-    // ---- PNG perceptual fingerprints: the q349 dHash through the PNG
-    // decoder — same 9×8 grid, top-down unpadded geometry; the oracle
-    // replays the grid on the cycled-byte formula. --------------------------
-    "q387_png_dhash" -> ((s, dir) =>
-      Multimodal.imageDhash(Multimodal.syntheticPngMedia(t(s, dir, "documents")))
-        .toDF()
-        .select(col("media_id"), col("width"), col("height"), col("dhash"))),
-
-    // ---- PNG thumbnailing: nearest-neighbor resize to 8×8 through the
-    // real decoder/encoder, verified by per-channel sums of the resized
-    // pixels — the oracle replays the integer source-pixel map. -------------
-    "q388_png_resize" -> ((s, dir) =>
-      Multimodal.imageStats(
-        Multimodal.resizeImages(
-          Multimodal.syntheticPngMedia(t(s, dir, "documents")), w = 8, h = 8))
-        .toDF()
-        .select(col("media_id"), col("width"), col("height"), col("n_pixels"),
-          col("sum_b"), col("sum_g"), col("sum_r"))),
-
-    // ---- format normalization invariant: BMP corpus transcoded to PNG
-    // (decode padded bottom-up BGR → re-encode unpadded top-down RGB →
-    // decode again) fingerprints BIT-IDENTICALLY — the output equals
-    // q349's, so the oracle is q349's replay verbatim. Proves the two
-    // decoders agree pixel-for-pixel end to end. ----------------------------
-    "q389_transcode_dhash" -> ((s, dir) =>
-      Multimodal.imageDhash(
-        Multimodal.transcodeToPng(
-          Multimodal.syntheticMedia(t(s, dir, "documents"))))
-        .toDF()
-        .select(col("media_id"), col("width"), col("height"), col("dhash"))),
-
-    // ---- charset sniff + transcode at crawl ingest (BOM → meta
-    // declaration → strict UTF-8 validation → flagged windows-1252
-    // fallback): a five-leg mixed-encoding corpus — ASCII, BOM'd UTF-8,
-    // BOM'd UTF-16LE, meta-declared latin-1, and UNDECLARED latin-1
-    // (the leg that must fall back flagged) — decodes to UTF-8 text
-    // before the HTML/lexical chain. The oracle derives label, flags and
-    // transcoded text from the id formula byte-for-byte (é = chr(233)). -----
-    "q390_charset_decode" -> ((s, dir) =>
-      Multimodal.decodeCharset(
-        Multimodal.syntheticEncodedDocs(t(s, dir, "documents")))
-        .toDF()
-        .select(col("media_id").as("doc_id"), col("encoding"), col("bom"),
-          col("mojibake_risk"), col("text_out"))),
-
-    // ---- TOKEN-EXACT sequence packing: q317's concat-and-chunk driven
-    // by REAL BPE subword counts (the q135-trained table applied by the
-    // q136 native encoder) instead of whitespace-ish word counts —
-    // context windows are token budgets, and word-count packing misfits
-    // real tokenizers by 20–40 %. The oracle composes the q136 merge-
-    // replay chain into the q317 window replay. ----------------------------
-    "q391_bpe_pack_chunk" -> ((s, dir) => {
-      val merges = Ngrams.bpeMerges(t(s, dir, "documents"), rounds = 16, batch = 8)
-        .orderBy("merge_rank").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
-      val d = Ngrams.bpeEncodeStats(t(s, dir, "documents"), merges)
-        .select(col("doc_id"), col("n_subwords").as("n_tokens"))
-      SequencePack.concatChunk(d, windowSize = 256)
-    }),
-
-    // ---- token-exact NEXT-FIT packing: q318's whole-document greedy
-    // fill, capacity 8192 BPE tokens (≥ 6× the largest doc's subword
-    // count at every scale the suite runs, so the n ≤ C contract holds
-    // with headroom). Same jump-orbit construction; the oracle walks the
-    // recurrence over the composed BPE counts. -----------------------------
-    "q392_bpe_pack_nextfit" -> ((s, dir) => {
-      val merges = Ngrams.bpeMerges(t(s, dir, "documents"), rounds = 16, batch = 8)
-        .orderBy("merge_rank").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
-      val d = Ngrams.bpeEncodeStats(t(s, dir, "documents"), merges)
-        .select(col("doc_id"), col("n_subwords").as("n_tokens"))
-      SequencePack.nextFitWindows(d, capacity = 8192)
-    }),
-
-    // ---- HTTP message split inside WARC response records: real
-    // crawlers archive the whole wire message (status line + headers +
-    // body), not bare HTML, so the container-to-text chain needs this
-    // parse. Status/Content-Type/X-Doc all id formulas; the oracle
-    // derives every field and the body is the roundtrip identity. ----------
-    "q393_http_split" -> ((s, dir) => {
-      import s.implicits._
-      val msgs = graft.io.Spread.toDefaultParallelism(
-        t(s, dir, "documents").select(col("doc_id"), col("text")))
-        .as[(Long, String)]
-        .map { case (id, text) =>
-          val body = Option(text).getOrElse("").getBytes("UTF-8")
-          val ct = if (id % 2 == 1) "text/html; charset=iso-8859-1" else "text/html"
-          val status = 200 + (id % 3).toInt * 2
-          val head = s"HTTP/1.1 $status OK\r\nContent-Type: $ct\r\nX-Doc: $id\r\n\r\n"
-          (id, head.getBytes("US-ASCII") ++ body,
-            s"https://host${id % 20}.example.com/p/$id")
-        }.toDF("doc_id", "payload", "uri")
-      graft.ops.Warc.httpResponses(
-        graft.ops.Warc.parseWarc(graft.ops.Warc.syntheticWarcBytes(msgs)))
-        .toDF()
-        .select(
-          regexp_extract(col("target_uri"), "([0-9]+)$", 1).cast("long").as("doc_id"),
-          col("status").cast("long").as("status"), col("content_type"),
-          col("n_headers").cast("long").as("n_headers"),
-          col("body").cast("string").as("text_out"))
-    }),
-
-    // ---- the COMPLETE day-one ingest: .warc.gz → gzip member walk →
-    // record framing → HTTP message split → charset sniff with the
-    // transport declaration (BOM'd UTF-16LE leg vs Content-Type-declared
-    // latin-1 leg, a non-ASCII é in every page) → main-content → token
-    // count. Every stage individually oracled (q384/q393/q390/q359);
-    // this verifies the full composition from the on-disk crawl format
-    // to clean corpus text. -------------------------------------------------
-    "q394_warc_http_ingest" -> ((s, dir) => {
-      import s.implicits._
-      val htmlDocs = t(s, dir, "documents").select(col("doc_id"),
-        concat(syntheticHtml,
-          lit("\n<p>caf\u00e9 filler prose line stays in the corpus</p>")).as("html"),
-        concat(lit("https://host"), (col("doc_id") % 20).cast("string"),
-          lit(".example.com/dir/page"), col("doc_id").cast("string")).as("uri"))
-      val msgs = graft.io.Spread.toDefaultParallelism(htmlDocs)
-        .as[(Long, String, String)]
-        .map { case (id, html, uri) =>
-          import java.nio.charset.StandardCharsets._
-          val (ct, body) =
-            if (id % 2 == 1) ("text/html; charset=iso-8859-1", html.getBytes(ISO_8859_1))
-            else ("text/html",
-              Array(0xFF.toByte, 0xFE.toByte) ++ html.getBytes(UTF_16LE))
-          val head = s"HTTP/1.1 200 OK\r\nContent-Type: $ct\r\nX-Doc: $id\r\n\r\n"
-          (id, head.getBytes("US-ASCII") ++ body, uri)
-        }.toDF("doc_id", "payload", "uri")
-      val pages = graft.ops.Warc.decodePages(
-        graft.ops.Warc.parseWarc(graft.ops.Warc.syntheticWarcBytes(msgs))).toDF()
-      Html.mainContent(pages).select(
-        regexp_extract(col("target_uri"), "([0-9]+)$", 1).cast("long").as("doc_id"),
-        col("encoding"), col("status").cast("long").as("status"),
-        TextFunctions.tokenCount(col("main_text")).as("n_tokens"))
-    }),
-
-    // ---- REAL baseline JPEG decode (Huffman + DCT, the format most
-    // web images use): per-channel sums through the full marker walk /
-    // entropy decode / dequant / IDCT over the flat-even-block fixture,
-    // where quantization is provably the identity — analytic oracle
-    // through a genuinely lossy codec. Even ids grayscale, odd ids the
-    // 4:4:4 color path with gray values (exact YCbCr). ----------------------
-    "q395_jpeg_stats" -> ((s, dir) =>
-      Multimodal.imageStats(Multimodal.syntheticJpegMedia(t(s, dir, "documents")))
-        .toDF()
-        .select(col("media_id"), col("width"), col("height"), col("n_pixels"),
-          col("sum_b"), col("sum_g"), col("sum_r"))),
-
-    // ---- JPEG perceptual fingerprints: the q349 dHash grid over the
-    // DECODED flat-block pixels — gray(x, y) = the block formula, so the
-    // oracle replays the grid analytically through the lossy codec. --------
-    "q396_jpeg_dhash" -> ((s, dir) =>
-      Multimodal.imageDhash(Multimodal.syntheticJpegMedia(t(s, dir, "documents")))
-        .toDF()
-        .select(col("media_id"), col("width"), col("height"), col("dhash"))),
-
-    // ---- third-format normalization invariant: JPEG → PNG transcode
-    // (real decode, lossless re-emit) must preserve every pixel sum —
-    // the oracle is q395's VERBATIM, so any disagreement between the
-    // JPEG decoder and the PNG writer/decoder chain goes red. ---------------
-    "q397_jpeg_transcode" -> ((s, dir) =>
-      Multimodal.imageStats(
-        Multimodal.transcodeToPng(
-          Multimodal.syntheticJpegMedia(t(s, dir, "documents"))))
-        .toDF()
-        .select(col("media_id"), col("width"), col("height"), col("n_pixels"),
-          col("sum_b"), col("sum_g"), col("sum_r"))),
-
-    // ---- WET export roundtrip: extracted text re-wrapped as standard
-    // `conversion` records (Content-Type text/plain + WARC-Refers-To),
-    // member-per-record gzip — the WRITE half of the crawl interchange
-    // story — then parsed back by the same strict framing. The oracle
-    // derives grouping/order/headers/text from the id formula (the q384
-    // idiom with the conversion envelope). ----------------------------------
-    "q398_wet_export" -> ((s, dir) => {
-      val pages = t(s, dir, "documents").select(col("doc_id"), col("text"),
-        concat(lit("https://host"), (col("doc_id") % 20).cast("string"),
-          lit(".example.com/p/"), col("doc_id").cast("string")).as("uri"))
-      graft.ops.Warc.parseWarc(graft.ops.Warc.toWet(pages))
-        .toDF()
-        .select(col("media_id").as("file_id"), col("record_idx"),
-          col("warc_type"), col("target_uri"),
-          col("n_headers").cast("long").as("n_headers"), col("n_bytes"),
-          col("payload").cast("string").as("text_out"))
-    }),
-
-    // ---- robots `Sitemap:` declarations (the sitemaps.org extension):
-    // GLOBAL scope — the second declaration sits inside a foreign
-    // user-agent group and must still extract — with comment stripping
-    // and file order; feeds Crawl.sitemapEntries discovery (q372). The
-    // oracle derives both URLs from the id formula. -------------------------
-    "q399_robots_sitemaps" -> ((s, dir) => {
-      val id = col("doc_id")
-      val robots = concat(
-        lit("User-agent: *\nDisallow: /private\n"),
-        lit("Sitemap: https://s"), (id % 6).cast("string"),
-        lit(".example.com/sitemap"), (id % 4).cast("string"), lit(".xml\n"),
-        when(id % 3 === 0,
-          concat(lit("User-agent: other\nSitemap: https://m"), (id % 5).cast("string"),
-            lit(".example.org/root.xml  # trailing comment\n")))
-          .otherwise(lit("")),
-        lit("Crawl-delay: 2\n"))
-      t(s, dir, "documents")
-        .select(id, posexplode(graft.ops.Robots.sitemapUrls(robots)))
-        .select(col("doc_id"), col("pos").cast("long").as("pos"),
-          col("col").as("sitemap_url"))
-    }),
-
-    // ---- <base href> resolution (the HTML spec: the FIRST base element
-    // re-roots every relative link on the page): even ids declare a CDN
-    // base, odd ids none — the same two relative anchors must resolve to
-    // DIFFERENT roots accordingly. The oracle derives both resolutions
-    // from the id formula. --------------------------------------------------
-    "q400_base_href" -> ((s, dir) => {
-      val id = col("doc_id")
-      val pageUrl = concat(lit("https://site"), (id % 4).cast("string"),
-        lit(".github.io/dir/index.html"))
-      val html = concat(
-        when(id % 2 === 0,
-          concat(lit("<head><base href=\"https://cdn"), (id % 3).cast("string"),
-            lit(".example.net/assets/\"><base href=/ignored-second></head>")))
-          .otherwise(lit("<head></head>")),
-        lit("<a href=/local/"), id.cast("string"), lit(">abs</a>"),
-        lit("<a href=rel/p"), (id % 5).cast("string"), lit(".html>rel</a>"))
-      val pages = t(s, dir, "documents")
-        .select(id, pageUrl.as("page_url"), html.as("html"))
-      pages
-        .select(col("doc_id"),
-          coalesce(Html.baseHref(col("html")), col("page_url")).as("__base"),
-          posexplode(Html.extractLinks(col("html"))))
-        .select(col("doc_id"), col("pos").cast("long").as("pos"),
-          Urls.resolve(col("__base"), col("col")).as("url"))
-    }),
-
-    // ---- page metadata extraction (title + meta description + og:title
-    // with content-before-name attribute order on every 3rd doc): the
-    // most-used curation columns, entity-decoded and squished like all
-    // extracted text. Oracle derives each from the id formula. -------------
-    "q401_page_meta" -> ((s, dir) => {
-      val id = col("doc_id")
-      val html = concat(
-        lit("<head><title> Doc "), id.cast("string"),
-        lit(" &amp; Co </title>\n"),
-        when(id % 3 === 0,
-          concat(lit("<meta content=\"Summary "), (id % 7).cast("string"),
-            lit(" here.\" name=\"description\">")))
-          .otherwise(concat(lit("<meta name=\"description\" content=\"Summary "),
-            (id % 7).cast("string"), lit(" here.\">"))),
-        when(id % 4 === 0,
-          concat(lit("<meta property=\"og:title\" content='OG "),
-            (id % 5).cast("string"), lit("'>"))).otherwise(lit("")),
-        lit("</head><body><p>body</p></body>"))
-      t(s, dir, "documents").select(
-        id,
-        Html.title(html).as("title"),
-        Html.metaContent(html, "description").as("description"),
-        Html.metaContent(html, "og:title").as("og_title"))
-    }),
-
-    // ---- redirect edges from archived 3xx responses (the crawl loop's
-    // third discovery input besides anchors and sitemaps): 301s carry a
-    // RELATIVE Location (legal; must resolve against the record URI),
-    // 302s an absolute one, 200s contribute nothing. Oracle derives
-    // every edge from the id formula. ---------------------------------------
-    "q402_redirect_edges" -> ((s, dir) => {
-      import s.implicits._
-      val msgs = graft.io.Spread.toDefaultParallelism(
-        t(s, dir, "documents").select(col("doc_id")))
-        .as[Long]
-        .map { id =>
-          val uri = s"https://host${id % 20}.example.com/dir/p$id"
-          val head = (id % 4) match {
-            case 0 => s"HTTP/1.1 301 Moved Permanently\r\nLocation: /moved/m$id\r\n\r\n"
-            case 1 => s"HTTP/1.1 302 Found\r\nLocation: https://next${id % 3}.example.org/p$id\r\n\r\n"
-            case _ => "HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
-          }
-          (id, (head + "body").getBytes("US-ASCII"), uri)
-        }.toDF("doc_id", "payload", "uri")
-      graft.ops.Warc.redirectEdges(
-        graft.ops.Warc.parseWarc(graft.ops.Warc.syntheticWarcBytes(msgs)))
-    }),
-
-    // ---- HTTP body WIRE CODINGS undone inside archived responses: real
-    // crawls store the message as it crossed the wire — chunked transfer
-    // framing de-framed, gzip/deflate content codings inflated,
-    // chunked-over-gzip composed in the wire order, and an UNSUPPORTED
-    // coding (a br label over plain bytes, the mislabel case) surviving
-    // FLAGGED instead of silently dropping. Every leg's decoded body is
-    // the roundtrip identity; headers and flags from the id formula. -------
-    "q403_http_content_decode" -> ((s, dir) => {
-      import s.implicits._
-      val msgs = graft.io.Spread.toDefaultParallelism(
-        t(s, dir, "documents").select(col("doc_id"), col("text")))
-        .as[(Long, String)]
-        .map { case (id, text) =>
-          import graft.functions.BinaryCodecs
-          val body = Option(text).getOrElse("").getBytes("UTF-8")
-          // chunked framing: 7-byte chunks (multibyte UTF-8 split mid-
-          // character on purpose — de-framing is byte-level), chunk
-          // extension on the first size line, one trailer field
-          def chunked(b: Array[Byte]): Array[Byte] = {
-            val out = new java.io.ByteArrayOutputStream()
-            var first = true
-            b.grouped(7).foreach { c =>
-              val ext = if (first) ";note=fixture" else ""
-              first = false
-              out.write((c.length.toHexString + ext + "\r\n").getBytes("US-ASCII"))
-              out.write(c)
-              out.write("\r\n".getBytes("US-ASCII"))
-            }
-            out.write("0\r\nX-Trailer: t\r\n\r\n".getBytes("US-ASCII"))
-            out.toByteArray
-          }
-          val (codingHdrs, wire) = (id % 6) match {
-            case 0 => ("", body)
-            case 1 => ("Transfer-Encoding: chunked\r\n", chunked(body))
-            case 2 => ("Content-Encoding: gzip\r\n", BinaryCodecs.gzip(body))
-            case 3 => ("Content-Encoding: deflate\r\n", BinaryCodecs.zlibDeflate(body))
-            case 4 => ("Content-Encoding: gzip\r\nTransfer-Encoding: chunked\r\n",
-              chunked(BinaryCodecs.gzip(body)))
-            case _ => ("Content-Encoding: br\r\n", body) // mislabeled: plain bytes
-          }
-          val head = "HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\n" +
-            codingHdrs + s"X-Doc: $id\r\n\r\n"
-          (id, head.getBytes("US-ASCII") ++ wire,
-            s"https://host${id % 20}.example.com/p/$id")
-        }.toDF("doc_id", "payload", "uri")
-      graft.ops.Warc.httpResponses(
-        graft.ops.Warc.parseWarc(graft.ops.Warc.syntheticWarcBytes(msgs)))
-        .toDF()
-        .select(
-          regexp_extract(col("target_uri"), "([0-9]+)$", 1).cast("long").as("doc_id"),
-          col("n_headers").cast("long").as("n_headers"),
-          col("content_encoding"),
-          col("body_decoded"),
-          col("body").cast("string").as("text_out"))
-    }),
-
-    // ---- WAT export roundtrip: the curation fields (status, content
-    // type, title, meta description, base, outlinks) extracted by the
-    // REAL Html operators, wrapped as Common Crawl-style `metadata`
-    // records with a deterministic JSON envelope, member-per-record
-    // gzip, then parsed back by the strict framing. The oracle rebuilds
-    // the envelope STRING from the id formulas — field order and JSON
-    // shape are interchange surface, so they are pinned byte-for-byte
-    // (the q398 idiom with the metadata envelope). --------------------------
-    "q404_wat_export" -> ((s, dir) => {
-      val id = col("doc_id")
-      val html = concat(
-        lit("<head><title>Doc "), id.cast("string"), lit("</title>"),
-        lit("<base href=\"https://cdn"), (id % 3).cast("string"),
-        lit(".example.net/assets/\">"),
-        lit("<meta name=\"description\" content=\"Summary "),
-        (id % 7).cast("string"), lit(" here.\">"),
-        lit("</head><body><a href=\"https://a"), (id % 4).cast("string"),
-        lit(".example.org/x\">l1</a><a href=\"/local/"), id.cast("string"),
-        lit("\">l2</a></body>"))
-      val pages = t(s, dir, "documents").select(
-        id,
-        concat(lit("https://host"), (id % 20).cast("string"),
-          lit(".example.com/p/"), id.cast("string")).as("uri"),
-        (lit(200) + (id % 3) * 2).as("status"),
-        lit("text/html").as("content_type"),
-        Html.title(html).as("title"),
-        Html.metaContent(html, "description").as("meta_desc"),
-        Html.baseHref(html).as("base"),
-        Html.extractLinks(html).as("links"))
-      graft.ops.Warc.parseWarc(graft.ops.Warc.toWat(pages))
-        .toDF()
-        .select(col("media_id").as("file_id"), col("record_idx"),
-          col("warc_type"), col("target_uri"),
-          col("n_headers").cast("long").as("n_headers"),
-          col("payload").cast("string").as("envelope"))
-    }),
-
-    // ---- publisher-declared discovery COMPOSITE: robots `Sitemap:`
-    // lines (q399) → broadcast join to the fetched sitemap FILES —
-    // gzip'd on even file residues, plain on odd, exactly how real
-    // sitemaps ship — → gunzip → entry explode (q372). A declaration
-    // whose file was never fetched contributes nothing. Oracle derives
-    // every entry from the url's own residues. ------------------------------
-    "q405_sitemap_discovery" -> ((s, dir) => {
-      import s.implicits._
-      val id = col("doc_id")
-      val robots = concat(
-        lit("User-agent: *\nDisallow: /private\n"),
-        lit("Sitemap: https://s"), (id % 6).cast("string"),
-        lit(".example.com/sitemap"), (id % 4).cast("string"), lit(".xml.gz\n"),
-        when(id % 3 === 0, lit("Sitemap: https://unfetched.example.org/root.xml\n"))
-          .otherwise(lit("")))
-      val robotsPages = t(s, dir, "documents").select(id, robots.as("robots"))
-      // the 24 distinct declared files; content derived from the url's
-      // own residues so the join is the only link between the two sides
-      val files = graft.io.Spread.toDefaultParallelism(
-        t(s, dir, "documents").select((id % 6).as("a"), (id % 4).as("b")).distinct())
-        .as[(Long, Long)]
-        .map { case (a, b) =>
-          val xml = "<?xml version=\"1.0\"?><urlset>" +
-            s"<url><loc>https://s$a.example.com/p$b/1</loc><lastmod>2024-0${(a + b) % 9 + 1}-01</lastmod></url>" +
-            s"<url><loc>https://s$a.example.com/p$b/2</loc></url>" +
-            (if (a % 2 == 0) s"<sitemap><loc>https://s$a.example.com/more$b.xml.gz</loc></sitemap>" else "") +
-            "</urlset>"
-          val bytes = xml.getBytes("UTF-8")
-          (s"https://s$a.example.com/sitemap$b.xml.gz",
-            if (b % 2 == 0) graft.functions.BinaryCodecs.gzip(bytes) else bytes)
-        }.toDF("url", "payload")
-      Crawl.sitemapDiscovery(robotsPages, files)
-    }),
-
-    // ---- PROGRESSIVE JPEG decode (SOF2 — a double-digit share of web
-    // JPEGs; a corpus pipeline that quarantines them all has a silent
-    // coverage hole in image dedup): the q395 flat-block fixture
-    // re-emitted as progressive scan scripts (spectral selection +
-    // DC/AC successive approximation), decoded through the full Annex G
-    // accumulation. The oracle is q395's VERBATIM — progressive and
-    // baseline must land on identical pixels. -------------------------------
-    "q406_jpeg_progressive" -> ((s, dir) =>
-      Multimodal.imageStats(
-        Multimodal.syntheticProgressiveJpegMedia(t(s, dir, "documents")))
-        .toDF()
-        .select(col("media_id"), col("width"), col("height"), col("n_pixels"),
-          col("sum_b"), col("sum_g"), col("sum_r"))),
-
-    // ---- the FLAGSHIP day-one corpus composite, in ONE job: every
-    // doc_id % 10 == 7 page is a byte-identical CLONE of doc_id - 1's
-    // content (served under its own URL in the OTHER charset leg), the
-    // corpus ships as `.warc.gz` wire messages, and the chain runs
-    // container parse → HTTP split → charset decode → main-content →
-    // SimHash fingerprint dedup (clones collapse across encodings —
-    // decode-normalizes-before-dedup, the property that matters) →
-    // BPE-token-exact window packing of the SURVIVORS. Composes
-    // q384/q394/q359/q353/q391, each individually oracled; the oracle
-    // replays the entire chain in SQL (fixture → main-content → group
-    // by text → pinned-merge encode → window arithmetic). -------------------
-    "q407_corpus_composite" -> ((s, dir) => {
-      import s.implicits._
-      val base = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val withCid = base.select(col("doc_id").as("real_id"),
-        when(col("doc_id") % 10 === 7, col("doc_id") - 1)
-          .otherwise(col("doc_id")).as("doc_id"))
-      // page content keyed on the CONTENT id (clones byte-identical),
-      // URI on the real id
-      val joined = withCid.join(base, Seq("doc_id"))
-      val htmlDocs = joined.select(col("real_id"),
-        concat(syntheticHtml,
-          lit("\n<p>caf\u00e9 filler prose line stays in the corpus</p>")).as("html"))
-        .select(col("real_id").as("doc_id"), col("html"),
-          concat(lit("https://host"), (col("real_id") % 20).cast("string"),
-            lit(".example.com/p/"), col("real_id").cast("string")).as("uri"))
-      val msgs = graft.io.Spread.toDefaultParallelism(htmlDocs)
-        .as[(Long, String, String)]
-        .map { case (id, html, uri) =>
-          import java.nio.charset.StandardCharsets._
-          val (ct, body) =
-            if (id % 2 == 1) ("text/html; charset=iso-8859-1", html.getBytes(ISO_8859_1))
-            else ("text/html",
-              Array(0xFF.toByte, 0xFE.toByte) ++ html.getBytes(UTF_16LE))
-          val head = s"HTTP/1.1 200 OK\r\nContent-Type: $ct\r\nX-Doc: $id\r\n\r\n"
-          (id, head.getBytes("US-ASCII") ++ body, uri)
-        }.toDF("doc_id", "payload", "uri")
-      val pages = graft.ops.Warc.decodePages(
-        graft.ops.Warc.parseWarc(graft.ops.Warc.syntheticWarcBytes(msgs))).toDF()
-      // Staged (r17 optimization): `content` fans into FOUR consumers
-      // (simhash, the two verify joins, the anti-join base), and each
-      // broadcast build re-ran the whole WARC-synthesize/parse/HTTP-decode/
-      // charset/main-content chain — 8 concurrent ~2-2.5 s rebuild jobs
-      // profiled at sf0.1. One narrow (doc_id, text) materialization
-      // replaces them; measured 13-14 s -> ~6 s.
-      val content = graft.ops.Staging.stage(
-        Html.mainContent(pages).select(
-          regexp_extract(col("target_uri"), "([0-9]+)$", 1).cast("long").as("doc_id"),
-          col("main_text").as("text")), reliable = false)
-      // SimHash dedup with the repo's LSH discipline: banded candidates,
-      // then VERIFY by exact text before dropping — raw 64-bit
-      // fingerprint equality alone over-collapses (similar short docs
-      // genuinely collide; observed live at sf0.01), and a dedup that
-      // drops non-duplicates is corpus loss, the worst failure mode
-      val candidates = Dedup.hammingPairs(
-        Dedup.simhashText(content).select(col("id"), col("simhash").as("hash")),
-        maxHamming = 0, bands = 4)
-      val verified = candidates
-        .join(content.select(col("doc_id").as("a_id"), col("text").as("__ta")), "a_id")
-        .join(content.select(col("doc_id").as("b_id"), col("text").as("__tb")), "b_id")
-        .where(col("__ta") === col("__tb"))
-      val kept = content.join(
-        verified.select(col("b_id").as("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-      // tokenizer trained on the raw corpus (q391's trainer), applied to
-      // the cleaned survivors; window packing is token-exact
-      val merges = Ngrams.bpeMerges(t(s, dir, "documents"), rounds = 16, batch = 8)
-        .orderBy("merge_rank").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
-      val counts = Ngrams.bpeEncodeStats(kept, merges)
-        .select(col("doc_id"), col("n_subwords").as("n_tokens"))
-      SequencePack.concatChunk(counts, windowSize = 256)
-    }),
-
-    // ---- quarantine made VISIBLE: parseWarc drops malformed crawl
-    // files whole (the right framing call), and this surfaces exactly
-    // those files as rows — a corpus job that silently loses crawl
-    // files is an ops incident nobody can see. Every file whose id sits
-    // on the corruption residue is truncated mid-member; the oracle
-    // derives the quarantine set from the residue. --------------------------
-    "q408_warc_quarantine" -> ((s, dir) => {
-      import s.implicits._
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val media = graft.ops.Warc.syntheticWarc(docs, docsPerFile = 8)
-        .map(m => if (m.media_id % 5 == 2) m.copy(payload = m.payload.dropRight(3)) else m)
-      graft.ops.Warc.quarantinedFiles(media)
-        .select(col("media_id").as("file_id"))
-    }),
-
-    // ---- revisit-record resolution: real crawlers archive UNCHANGED
-    // content as a body-less `revisit` record pointing at the original
-    // via WARC-Refers-To (the identical-payload-digest profile); a
-    // corpus read that ignores them loses every re-crawled-but-unchanged
-    // page. Every % 10 == 7 doc archives as a revisit of its
-    // predecessor; resolution inherits the ORIGINAL's payload under the
-    // revisit's own URI. Oracle: a documents self-join on the residue. --
-    "q409_warc_revisit" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      graft.ops.Warc.resolveRevisits(
-        graft.ops.Warc.parseWarc(graft.ops.Warc.syntheticWarcRevisits(docs)))
-        .select(
-          regexp_extract(col("target_uri"), "([0-9]+)$", 1).cast("long").as("doc_id"),
-          col("record_id"), col("was_revisit"),
-          col("payload").cast("string").as("text_out"))
-    }),
-
-    // ---- WAT parse-back (the READ half of q404's writer): metadata
-    // records' JSON envelopes come back out as typed columns next to
-    // the Refers-To source pointer — the roundtrip that proves the
-    // envelope is real interchange, not write-only bytes. Same fixture
-    // as q404; every field from the id formula. ----------------------------
-    "q410_wat_ingest" -> ((s, dir) => {
-      val id = col("doc_id")
-      val pages = t(s, dir, "documents").select(
-        id,
-        concat(lit("https://host"), (id % 20).cast("string"),
-          lit(".example.com/p/"), id.cast("string")).as("uri"),
-        (lit(200) + (id % 3) * 2).as("status"),
-        lit("text/html").as("content_type"),
-        concat(lit("Doc "), id.cast("string")).as("title"),
-        concat(lit("Summary "), (id % 7).cast("string"), lit(" here.")).as("meta_desc"),
-        concat(lit("https://cdn"), (id % 3).cast("string"),
-          lit(".example.net/assets/")).as("base"),
-        array(concat(lit("https://a"), (id % 4).cast("string"), lit(".example.org/x")),
-          concat(lit("/local/"), id.cast("string"))).as("links"))
-      graft.ops.Warc.watEnvelopes(
-        graft.ops.Warc.parseWarc(graft.ops.Warc.toWat(pages)))
-        .select(
-          regexp_extract(col("target_uri"), "([0-9]+)$", 1).cast("long").as("doc_id"),
-          col("refers_to"), col("status").cast("long").as("status"),
-          col("content_type"), col("title"), col("meta_desc"), col("base"),
-          size(col("links")).cast("long").as("n_links"),
-          element_at(col("links"), 2).as("last_link"))
-    }),
-
-    // ---- host-level TEMPLATE line removal (the CCNet/RefinedWeb
-    // line-frequency boilerplate filter): lines repeating across >= 3
-    // pages of the SAME host (cookie banner, per-host navbar, the
-    // even-page promo) drop from every page; unique prose and the
-    // low-frequency shared line survive. The oracle replays the whole
-    // frequency computation in SQL, so thresholds are emergent and the
-    // fixture needs no per-sf constants. -------------------------------------
-    "q411_template_removal" -> ((s, dir) => {
-      val id = col("doc_id")
-      val text = concat(
-        lit("Cookie banner accept\n"),
-        lit("NavBar for host "), (id % 5).cast("string"), lit("\n"),
-        lit("unique prose "), id.cast("string"), lit(" "),
-        coalesce(col("text"), lit("")), lit("\n"),
-        lit("rare pair "), expr("doc_id div 250").cast("string"),
-        when(id % 2 === 0,
-          concat(lit("\npromo banner "), (id % 5).cast("string")))
-          .otherwise(lit("")))
-      val pages = t(s, dir, "documents").select(id,
-        concat(lit("h"), (id % 5).cast("string")).as("host"), text.as("text"))
-      Html.removeTemplateLines(pages, minPages = 3)
-        .select(col("doc_id"), col("clean_text"))
-    }),
-
-    // ---- request/response pairing: crawlers archive BOTH fetch sides,
-    // the request naming its response via WARC-Concurrent-To — fetch
-    // provenance (which UA got this page, what was asked for) next to
-    // the response envelope. Completes the record-type surface
-    // (warcinfo/response/revisit/conversion/metadata/request). Oracle:
-    // every field from the id formula. --------------------------------------
-    "q412_warc_request_pairs" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      graft.ops.Warc.requestResponsePairs(
-        graft.ops.Warc.parseWarc(graft.ops.Warc.syntheticWarcRequestPairs(docs)))
-        .select(
-          regexp_extract(col("target_uri"), "([0-9]+)$", 1).cast("long").as("doc_id"),
-          col("method"), col("target"), col("host"), col("user_agent"),
-          col("req_headers").cast("long").as("req_headers"),
-          col("status").cast("long").as("status"), col("content_type"))
-    }),
-
-    // ---- RECURSIVE sitemap discovery: real publishers shard large
-    // sitemaps behind a <sitemapindex>, so the single-level walk (q405)
-    // sees only pointers — this follows them one level: robots declares
-    // the index file, depth 1 yields its two child pointers, depth 2
-    // the children's url entries; one child per a=5 host family was
-    // never fetched and contributes nothing (the fetch-gap rule).
-    // Mixed gzip/plain files on both levels. Oracle: every row from the
-    // url's own residues. ---------------------------------------------------
-    "q413_sitemap_recursive" -> ((s, dir) => {
-      import s.implicits._
-      val id = col("doc_id")
-      val robots = concat(lit("User-agent: *\n"),
-        lit("Sitemap: https://s"), (id % 6).cast("string"),
-        lit(".example.com/index"), (id % 4).cast("string"), lit(".xml.gz\n"))
-      val robotsPages = t(s, dir, "documents").select(id, robots.as("robots"))
-      val files = graft.io.Spread.toDefaultParallelism(
-        t(s, dir, "documents").select((id % 6).as("a"), (id % 4).as("b")).distinct())
-        .as[(Long, Long)]
-        .flatMap { case (a, b) =>
-          import graft.functions.BinaryCodecs
-          val host = s"https://s$a.example.com"
-          def enc(gzip: Boolean, xml: String): Array[Byte] = {
-            val bytes = xml.getBytes("UTF-8")
-            if (gzip) BinaryCodecs.gzip(bytes) else bytes
-          }
-          val index = (s"$host/index$b.xml.gz",
-            enc(b % 2 == 0, "<?xml version=\"1.0\"?><sitemapindex>" +
-              s"<sitemap><loc>$host/child${b}_0.xml.gz</loc></sitemap>" +
-              s"<sitemap><loc>$host/child${b}_1.xml.gz</loc></sitemap></sitemapindex>"))
-          val children = (0 to 1).map { c =>
-            (s"$host/child${b}_$c.xml.gz",
-              enc((b + c) % 2 == 1, "<?xml version=\"1.0\"?><urlset>" +
-                s"<url><loc>$host/p$b/$c/1</loc><lastmod>2024-0${(a + c) % 9 + 1}-02</lastmod></url>" +
-                s"<url><loc>$host/p$b/$c/2</loc></url></urlset>"))
-          }
-          (index +: children).filterNot { case (u, _) =>
-            a == 5 && u.endsWith("_1.xml.gz") // the never-fetched child
-          }
-        }.toDF("url", "payload")
-      Crawl.sitemapDiscoveryRecursive(robotsPages, files, maxDepth = 2)
-    }),
-
-    // ---- per-document LM fluency (the CCNet-style quality-filter
-    // score): the q129 Kneser-Ney table trained on the corpus, each
-    // doc's bigrams scored against it, mean probability in exact ppm —
-    // unseen/pruned bigrams contribute zero by contract. The oracle
-    // replays the whole chain: the q129 table derivation plus the
-    // doc-keyed bigram join and integral-mean fold. ------------------------
-    "q414_lm_fluency" -> ((s, dir) =>
-      Ngrams.lmFluencyPpm(t(s, dir, "documents"), minCount = 3)
-        .select(col("doc_id"), col("n_bigrams"), col("fluency_ppm"))),
-
-    // ---- agent-scoped robots admission (q363's full-REP sibling):
-    // bodies carry THREE groups (an images bot, the crawler's own
-    // token, star-disallow-all); the requesting agent varies per doc and
-    // must select its group by longest-token prefix match with star
-    // fall-through — a crawler reading only the star group here would
-    // fetch NOTHING. The oracle derives every decision from the
-    // (id % 4 agent, id % 5 path, id % 2 allow-line) formula. ---------------
-    "q415_robots_agent_groups" -> ((s, dir) => {
-      val m2 = (col("doc_id") % 2).cast("string")
-      val robots = concat(
-        lit("User-agent: graftbot-images\nDisallow: /img\n\n" +
-          "User-agent: graftbot\nDisallow: /private\n"),
-        when(col("doc_id") % 2 === 0,
-          concat(lit("Allow: /private/ok"), m2, lit("\n"))).otherwise(lit("")),
-        lit("\nUser-agent: *\nDisallow: /\n"))
-      val agent = when(col("doc_id") % 4 === 0, lit("graftbot/1.0"))
-        .when(col("doc_id") % 4 === 1, lit("graftbot-images/2.0"))
-        .when(col("doc_id") % 4 === 2, lit("otherbot"))
-        .otherwise(lit("GraftBot"))
-      val path = when(col("doc_id") % 5 === 0, concat(lit("/private/ok"), m2, lit("/page")))
-        .when(col("doc_id") % 5 === 1, lit("/private/secret"))
-        .when(col("doc_id") % 5 === 2, lit("/img/banner"))
-        .when(col("doc_id") % 5 === 3, lit("/public/a"))
-        .otherwise(lit("/x"))
-      graft.ops.Robots.filterAllowedForAgent(
-        t(s, dir, "documents").select(col("doc_id"), robots.as("robots"),
-          agent.as("agent"), path.as("path")),
-        col("agent"))
-        .select(col("doc_id"), col("agent"), col("path"), col("allowed"))
-    }),
-
-    // ---- CDXJ index export (the third Common Crawl sidecar): a PLAIN
-    // .warc corpus of HTTP-message responses indexed to one line per
-    // record — SURT key, WARC-Date timestamp, JSON block with the
-    // random-access (offset, length) span. The plain layout makes every
-    // span ANALYTIC: the oracle rebuilds offsets from the record-framing
-    // arithmetic (header string lengths + Content-Length) and the whole
-    // line byte-for-byte. --------------------------------------------------
-    "q416_cdx_export" -> ((s, dir) =>
-      graft.ops.Warc.toCdxj(
-        graft.ops.Warc.syntheticWarcBytes(cdxHttpDocs(s, dir),
-          docsPerFile = 8, gzipPerRecord = false),
-        filenameCol = concat(lit("crawl-"), col("media_id"), lit(".warc")))
-        .select(col("media_id"), col("record_idx"), col("surt_key"),
-          col("ts"), col("url"), col("status"), col("mime"), col("digest"),
-          col("offset"), col("length"), col("filename"), col("cdxj_line"))),
-
-    // ---- CDXJ parse-back (the READ half of q416's writer): the same
-    // corpus's lines through [[Warc.cdxjEntries]] into typed columns;
-    // the oracle derives every field straight from the id formulas. --------
-    "q417_cdx_ingest" -> ((s, dir) =>
-      graft.ops.Warc.cdxjEntries(
-        graft.ops.Warc.toCdxj(
-          graft.ops.Warc.syntheticWarcBytes(cdxHttpDocs(s, dir),
-            docsPerFile = 8, gzipPerRecord = false),
-          filenameCol = concat(lit("crawl-"), col("media_id"), lit(".warc")))
-          .select(col("cdxj_line")))),
-
-    // ---- GIF decode (the q150/q406 family, fourth image format): REAL
-    // GIF89a files — LZW-compressed, interlaced on even ids, GCE on odd
-    // ids, an ignored second frame every 5th — through the first-frame
-    // decoder into integer-exact pixel stats; every pixel replays from
-    // the palette/index id formulas in the oracle. ------------------------
-    "q418_gif_decode" -> ((s, dir) =>
-      Multimodal.imageStats(Multimodal.syntheticGifMedia(
-        t(s, dir, "documents").select(col("doc_id"))))
-        .toDF()
-        .select(col("media_id"), col("width"), col("height"), col("n_pixels"),
-          col("sum_b"), col("sum_g"), col("sum_r"))),
-
-    // ---- per-language quality gate (the CCNet pipeline users actually
-    // run, fluency as a FILTER not a report): q14 lang-ID partitions the
-    // corpus → one KN fluency model PER LANGUAGE in a single plan
-    // (lmFluencyPpmBy) → each language keeps its at-or-above-integral-
-    // mean docs → the global token budget apportions across languages by
-    // surviving token mass (q166's largest-remainder). The oracle replays
-    // the whole chain: lang-ID, the per-language q414 derivation, the
-    // mean gate, and the apportionment. --------------------------------------
-    "q419_lang_quality_gate" -> ((s, dir) => {
-      // staged ONCE: the composite fans this frame into four branches
-      // (KN table, doc bigrams, the score base, token counts), and the
-      // lang-ID column is the most expensive projection in the chain —
-      // recomputing it per branch measured ~4x the staged plan
-      val docs = graft.ops.Staging.stage(
-        t(s, dir, "documents").select(col("doc_id"), col("text"),
-          TextFunctions.langGuessFromPadded(
-            TextFunctions.paddedText(col("text"))).as("lang")),
-        reliable = false)
-      // Staged (r17 optimization): `scored` is referenced by thr AND kept,
-      // and `counts` three more times downstream (apportion reads it twice,
-      // the assembly join once) — unstaged, the corpus-tokenize + KN-join
-      // subtree re-executed ~7x (137 jobs profiled, 11.2 s at sf0.1).
-      // Both frames are narrow (scored: 4 cols/doc; counts/thr: one row
-      // per language); staging them runs the chain once. Measured
-      // 11.2 s -> ~4.5 s, identical results.
-      val scored = graft.ops.Staging.stage(
-        Ngrams.lmFluencyPpmBy(docs, "lang", minCount = 3), reliable = false)
-      val thr = graft.ops.Staging.stage(
-        scored.groupBy("lang").agg(
-          expr("sum(fluency_ppm) div count(1)").as("thr"),
-          count(lit(1)).as("n_docs")), reliable = false)
-      val toks = docs.select(col("doc_id"),
-        TextFunctions.tokenCount(col("text")).as("tok"))
-      val kept = scored.join(thr.select("lang", "thr"), Seq("lang"))
-        .where(col("fluency_ppm") >= col("thr"))
-        .join(toks, Seq("doc_id"))
-      val counts = graft.ops.Staging.stage(
-        kept.groupBy("lang")
-          .agg(count(lit(1)).as("n_kept"), sum("tok").as("tokens")),
-        reliable = false)
-      Sampling.apportion(counts.select(col("lang"), col("tokens")),
-          "lang", "tokens", budget = 100000L)
-        .join(counts.select("lang", "n_kept"), Seq("lang"))
-        .join(thr, Seq("lang"))
-        .select(col("lang"), col("n_docs"), col("thr"), col("n_kept"),
-          col("tokens"), col("alloc"))
-    }),
-
-    // ---- feed-driven URL discovery (RSS/Atom, the second publisher-
-    // declared channel after sitemaps): pages declare feeds via
-    // <link rel=alternate> in BOTH dialects and quoting/attribute-order
-    // variants, relative hrefs resolve against the page URL, declared
-    // feeds join the fetched files (gzip'd or plain; one host and one
-    // atom shard never fetched — the fetch-gap rule), entries explode in
-    // document order. Every row derives from the id formulas. ---------------
-    "q420_feed_discovery" -> ((s, dir) => {
-      import s.implicits._
-      val id = col("doc_id")
-      val pageUrl = concat(lit("https://host"), (id % 12).cast("string"),
-        lit(".example.com/p/"), id.cast("string"))
-      val html = concat(
-        lit("<html><head>"),
-        when(id % 3 =!= 2, concat(
-          lit("<link rel=\"alternate\" type=\"application/rss+xml\" href=\"/feed"),
-          (id % 4).cast("string"), lit(".xml\">"))).otherwise(lit("")),
-        when(id % 2 === 0, concat(
-          lit("<link type='application/atom+xml' rel='alternate nofollow' " +
-            "href='https://feeds.example.org/atom"),
-          (id % 5).cast("string"), lit(".xml'>"))).otherwise(lit("")),
-        lit("<link rel=\"stylesheet\" href=\"/style.css\"></head><body></body></html>"))
-      val pages = t(s, dir, "documents")
-        .select(id, pageUrl.as("page_url"), html.as("html"))
-      val files = graft.io.Spread.toDefaultParallelism(
-        t(s, dir, "documents").select((id % 12).as("m"), (id % 4).as("k")).distinct())
-        .as[(Long, Long)]
-        .flatMap { case (m, k) =>
-          import graft.functions.BinaryCodecs
-          def enc(gzip: Boolean, xml: String): Array[Byte] = {
-            val b = xml.getBytes("UTF-8")
-            if (gzip) BinaryCodecs.gzip(b) else b
-          }
-          val host = s"https://host$m.example.com"
-          val rss = (s"$host/feed$k.xml",
-            enc((m + k) % 2 == 0, "<rss><channel>" +
-              s"<item><title>a</title><link>$host/a/$k/1</link></item>" +
-              s"<item><link> $host/a/$k/2 </link></item>" +
-              "<item><title>no link</title></item></channel></rss>"))
-          val atoms = (0 to 4).map { j =>
-            (s"https://feeds.example.org/atom$j.xml",
-              enc(j % 2 == 1, "<feed>" +
-                s"""<entry><link rel="alternate" href="https://ex.org/e/$j/1"/></entry>""" +
-                s"""<entry><title>t</title><link href='https://ex.org/e/$j/2'/></entry>""" +
-                "<entry><title>no link</title></entry></feed>"))
-          }
-          // host 11's RSS and atom shard 4 are never fetched (fetch gap)
-          (rss +: atoms).filterNot { case (u, _) =>
-            u.startsWith("https://host11.") || u.endsWith("atom4.xml")
-          }
-        }.toDF("url", "payload").dropDuplicates("url")
-      Crawl.feedDiscovery(pages, files)
-    }),
-
-    // ---- agent-scoped fetch budget (q380 ∘ q415): each host's robots
-    // quotes a FAST delay for the preferred crawler and a slow star
-    // delay for everyone else; half the frontier fetches as the
-    // preferred agent, half as a foreign one, and the politeness
-    // scheduler folds the per-agent hints per host (max wins, default
-    // when nobody opined). The oracle derives every hint from the
-    // (agent, host) formula and replays the fold + window. ------------------
-    "q421_agent_delay_schedule" -> ((s, dir) => {
-      val id = col("doc_id")
-      val h = id % 20
-      val robots = concat(
-        lit("User-agent: fastbot\nCrawl-delay: 0.25\nDisallow: /private\n\n" +
-          "User-agent: *\n"),
-        when(h % 5 === 0, lit("Disallow: /private"))
-          .otherwise(concat(lit("Crawl-delay: "), (h % 3 + 1).cast("string"),
-            lit(".5\nDisallow: /private"))))
-      val agent = when(id % 2 === 0, lit("FastBot/1.0")).otherwise(lit("slowbot"))
-      val frontier = graft.ops.Robots.withCrawlDelayForAgent(
-        t(s, dir, "documents").select(
-          concat(lit("http://host"), h.cast("string"), lit(".example.com/p/"),
-            id.cast("string")).as("url"),
-          (id * 7919 % 101).as("priority"),
-          robots.as("robots"), agent.as("agent")),
-        col("agent"))
-        .select(col("url"), col("priority"), col("delay_ms"))
-      Crawl.politenessScheduleWithDelays(frontier,
-        defaultDelayMs = 700L, maxPerHost = 6)
-    }),
-
-    // ---- the THREE-channel discovery frontier (q373 widened): anchors,
-    // robots-declared sitemaps and page-declared feeds all feed one
-    // frontier — a URL discovered by several channels collapses with its
-    // discovery count as priority (the sitemap page{v} family overlaps
-    // the anchor family by construction), robots drops /private, and the
-    // politeness window schedules per host. Never-fetched sitemap s5 and
-    // feed shard 3 contribute nothing (the fetch-gap rule). The oracle
-    // rebuilds all three legs from the id formulas and replays
-    // admission, the count fold and the window. ------------------------------
-    "q422_discovery_frontier" -> ((s, dir) => {
-      import s.implicits._
-      import graft.functions.BinaryCodecs
-      val id = col("doc_id")
-      val pageUrl = concat(lit("https://site"), (id % 4).cast("string"),
-        lit(".github.io/dir/index.html"))
-      val html = concat(
-        lit("<a href=\"https://h"), (id % 10).cast("string"),
-        lit(".example.org/page"), (id % 25).cast("string"), lit("\">x</a>"),
-        lit("<a href='https://h"), ((id + 3) % 10).cast("string"),
-        lit(".example.org/private/p"), (id % 5).cast("string"), lit("'>y</a>"),
-        lit("<a href=/local/l"), (id % 8).cast("string"), lit(">z</a>"),
-        lit("<link rel=\"alternate\" type=\"application/rss+xml\" href=\"/feed"),
-        (id % 4).cast("string"), lit(".xml\">"))
-      val robots = concat(
-        lit("User-agent: *\nDisallow: /private\nSitemap: https://s"),
-        (id % 6).cast("string"), lit(".example.com/sm.xml\n"))
-      val docs = t(s, dir, "documents")
-        .select(id, pageUrl.as("page_url"), html.as("html"), robots.as("robots"))
-      def enc(gzip: Boolean, xml: String): Array[Byte] = {
-        val b = xml.getBytes("UTF-8")
-        if (gzip) BinaryCodecs.gzip(b) else b
-      }
-      val smFiles = graft.io.Spread.toDefaultParallelism(
-        t(s, dir, "documents").select((id % 6).as("v")).distinct()
-          .where(col("v") =!= 5))
-        .as[Long].map { v =>
-          (s"https://s$v.example.com/sm.xml", enc(v % 2 == 0,
-            "<urlset>" +
-              s"<url><loc>https://h$v.example.org/page$v</loc></url>" +
-              s"<url><loc>https://h$v.example.org/sm/$v</loc></url></urlset>"))
-        }.toDF("url", "payload")
-      val feedFiles = graft.io.Spread.toDefaultParallelism(
-        t(s, dir, "documents").select((id % 4).as("k")).distinct()
-          .where(col("k") =!= 3))
-        .as[Long].map { k =>
-          (s"https://site$k.github.io/feed$k.xml", enc(k % 2 == 1,
-            "<rss><channel>" +
-              s"<item><link>https://h${k + 6}.example.org/feed/$k/1</link></item>" +
-              s"<item><link>https://h${k + 6}.example.org/feed/$k/2</link></item>" +
-              "</channel></rss>"))
-        }.toDF("url", "payload")
-      // Staged twice (r17 optimization): the admitted-URL frame and the
-      // grouped frontier are both narrow (one URL + one count), but the
-      // UNSTAGED plan carries the full three-channel discovery expression
-      // tree (~430 KB formatted) into politenessSchedule's canonicalize +
-      // PSL joins, and every AQE re-optimization re-walks it — measured
-      // 8.6-10 s unstaged vs 3.3 s staged at sf0.1 (same results; the
-      // politeness window now plans over a leaf).
-      val admitted = graft.ops.Staging.stage(
-        Crawl.discoveryAdmitted(docs, smFiles, feedFiles,
-          lit("User-agent: *\nDisallow: /private")), reliable = false)
-      val frontier = graft.ops.Staging.stage(
-        admitted.groupBy(col("url")).agg(count(lit(1)).as("priority")),
-        reliable = false)
-      Crawl.politenessSchedule(frontier, delayMs = 200L, maxPerHost = 4)
-    }),
-
-    // ---- the CDX CLUSTER index (Common Crawl's secondary index): the
-    // q416 line set globally sorted by SURT key via the range-
-    // partitioned two-phase scan, folded into 50-line shards — first/
-    // last key, line count, byte size and the shard's offset in the
-    // concatenated sorted index. The oracle rebuilds every line, sorts,
-    // and replays the shard arithmetic. --------------------------------------
-    "q423_cdx_cluster_idx" -> ((s, dir) =>
-      graft.ops.Warc.cdxClusterIndex(
-        graft.ops.Warc.toCdxj(
-          graft.ops.Warc.syntheticWarcBytes(cdxHttpDocs(s, dir),
-            docsPerFile = 8, gzipPerRecord = false),
-          filenameCol = concat(lit("crawl-"), col("media_id"), lit(".warc"))),
-        linesPerShard = 50)),
-
-    // ---- the two-seek CONSUMER path the cluster index exists for,
-    // paid end to end: a URL set (every 13≡5 doc, plus two guaranteed
-    // misses) → broadcast range lookup in the cluster index → parse
-    // ONLY the matching CDXJ shards → seek (filename, offset, length)
-    // into the containers → decode exactly those records, digests
-    // re-verified against the index's promise. Misses drop at the stage
-    // that discovers them (one sorting beyond every shard range, one
-    // inside the archive's host space but absent). The oracle replays the q416
-    // offset arithmetic + q423 shard arithmetic and serves the body
-    // straight from the documents table. ------------------------------------
-    "q424_random_access" -> ((s, dir) => {
-      import s.implicits._
-      val media = graft.ops.Staging.stage(
-        graft.ops.Warc.syntheticWarcBytes(cdxHttpDocs(s, dir),
-          docsPerFile = 8, gzipPerRecord = false).toDF(), reliable = false)
-        .as[graft.ops.Multimodal.MediaRow]
-      val lines = graft.ops.Staging.stage(
-        graft.ops.Warc.toCdxj(media,
-          filenameCol = concat(lit("crawl-"), col("media_id"), lit(".warc"))),
-        reliable = false)
-      val urls = t(s, dir, "documents").where(col("doc_id") % 13 === 5)
-        .select(concat(lit("https://host"), (col("doc_id") % 20).cast("string"),
-          lit(".example.com/p/"), col("doc_id").cast("string")).as("url"))
-        .unionByName(Seq(
-          "https://host0.example.com/p/nosuch", // in-range key, absent line
-          "https://zzz-archive.example.org/q"   // beyond every shard range
-        ).toDF("url"))
-      graft.ops.Warc.randomAccessFetch(
-        urls,
-        graft.ops.Warc.cdxClusterIndex(lines, linesPerShard = 50),
-        graft.ops.Warc.cdxShardFiles(lines, linesPerShard = 50),
-        media.toDF().select(
-          concat(lit("crawl-"), col("media_id"), lit(".warc")).as("filename"),
-          col("payload")))
-        .toDF()
-    }),
-
-    // ---- ISO-BMFF (MP4) container metadata: the moov/mvhd/trak/tkhd/
-    // mdhd/hdlr/stsd/stts box walk over the synthetic two-track corpus
-    // (video on every doc, audio on even docs) — one row per TRACK,
-    // dims from tkhd's 16.16 fixed point, frame counts from the stts
-    // runs, durations on each track's own media clock; every field an
-    // id formula, so the oracle is fully analytic. --------------------------
-    "q425_mp4_tracks" -> ((s, dir) =>
-      Multimodal.mp4Tracks(Multimodal.syntheticMp4s(t(s, dir, "documents")))),
-
-    // ---- MPEG audio metadata by frame-header walk (no audio decode):
-    // sync scan with strict tiling over the synthetic Layer III corpus
-    // — MPEG1 and MPEG2 clocks, CBR and alternating-bitrate VBR files,
-    // ID3v2/ID3v1 tags skipped — frame counts exact, duration on the
-    // sample clock, frame-0 bitrate + VBR flag; every field an id
-    // formula. --------------------------------------------------------------
-    "q427_mp3_meta" -> ((s, dir) =>
-      Multimodal.mp3Meta(Multimodal.syntheticMp3s(t(s, dir, "documents")))),
-
-    // ---- MP4 frame sampling: the q375 sampler over the ISO-BMFF
-    // corpus — the stsz/stsc/stco sample-table walk resolves each
-    // requested frame to an absolute byte span (3+1 chunk layout, so
-    // every file crosses a chunk boundary) and the extracted frames
-    // are byte-identical to the AVI corpus's (same BMPs, same
-    // geometry formulas), which is why the oracle IS q375's, shared
-    // verbatim. -------------------------------------------------------------
-    "q428_mp4_frame_sample" -> ((s, dir) =>
-      Multimodal.sampleVideoFrames(
-        Multimodal.syntheticFrameMp4s(t(s, dir, "documents")), k = 2)
-        .toDF()
-        .select(col("media_id"), col("frame_idx"), col("n_bytes"))),
-
-    // ---- zstd content-coding (RFC 8878, the coding Chrome now sends
-    // Accept-Encoding for — via the zstd-jni Spark itself ships, no
-    // new dependency): plain zstd, zstd under chunked framing, and a
-    // stacked gzip-then-zstd leg all decode through the same
-    // outermost-first chain as gzip/deflate, with an identity control
-    // row; every body comes back byte-equal to the document text. -----------
-    "q430_zstd_coding" -> ((s, dir) => {
-      import s.implicits._
-      val msgs = graft.io.Spread.toDefaultParallelism(
-        t(s, dir, "documents").select(col("doc_id"), col("text")))
-        .as[(Long, String)]
-        .map { case (id, text) =>
-          import graft.functions.BinaryCodecs
-          val body = Option(text).getOrElse("").getBytes("UTF-8")
-          def chunked(b: Array[Byte]): Array[Byte] = {
-            val out = new java.io.ByteArrayOutputStream()
-            b.grouped(11).foreach { c =>
-              out.write((c.length.toHexString + "\r\n").getBytes("US-ASCII"))
-              out.write(c)
-              out.write("\r\n".getBytes("US-ASCII"))
-            }
-            out.write("0\r\n\r\n".getBytes("US-ASCII"))
-            out.toByteArray
-          }
-          val (codingHdrs, wire) = (id % 4) match {
-            case 0 => ("Content-Encoding: zstd\r\n", BinaryCodecs.zstd(body))
-            case 1 => ("Content-Encoding: zstd\r\nTransfer-Encoding: chunked\r\n",
-              chunked(BinaryCodecs.zstd(body)))
-            case 2 => ("Content-Encoding: gzip, zstd\r\n",
-              BinaryCodecs.zstd(BinaryCodecs.gzip(body)))
-            case _ => ("", body)
-          }
-          val head = "HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n" +
-            codingHdrs + "\r\n"
-          (id, head.getBytes("US-ASCII") ++ wire,
-            s"https://host${id % 20}.example.com/p/$id")
-        }.toDF("doc_id", "payload", "uri")
-      graft.ops.Warc.httpResponses(
-        graft.ops.Warc.parseWarc(graft.ops.Warc.syntheticWarcBytes(msgs)))
-        .toDF()
-        .select(
-          regexp_extract(col("target_uri"), "([0-9]+)$", 1).cast("long").as("doc_id"),
-          col("n_headers").cast("long").as("n_headers"),
-          col("content_encoding"),
-          col("body_decoded"),
-          col("body").cast("string").as("text_out"))
-    }),
-
-    // ---- `.warc.zst` ingest (the IIPC zstd WARC layout, one frame
-    // per record): the SAME documents through the zstd container must
-    // parse row-identical to the `.warc.gz` corpus — q431's oracle IS
-    // q384's, shared verbatim. Frame boundaries come from the zstd
-    // block-chain walk; dictionary-bearing archives quarantine rather
-    // than misread. -----------------------------------------------------------
-    "q431_warc_zst_ingest" -> ((s, dir) =>
-      graft.ops.Warc.parseWarc(graft.ops.Warc.syntheticWarcZst(t(s, dir, "documents")))
-        .toDF()
-        .select(col("media_id").as("file_id"), col("record_idx"),
-          col("warc_type"), col("target_uri"), col("n_bytes"),
-          col("payload").cast("string").as("text_out"))),
-
-    // ---- Ogg audio identity (the podcast container): Vorbis on even
-    // docs, Opus on odd, each BOS page carrying its real RFC 3533 CRC
-    // — codec, clock and channel count straight from the id packet. ----------
-    "q437_ogg_meta" -> ((s, dir) => {
-      import s.implicits._
-      import graft.functions.BinaryCodecs
-      val media = graft.io.Spread.toDefaultParallelism(
-        t(s, dir, "documents").select(col("doc_id"))).as[Long]
-        .map { id =>
-          val packet =
-            if (id % 2 == 0) BinaryCodecs.vorbisIdPacket(
-              8000 + (id % 4).toInt * 4000, 1 + ((id / 2) % 2).toInt)
-            else BinaryCodecs.opusIdPacket(48000, 1 + (id % 3).toInt)
-          val p = BinaryCodecs.ogg(packet, serial = id.toInt)
-          Multimodal.MediaRow(id, "audio", p, "audio/ogg", p.length.toLong)
-        }
-      Multimodal.oggMeta(media)
-    }),
-
-    // ---- FLAC STREAMINFO (the lossless-audio family): fixed-layout
-    // decode of the spec-mandatory first metadata block — rate,
-    // channels, bit depth, total samples; a zero total is the spec's
-    // "unknown" and yields a null duration rather than a fake zero.
-    // Routed through the same triage surface as every other family. ----------
-    "q435_flac_meta" -> ((s, dir) => {
-      import s.implicits._
-      val media = graft.io.Spread.toDefaultParallelism(
-        t(s, dir, "documents").select(col("doc_id"))).as[Long]
-        .map { id =>
-          val total = if (id % 9 == 0) 0L else 44100L + (id % 1000) * 50L
-          val p = graft.functions.BinaryCodecs.flac(
-            32000 + (id % 5).toInt * 8000, 1 + (id % 2).toInt, 16, total)
-          Multimodal.MediaRow(id, "audio", p, "audio/flac", p.length.toLong)
-        }
-      Multimodal.mediaTriage(media).toDF()
-        .select(col("media_id"), col("format"), col("parsed"),
-          col("sample_rate"), col("duration_us"))
-    }),
-
-    // ---- WebP canvas dims (the image format a third of the modern
-    // web serves): the VP8X extended-header read through the triage
-    // surface; the VP8/VP8L wire variants are spec-pinned in the sbt
-    // spec with hand-built headers. -------------------------------------------
-    "q436_webp_dims" -> ((s, dir) => {
-      import s.implicits._
-      val media = graft.io.Spread.toDefaultParallelism(
-        t(s, dir, "documents").select(col("doc_id"))).as[Long]
-        .map { id =>
-          val p = graft.functions.BinaryCodecs.webp(
-            10 + (id % 100).toInt, 5 + (id % 50).toInt)
-          Multimodal.MediaRow(id, "image", p, "image/webp", p.length.toLong)
-        }
-      Multimodal.mediaTriage(media).toDF()
-        .select(col("media_id"), col("format"), col("parsed"),
-          col("width"), col("height"))
-    }),
-
-    // ---- KEYFRAME sampling (MP4 stss): the sampler's picks come from
-    // the sync-sample table — frames 0 and 3 in the fixture (1-based
-    // stss {1,4}), NOT the even-spacing {0,2} of q428, so the result
-    // proves stss is actually consulted; frame 3 repeats frame 0, so
-    // both sampled frames share the anchor doc's BMP geometry. ---------------
-    "q434_mp4_keyframes" -> ((s, dir) =>
-      Multimodal.sampleKeyframes(
-        Multimodal.syntheticFrameMp4s(t(s, dir, "documents")), k = 2)
-        .toDF()
-        .select(col("media_id"), col("frame_idx"), col("n_bytes"))),
-
-    // ---- ID3v2 audio metadata: the text frames (title/artist/album,
-    // TRCK on 4≡1 docs) of every tagged stream, both wire formats —
-    // v2.3 plain-u32 ISO-8859-1 on even docs, v2.4 synchsafe UTF-8 on
-    // odd — exploded to rows; every value an id formula. -----------------------
-    "q433_id3_tags" -> ((s, dir) =>
-      Multimodal.audioTags(Multimodal.syntheticTaggedMp3s(t(s, dir, "documents")))),
-
-    // ---- crawl-ARCHIVE media triage, the flagship of the round's
-    // multimodal surface: mixed-family payloads arrive as archived
-    // HTTP responses (gzip content-coding on even docs, a planted
-    // Content-Type mislabel on 10≡9 docs), the wire codings come off
-    // in httpResponses, each body runs the same sniff-and-parse rules
-    // as q429, and type_matches compares the DECLARED type's promised
-    // family with the sniffed one — the integrity signal a decode
-    // fleet filters on before paying for a decode the label lied
-    // about. ------------------------------------------------------------------
-    "q432_archive_media_triage" -> ((s, dir) => {
-      import s.implicits._
-      import graft.functions.BinaryCodecs
-      val msgs = graft.io.Spread.toDefaultParallelism(
-        t(s, dir, "documents").select(col("doc_id"),
-          coalesce(col("text"), lit("")).as("text")))
-        .as[(Long, String)]
-        .map { case (id, text) =>
-          val inner = Multimodal.mixedMediaPayload(id, text)
-          val declared =
-            if (id % 10 == 9) "image/png" else Multimodal.mixedMediaMime(id)
-          val (ceHdr, wire) =
-            if (id % 2 == 0) ("Content-Encoding: gzip\r\n", BinaryCodecs.gzip(inner))
-            else ("", inner)
-          val head = s"HTTP/1.1 200 OK\r\nContent-Type: $declared\r\n" +
-            ceHdr + "\r\n"
-          (id, head.getBytes("US-ASCII") ++ wire,
-            s"https://host${id % 20}.example.com/m/$id")
-        }.toDF("doc_id", "payload", "uri")
-      Multimodal.archiveMediaTriage(
-        graft.ops.Warc.httpResponses(
-          graft.ops.Warc.parseWarc(graft.ops.Warc.syntheticWarcBytes(msgs))))
-        .select(
-          regexp_extract(col("target_uri"), "([0-9]+)$", 1).cast("long").as("doc_id"),
-          col("content_type"), col("format"),
-          // string-typed: a NULLABLE boolean round-trips asymmetrically
-          // through the comparison harness (NaN vs None)
-          col("type_matches").cast("string").as("type_matches"),
-          col("parsed"), col("width"), col("height"), col("n_frames"),
-          col("sample_rate"), col("duration_us"))
-    }),
-
-    // ---- corpus MEDIA TRIAGE: magic sniff → gunzip-and-resniff one
-    // level → header-grain parse, one row per payload ALWAYS (junk
-    // surfaces as parsed=false, never a dropped row) — over the
-    // nine-family mixed corpus (doc_id%9 picks the container, even
-    // docs gzip-wrap). Every family's metadata is an id formula, so
-    // the oracle is a routed CASE union. --------------------------------------
-    "q429_media_triage" -> ((s, dir) =>
-      Multimodal.mediaTriage(Multimodal.syntheticMixedMedia(t(s, dir, "documents")))
-        .toDF()),
-
-    // ---- cross-crawl dedup on the WRITE side, full lifecycle: the
-    // prior crawl's archives → digest index (metadata-sized) → a
-    // recrawl whose captures changed on 5≡0 docs and grew /alt pages
-    // on 11≡7 docs → emitRevisits turns every unchanged capture into a
-    // body-less revisit naming the prior record → serialized to real
-    // WARC files → parsed back → resolveRevisits reconstructs every
-    // revisit body from the prior archive. The roundtrip identity IS
-    // the oracle: each new-crawl row's body equals the current text,
-    // with was_revisit true exactly on the unchanged set. ----------------------
-    "q426_revisit_emit" -> ((s, dir) => {
-      val prior = graft.ops.Staging.stage(
-        graft.ops.Warc.parseWarc(
-          graft.ops.Warc.syntheticWarc(t(s, dir, "documents"), docsPerFile = 8))
-          .toDF(), reliable = false)
-        .as[graft.ops.Warc.WarcRecordRow](
-          org.apache.spark.sql.Encoders.product[graft.ops.Warc.WarcRecordRow])
-      val base = t(s, dir, "documents").select(col("doc_id"),
-        concat(lit("https://host"), (col("doc_id") % 20).cast("string"),
-          lit(".example.com/p/"), col("doc_id").cast("string")).as("url"),
-        coalesce(col("text"), lit("")).as("t"))
-      val captures = base.select(col("doc_id"), col("url"),
-        when(col("doc_id") % 5 === 0, concat(col("t"), lit(" v2")))
-          .otherwise(col("t")).cast("binary").as("payload"))
-        .unionByName(base.where(col("doc_id") % 11 === 7)
-          .select((col("doc_id") + 1000000L).as("doc_id"),
-            concat(col("url"), lit("/alt")).as("url"),
-            concat(lit("alt "), col("t")).cast("binary").as("payload")))
-      val emitted = graft.ops.Warc.emitRevisits(captures,
-        graft.ops.Warc.cdxDigestIndex(prior))
-      val newArch = graft.ops.Warc.toWarcRecords(
-        emitted.select(col("doc_id"), col("payload"), col("url").as("uri"),
-          when(col("is_revisit"), lit("revisit")).otherwise(lit("response"))
-            .as("warc_type"),
-          col("refers_to")),
-        docsPerFile = 8, recordIdPrefix = "rc2")
-      graft.ops.Warc.resolveRevisits(
-        prior.unionByName(graft.ops.Warc.parseWarc(newArch)))
-        .where(col("record_id").startsWith("<urn:graft:rc2:"))
-        .select(col("target_uri").as("url"), col("was_revisit"),
-          col("payload").cast("string").as("body"))
-    })
-  )
-
-  /** q416/q417's shared fixture: each document as the HTTP response
-    * message a crawler archives (status from the q412 id formula,
-    * `text/html`, the document text as body) under the standard
-    * host/path URI formula — every CDX field derivable in SQL.
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    QueryCase.byName(catalog)(_.build)
+
+  /** For each key in [[queries]], equivalent SQL runnable by DuckDB on the
+    * same parquet tables.
     */
-  private def cdxHttpDocs(s: SparkSession, dir: String): DataFrame = {
-    val id = col("doc_id")
-    t(s, dir, "documents").select(
-      id,
-      concat(lit("HTTP/1.1 "), (lit(200) + (id % 3) * 2).cast("string"),
-        lit(" OK\r\nContent-Type: text/html\r\n\r\n"),
-        coalesce(col("text"), lit(""))).cast("binary").as("payload"),
-      concat(lit("https://host"), (id % 20).cast("string"),
-        lit(".example.com/p/"), id.cast("string")).as("uri"))
-  }
-
-  /** q358/q359's synthetic HTML page — every feature a pure function of
-    * doc_id and text so the oracle rebuilds it byte-for-byte: a head line
-    * with style+script spans, a comment line, a heading, a text paragraph
-    * carrying entities, a pure-link nav line, an id-dependent link-list
-    * or filler line, a mixed prose+link line, and the closing tags.
-    * Attribute values are unquoted (valid per the HTML spec for these
-    * characters) so the fixture needs no quote-escaping in either engine.
-    */
-  private def syntheticHtml: Column = {
-    val id = col("doc_id").cast("string")
-    concat(
-      lit("<html><head><style>body{color:red}</style><script>var n="), id,
-      lit(";</script></head>\n"),
-      lit("<body><!-- hidden "), id, lit(" -->\n"),
-      lit("<h1>Doc "), id, lit("</h1>\n"),
-      lit("<p>"), coalesce(col("text"), lit("")),
-      lit(" &amp; more &lt;raw&gt; &#39;tail&#39;</p>\n"),
-      lit("<div><a href=/h>Home</a> <a href=/a>About</a> <a href=/c>Contact</a></div>\n"),
-      when(col("doc_id") % 3 === 0,
-        lit("<ul><li><a href=/l1>Long link one</a></li><li><a href=/l2>Long link two</a></li></ul>\n"))
-        .otherwise(lit("<p>A plain filler paragraph with no links at all.</p>\n")),
-      lit("<p>Mixed line with one <a href=/m>tiny link</a> and plenty of surrounding prose to stay.</p>\n"),
-      lit("</body></html>"))
-  }
-
-  /** Deterministic halving DAG for q328, from doc ids: n → n div 2 for
-    * every positive 10th id (chains of depth ~log₂ of the id range) plus
-    * n → n−30 cross edges every 40th id. Every edge strictly decreases,
-    * so acyclicity holds by construction at every scale.
-    */
-  private def dagPairs(s: SparkSession, dir: String): DataFrame = {
-    val b = t(s, dir, "documents")
-      .where(col("doc_id") % 10 === 0 && col("doc_id") > 0)
-      .select(col("doc_id").as("n"))
-    b.select(col("n").as("src"), expr("n div 2").as("dst"))
-      .union(b.where(col("n") % 40 === 0)
-        .select(col("n").as("src"), (col("n") - 30).as("dst")))
-  }
-
-  /** Deterministic DIRECTED graph for the SCC queries, derived from doc
-    * ids so the oracle rebuilds it in SQL: every 10th id anchors a
-    * 3-cycle {n, n+1, n+2}; every 20th id bridges DOWNWARD n → n/2
-    * (high-to-low, so no chain-of-SCCs peel depth builds up); every
-    * 30th id grows a pure-DAG tail n+2 → n+5 → n+7 (trim food).
-    */
-  private def sccPairs(s: SparkSession, dir: String): DataFrame = {
-    val b = t(s, dir, "documents").where(col("doc_id") % 10 === 0)
-      .select(col("doc_id").as("n"))
-    b.select(col("n").as("src"), (col("n") + 1).as("dst"))
-      .union(b.select((col("n") + 1).as("src"), (col("n") + 2).as("dst")))
-      .union(b.select((col("n") + 2).as("src"), col("n").as("dst")))
-      .union(b.where(col("n") % 20 === 0 && col("n") > 0)
-        .select(col("n").as("src"), expr("n div 2").as("dst")))
-      .union(b.where(col("n") % 30 === 0)
-        .select((col("n") + 2).as("src"), (col("n") + 5).as("dst")))
-      .union(b.where(col("n") % 30 === 0)
-        .select((col("n") + 5).as("src"), (col("n") + 7).as("dst")))
-  }
-
-  /** The deterministic doc-id chain graph shared by q54 and q128: edges
-    * between arithmetic neighbors of every 20th doc id — engine-neutral
-    * (the oracle rebuilds it in SQL), with multi-node components and
-    * occasional bridges (`a % 40` rows).
-    */
-  private def docChainPairs(s: SparkSession, dir: String): DataFrame = {
-    val b = t(s, dir, "documents").where(col("doc_id") % 20 === 0)
-      .select(col("doc_id").as("a"))
-    b.select(col("a").as("a_id"), (col("a") + 1).as("b_id"))
-      .union(b.select((col("a") + 1).as("a_id"), (col("a") + 2).as("b_id")))
-      .union(b.select(col("a").as("a_id"), (col("a") + 5).as("b_id")))
-      .union(b.where(col("a") % 40 === 0)
-        .select((col("a") + 5).as("a_id"), (col("a") + 22).as("b_id")))
-  }
-
-  /** Shared recursive-closure CTE body for the [[docChainPairs]] graph —
-    * q54's oracle aggregates it to components; q128's extends it with the
-    * representative election. (Callers prepend `WITH RECURSIVE `.)
-    */
-  private val DocChainComponentsCte: String =
-    """b AS (
-      | SELECT doc_id AS a FROM documents WHERE doc_id % 20 = 0),
-      |edges0 AS (
-      | SELECT a AS u, a + 1 AS v FROM b
-      | UNION ALL SELECT a + 1, a + 2 FROM b
-      | UNION ALL SELECT a, a + 5 FROM b
-      | UNION ALL SELECT a + 5, a + 22 FROM b WHERE a % 40 = 0),
-      |edges AS (
-      | SELECT u, v FROM edges0 UNION SELECT v, u FROM edges0),
-      |nodes AS (SELECT DISTINCT u AS id FROM edges),
-      |reach(id, r) AS (
-      | SELECT id, id FROM nodes
-      | UNION
-      | SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.id)""".stripMargin
-
-  /** Pinned sf0.01 multi-probe ANN rows (tools/pin_oracle.py) — q126's
-    * oracle, and the ANN side q127's oracle re-derives recall from.
-    */
-  private val PinnedQ126: String =
-    """SELECT CAST(query_id AS BIGINT) AS query_id, CAST(neighbor_id AS BIGINT) AS neighbor_id, CAST(rank AS BIGINT) AS rank FROM (VALUES (0,99,9),(0,165,5),(0,229,7),(0,261,8),(0,266,10),(0,334,1),(0,344,4),(0,387,2),(0,388,3),(0,415,6),(1,80,5),(1,124,2),(1,181,7),(1,203,4),(1,217,8),(1,220,3),(1,285,6),(1,373,9),(1,386,1),(1,451,10),(2,13,7),(2,37,6),(2,118,9),(2,172,1),(2,239,3),(2,407,4),(2,440,2),(2,453,10),(2,465,5),(2,468,8),(3,11,10),(3,85,9),(3,130,1),(3,174,2),(3,201,7),(3,207,4),(3,231,3),(3,283,8),(3,349,6),(3,463,5),(4,89,4),(4,280,3),(4,332,6),(4,353,7),(4,384,5),(4,395,9),(4,403,8),(4,408,2),(4,445,10),(4,496,1),(5,19,8),(5,46,5),(5,152,4),(5,157,1),(5,267,9),(5,337,7),(5,359,2),(5,361,10),(5,457,6),(5,464,3),(6,78,5),(6,82,7),(6,145,2),(6,165,9),(6,268,3),(6,315,8),(6,371,4),(6,430,1),(6,443,6),(6,459,10),(7,49,4),(7,59,5),(7,209,2),(7,214,10),(7,319,7),(7,334,3),(7,407,8),(7,418,6),(7,423,9),(7,425,1),(8,35,8),(8,39,1),(8,47,10),(8,102,5),(8,138,2),(8,196,6),(8,314,7),(8,401,9),(8,403,3),(8,494,4),(9,20,7),(9,49,1),(9,69,8),(9,107,3),(9,274,6),(9,330,4),(9,340,5),(9,386,2),(9,408,10),(9,449,9)) AS t(query_id, neighbor_id, rank)"""
-
-  /** Per-source interleave strides for q103 (stride 1 ⇒ 4× the density of
-    * stride 4), shared by the Spark query and the generated oracle CASE.
-    */
-  private val MixStrides: Map[String, Long] =
-    (0 until 20).map(i => s"src$i" -> (1L + i % 4)).toMap
-
-  /** DuckDB oracle SQL generated from [[TextFunctions.LangMarkers]] so the
-    * Spark expression and the SQL stay structurally identical.
-    */
-  private def langIdOracle: String = {
-    def occ(needle: String): String = {
-      val pat = s" $needle "
-      s"CAST((length(pt) - length(replace(pt, '$pat', ''))) / ${pat.length} AS BIGINT)"
-    }
-    val scores = TextFunctions.LangMarkers
-      .map { case (lang, ws) => s"(${ws.map(occ).mkString(" + ")}) AS s_$lang" }
-      .mkString(", ")
-    val langs = TextFunctions.LangMarkers.map(_._1)
-    val best = s"greatest(${langs.map("s_" + _).mkString(", ")})"
-    val cases = langs.map(l => s"WHEN s_$l = g AND s_$l > 0 THEN '$l'").mkString(" ")
-    s"""WITH p AS (SELECT doc_id, ' ' || regexp_replace(lower(text), '\\s+', ' ', 'g') || ' ' AS pt FROM documents),
-       | s AS (SELECT doc_id, $scores FROM p)
-       |SELECT doc_id, CASE $cases ELSE 'und' END AS lang_guess
-       |FROM (SELECT *, $best AS g FROM s)""".stripMargin
-  }
-
-  /** DuckDB subquery `(SELECT <table>.*, quality ...)` computing
-    * [[TextFunctions.qualityScore]]'s four checks, generated from the same
-    * [[TextFunctions.QualityStopwords]] list so Spark and oracle can't drift.
-    * Callers alias it and project the columns they need.
-    */
-  private def qualityOracle(table: String): String = {
-    def occ(w: String): String = {
-      val pat = s" $w "
-      s"CAST((length(__pt) - length(replace(__pt, '$pat', ''))) / ${pat.length} AS BIGINT)"
-    }
-    val stopHits = TextFunctions.QualityStopwords.map(occ).mkString(" + ")
-    s"""(SELECT *,
-       |  (CASE WHEN length(text) >= 100 AND length(text) <= 20000 THEN 1.0 ELSE 0.5 END
-       |   + CASE WHEN __wc > 0 AND CAST(length(text) AS DOUBLE) / __wc >= 3.0
-       |          AND CAST(length(text) AS DOUBLE) / __wc <= 12.0 THEN 1.0 ELSE 0.5 END
-       |   + CASE WHEN length(text) > 0 AND CAST(__punct AS DOUBLE) / length(text) <= 0.2 THEN 1.0 ELSE 0.5 END
-       |   + CASE WHEN __wc > 0 AND CAST($stopHits AS DOUBLE) / __wc >= 0.01 THEN 1.0 ELSE 0.5 END) / 4 AS quality
-       | FROM (SELECT *,
-       |   ' ' || regexp_replace(lower(text), '\\s+', ' ', 'g') || ' ' AS __pt,
-       |   len(list_filter(string_split_regex(text, '\\s+'), x -> len(x) > 0)) AS __wc,
-       |   len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) AS __punct
-       |  FROM $table) __qinner)""".stripMargin
-  }
-
-  /** DuckDB expression for [[Sampling.idBucket]]: first byte of md5(id)
-    * in [0, 256) (DuckDB `conv` doesn't exist; strpos over the hex
-    * alphabet decodes the two nibbles).
-    */
-  private def bucketOracle(id: String): String =
-    s"(strpos('0123456789abcdef', substring(md5(CAST($id AS VARCHAR)), 1, 1)) - 1) * 16" +
-      s" + strpos('0123456789abcdef', substring(md5(CAST($id AS VARCHAR)), 2, 1)) - 1"
-
-  /** DuckDB expression decoding the first `n` hex digits of an md5-hex
-    * column `hexExpr` to a BIGINT (big-endian nibbles), matching Spark's
-    * `conv(substring(md5(..), 1, n), 16, 10)` in [[graft.ops.Audit]].
-    */
-  private def hexPrefixOracle(hexExpr: String, n: Int): String =
-    (1 to n).map { i =>
-      val scale = java.lang.Long.parseLong("1" + "0" * (n - i), 16)
-      s"(strpos('0123456789abcdef', substring($hexExpr, $i, 1)) - 1) * $scale"
-    }.mkString("(", " + ", ")")
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops
-    * (murmur-hash-based sketches) → driver records a rows-only check.
-    */
-  def oracleSql: Map[String, String] = Map(
-    // NOTE (driver hash parity): DuckDB sum(BIGINT) returns HUGEINT, which
-    // pandas renders as float64 — a dtype-sensitive hash then differs from
-    // Spark's int64 even when every value is equal. Every integer sum below
-    // is therefore wrapped CAST(sum(..) AS BIGINT); sum_qty is integer-unit
-    // on both sides for the same reason.
-    "q1_pricing_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        | CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-        | CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS sum_price_cents,
-        | CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS BIGINT) AS sum_disc_price_cents,
-        | count(*) AS cnt
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "q2_conditional_counts" ->
-      """SELECT user_id,
-        | count(*) FILTER (WHERE event_type = 'error') AS error_count,
-        | count(*) FILTER (WHERE event_type = 'click') AS click_count,
-        | count(*) FILTER (WHERE event_type = 'signup') AS signup_count,
-        | count(*) AS n_events
-        |FROM events GROUP BY user_id""".stripMargin,
-    "q3_zero_fill" ->
-      """SELECT u.user_id, coalesce(p.purchase_count, 0) AS purchase_count
-        |FROM (SELECT DISTINCT user_id FROM events) u
-        |LEFT JOIN (SELECT user_id, count(*) AS purchase_count FROM events
-        |           WHERE event_type = 'purchase' GROUP BY user_id) p
-        |ON u.user_id = p.user_id""".stripMargin,
-    "q4_enrich_join" ->
-      """SELECT o.o_orderkey, o.o_custkey, o.o_orderstatus, o.o_totalprice,
-        | o.o_orderdate, o.o_orderpriority, c.c_name, c.c_mktsegment
-        |FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey""".stripMargin,
-    "q5_threeway_join" ->
-      """SELECT c_mktsegment, count(*) AS n_items,
-        | CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS BIGINT) AS revenue_cents
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment""".stripMargin,
-    "q6_explode" ->
-      "SELECT vec_id, unnest(embedding) AS val FROM embeddings",
-    "q7_last_write_wins" ->
-      """SELECT o_custkey, o_orderkey AS last_orderkey, o_totalprice AS last_totalprice
-        |FROM (SELECT *, row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderkey DESC) AS rn
-        |      FROM orders)
-        |WHERE rn = 1""".stripMargin,
-    "q8_sessionize" ->
-      """WITH e AS (SELECT user_id, ts, epoch_ms(ts) AS t, event_type, event_id FROM events),
-        | m AS (SELECT user_id, t, event_type,
-        |   max(CASE WHEN event_type = 'view' THEN t END) OVER
-        |     (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS last_start,
-        |   max(CASE WHEN event_type = 'purchase' THEN t END) OVER
-        |     (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS last_end
-        |  FROM e)
-        |SELECT user_id, CAST(sum(t - last_start) AS BIGINT) AS session_ms, count(*) AS n_sessions
-        |FROM m
-        |WHERE event_type = 'purchase' AND last_start IS NOT NULL
-        |  AND (last_end IS NULL OR last_start > last_end)
-        |GROUP BY user_id""".stripMargin,
-    "q9_window_rank" ->
-      """SELECT user_id, event_id AS first_event_id, event_type AS first_event_type
-        |FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn FROM events)
-        |WHERE rn = 1""".stripMargin,
-    "q10_ts_span" ->
-      """SELECT user_id, max(epoch_ms(ts)) - min(epoch_ms(ts)) AS span_ms, count(*) AS n_events
-        |FROM events GROUP BY user_id""".stripMargin,
-    "q11_json_extract" ->
-      "SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_value FROM events",
-    "q12_dedup_exact" ->
-      """SELECT md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fingerprint,
-        | min(doc_id) AS keep_id, count(*) AS dup_count
-        |FROM documents GROUP BY 1""".stripMargin,
-    "q13_text_stats" ->
-      """SELECT doc_id,
-        | CAST(length(text) AS BIGINT) AS char_len,
-        | CAST(len(list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0)) AS BIGINT) AS word_count,
-        | CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS token_count
-        |FROM documents""".stripMargin,
-    "q14_lang_id" -> langIdOracle,
-    "q15_quality" ->
-      s"SELECT doc_id, quality FROM ${qualityOracle("documents")} __q15",
-    // q16: brute-force recomputation of the LSH→verify survivors. Sound
-    // because of the corpus's similarity gap (see the query comment): the
-    // exact-Jaccard ≥ 0.5 pair set equals what banded LSH + verification
-    // emits, and the Jaccard fraction is a ratio of identical integer
-    // cardinalities on both engines.
-    "q16_minhash_lsh" ->
-      """WITH tok AS (
-        | SELECT doc_id,
-        |  list_filter(string_split_regex(trim(lower(text)), '\s+'), w -> len(w) > 0) AS w
-        | FROM documents),
-        |sh AS (
-        | SELECT doc_id, list_distinct(list_transform(range(0, greatest(len(w) - 2, 0)),
-        |   i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3])) AS s
-        | FROM tok),
-        |p AS (
-        | SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |  CASE WHEN len(list_distinct(list_concat(a.s, b.s))) > 0
-        |   THEN CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(a.s, b.s)))
-        |   ELSE 0.0 END AS jaccard
-        | FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-        |SELECT a_id, b_id, jaccard FROM p WHERE jaccard >= 0.5""".stripMargin,
-    // q18: same normalization (lower, \s+ split, drop empties), same word
-    // 3-shingles, set semantics via list_distinct — the Jaccard fraction is
-    // a ratio of identical integer cardinalities on both engines (Spark
-    // compares 64-bit shingle hashes, DuckDB the shingle strings; equal
-    // absent hash collisions). Pair fixture mirrors the Spark side exactly.
-    "q18_ngram_jaccard" ->
-      """WITH tok AS (
-        | SELECT doc_id,
-        |  list_filter(string_split_regex(trim(lower(text)), '\s+'), w -> len(w) > 0) AS w
-        | FROM documents),
-        |sh AS (
-        | SELECT doc_id, list_distinct(list_transform(range(0, greatest(len(w) - 2, 0)),
-        |   i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3])) AS s
-        | FROM tok),
-        |pairs AS (
-        | SELECT doc_id AS a_id, unnest([doc_id + 1, doc_id + 5]) AS b_id
-        | FROM documents WHERE doc_id % 10 = 0)
-        |SELECT p.a_id, p.b_id,
-        | CASE WHEN len(list_distinct(list_concat(sa.s, sb.s))) > 0
-        |  THEN CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)
-        |   / len(list_distinct(list_concat(sa.s, sb.s)))
-        |  ELSE 0.0 END AS jaccard
-        |FROM pairs p
-        |JOIN sh sa ON sa.doc_id = p.a_id
-        |JOIN sh sb ON sb.doc_id = p.b_id""".stripMargin,
-    // q17/q20/q21: pinned-fixture oracles (q64 precedent). These
-    // pipelines are deterministic for the fixed murmur seeds / stub
-    // codecs + testdata but not SQL-derivable, so the verified sf0.01
-    // result is pinned as literal VALUES; regenerate with
-    // tools/pin_oracle.py after any seed/data change. A pin failure
-    // means the hashing/bucketing/codec logic CHANGED — exactly the
-    // regression this check exists to catch.
-    "q20_ann_lsh" ->
-      """SELECT CAST(query_id AS BIGINT) AS query_id, CAST(neighbor_id AS BIGINT) AS neighbor_id, CAST(rank AS BIGINT) AS rank FROM (VALUES (0,230,1),(0,264,2),(0,275,5),(0,281,4),(0,378,3),(0,410,6),(0,488,7),(1,77,6),(1,124,1),(1,200,8),(1,208,7),(1,285,2),(1,327,4),(1,392,9),(1,433,5),(1,488,3),(2,37,2),(2,63,6),(2,90,3),(2,113,9),(2,186,4),(2,338,8),(2,383,7),(2,399,5),(2,407,1),(3,11,5),(3,83,7),(3,85,4),(3,130,1),(3,158,6),(3,174,2),(3,227,10),(3,282,9),(3,291,8),(3,349,3),(4,55,10),(4,89,2),(4,181,9),(4,213,7),(4,214,6),(4,225,5),(4,228,4),(4,231,3),(4,337,8),(4,408,1),(5,201,1),(5,212,4),(5,339,3),(5,492,2),(6,101,4),(6,104,6),(6,193,7),(6,268,1),(6,310,8),(6,415,3),(6,448,5),(6,459,2),(7,114,3),(7,275,4),(7,319,1),(7,324,5),(7,407,2),(8,24,2),(8,139,5),(8,180,6),(8,198,1),(8,235,7),(8,280,3),(8,298,4),(8,432,8),(9,20,3),(9,69,4),(9,91,10),(9,144,7),(9,263,9),(9,274,2),(9,317,8),(9,340,1),(9,449,5),(9,450,6)) AS t(query_id, neighbor_id, rank)""",
-    "q21_embedding_neardup" ->
-      """SELECT CAST(a_id AS BIGINT) AS a_id, CAST(b_id AS BIGINT) AS b_id FROM (VALUES (1,124),(3,130),(3,174),(4,89),(4,408),(6,268),(10,123),(10,390),(11,145),(12,147),(12,246),(12,274),(13,395),(14,298),(15,424),(17,234),(24,298),(25,92),(28,246),(28,305),(32,483),(35,487),(43,80),(43,257),(45,459),(46,419),(47,201),(47,238),(47,316),(47,482),(48,378),(49,60),(50,82),(50,356),(52,227),(53,318),(61,152),(62,111),(64,284),(64,486),(66,247),(68,240),(68,439),(69,148),(69,449),(70,374),(70,377),(78,437),(84,341),(87,340),(87,426),(88,445),(89,256),(89,337),(91,116),(93,229),(94,336),(97,444),(98,331),(100,360),(103,445),(106,119),(106,312),(108,232),(116,427),(118,299),(120,283),(122,468),(125,419),(127,266),(133,499),(134,477),(137,169),(137,299),(139,170),(139,194),(140,296),(142,232),(143,271),(147,473),(148,195),(153,455),(153,499),(154,391),(159,257),(160,283),(162,392),(164,496),(165,185),(170,194),(171,473),(172,491),(173,331),(174,255),(175,186),(178,220),(179,220),(179,435),(181,266),(186,492),(188,347),(190,230),(192,304),(192,483),(195,235),(195,317),(196,308),(197,393),(199,324),(201,428),(205,485),(211,487),(215,289),(221,373),(221,484),(222,338),(224,488),(226,371),(233,430),(234,260),(236,469),(238,344),(240,436),(241,363),(243,247),(246,478),(253,428),(254,326),(256,337),(263,437),(263,462),(266,395),(267,304),(267,431),(276,447),(291,314),(292,345),(297,498),(299,466),(312,378),(313,382),(319,479),(322,485),(323,365),(330,408),(332,339),(335,439),(338,402),(340,381),(340,435),(343,499),(368,464),(369,413),(373,425),(373,467),(373,484),(390,460),(391,468),(395,440),(426,464),(427,437),(431,462),(442,471),(478,496),(486,490)) AS t(a_id, b_id)""",
-    "q17_simhash" ->
-      s"SELECT CAST(id AS BIGINT) AS id, CAST(simhash AS BIGINT) AS simhash FROM ($SimhashPin) AS t(id, simhash)",
-    // q22: analytic multimodal oracle — kind by id%3; image/video dims
-    // replay the BMP writer's (8 + id%24, 8 + id%16) params THROUGH the
-    // real parser; the audio leg's (128, 352) is the stub's deterministic
-    // read of the 'RI' RIFF magic (ascii 82, 73 -> 64+(b%16)*32); video
-    // n_frames = 8 byte-window frames (payload always >= 8 bytes).
-    "q22_multimodal" ->
-      """SELECT doc_id AS media_id,
-        | CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-        | CAST(CASE WHEN doc_id % 3 = 1 THEN 128 ELSE 8 + doc_id % 24 END AS BIGINT) AS width,
-        | CAST(CASE WHEN doc_id % 3 = 1 THEN 352 ELSE 8 + doc_id % 16 END AS BIGINT) AS height,
-        | CAST(CASE WHEN doc_id % 3 = 2 THEN 8 ELSE 1 END AS BIGINT) AS n_frames
-        |FROM documents""".stripMargin,
-    "q19_embedding_topk" ->
-      """SELECT query_id, neighbor_id, rank FROM (
-        | SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |  row_number() OVER (PARTITION BY q.vec_id
-        |    ORDER BY list_cosine_similarity(c.embedding, q.embedding) DESC, c.vec_id) AS rank
-        | FROM embeddings c, embeddings q
-        | WHERE q.vec_id < 10 AND c.vec_id <> q.vec_id)
-        |WHERE rank <= 10""".stripMargin,
-    // q68: the 16-bit Morton spread chain in BIGINT (no hex literals in
-    // the oracle engine; constants are 0x00FF00FF / 0x0F0F0F0F /
-    // 0x33333333 / 0x55555555 in decimal). For 16-bit inputs this equals
-    // the expression's 32-bit chain (ZOrderSpec pins the identity).
-    "q68_zorder" ->
-      """WITH a AS (
-        | SELECT l_orderkey, l_linenumber,
-        |  l_partkey % 65536 AS x, l_suppkey % 65536 AS y FROM lineitem),
-        |b AS (SELECT l_orderkey, l_linenumber,
-        |  ((x | (x << 8)) & 16711935) AS x, ((y | (y << 8)) & 16711935) AS y FROM a),
-        |c AS (SELECT l_orderkey, l_linenumber,
-        |  ((x | (x << 4)) & 252645135) AS x, ((y | (y << 4)) & 252645135) AS y FROM b),
-        |d AS (SELECT l_orderkey, l_linenumber,
-        |  ((x | (x << 2)) & 858993459) AS x, ((y | (y << 2)) & 858993459) AS y FROM c),
-        |e AS (SELECT l_orderkey, l_linenumber,
-        |  ((x | (x << 1)) & 1431655765) AS x, ((y | (y << 1)) & 1431655765) AS y FROM d)
-        |SELECT l_orderkey, l_linenumber, CAST(x | (y << 1) AS BIGINT) AS zval FROM e""".stripMargin,
-    // q69: 3 unrolled integer-PageRank iterations — floor division (//)
-    // replays Spark's `div` exactly on non-negative ranks; integer sums
-    // are order-independent so no float drift is possible.
-    "q69_pagerank" -> {
-      val base =
-        """WITH e0 AS (
-          | SELECT DISTINCT o_custkey * 2 AS s, l_suppkey * 2 + 1 AS d
-          | FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-          |e AS (SELECT s, d FROM e0 UNION ALL SELECT d AS s, s AS d FROM e0),
-          |deg AS (SELECT s, CAST(count(*) AS BIGINT) AS outdeg FROM e GROUP BY 1),
-          |nodes AS (SELECT DISTINCT s AS id FROM e),
-          |r0 AS (SELECT id, CAST(1000000 AS BIGINT) AS rank FROM nodes)""".stripMargin
-      val iters = (1 to 3).map { i =>
-        s""",
-           |c$i AS (
-           | SELECT e.d AS id, CAST(sum((r.rank * 85) // (100 * deg.outdeg)) AS BIGINT) AS c
-           | FROM e JOIN r${i - 1} r ON e.s = r.id JOIN deg ON deg.s = e.s GROUP BY 1),
-           |r$i AS (
-           | SELECT n.id, CAST(150000 + coalesce(c$i.c, 0) AS BIGINT) AS rank
-           | FROM nodes n LEFT JOIN c$i ON n.id = c$i.id)""".stripMargin
-      }.mkString
-      base + iters + "\nSELECT id AS node_id, rank FROM r3"
-    },
-    // q65: identical lag/lead change detection. CAST(ts AS TIMESTAMP)
-    // floors DuckDB's ns-precision read to µs exactly like our scan does.
-    "q65_scd2" ->
-      """WITH e AS (
-        | SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS ts FROM events),
-        |x AS (
-        | SELECT user_id, ts, event_id, event_type,
-        |  (event_type IS DISTINCT FROM lag(event_type)
-        |     OVER (PARTITION BY user_id ORDER BY ts, event_id)) AS chg
-        | FROM e),
-        |k AS (SELECT user_id, ts, event_id, event_type FROM x WHERE chg)
-        |SELECT user_id, epoch_ms(ts) AS valid_from_ms,
-        | epoch_ms(lead(ts) OVER w) AS valid_to_ms, event_type,
-        | (lead(ts) OVER w IS NULL) AS is_current
-        |FROM k WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)""".stripMargin,
-    // q66: gaps-and-islands replay of session_window — break STRICTLY
-    // after prev + gap: the engine merges an event landing exactly on the
-    // session close (inclusive merge, pinned by TemporalOpsSpec).
-    "q66_session_window" ->
-      """WITH e AS (
-        | SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
-        |x AS (
-        | SELECT user_id, event_id, ts,
-        |  CASE WHEN lag(ts) OVER w IS NULL
-        |        OR ts > lag(ts) OVER w + INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS brk
-        | FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (
-        | SELECT user_id, ts,
-        |  sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS sid
-        | FROM x)
-        |SELECT user_id, epoch_ms(min(ts)) AS start_ms,
-        | epoch_ms(max(ts)) + 1800000 AS end_ms, CAST(count(*) AS BIGINT) AS n_events
-        |FROM s GROUP BY user_id, sid""".stripMargin,
-    // q67: plain inequality join — the oracle pays the O(n·m) plan our
-    // bucketized equi-join avoids.
-    "q67_interval_join" ->
-      """WITH iv AS (
-        | SELECT o_orderkey, o_orderdate AS s, o_orderdate + INTERVAL 2 DAY AS e
-        | FROM orders WHERE o_orderkey % 100 = 0),
-        |pt AS (SELECT l_shipdate FROM lineitem WHERE l_orderkey % 10 = 0)
-        |SELECT o_orderkey, CAST(count(*) AS BIGINT) AS n_points
-        |FROM iv JOIN pt ON pt.l_shipdate >= iv.s AND pt.l_shipdate < iv.e
-        |GROUP BY 1""".stripMargin,
-    // q70: arg_max twice with the same ordering ≡ Spark's single
-    // max_by(struct) — unique o_orderkey makes both deterministic.
-    "q70_cdc_merge" ->
-      """WITH last AS (
-        | SELECT o_custkey AS c_custkey,
-        |  arg_max(CASE WHEN o_orderstatus = 'P' THEN 'D' ELSE 'U' END, o_orderkey) AS op,
-        |  arg_max(CAST(round(o_totalprice * 100) AS BIGINT), o_orderkey) AS ch_cents,
-        |  count(*) AS n_changes
-        | FROM orders GROUP BY 1),
-        |b AS (SELECT c_custkey, CAST(round(c_acctbal * 100) AS BIGINT) AS b_cents FROM customer)
-        |SELECT coalesce(b.c_custkey, l.c_custkey) AS c_custkey,
-        | coalesce(l.ch_cents, b.b_cents) AS balance_cents,
-        | CAST(coalesce(l.n_changes, 0) AS BIGINT) AS n_changes
-        |FROM b FULL OUTER JOIN last l ON b.c_custkey = l.c_custkey
-        |WHERE l.op IS NULL OR l.op <> 'D'""".stripMargin,
-    // q71: a 2h/1h hopping window covers each event at exactly
-    // {trunc_hour(ts), trunc_hour(ts) − 1h} — the union replays Spark's
-    // epoch-aligned window() expansion.
-    "q71_sliding_window" ->
-      """WITH e AS (SELECT date_trunc('hour', ts) AS h, event_type FROM events),
-        |w AS (
-        | SELECT h AS ws, event_type FROM e
-        | UNION ALL
-        | SELECT h - INTERVAL 1 HOUR AS ws, event_type FROM e)
-        |SELECT epoch_ms(ws) AS w_start_ms, event_type, count(*) AS n
-        |FROM w GROUP BY 1, 2""".stripMargin,
-    // q72: the bloom pre-filter is an exact no-op on the result — the
-    // oracle is the plain semi-join.
-    "q72_bloom_prune" ->
-      """SELECT l_suppkey, count(*) AS n,
-        | CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
-        |FROM lineitem
-        |WHERE l_suppkey IN (SELECT s_suppkey FROM supplier WHERE s_nationkey < 5)
-        |GROUP BY 1""".stripMargin,
-    "q73_ranks" ->
-      """WITH rev AS (
-        | SELECT l_suppkey,
-        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS rev_cents
-        | FROM lineitem GROUP BY 1)
-        |SELECT s_nationkey, l_suppkey, rev_cents,
-        | rank() OVER v AS rnk,
-        | percent_rank() OVER v AS pct_rank,
-        | cume_dist() OVER v AS cdist,
-        | ntile(4) OVER (PARTITION BY s_nationkey ORDER BY rev_cents, l_suppkey) AS quartile
-        |FROM rev JOIN supplier ON l_suppkey = s_suppkey
-        |WINDOW v AS (PARTITION BY s_nationkey ORDER BY rev_cents)""".stripMargin,
-    // q78: full 2-round Lloyd replay in long form — same quantization as
-    // q52, same init (k lowest ids), same (dist, cid) tie-break, same
-    // floor-division centroid means, so every integer matches exactly.
-    "q78_kmeans" ->
-      """WITH m AS (
-        | SELECT vec_id AS id, embedding,
-        |  list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS max_abs
-        | FROM embeddings),
-        |qv AS (
-        | SELECT id,
-        |  CASE WHEN max_abs > 0
-        |   THEN list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 127.0 / max_abs) AS BIGINT) + 127)
-        |   ELSE list_transform(embedding, x -> CAST(127 AS BIGINT)) END AS v
-        | FROM m),
-        |q AS (
-        | SELECT id, u.d AS dim, u.x AS v FROM (
-        |  SELECT id, unnest(list_transform(v, (x, i) -> struct_pack(d := i - 1, x := x))) AS u
-        |  FROM qv)),
-        |c0 AS (
-        | SELECT dense_rank() OVER (ORDER BY id) - 1 AS cid, dim, v
-        | FROM q WHERE id IN (SELECT id FROM qv ORDER BY id LIMIT 8)),
-        |a1 AS (
-        | SELECT id, cid FROM (
-        |  SELECT id, cid, row_number() OVER (PARTITION BY id ORDER BY dist, cid) AS rn
-        |  FROM (SELECT q.id, c.cid, sum((q.v - c.v) * (q.v - c.v)) AS dist
-        |        FROM q JOIN c0 c ON q.dim = c.dim GROUP BY q.id, c.cid))
-        | WHERE rn = 1),
-        |c1 AS (
-        | SELECT c.cid, c.dim, coalesce(n.v, c.v) AS v
-        | FROM c0 c LEFT JOIN (
-        |  SELECT a.cid, q.dim, CAST(sum(q.v) // count(*) AS BIGINT) AS v
-        |  FROM a1 a JOIN q ON a.id = q.id GROUP BY a.cid, q.dim) n
-        | ON c.cid = n.cid AND c.dim = n.dim),
-        |a2 AS (
-        | SELECT id, cid FROM (
-        |  SELECT id, cid, row_number() OVER (PARTITION BY id ORDER BY dist, cid) AS rn
-        |  FROM (SELECT q.id, c.cid, sum((q.v - c.v) * (q.v - c.v)) AS dist
-        |        FROM q JOIN c1 c ON q.dim = c.dim GROUP BY q.id, c.cid))
-        | WHERE rn = 1),
-        |c2 AS (
-        | SELECT c.cid, c.dim, coalesce(n.v, c.v) AS v
-        | FROM c1 c LEFT JOIN (
-        |  SELECT a.cid, q.dim, CAST(sum(q.v) // count(*) AS BIGINT) AS v
-        |  FROM a2 a JOIN q ON a.id = q.id GROUP BY a.cid, q.dim) n
-        | ON c.cid = n.cid AND c.dim = n.dim),
-        |a3 AS (
-        | SELECT id, cid, CAST(dist AS BIGINT) AS dist FROM (
-        |  SELECT id, cid, dist, row_number() OVER (PARTITION BY id ORDER BY dist, cid) AS rn
-        |  FROM (SELECT q.id, c.cid, sum((q.v - c.v) * (q.v - c.v)) AS dist
-        |        FROM q JOIN c2 c ON q.dim = c.dim GROUP BY q.id, c.cid))
-        | WHERE rn = 1),
-        |cs AS (SELECT cid, CAST(sum(v) AS BIGINT) AS c_sum FROM c2 GROUP BY cid)
-        |SELECT a3.cid, count(*) AS n, CAST(sum(dist) AS BIGINT) AS inertia, cs.c_sum
-        |FROM a3 JOIN cs ON a3.cid = cs.cid
-        |GROUP BY a3.cid, cs.c_sum""".stripMargin,
-    // q74: DuckDB levenshtein == Spark levenshtein (unit-cost DP) on the
-    // identical normalized prefix.
-    "q74_edit_distance" ->
-      """WITH d AS (
-        | SELECT doc_id AS id, lang, source, len(p) AS l, p FROM (
-        |  SELECT *, substr(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), 1, 80) AS p
-        |  FROM documents))
-        |SELECT a.id AS a_id, b.id AS b_id,
-        | CAST(levenshtein(a.p, b.p) AS BIGINT) AS dist
-        |FROM d a JOIN d b
-        | ON a.lang = b.lang AND a.source = b.source AND a.id < b.id
-        | AND abs(a.l - b.l) <= 30
-        |WHERE levenshtein(a.p, b.p) <= 30""".stripMargin,
-    // q75: the same staged min-after-previous chain; count(t_i) counts
-    // completers because t_i is null for entities stuck before step i.
-    "q75_funnel" ->
-      """WITH s1 AS (
-        | SELECT user_id, min(ts) AS t1 FROM events WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (
-        | SELECT s1.user_id, min(CASE WHEN e.ts > s1.t1 THEN e.ts END) AS t2
-        | FROM s1 LEFT JOIN events e
-        |  ON e.user_id = s1.user_id AND e.event_type = 'click'
-        | GROUP BY 1),
-        |s3 AS (
-        | SELECT s2.user_id, min(CASE WHEN e.ts > s2.t2 THEN e.ts END) AS t3
-        | FROM s2 LEFT JOIN events e
-        |  ON e.user_id = s2.user_id AND e.event_type = 'purchase'
-        | GROUP BY 1)
-        |SELECT CAST(1 AS BIGINT) AS step_idx, 'view' AS step, count(t1) AS n_entities FROM s1
-        |UNION ALL
-        |SELECT 2, 'click', count(t2) FROM s2
-        |UNION ALL
-        |SELECT 3, 'purchase', count(t3) FROM s3""".stripMargin,
-    "q76_debounce" ->
-      """SELECT event_id, user_id, event_type, epoch_ms(ts) AS ts_ms FROM (
-        | SELECT *, lag(epoch_ms(ts)) OVER (
-        |   PARTITION BY user_id, event_type ORDER BY ts, event_id) AS prev
-        | FROM events)
-        |WHERE prev IS NULL OR epoch_ms(ts) - prev >= 60000""".stripMargin,
-    // q77: approx_percentile degenerates to exact discrete quantiles when
-    // every group < accuracy — value-identical to quantile_disc (same
-    // trick as q53).
-    "q77_outliers" ->
-      """WITH c AS (
-        | SELECT event_type, user_id, count(*) AS n FROM events GROUP BY 1, 2),
-        |q AS (
-        | SELECT event_type, quantile_disc(n, 0.25) AS q1, quantile_disc(n, 0.75) AS q3
-        | FROM c GROUP BY 1)
-        |SELECT c.event_type, user_id, n, CAST(q1 AS BIGINT) AS q1, CAST(q3 AS BIGINT) AS q3
-        |FROM c JOIN q ON c.event_type = q.event_type
-        |WHERE 2 * n > 2 * q3 + 3 * (q3 - q1)""".stripMargin,
-    "q79_triangles" ->
-      """WITH li AS (
-        | SELECT l_orderkey, l_partkey FROM lineitem WHERE l_partkey % 4 = 0),
-        |e AS (
-        | SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        | FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-        |tri AS (
-        | SELECT e1.u AS a, e1.v AS b, e2.v AS c
-        | FROM e e1 JOIN e e2 ON e1.v = e2.u
-        |  JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v),
-        |x AS (SELECT unnest([a, b, c]) AS id FROM tri)
-        |SELECT id, count(*) AS n_triangles FROM x GROUP BY 1""".stripMargin,
-    "q81_linear_trend" ->
-      """WITH m AS (
-        | SELECT l_suppkey,
-        |  CAST(year(l_shipdate) * 12 + month(l_shipdate) AS BIGINT) AS xm,
-        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS y
-        | FROM lineitem GROUP BY 1, 2)
-        |SELECT l_suppkey, count(*) AS n,
-        | CAST(count(*) * sum(xm * y) - sum(xm) * sum(y) AS BIGINT) AS slope_num,
-        | CAST(count(*) * sum(xm * xm) - sum(xm) * sum(xm) AS BIGINT) AS slope_den,
-        | CAST(sign(count(*) * sum(xm * y) - sum(xm) * sum(y)) AS BIGINT) AS trend
-        |FROM m GROUP BY 1""".stripMargin,
-    "q82_nav_windows" ->
-      """SELECT user_id, first_type, last_type, second_event_id FROM (
-        | SELECT user_id,
-        |  first_value(event_type) OVER wf AS first_type,
-        |  last_value(event_type) OVER wf AS last_type,
-        |  nth_value(event_id, 2) OVER wf AS second_event_id,
-        |  row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        | FROM events
-        | WINDOW wf AS (PARTITION BY user_id ORDER BY ts, event_id
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING))
-        |WHERE rn = 1""".stripMargin,
-    "q80_label_prop" ->
-      """WITH li AS (
-        | SELECT l_orderkey, l_partkey FROM lineitem WHERE l_partkey % 4 = 0),
-        |e AS (
-        | SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        | FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-        |sym AS (SELECT u AS src, v AS dst FROM e UNION ALL SELECT v, u FROM e),
-        |l0 AS (SELECT DISTINCT src AS id, src AS label FROM sym),
-        |r1 AS (
-        | SELECT src AS id, label FROM (
-        |  SELECT src, label, row_number() OVER (PARTITION BY src ORDER BY n DESC, label ASC) AS rn
-        |  FROM (SELECT s.src, l.label, count(*) AS n
-        |        FROM sym s JOIN l0 l ON s.dst = l.id GROUP BY 1, 2))
-        | WHERE rn = 1),
-        |r2 AS (
-        | SELECT src AS id, label FROM (
-        |  SELECT src, label, row_number() OVER (PARTITION BY src ORDER BY n DESC, label ASC) AS rn
-        |  FROM (SELECT s.src, l.label, count(*) AS n
-        |        FROM sym s JOIN r1 l ON s.dst = l.id GROUP BY 1, 2))
-        | WHERE rn = 1)
-        |SELECT id, label FROM r2""".stripMargin,
-    // q64: exact counts + sketch contract (cf. q43). The oracle now
-    // EXPRESSES the error bound — eps_bound = ⌈e·N/width⌉ is recomputed in
-    // SQL from the corpus word count, so a testdata refresh moves the
-    // oracle's bound with it (a mismatch there is a real tokenizer/count
-    // bug). The two booleans remain pins: never_undercounts is a
-    // deterministic CM-sketch theorem; within_eps_n holds per-term with
-    // prob ~1-(1/e)^depth ≈ 98% and is verified on this deterministic run
-    // (a flip after a fixture change means a legitimate 2% bound miss, not
-    // a sketch bug — widen width or reroll the term list).
-    "q64_countmin" ->
-      """WITH tok AS (
-        | SELECT list_filter(string_split_regex(trim(lower(text)), '\s+'), w -> len(w) > 0) AS w
-        | FROM documents),
-        |words AS (SELECT unnest(w) AS term FROM tok),
-        |n AS (SELECT count(*) AS total FROM words),
-        |t(term) AS (VALUES ('table'), ('data'), ('spark'), ('vector'), ('nonexistentterm')),
-        |e AS (SELECT term, count(*) AS c FROM words GROUP BY 1)
-        |SELECT t.term, CAST(coalesce(e.c, 0) AS BIGINT) AS exact_count,
-        | CAST(ceil(n.total * exp(1.0) / 2048) AS BIGINT) AS eps_bound,
-        | TRUE AS never_undercounts, TRUE AS within_eps_n
-        |FROM t LEFT JOIN e ON t.term = e.term CROSS JOIN n""".stripMargin,
-    // q63: identical md5-bucket coin and clamped-weight threshold.
-    "q63_weighted_sample" ->
-      s"""SELECT o_orderkey, o_totalprice FROM orders
-        |WHERE ${bucketOracle("o_orderkey")} <
-        |  ceil(least(greatest(o_totalprice / 500000.0, 0.0), 1.0) * 256)""".stripMargin,
-    // q62: generate_series replays sequence(); last_value IGNORE NULLS
-    // replays last(ignoreNulls) over the same frame.
-    "q62_gap_fill" ->
-      """WITH m AS (
-        | SELECT o_custkey, date_trunc('month', o_orderdate) AS month,
-        |  count(*) AS n, CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
-        | FROM orders GROUP BY 1, 2),
-        |sp AS (
-        | SELECT o_custkey, unnest(generate_series(date_trunc('month', min(o_orderdate)),
-        |   date_trunc('month', max(o_orderdate)), INTERVAL 1 MONTH)) AS month
-        | FROM orders GROUP BY o_custkey),
-        |j AS (
-        | SELECT sp.o_custkey, sp.month,
-        |  coalesce(m.n, 0) AS n_obs, coalesce(m.cents, 0) AS cents,
-        |  CASE WHEN m.n > 0 THEN m.cents END AS v
-        | FROM sp LEFT JOIN m ON sp.o_custkey = m.o_custkey AND sp.month = m.month)
-        |SELECT o_custkey, strftime(month, '%Y-%m') AS month,
-        | CAST(n_obs AS BIGINT) AS n_obs, CAST(cents AS BIGINT) AS cents,
-        | CAST(last_value(v IGNORE NULLS) OVER (PARTITION BY o_custkey ORDER BY month
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS last_cents
-        |FROM j""".stripMargin,
-    // q61: same shingle construction as q18/q55; counts over strings vs
-    // 64-bit hashes — equal absent collisions.
-    "q61_boilerplate" ->
-      """WITH tok AS (
-        | SELECT doc_id,
-        |  list_filter(string_split_regex(trim(lower(text)), '\s+'), w -> len(w) > 0) AS w
-        | FROM documents),
-        |sh AS (
-        | SELECT doc_id, list_distinct(list_transform(range(0, greatest(len(w) - 2, 0)),
-        |   i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3])) AS s
-        | FROM tok),
-        |ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-        |hot AS (SELECT g FROM ex GROUP BY g HAVING count(*) >= 3),
-        |tot AS (SELECT doc_id, count(*) AS n_grams FROM ex GROUP BY 1),
-        |boil AS (SELECT ex.doc_id, count(*) AS boiler FROM ex JOIN hot USING (g) GROUP BY 1)
-        |SELECT tot.doc_id, CAST(n_grams AS BIGINT) AS n_grams,
-        | CAST(coalesce(boiler, 0) AS BIGINT) AS boiler_grams,
-        | CASE WHEN n_grams > 0 THEN CAST(coalesce(boiler, 0) AS DOUBLE) / n_grams
-        |  ELSE 0.0 END AS boilerplate_frac
-        |FROM tot LEFT JOIN boil ON tot.doc_id = boil.doc_id""".stripMargin,
-    // q60: same tokenization; integer stats only (no floats).
-    "q60_bm25_stats" ->
-      """WITH tok AS (
-        | SELECT doc_id,
-        |  list_filter(string_split_regex(trim(lower(text)), '\s+'), w -> len(w) > 0) AS w
-        | FROM documents),
-        |t AS (SELECT doc_id, len(w) AS doc_len, unnest(w) AS term FROM tok),
-        |pt AS (
-        | SELECT doc_id, doc_len, term, count(*) AS tf FROM t
-        | WHERE term IN ('table', 'query', 'vector') GROUP BY 1, 2, 3),
-        |dfreq AS (SELECT term, count(*) AS df FROM pt GROUP BY 1),
-        |c AS (SELECT count(*) AS n_docs FROM tok)
-        |SELECT pt.doc_id, pt.term, CAST(pt.tf AS BIGINT) AS tf,
-        | CAST(dfreq.df AS BIGINT) AS df, CAST(pt.doc_len AS BIGINT) AS doc_len,
-        | CAST(c.n_docs AS BIGINT) AS n_docs
-        |FROM pt JOIN dfreq USING (term) CROSS JOIN c""".stripMargin,
-    // q59: the synthesis formulas, replayed — duration uses the same
-    // floor integer division as the parser's nSamples*1000/rate.
-    "q59_media_meta" ->
-      """SELECT doc_id AS media_id,
-        | CASE WHEN doc_id % 2 = 0 THEN 'image' ELSE 'audio' END AS kind,
-        | CASE WHEN doc_id % 2 = 0 THEN 8 + doc_id % 24 END AS width,
-        | CASE WHEN doc_id % 2 = 0 THEN 8 + doc_id % 16 END AS height,
-        | CASE WHEN doc_id % 2 = 1 THEN 8000 + (doc_id % 8) * 1000 END AS sample_rate,
-        | CASE WHEN doc_id % 2 = 1
-        |   THEN (500 + doc_id % 1000) * 1000 // (8000 + (doc_id % 8) * 1000) END AS duration_ms
-        |FROM documents""".stripMargin,
-    // q58: same md5-hex selection order; row_number ties impossible
-    // (distinct keys → distinct digests).
-    "q58_quota_sample" ->
-      """SELECT o_orderkey, o_orderpriority FROM (
-        | SELECT o_orderkey, o_orderpriority,
-        |  row_number() OVER (PARTITION BY o_orderpriority
-        |    ORDER BY md5(CAST(o_orderkey AS VARCHAR))) AS rk
-        | FROM orders) WHERE rk <= 40""".stripMargin,
-    // q56: identical rule chain, RE2-compatible patterns, global flag.
-    "q56_redact" ->
-      """SELECT c_custkey,
-        | regexp_replace(regexp_replace(regexp_replace(regexp_replace(c_name,
-        |  '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |  '\b(?:\d{1,3}\.){3}\d{1,3}\b', '<IP>', 'g'),
-        |  '\d{6,}', '<ID>', 'g'),
-        |  '\+?\d[\d\s()-]{6,}\d', '<PHONE>', 'g') AS redacted
-        |FROM customer""".stripMargin,
-    // q57: same tokenization; list slice w[a:b] is 1-based inclusive and
-    // truncates at the end exactly like Spark's slice(). Window starts cap
-    // at n - overlap (first window excepted) — no strict-subset tails.
-    "q57_chunk" ->
-      """WITH tok AS (
-        | SELECT doc_id,
-        |  list_filter(string_split_regex(trim(lower(text)), '\s+'), w -> len(w) > 0) AS w
-        | FROM documents),
-        |base AS (SELECT doc_id, w, len(w) AS n FROM tok WHERE len(w) > 0),
-        |st AS (SELECT doc_id, w, n, unnest(range(0, greatest(n - 8, 1), 24)) AS s FROM base)
-        |SELECT doc_id, s // 24 AS chunk_id,
-        | array_to_string(w[s+1:s+32], ' ') AS chunk,
-        | len(w[s+1:s+32]) AS n_words
-        |FROM st""".stripMargin,
-    // q55: same normalization + bigram construction as the Spark side;
-    // Spark counts 64-bit bigram hashes, DuckDB the strings — equal
-    // counts absent hash collisions.
-    "q55_repetition" ->
-      """WITH tok AS (
-        | SELECT doc_id,
-        |  list_filter(string_split_regex(trim(lower(text)), '\s+'), w -> len(w) > 0) AS w
-        | FROM documents),
-        |base AS (
-        | SELECT doc_id, w, len(w) AS n,
-        |  len(w) - len(list_distinct(w)) AS dup_words FROM tok),
-        |bg AS (
-        | SELECT doc_id,
-        |  unnest(list_transform(range(0, n - 1), i -> w[i+1] || ' ' || w[i+2])) AS b
-        | FROM base WHERE n >= 2),
-        |cnt AS (SELECT doc_id, b, count(*) AS c FROM bg GROUP BY 1, 2),
-        |stats AS (
-        | SELECT doc_id, count(*) AS distinct_b, sum(c) AS tb, max(c) AS maxc
-        | FROM cnt GROUP BY 1)
-        |SELECT base.doc_id,
-        | CASE WHEN n > 0 THEN CAST(dup_words AS DOUBLE) / n ELSE 0.0 END AS dup_word_frac,
-        | CASE WHEN tb > 0 THEN CAST(tb - distinct_b AS DOUBLE) / tb ELSE 0.0 END AS dup_bigram_frac,
-        | CASE WHEN tb > 0 THEN CAST(maxc AS DOUBLE) / tb ELSE 0.0 END AS top_bigram_frac
-        |FROM base LEFT JOIN stats ON base.doc_id = stats.doc_id""".stripMargin,
-    // q54: recursive transitive closure replays the distributed star-
-    // contraction exactly — component = min reachable id per node.
-    "q54_connected_components" ->
-      s"""WITH RECURSIVE $DocChainComponentsCte
-        |SELECT id, min(r) AS component FROM reach GROUP BY id""".stripMargin,
-    // q23: full IVF replay — nearest-centroid assignment (ties → smallest
-    // centroid id, as in Similarity.ivfTopK's array_position-of-max), top-2
-    // probe per query, exact rank within probed partitions. Cosine values
-    // are compared only through the ordering, never as floats.
-    "q23_ivf_ann" ->
-      """WITH cent AS (
-        | SELECT vec_id AS c_id, embedding FROM embeddings WHERE vec_id % 97 = 0),
-        |assigned AS (
-        | SELECT neighbor_id, embedding, c_id FROM (
-        |  SELECT e.vec_id AS neighbor_id, e.embedding, c.c_id,
-        |   row_number() OVER (PARTITION BY e.vec_id
-        |     ORDER BY list_cosine_similarity(e.embedding, c.embedding) DESC, c.c_id) AS rn
-        |  FROM embeddings e CROSS JOIN cent c) WHERE rn = 1),
-        |qprobe AS (
-        | SELECT query_id, q_emb, c_id FROM (
-        |  SELECT q.vec_id AS query_id, q.embedding AS q_emb, c.c_id,
-        |   row_number() OVER (PARTITION BY q.vec_id
-        |     ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC, c.c_id) AS rn
-        |  FROM embeddings q CROSS JOIN cent c WHERE q.vec_id < 10) WHERE rn <= 2)
-        |SELECT query_id, neighbor_id, rank FROM (
-        | SELECT p.query_id, a.neighbor_id,
-        |  row_number() OVER (PARTITION BY p.query_id
-        |    ORDER BY list_cosine_similarity(p.q_emb, a.embedding) DESC, a.neighbor_id) AS rank
-        | FROM qprobe p JOIN assigned a USING (c_id)
-        | WHERE a.neighbor_id <> p.query_id)
-        |WHERE rank <= 10""".stripMargin,
-    // ord('') is -1 in DuckDB but ascii('') is 0 in Spark — the CASE pins
-    // the empty-char code to 0 on both engines.
-    "q24_rolling_fp" ->
-      """SELECT doc_id, list_reduce(
-        |  list_prepend(CAST(0 AS BIGINT),
-        |    list_transform(string_split_regex(text, ''),
-        |      x -> CAST(CASE WHEN x = '' THEN 0 ELSE ord(x) END AS BIGINT))),
-        |  (acc, x) -> (acc * 257 + x) % 2147483647) AS rolling_fp
-        |FROM documents""".stripMargin,
-    "q25_anti_join" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |WHERE NOT EXISTS (SELECT 1 FROM lineitem
-        |                  WHERE l_orderkey = o_orderkey AND l_discount > 0.05)""".stripMargin,
-    "q26_semi_join" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |WHERE EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey AND l_discount > 0.05)""".stripMargin,
-    "q27_rollup" ->
-      """SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty, count(*) AS cnt
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-    "q28_lag_gap" ->
-      """WITH g AS (SELECT user_id,
-        |  epoch_ms(ts) - lag(epoch_ms(ts), 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap
-        | FROM events)
-        |SELECT user_id, max(gap) AS max_gap_ms, count(*) AS n_events
-        |FROM g GROUP BY user_id""".stripMargin,
-    "q29_hash_split" ->
-      s"""WITH b AS (SELECT *, ${bucketOracle("doc_id")} AS bucket
-        | FROM documents)
-        |SELECT CASE WHEN bucket < 204 THEN 'train' WHEN bucket < 230 THEN 'val' ELSE 'test' END AS split,
-        | count(*) AS n_docs, CAST(sum(length(text)) AS BIGINT) AS total_chars
-        |FROM b GROUP BY 1""".stripMargin,
-    "q30_topk_per_group" ->
-      """SELECT c_mktsegment, rk, o_orderkey, o_totalprice FROM (
-        | SELECT c_mktsegment, o_orderkey, o_totalprice,
-        |  row_number() OVER (PARTITION BY c_mktsegment ORDER BY o_totalprice DESC, o_orderkey) AS rk
-        | FROM orders JOIN customer ON o_custkey = c_custkey)
-        |WHERE rk <= 3""".stripMargin,
-    "q31_histogram" ->
-      """SELECT CAST(floor(o_totalprice / 50000) AS BIGINT) AS bin, count(*) AS n_orders
-        |FROM orders GROUP BY 1""".stripMargin,
-    "q32_profile" ->
-      """SELECT count(*) AS n_rows,
-        | count(DISTINCT o_custkey) AS n_customers,
-        | count(*) FILTER (WHERE o_orderstatus IS NULL) AS null_status,
-        | min(o_orderkey) AS min_key, max(o_orderkey) AS max_key,
-        | CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents
-        |FROM orders""".stripMargin,
-    "q33_asof_join" ->
-      """SELECT p.event_id, p.user_id, epoch_ms(p.ts) - epoch_ms(v.ts) AS gap_ms
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |ASOF JOIN (SELECT * FROM events WHERE event_type = 'view') v
-        |  ON p.user_id = v.user_id AND v.ts <= p.ts""".stripMargin,
-    "q34_range_band" ->
-      """SELECT band, count(*) AS n_orders,
-        | CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents
-        |FROM orders
-        |JOIN (VALUES ('budget', 0, 100000), ('mid', 100000, 250000),
-        |             ('premium', 250000, 400000), ('luxury', 400000, 1000000)) b(band, lo, hi)
-        |  ON o_totalprice >= lo AND o_totalprice < hi
-        |GROUP BY band""".stripMargin,
-    "q35_running_sum" ->
-      """SELECT o_custkey, o_orderkey,
-        | CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-        |   OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS BIGINT) AS running_cents
-        |FROM orders""".stripMargin,
-    "q36_quartiles" ->
-      """WITH c AS (SELECT o_orderpriority, CAST(round(o_totalprice * 100) AS BIGINT) AS cents FROM orders)
-        |SELECT o_orderpriority,
-        | quantile_cont(cents, 0.25) AS p25,
-        | quantile_cont(cents, 0.5) AS p50,
-        | quantile_cont(cents, 0.75) AS p75,
-        | count(*) AS n_orders
-        |FROM c GROUP BY o_orderpriority""".stripMargin,
-    // q53: at sf0.01 every group is smaller than the sketch accuracy, so
-    // approx_percentile is exactly the discrete quantile — quantile_disc
-    // reproduces it value-for-value (verified empirically, 15/15 cells).
-    "q53_quartiles_approx" ->
-      """WITH c AS (SELECT o_orderpriority, CAST(round(o_totalprice * 100) AS BIGINT) AS cents FROM orders)
-        |SELECT o_orderpriority,
-        | quantile_disc(cents, 0.25) AS p25,
-        | quantile_disc(cents, 0.5) AS p50,
-        | quantile_disc(cents, 0.75) AS p75,
-        | count(*) AS n_orders
-        |FROM c GROUP BY o_orderpriority""".stripMargin,
-    "q37_setops" ->
-      """WITH v AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'view'),
-        | p AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase')
-        |SELECT user_id, 'both' AS rel FROM (SELECT user_id FROM v INTERSECT SELECT user_id FROM p)
-        |UNION ALL
-        |SELECT user_id, 'view_only' AS rel FROM (SELECT user_id FROM v EXCEPT SELECT user_id FROM p)""".stripMargin,
-    "q38_pivot" ->
-      """SELECT user_id,
-        | count(*) FILTER (WHERE event_type = 'click') AS click,
-        | count(*) FILTER (WHERE event_type = 'view') AS view,
-        | count(*) FILTER (WHERE event_type = 'purchase') AS purchase,
-        | count(*) FILTER (WHERE event_type = 'signup') AS signup,
-        | count(*) FILTER (WHERE event_type = 'error') AS error
-        |FROM events GROUP BY user_id""".stripMargin,
-    "q39_cube" ->
-      """SELECT o_orderpriority, o_orderstatus,
-        | GROUPING(o_orderpriority, o_orderstatus) AS gid,
-        | count(*) AS n_orders,
-        | CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents
-        |FROM orders GROUP BY CUBE (o_orderpriority, o_orderstatus)""".stripMargin,
-    "q40_global_topk" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin,
-    "q41_monthly_revenue" ->
-      """SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m') AS month,
-        | count(*) AS n_orders,
-        | CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS revenue_cents
-        |FROM orders GROUP BY 1""".stripMargin,
-    "q42_salted_join" ->
-      """SELECT o_orderpriority, count(*) AS n_items,
-        | CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS BIGINT) AS revenue_cents
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority""".stripMargin,
-    // q43: the raw HLL estimate is engine-specific; the oracled contract is
-    // the exact count plus "estimate within the 5% rsd spec" pinned TRUE.
-    "q43_approx_distinct" ->
-      """SELECT event_type,
-        | count(DISTINCT user_id) AS exact_users,
-        | TRUE AS approx_within_5pct
-        |FROM events GROUP BY event_type""".stripMargin,
-    "q44_corpus_prep" ->
-      s"""WITH keep AS (
-        |  SELECT min(doc_id) AS doc_id
-        |  FROM documents
-        |  GROUP BY md5(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g'))
-        |), d AS (
-        |  SELECT documents.* FROM documents JOIN keep USING (doc_id)
-        |), q AS (
-        |  SELECT doc_id, text, quality, ${bucketOracle("doc_id")} AS bucket
-        |  FROM ${qualityOracle("d")} __qd)
-        |SELECT doc_id,
-        | CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS token_count,
-        | quality,
-        | CASE WHEN bucket < 204 THEN 'train' WHEN bucket < 230 THEN 'val' ELSE 'test' END AS split
-        |FROM q WHERE quality >= 0.75""".stripMargin,
-    "q45_variant" ->
-      """SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k_value
-        |FROM events""".stripMargin,
-    "q46_range_frame" ->
-      """WITH t AS (SELECT o_custkey, epoch(o_orderdate) AS e,
-        |  CAST(round(o_totalprice * 100) AS BIGINT) AS cents FROM orders)
-        |SELECT o_custkey, max(trailing_7d_cents) AS peak_7d_cents FROM (
-        |  SELECT o_custkey,
-        |   CAST(sum(cents) OVER (PARTITION BY o_custkey ORDER BY e
-        |     RANGE BETWEEN 604800 PRECEDING AND CURRENT ROW) AS BIGINT) AS trailing_7d_cents
-        |  FROM t) GROUP BY o_custkey""".stripMargin,
-    "q47_top_terms" ->
-      """SELECT term, count(*) AS doc_freq FROM (
-        |  SELECT doc_id, unnest(list_distinct(list_filter(
-        |    string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' '),
-        |    w -> len(w) > 0))) AS term
-        |  FROM documents)
-        |GROUP BY term ORDER BY doc_freq DESC, term LIMIT 50""".stripMargin,
-    "q48_stratified_sample" ->
-      s"""SELECT event_id, user_id, event_type FROM events
-        |WHERE ${bucketOracle("event_id")}
-        |  < CASE event_type WHEN 'view' THEN ${Sampling.threshold(0.1)}
-        |                    WHEN 'click' THEN ${Sampling.threshold(0.5)}
-        |                    ELSE 256 END""".stripMargin,
-    "q49_decontaminate" ->
-      """WITH w AS (SELECT doc_id,
-        |  list_filter(string_split_regex(trim(lower(text)), '\s+'), x -> len(x) > 0) AS ws
-        | FROM documents),
-        | g AS (SELECT doc_id, unnest(list_transform(range(1, greatest(len(ws) - 2, 0) + 1),
-        |   i -> array_to_string(list_slice(ws, i, i + 2), ' '))) AS gram FROM w),
-        | t AS (SELECT DISTINCT gram FROM g WHERE doc_id % 97 = 0)
-        |SELECT g.doc_id, count(DISTINCT g.gram) AS n_hits
-        |FROM g JOIN t USING (gram)
-        |WHERE g.doc_id % 97 <> 0
-        |GROUP BY g.doc_id""".stripMargin,
-    "q50_pack_shards" ->
-      s"""WITH b AS (SELECT doc_id,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS tok,
-        |  ${bucketOracle("doc_id")} AS bucket
-        | FROM documents),
-        | a AS (SELECT doc_id, tok,
-        |  CASE WHEN bucket < 204 THEN 'train' WHEN bucket < 230 THEN 'val' ELSE 'test' END AS split,
-        |  bucket % 16 AS shard
-        | FROM b),
-        | p AS (SELECT *, sum(tok) OVER (PARTITION BY split, shard ORDER BY doc_id) AS cum FROM a)
-        |SELECT split, shard,
-        | CAST(floor((cum - tok) / CAST(2048 AS DOUBLE)) AS BIGINT) AS pack_id,
-        | count(*) AS n_docs, CAST(sum(tok) AS BIGINT) AS pack_tokens
-        |FROM p GROUP BY 1, 2, 3""".stripMargin,
-    "q51_grouping_sets" ->
-      """SELECT o_orderstatus, o_orderpriority,
-        | GROUPING(o_orderstatus, o_orderpriority) AS gid,
-        | count(*) AS n_orders,
-        | CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderstatus), ())""".stripMargin,
-    "q52_quantize" ->
-      """WITH m AS (SELECT vec_id,
-        |  list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS max_abs,
-        |  embedding FROM embeddings),
-        | q AS (SELECT vec_id, max_abs,
-        |  CASE WHEN max_abs > 0
-        |   THEN list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 127.0 / max_abs) AS BIGINT))
-        |   ELSE list_transform(embedding, x -> CAST(0 AS BIGINT)) END AS qv
-        | FROM m)
-        |SELECT vec_id, max_abs,
-        | CAST(list_sum(qv) AS BIGINT) AS q_sum,
-        | list_min(qv) AS q_min, list_max(qv) AS q_max
-        |FROM q""".stripMargin,
-    "q83_cohort_retention" ->
-      """WITH o AS (
-        | SELECT o_custkey,
-        |  CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS m
-        | FROM orders),
-        |c AS (SELECT o_custkey, m, min(m) OVER (PARTITION BY o_custkey) AS cohort FROM o)
-        |SELECT cohort, m - cohort AS age,
-        | CAST(count(DISTINCT o_custkey) AS BIGINT) AS n_active
-        |FROM c GROUP BY 1, 2""".stripMargin,
-    "q84_collocations" ->
-      """WITH tok AS (
-        | SELECT doc_id,
-        |  list_filter(string_split_regex(trim(lower(text)), '\s+'), w -> len(w) > 0) AS w
-        | FROM documents),
-        |t AS (SELECT doc_id, unnest(w) AS word, generate_subscripts(w, 1) AS pos FROM tok),
-        |uni AS (SELECT word, count(*) AS n_w FROM t GROUP BY 1),
-        |bi AS (
-        | SELECT a.word || ' ' || b.word AS bigram,
-        |  a.word AS left_w, b.word AS right_w, count(*) AS n_ab
-        | FROM t a JOIN t b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        | GROUP BY 1, 2, 3 HAVING count(*) >= 10)
-        |SELECT bi.bigram, CAST(bi.n_ab AS BIGINT) AS n_ab,
-        | CAST(ua.n_w AS BIGINT) AS n_a, CAST(ub.n_w AS BIGINT) AS n_b,
-        | CAST(floor(2000000 * bi.n_ab / (ua.n_w + ub.n_w)) AS BIGINT) AS dice_ppm
-        |FROM bi JOIN uni ua ON bi.left_w = ua.word
-        | JOIN uni ub ON bi.right_w = ub.word""".stripMargin,
-    "q85_transitions" ->
-      """WITH p AS (
-        | SELECT event_type AS to_state,
-        |  lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS from_state
-        | FROM events),
-        |n AS (SELECT from_state, to_state, count(*) AS n FROM p
-        |      WHERE from_state IS NOT NULL GROUP BY 1, 2),
-        |t AS (SELECT from_state, sum(n) AS total FROM n GROUP BY 1)
-        |SELECT n.from_state, n.to_state, CAST(n.n AS BIGINT) AS n,
-        | CAST(floor(1000000 * n.n / t.total) AS BIGINT) AS p_ppm
-        |FROM n JOIN t USING (from_state)""".stripMargin,
-    "q86_fuzzy_block" ->
-      """WITH p AS (
-        | SELECT p_partkey AS id, p_name AS name,
-        |  string_split(p_name, ' ')[2] || '|' || substring(string_split(p_name, ' ')[1], 1, 1) AS block
-        | FROM part WHERE p_partkey % 2 = 0)
-        |SELECT a.id AS a_id, b.id AS b_id, a.name AS a_name, b.name AS b_name,
-        | CAST(levenshtein(a.name, b.name) AS BIGINT) AS dist
-        |FROM p a JOIN p b ON a.block = b.block AND a.id < b.id
-        | AND abs(length(a.name) - length(b.name)) <= 3
-        |WHERE levenshtein(a.name, b.name) <= 3""".stripMargin,
-    "q87_lm_familiarity" ->
-      """WITH tok AS (
-        | SELECT doc_id, lang,
-        |  list_filter(string_split_regex(trim(lower(text)), '\s+'), w -> len(w) > 0) AS w
-        | FROM documents),
-        |t AS (SELECT doc_id, lang, unnest(w) AS word, generate_subscripts(w, 1) AS pos FROM tok),
-        |bi AS (
-        | SELECT a.doc_id, a.lang, a.word || ' ' || b.word AS bigram
-        | FROM t a JOIN t b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1),
-        |vocab AS (SELECT DISTINCT bigram FROM bi WHERE lang = 'en'),
-        |j AS (
-        | SELECT bi.doc_id, CASE WHEN v.bigram IS NULL THEN 0 ELSE 1 END AS known
-        | FROM bi LEFT JOIN vocab v ON bi.bigram = v.bigram)
-        |SELECT doc_id, count(*) AS n_bigrams, CAST(sum(known) AS BIGINT) AS n_known,
-        | CAST(floor(1000000 * sum(known) / count(*)) AS BIGINT) AS known_ppm
-        |FROM j GROUP BY 1""".stripMargin,
-    "q88_rolling_zscore" ->
-      """WITH e AS (
-        | SELECT user_id, ts, event_id, CAST(round(value * 100) AS BIGINT) AS cents
-        | FROM events),
-        |w AS (
-        | SELECT user_id, event_id, cents,
-        |  sum(cents) OVER win AS s, sum(cents * cents) OVER win AS q,
-        |  count(*) OVER win AS n
-        | FROM e
-        | WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id
-        |   ROWS BETWEEN 20 PRECEDING AND 1 PRECEDING))
-        |SELECT user_id, event_id, cents,
-        | CAST(s AS BIGINT) AS win_sum, CAST(q AS BIGINT) AS win_sumsq,
-        | (20 * cents - s) * (20 * cents - s) > 9 * (20 * q - s * s) AS is_anomaly
-        |FROM w WHERE n = 20""".stripMargin,
-    "q89_khop" ->
-      """WITH li AS (
-        | SELECT l_orderkey, l_partkey FROM lineitem WHERE l_partkey % 4 = 0),
-        |e AS (
-        | SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        | FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-        |sym AS (SELECT u AS src, v AS dst FROM e UNION SELECT v, u FROM e),
-        |mid AS (
-        | SELECT src, dst FROM (
-        |  SELECT src, dst, row_number() OVER (PARTITION BY src ORDER BY dst) AS rn FROM sym)
-        | WHERE rn <= 64),
-        |two AS (
-        | SELECT p.src, q.dst FROM sym p JOIN mid q ON p.dst = q.src WHERE p.src <> q.dst
-        | UNION SELECT src, dst FROM sym)
-        |SELECT o.src AS id, CAST(o.n1 AS BIGINT) AS n_1hop, CAST(t.n2 AS BIGINT) AS n_2hop
-        |FROM (SELECT src, count(*) AS n1 FROM sym GROUP BY 1) o
-        | JOIN (SELECT src, count(*) AS n2 FROM two GROUP BY 1) t USING (src)""".stripMargin,
-    "q90_concentration" ->
-      """WITH c AS (SELECT lang, source, count(*) AS n FROM documents GROUP BY 1, 2)
-        |SELECT lang, count(*) AS n_categories, CAST(sum(n) AS BIGINT) AS n_rows,
-        | CAST(floor(1000000 * sum(n * n) / (sum(n) * sum(n))) AS BIGINT) AS hhi_ppm
-        |FROM c GROUP BY 1""".stripMargin,
-    "q91_table_diff" ->
-      """WITH base AS (
-        | SELECT o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT) AS cents, o_orderstatus
-        | FROM orders),
-        |o AS (SELECT *, TRUE AS in_old FROM base WHERE o_orderkey % 7 <> 0),
-        |n AS (
-        | SELECT o_orderkey,
-        |  CASE WHEN o_orderkey % 5 = 0 THEN cents + 1000 ELSE cents END AS cents,
-        |  o_orderstatus, TRUE AS in_new
-        | FROM base WHERE o_orderkey % 11 <> 0),
-        |j AS (
-        | SELECT coalesce(o.o_orderkey, n.o_orderkey) AS o_orderkey,
-        |  o.in_old, n.in_new,
-        |  concat_ws(',',
-        |   CASE WHEN o.cents IS DISTINCT FROM n.cents THEN 'cents' END,
-        |   CASE WHEN o.o_orderstatus IS DISTINCT FROM n.o_orderstatus THEN 'o_orderstatus' END
-        |  ) AS cc
-        | FROM o FULL OUTER JOIN n ON o.o_orderkey = n.o_orderkey)
-        |SELECT o_orderkey,
-        | CASE WHEN in_old IS NULL THEN 'added'
-        |      WHEN in_new IS NULL THEN 'removed'
-        |      WHEN cc <> '' THEN 'changed' END AS change,
-        | CASE WHEN in_old IS NOT NULL AND in_new IS NOT NULL THEN cc ELSE '' END AS changed_cols
-        |FROM j
-        |WHERE in_old IS NULL OR in_new IS NULL OR cc <> ''""".stripMargin,
-    "q92_attribution" ->
-      """WITH p AS (
-        | SELECT user_id, event_id AS purchase_id, epoch_ms(ts) AS p_ms,
-        |  CAST(round(value * 100) AS BIGINT) AS revenue_cents
-        | FROM events WHERE event_type = 'purchase'),
-        |t AS (
-        | SELECT user_id, event_id AS touch_id, event_type AS touch_type, epoch_ms(ts) AS t_ms
-        | FROM events WHERE event_type IN ('click', 'view')),
-        |j AS (
-        | SELECT p.purchase_id, p.p_ms, p.revenue_cents, t.touch_type, t.t_ms,
-        |  row_number() OVER (PARTITION BY p.user_id, p.purchase_id
-        |                     ORDER BY t.t_ms DESC, t.touch_id DESC) AS rn
-        | FROM p JOIN t ON p.user_id = t.user_id AND t.t_ms <= p.p_ms)
-        |SELECT touch_type, count(*) AS n_purchases,
-        | CAST(sum(revenue_cents) AS BIGINT) AS attributed_cents
-        |FROM j WHERE rn = 1 AND p_ms - t_ms <= 604800000 GROUP BY 1""".stripMargin,
-    "q93_minmax_norm" ->
-      """WITH e AS (
-        | SELECT event_id, event_type, CAST(round(value * 100) AS BIGINT) AS cents
-        | FROM events)
-        |SELECT event_id, event_type, cents,
-        | CASE WHEN max(cents) OVER w = min(cents) OVER w THEN 0
-        |      ELSE CAST(floor(1000000 * (cents - min(cents) OVER w) /
-        |                      (max(cents) OVER w - min(cents) OVER w)) AS BIGINT) END AS scaled_ppm
-        |FROM e WINDOW w AS (PARTITION BY event_type)""".stripMargin,
-    "q94_inverted_index" ->
-      """WITH tok AS (
-        | SELECT doc_id,
-        |  list_filter(string_split_regex(trim(lower(text)), '\s+'), w -> len(w) > 0) AS w
-        | FROM documents),
-        |t AS (SELECT DISTINCT doc_id, term FROM (SELECT doc_id, unnest(w) AS term FROM tok))
-        |SELECT term, count(*) AS df,
-        | array_to_string(list_sort(list(doc_id))[1:20], ',') AS postings
-        |FROM t GROUP BY 1""".stripMargin,
-    "q95_share_of_total" ->
-      """WITH pc AS (
-        | SELECT o_custkey, sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
-        | FROM orders GROUP BY 1),
-        |pn AS (
-        | SELECT n_name, r_name, CAST(sum(cents) AS BIGINT) AS nation_cents
-        | FROM pc
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation ON c_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey
-        | GROUP BY 1, 2)
-        |SELECT n_name, r_name, nation_cents,
-        | CAST(sum(nation_cents) OVER (PARTITION BY r_name) AS BIGINT) AS region_cents,
-        | CAST(floor(1000000 * nation_cents /
-        |            sum(nation_cents) OVER (PARTITION BY r_name)) AS BIGINT) AS share_ppm
-        |FROM pn""".stripMargin,
-    "q96_quality_audit" ->
-      """WITH a AS (SELECT
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v1,
-        |  CAST(sum(CASE WHEN o_orderdate IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v2,
-        |  CAST(count(o_orderkey) - count(DISTINCT o_orderkey) AS BIGINT) AS v3,
-        |  CAST(sum(CASE WHEN CAST(round(o_totalprice * 100) AS BIGINT) < 0
-        |                  OR CAST(round(o_totalprice * 100) AS BIGINT) > 100000000
-        |                THEN 1 ELSE 0 END) AS BIGINT) AS v4
-        | FROM orders)
-        |SELECT 'not_null' AS "check", 'o_custkey' AS "column", v1 AS violations, n AS n_rows, v1 = 0 AS pass FROM a
-        |UNION ALL
-        |SELECT 'not_null', 'o_orderdate', v2, n, v2 = 0 FROM a
-        |UNION ALL
-        |SELECT 'unique', 'o_orderkey', v3, n, v3 = 0 FROM a
-        |UNION ALL
-        |SELECT 'range', 'o_totalprice_cents', v4, n, v4 = 0 FROM a""".stripMargin,
-    "q97_group_checksum" -> {
-      val row = "concat_ws('|', l_orderkey, l_linenumber, qty, cents)"
-      s"""WITH li AS (
-         | SELECT l_returnflag, l_orderkey, l_linenumber,
-         |  CAST(l_quantity AS BIGINT) AS qty,
-         |  CAST(round(l_extendedprice * 100) AS BIGINT) AS cents
-         | FROM lineitem),
-         |fp AS (SELECT l_returnflag,
-         |  CAST(${hexPrefixOracle(s"md5($row)", 10)} AS BIGINT) AS f FROM li)
-         |SELECT l_returnflag, count(*) AS n_rows,
-         | CAST(sum(f) AS BIGINT) AS checksum_sum,
-         | CAST(bit_xor(f) AS BIGINT) AS checksum_xor
-         |FROM fp GROUP BY 1""".stripMargin
-    },
-    "q98_weighted_median" ->
-      """WITH pv AS (
-        | SELECT l_returnflag, CAST(round(l_extendedprice * 100) AS BIGINT) AS cents,
-        |  CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS w
-        | FROM lineitem GROUP BY 1, 2),
-        |c AS (SELECT l_returnflag, cents, w,
-        |  CAST(sum(w) OVER (PARTITION BY l_returnflag ORDER BY cents) AS BIGINT) AS cum,
-        |  CAST(sum(w) OVER (PARTITION BY l_returnflag) AS BIGINT) AS tot
-        | FROM pv)
-        |SELECT l_returnflag,
-        | CAST(min(CASE WHEN 2 * cum >= tot THEN cents END) AS BIGINT) AS weighted_median,
-        | CAST(max(tot) AS BIGINT) AS total_weight
-        |FROM c GROUP BY 1""".stripMargin,
-    "q99_cusum" ->
-      """WITH e AS (
-        | SELECT user_id, ts, event_id, CAST(round(value * 100) AS BIGINT) AS cents
-        | FROM events),
-        |w AS (SELECT user_id,
-        |  CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) AS t,
-        |  CAST(sum(cents) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum,
-        |  CAST(count(*) OVER (PARTITION BY user_id) AS BIGINT) AS n,
-        |  CAST(sum(cents) OVER (PARTITION BY user_id) AS BIGINT) AS tot
-        | FROM e),
-        |s AS (SELECT user_id, n, abs(n * cum - t * tot) AS sc, t FROM w)
-        |SELECT user_id, n AS n_points, CAST(sc AS BIGINT) AS cusum_score, t AS cp_pos
-        |FROM s QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY sc DESC, t ASC) = 1""".stripMargin,
-    "q100_suffstats" ->
-      """SELECT l_returnflag, count(*) AS n,
-        | CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_x,
-        | CAST(sum(CAST(round(l_extendedprice) AS BIGINT)) AS BIGINT) AS sum_y,
-        | CAST(sum(CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_xx,
-        | CAST(sum(CAST(l_quantity AS BIGINT) * CAST(round(l_extendedprice) AS BIGINT)) AS BIGINT) AS sum_xy,
-        | CAST(sum(CAST(round(l_extendedprice) AS BIGINT) * CAST(round(l_extendedprice) AS BIGINT)) AS BIGINT) AS sum_yy
-        |FROM lineitem GROUP BY 1""".stripMargin,
-    "q101_skyline" ->
-      """WITH p AS (
-        | SELECT l_partkey,
-        |  CAST(min(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS min_cents,
-        |  CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS total_qty
-        | FROM lineitem GROUP BY 1)
-        |SELECT a.l_partkey, a.min_cents, a.total_qty FROM p a
-        |WHERE NOT EXISTS (
-        | SELECT 1 FROM p b
-        | WHERE b.min_cents <= a.min_cents AND b.total_qty >= a.total_qty
-        |  AND (b.min_cents < a.min_cents OR b.total_qty > a.total_qty))""".stripMargin,
-    "q102_equidepth" ->
-      """WITH li AS (
-        | SELECT l_returnflag, CAST(round(l_extendedprice * 100) AS BIGINT) AS cents,
-        |  l_orderkey, l_linenumber
-        | FROM lineitem),
-        |b AS (SELECT l_returnflag, cents,
-        |  CAST(ntile(10) OVER (PARTITION BY l_returnflag
-        |                       ORDER BY cents, l_orderkey, l_linenumber) AS BIGINT) AS bucket
-        | FROM li)
-        |SELECT l_returnflag, bucket, CAST(min(cents) AS BIGINT) AS lo,
-        | CAST(max(cents) AS BIGINT) AS hi, count(*) AS n
-        |FROM b GROUP BY 1, 2""".stripMargin,
-    "q103_mix_schedule" -> {
-      val cases = MixStrides.toSeq.sortBy(_._1)
-        .map { case (s0, st) => s"WHEN '$s0' THEN $st" }.mkString(" ")
-      val inList = MixStrides.keys.toSeq.sorted.map(s0 => s"'$s0'").mkString(", ")
-      // The WHERE mirrors mixSchedule's documented drop semantics (rows
-      // whose source has no stride are excluded), so the oracle stays
-      // correct even if the fixture grows a source outside MixStrides.
-      s"""SELECT doc_id, source,
-         | CAST(${hexPrefixOracle("md5(CAST(doc_id AS VARCHAR))", 10)} *
-         |      (CASE source $cases END) AS BIGINT) AS mix_pos
-         |FROM documents WHERE source IN ($inList)""".stripMargin
-    },
-    "q104_sorted_neighborhood" ->
-      """WITH r AS (
-        | SELECT c_custkey AS id, c_name AS name, substring(c_name, 10, 4) AS block,
-        |  CAST(row_number() OVER (PARTITION BY substring(c_name, 10, 4)
-        |                          ORDER BY c_name, c_custkey) AS BIGINT) AS rk
-        | FROM customer)
-        |SELECT a.block, a.id AS a_id, b.id AS b_id, a.name AS a_name, b.name AS b_name,
-        | b.rk - a.rk AS rank_gap, CAST(levenshtein(a.name, b.name) AS BIGINT) AS dist
-        |FROM r a JOIN r b
-        | ON a.block = b.block AND b.rk > a.rk AND b.rk <= a.rk + 2""".stripMargin,
-    "q105_session_paths" ->
-      """WITH r AS (
-        | SELECT user_id, event_type,
-        |  row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        | FROM events),
-        |p AS (SELECT user_id, string_agg(event_type, '->' ORDER BY rn) AS path
-        | FROM r WHERE rn <= 6 GROUP BY 1)
-        |SELECT path, count(*) AS n_keys FROM p GROUP BY 1""".stripMargin,
-    "q106_rfm" ->
-      """WITH per AS (
-        | SELECT o_custkey, max(CAST(o_orderdate AS DATE)) AS last_d,
-        |  count(*) AS frequency,
-        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS monetary_cents
-        | FROM orders GROUP BY 1),
-        |base AS (SELECT o_custkey, frequency, monetary_cents,
-        |  CAST(date_diff('day', last_d, (SELECT max(last_d) FROM per)) AS BIGINT) AS recency_days
-        | FROM per)
-        |SELECT o_custkey, frequency, monetary_cents, recency_days,
-        | CAST(ntile(5) OVER (ORDER BY recency_days, o_custkey) AS BIGINT) AS r_bucket,
-        | CAST(ntile(5) OVER (ORDER BY frequency, o_custkey) AS BIGINT) AS f_bucket,
-        | CAST(ntile(5) OVER (ORDER BY monetary_cents, o_custkey) AS BIGINT) AS m_bucket
-        |FROM base""".stripMargin,
-    "q107_survivorship" ->
-      """WITH log AS (
-        | SELECT o_custkey, o_orderkey AS seq,
-        |  CASE WHEN o_orderkey % 3 <> 0 THEN o_orderstatus END AS status,
-        |  CASE WHEN o_orderkey % 4 <> 0 THEN CAST(round(o_totalprice * 100) AS BIGINT) END AS cents
-        | FROM orders)
-        |SELECT o_custkey, count(*) AS n_records, CAST(max(seq) AS BIGINT) AS last_seq,
-        | arg_max(status, CASE WHEN status IS NOT NULL THEN seq END) AS status,
-        | CAST(arg_max(cents, CASE WHEN cents IS NOT NULL THEN seq END) AS BIGINT) AS cents
-        |FROM log GROUP BY 1""".stripMargin,
-    "q108_mom_growth" ->
-      """WITH m AS (
-        | SELECT o_orderpriority, strftime(o_orderdate, '%Y-%m') AS month,
-        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
-        | FROM orders GROUP BY 1, 2)
-        |SELECT o_orderpriority, month, cents,
-        | lag(cents) OVER w AS prev_value,
-        | cents - lag(cents) OVER w AS delta,
-        | CASE WHEN lag(cents) OVER w > 0
-        |      THEN CAST(cents - lag(cents) OVER w AS DOUBLE) / lag(cents) OVER w
-        | END AS growth
-        |FROM m WINDOW w AS (PARTITION BY o_orderpriority ORDER BY month)""".stripMargin,
-    "q109_runs" ->
-      """WITH r AS (
-        | SELECT user_id, event_type,
-        |  CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) AS rn,
-        |  row_number() OVER (PARTITION BY user_id, event_type ORDER BY ts, event_id) AS rns
-        | FROM events)
-        |SELECT user_id, event_type, CAST(min(rn) AS BIGINT) AS start_pos,
-        | CAST(max(rn) AS BIGINT) AS end_pos, count(*) AS run_len
-        |FROM r GROUP BY user_id, event_type, rn - rns""".stripMargin,
-    "q110_category_bitmap" ->
-      """WITH b AS (
-        | SELECT user_id,
-        |  CAST(bit_or(CASE event_type WHEN 'click' THEN 1 WHEN 'error' THEN 2
-        |   WHEN 'purchase' THEN 4 WHEN 'signup' THEN 8 WHEN 'view' THEN 16
-        |   ELSE 0 END) AS BIGINT) AS cat_mask
-        | FROM events GROUP BY 1)
-        |SELECT user_id, cat_mask, CAST(bit_count(cat_mask) AS BIGINT) AS n_cats
-        |FROM b""".stripMargin,
-    "q111_melt" ->
-      """WITH b AS (
-        | SELECT l_orderkey, l_linenumber, CAST(l_quantity AS BIGINT) AS qty,
-        |  CAST(round(l_extendedprice * 100) AS BIGINT) AS price_cents,
-        |  CAST(round(l_discount * 1000000) AS BIGINT) AS disc_ppm
-        | FROM lineitem)
-        |SELECT l_orderkey, l_linenumber, 'qty' AS variable, qty AS value FROM b
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, 'price_cents', price_cents FROM b
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, 'disc_ppm', disc_ppm FROM b""".stripMargin,
-    "q112_twa" ->
-      """WITH e AS (
-        | SELECT user_id, epoch_ms(ts) AS ms, event_id,
-        |  CAST(round(value * 100) AS BIGINT) AS cents
-        | FROM events),
-        |d AS (SELECT user_id, cents,
-        |  lead(ms) OVER (PARTITION BY user_id ORDER BY ms, event_id) - ms AS dur
-        | FROM e)
-        |SELECT user_id, CAST(sum(cents * dur) AS BIGINT) AS weighted_sum,
-        | CAST(sum(dur) AS BIGINT) AS total_ms,
-        | CASE WHEN sum(dur) > 0
-        |      THEN CAST(CAST(sum(cents * dur) AS BIGINT) AS DOUBLE) / CAST(sum(dur) AS BIGINT)
-        | END AS twa
-        |FROM d WHERE dur IS NOT NULL GROUP BY 1""".stripMargin,
-    "q113_dict_encode" ->
-      """SELECT doc_id, lang,
-        | CAST(dense_rank() OVER (ORDER BY lang NULLS FIRST) AS BIGINT) AS lang_code
-        |FROM documents""".stripMargin,
-    "q114_nearest_event" ->
-      """WITH p AS (
-        | SELECT user_id, event_id AS purchase_id, epoch_ms(ts) AS p_ms
-        | FROM events WHERE event_type = 'purchase'),
-        |t AS (
-        | SELECT user_id, event_id AS touch_id, event_type AS touch_type, epoch_ms(ts) AS t_ms
-        | FROM events WHERE event_type IN ('click', 'view')),
-        |b AS (SELECT * FROM (
-        | SELECT p.purchase_id, t.touch_id, t.touch_type, t.t_ms,
-        |  row_number() OVER (PARTITION BY p.purchase_id
-        |                     ORDER BY t.t_ms DESC, t.touch_id DESC) AS rn
-        | FROM p JOIN t ON p.user_id = t.user_id AND t.t_ms <= p.p_ms) WHERE rn = 1),
-        |f AS (SELECT * FROM (
-        | SELECT p.purchase_id, t.touch_id, t.touch_type, t.t_ms,
-        |  row_number() OVER (PARTITION BY p.purchase_id
-        |                     ORDER BY t.t_ms ASC, t.touch_id ASC) AS rn
-        | FROM p JOIN t ON p.user_id = t.user_id AND t.t_ms > p.p_ms) WHERE rn = 1),
-        |j AS (SELECT p.user_id, p.purchase_id, p.p_ms,
-        |  b.touch_id AS b_id, b.touch_type AS b_type, b.t_ms AS b_ms,
-        |  f.touch_id AS f_id, f.touch_type AS f_type, f.t_ms AS f_ms,
-        |  (b.touch_id IS NOT NULL AND
-        |   (f.touch_id IS NULL OR p.p_ms - b.t_ms <= f.t_ms - p.p_ms)) AS use_b
-        | FROM p
-        |  LEFT JOIN b ON p.purchase_id = b.purchase_id
-        |  LEFT JOIN f ON p.purchase_id = f.purchase_id
-        | WHERE b.touch_id IS NOT NULL OR f.touch_id IS NOT NULL)
-        |SELECT user_id, purchase_id, p_ms,
-        | CASE WHEN use_b THEN b_id ELSE f_id END AS touch_id,
-        | CASE WHEN use_b THEN b_type ELSE f_type END AS touch_type,
-        | CAST(CASE WHEN use_b THEN p_ms - b_ms ELSE f_ms - p_ms END AS BIGINT) AS nearest_dist
-        |FROM j""".stripMargin,
-    // q115: same tokenization as q18; bigrams distinct first, then the two
-    // continuation counts — identical integer tables on both engines.
-    "q115_lm_counts" ->
-      """WITH tok AS (
-        | SELECT doc_id,
-        |  list_filter(string_split_regex(trim(lower(text)), '\s+'), w -> len(w) > 0) AS w
-        | FROM documents),
-        |u AS (
-        | SELECT word, CAST(count(*) AS BIGINT) AS n_tokens
-        | FROM (SELECT unnest(w) AS word FROM tok) GROUP BY 1 HAVING count(*) >= 5),
-        |bi AS (
-        | SELECT DISTINCT unnest(list_transform(range(0, greatest(len(w) - 1, 0)),
-        |   i -> w[i+1] || ' ' || w[i+2])) AS bigram
-        | FROM tok),
-        |sp AS (SELECT string_split(bigram, ' ')[1] AS left_w, string_split(bigram, ' ')[2] AS right_w FROM bi),
-        |l AS (SELECT right_w AS word, CAST(count(*) AS BIGINT) AS nl FROM sp GROUP BY 1),
-        |r AS (SELECT left_w AS word, CAST(count(*) AS BIGINT) AS nr FROM sp GROUP BY 1)
-        |SELECT u.word, u.n_tokens,
-        | CAST(coalesce(l.nl, 0) AS BIGINT) AS n_left_contexts,
-        | CAST(coalesce(r.nr, 0) AS BIGINT) AS n_right_contexts
-        |FROM u LEFT JOIN l ON u.word = l.word LEFT JOIN r ON u.word = r.word""".stripMargin,
-    "q116_key_skew" ->
-      """WITH c AS (SELECT l_suppkey, CAST(count(*) AS BIGINT) AS n FROM lineitem GROUP BY 1),
-        |t AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM c),
-        |top AS (SELECT l_suppkey, n FROM c ORDER BY n DESC, l_suppkey LIMIT 20)
-        |SELECT CAST(row_number() OVER win AS BIGINT) AS rank, l_suppkey, n,
-        | CAST(floor(1000000 * n / total) AS BIGINT) AS share_ppm,
-        | CAST(floor(1000000 * sum(n) OVER win / total) AS BIGINT) AS cum_share_ppm
-        |FROM top, t
-        |WINDOW win AS (ORDER BY n DESC, l_suppkey ROWS UNBOUNDED PRECEDING)""".stripMargin,
-    // q117: the boundary is the value at 1-based rank ceil(p·n) ascending
-    // (rank 1 for p=0) — the same pure integer-rank definition as the
-    // Spark side, no interpolation, so the clamp replays exactly.
-    "q117_winsorize" ->
-      """WITH c AS (
-        | SELECT o_orderkey, o_orderpriority,
-        |  CAST(round(o_totalprice * 100) AS BIGINT) AS cents FROM orders),
-        |r AS (
-        | SELECT *, row_number() OVER (PARTITION BY o_orderpriority ORDER BY cents) AS rn,
-        |  count(*) OVER (PARTITION BY o_orderpriority) AS n
-        | FROM c),
-        |b AS (
-        | SELECT o_orderpriority,
-        |  min(CASE WHEN rn = greatest(CAST(ceil(0.05 * n) AS BIGINT), 1) THEN cents END) AS lo,
-        |  max(CASE WHEN rn = greatest(CAST(ceil(0.95 * n) AS BIGINT), 1) THEN cents END) AS hi
-        | FROM r GROUP BY 1)
-        |SELECT c.o_orderkey, c.o_orderpriority, c.cents,
-        | greatest(least(c.cents, b.hi), b.lo) AS winsorized
-        |FROM c JOIN b USING (o_orderpriority)""".stripMargin,
-    "q118_agreement" ->
-      """WITH c AS (
-        | SELECT c_custkey, c_nationkey, c_mktsegment,
-        |  CAST(round(c_acctbal * 100) AS BIGINT) % 10 AS bal_digit,
-        |  c_acctbal > 0 AS bal_pos,
-        |  substring(c_name, 18, 1) AS name_last
-        | FROM customer)
-        |SELECT a.c_custkey AS a_id, b.c_custkey AS b_id,
-        | a.bal_digit AS a_bal_digit, b.bal_digit AS b_bal_digit,
-        | a.bal_pos AS a_bal_pos, b.bal_pos AS b_bal_pos,
-        | a.name_last AS a_name_last, b.name_last AS b_name_last,
-        | CAST((CASE WHEN a.bal_digit IS NOT DISTINCT FROM b.bal_digit THEN 5 ELSE -1 END)
-        |  + (CASE WHEN a.bal_pos IS NOT DISTINCT FROM b.bal_pos THEN 1 ELSE -1 END)
-        |  + (CASE WHEN a.name_last IS NOT DISTINCT FROM b.name_last THEN 3 ELSE -2 END) AS BIGINT) AS score,
-        | ((CASE WHEN a.bal_digit IS NOT DISTINCT FROM b.bal_digit THEN 5 ELSE -1 END)
-        |  + (CASE WHEN a.bal_pos IS NOT DISTINCT FROM b.bal_pos THEN 1 ELSE -1 END)
-        |  + (CASE WHEN a.name_last IS NOT DISTINCT FROM b.name_last THEN 3 ELSE -2 END)) >= 3 AS is_match
-        |FROM c a JOIN c b
-        | ON a.c_nationkey = b.c_nationkey AND a.c_mktsegment = b.c_mktsegment
-        |  AND a.c_custkey < b.c_custkey""".stripMargin,
-    "q119_gini" ->
-      """WITH c AS (SELECT lang, source, CAST(count(*) AS BIGINT) AS x
-        |  FROM documents GROUP BY 1, 2),
-        |r AS (SELECT lang, source, x,
-        |  CAST(row_number() OVER (PARTITION BY lang ORDER BY x, source) AS BIGINT) AS i
-        | FROM c)
-        |SELECT lang, count(*) AS n_categories, CAST(sum(x) AS BIGINT) AS n_rows,
-        | CAST(floor(1000000 * (2 * sum(i * x) - (count(*) + 1) * sum(x))
-        |   / (count(*) * sum(x))) AS BIGINT) AS gini_ppm
-        |FROM r GROUP BY lang""".stripMargin,
-    "q120_cooccurrence" ->
-      """WITH p AS (
-        | SELECT DISTINCT l_orderkey AS basket, l_partkey % 100 AS item FROM lineitem),
-        |ic AS (SELECT item, CAST(count(*) AS BIGINT) AS n_item FROM p GROUP BY 1),
-        |tot AS (SELECT CAST(count(DISTINCT basket) AS BIGINT) AS nb FROM p),
-        |pr AS (
-        | SELECT l.item AS a_item, r.item AS b_item, CAST(count(*) AS BIGINT) AS n_ab
-        | FROM p l JOIN p r ON l.basket = r.basket AND l.item < r.item
-        | GROUP BY 1, 2 HAVING count(*) >= 2)
-        |SELECT a_item, b_item, n_ab, a.n_item AS n_a, b.n_item AS n_b,
-        | CAST(floor(1000000 * n_ab * nb / (a.n_item * b.n_item)) AS BIGINT) AS lift_ppm
-        |FROM pr JOIN ic a ON pr.a_item = a.item JOIN ic b ON pr.b_item = b.item
-        |CROSS JOIN tot""".stripMargin,
-    "q121_char_terms" ->
-      """WITH tok AS (
-        | SELECT doc_id,
-        |  list_filter(string_split_regex(trim(lower(text)), '\s+'), w -> len(w) > 0) AS w
-        | FROM documents),
-        |t AS (SELECT doc_id, unnest(w) AS term FROM tok),
-        |f AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf FROM t GROUP BY 1, 2),
-        |d AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM f GROUP BY 1),
-        |r AS (
-        | SELECT f.doc_id, f.term, f.tf, d.df,
-        |  CAST(row_number() OVER (PARTITION BY f.doc_id
-        |    ORDER BY f.tf DESC, d.df ASC, f.term ASC) AS BIGINT) AS rank
-        | FROM f JOIN d ON f.term = d.term)
-        |SELECT doc_id, term, tf, df, rank FROM r WHERE rank <= 3""".stripMargin,
-    "q122_vocab_coverage" ->
-      """WITH tok AS (
-        | SELECT doc_id,
-        |  list_filter(string_split_regex(trim(lower(text)), '\s+'), w -> len(w) > 0) AS w
-        | FROM documents),
-        |t AS (SELECT doc_id, unnest(w) AS word FROM tok),
-        |v AS (
-        | SELECT word, 1 AS in_vocab FROM (
-        |  SELECT word, count(*) AS n FROM t GROUP BY 1
-        |  ORDER BY n DESC, word LIMIT 100)),
-        |c AS (
-        | SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |  CAST(sum(CASE WHEN v.in_vocab IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov
-        | FROM t LEFT JOIN v ON t.word = v.word GROUP BY 1)
-        |SELECT doc_id, n_tokens, n_oov,
-        | CAST(floor(1000000 * n_oov / n_tokens) AS BIGINT) AS oov_ppm
-        |FROM c""".stripMargin,
-    // q123: the oracle aggregates the post-merge survivor set directly —
-    // base (%7<>0) minus deletes (%11=0) plus inserts (%7=0).
-    "q123_delta_agg" ->
-      """WITH o AS (
-        | SELECT o_custkey, o_orderkey,
-        |  CAST(round(o_totalprice * 100) AS BIGINT) AS cents FROM orders),
-        |s AS (
-        | SELECT * FROM o
-        | WHERE o_orderkey % 7 = 0 OR (o_orderkey % 7 <> 0 AND o_orderkey % 11 <> 0))
-        |SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_rows,
-        | CAST(sum(cents) AS BIGINT) AS sum_v
-        |FROM s GROUP BY 1""".stripMargin,
-    "q124_join_estimate" ->
-      """WITH c AS (SELECT user_id AS key, CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1),
-        |per AS (SELECT key, n AS n_left, n AS n_right, n * n AS est_rows FROM c),
-        |t AS (SELECT CAST(sum(est_rows) AS BIGINT) AS total FROM per),
-        |top AS (SELECT * FROM per ORDER BY est_rows DESC, key LIMIT 15)
-        |SELECT CAST(row_number() OVER win AS BIGINT) AS rank, key, n_left, n_right, est_rows,
-        | CAST(floor(1000000 * est_rows / total) AS BIGINT) AS est_share_ppm
-        |FROM top, t
-        |WINDOW win AS (ORDER BY est_rows DESC, key ROWS UNBOUNDED PRECEDING)""".stripMargin,
-    // q125: string 3-grams with positions stand in for Spark's 64-bit
-    // window hashes (cardinalities equal absent collisions, as in
-    // q16/q18); hot windows fan out to the k positions they cover.
-    "q125_span_coverage" ->
-      """WITH tok AS (
-        | SELECT doc_id,
-        |  list_filter(string_split_regex(trim(lower(text)), '\s+'), w -> len(w) > 0) AS w
-        | FROM documents),
-        |g AS (
-        | SELECT doc_id, unnest(list_transform(range(0, greatest(len(w) - 2, 0)),
-        |   i -> {'i': i, 'g': w[i+1] || ' ' || w[i+2] || ' ' || w[i+3]})) AS s
-        | FROM tok),
-        |gg AS (SELECT doc_id, CAST(s.i AS BIGINT) AS i, s.g AS g FROM g),
-        |hot AS (
-        | SELECT g FROM (SELECT g, count(DISTINCT doc_id) AS nd FROM gg GROUP BY 1)
-        | WHERE nd >= 3),
-        |cov AS (
-        | SELECT DISTINCT gg.doc_id, gg.i + o.k AS j
-        | FROM gg JOIN hot ON gg.g = hot.g
-        | CROSS JOIN (VALUES (0), (1), (2)) o(k)),
-        |c AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS covered_words FROM cov GROUP BY 1)
-        |SELECT t.doc_id, CAST(len(t.w) AS BIGINT) AS n_words,
-        | CAST(coalesce(c.covered_words, 0) AS BIGINT) AS covered_words,
-        | CAST(CASE WHEN len(t.w) > 0
-        |  THEN floor(1000000 * (len(t.w) - coalesce(c.covered_words, 0)) / len(t.w))
-        |  ELSE 1000000 END AS BIGINT) AS kept_ppm
-        |FROM tok t LEFT JOIN c USING (doc_id)""".stripMargin,
-    "q126_ann_multiprobe" -> PinnedQ126,
-    // q127: the exact side is recomputed by brute force (same CTE as the
-    // q19 oracle — already proven to agree with Spark's float ordering);
-    // recall is re-derived from the pinned ANN rows, so this checks the
-    // recall MATH, not just result stability.
-    "q127_ann_recall" ->
-      s"""WITH ann AS ($PinnedQ126),
-        |exact AS (
-        | SELECT query_id, neighbor_id FROM (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |   row_number() OVER (PARTITION BY q.vec_id
-        |     ORDER BY list_cosine_similarity(c.embedding, q.embedding) DESC, c.vec_id) AS rank
-        |  FROM embeddings c, embeddings q
-        |  WHERE q.vec_id < 10 AND c.vec_id <> q.vec_id) WHERE rank <= 10),
-        |h AS (
-        | SELECT a.query_id, CAST(count(*) AS BIGINT) AS n_hits
-        | FROM ann a JOIN exact e
-        |  ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id GROUP BY 1)
-        |SELECT q.query_id, CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-        | CAST(floor(1000000 * coalesce(h.n_hits, 0) / 10) AS BIGINT) AS recall_ppm
-        |FROM (SELECT DISTINCT query_id FROM exact) q LEFT JOIN h USING (query_id)""".stripMargin,
-    // q128: components via the same recursive closure as q54, then the
-    // (rank desc, id asc) argmax replayed as a window; unranked members
-    // get Long.MinValue exactly like the Spark side.
-    "q128_cluster_rep" ->
-      s"""WITH RECURSIVE $DocChainComponentsCte,
-        |comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id),
-        |ranked AS (
-        | SELECT c.id, c.component,
-        |  coalesce(d.n_chars, -9223372036854775807 - 1) AS rnk
-        | FROM comp c LEFT JOIN documents d ON c.id = d.doc_id),
-        |w AS (
-        | SELECT component, id AS rep_id,
-        |  row_number() OVER (PARTITION BY component ORDER BY rnk DESC, id) AS rn
-        | FROM ranked)
-        |SELECT CAST(r.id AS BIGINT) AS id, CAST(r.component AS BIGINT) AS component,
-        | CAST(w.rep_id AS BIGINT) AS rep_id, r.id = w.rep_id AS is_rep
-        |FROM ranked r JOIN w ON r.component = w.component AND w.rn = 1""".stripMargin,
-    // q129: KN bigram probability as ONE integer rational —
-    // ⌊1e6·(B·(4·c12 − 3) + 3·R1(w1)·L1(w2)) / (4·c1·B)⌋ — identical
-    // numerator/denominator as the Spark side, so floor rounding agrees.
-    "q129_kneser_ney" ->
-      """WITH tok AS (
-        | SELECT list_filter(string_split_regex(trim(lower(text)), '\s+'), w -> len(w) > 0) AS w
-        | FROM documents),
-        |bg AS (
-        | SELECT unnest(list_transform(range(0, greatest(len(w) - 1, 0)),
-        |   i -> w[i+1] || ' ' || w[i+2])) AS bigram
-        | FROM tok),
-        |bi AS (
-        | SELECT string_split(bigram, ' ')[1] AS w1, string_split(bigram, ' ')[2] AS w2,
-        |  CAST(count(*) AS BIGINT) AS n_12
-        | FROM bg GROUP BY 1, 2),
-        |c1 AS (SELECT w1, CAST(sum(n_12) AS BIGINT) AS c_1 FROM bi GROUP BY 1),
-        |r1 AS (SELECT w1, CAST(count(*) AS BIGINT) AS r_1 FROM bi GROUP BY 1),
-        |l1 AS (SELECT w2, CAST(count(*) AS BIGINT) AS l_1 FROM bi GROUP BY 1),
-        |bb AS (SELECT CAST(count(*) AS BIGINT) AS n_bigrams FROM bi)
-        |SELECT bi.w1, bi.w2, bi.n_12,
-        | CAST(floor((1000000 * (bb.n_bigrams * (4 * bi.n_12 - 3) + 3 * r1.r_1 * l1.l_1))
-        |   / (4 * c1.c_1 * bb.n_bigrams)) AS BIGINT) AS p_ppm
-        |FROM bi JOIN c1 USING (w1) JOIN r1 USING (w1) JOIN l1 USING (w2), bb
-        |WHERE bi.n_12 >= 3""".stripMargin,
-    // q130: the oracle is the BRUTE-FORCE similarity join — every pair,
-    // exact Jaccard — which is precisely the no-false-negative contract
-    // the prefix filter claims; sf0.01's 500 docs keep it tractable.
-    "q130_prefix_jaccard" ->
-      """WITH tok AS (
-        | SELECT doc_id,
-        |  list_distinct(list_filter(string_split_regex(trim(lower(text)), '\s+'), w -> len(w) > 0)) AS s
-        | FROM documents),
-        |nz AS (SELECT doc_id, s, len(s) AS n FROM tok WHERE len(s) > 0),
-        |p AS (
-        | SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |  CAST(a.n AS BIGINT) AS n_a, CAST(b.n AS BIGINT) AS n_b,
-        |  CAST(len(list_intersect(a.s, b.s)) AS BIGINT) AS n_common
-        | FROM nz a JOIN nz b ON a.doc_id < b.doc_id)
-        |SELECT a_id, b_id, n_a, n_b, n_common,
-        | CAST(floor(1000000 * n_common / (n_a + n_b - n_common)) AS BIGINT) AS jaccard_ppm
-        |FROM p WHERE n_common * 1000000 >= 950000 * (n_a + n_b - n_common)""".stripMargin,
-    // q131: gram identity replayed as the literal window STRING (the Spark
-    // side matches on 64-bit window hashes — same grouping, collision odds
-    // negligible); short docs contribute their whole token sequence as one
-    // gram and empty docs share the empty gram, mirroring the native
-    // short-doc fallback.
-    "q131_novelty" ->
-      """WITH tok AS (
-        | SELECT doc_id,
-        |  list_filter(string_split_regex(trim(lower(text)), '\s+'), w -> len(w) > 0) AS w
-        | FROM documents),
-        |g AS (
-        | SELECT doc_id, unnest(list_distinct(CASE WHEN len(w) >= 3
-        |   THEN list_transform(range(0, len(w) - 2), i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3])
-        |   ELSE [array_to_string(w, ' ')] END)) AS gram
-        | FROM tok),
-        |f AS (SELECT gram, min(doc_id) AS first_id FROM g GROUP BY 1),
-        |p AS (
-        | SELECT g.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-        |  CAST(count(*) FILTER (WHERE f.first_id = g.doc_id) AS BIGINT) AS n_new
-        | FROM g JOIN f USING (gram) GROUP BY 1)
-        |SELECT doc_id, n_grams, n_new,
-        | CAST(floor(1000000 * n_new / n_grams) AS BIGINT) AS novelty_ppm
-        |FROM p""".stripMargin,
-    // q132: the LOO mean replayed with a window (sum/count over the
-    // segment minus self); floor() of the same double division.
-    "q132_target_encode" ->
-      """WITH c AS (
-        | SELECT c_custkey, c_mktsegment,
-        |  CAST(round(c_acctbal * 100) AS BIGINT) AS bal_cents
-        | FROM customer)
-        |SELECT c_custkey, c_mktsegment, bal_cents,
-        | CASE WHEN count(*) OVER seg > 1 THEN
-        |  CAST(floor((sum(bal_cents) OVER seg - bal_cents)
-        |    / (count(*) OVER seg - 1)) AS BIGINT) END AS loo_code
-        |FROM c WINDOW seg AS (PARTITION BY c_mktsegment)""".stripMargin,
-    // q133: q19's proven float-cosine replay plus the label inequality
-    // (labels are non-null in the fixture; the Spark side's null-safe
-    // negation agrees wherever labels exist).
-    "q133_hard_negatives" ->
-      """SELECT query_id, neighbor_id, n_label, rank FROM (
-        | SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, c.label AS n_label,
-        |  row_number() OVER (PARTITION BY q.vec_id
-        |    ORDER BY list_cosine_similarity(c.embedding, q.embedding) DESC, c.vec_id) AS rank
-        | FROM embeddings c, embeddings q
-        | WHERE q.vec_id < 10 AND c.label <> q.label)
-        |WHERE rank <= 10""".stripMargin,
-    // q134: the q54 component closure + md5-bucket split on the GROUP key
-    // (rows outside any component key by their own id).
-    "q134_leakfree_split" ->
-      s"""WITH RECURSIVE $DocChainComponentsCte,
-        |comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id),
-        |j AS (
-        | SELECT d.doc_id, coalesce(c.component, d.doc_id) AS group_id
-        | FROM documents d LEFT JOIN comp c ON d.doc_id = c.id),
-        |bk AS (SELECT doc_id, group_id, ${bucketOracle("group_id")} AS bucket FROM j)
-        |SELECT doc_id, group_id,
-        | CASE WHEN bucket < 204 THEN 'train' WHEN bucket < 230 THEN 'val'
-        |  ELSE 'test' END AS split
-        |FROM bk""".stripMargin,
-    // q137: the distributed offset+local-rank construction IS the global
-    // row_number — replayed directly.
-    "q137_dense_ids" ->
-      """SELECT doc_id, n_chars,
-        | CAST(row_number() OVER (ORDER BY n_chars, doc_id) - 1 AS BIGINT) AS dense_id
-        |FROM documents""".stripMargin,
-    // q135: pinned sf0.01 merge table (tools/pin_oracle.py) — the
-    // iterative argmax-then-rewrite loop is deterministic but not
-    // SQL-replayable (same contract as the q64 Count-Min pin).
-    "q135_bpe_merges" -> {
-      val rows = PinnedQ135Merges.map { case (r, l, rt, n) =>
-        s"($r,'${sqlEsc(l)}','${sqlEsc(rt)}',$n)"
-      }.mkString(",")
-      "SELECT CAST(merge_rank AS BIGINT) AS merge_rank, left_sym, right_sym, " +
-        s"CAST(n AS BIGINT) AS n FROM (VALUES $rows) AS t(merge_rank, left_sym, right_sym, n)"
-    },
-    // q136: ENCODE replayed in pure SQL ([[BpeEncodeCtes]] — each word
-    // becomes its spaced symbol string and the pinned merges apply as a
-    // chain of string replaces, whose left-to-right non-overlapping scan
-    // IS the trainer's leftmost-greedy rewrite), then the fertility
-    // arithmetic. The CTE list is shared verbatim with the token-exact
-    // packers q391/q392 so the three cannot drift.
-    "q136_bpe_encode" ->
-      s"""WITH $BpeEncodeCtes
-        |SELECT t.doc_id, coalesce(p.n_words, 0) AS n_words,
-        | coalesce(p.n_subwords, 0) AS n_subwords,
-        | CAST(CASE WHEN coalesce(p.n_words, 0) > 0
-        |  THEN floor(1000000 * p.n_subwords / p.n_words) ELSE 0 END AS BIGINT) AS fertility_ppm
-        |FROM tok t LEFT JOIN per p USING (doc_id)""".stripMargin,
-    // q138: identical segmentation (16-word blocks of the normalized
-    // token list), md5 fingerprint election ordered by (doc_id, idx),
-    // reassembly via ordered string_agg of the rn=1 survivors.
-    "q138_segment_dedup" ->
-      """WITH tok AS (
-        | SELECT doc_id,
-        |  list_filter(string_split_regex(trim(lower(text)), '\s+'), w -> len(w) > 0) AS w
-        | FROM documents),
-        |seg0 AS (
-        | SELECT doc_id, w, unnest(range(CAST(ceil(len(w)/16.0) AS BIGINT))) AS i
-        | FROM tok WHERE len(w) > 0),
-        |seg AS (
-        | SELECT doc_id, i AS idx, array_to_string(w[(i*16+1):(i*16+16)], ' ') AS seg
-        | FROM seg0),
-        |win AS (
-        | SELECT doc_id, idx, seg,
-        |  row_number() OVER (PARTITION BY md5(seg) ORDER BY doc_id, idx) AS rn
-        | FROM seg),
-        |agg AS (
-        | SELECT doc_id,
-        |  CAST(count(*) AS BIGINT) AS n_segments,
-        |  CAST(count(CASE WHEN rn > 1 THEN 1 END) AS BIGINT) AS n_dropped,
-        |  coalesce(string_agg(seg, ' ' ORDER BY idx) FILTER (WHERE rn = 1), '') AS clean_text
-        | FROM win GROUP BY doc_id)
-        |SELECT d.doc_id, coalesce(a.clean_text, '') AS clean_text,
-        | coalesce(a.n_segments, 0) AS n_segments,
-        | coalesce(a.n_dropped, 0) AS n_dropped
-        |FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id""".stripMargin,
-    // q139: both split assignments replayed (naive md5 bucket of doc_id;
-    // grouped bucket of the recursive-CTE component id), pairs from the
-    // same edges0 relation docChainPairs builds; inner joins drop pairs
-    // whose endpoint falls outside the corpus, as the Spark op does.
-    "q139_split_leakage" ->
-      s"""WITH RECURSIVE $DocChainComponentsCte,
-        |comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id),
-        |gs AS (
-        | SELECT d.doc_id,
-        |  CASE WHEN ${bucketOracle("coalesce(c.component, d.doc_id)")} < 204 THEN 'train'
-        |   WHEN ${bucketOracle("coalesce(c.component, d.doc_id)")} < 230 THEN 'val'
-        |   ELSE 'test' END AS split
-        | FROM documents d LEFT JOIN comp c ON d.doc_id = c.id),
-        |ns AS (
-        | SELECT doc_id,
-        |  CASE WHEN ${bucketOracle("doc_id")} < 204 THEN 'train'
-        |   WHEN ${bucketOracle("doc_id")} < 230 THEN 'val'
-        |   ELSE 'test' END AS split
-        | FROM documents)
-        |SELECT 'grouped' AS method, CAST(count(*) AS BIGINT) AS n_pairs,
-        | CAST(count(CASE WHEN a.split <> b.split THEN 1 END) AS BIGINT) AS cross_split_pairs
-        |FROM edges0 e JOIN gs a ON e.u = a.doc_id JOIN gs b ON e.v = b.doc_id
-        |UNION ALL
-        |SELECT 'naive_hash', CAST(count(*) AS BIGINT),
-        | CAST(count(CASE WHEN a.split <> b.split THEN 1 END) AS BIGINT)
-        |FROM edges0 e JOIN ns a ON e.u = a.doc_id JOIN ns b ON e.v = b.doc_id""".stripMargin,
-    // q140: same tokenizer, list slice, whole-token join.
-    "q140_token_truncate" ->
-      """WITH tok AS (
-        | SELECT doc_id,
-        |  list_filter(string_split_regex(trim(lower(text)), '\s+'), w -> len(w) > 0) AS w
-        | FROM documents)
-        |SELECT doc_id, CAST(len(w) AS INT) AS n_tokens, len(w) > 64 AS truncated,
-        | array_to_string(w[1:64], ' ') AS out_text
-        |FROM tok""".stripMargin,
-    // q141: plain NOT EXISTS on the q12 content fingerprint — the bloom
-    // pre-filter is a pure optimization, invisible in the result.
-    "q141_cross_corpus_dedup" ->
-      """SELECT d.doc_id, d.source FROM documents d
-        |WHERE d.doc_id % 2 = 0 AND NOT EXISTS (
-        | SELECT 1 FROM documents r WHERE r.doc_id % 2 = 1
-        |  AND md5(regexp_replace(trim(lower(r.text)), '\s+', ' ', 'g'))
-        |    = md5(regexp_replace(trim(lower(d.text)), '\s+', ' ', 'g')))""".stripMargin,
-    // q142: identical quantization (round to BIGINT at scale 1024) and
-    // the same all-integer threshold algebra — list_sum over BIGINT
-    // products stays exact, unlike list_dot_product's double.
-    "q142_semantic_dedup" ->
-      """WITH q AS (
-        | SELECT vec_id, label,
-        |  list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1024) AS BIGINT)) AS qv
-        | FROM embeddings),
-        |n AS (
-        | SELECT vec_id, label, qv,
-        |  list_sum(list_transform(range(1, len(qv)+1), i -> qv[i]*qv[i])) AS n2
-        | FROM q),
-        |p AS (
-        | SELECT DISTINCT b.vec_id AS dropped_id
-        | FROM n a JOIN n b ON a.label = b.label AND a.vec_id < b.vec_id,
-        |  LATERAL (SELECT list_sum(list_transform(range(1, len(a.qv)+1), i -> a.qv[i]*b.qv[i])) AS d) t
-        | WHERE t.d > 0 AND t.d * t.d * 100 >= 81 * a.n2 * b.n2)
-        |SELECT e.vec_id, e.label,
-        | EXISTS (SELECT 1 FROM p WHERE p.dropped_id = e.vec_id) AS dropped
-        |FROM embeddings e""".stripMargin,
-    // q143: q50's window replayed with the offset algebra inlined.
-    "q143_pack_offsets" ->
-      s"""WITH b AS (SELECT doc_id,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS tok,
-        |  ${bucketOracle("doc_id")} AS bucket
-        | FROM documents),
-        | a AS (SELECT doc_id, tok,
-        |  CASE WHEN bucket < 204 THEN 'train' WHEN bucket < 230 THEN 'val' ELSE 'test' END AS split,
-        |  bucket % 16 AS shard
-        | FROM b),
-        | p AS (SELECT *, sum(tok) OVER (PARTITION BY split, shard ORDER BY doc_id) AS cum FROM a)
-        |SELECT doc_id, split, CAST(shard AS BIGINT) AS shard,
-        | CAST(floor((cum - tok) / CAST(2048 AS DOUBLE)) AS BIGINT) AS pack_id,
-        | tok,
-        | CAST(cum - tok - CAST(floor((cum - tok) / CAST(2048 AS DOUBLE)) AS BIGINT) * 2048 AS BIGINT) AS offset_tok
-        |FROM p""".stripMargin,
-    // q144: distinct 3-grams per train doc, hits against the test-set
-    // gram set, ppm share; docs below 3 tokens report 0s.
-    "q144_overlap_stats" ->
-      """WITH tok AS (
-        | SELECT doc_id,
-        |  list_filter(string_split_regex(trim(lower(text)), '\s+'), w -> len(w) > 0) AS w
-        | FROM documents),
-        |tr AS (SELECT * FROM tok WHERE doc_id % 97 <> 0),
-        |te AS (SELECT * FROM tok WHERE doc_id % 97 = 0),
-        |trg AS (
-        | SELECT DISTINCT doc_id, array_to_string(w[i:(i+2)], ' ') AS gram
-        | FROM (SELECT doc_id, w, unnest(range(1, len(w) - 1)) AS i FROM tr WHERE len(w) >= 3)),
-        |teg AS (
-        | SELECT DISTINCT array_to_string(w[i:(i+2)], ' ') AS gram
-        | FROM (SELECT w, unnest(range(1, len(w) - 1)) AS i FROM te WHERE len(w) >= 3)),
-        |agg AS (
-        | SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-        |  CAST(count(CASE WHEN gram IN (SELECT gram FROM teg) THEN 1 END) AS BIGINT) AS n_hits
-        | FROM trg GROUP BY 1)
-        |SELECT t.doc_id, coalesce(a.n_grams, 0) AS n_grams,
-        | coalesce(a.n_hits, 0) AS n_hits,
-        | CAST(CASE WHEN coalesce(a.n_grams, 0) > 0
-        |  THEN floor(1000000 * a.n_hits / a.n_grams) ELSE 0 END AS BIGINT) AS overlap_ppm
-        |FROM tr t LEFT JOIN agg a USING (doc_id)""".stripMargin,
-    // q145: same quantization as q142; exact integer sums; floor of the
-    // double division is exact (|sum| far below 2^53).
-    "q145_label_centroids" ->
-      """WITH q AS (
-        | SELECT label,
-        |  list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1024) AS BIGINT)) AS qv
-        | FROM embeddings),
-        |e AS (SELECT label, unnest(range(1, len(qv)+1)) AS dim, qv FROM q),
-        |v AS (SELECT label, CAST(dim AS INT) AS dim, qv[dim] AS val FROM e)
-        |SELECT label, dim, CAST(count(*) AS BIGINT) AS n,
-        | CAST(sum(val) AS BIGINT) AS sum_q,
-        | CAST(floor(CAST(sum(val) AS DOUBLE) / count(*)) AS BIGINT) AS centroid
-        |FROM v GROUP BY 1, 2""".stripMargin,
-    // q146: bit-length bucket replayed with bin(); same token regex as q50.
-    "q146_length_histogram" ->
-      """WITH b AS (
-        | SELECT source,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS tok
-        | FROM documents)
-        |SELECT source,
-        | CAST(CASE WHEN tok <= 0 THEN 0 ELSE length(bin(tok)) END AS INT) AS log2_bucket,
-        | CAST(count(*) AS BIGINT) AS n, CAST(sum(tok) AS BIGINT) AS total,
-        | CAST(min(tok) AS BIGINT) AS lo, CAST(max(tok) AS BIGINT) AS hi
-        |FROM b GROUP BY 1, 2""".stripMargin,
-    // q147/q148: the q138 segmentation replayed; stacked count aggs /
-    // distinct-pair self-join.
-    "q147_segment_dup_profile" ->
-      """WITH tok AS (
-        | SELECT doc_id,
-        |  list_filter(string_split_regex(trim(lower(text)), '\s+'), w -> len(w) > 0) AS w
-        | FROM documents),
-        |seg0 AS (
-        | SELECT doc_id, w, unnest(range(CAST(ceil(len(w)/16.0) AS BIGINT))) AS i
-        | FROM tok WHERE len(w) > 0),
-        |seg AS (SELECT md5(array_to_string(w[(i*16+1):(i*16+16)], ' ')) AS fp FROM seg0),
-        |cl AS (SELECT fp, CAST(count(*) AS BIGINT) AS cluster_size FROM seg GROUP BY 1)
-        |SELECT cluster_size, CAST(count(*) AS BIGINT) AS n_clusters,
-        | CAST(sum(cluster_size) AS BIGINT) AS n_segments
-        |FROM cl GROUP BY 1""".stripMargin,
-    "q148_source_overlap" ->
-      """WITH tok AS (
-        | SELECT doc_id, source,
-        |  list_filter(string_split_regex(trim(lower(text)), '\s+'), w -> len(w) > 0) AS w
-        | FROM documents),
-        |seg0 AS (
-        | SELECT source, w, unnest(range(CAST(ceil(len(w)/16.0) AS BIGINT))) AS i
-        | FROM tok WHERE len(w) > 0),
-        |gfp AS (
-        | SELECT DISTINCT source, md5(array_to_string(w[(i*16+1):(i*16+16)], ' ')) AS fp
-        | FROM seg0)
-        |SELECT a.source AS source_a, b.source AS source_b,
-        | CAST(count(*) AS BIGINT) AS n_shared
-        |FROM gfp a JOIN gfp b ON a.fp = b.fp AND a.source < b.source
-        |GROUP BY 1, 2""".stripMargin,
-    // q149: the WAV writer's sample formula (ascii byte at i mod len,
-    // ×128) replayed analytically — text is pure ASCII (strlen ==
-    // octet_length, asserted over all SFs), so char indexing == byte
-    // indexing. Sums are exact integers; mean is truncating division of
-    // non-negatives on both sides.
-    "q149_audio_stats" ->
-      """WITH d AS (
-        | SELECT doc_id, coalesce(text, '') AS t FROM documents WHERE doc_id % 2 = 1),
-        |par AS (
-        | SELECT doc_id, t, strlen(t) AS l, 500 + doc_id % 1000 AS n,
-        |  8000 + (doc_id % 8) * 1000 AS rate
-        | FROM d),
-        |ix AS (SELECT doc_id, rate, n, t, l, unnest(range(n)) AS i FROM par),
-        |v AS (
-        | SELECT doc_id, rate, n,
-        |  CASE WHEN l = 0 THEN 0
-        |   ELSE ascii(substring(t, CAST(i % l AS INT) + 1, 1)) * 128 END AS s
-        | FROM ix)
-        |SELECT doc_id AS media_id, CAST(rate AS BIGINT) AS sample_rate,
-        | CAST(n AS BIGINT) AS n_samples,
-        | CAST(sum(CAST(s AS BIGINT) * s) AS BIGINT) AS energy,
-        | CAST(sum(s) // n AS BIGINT) AS mean_abs,
-        | CAST(max(s) AS BIGINT) AS peak_abs
-        |FROM v GROUP BY doc_id, rate, n""".stripMargin,
-    // q150: the BMP writer cycles the doc's ascii bytes over the PADDED
-    // pixel array (rowSize = ceil(3w/4)·4), so the oracle walks byte
-    // offsets j, keeps only in-row pixel bytes (j%rowSize < 3w), and
-    // assigns channel j%3 (BGR order). Text is pure ASCII (strlen ==
-    // octet_length asserted over all SFs), so char indexing == byte
-    // indexing; empty text decodes to all-zero pixels on both sides.
-    "q150_image_stats" ->
-      """WITH d AS (
-        | SELECT doc_id, coalesce(text, '') AS t FROM documents WHERE doc_id % 2 = 0),
-        |par AS (
-        | SELECT doc_id, t, strlen(t) AS l, 8 + doc_id % 24 AS w,
-        |  8 + doc_id % 16 AS h
-        | FROM d),
-        |geom AS (SELECT *, ((24 * w + 31) // 32) * 4 AS row_size FROM par),
-        |ix AS (
-        | SELECT doc_id, w, h, row_size, t, l, unnest(range(row_size * h)) AS j
-        | FROM geom),
-        |px AS (
-        | SELECT doc_id, w, h, j % row_size AS pir,
-        |  CASE WHEN l = 0 THEN 0
-        |   ELSE ascii(substring(t, CAST(j % l AS INT) + 1, 1)) END AS v
-        | FROM ix),
-        |ch AS (SELECT doc_id, w, h, v, pir % 3 AS c FROM px WHERE pir < 3 * w)
-        |SELECT doc_id AS media_id, CAST(w AS BIGINT) AS width,
-        | CAST(h AS BIGINT) AS height, CAST(w * h AS BIGINT) AS n_pixels,
-        | CAST(sum(CASE WHEN c = 0 THEN v ELSE 0 END) AS BIGINT) AS sum_b,
-        | CAST(sum(CASE WHEN c = 1 THEN v ELSE 0 END) AS BIGINT) AS sum_g,
-        | CAST(sum(CASE WHEN c = 2 THEN v ELSE 0 END) AS BIGINT) AS sum_r
-        |FROM ch GROUP BY doc_id, w, h""".stripMargin,
-    // q151: NULL dependents form one class in GROUP BY on both engines.
-    "q151_fd_audit" ->
-      """WITH dd AS (
-        | SELECT source, lang, CAST(count(*) AS BIGINT) AS n
-        | FROM documents GROUP BY source, lang)
-        |SELECT source, CAST(sum(n) AS BIGINT) AS n_rows,
-        | CAST(count(*) AS BIGINT) AS n_distinct_dep,
-        | CAST(max(n) AS BIGINT) AS top_count,
-        | CAST(sum(n) - max(n) AS BIGINT) AS violations
-        |FROM dd GROUP BY source HAVING count(*) > 1""".stripMargin,
-    "q152_k_anonymity" ->
-      """SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS group_size
-        |FROM events GROUP BY user_id, event_type
-        |HAVING count(*) < 8""".stripMargin,
-    // q153: rank() tie semantics are identical across engines; integer
-    // floor-division of non-negatives on both sides.
-    "q153_percent_rank" ->
-      """WITH ev AS (
-        | SELECT event_id, event_type,
-        |  CAST(round(value * 100) AS BIGINT) AS cents
-        | FROM events),
-        |rk AS (
-        | SELECT event_id, event_type, cents,
-        |  rank() OVER (PARTITION BY event_type ORDER BY cents) AS r,
-        |  count(*) OVER (PARTITION BY event_type) AS n
-        | FROM ev)
-        |SELECT event_id, event_type, cents,
-        | CAST(CASE WHEN n = 1 THEN 0
-        |  ELSE (1000000 * (r - 1)) // (n - 1) END AS BIGINT) AS pr_ppm
-        |FROM rk""".stripMargin,
-    // q154: same tokenizer as q47; empty docs zero-filled on both sides.
-    "q154_lexical_diversity" ->
-      """WITH tok AS (
-        | SELECT doc_id, unnest(list_filter(
-        |   string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' '),
-        |   w -> len(w) > 0)) AS term
-        | FROM documents),
-        |tf AS (
-        | SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-        | FROM tok GROUP BY doc_id, term),
-        |per AS (
-        | SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
-        |  CAST(count(*) AS BIGINT) AS n_types,
-        |  CAST(sum(tf * tf) AS BIGINT) AS simpson_sum,
-        |  CAST(count(*) FILTER (WHERE tf = 1) AS BIGINT) AS hapax
-        | FROM tf GROUP BY doc_id)
-        |SELECT d.doc_id,
-        | coalesce(p.n_tokens, 0) AS n_tokens,
-        | coalesce(p.n_types, 0) AS n_types,
-        | CAST(CASE WHEN coalesce(p.n_tokens, 0) = 0 THEN 0
-        |  ELSE (1000000 * p.n_types) // p.n_tokens END AS BIGINT) AS ttr_ppm,
-        | coalesce(p.simpson_sum, 0) AS simpson_sum,
-        | coalesce(p.hapax, 0) AS hapax
-        |FROM documents d LEFT JOIN per p ON d.doc_id = p.doc_id""".stripMargin,
-    "q155_embargo_split" ->
-      """SELECT user_id,
-        | CAST(count(*) FILTER (WHERE ts < TIMESTAMP '2024-01-22 00:00:00')
-        |   AS BIGINT) AS n_train,
-        | CAST(count(*) FILTER (WHERE ts >= TIMESTAMP '2024-01-24 00:00:00')
-        |   AS BIGINT) AS n_test,
-        | CAST(count(*) FILTER (WHERE ts >= TIMESTAMP '2024-01-22 00:00:00'
-        |   AND ts < TIMESTAMP '2024-01-24 00:00:00') AS BIGINT) AS n_embargo,
-        | (count(*) FILTER (WHERE ts < TIMESTAMP '2024-01-22 00:00:00') > 0
-        |  AND count(*) FILTER (WHERE ts >= TIMESTAMP '2024-01-24 00:00:00') > 0)
-        |  AS cross_presence
-        |FROM events GROUP BY user_id""".stripMargin,
-    // q156: md5 hex is engine-identical; epoch-major order, hash-permuted
-    // within each epoch, doc_id as the deterministic tiebreak.
-    "q156_epoch_schedule" ->
-      """WITH s AS (
-        | SELECT e.epoch, d.doc_id,
-        |  md5(e.epoch || ':' || d.doc_id) AS h
-        | FROM documents d, (SELECT unnest(range(3)) AS epoch) e)
-        |SELECT CAST(epoch AS BIGINT) AS epoch, doc_id,
-        | CAST(row_number() OVER (ORDER BY epoch, h, doc_id) - 1 AS BIGINT)
-        |  AS schedule_pos
-        |FROM s""".stripMargin,
-    // q157: the same six sums per pair, computed directly; dollar/percent
-    // units keep every Σx² far inside BIGINT.
-    "q157_suffstats_matrix" ->
-      """WITH f AS (
-        | SELECT CAST(l_quantity AS BIGINT) AS qty,
-        |  CAST(round(l_extendedprice) AS BIGINT) AS price_dollars,
-        |  CAST(round(l_discount * 100) AS BIGINT) AS discount_pct,
-        |  CAST(round(l_tax * 100) AS BIGINT) AS tax_pct
-        | FROM lineitem)
-        |SELECT 'qty' AS x_name, 'price_dollars' AS y_name,
-        | CAST(count(*) AS BIGINT) AS n, CAST(sum(qty) AS BIGINT) AS sum_x,
-        | CAST(sum(price_dollars) AS BIGINT) AS sum_y,
-        | CAST(sum(qty*qty) AS BIGINT) AS sum_xx,
-        | CAST(sum(qty*price_dollars) AS BIGINT) AS sum_xy,
-        | CAST(sum(price_dollars*price_dollars) AS BIGINT) AS sum_yy FROM f
-        |UNION ALL SELECT 'qty', 'discount_pct', CAST(count(*) AS BIGINT),
-        | CAST(sum(qty) AS BIGINT), CAST(sum(discount_pct) AS BIGINT),
-        | CAST(sum(qty*qty) AS BIGINT), CAST(sum(qty*discount_pct) AS BIGINT),
-        | CAST(sum(discount_pct*discount_pct) AS BIGINT) FROM f
-        |UNION ALL SELECT 'qty', 'tax_pct', CAST(count(*) AS BIGINT),
-        | CAST(sum(qty) AS BIGINT), CAST(sum(tax_pct) AS BIGINT),
-        | CAST(sum(qty*qty) AS BIGINT), CAST(sum(qty*tax_pct) AS BIGINT),
-        | CAST(sum(tax_pct*tax_pct) AS BIGINT) FROM f
-        |UNION ALL SELECT 'price_dollars', 'discount_pct', CAST(count(*) AS BIGINT),
-        | CAST(sum(price_dollars) AS BIGINT), CAST(sum(discount_pct) AS BIGINT),
-        | CAST(sum(price_dollars*price_dollars) AS BIGINT),
-        | CAST(sum(price_dollars*discount_pct) AS BIGINT),
-        | CAST(sum(discount_pct*discount_pct) AS BIGINT) FROM f
-        |UNION ALL SELECT 'price_dollars', 'tax_pct', CAST(count(*) AS BIGINT),
-        | CAST(sum(price_dollars) AS BIGINT), CAST(sum(tax_pct) AS BIGINT),
-        | CAST(sum(price_dollars*price_dollars) AS BIGINT),
-        | CAST(sum(price_dollars*tax_pct) AS BIGINT),
-        | CAST(sum(tax_pct*tax_pct) AS BIGINT) FROM f
-        |UNION ALL SELECT 'discount_pct', 'tax_pct', CAST(count(*) AS BIGINT),
-        | CAST(sum(discount_pct) AS BIGINT), CAST(sum(tax_pct) AS BIGINT),
-        | CAST(sum(discount_pct*discount_pct) AS BIGINT),
-        | CAST(sum(discount_pct*tax_pct) AS BIGINT),
-        | CAST(sum(tax_pct*tax_pct) AS BIGINT) FROM f""".stripMargin,
-    // q158: within-stratum md5 permutation rank × stratum count + dense
-    // stratum code; md5 hex and ASCII source ordering are engine-identical.
-    "q158_stratified_interleave" ->
-      """WITH rk AS (
-        | SELECT doc_id, source,
-        |  row_number() OVER (PARTITION BY source
-        |   ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) - 1 AS wr
-        | FROM documents),
-        |codes AS (
-        | SELECT source, row_number() OVER (ORDER BY source) AS code
-        | FROM (SELECT DISTINCT source FROM documents)),
-        |b AS (SELECT count(*) AS nb FROM codes)
-        |SELECT rk.doc_id, rk.source,
-        | CAST(rk.wr * b.nb + codes.code - 1 AS BIGINT) AS interleave_pos
-        |FROM rk JOIN codes ON rk.source = codes.source CROSS JOIN b""".stripMargin,
-    // q159: same [.!?]+ segmentation and q13 word tokenizer; empty and
-    // NULL docs produce all-zero rows on both sides.
-    "q159_sentence_stats" ->
-      """SELECT doc_id,
-        | CAST(coalesce(len(list_filter(
-        |   regexp_split_to_array(coalesce(text, ''), '[.!?]+'),
-        |   s -> regexp_matches(s, '\S'))), 0) AS BIGINT) AS n_sentences,
-        | CAST(coalesce(length(text), 0) AS BIGINT) AS n_chars,
-        | CAST(coalesce(len(list_filter(string_split_regex(text, '\s+'),
-        |   x -> len(x) > 0)), 0) AS BIGINT) AS n_words,
-        | CAST(CASE WHEN coalesce(len(list_filter(
-        |    regexp_split_to_array(coalesce(text, ''), '[.!?]+'),
-        |    s -> regexp_matches(s, '\S'))), 0) = 0 THEN 0
-        |  ELSE (1000000 * coalesce(length(text), 0)) // len(list_filter(
-        |    regexp_split_to_array(coalesce(text, ''), '[.!?]+'),
-        |    s -> regexp_matches(s, '\S'))) END AS BIGINT) AS chars_per_sentence_ppm,
-        | CAST(CASE WHEN coalesce(len(list_filter(
-        |    regexp_split_to_array(coalesce(text, ''), '[.!?]+'),
-        |    s -> regexp_matches(s, '\S'))), 0) = 0 THEN 0
-        |  ELSE (1000000 * coalesce(len(list_filter(string_split_regex(text, '\s+'),
-        |    x -> len(x) > 0)), 0)) // len(list_filter(
-        |    regexp_split_to_array(coalesce(text, ''), '[.!?]+'),
-        |    s -> regexp_matches(s, '\S'))) END AS BIGINT) AS words_per_sentence_ppm
-        |FROM documents""".stripMargin,
-    // q160: len − len(regexp strip) per ASCII class; classes partition the
-    // string so the five counts sum to n_chars on both sides.
-    "q160_char_classes" ->
-      """WITH t AS (SELECT doc_id, coalesce(text, '') AS s FROM documents),
-        |c AS (
-        | SELECT doc_id, CAST(length(s) AS BIGINT) AS n_chars,
-        |  CAST(length(s) - length(regexp_replace(s, '[0-9]', '', 'g')) AS BIGINT) AS n_digit,
-        |  CAST(length(s) - length(regexp_replace(s, '[A-Z]', '', 'g')) AS BIGINT) AS n_upper,
-        |  CAST(length(s) - length(regexp_replace(s, '[a-z]', '', 'g')) AS BIGINT) AS n_lower,
-        |  CAST(length(s) - length(regexp_replace(s, '\s', '', 'g')) AS BIGINT) AS n_space
-        | FROM t)
-        |SELECT doc_id, n_chars, n_digit, n_upper, n_lower, n_space,
-        | CAST(n_chars - n_digit - n_upper - n_lower - n_space AS BIGINT) AS n_other,
-        | CAST(CASE WHEN n_chars = 0 THEN 0
-        |  ELSE (1000000 * n_digit) // n_chars END AS BIGINT) AS digit_ppm
-        |FROM c""".stripMargin,
-    // q161: two-stage exact lower medians (min value with 2·cum ≥ tot over
-    // integer counts), replayed with windows over distinct values.
-    "q161_mad_outliers" ->
-      """WITH v AS (
-        | SELECT event_id, event_type,
-        |  CAST(round(value * 100) AS BIGINT) AS cents
-        | FROM events),
-        |c1 AS (SELECT event_type, cents, count(*) AS w FROM v GROUP BY 1, 2),
-        |m1 AS (
-        | SELECT event_type,
-        |  min(CASE WHEN 2 * cum >= tot THEN cents END) AS med
-        | FROM (
-        |  SELECT event_type, cents,
-        |   sum(w) OVER (PARTITION BY event_type ORDER BY cents) AS cum,
-        |   sum(w) OVER (PARTITION BY event_type) AS tot
-        |  FROM c1)
-        | GROUP BY event_type),
-        |d AS (
-        | SELECT v.event_id, v.event_type, v.cents, m1.med,
-        |  abs(v.cents - m1.med) AS dev
-        | FROM v JOIN m1 ON v.event_type = m1.event_type),
-        |c2 AS (SELECT event_type, dev, count(*) AS w FROM d GROUP BY 1, 2),
-        |m2 AS (
-        | SELECT event_type,
-        |  min(CASE WHEN 2 * cum >= tot THEN dev END) AS mad
-        | FROM (
-        |  SELECT event_type, dev,
-        |   sum(w) OVER (PARTITION BY event_type ORDER BY dev) AS cum,
-        |   sum(w) OVER (PARTITION BY event_type) AS tot
-        |  FROM c2)
-        | GROUP BY event_type)
-        |SELECT d.event_id, d.event_type, d.cents, d.med, m2.mad,
-        | (d.dev > 3 * m2.mad) AS is_outlier
-        |FROM d JOIN m2 ON d.event_type = m2.event_type""".stripMargin,
-    // q162: same four RedactionRules patterns, counted independently.
-    "q162_pii_density" ->
-      """WITH t AS (SELECT doc_id, coalesce(text, '') AS s FROM documents),
-        |c AS (
-        | SELECT doc_id, CAST(length(s) AS BIGINT) AS n_chars,
-        |  CAST(len(regexp_extract_all(s,
-        |   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_email,
-        |  CAST(len(regexp_extract_all(s,
-        |   '\b(?:\d{1,3}\.){3}\d{1,3}\b')) AS BIGINT) AS n_ip,
-        |  CAST(len(regexp_extract_all(s, '\d{6,}')) AS BIGINT) AS n_longid,
-        |  CAST(len(regexp_extract_all(s, '\+?\d[\d\s()-]{6,}\d')) AS BIGINT) AS n_phone
-        | FROM t)
-        |SELECT doc_id, n_chars, n_email, n_ip, n_longid, n_phone,
-        | CAST((1000 * (n_email + n_ip + n_longid + n_phone))
-        |  // greatest(n_chars, 1) AS BIGINT) AS pii_per_kilochar
-        |FROM c""".stripMargin,
-    "q163_fk_orphans" ->
-      """SELECT 'lineitem.l_orderkey->orders' AS relation,
-        | CAST(count(*) FILTER (WHERE o.o_orderkey IS NULL) AS BIGINT) AS n_orphans,
-        | CAST(count(*) AS BIGINT) AS n_rows,
-        | count(*) FILTER (WHERE o.o_orderkey IS NULL) = 0 AS pass
-        |FROM lineitem l LEFT JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |WHERE l.l_orderkey IS NOT NULL
-        |UNION ALL
-        |SELECT 'orders.o_custkey->customer',
-        | CAST(count(*) FILTER (WHERE c.c_custkey IS NULL) AS BIGINT),
-        | CAST(count(*) AS BIGINT),
-        | count(*) FILTER (WHERE c.c_custkey IS NULL) = 0
-        |FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey
-        |WHERE o.o_custkey IS NOT NULL
-        |UNION ALL
-        |SELECT 'lineitem.l_partkey->part',
-        | CAST(count(*) FILTER (WHERE p.p_partkey IS NULL) AS BIGINT),
-        | CAST(count(*) AS BIGINT),
-        | count(*) FILTER (WHERE p.p_partkey IS NULL) = 0
-        |FROM lineitem l LEFT JOIN part p ON l.l_partkey = p.p_partkey
-        |WHERE l.l_partkey IS NOT NULL
-        |UNION ALL
-        |SELECT 'customer.c_nationkey->nation',
-        | CAST(count(*) FILTER (WHERE n.n_nationkey IS NULL) AS BIGINT),
-        | CAST(count(*) AS BIGINT),
-        | count(*) FILTER (WHERE n.n_nationkey IS NULL) = 0
-        |FROM customer c LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |WHERE c.c_nationkey IS NOT NULL""".stripMargin,
-    "q164_benford" ->
-      """WITH v AS (
-        | SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        | FROM orders),
-        |d AS (
-        | SELECT CAST(substring(CAST(cents AS VARCHAR), 1, 1) AS BIGINT) AS digit
-        | FROM v WHERE cents > 0),
-        |c AS (SELECT digit, CAST(count(*) AS BIGINT) AS n FROM d GROUP BY digit)
-        |SELECT digit, n,
-        | CAST((1000000 * n) // (SELECT sum(n) FROM c) AS BIGINT) AS share_ppm
-        |FROM c""".stripMargin,
-    // q165: same log2 histogram (integer bit length) per source, then
-    // L1 = Ta + Tb − 2·Σ_shared min — pairs from totals, so disjoint
-    // histograms still emit their maximal distance.
-    "q165_histogram_distance" ->
-      """WITH h AS (
-        | SELECT source,
-        |  CASE WHEN n_chars <= 0 THEN 0
-        |   ELSE length(bin(CAST(n_chars AS BIGINT))) END AS bucket,
-        |  CAST(count(*) AS BIGINT) AS n
-        | FROM documents GROUP BY 1, 2),
-        |tot AS (SELECT source, CAST(sum(n) AS BIGINT) AS t FROM h GROUP BY source),
-        |sm AS (
-        | SELECT a.source AS group_a, b.source AS group_b,
-        |  CAST(sum(least(a.n, b.n)) AS BIGINT) AS shared_min
-        | FROM h a JOIN h b ON a.bucket = b.bucket AND a.source < b.source
-        | GROUP BY 1, 2)
-        |SELECT ta.source AS group_a, tb.source AS group_b,
-        | CAST(ta.t + tb.t - 2 * coalesce(sm.shared_min, 0) AS BIGINT) AS l1_distance,
-        | CAST((1000000 * (ta.t + tb.t - 2 * coalesce(sm.shared_min, 0)))
-        |  // (ta.t + tb.t) AS BIGINT) AS distance_ppm
-        |FROM tot ta JOIN tot tb ON ta.source < tb.source
-        |LEFT JOIN sm ON sm.group_a = ta.source AND sm.group_b = tb.source""".stripMargin,
-    // q166: Hamilton apportionment replayed — floor + largest-remainder
-    // top-up, ties to the smaller source; all integer.
-    "q166_token_apportion" ->
-      """WITH c AS (
-        | SELECT source, CAST(sum(len(regexp_extract_all(text,
-        |  '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))) AS BIGINT) AS tokens
-        | FROM documents GROUP BY source),
-        |t AS (SELECT CAST(sum(tokens) AS BIGINT) AS tot FROM c),
-        |b AS (
-        | SELECT source, tokens,
-        |  CAST((10000 * tokens) // tot AS BIGINT) AS fl,
-        |  CAST((10000 * tokens) % tot AS BIGINT) AS rem
-        | FROM c, t),
-        |d AS (SELECT CAST(10000 - sum(fl) AS BIGINT) AS deficit FROM b),
-        |r AS (
-        | SELECT source, tokens, fl,
-        |  row_number() OVER (ORDER BY rem DESC, source) AS rk
-        | FROM b)
-        |SELECT r.source, r.tokens,
-        | CAST(r.fl + CASE WHEN r.rk <= d.deficit THEN 1 ELSE 0 END AS BIGINT)
-        |  AS alloc
-        |FROM r, d""".stripMargin,
-    // q167: q166's budgets feed a per-source running-sum cutoff; the
-    // boundary row (cum − tok < alloc ≤ cum) is included. The full
-    // (n_chars DESC, md5, doc_id) order is unique, so RANGE ≡ ROWS.
-    "q167_budget_fill" ->
-      """WITH c AS (
-        | SELECT source, CAST(sum(len(regexp_extract_all(text,
-        |  '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))) AS BIGINT) AS tokens
-        | FROM documents GROUP BY source),
-        |t AS (SELECT CAST(sum(tokens) AS BIGINT) AS tot FROM c),
-        |b AS (
-        | SELECT source, tokens,
-        |  CAST((10000 * tokens) // tot AS BIGINT) AS fl,
-        |  CAST((10000 * tokens) % tot AS BIGINT) AS rem
-        | FROM c, t),
-        |d AS (SELECT CAST(10000 - sum(fl) AS BIGINT) AS deficit FROM b),
-        |alloc AS (
-        | SELECT source,
-        |  CAST(fl + CASE WHEN row_number() OVER (ORDER BY rem DESC, source)
-        |   <= (SELECT deficit FROM d) THEN 1 ELSE 0 END AS BIGINT) AS alloc
-        | FROM b),
-        |doc AS (
-        | SELECT source, doc_id, n_chars,
-        |  CAST(len(regexp_extract_all(text,
-        |   '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS tok
-        | FROM documents),
-        |w AS (
-        | SELECT doc.source, doc.doc_id, doc.n_chars, doc.tok, alloc.alloc,
-        |  CAST(sum(doc.tok) OVER (PARTITION BY doc.source
-        |   ORDER BY doc.n_chars DESC, md5(CAST(doc.doc_id AS VARCHAR)), doc.doc_id)
-        |   AS BIGINT) AS cum
-        | FROM doc JOIN alloc ON doc.source = alloc.source)
-        |SELECT source, doc_id, n_chars, tok, cum AS cum_weight
-        |FROM w WHERE cum - tok < alloc""".stripMargin,
-    // q168: RRF replayed — per-list floor division BEFORE the sum, so the
-    // fused score is order-independent; QUALIFY trims to top-5.
-    "q168_rrf_fusion" ->
-      """WITH sup AS (SELECT s_suppkey, s_nationkey,
-        |  CAST(round(s_acctbal * 100) AS BIGINT) AS bal FROM supplier),
-        |bal AS (SELECT s_nationkey, s_suppkey, row_number() OVER (
-        |  PARTITION BY s_nationkey ORDER BY bal DESC, s_suppkey) AS rnk FROM sup),
-        |rev0 AS (SELECT l_suppkey AS s_suppkey,
-        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS rev
-        | FROM lineitem GROUP BY 1),
-        |rev AS (SELECT sup.s_nationkey, sup.s_suppkey, row_number() OVER (
-        |  PARTITION BY sup.s_nationkey
-        |  ORDER BY coalesce(rev0.rev, 0) DESC, sup.s_suppkey) AS rnk
-        | FROM sup LEFT JOIN rev0 USING (s_suppkey)),
-        |u AS (SELECT s_nationkey, s_suppkey, 1000000 // (60 + rnk) AS c FROM bal
-        | UNION ALL SELECT s_nationkey, s_suppkey, 1000000 // (60 + rnk) FROM rev),
-        |f AS (SELECT s_nationkey, s_suppkey, CAST(sum(c) AS BIGINT) AS rrf_score,
-        |  CAST(count(*) AS BIGINT) AS n_lists FROM u GROUP BY 1, 2)
-        |SELECT s_nationkey, s_suppkey, rrf_score, n_lists,
-        | CAST(row_number() OVER (PARTITION BY s_nationkey
-        |  ORDER BY rrf_score DESC, s_suppkey) AS BIGINT) AS fused_rank
-        |FROM f QUALIFY fused_rank <= 5""".stripMargin,
-    // q169: exact-ppm percent rank per flag; global index via
-    // row_number−1 over (cents, tid); lower-interpolation mapping is the
-    // same integer floor both sides.
-    "q169_quantile_norm" ->
-      """WITH b AS (SELECT l_orderkey * 100 + l_linenumber AS tid, l_returnflag,
-        |  CAST(round(l_extendedprice * 100) AS BIGINT) AS cents FROM lineitem),
-        |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM b),
-        |r AS (SELECT tid, l_returnflag, cents,
-        |  rank() OVER (PARTITION BY l_returnflag ORDER BY cents) AS rk,
-        |  count(*) OVER (PARTITION BY l_returnflag) AS gn FROM b),
-        |p AS (SELECT tid, l_returnflag, cents,
-        |  CAST(CASE WHEN gn = 1 THEN 0
-        |   ELSE (1000000 * (rk - 1)) // (gn - 1) END AS BIGINT) AS pr_ppm FROM r),
-        |g AS (SELECT cents AS gv,
-        |  row_number() OVER (ORDER BY cents, tid) - 1 AS gidx FROM b)
-        |SELECT p.tid, p.l_returnflag, p.cents, p.pr_ppm, g.gv AS q_norm
-        |FROM p CROSS JOIN nn
-        |JOIN g ON g.gidx = (p.pr_ppm * (nn.n - 1)) // 1000000""".stripMargin,
-    // q170: q47's tokenization; rank/cumsum windows run over the
-    // vocabulary, not the corpus; ppm floor in BIGINT.
-    "q170_coverage_curve" ->
-      """WITH tok AS (
-        | SELECT unnest(list_filter(
-        |  string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' '),
-        |  w -> len(w) > 0)) AS word
-        | FROM documents),
-        |c AS (SELECT word, CAST(count(*) AS BIGINT) AS n FROM tok GROUP BY word),
-        |r AS (SELECT word, n, row_number() OVER (ORDER BY n DESC, word) AS rk,
-        |  sum(n) OVER (ORDER BY n DESC, word ROWS UNBOUNDED PRECEDING) AS cum FROM c),
-        |t AS (SELECT CAST(sum(n) AS BIGINT) AS tot FROM c),
-        |s AS (SELECT unnest([1, 2, 4, 8, 16, 32, 64, 128]) AS vocab_size)
-        |SELECT CAST(s.vocab_size AS BIGINT) AS vocab_size,
-        | CAST(max(r.rk) AS BIGINT) AS n_terms,
-        | CAST(max(r.cum) AS BIGINT) AS covered_tokens,
-        | CAST((1000000 * max(r.cum)) // t.tot AS BIGINT) AS coverage_ppm
-        |FROM r JOIN s ON r.rk <= s.vocab_size CROSS JOIN t
-        |GROUP BY s.vocab_size, t.tot""".stripMargin,
-    // q171: q145's quantization; the centroid identity replayed on exact
-    // integer sums — floor-div on non-negative operands both sides.
-    "q171_dispersion" ->
-      """WITH q AS (SELECT label,
-        |  list_transform(embedding,
-        |   x -> CAST(round(CAST(x AS DOUBLE) * 1024) AS BIGINT)) AS qv
-        | FROM embeddings),
-        |d AS (SELECT label, unnest(range(1, len(qv) + 1)) AS dim, qv FROM q),
-        |v AS (SELECT label, dim, qv[dim] AS val FROM d),
-        |per AS (SELECT label, dim, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(val) AS BIGINT) AS s, CAST(sum(val * val) AS BIGINT) AS ss
-        | FROM v GROUP BY 1, 2)
-        |SELECT label, CAST(max(n) AS BIGINT) AS n,
-        | CAST(sum(ss) AS BIGINT) AS sum_sq_norm,
-        | CAST(sum(s * s) AS BIGINT) AS norm_sq_sum,
-        | CAST(2 * (max(n) * sum(ss) - sum(s * s)) AS BIGINT) AS pair_dist_sum,
-        | CAST((2 * (max(n) * sum(ss) - sum(s * s))) // (max(n) * max(n)) AS BIGINT)
-        |  AS mean_pair_dist
-        |FROM per GROUP BY label""".stripMargin,
-    // q172: pinned sf0.01 fixture (tools/pin_oracle.py) — the peel loop
-    // is not SQL-replayable; the divisor graph and k=2 are fixed, so the
-    // core is a pure function of the testdata.
-    "q172_kcore" ->
-      """SELECT CAST(id AS BIGINT) AS id, CAST(core_degree AS BIGINT) AS core_degree FROM (VALUES (1,2),(2,3),(3,3),(4,3),(5,2),(6,4),(7,2),(8,3),(9,3),(10,3),(11,2),(12,4),(13,2),(14,3),(15,3),(16,3),(17,2),(18,4),(19,2),(20,3),(21,3),(22,3),(23,2),(24,4),(25,2),(26,3),(27,3),(28,3),(29,2),(30,4),(31,2),(32,3),(33,3),(34,3),(35,2),(36,4),(37,2),(38,3),(39,3),(40,3),(41,2),(42,4),(43,2),(44,3),(45,3),(46,3),(47,2),(48,4),(49,2),(50,3),(51,3),(52,3),(53,2),(54,4),(55,2),(56,3),(57,3),(58,3),(59,2),(60,4),(61,2),(62,3),(63,3),(64,3),(65,2),(66,4),(67,2),(68,3),(69,3),(70,3),(71,2),(72,4),(73,2),(74,3),(75,3),(76,3),(77,2),(78,4),(79,2),(80,3),(81,3),(82,3),(83,2),(84,4),(86,2),(87,2),(88,2),(90,4),(92,2),(93,2),(94,2),(96,4),(98,2),(99,2),(100,2),(102,4),(104,2),(105,2),(106,2),(108,4),(110,2),(111,2),(112,2),(114,4),(116,2),(117,2),(118,2),(120,4),(122,2),(123,2),(124,2),(126,4),(128,2),(129,2),(130,2),(132,4),(134,2),(135,2),(136,2),(138,4),(140,2),(141,2),(142,2),(144,4),(146,2),(147,2),(148,2),(150,4),(152,2),(153,2),(154,2),(156,4),(158,2),(159,2),(160,2),(162,4),(164,2),(165,2),(166,2),(168,3),(171,2),(174,3),(177,2),(180,3),(183,2),(186,3),(189,2),(192,3),(195,2),(198,3),(201,2),(204,3),(207,2),(210,3),(213,2),(216,3),(219,2),(222,3),(225,2),(228,3),(231,2),(234,3),(237,2),(240,3),(243,2),(246,3),(249,2),(252,2),(258,2),(264,2),(270,2),(276,2),(282,2),(288,2),(294,2),(300,2),(306,2),(312,2),(318,2),(324,2),(330,2),(336,2),(342,2),(348,2),(354,2),(360,2),(366,2),(372,2),(378,2),(384,2),(390,2),(396,2),(402,2),(408,2),(414,2),(420,2),(426,2),(432,2),(438,2),(444,2),(450,2),(456,2),(462,2),(468,2),(474,2),(480,2),(486,2),(492,2),(498,2)) AS t(id, core_degree)""",
-    // q173: the dyadic-weight lag chain replayed; WHERE rn = n keeps each
-    // user's latest row only.
-    "q173_decay_score" ->
-      """WITH e AS (SELECT user_id, ts, event_id,
-        |  CAST(round(value * 100) AS BIGINT) AS v FROM events),
-        |w AS (SELECT user_id,
-        |  row_number() OVER win AS rn, count(*) OVER (PARTITION BY user_id) AS n,
-        |  v * 128 + coalesce(lag(v, 1) OVER win, 0) * 64
-        |   + coalesce(lag(v, 2) OVER win, 0) * 32
-        |   + coalesce(lag(v, 3) OVER win, 0) * 16
-        |   + coalesce(lag(v, 4) OVER win, 0) * 8
-        |   + coalesce(lag(v, 5) OVER win, 0) * 4
-        |   + coalesce(lag(v, 6) OVER win, 0) * 2
-        |   + coalesce(lag(v, 7) OVER win, 0) AS score
-        | FROM e WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id))
-        |SELECT user_id, CAST(score AS BIGINT) AS decayed_score,
-        | CAST(n AS BIGINT) AS n_obs FROM w WHERE rn = n""".stripMargin,
-    // q174: q47's tokenization with 1-based subscripts — stream order
-    // (doc_id, pos) matches Spark's (doc_id·1e6 + pos) composite; LEFT
-    // JOIN keeps checkpoints past the corpus end.
-    "q174_vocab_growth" ->
-      """WITH w AS (SELECT doc_id, list_filter(
-        |  string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' '),
-        |  x -> len(x) > 0) AS ws FROM documents),
-        |tok AS (SELECT doc_id, unnest(ws) AS word,
-        |  generate_subscripts(ws, 1) AS pos FROM w),
-        |g AS (SELECT word, row_number() OVER (ORDER BY doc_id, pos) - 1 AS gidx
-        | FROM tok),
-        |f AS (SELECT word, min(gidx) AS fidx FROM g GROUP BY word),
-        |t AS (SELECT CAST(count(*) AS BIGINT) AS tot FROM g),
-        |s AS (SELECT CAST(unnest([1000, 2000, 4000, 8000, 16000, 32000, 64000])
-        |  AS BIGINT) AS requested_n)
-        |SELECT s.requested_n,
-        | CAST(least(s.requested_n, t.tot) AS BIGINT) AS n_tokens,
-        | CAST(count(f.word) AS BIGINT) AS vocab_size
-        |FROM s CROSS JOIN t LEFT JOIN f ON f.fidx < s.requested_n
-        |GROUP BY 1, 2""".stripMargin,
-    // q175: grouping by the payload itself ≡ grouping by its digest
-    // (md5 is a pure relabeling); first-period via min.
-    "q175_novelty_by_period" ->
-      """WITH e AS (SELECT strftime(ts, '%Y-%m-%d') AS period, props FROM events),
-        |pp AS (SELECT period, props, CAST(count(*) AS BIGINT) AS n
-        | FROM e GROUP BY 1, 2),
-        |f AS (SELECT props, min(period) AS first_p FROM pp GROUP BY 1)
-        |SELECT pp.period, CAST(sum(n) AS BIGINT) AS n_rows,
-        | CAST(sum(CASE WHEN pp.period = f.first_p THEN n ELSE 0 END) AS BIGINT)
-        |  AS novel_rows,
-        | CAST(sum(CASE WHEN pp.period <> f.first_p THEN n ELSE 0 END) AS BIGINT)
-        |  AS dup_rows,
-        | CAST(count(CASE WHEN pp.period = f.first_p THEN 1 END) AS BIGINT)
-        |  AS new_contents
-        |FROM pp JOIN f USING (props) GROUP BY 1""".stripMargin,
-    // q176: per-source ppm distributions; shared-term join + unshared
-    // mass from ppm totals — the Ta+Tb−2Σ identity generalized to L1.
-    "q176_unigram_drift" ->
-      """WITH tok AS (SELECT source AS g, unnest(list_filter(
-        |  string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' '),
-        |  x -> len(x) > 0)) AS word FROM documents),
-        |c AS (SELECT g, word, CAST(count(*) AS BIGINT) AS n FROM tok GROUP BY 1, 2),
-        |w AS (SELECT g, word,
-        |  (1000000 * n) // (sum(n) OVER (PARTITION BY g)) AS p FROM c),
-        |t AS (SELECT g, CAST(sum(p) AS BIGINT) AS tp FROM w GROUP BY g),
-        |sh AS (SELECT a.g AS g_a, b.g AS g_b,
-        |  CAST(sum(abs(a.p - b.p)) AS BIGINT) AS l1s,
-        |  CAST(sum(a.p) AS BIGINT) AS sa, CAST(sum(b.p) AS BIGINT) AS sb,
-        |  CAST(count(*) AS BIGINT) AS n_shared_terms
-        | FROM w a JOIN w b ON a.word = b.word AND a.g < b.g GROUP BY 1, 2),
-        |pr AS (SELECT ta.g AS g_a, tb.g AS g_b, ta.tp AS tpa, tb.tp AS tpb
-        | FROM t ta, t tb WHERE ta.g < tb.g)
-        |SELECT pr.g_a, pr.g_b,
-        | CAST(coalesce(sh.l1s, 0) + (pr.tpa - coalesce(sh.sa, 0))
-        |  + (pr.tpb - coalesce(sh.sb, 0)) AS BIGINT) AS l1_ppm,
-        | CAST(coalesce(sh.n_shared_terms, 0) AS BIGINT) AS n_shared_terms
-        |FROM pr LEFT JOIN sh ON pr.g_a = sh.g_a AND pr.g_b = sh.g_b""".stripMargin,
-    // q177: q166's Hamilton split over floor(sqrt(tokens)) — IEEE sqrt is
-    // correctly rounded, so the damped weights agree exactly.
-    "q177_temperature_mix" ->
-      """WITH c AS (
-        | SELECT source, CAST(sum(len(regexp_extract_all(text,
-        |  '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))) AS BIGINT) AS tokens
-        | FROM documents GROUP BY source),
-        |s AS (SELECT source, tokens,
-        |  CAST(floor(sqrt(CAST(tokens AS DOUBLE))) AS BIGINT) AS sw FROM c),
-        |t AS (SELECT CAST(sum(sw) AS BIGINT) AS tot FROM s),
-        |b AS (SELECT source, tokens, sw,
-        |  CAST((10000 * sw) // tot AS BIGINT) AS fl,
-        |  CAST((10000 * sw) % tot AS BIGINT) AS rem FROM s, t),
-        |d AS (SELECT CAST(10000 - sum(fl) AS BIGINT) AS deficit FROM b),
-        |r AS (SELECT source, tokens, sw, fl,
-        |  row_number() OVER (ORDER BY rem DESC, source) AS rk FROM b)
-        |SELECT r.source, r.tokens, r.sw AS sqrt_weight,
-        | CAST(r.fl + CASE WHEN r.rk <= d.deficit THEN 1 ELSE 0 END AS BIGINT)
-        |  AS alloc
-        |FROM r, d""".stripMargin,
-    // q178: first purchase per user via rn=1; row-value (ts, id)
-    // comparison ≡ Spark's struct ordering; the U-split replayed in
-    // integer basis points.
-    "q178_position_attribution" ->
-      """WITH f AS (SELECT user_id, event_id, ts, event_type FROM events),
-        |conv AS (SELECT user_id, ts AS cts, event_id AS cid FROM (
-        |  SELECT user_id, ts, event_id, row_number() OVER (
-        |   PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        |  FROM f WHERE event_type = 'purchase') WHERE rn = 1),
-        |t AS (SELECT f.user_id, f.event_id, f.ts FROM f
-        | JOIN conv ON f.user_id = conv.user_id
-        | WHERE f.event_type IN ('view', 'click')
-        |  AND (f.ts, f.event_id) < (conv.cts, conv.cid)),
-        |r AS (SELECT user_id, event_id,
-        |  CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |   AS BIGINT) AS position,
-        |  CAST(count(*) OVER (PARTITION BY user_id) AS BIGINT) AS n FROM t)
-        |SELECT user_id, event_id, position, n AS n_touches,
-        | CAST(CASE WHEN n = 1 THEN 10000 WHEN n = 2 THEN 5000
-        |  WHEN position = 1 OR position = n THEN 4000
-        |  ELSE 2000 // (n - 2)
-        |   + CASE WHEN position - 1 <= 2000 % (n - 2) THEN 1 ELSE 0 END
-        |  END AS BIGINT) AS weight_bp
-        |FROM r""".stripMargin,
-    // q179: q19's exact-cosine ranking + label joins on the top-k rows.
-    "q179_knn_label_noise" ->
-      """WITH topk AS (SELECT query_id, neighbor_id FROM (
-        | SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |  row_number() OVER (PARTITION BY q.vec_id
-        |   ORDER BY list_cosine_similarity(c.embedding, q.embedding) DESC,
-        |    c.vec_id) AS rank
-        | FROM embeddings c, embeddings q
-        | WHERE q.vec_id < 50 AND c.vec_id <> q.vec_id) WHERE rank <= 10),
-        |j AS (SELECT t.query_id, ql.label AS query_label, nl.label AS nlab
-        | FROM topk t JOIN embeddings nl ON nl.vec_id = t.neighbor_id
-        | JOIN embeddings ql ON ql.vec_id = t.query_id)
-        |SELECT query_id, query_label, CAST(count(*) AS BIGINT) AS n_neighbors,
-        | CAST(count(CASE WHEN nlab <> query_label THEN 1 END) AS BIGINT)
-        |  AS n_disagree,
-        | CAST((1000000 * count(CASE WHEN nlab <> query_label THEN 1 END))
-        |  // count(*) AS BIGINT) AS disagree_ppm
-        |FROM j GROUP BY 1, 2""".stripMargin,
-    // q180: the same every-5-words segmentation (backreference \1 ≡
-    // Spark's $1; left-to-right non-overlapping in both regex engines),
-    // then trim/blank-drop/distinct counts.
-    "q180_sentence_dup" ->
-      """WITH seg AS (SELECT doc_id, list_filter(list_transform(
-        |  string_split_regex(regexp_replace(text,
-        |   '(\w+ \w+ \w+ \w+ \w+) ', '\1. ', 'g'), '[.!?]+'),
-        |  s -> trim(s)), s -> s <> '') AS ss FROM documents)
-        |SELECT doc_id, CAST(len(ss) AS BIGINT) AS n_sentences,
-        | CAST(len(list_distinct(ss)) AS BIGINT) AS n_distinct,
-        | CAST(len(ss) - len(list_distinct(ss)) AS BIGINT) AS n_dup,
-        | CAST(CASE WHEN len(ss) = 0 THEN 0
-        |  ELSE (1000000 * (len(ss) - len(list_distinct(ss)))) // len(ss)
-        |  END AS BIGINT) AS dup_ppm
-        |FROM seg""".stripMargin,
-    // q181: 5-hex-digit md5 prefix → ppm score (the q48 bucket trick at
-    // finer grain); equal-width binning replayed in BIGINT.
-    "q181_calibration" ->
-      s"""WITH s AS (SELECT
-        |  (${hexPrefixOracle("md5(CAST(event_id AS VARCHAR))", 5)}
-        |   * 1000000) // 1048576 AS score_ppm,
-        |  event_type = 'purchase' AS pos FROM events),
-        |b AS (SELECT least(9, (10 * score_ppm) // 1000000) AS bin,
-        |  score_ppm, pos FROM s)
-        |SELECT CAST(bin AS BIGINT) AS bin, CAST(count(*) AS BIGINT) AS n,
-        | CAST(count(CASE WHEN pos THEN 1 END) AS BIGINT) AS n_pos,
-        | CAST((1000000 * count(CASE WHEN pos THEN 1 END)) // count(*) AS BIGINT)
-        |  AS pos_rate_ppm,
-        | CAST(sum(score_ppm) // count(*) AS BIGINT) AS mean_score_ppm
-        |FROM b GROUP BY 1""".stripMargin,
-    // q182: q145's quantization + per-vector dots against the coordinate
-    // sums; the cleared-denominator distance replayed, argmin by
-    // (dist, id).
-    "q182_medoids" ->
-      """WITH q AS (SELECT vec_id, label, list_transform(embedding,
-        |  x -> CAST(round(CAST(x AS DOUBLE) * 1024) AS BIGINT)) AS qv
-        | FROM embeddings),
-        |d AS (SELECT vec_id, label, unnest(range(1, len(qv) + 1)) AS dim, qv FROM q),
-        |v AS (SELECT vec_id, label, dim, qv[dim] AS val FROM d),
-        |s AS (SELECT label, dim, CAST(sum(val) AS BIGINT) AS sv FROM v GROUP BY 1, 2),
-        |n AS (SELECT label, CAST(count(*) AS BIGINT) AS n FROM q GROUP BY 1),
-        |dot AS (SELECT v.vec_id, v.label,
-        |  CAST(sum(v.val * v.val) AS BIGINT) AS xx,
-        |  CAST(sum(v.val * s.sv) AS BIGINT) AS xs
-        | FROM v JOIN s ON v.label = s.label AND v.dim = s.dim GROUP BY 1, 2),
-        |ss AS (SELECT label, CAST(sum(sv * sv) AS BIGINT) AS ssq FROM s GROUP BY 1),
-        |dist AS (SELECT dot.vec_id, dot.label,
-        |  n.n * n.n * dot.xx - 2 * n.n * dot.xs + ss.ssq AS dnum
-        | FROM dot JOIN n USING (label) JOIN ss USING (label)),
-        |r AS (SELECT label, vec_id, dnum,
-        |  row_number() OVER (PARTITION BY label ORDER BY dnum, vec_id) AS rk
-        | FROM dist)
-        |SELECT r.label, CAST(r.vec_id AS BIGINT) AS medoid_id, n.n,
-        | CAST(r.dnum AS BIGINT) AS dist_num
-        |FROM r JOIN n USING (label) WHERE rk = 1""".stripMargin,
-    // q183: md5 round-robin within stratum — fold is a pure function of
-    // (id, stratum, k).
-    "q183_strat_folds" ->
-      """SELECT event_id, event_type,
-        | CAST((row_number() OVER (PARTITION BY event_type
-        |  ORDER BY md5(CAST(event_id AS VARCHAR)), event_id) - 1) % 5 AS BIGINT)
-        |  AS fold
-        |FROM events""".stripMargin,
-    // q184: brute-force containment over the same sliced doc set — sound
-    // as an oracle because the slice is small; the Spark side must find
-    // exactly these pairs through the directional prefix filter.
-    "q184_containment" ->
-      """WITH tok AS (SELECT doc_id,
-        |  list_sort(list_distinct(list_filter(
-        |   string_split_regex(trim(lower(text)), '\s+'), w -> len(w) > 0))) AS s
-        | FROM documents WHERE doc_id % 5 = 0),
-        |p AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |  len(a.s) AS n_a, len(b.s) AS n_b, len(list_intersect(a.s, b.s)) AS nc
-        | FROM tok a, tok b WHERE a.doc_id <> b.doc_id)
-        |SELECT a_id, b_id, CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-        | CAST(nc AS BIGINT) AS n_common,
-        | CAST((1000000 * nc) // n_a AS BIGINT) AS containment_ppm
-        |FROM p WHERE nc * 1000000 >= 1000000 * n_a""".stripMargin,
-    // q185: md5 draws replayed digit-by-digit; anti-join via NOT EXISTS.
-    "q185_neg_sampling" ->
-      s"""WITH pos AS (SELECT DISTINCT user_id, props AS item FROM events
-        |  WHERE event_type = 'purchase'),
-        |ir AS (SELECT item, CAST(row_number() OVER (
-        |  ORDER BY count(*) DESC, item) AS BIGINT) AS rnk FROM pos GROUP BY item),
-        |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM ir),
-        |d AS (SELECT pos.user_id, pos.item, t.draw,
-        |  1 + (${hexPrefixOracle("md5(concat_ws('|', pos.user_id, pos.item, t.draw))", 8)}
-        |   % nn.n) AS rnk
-        | FROM pos, nn, unnest([1, 2, 3, 4]) AS t(draw))
-        |SELECT d.user_id, d.item, CAST(d.draw AS BIGINT) AS draw,
-        | ir.item AS neg_item
-        |FROM d JOIN ir USING (rnk)
-        |WHERE NOT EXISTS (SELECT 1 FROM pos p2
-        | WHERE p2.user_id = d.user_id AND p2.item = ir.item)""".stripMargin,
-    // q186: the future-blind filter, then max/count per user; epoch-ms
-    // floors agree (ns→µs→ms ≡ ns→ms for positive epochs).
-    "q186_churn_labels" ->
-      """WITH e AS (SELECT user_id, ts FROM events
-        |  WHERE ts <= TIMESTAMP '2024-01-25 00:00:00'),
-        |a AS (SELECT user_id, CAST(max(epoch_ms(ts)) AS BIGINT) AS last_seen_ms,
-        |  CAST(count(*) AS BIGINT) AS n_events FROM e GROUP BY 1)
-        |SELECT user_id, last_seen_ms, n_events,
-        | CAST((epoch_ms(TIMESTAMP '2024-01-25 00:00:00') - last_seen_ms) // 1000
-        |  AS BIGINT) AS gap_sec,
-        | CAST(CASE WHEN last_seen_ms <=
-        |   epoch_ms(TIMESTAMP '2024-01-25 00:00:00') - 259200000
-        |  THEN 1 ELSE 0 END AS BIGINT) AS churned
-        |FROM a""".stripMargin,
-    // q187: the strictly-after frame replayed verbatim; epoch-ms floors
-    // agree across the ns→µs→ms chain.
-    "q187_time_to_event" ->
-      """WITH w AS (SELECT user_id, event_id,
-        |  min(CASE WHEN event_type = 'purchase' THEN epoch_ms(ts) END) OVER (
-        |   PARTITION BY user_id ORDER BY ts, event_id
-        |   ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS next_ms,
-        |  epoch_ms(ts) AS ms FROM events)
-        |SELECT user_id, event_id,
-        | CASE WHEN next_ms IS NULL OR (next_ms - ms) // 1000 > 604800 THEN NULL
-        |  ELSE CAST((next_ms - ms) // 1000 AS BIGINT) END AS tte_sec,
-        | CAST(CASE WHEN next_ms IS NULL OR (next_ms - ms) // 1000 > 604800
-        |  THEN 1 ELSE 0 END AS BIGINT) AS censored
-        |FROM w""".stripMargin,
-    // q188: merged-domain ECDF running sums; the supremum compared in
-    // cross-multiplied integers, ppm only at the end.
-    "q188_ks_drift" ->
-      """WITH b AS (SELECT l_returnflag AS g,
-        |  CAST(round(l_extendedprice * 100) AS BIGINT) AS v
-        | FROM lineitem WHERE l_returnflag IN ('A', 'R')),
-        |pv AS (SELECT v,
-        |  CAST(count(CASE WHEN g = 'A' THEN 1 END) AS BIGINT) AS ca,
-        |  CAST(count(CASE WHEN g = 'R' THEN 1 END) AS BIGINT) AS cb
-        | FROM b GROUP BY v),
-        |c AS (SELECT v, sum(ca) OVER (ORDER BY v) AS cuma,
-        |  sum(cb) OVER (ORDER BY v) AS cumb FROM pv),
-        |t AS (SELECT CAST(sum(ca) AS BIGINT) AS na,
-        |  CAST(sum(cb) AS BIGINT) AS nb FROM pv)
-        |SELECT t.na AS n_a, t.nb AS n_b,
-        | CAST(max(abs(c.cuma * t.nb - c.cumb * t.na)) AS BIGINT) AS d_num,
-        | CAST((1000000 * max(abs(c.cuma * t.nb - c.cumb * t.na)))
-        |  // (t.na * t.nb) AS BIGINT) AS ks_ppm
-        |FROM c, t GROUP BY t.na, t.nb""".stripMargin,
-    // q189: 4-hex md5 bucket mod 32 replayed digit-by-digit; floor-mean
-    // per bucket, scalar spread.
-    "q189_bucket_bootstrap" ->
-      s"""WITH b AS (SELECT
-        |  ${hexPrefixOracle("md5(CAST(l_orderkey * 100 + l_linenumber AS VARCHAR))", 4)}
-        |   % 32 AS bk,
-        |  CAST(round(l_extendedprice * 100) AS BIGINT) AS v FROM lineitem),
-        |per AS (SELECT bk, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(v) AS BIGINT) AS s FROM b GROUP BY bk),
-        |m AS (SELECT n, s, s // n AS mean FROM per)
-        |SELECT CAST(sum(n) AS BIGINT) AS n_rows,
-        | CAST(count(*) AS BIGINT) AS n_buckets,
-        | CAST(sum(s) // sum(n) AS BIGINT) AS global_mean,
-        | CAST(min(mean) AS BIGINT) AS bucket_mean_min,
-        | CAST(max(mean) AS BIGINT) AS bucket_mean_max,
-        | CAST(max(mean) - min(mean) AS BIGINT) AS spread
-        |FROM m""".stripMargin,
-    // q190: the trailing window replayed as a range join over observed
-    // activity days; day out as a string.
-    "q190_active_users" ->
-      """WITH act AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events),
-        |days AS (SELECT d, CAST(count(*) AS BIGINT) AS dau FROM act GROUP BY d),
-        |w AS (SELECT d1.d, CAST(count(DISTINCT a.user_id) AS BIGINT) AS wau
-        | FROM days d1 JOIN act a ON a.d BETWEEN d1.d - 6 AND d1.d GROUP BY d1.d)
-        |SELECT strftime(days.d, '%Y-%m-%d') AS day, days.dau, w.wau,
-        | CAST((1000000 * days.dau) // w.wau AS BIGINT) AS stickiness_ppm
-        |FROM days JOIN w USING (d)""".stripMargin,
-    // q191: prefix explode via list_slice over 1..depth; same '/' joining.
-    "q191_path_rollup" ->
-      """WITH p AS (SELECT l_returnflag || '/' || l_linestatus || '/'
-        |   || CAST(year(l_shipdate) AS VARCHAR) AS path,
-        |  CAST(l_quantity AS BIGINT) AS v FROM lineitem),
-        |s AS (SELECT string_split(path, '/') AS segs, v FROM p),
-        |e AS (SELECT array_to_string(list_slice(segs, 1, i), '/') AS path,
-        |  CAST(i AS BIGINT) AS depth, v
-        | FROM s, unnest(range(1, len(segs) + 1)) AS t(i))
-        |SELECT path, depth, CAST(count(*) AS BIGINT) AS n_rows,
-        | CAST(sum(v) AS BIGINT) AS total FROM e GROUP BY 1, 2""".stripMargin,
-    // q192: q69's chained-CTE replay with the teleport restricted to the
-    // seed set (full per-node teleport to each seed — the documented
-    // integer-exact convention).
-    "q192_ppr" -> {
-      val base =
-        """WITH e0 AS (
-          | SELECT DISTINCT o_custkey * 2 AS s, l_suppkey * 2 + 1 AS d
-          | FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-          |e AS (SELECT s, d FROM e0 UNION ALL SELECT d AS s, s AS d FROM e0),
-          |deg AS (SELECT s, CAST(count(*) AS BIGINT) AS outdeg FROM e GROUP BY 1),
-          |nodes AS (SELECT DISTINCT s AS id FROM e),
-          |sd AS (SELECT c_custkey * 2 AS id FROM customer WHERE c_custkey % 50 = 0),
-          |ns AS (SELECT n.id, sd.id IS NOT NULL AS seed
-          | FROM nodes n LEFT JOIN sd ON n.id = sd.id),
-          |r0 AS (SELECT id, CAST(CASE WHEN seed THEN 1000000 ELSE 0 END AS BIGINT)
-          |  AS rank FROM ns)""".stripMargin
-      val iters = (1 to 3).map { i =>
-        s""",
-           |c$i AS (
-           | SELECT e.d AS id, CAST(sum((r.rank * 85) // (100 * deg.outdeg)) AS BIGINT) AS c
-           | FROM e JOIN r${i - 1} r ON e.s = r.id JOIN deg ON deg.s = e.s GROUP BY 1),
-           |r$i AS (
-           | SELECT ns.id,
-           |  CAST(CASE WHEN ns.seed THEN 150000 ELSE 0 END
-           |   + coalesce(c$i.c, 0) AS BIGINT) AS rank
-           | FROM ns LEFT JOIN c$i ON ns.id = c$i.id)""".stripMargin
-      }.mkString
-      base + iters + "\nSELECT id AS node_id, rank FROM r3"
-    },
-    // q193: the cap replayed as the same row_number window; weights are
-    // distinct-left counts per right pair.
-    "q193_copurchase" ->
-      """WITH lr AS (SELECT DISTINCT user_id AS l,
-        |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS r
-        | FROM events WHERE event_type = 'purchase'),
-        |capped AS (SELECT l, r FROM (
-        |  SELECT l, r, row_number() OVER (PARTITION BY l ORDER BY r) AS rn
-        |  FROM lr) WHERE rn <= 10)
-        |SELECT a.r AS a_id, b.r AS b_id, CAST(count(*) AS BIGINT) AS weight
-        |FROM capped a JOIN capped b ON a.l = b.l AND a.r < b.r
-        |GROUP BY 1, 2""".stripMargin,
-    // q194: q180's segmentation; exclusive prefix word counts via
-    // list_slice sums; ordered re-assembly via string_agg ORDER BY pos.
-    "q194_sentence_chunks" ->
-      """WITH seg AS (SELECT doc_id, list_filter(list_transform(
-        |  string_split_regex(regexp_replace(text,
-        |   '(\w+ \w+ \w+ \w+ \w+) ', '\1. ', 'g'), '[.!?]+'),
-        |  s -> trim(s)), s -> s <> '') AS ss FROM documents),
-        |wc AS (SELECT doc_id, ss, list_transform(ss,
-        |  s -> CAST(len(list_filter(string_split_regex(trim(lower(s)), '\s+'),
-        |   w -> len(w) > 0)) AS BIGINT)) AS wcs
-        | FROM seg WHERE len(ss) > 0),
-        |ex AS (SELECT doc_id, unnest(ss) AS sent,
-        |  generate_subscripts(ss, 1) AS pos, wcs FROM wc),
-        |pre AS (SELECT doc_id, sent, pos,
-        |  CAST(coalesce(list_sum(list_slice(wcs, 1, pos - 1)), 0) AS BIGINT) AS p
-        | FROM ex),
-        |ch AS (SELECT doc_id, CAST(p // 20 AS BIGINT) AS chunk_id, sent, pos
-        | FROM pre),
-        |g AS (SELECT doc_id, chunk_id,
-        |  string_agg(sent, '. ' ORDER BY pos) AS chunk,
-        |  CAST(count(*) AS BIGINT) AS n_sentences
-        | FROM ch GROUP BY 1, 2)
-        |SELECT doc_id, chunk_id, chunk, n_sentences,
-        | CAST(len(list_filter(string_split_regex(trim(lower(chunk)), '\s+'),
-        |  w -> len(w) > 0)) AS BIGINT) AS n_words
-        |FROM g""".stripMargin,
-    // q195: per-distinct-score (pos, neg) counts → running negatives-
-    // below window → 2U in integers; ppm by integer division.
-    "q195_auc" ->
-      """WITH b AS (SELECT event_type AS g,
-        |  CAST(round(value * 100) AS BIGINT) AS s,
-        |  CASE WHEN CAST(json_extract_string(props, '$.k') AS BIGINT) >= 50
-        |   THEN 1 ELSE 0 END AS pos FROM events),
-        |ps AS (SELECT g, s, CAST(sum(pos) AS BIGINT) AS p,
-        |  CAST(count(*) - sum(pos) AS BIGINT) AS q FROM b GROUP BY g, s),
-        |c AS (SELECT g, p, q, CAST(coalesce(sum(q) OVER (PARTITION BY g
-        |  ORDER BY s ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |  AS BIGINT) AS qlt FROM ps),
-        |a AS (SELECT g, CAST(sum(p) AS BIGINT) AS n_pos,
-        |  CAST(sum(q) AS BIGINT) AS n_neg,
-        |  CAST(sum(p * (2 * qlt + q)) AS BIGINT) AS u2 FROM c GROUP BY g)
-        |SELECT g AS event_type, n_pos, n_neg,
-        | CASE WHEN n_pos > 0 AND n_neg > 0
-        |  THEN CAST((1000000 * u2) // (2 * n_pos * n_neg) AS BIGINT)
-        | END AS auc_ppm
-        |FROM a""".stripMargin,
-    // q196: agreement + marginal-product sufficient statistics; kappa as
-    // a ratio of integers, truncated toward zero (sign split so // on
-    // non-negatives matches Spark's div).
-    "q196_kappa" ->
-      """WITH r AS (SELECT * FROM (SELECT source AS g, lang AS a,
-        |  CASE WHEN doc_id % 4 = 0 THEN
-        |   CASE lang WHEN 'en' THEN 'de' WHEN 'de' THEN 'es'
-        |    WHEN 'es' THEN 'fr' WHEN 'fr' THEN 'zh' WHEN 'zh' THEN 'en' END
-        |  ELSE lang END AS b FROM documents)
-        | WHERE a IS NOT NULL AND b IS NOT NULL),
-        |base AS (SELECT g, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(count(CASE WHEN a = b THEN 1 END) AS BIGINT) AS n_agree
-        | FROM r GROUP BY g),
-        |ma AS (SELECT g, a AS lbl, CAST(count(*) AS BIGINT) AS na
-        | FROM r GROUP BY 1, 2),
-        |mb AS (SELECT g, b AS lbl, CAST(count(*) AS BIGINT) AS nb
-        | FROM r GROUP BY 1, 2),
-        |pe AS (SELECT g, CAST(sum(na * nb) AS BIGINT) AS pen
-        | FROM ma JOIN mb USING (g, lbl) GROUP BY g)
-        |SELECT base.g AS source, base.n, base.n_agree,
-        | CASE WHEN base.n * base.n - pe.pen <> 0 THEN
-        |  CASE WHEN base.n * base.n_agree >= pe.pen
-        |   THEN CAST((1000000 * (base.n * base.n_agree - pe.pen))
-        |    // (base.n * base.n - pe.pen) AS BIGINT)
-        |   ELSE -CAST((1000000 * (pe.pen - base.n * base.n_agree))
-        |    // (base.n * base.n - pe.pen) AS BIGINT)
-        |  END END AS kappa_ppm
-        |FROM base JOIN pe USING (g)""".stripMargin,
-    // q197: cell counts → marginals → integer residual d = o·N − r·c;
-    // the single double-precision step has identical shape in both
-    // engines (IEEE-deterministic).
-    "q197_chisq_drift" ->
-      """WITH b AS (SELECT event_type AS r,
-        |  CASE WHEN ts < TIMESTAMP '2024-01-16' THEN 'early' ELSE 'late'
-        |  END AS c FROM events),
-        |cells AS (SELECT r, c, CAST(count(*) AS BIGINT) AS o
-        | FROM b GROUP BY r, c),
-        |rt AS (SELECT r, CAST(sum(o) AS BIGINT) AS rn FROM cells GROUP BY r),
-        |ct AS (SELECT c, CAST(sum(o) AS BIGINT) AS cn FROM cells GROUP BY c),
-        |n AS (SELECT CAST(sum(o) AS BIGINT) AS nn FROM cells)
-        |SELECT cells.r AS event_type, cells.c AS period, cells.o,
-        | CAST((1000000 * rt.rn * ct.cn) // n.nn AS BIGINT) AS e_ppm,
-        | CAST(floor(1000000.0
-        |   * CAST(cells.o * n.nn - rt.rn * ct.cn AS DOUBLE)
-        |   * CAST(cells.o * n.nn - rt.rn * ct.cn AS DOUBLE)
-        |   / CAST(n.nn * rt.rn * ct.cn AS DOUBLE)) AS BIGINT) AS chi2_micro
-        |FROM cells JOIN rt USING (r) JOIN ct USING (c) CROSS JOIN n""".stripMargin,
-    // q198: row_number per (cohort, user) stream → first-hit rank →
-    // integer reciprocal ppm; misses stay in the cohort denominator.
-    "q198_mrr" ->
-      """WITH b AS (SELECT user_id % 10 AS cohort, user_id, ts, event_id,
-        |  event_type = 'purchase' AS hit FROM events),
-        |rn AS (SELECT cohort, user_id, hit, row_number() OVER (
-        |  PARTITION BY cohort, user_id ORDER BY ts, event_id) AS rn FROM b),
-        |fh AS (SELECT cohort, user_id, CAST(min(rn) AS BIGINT) AS rank
-        | FROM rn WHERE hit GROUP BY 1, 2),
-        |act AS (SELECT cohort, CAST(count(DISTINCT user_id) AS BIGINT)
-        |  AS n_actors FROM b GROUP BY 1),
-        |h AS (SELECT cohort, CAST(count(*) AS BIGINT) AS n_hit,
-        |  CAST(sum(1000000 // rank) AS BIGINT) AS rrs FROM fh GROUP BY 1)
-        |SELECT act.cohort, act.n_actors,
-        | CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
-        | CAST(coalesce(h.rrs, 0) // act.n_actors AS BIGINT) AS mrr_ppm
-        |FROM act LEFT JOIN h USING (cohort)""".stripMargin,
-    // q199: q79's triangle listing + a degree CTE; coefficient by integer
-    // division (deg·(deg−1) > 0 guarded by the CASE).
-    "q199_clustering_coef" ->
-      """WITH li AS (
-        | SELECT l_orderkey, l_partkey FROM lineitem WHERE l_partkey % 4 = 0),
-        |e AS (
-        | SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        | FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-        |deg AS (SELECT id, CAST(count(*) AS BIGINT) AS deg FROM
-        | (SELECT u AS id FROM e UNION ALL SELECT v AS id FROM e) GROUP BY id),
-        |tri AS (
-        | SELECT e1.u AS a, e1.v AS b, e2.v AS c
-        | FROM e e1 JOIN e e2 ON e1.v = e2.u
-        |  JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v),
-        |tcnt AS (SELECT id, CAST(count(*) AS BIGINT) AS t
-        | FROM (SELECT unnest([a, b, c]) AS id FROM tri) GROUP BY id)
-        |SELECT deg.id, deg.deg,
-        | CAST(coalesce(tcnt.t, 0) AS BIGINT) AS n_triangles,
-        | CAST(CASE WHEN deg.deg >= 2
-        |  THEN (1000000 * 2 * coalesce(tcnt.t, 0)) // (deg.deg * (deg.deg - 1))
-        |  ELSE 0 END AS BIGINT) AS clustering_ppm
-        |FROM deg LEFT JOIN tcnt USING (id)""".stripMargin,
-    // q200: dow is only a grouping key (Spark 1-7 vs DuckDB 0-6 is a
-    // bijection — same classes); floor-means on non-negative cents,
-    // sign-split bias.
-    "q200_seasonal_backtest" ->
-      """WITH b AS (SELECT event_type AS k, dayofweek(ts) AS dow,
-        |  CAST(round(value * 100) AS BIGINT) AS y,
-        |  ts < TIMESTAMP '2024-01-22 00:00:00' AS tr FROM events),
-        |prof AS (SELECT k, dow, CAST(sum(y) // count(*) AS BIGINT) AS fc
-        | FROM b WHERE tr GROUP BY 1, 2),
-        |fb AS (SELECT k, CAST(sum(y) // count(*) AS BIGINT) AS fca,
-        |  CAST(count(*) AS BIGINT) AS n_train FROM b WHERE tr GROUP BY 1),
-        |te AS (SELECT b.k, b.y - coalesce(prof.fc, fb.fca) AS err, fb.n_train
-        | FROM b LEFT JOIN prof ON b.k = prof.k AND b.dow = prof.dow
-        | JOIN fb ON b.k = fb.k WHERE NOT b.tr)
-        |SELECT k AS event_type, n_train, CAST(count(*) AS BIGINT) AS n_test,
-        | CAST(sum(abs(err)) AS BIGINT) AS sae,
-        | CAST(sum(abs(err)) // count(*) AS BIGINT) AS mae,
-        | CAST(CASE WHEN sum(err) >= 0 THEN sum(err) // count(*)
-        |  ELSE -((-sum(err)) // count(*)) END AS BIGINT) AS bias
-        |FROM te GROUP BY 1, 2""".stripMargin,
-    // q201: two-level aggregation; distinct sensitive values per class =
-    // first-level row count (NULL would be its own class).
-    "q201_l_diversity" ->
-      """WITH b AS (SELECT c_nationkey, c_mktsegment,
-        |  abs(CAST(round(c_acctbal * 100) AS BIGINT)) % 7 AS bal_class
-        | FROM customer),
-        |lv AS (SELECT c_nationkey, c_mktsegment, bal_class, count(*) AS n
-        | FROM b GROUP BY 1, 2, 3)
-        |SELECT c_nationkey, c_mktsegment,
-        | CAST(sum(n) AS BIGINT) AS group_size,
-        | CAST(count(*) AS BIGINT) AS n_sensitive,
-        | CAST(CASE WHEN count(*) < 5 THEN 1 ELSE 0 END AS BIGINT) AS violates
-        |FROM lv GROUP BY 1, 2""".stripMargin,
-    // q202: ntile over the (score DESC, event_id) total order — both
-    // engines give the first buckets the extras; cumulative lift by
-    // integer division.
-    "q202_gains" ->
-      """WITH b AS (SELECT event_type AS g,
-        |  CAST(round(value * 100) AS BIGINT) AS s, event_id,
-        |  CASE WHEN CAST(json_extract_string(props, '$.k') AS BIGINT) >= 50
-        |   THEN 1 ELSE 0 END AS pos FROM events),
-        |r AS (SELECT g, pos, CAST(ntile(10) OVER (PARTITION BY g
-        |  ORDER BY s DESC, event_id) AS BIGINT) AS bk FROM b),
-        |a AS (SELECT g, bk, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(pos) AS BIGINT) AS n_pos FROM r GROUP BY 1, 2),
-        |c AS (SELECT g, bk, n, n_pos,
-        |  CAST(sum(n) OVER (PARTITION BY g ORDER BY bk) AS BIGINT) AS cum_n,
-        |  CAST(sum(n_pos) OVER (PARTITION BY g ORDER BY bk) AS BIGINT) AS cum_pos,
-        |  CAST(sum(n) OVER (PARTITION BY g) AS BIGINT) AS tn,
-        |  CAST(sum(n_pos) OVER (PARTITION BY g) AS BIGINT) AS tp FROM a)
-        |SELECT g AS event_type, bk AS bucket, n, n_pos, cum_n, cum_pos,
-        | CASE WHEN tp > 0
-        |  THEN CAST((1000000 * cum_pos * tn) // (cum_n * tp) AS BIGINT)
-        | END AS lift_ppm
-        |FROM c""".stripMargin,
-    // q203: rank/count windows on one sort; boundary ties carry equal
-    // values so the kept-sum is order-independent.
-    "q203_trimmed" ->
-      """WITH b AS (SELECT l_returnflag AS g,
-        |  CAST(round(l_extendedprice * 100) AS BIGINT) AS v FROM lineitem),
-        |r AS (SELECT g, v,
-        |  CAST(row_number() OVER (PARTITION BY g ORDER BY v) AS BIGINT) AS rk,
-        |  CAST(count(*) OVER (PARTITION BY g) AS BIGINT) AS n FROM b),
-        |k AS (SELECT g, v, n, (n * 100000) // 1000000 AS cut, rk FROM r)
-        |SELECT g AS l_returnflag, CAST(max(n) AS BIGINT) AS n,
-        | CAST(count(*) AS BIGINT) AS n_kept,
-        | CAST(sum(v) AS BIGINT) AS trimmed_sum,
-        | CAST(sum(v) // count(*) AS BIGINT) AS trimmed_mean
-        |FROM k WHERE rk > cut AND rk <= n - cut GROUP BY g""".stripMargin,
-    // q204: one conditional-aggregation pass; did from the four floored
-    // means (the documented publish-then-subtract convention).
-    "q204_did" ->
-      """WITH b AS (SELECT user_id % 2 = 1 AS t,
-        |  ts >= TIMESTAMP '2024-01-16' AS p,
-        |  CAST(round(value * 100) AS BIGINT) AS v FROM events),
-        |a AS (SELECT
-        |  CAST(count(CASE WHEN t AND NOT p THEN 1 END) AS BIGINT) AS n_t_pre,
-        |  CAST(coalesce(sum(CASE WHEN t AND NOT p THEN v END), 0) AS BIGINT) AS s_t_pre,
-        |  CAST(count(CASE WHEN t AND p THEN 1 END) AS BIGINT) AS n_t_post,
-        |  CAST(coalesce(sum(CASE WHEN t AND p THEN v END), 0) AS BIGINT) AS s_t_post,
-        |  CAST(count(CASE WHEN NOT t AND NOT p THEN 1 END) AS BIGINT) AS n_c_pre,
-        |  CAST(coalesce(sum(CASE WHEN NOT t AND NOT p THEN v END), 0) AS BIGINT) AS s_c_pre,
-        |  CAST(count(CASE WHEN NOT t AND p THEN 1 END) AS BIGINT) AS n_c_post,
-        |  CAST(coalesce(sum(CASE WHEN NOT t AND p THEN v END), 0) AS BIGINT) AS s_c_post
-        | FROM b),
-        |m AS (SELECT n_t_pre, n_t_post, n_c_pre, n_c_post,
-        |  s_t_pre // n_t_pre AS m_t_pre, s_t_post // n_t_post AS m_t_post,
-        |  s_c_pre // n_c_pre AS m_c_pre, s_c_post // n_c_post AS m_c_post
-        | FROM a WHERE n_t_pre > 0 AND n_t_post > 0 AND n_c_pre > 0 AND n_c_post > 0)
-        |SELECT n_t_pre, n_t_post, n_c_pre, n_c_post,
-        | CAST(m_t_pre AS BIGINT) AS m_t_pre, CAST(m_t_post AS BIGINT) AS m_t_post,
-        | CAST(m_c_pre AS BIGINT) AS m_c_pre, CAST(m_c_post AS BIGINT) AS m_c_post,
-        | CAST((m_t_post - m_t_pre) - (m_c_post - m_c_pre) AS BIGINT) AS did
-        |FROM m""".stripMargin,
-    // q205: three class-count aggregations outer-joined; F1 by the
-    // fraction-free 2·tp/(n_pred+n_gold) identity.
-    "q205_class_prf" ->
-      """WITH r AS (SELECT * FROM (SELECT lang AS g,
-        |  CASE WHEN doc_id % 4 = 0 THEN
-        |   CASE lang WHEN 'en' THEN 'de' WHEN 'de' THEN 'es'
-        |    WHEN 'es' THEN 'fr' WHEN 'fr' THEN 'zh' WHEN 'zh' THEN 'en' END
-        |  ELSE lang END AS p
-        | FROM documents) WHERE g IS NOT NULL AND p IS NOT NULL),
-        |tp AS (SELECT g AS label, CAST(count(*) AS BIGINT) AS tp
-        | FROM r WHERE g = p GROUP BY 1),
-        |gold AS (SELECT g AS label, CAST(count(*) AS BIGINT) AS n_gold
-        | FROM r GROUP BY 1),
-        |pred AS (SELECT p AS label, CAST(count(*) AS BIGINT) AS n_pred
-        | FROM r GROUP BY 1)
-        |SELECT label,
-        | CAST(coalesce(gold.n_gold, 0) AS BIGINT) AS n_gold,
-        | CAST(coalesce(pred.n_pred, 0) AS BIGINT) AS n_pred,
-        | CAST(coalesce(tp.tp, 0) AS BIGINT) AS tp,
-        | CASE WHEN coalesce(pred.n_pred, 0) > 0
-        |  THEN CAST((1000000 * coalesce(tp.tp, 0)) // pred.n_pred AS BIGINT)
-        | END AS precision_ppm,
-        | CASE WHEN coalesce(gold.n_gold, 0) > 0
-        |  THEN CAST((1000000 * coalesce(tp.tp, 0)) // gold.n_gold AS BIGINT)
-        | END AS recall_ppm,
-        | CAST((2000000 * coalesce(tp.tp, 0))
-        |  // (coalesce(pred.n_pred, 0) + coalesce(gold.n_gold, 0)) AS BIGINT)
-        |  AS f1_ppm
-        |FROM gold FULL OUTER JOIN pred USING (label)
-        | LEFT JOIN tp USING (label)""".stripMargin,
-
-    // q206: q142's quantized-integer cosine algebra, cross-set (even =
-    // corpus, odd = held-out) instead of within-label.
-    "q206_semantic_decontaminate" ->
-      """WITH q AS (
-        | SELECT vec_id,
-        |  list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1024) AS BIGINT)) AS qv
-        | FROM embeddings),
-        |n AS (
-        | SELECT vec_id, qv,
-        |  list_sum(list_transform(range(1, len(qv)+1), i -> qv[i]*qv[i])) AS n2
-        | FROM q),
-        |h AS (
-        | SELECT a.vec_id, CAST(count(*) AS BIGINT) AS n_matches
-        | FROM n a JOIN n b ON a.vec_id % 2 = 0 AND b.vec_id % 2 = 1,
-        |  LATERAL (SELECT list_sum(list_transform(range(1, len(a.qv)+1), i -> a.qv[i]*b.qv[i])) AS d) t
-        | WHERE t.d > 0 AND t.d * t.d * 100 >= 81 * a.n2 * b.n2
-        | GROUP BY a.vec_id)
-        |SELECT e.vec_id,
-        | CAST(coalesce(h.n_matches, 0) AS BIGINT) AS n_matches,
-        | h.vec_id IS NOT NULL AS contaminated
-        |FROM embeddings e LEFT JOIN h USING (vec_id)
-        |WHERE e.vec_id % 2 = 0""".stripMargin,
-
-    // q207: fertility ratios over the shared tokenizers — words =
-    // whitespace split, tokens = the BPE-ish pre-tokenizer regex.
-    "q207_token_fertility" ->
-      """WITH d AS (SELECT lang,
-        |  len(list_filter(string_split_regex(trim(lower(text)), '\s+'), w -> len(w) > 0)) AS w,
-        |  len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS t,
-        |  length(text) AS c
-        | FROM documents)
-        |SELECT lang,
-        | CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(sum(w) AS BIGINT) AS n_words,
-        | CAST(sum(t) AS BIGINT) AS n_tokens,
-        | CAST(sum(c) AS BIGINT) AS n_chars,
-        | CASE WHEN sum(w) = 0 THEN 0
-        |  ELSE CAST((1000000 * sum(t)) // sum(w) AS BIGINT) END AS fertility_ppm,
-        | CASE WHEN sum(t) = 0 THEN 0
-        |  ELSE CAST((1000000 * sum(c)) // sum(t) AS BIGINT) END AS chars_per_token_ppm
-        |FROM d
-        |GROUP BY lang""".stripMargin,
-
-    // q208: the per-column profile replayed per snapshot half and joined.
-    "q208_column_drift" -> {
-      def side(tag: String, parity: Int) =
-        Seq("l_quantity", "l_partkey", "l_suppkey", "l_linenumber").map(c =>
-          s"""SELECT '$c' AS column_name,
-             | CAST(count(*) AS BIGINT) AS n_$tag,
-             | CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nulls_$tag,
-             | CAST(count(DISTINCT $c) AS BIGINT) AS distinct_$tag,
-             | CAST(min($c) AS BIGINT) AS min_$tag,
-             | CAST(max($c) AS BIGINT) AS max_$tag,
-             | CAST(sum($c) AS BIGINT) AS sum_$tag
-             |FROM lineitem WHERE l_orderkey % 2 = $parity""".stripMargin)
-          .mkString("(", ") UNION ALL (", ")")
-      s"""SELECT * FROM (${side("a", 0)}) pa JOIN (${side("b", 1)}) pb USING (column_name)"""
-    },
-
-    // q209: identical gap pairing — per-user lag over (epoch_ms, event_id).
-    "q209_interarrival" ->
-      """WITH g AS (
-        | SELECT event_type, epoch_ms(ts) AS ms,
-        |  lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY epoch_ms(ts), event_id) AS prev
-        | FROM events)
-        |SELECT event_type,
-        | CAST(least((ms - prev) // 60000, 10) AS BIGINT) AS bucket,
-        | CAST(count(*) AS BIGINT) AS n
-        |FROM g WHERE prev IS NOT NULL
-        |GROUP BY 1, 2""".stripMargin,
-
-    // q210: identical tie-broken ranks; DuckDB's integer // truncates
-    // toward zero exactly like Spark's div (measured r8: (-5)//3 = -1),
-    // so the plain quotient matches even for negative rho.
-    "q210_spearman" ->
-      """WITH r AS (
-        | SELECT lang,
-        |  row_number() OVER (PARTITION BY lang ORDER BY length(text), doc_id) AS rx,
-        |  row_number() OVER (PARTITION BY lang
-        |   ORDER BY len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')), doc_id) AS ry
-        | FROM documents),
-        |s AS (
-        | SELECT lang, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum((rx - ry) * (rx - ry)) AS BIGINT) AS sum_d2
-        | FROM r GROUP BY 1)
-        |SELECT lang, n, sum_d2,
-        | CAST(n * (n * n - 1) - 6 * sum_d2 AS BIGINT) AS rho_num,
-        | CAST(n * (n * n - 1) AS BIGINT) AS rho_den,
-        | CASE WHEN n < 2 THEN NULL
-        |  ELSE CAST((1000000 * (n * (n * n - 1) - 6 * sum_d2)) // (n * (n * n - 1)) AS BIGINT)
-        | END AS rho_ppm
-        |FROM s""".stripMargin,
-
-    // q211: DuckDB's damerau_levenshtein is the same unrestricted
-    // (Lowrance–Wagner) variant as the native kernel — verified on the
-    // OSA-distinguishing case ca→abc = 2.
-    "q211_damerau_pairs" ->
-      """WITH c AS (
-        | SELECT CAST(c_custkey AS BIGINT) AS id, c_name AS name,
-        |  substr(c_name, 1, 16) AS blk
-        | FROM customer)
-        |SELECT a.id AS a_id, b.id AS b_id,
-        | CAST(damerau_levenshtein(a.name, b.name) AS BIGINT) AS dist
-        |FROM c a JOIN c b
-        | ON a.blk = b.blk AND a.id < b.id
-        | AND abs(length(a.name) - length(b.name)) <= 1
-        |WHERE damerau_levenshtein(a.name, b.name) <= 1""".stripMargin,
-
-    // q212: the kernel replays DuckDB's parameters (window ⌊max/2⌋−1,
-    // boost 0.1·ℓ≤4 above 0.7) in the same operation order — doubles
-    // compare bit-equal.
-    "q212_jaro_winkler" ->
-      """WITH s AS (
-        | SELECT CAST(s_suppkey AS BIGINT) AS id, s_name AS name,
-        |  substr(s_name, 1, 15) AS blk
-        | FROM supplier)
-        |SELECT a.id AS a_id, b.id AS b_id,
-        | jaro_winkler_similarity(a.name, b.name) AS sim
-        |FROM s a JOIN s b ON a.blk = b.blk AND a.id < b.id
-        |WHERE jaro_winkler_similarity(a.name, b.name) >= 0.88""".stripMargin,
-
-    // q213: brute-force quadratic reference — the grid blocking must
-    // change nothing but the plan. All-integer distances.
-    "q213_grid_radius_join" ->
-      """WITH p AS (
-        | SELECT CAST(c_custkey AS BIGINT) AS id,
-        |  (CAST(c_custkey AS BIGINT) * CAST(c_custkey AS BIGINT) * 7919
-        |   + CAST(c_custkey AS BIGINT) * 104729) % 100003 AS x,
-        |  (CAST(c_custkey AS BIGINT) * CAST(c_custkey AS BIGINT) * 6983
-        |   + CAST(c_custkey AS BIGINT) * 92821) % 99991 AS y
-        | FROM customer)
-        |SELECT a.id AS a_id, b.id AS b_id,
-        | (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) AS dist2
-        |FROM p a JOIN p b ON a.id < b.id
-        |WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) <= 1000000""".stripMargin,
-
-    // q214: running ECDF-gap window over the merged milli-value grid;
-    // lead() supplies the grid step, the max value's gap is identically
-    // zero so dropping it is exact.
-    "q214_emd_drift" ->
-      """WITH v AS (
-        | SELECT CAST(floor(value * 1000) AS BIGINT) AS v,
-        |  sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS ca,
-        |  sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS cb
-        | FROM events WHERE event_type IN ('click', 'view') GROUP BY 1),
-        |t AS (SELECT CAST(sum(ca) AS BIGINT) AS n_a, CAST(sum(cb) AS BIGINT) AS n_b FROM v),
-        |c AS (
-        | SELECT t.n_a, t.n_b,
-        |  sum(v.ca * t.n_b - v.cb * t.n_a) OVER (ORDER BY v.v ROWS UNBOUNDED PRECEDING) AS cum,
-        |  lead(v.v) OVER (ORDER BY v.v) - v.v AS dv
-        | FROM v CROSS JOIN t)
-        |SELECT n_a, n_b,
-        | CAST(sum(dv * abs(cum)) AS BIGINT) AS emd_num,
-        | CAST((1000 * sum(dv * abs(cum))) // (n_a * n_b) AS BIGINT) AS w1_milli
-        |FROM c WHERE dv IS NOT NULL
-        |GROUP BY n_a, n_b""".stripMargin,
-
-    // q215: identical pair grid, identical ⌊scale·Δy/Δx⌋ double divide,
-    // identical lower-median rank pick — all deterministic.
-    "q215_theil_sen" ->
-      """WITH e AS (
-        | SELECT user_id, epoch_us(ts) AS x,
-        |  CAST(floor(value * 100) AS BIGINT) AS y
-        | FROM events),
-        |p AS (
-        | SELECT a.user_id, a.x AS x1, a.y AS y1, b.x AS x2, b.y AS y2,
-        |  CAST(floor((1000000000000 * (b.y - a.y)) / (b.x - a.x)) AS BIGINT) AS slope
-        | FROM e a JOIN e b ON a.user_id = b.user_id AND a.x < b.x),
-        |r AS (
-        | SELECT user_id, slope,
-        |  row_number() OVER (PARTITION BY user_id ORDER BY slope, x1, y1, x2, y2) AS rk,
-        |  count(*) OVER (PARTITION BY user_id) AS n_pairs
-        | FROM p)
-        |SELECT user_id, CAST(n_pairs AS BIGINT) AS n_pairs, slope AS slope_scaled
-        |FROM r WHERE rk = (n_pairs + 1) // 2""".stripMargin,
-
-    // q216: zero-filled class×bucket grid (missing buckets still move the
-    // cumulative gap), cross-multiplied ordered EMD, all integer.
-    "q216_t_closeness" ->
-      """WITH c AS (
-        | SELECT c_mktsegment, c_nationkey,
-        |  CAST(floor(c_acctbal / 1000) AS BIGINT) AS b
-        | FROM customer),
-        |cls AS (SELECT c_mktsegment, c_nationkey, count(*) AS n_rows FROM c GROUP BY 1, 2),
-        |g AS (SELECT b, count(*) AS gb FROM c GROUP BY 1),
-        |t AS (SELECT CAST(sum(gb) AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS m FROM g),
-        |grid AS (
-        | SELECT cls.c_mktsegment, cls.c_nationkey, cls.n_rows, g.b, g.gb, t.n, t.m,
-        |  coalesce(cb.cnt, 0) AS cb
-        | FROM cls CROSS JOIN g CROSS JOIN t
-        | LEFT JOIN (SELECT c_mktsegment, c_nationkey, b, count(*) AS cnt
-        |            FROM c GROUP BY 1, 2, 3) cb
-        |  ON cb.c_mktsegment = cls.c_mktsegment
-        |  AND cb.c_nationkey = cls.c_nationkey AND cb.b = g.b),
-        |cum AS (
-        | SELECT c_mktsegment, c_nationkey, n_rows, m, n,
-        |  abs(n * sum(cb) OVER w - n_rows * sum(gb) OVER w) AS gap
-        | FROM grid
-        | WINDOW w AS (PARTITION BY c_mktsegment, c_nationkey
-        |              ORDER BY b ROWS UNBOUNDED PRECEDING))
-        |SELECT c_mktsegment, c_nationkey,
-        | CAST(n_rows AS BIGINT) AS n_rows, m AS m_buckets,
-        | CAST(sum(gap) AS BIGINT) AS t_num,
-        | CASE WHEN m < 2 THEN NULL
-        |  ELSE CAST((1000000 * sum(gap)) // ((m - 1) * n * n_rows) AS BIGINT)
-        | END AS t_ppm
-        |FROM cum GROUP BY c_mktsegment, c_nationkey, n_rows, m, n""".stripMargin,
-
-    // q217: two-strip vowel-run counting; the Flesch arithmetic is
-    // spelled in the Spark side's exact operation order.
-    "q217_readability" ->
-      """WITH d AS (
-        | SELECT doc_id,
-        |  CAST(coalesce(len(list_filter(string_split_regex(coalesce(text, ''), '\s+'),
-        |    x -> len(x) > 0)), 0) AS BIGINT) AS w,
-        |  CAST(coalesce(len(list_filter(
-        |    regexp_split_to_array(coalesce(text, ''), '[.!?]+'),
-        |    s -> regexp_matches(s, '\S'))), 0) AS BIGINT) AS sent,
-        |  CAST(length(regexp_replace(lower(coalesce(text, '')), '[aeiouy]+', '#', 'g'))
-        |   - length(regexp_replace(lower(coalesce(text, '')), '[aeiouy]+', '', 'g')) AS BIGINT) AS y
-        | FROM documents)
-        |SELECT doc_id, w AS n_words, sent AS n_sentences, y AS n_syllables,
-        | CASE WHEN sent = 0 OR w = 0 THEN NULL
-        |  ELSE CAST(floor(1000.0 * (206.835
-        |   - 1.015 * (CAST(w AS DOUBLE) / CAST(sent AS DOUBLE))
-        |   - 84.6 * (CAST(y AS DOUBLE) / CAST(w AS DOUBLE)))) AS BIGINT)
-        | END AS flesch_milli
-        |FROM d""".stripMargin,
-
-    // q218: identical ±3-row frames; max over an empty frame is NULL and
-    // count is 0 in both engines, so boundary semantics agree.
-    "q218_peaks" ->
-      """WITH e AS (
-        | SELECT user_id, event_id, epoch_ms(ts) AS ms,
-        |  CAST(round(value * 100) AS BIGINT) AS c
-        | FROM events),
-        |w AS (
-        | SELECT user_id, event_id, c,
-        |  max(c) OVER (PARTITION BY user_id ORDER BY ms, event_id
-        |   ROWS BETWEEN 3 PRECEDING AND 1 PRECEDING) AS lm,
-        |  max(c) OVER (PARTITION BY user_id ORDER BY ms, event_id
-        |   ROWS BETWEEN 1 FOLLOWING AND 3 FOLLOWING) AS rm,
-        |  count(*) OVER (PARTITION BY user_id ORDER BY ms, event_id
-        |   ROWS BETWEEN 3 PRECEDING AND 1 PRECEDING) AS nl,
-        |  count(*) OVER (PARTITION BY user_id ORDER BY ms, event_id
-        |   ROWS BETWEEN 1 FOLLOWING AND 3 FOLLOWING) AS nr
-        | FROM e)
-        |SELECT user_id, event_id, c AS value,
-        | CAST(nl AS BIGINT) AS n_before, CAST(nr AS BIGINT) AS n_after
-        |FROM w
-        |WHERE (lm IS NULL OR c > lm) AND (rm IS NULL OR c > rm)""".stripMargin,
-
-    // q219: integer suff-stats (HUGEINT partials convert to the same
-    // doubles as Spark's longs), then the pinned-order double last mile.
-    "q219_cuped" ->
-      """WITH per AS (
-        | SELECT user_id,
-        |  sum(CASE WHEN event_type = 'view'
-        |   THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END) AS x,
-        |  sum(CASE WHEN event_type = 'purchase'
-        |   THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END) AS y
-        | FROM events GROUP BY 1),
-        |s AS (
-        | SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-        |  sum(x * y) AS sxy, sum(x * x) AS sxx,
-        |  sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END) AS n_t,
-        |  sum(CASE WHEN user_id % 2 = 1 THEN x ELSE 0 END) AS sxt,
-        |  sum(CASE WHEN user_id % 2 = 1 THEN y ELSE 0 END) AS syt
-        | FROM per),
-        |d AS (
-        | SELECT n_t, n - n_t AS n_c,
-        |  (n * sxy - sx * sy) / (n * sxx - sx * sx) AS theta,
-        |  syt / n_t - (sy - syt) / (n - n_t) AS dy,
-        |  sxt / n_t - (sx - sxt) / (n - n_t) AS dx
-        | FROM s)
-        |SELECT CAST(n_t AS BIGINT) AS n_t, CAST(n_c AS BIGINT) AS n_c,
-        | CAST(floor(1000000.0 * theta) AS BIGINT) AS theta_micro,
-        | CAST(floor(1000000.0 * dy) AS BIGINT) AS effect_raw_micro,
-        | CAST(floor(1000000.0 * (dy - theta * dx)) AS BIGINT) AS effect_cuped_micro
-        |FROM d""".stripMargin,
-
-    // q220: suffix risk-set via a DESC running count; (1e6·d)//n_risk is
-    // non-negative, so // and div agree.
-    "q220_hazard_table" ->
-      """WITH base AS (
-        | SELECT CAST(floor(value) AS BIGINT) AS t,
-        |  CASE WHEN CAST(json_extract_string(props, '$.k') AS BIGINT) >= 50
-        |   THEN 1 ELSE 0 END AS ev
-        | FROM events WHERE event_type = 'purchase'),
-        |p AS (SELECT t, count(*) AS c, sum(ev) AS d FROM base GROUP BY 1),
-        |r AS (SELECT t, d,
-        |  sum(c) OVER (ORDER BY t DESC ROWS UNBOUNDED PRECEDING) AS n_risk
-        | FROM p)
-        |SELECT t, CAST(n_risk AS BIGINT) AS n_risk, CAST(d AS BIGINT) AS d,
-        | CAST((1000000 * d) // n_risk AS BIGINT) AS hazard_ppm
-        |FROM r WHERE d > 0""".stripMargin,
-
-    // q221: HUGEINT partials convert to the same doubles as Spark's
-    // longs; the scoring expression is spelled in the identical order.
-    "q221_mahalanobis" ->
-      """WITH b AS (
-        | SELECT event_id, CAST(floor(value) AS BIGINT) AS x,
-        |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS y
-        | FROM events WHERE json_extract_string(props, '$.k') IS NOT NULL),
-        |s AS (
-        | SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-        |  sum(x * x) AS sxx, sum(y * y) AS syy, sum(x * y) AS sxy
-        | FROM b),
-        |m AS (
-        | SELECT event_id, x, y, n,
-        |  n * x - sx AS u, n * y - sy AS v,
-        |  n * sxx - sx * sx AS cxx, n * syy - sy * sy AS cyy,
-        |  n * sxy - sx * sy AS cxy
-        | FROM b CROSS JOIN s)
-        |SELECT event_id, x, y,
-        | CAST(floor((1000.0 * (CAST(n - 1 AS DOUBLE)
-        |   * (CAST(u AS DOUBLE) * u * cyy - 2.0 * u * v * cxy
-        |      + CAST(v AS DOUBLE) * v * cxx)))
-        |  / (CAST(n AS DOUBLE)
-        |   * (CAST(cxx AS DOUBLE) * cyy - CAST(cxy AS DOUBLE) * cxy))) AS BIGINT)
-        |  AS d2_milli
-        |FROM m""".stripMargin,
-
-    // q222: engine-neutral epoch calendar math (dayofweek builtins
-    // disagree on origin/range across engines).
-    "q222_activity_heatmap" ->
-      """WITH c AS (
-        | SELECT event_type,
-        |  ((epoch_ms(ts) // 1000 // 86400) + 4) % 7 AS dow,
-        |  (epoch_ms(ts) // 1000 % 86400) // 3600 AS hour
-        | FROM events),
-        |g AS (SELECT event_type, dow, hour, count(*) AS n FROM c GROUP BY 1, 2, 3),
-        |t AS (SELECT event_type, sum(n) AS tot FROM g GROUP BY 1)
-        |SELECT g.event_type, CAST(dow AS BIGINT) AS dow, CAST(hour AS BIGINT) AS hour,
-        | CAST(n AS BIGINT) AS n, CAST((1000000 * n) // tot AS BIGINT) AS share_ppm
-        |FROM g JOIN t USING (event_type)""".stripMargin,
-
-    // q223: quantile_disc(0.5) over a ROWS frame IS the lower median —
-    // verified against the element-at pick on ramp-up and even frames.
-    "q223_rolling_median" ->
-      """WITH e AS (
-        | SELECT user_id, event_id, epoch_ms(ts) AS ms,
-        |  CAST(round(value * 100) AS BIGINT) AS c
-        | FROM events)
-        |SELECT user_id, event_id, c AS value,
-        | quantile_disc(c, 0.5) OVER (PARTITION BY user_id ORDER BY ms, event_id
-        |  ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS med,
-        | CAST(count(*) OVER (PARTITION BY user_id ORDER BY ms, event_id
-        |  ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS BIGINT) AS n_win
-        |FROM e""".stripMargin,
-
-    // q224: same sweep line — per-timestamp nets FIRST (half-open
-    // same-instant handoff), then the running max.
-    "q224_max_concurrency" ->
-      """WITH iv AS (
-        | SELECT event_type, epoch_ms(ts) // 1000 AS s,
-        |  epoch_ms(ts) // 1000 + CAST(floor(value) AS BIGINT) + 1 AS e
-        | FROM events),
-        |d AS (
-        | SELECT event_type, s AS t, 1 AS dd FROM iv
-        | UNION ALL
-        | SELECT event_type, e AS t, -1 AS dd FROM iv),
-        |net AS (SELECT event_type, t, sum(dd) AS net FROM d GROUP BY 1, 2),
-        |run AS (
-        | SELECT event_type,
-        |  sum(net) OVER (PARTITION BY event_type ORDER BY t
-        |   ROWS UNBOUNDED PRECEDING) AS run
-        | FROM net)
-        |SELECT r.event_type, CAST(max(r.run) AS BIGINT) AS max_concurrent,
-        | CAST(min(c.n) AS BIGINT) AS n_intervals
-        |FROM run r JOIN (SELECT event_type, count(*) AS n FROM events GROUP BY 1) c
-        | USING (event_type)
-        |GROUP BY r.event_type""".stripMargin,
-
-    // q225: the q122 tokenizer, rolled up to the type-frequency spectrum
-    // endpoint.
-    "q225_hapax" ->
-      """WITH tok AS (
-        | SELECT lang,
-        |  list_filter(string_split_regex(trim(lower(text)), '\s+'), w -> len(w) > 0) AS w
-        | FROM documents),
-        |t AS (SELECT lang, unnest(w) AS word FROM tok),
-        |c AS (SELECT lang, word, count(*) AS n FROM t GROUP BY 1, 2)
-        |SELECT lang,
-        | CAST(count(*) AS BIGINT) AS n_types,
-        | CAST(sum(n) AS BIGINT) AS n_tokens,
-        | CAST(sum(CASE WHEN n = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax,
-        | CAST((1000000 * sum(CASE WHEN n = 1 THEN 1 ELSE 0 END)) // count(*) AS BIGINT)
-        |  AS hapax_ppm
-        |FROM c GROUP BY 1""".stripMargin,
-
-    // q226: identical gap pairing and the identical clamped-variance
-    // double pipeline (sqrt of a clamp is engine-safe).
-    "q226_burstiness" ->
-      """WITH g AS (
-        | SELECT user_id, epoch_ms(ts) // 1000 AS s,
-        |  lag(epoch_ms(ts) // 1000) OVER (PARTITION BY user_id
-        |   ORDER BY epoch_ms(ts) // 1000, event_id) AS prev
-        | FROM events),
-        |st AS (
-        | SELECT user_id, count(*) AS n_gaps,
-        |  sum(s - prev) AS sum_gap, sum((s - prev) * (s - prev)) AS sum_gap2
-        | FROM g WHERE prev IS NOT NULL GROUP BY 1),
-        |mm AS (
-        | SELECT user_id, n_gaps, sum_gap, sum_gap2,
-        |  sum_gap / n_gaps AS mu,
-        |  sqrt(greatest(sum_gap2 / n_gaps - (sum_gap / n_gaps) * (sum_gap / n_gaps), 0.0)) AS sd
-        | FROM st)
-        |SELECT user_id, CAST(n_gaps AS BIGINT) AS n_gaps,
-        | CAST(sum_gap AS BIGINT) AS sum_gap, CAST(sum_gap2 AS BIGINT) AS sum_gap2,
-        | CASE WHEN sd + mu = 0.0 THEN NULL
-        |  ELSE CAST(floor(1000000.0 * (sd - mu) / (sd + mu)) AS BIGINT) END AS b_micro
-        |FROM mm""".stripMargin,
-
-    // q227: day() is proleptic-Gregorian-identical across engines for
-    // modern dates; the ratio is one pinned-order double divide.
-    "q227_seasonal_index" ->
-      """WITH cells AS (
-        | SELECT event_type, CAST(day(ts) AS BIGINT) AS season,
-        |  count(*) AS n, sum(CAST(round(value * 100) AS BIGINT)) AS sum_cents
-        | FROM events GROUP BY 1, 2),
-        |tot AS (SELECT event_type, sum(n) AS nt, sum(sum_cents) AS st FROM cells GROUP BY 1)
-        |SELECT c.event_type, c.season, CAST(c.n AS BIGINT) AS n,
-        | CAST(c.sum_cents AS BIGINT) AS sum_cents,
-        | CAST(floor((1000000.0 * c.sum_cents * t.nt) / (c.n * t.st)) AS BIGINT) AS index_ppm
-        |FROM cells c JOIN tot t USING (event_type)""".stripMargin,
-
-    // q228: identical lower-quantile rank formula; ties among equal
-    // values can permute row identity but never the picked value.
-    "q228_qq_table" ->
-      """WITH r AS (
-        | SELECT event_type AS g, CAST(round(value * 100) AS BIGINT) AS v,
-        |  row_number() OVER (PARTITION BY event_type
-        |   ORDER BY CAST(round(value * 100) AS BIGINT)) AS rk,
-        |  count(*) OVER (PARTITION BY event_type) AS n
-        | FROM events WHERE event_type IN ('click', 'view')),
-        |l AS (SELECT unnest([1, 5, 10, 25, 50, 75, 90, 95, 99]) AS p),
-        |t AS (SELECT l.p, r.g, r.v FROM l JOIN r ON r.rk = (l.p * (r.n - 1)) // 100 + 1)
-        |SELECT p,
-        | CAST(max(CASE WHEN g = 'click' THEN v END) AS BIGINT) AS q_a,
-        | CAST(max(CASE WHEN g = 'view' THEN v END) AS BIGINT) AS q_b,
-        | CAST(max(CASE WHEN g = 'click' THEN v END)
-        |  - max(CASE WHEN g = 'view' THEN v END) AS BIGINT) AS gap
-        |FROM t GROUP BY 1""".stripMargin,
-
-    // q229: identical rank-weighted P-sums ((i−1)(i−2) is even, so the
-    // // is exact) and the identical pinned double ratio chains.
-    "q229_l_moments" ->
-      """WITH r AS (
-        | SELECT event_type, CAST(floor(value) AS BIGINT) AS v,
-        |  row_number() OVER (PARTITION BY event_type
-        |   ORDER BY CAST(floor(value) AS BIGINT)) AS i
-        | FROM events),
-        |s AS (
-        | SELECT event_type, count(*) AS n, sum(v) AS p0,
-        |  sum((i - 1) * v) AS p1,
-        |  sum((((i - 1) * (i - 2)) // 2) * v) AS p2
-        | FROM r GROUP BY 1),
-        |m AS (
-        | SELECT event_type, n, p0, p1, p2,
-        |  2 * p1 - (n - 1) * p0 AS l2_num,
-        |  12 * p2 - 6 * (n - 2) * p1 + (n - 1) * (n - 2) * p0 AS l3_num
-        | FROM s)
-        |SELECT event_type, CAST(n AS BIGINT) AS n, CAST(p0 AS BIGINT) AS p0,
-        | CAST(p1 AS BIGINT) AS p1, CAST(p2 AS BIGINT) AS p2,
-        | CAST(l2_num AS BIGINT) AS l2_num, CAST(l3_num AS BIGINT) AS l3_num,
-        | CASE WHEN n < 2 OR p0 = 0 THEN NULL
-        |  ELSE CAST(floor((1000000.0 * (l2_num / (n - 1))) / p0) AS BIGINT) END AS t2_ppm,
-        | CASE WHEN n < 3 OR l2_num = 0 THEN NULL
-        |  ELSE CAST(floor((1000000.0 * (l3_num / (n - 2))) / l2_num) AS BIGINT) END AS t3_ppm
-        |FROM m""".stripMargin,
-
-    // q230: one window spec, two leads — identical tie-broken order.
-    "q230_path_trigrams" ->
-      """WITH s AS (
-        | SELECT user_id, event_type AS s1,
-        |  lead(event_type, 1) OVER w AS s2,
-        |  lead(event_type, 2) OVER w AS s3
-        | FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |g AS (SELECT s1, s2, s3, count(*) AS n FROM s WHERE s3 IS NOT NULL GROUP BY 1, 2, 3),
-        |t AS (SELECT sum(n) AS tot FROM g)
-        |SELECT s1, s2, s3, CAST(n AS BIGINT) AS n,
-        | CAST((1000000 * n) // tot AS BIGINT) AS share_ppm
-        |FROM g CROSS JOIN t""".stripMargin,
-
-    // q231: the q122 tokenizer feeding a distinct vocabulary, word-keyed
-    // pair intersection, broadcast sizes.
-    "q231_vocab_jaccard" ->
-      """WITH v AS (
-        | SELECT DISTINCT source AS g,
-        |  unnest(list_filter(string_split_regex(trim(lower(text)), '\s+'),
-        |   w -> len(w) > 0)) AS word
-        | FROM documents),
-        |s AS (SELECT g, count(*) AS n FROM v GROUP BY 1),
-        |c AS (
-        | SELECT a.g AS g_a, b.g AS g_b, count(*) AS n_common
-        | FROM v a JOIN v b ON a.word = b.word AND a.g < b.g GROUP BY 1, 2)
-        |SELECT g_a, g_b, CAST(sa.n AS BIGINT) AS n_a, CAST(sb.n AS BIGINT) AS n_b,
-        | CAST(n_common AS BIGINT) AS n_common,
-        | CAST((1000000 * n_common) // (sa.n + sb.n - n_common) AS BIGINT) AS jaccard_ppm,
-        | CAST((1000000 * n_common) // least(sa.n, sb.n) AS BIGINT) AS overlap_ppm,
-        | CAST((1000000 * n_common) // sa.n AS BIGINT) AS a_in_b_ppm,
-        | CAST((1000000 * n_common) // sb.n AS BIGINT) AS b_in_a_ppm
-        |FROM c JOIN s sa ON sa.g = c.g_a JOIN s sb ON sb.g = c.g_b""".stripMargin,
-
-    // q232: identical pinned central-moment and ratio chains (mu ≡ s1/n
-    // recomputed inline is the identical double).
-    "q232_moments" ->
-      """WITH b AS (SELECT event_type, CAST(floor(value) AS BIGINT) AS v FROM events),
-        |s AS (
-        | SELECT event_type, count(*) AS n, sum(v) AS s1, sum(v * v) AS s2,
-        |  sum(v * v * v) AS s3, sum(v * v * v * v) AS s4
-        | FROM b GROUP BY 1),
-        |m AS (
-        | SELECT event_type, n, s1, s2, s3, s4,
-        |  s1 / n AS mu,
-        |  s2 / n - (s1 / n) * (s1 / n) AS m2,
-        |  s3 / n - 3.0 * (s1 / n) * (s2 / n)
-        |   + 2.0 * (s1 / n) * (s1 / n) * (s1 / n) AS m3,
-        |  s4 / n - 4.0 * (s1 / n) * (s3 / n)
-        |   + 6.0 * ((s1 / n) * (s1 / n)) * (s2 / n)
-        |   - 3.0 * ((s1 / n) * (s1 / n)) * ((s1 / n) * (s1 / n)) AS m4
-        | FROM s)
-        |SELECT event_type, CAST(n AS BIGINT) AS n, CAST(s1 AS BIGINT) AS s1,
-        | CAST(s2 AS BIGINT) AS s2, CAST(s3 AS BIGINT) AS s3, CAST(s4 AS BIGINT) AS s4,
-        | CAST(floor(1000.0 * mu) AS BIGINT) AS mean_milli,
-        | CAST(floor(1000.0 * m2) AS BIGINT) AS var_milli,
-        | CASE WHEN m2 <= 0.0 THEN NULL
-        |  ELSE CAST(floor(1000.0 * (m3 / (sqrt(m2) * m2))) AS BIGINT) END AS skew_milli,
-        | CASE WHEN m2 <= 0.0 THEN NULL
-        |  ELSE CAST(floor(1000.0 * (m4 / (m2 * m2) - 3.0)) AS BIGINT) END AS kurt_milli
-        |FROM m""".stripMargin,
-
-    // q233: rank-weighted Gini closed form; ties permute equal values
-    // only, so Σi·v is stable.
-    "q233_value_gini" ->
-      """WITH r AS (
-        | SELECT event_type, CAST(floor(value) AS BIGINT) AS v,
-        |  row_number() OVER (PARTITION BY event_type
-        |   ORDER BY CAST(floor(value) AS BIGINT)) AS i
-        | FROM events)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        | CAST(sum(v) AS BIGINT) AS sum_value,
-        | CAST(2 * sum(i * v) - (count(*) + 1) * sum(v) AS BIGINT) AS gini_num,
-        | CAST(count(*) * sum(v) AS BIGINT) AS gini_den,
-        | CASE WHEN count(*) * sum(v) = 0 THEN NULL
-        |  ELSE CAST((1000000 * (2 * sum(i * v) - (count(*) + 1) * sum(v)))
-        |   // (count(*) * sum(v)) AS BIGINT) END AS gini_ppm
-        |FROM r GROUP BY 1""".stripMargin,
-
-    // q234: identical rank→bucket formula and cumulative share windows.
-    "q234_lorenz_deciles" ->
-      """WITH r AS (
-        | SELECT event_type, CAST(round(value * 100) AS BIGINT) AS v,
-        |  row_number() OVER (PARTITION BY event_type
-        |   ORDER BY CAST(round(value * 100) AS BIGINT)) AS i,
-        |  count(*) OVER (PARTITION BY event_type) AS n
-        | FROM events),
-        |b AS (
-        | SELECT event_type, ((i - 1) * 10) // n AS bucket,
-        |  count(*) AS n_rows, sum(v) AS sum_value
-        | FROM r GROUP BY 1, 2),
-        |c AS (
-        | SELECT event_type, bucket, n_rows, sum_value,
-        |  sum(sum_value) OVER (PARTITION BY event_type ORDER BY bucket
-        |   ROWS UNBOUNDED PRECEDING) AS cum,
-        |  sum(sum_value) OVER (PARTITION BY event_type) AS tot
-        | FROM b)
-        |SELECT event_type, CAST(bucket AS BIGINT) AS bucket,
-        | CAST(n_rows AS BIGINT) AS n_rows, CAST(sum_value AS BIGINT) AS sum_value,
-        | CASE WHEN tot = 0 THEN NULL
-        |  ELSE CAST((1000000 * cum) // tot AS BIGINT) END AS cum_value_ppm
-        |FROM c""".stripMargin,
-
-    // q235: two per-period rankings over (count DESC, item) — the
-    // two-phase denseIds path reproduces exactly this total order.
-    "q235_rank_movers" ->
-      """WITH c AS (
-        | SELECT CASE WHEN day(ts) <= 15 THEN 'p1' ELSE 'p2' END AS p,
-        |  user_id AS item, count(*) AS n
-        | FROM events GROUP BY 1, 2),
-        |ra AS (SELECT item, n AS n_a,
-        |  row_number() OVER (ORDER BY n DESC, item) AS rank_a
-        | FROM c WHERE p = 'p1'),
-        |rb AS (SELECT item, n AS n_b,
-        |  row_number() OVER (ORDER BY n DESC, item) AS rank_b
-        | FROM c WHERE p = 'p2')
-        |SELECT item, CAST(n_a AS BIGINT) AS n_a, CAST(rank_a AS BIGINT) AS rank_a,
-        | CAST(n_b AS BIGINT) AS n_b, CAST(rank_b AS BIGINT) AS rank_b,
-        | CAST(rank_a - rank_b AS BIGINT) AS rank_delta
-        |FROM ra JOIN rb USING (item)""".stripMargin,
-
-    // q236: identical day integers, observed-pair join, pinned r chain.
-    "q236_autocorr" ->
-      """WITH d AS (
-        | SELECT event_type, epoch_ms(ts) // 1000 // 86400 AS day, count(*) AS c
-        | FROM events GROUP BY 1, 2),
-        |p AS (
-        | SELECT a.event_type, a.c AS x, b.c AS y
-        | FROM d a JOIN d b ON a.event_type = b.event_type AND b.day = a.day + 7),
-        |s AS (
-        | SELECT event_type, count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-        |  sum(x * y) AS sxy, sum(x * x) AS sxx, sum(y * y) AS syy
-        | FROM p GROUP BY 1)
-        |SELECT event_type, CAST(7 AS BIGINT) AS lag_days, CAST(n AS BIGINT) AS n_pairs,
-        | CASE WHEN n * sxx - sx * sx <= 0 OR n * syy - sy * sy <= 0 THEN NULL
-        |  ELSE CAST(floor((1000000.0 * (n * sxy - sx * sy))
-        |   / (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy))) AS BIGINT)
-        | END AS r_ppm
-        |FROM s""".stripMargin,
-
-    // q237: md5 hex agrees across engines (q12 precedent); the q207
-    // tokenizer; distincts over the same normalized fields.
-    "q237_dataset_card" ->
-      """WITH d AS (
-        | SELECT lang, source, md5(trim(lower(coalesce(text, '')))) AS fp,
-        |  CAST(coalesce(length(coalesce(text, '')), 0) AS BIGINT) AS c,
-        |  CAST(coalesce(len(list_filter(string_split_regex(coalesce(text, ''), '\s+'),
-        |   x -> len(x) > 0)), 0) AS BIGINT) AS w,
-        |  CAST(len(regexp_extract_all(coalesce(text, ''),
-        |   '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS t
-        | FROM documents)
-        |SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-        | CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
-        | CAST(count(DISTINCT fp) AS BIGINT) AS n_distinct,
-        | CAST(sum(c) AS BIGINT) AS total_chars,
-        | CAST(sum(w) AS BIGINT) AS total_words,
-        | CAST(sum(t) AS BIGINT) AS total_tokens,
-        | CAST((1000000 * (count(*) - count(DISTINCT fp))) // count(*) AS BIGINT) AS dup_ppm,
-        | CAST((1000 * sum(w)) // count(*) AS BIGINT) AS mean_words_milli,
-        | CASE WHEN sum(w) = 0 THEN 0
-        |  ELSE CAST((1000000 * sum(t)) // sum(w) AS BIGINT) END AS fertility_ppm
-        |FROM d""".stripMargin,
-
-    // q238: identical day integers and lower-quantile rank picks.
-    "q238_daily_bands" ->
-      """WITH r AS (
-        | SELECT epoch_ms(ts) // 1000 // 86400 AS day,
-        |  CAST(round(value * 100) AS BIGINT) AS v,
-        |  row_number() OVER (PARTITION BY epoch_ms(ts) // 1000 // 86400
-        |   ORDER BY CAST(round(value * 100) AS BIGINT)) AS rk,
-        |  count(*) OVER (PARTITION BY epoch_ms(ts) // 1000 // 86400) AS n
-        | FROM events)
-        |SELECT day, CAST(max(n) AS BIGINT) AS n,
-        | CAST(max(CASE WHEN rk = ((10 * (n - 1)) // 100) + 1 THEN v END) AS BIGINT) AS p10,
-        | CAST(max(CASE WHEN rk = ((50 * (n - 1)) // 100) + 1 THEN v END) AS BIGINT) AS p50,
-        | CAST(max(CASE WHEN rk = ((90 * (n - 1)) // 100) + 1 THEN v END) AS BIGINT) AS p90
-        |FROM r GROUP BY 1""".stripMargin,
-
-    // q239: cross-multiplied lift keeps every comparison in integers.
-    "q239_segment_lift" ->
-      """WITH s AS (
-        | SELECT event_type, count(*) AS n_rows,
-        |  sum(CASE WHEN CAST(json_extract_string(props, '$.k') AS BIGINT) >= 50
-        |   THEN 1 ELSE 0 END) AS n_flagged
-        | FROM events GROUP BY 1),
-        |g AS (SELECT sum(n_rows) AS n, sum(n_flagged) AS k FROM s)
-        |SELECT event_type, CAST(n_rows AS BIGINT) AS n_rows,
-        | CAST(n_flagged AS BIGINT) AS n_flagged,
-        | CAST((1000000 * n_flagged) // n_rows AS BIGINT) AS rate_ppm,
-        | CAST((1000000 * k) // n AS BIGINT) AS global_rate_ppm,
-        | CASE WHEN k = 0 THEN NULL
-        |  ELSE CAST((1000000 * n_flagged * n) // (n_rows * k) AS BIGINT) END AS lift_ppm
-        |FROM s CROSS JOIN g""".stripMargin,
-
-    // q240: distinct units first (exposure-event double-counting is the
-    // classic SRM false alarm), then the exact milli chi-square.
-    "q240_srm_check" ->
-      """WITH u AS (
-        | SELECT DISTINCT user_id,
-        |  CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END AS t
-        | FROM events),
-        |s AS (SELECT sum(t) AS n_t, sum(1 - t) AS n_c FROM u)
-        |SELECT CAST(n_t AS BIGINT) AS n_t, CAST(n_c AS BIGINT) AS n_c,
-        | CAST((1000 * (n_t - n_c) * (n_t - n_c)) // (n_t + n_c) AS BIGINT) AS chisq_milli,
-        | ((1000 * (n_t - n_c) * (n_t - n_c)) // (n_t + n_c)) >= 3841 AS srm_suspect
-        |FROM s""".stripMargin,
-
-    // q241: the q14 lang-ID oracle as a CTE, crossed with the recorded
-    // label; shares over a labels-bounded total.
-    "q241_lang_confusion" ->
-      s"""WITH g AS ($langIdOracle),
-         |cells AS (
-         | SELECT d.lang, g.lang_guess, count(*) AS n
-         | FROM documents d JOIN g ON d.doc_id = g.doc_id GROUP BY 1, 2),
-         |t AS (SELECT lang, sum(n) AS tot FROM cells GROUP BY 1)
-         |SELECT c.lang, c.lang_guess, CAST(c.n AS BIGINT) AS n,
-         | CAST((1000000 * c.n) // t.tot AS BIGINT) AS share_ppm
-         |FROM cells c JOIN t USING (lang)""".stripMargin,
-
-    // q242: identical binary-digit size classes and pair mass.
-    "q242_block_profile" ->
-      """WITH b AS (
-        | SELECT substr(c_name, 1, 16) AS blk, count(*) AS sz
-        | FROM customer GROUP BY 1)
-        |SELECT CAST(length(bin(sz)) - 1 AS BIGINT) AS size_class,
-        | CAST(count(*) AS BIGINT) AS n_blocks,
-        | CAST(sum(sz) AS BIGINT) AS n_rows,
-        | CAST(sum((sz * (sz - 1)) // 2) AS BIGINT) AS n_pairs
-        |FROM b GROUP BY 1""".stripMargin,
-
-    // q243: identical gap pairing (per-user lead over seconds + id) and
-    // earlier-state attribution.
-    "q243_time_in_state" ->
-      """WITH g AS (
-        | SELECT event_type AS state, epoch_ms(ts) // 1000 AS s,
-        |  lead(epoch_ms(ts) // 1000) OVER (PARTITION BY user_id
-        |   ORDER BY epoch_ms(ts) // 1000, event_id) AS nxt
-        | FROM events)
-        |SELECT state, CAST(count(*) AS BIGINT) AS n_intervals,
-        | CAST(sum(nxt - s) AS BIGINT) AS total_sec,
-        | CAST((1000 * sum(nxt - s)) // count(*) AS BIGINT) AS mean_sec_milli
-        |FROM g WHERE nxt IS NOT NULL GROUP BY 1""".stripMargin,
-
-    // q244: day − row_number anchors consecutive runs; distinct days
-    // first so multi-event days count once.
-    "q244_daily_streaks" ->
-      """WITH d AS (
-        | SELECT DISTINCT user_id, epoch_ms(ts) // 1000 // 86400 AS day
-        | FROM events),
-        |r AS (
-        | SELECT user_id, day,
-        |  day - row_number() OVER (PARTITION BY user_id ORDER BY day) AS anchor
-        | FROM d),
-        |runs AS (SELECT user_id, anchor, count(*) AS len FROM r GROUP BY 1, 2)
-        |SELECT user_id, CAST(sum(len) AS BIGINT) AS n_active_days,
-        | CAST(max(len) AS BIGINT) AS longest_streak,
-        | CAST(count(*) AS BIGINT) AS n_streaks
-        |FROM runs GROUP BY 1""".stripMargin,
-
-    // q245: identical (df, term) rarity order per doc.
-    "q245_rarest_terms" ->
-      """WITH t AS (
-        | SELECT DISTINCT doc_id,
-        |  unnest(list_filter(string_split_regex(trim(lower(text)), '\s+'),
-        |   w -> len(w) > 0)) AS term
-        | FROM documents),
-        |d AS (SELECT term, count(*) AS df FROM t GROUP BY 1),
-        |r AS (
-        | SELECT t.doc_id, t.term, d.df,
-        |  row_number() OVER (PARTITION BY t.doc_id ORDER BY d.df, t.term) AS rank
-        | FROM t JOIN d USING (term))
-        |SELECT doc_id, term, CAST(df AS BIGINT) AS df, CAST(rank AS BIGINT) AS rank
-        |FROM r WHERE rank <= 3""".stripMargin,
-
-    // q246: identical sorted-distinct-token fingerprints and sorted
-    // member-id strings.
-    "q246_token_sort_dups" ->
-      """WITH f AS (
-        | SELECT CAST(p_partkey AS BIGINT) AS id,
-        |  array_to_string(list_sort(list_distinct(
-        |   list_filter(string_split_regex(trim(lower(p_name)), '\s+'),
-        |    w -> len(w) > 0))), ' ') AS fingerprint
-        | FROM part),
-        |g AS (
-        | SELECT fingerprint, count(*) AS n_records,
-        |  array_to_string(list_sort(list(id)), ',') AS ids
-        | FROM f WHERE length(fingerprint) > 0 GROUP BY 1)
-        |SELECT fingerprint, CAST(n_records AS BIGINT) AS n_records, ids
-        |FROM g WHERE n_records >= 2""".stripMargin,
-
-    // q247: identical UTC day integers, distinct days, per-user min.
-    "q247_cohort_returns" ->
-      """WITH d AS (
-        | SELECT DISTINCT user_id AS u, epoch_ms(ts) // 1000 // 86400 AS day
-        | FROM events),
-        |f AS (SELECT u, min(day) AS first FROM d GROUP BY 1),
-        |per AS (
-        | SELECT d.u, f.first,
-        |  max(CASE WHEN d.day = f.first + 1 THEN 1 ELSE 0 END) AS d1,
-        |  max(CASE WHEN d.day > f.first AND d.day <= f.first + 7 THEN 1 ELSE 0 END) AS d7
-        | FROM d JOIN f USING (u) GROUP BY 1, 2)
-        |SELECT first AS cohort_day, CAST(count(*) AS BIGINT) AS n_users,
-        | CAST(sum(d1) AS BIGINT) AS n_d1, CAST(sum(d7) AS BIGINT) AS n_d7,
-        | CAST((1000000 * sum(d1)) // count(*) AS BIGINT) AS d1_ppm,
-        | CAST((1000000 * sum(d7)) // count(*) AS BIGINT) AS d7_ppm
-        |FROM per GROUP BY 1""".stripMargin,
-
-    // q248: identical (count DESC, user) total order and ⌊n·pct⌋ cut.
-    "q248_power_share" ->
-      """WITH c AS (SELECT user_id AS u, count(*) AS n FROM events GROUP BY 1),
-        |r AS (SELECT u, n, row_number() OVER (ORDER BY n DESC, u) AS rk FROM c),
-        |t AS (SELECT CAST(count(*) AS BIGINT) AS n_users, CAST(sum(n) AS BIGINT) AS n_events FROM c),
-        |k AS (SELECT greatest(1, (n_users * 10000) // 1000000) AS top_users FROM t)
-        |SELECT t.n_users, t.n_events, CAST(k.top_users AS BIGINT) AS top_users,
-        | CAST((SELECT sum(n) FROM r WHERE rk <= k.top_users) AS BIGINT) AS top_events,
-        | CAST((1000000 * (SELECT sum(n) FROM r WHERE rk <= k.top_users)) // t.n_events AS BIGINT)
-        |  AS share_ppm
-        |FROM t CROSS JOIN k""".stripMargin,
-
-    // q249: date subtraction is exact day integers in both engines;
-    // identical lower-quantile rank picks.
-    "q249_fulfillment_lag" ->
-      """WITH s AS (SELECT l_orderkey, min(l_shipdate) AS ship FROM lineitem GROUP BY 1),
-        |l AS (
-        | SELECT o.o_orderpriority AS priority,
-        |  CAST(date_diff('day', o.o_orderdate, s.ship) AS BIGINT) AS d
-        | FROM orders o JOIN s ON o.o_orderkey = s.l_orderkey),
-        |r AS (
-        | SELECT priority, d,
-        |  row_number() OVER (PARTITION BY priority ORDER BY d) AS rk,
-        |  count(*) OVER (PARTITION BY priority) AS n
-        | FROM l)
-        |SELECT priority, CAST(count(*) AS BIGINT) AS n_orders,
-        | CAST((1000 * sum(d)) // count(*) AS BIGINT) AS mean_days_milli,
-        | CAST(max(CASE WHEN rk = ((50 * (n - 1)) // 100) + 1 THEN d END) AS BIGINT) AS p50_days,
-        | CAST(max(CASE WHEN rk = ((90 * (n - 1)) // 100) + 1 THEN d END) AS BIGINT) AS p90_days
-        |FROM r GROUP BY 1""".stripMargin,
-
-    // q250: plain fact⋈dim rollup with integer ppm shares.
-    "q250_brand_returns" ->
-      """SELECT p_brand, CAST(count(*) AS BIGINT) AS n_items,
-        | CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS n_returned,
-        | CAST((1000000 * sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)) // count(*) AS BIGINT)
-        |  AS return_ppm
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY 1""".stripMargin,
-
-    // q251: identical day integers; the explicit Spark floor-division
-    // branches match DuckDB's flooring //.
-    "q251_mann_kendall" ->
-      """WITH d AS (
-        | SELECT event_type, epoch_ms(ts) // 1000 // 86400 AS day,
-        |  CAST(count(*) AS BIGINT) AS c
-        | FROM events GROUP BY 1, 2),
-        |p AS (
-        | SELECT a.event_type,
-        |  CAST(sum(CASE WHEN b.c > a.c THEN 1 WHEN b.c < a.c THEN -1 ELSE 0 END) AS BIGINT) AS s_stat,
-        |  CAST(count(*) AS BIGINT) AS pairs
-        | FROM d a JOIN d b ON a.event_type = b.event_type AND a.day < b.day
-        | GROUP BY 1),
-        |n AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n FROM d GROUP BY 1)
-        |SELECT n.event_type, n.n,
-        | CAST(coalesce(p.s_stat, 0) AS BIGINT) AS s_stat,
-        | CAST(coalesce(p.pairs, 0) AS BIGINT) AS pairs,
-        | CASE WHEN coalesce(p.pairs, 0) = 0 THEN NULL
-        |  ELSE CAST((1000000 * p.s_stat) // p.pairs AS BIGINT)
-        | END AS tau_ppm
-        |FROM n LEFT JOIN p ON n.event_type = p.event_type""".stripMargin,
-
-    // q252: ×2 midranks stay integer in both engines
-    // (2·rank + ties − 1); H's double arithmetic is spelled in the
-    // identical operation order so the floor-milli values agree.
-    "q252_kruskal_wallis" ->
-      """WITH b AS (
-        | SELECT event_type,
-        |  (epoch_ms(ts) // 1000 // 86400 + 4) % 7 AS dow,
-        |  CAST(round(value * 100) AS BIGINT) AS cents
-        | FROM events),
-        |r AS (
-        | SELECT event_type, dow, cents,
-        |  rank() OVER (PARTITION BY event_type ORDER BY cents) AS rk,
-        |  count(*) OVER (PARTITION BY event_type, cents) AS ct
-        | FROM b),
-        |ps AS (
-        | SELECT event_type, dow, CAST(count(*) AS BIGINT) AS nj,
-        |  CAST(sum(2 * rk + ct - 1) AS BIGINT) AS r2j
-        | FROM r GROUP BY 1, 2),
-        |pg AS (
-        | SELECT event_type, CAST(count(*) AS BIGINT) AS k,
-        |  CAST(sum(nj) AS BIGINT) AS n,
-        |  sum(CAST(r2j AS DOUBLE) * r2j / nj) AS sr
-        | FROM ps GROUP BY 1),
-        |t AS (
-        | SELECT event_type, CAST(sum(ct * ct * ct - ct) AS BIGINT) AS tie3
-        | FROM (SELECT event_type, cents, CAST(count(*) AS BIGINT) AS ct
-        |       FROM b GROUP BY 1, 2) GROUP BY 1)
-        |SELECT pg.event_type, pg.k, pg.n,
-        | CASE WHEN pg.n < 2 OR pg.k < 2 THEN NULL
-        |  ELSE CAST(floor(1000.0 * (3.0 * sr / (n * (n + 1)) - 3.0 * (n + 1))) AS BIGINT)
-        | END AS h_milli,
-        | CASE WHEN pg.n < 2 OR pg.k < 2
-        |   OR 1.0 - tie3 / (CAST(n AS DOUBLE) * n * n - n) <= 0.0 THEN NULL
-        |  ELSE CAST(floor(1000.0 * (3.0 * sr / (n * (n + 1)) - 3.0 * (n + 1)) /
-        |   (1.0 - tie3 / (CAST(n AS DOUBLE) * n * n - n))) AS BIGINT)
-        | END AS h_adj_milli
-        |FROM pg JOIN t ON pg.event_type = t.event_type""".stripMargin,
-
-    // q253: identical distinct (basket, item) projection and integer
-    // truncated quotients in both engines.
-    "q253_assoc_rules" ->
-      """WITH i AS (SELECT DISTINCT l_orderkey AS b, l_partkey AS it FROM lineitem),
-        |ic AS (SELECT it, CAST(count(*) AS BIGINT) AS c FROM i GROUP BY 1),
-        |nb AS (SELECT CAST(count(DISTINCT b) AS BIGINT) AS n_baskets FROM i),
-        |p AS (
-        | SELECT a.it AS item_a, c.it AS item_b, CAST(count(*) AS BIGINT) AS n_ab
-        | FROM i a JOIN i c ON a.b = c.b AND a.it < c.it
-        | GROUP BY 1, 2 HAVING count(*) >= 2)
-        |SELECT p.item_a, p.item_b, p.n_ab,
-        | ca.c AS n_a, cb.c AS n_b, nb.n_baskets,
-        | CAST((1000000 * p.n_ab) // nb.n_baskets AS BIGINT) AS support_ppm,
-        | CAST((1000000 * p.n_ab) // ca.c AS BIGINT) AS conf_a_b_ppm,
-        | CAST((1000000 * p.n_ab) // cb.c AS BIGINT) AS conf_b_a_ppm,
-        | CAST((1000 * nb.n_baskets * p.n_ab) // (ca.c * cb.c) AS BIGINT) AS lift_milli
-        |FROM p JOIN ic ca ON p.item_a = ca.it
-        | JOIN ic cb ON p.item_b = cb.it CROSS JOIN nb""".stripMargin,
-
-    // q254: same canonical undirected edge set as the other doc-chain
-    // graph oracles; the symmetrized Pearson needs no sqrt, so the
-    // ratio is a plain integer quotient in both engines.
-    "q254_assortativity" ->
-      """WITH b AS (SELECT doc_id AS a FROM documents WHERE doc_id % 20 = 0),
-        |edges0 AS (
-        | SELECT a AS u, a + 1 AS v FROM b
-        | UNION ALL SELECT a + 1, a + 2 FROM b
-        | UNION ALL SELECT a, a + 5 FROM b
-        | UNION ALL SELECT a + 5, a + 22 FROM b WHERE a % 40 = 0),
-        |e AS (SELECT DISTINCT least(u, v) AS x, greatest(u, v) AS y FROM edges0),
-        |und AS (SELECT x AS id FROM e UNION ALL SELECT y FROM e),
-        |deg AS (SELECT id, CAST(count(*) AS BIGINT) AS d FROM und GROUP BY 1),
-        |s AS (
-        | SELECT CAST(count(*) AS BIGINT) AS m,
-        |  CAST(sum(da.d * db.d) AS BIGINT) AS sjk,
-        |  CAST(sum(da.d + db.d) AS BIGINT) AS sj,
-        |  CAST(sum(da.d * da.d + db.d * db.d) AS BIGINT) AS sq
-        | FROM e JOIN deg da ON e.x = da.id JOIN deg db ON e.y = db.id)
-        |SELECT m,
-        | CAST(4 * m * sjk - sj * sj AS BIGINT) AS r_num,
-        | CAST(2 * m * sq - sj * sj AS BIGINT) AS r_den,
-        | CASE WHEN 2 * m * sq - sj * sj = 0 THEN NULL
-        |  ELSE CAST((1000000 * (4 * m * sjk - sj * sj)) // (2 * m * sq - sj * sj) AS BIGINT)
-        | END AS r_ppm
-        |FROM s""".stripMargin,
-
-    // q255: the same anchored regexes (syntax valid in both Java regex
-    // and RE2 with identical semantics); precedence order is the CASE
-    // order; strftime mirrors date_format's literal pattern.
-    "q255_type_sniff" ->
-      """WITH src AS (
-        | SELECT CAST(event_id AS VARCHAR) AS c_id,
-        |  event_type AS c_type,
-        |  strftime(ts, '%Y-%m-%d %H:%M:%S') AS c_ts,
-        |  props AS c_props,
-        |  CASE WHEN user_id % 2 = 0 THEN 'true' ELSE 'false' END AS c_flag,
-        |  CASE WHEN value < 50 THEN CAST(CAST(round(value * 100) AS BIGINT) AS VARCHAR) END AS c_mixed
-        | FROM events),
-        |m AS (
-        | SELECT column_name, v FROM (
-        |  SELECT unnest(['c_id','c_type','c_ts','c_props','c_flag','c_mixed']) AS column_name,
-        |   unnest([c_id, c_type, c_ts, c_props, c_flag, c_mixed]) AS v
-        |  FROM src)),
-        |c AS (
-        | SELECT column_name,
-        |  CASE WHEN v IS NULL THEN 'null'
-        |   WHEN v = '' THEN 'empty'
-        |   WHEN regexp_matches(v, '^[+-]?[0-9]+$') THEN 'int'
-        |   WHEN regexp_matches(v, '^[+-]?[0-9]+\.[0-9]+$') THEN 'float'
-        |   WHEN lower(v) IN ('true', 'false') THEN 'bool'
-        |   WHEN regexp_matches(v, '^[0-9]{4}-[0-9]{2}-[0-9]{2}$') THEN 'date'
-        |   WHEN regexp_matches(v, '^[0-9]{4}-[0-9]{2}-[0-9]{2}[ T][0-9]{2}:[0-9]{2}:[0-9]{2}(\.[0-9]+)?$') THEN 'datetime'
-        |   WHEN regexp_matches(v, '^\{.*\}$') THEN 'json'
-        |   ELSE 'other' END AS inferred
-        | FROM m)
-        |SELECT column_name, inferred, CAST(count(*) AS BIGINT) AS n
-        |FROM c GROUP BY 1, 2""".stripMargin,
-
-    // q256: identical day integers, suff stats and pinned
-    // divide-and-sqrt order as q236; the argmax window's tie order is
-    // total (r desc, |lag|, lag).
-    "q256_lead_lag" ->
-      """WITH d AS (
-        | SELECT event_type AS g, epoch_ms(ts) // 1000 // 86400 AS day,
-        |  CAST(count(*) AS BIGINT) AS c
-        | FROM events GROUP BY 1, 2),
-        |l AS (SELECT CAST(x AS BIGINT) AS lag FROM range(-7, 8) t(x)),
-        |j AS (
-        | SELECT a.g AS g_a, b.g AS g_b, l.lag,
-        |  CAST(count(*) AS BIGINT) AS n_pairs,
-        |  CAST(sum(a.c) AS BIGINT) AS sx, CAST(sum(b.c) AS BIGINT) AS sy,
-        |  CAST(sum(a.c * b.c) AS BIGINT) AS sxy,
-        |  CAST(sum(a.c * a.c) AS BIGINT) AS sxx,
-        |  CAST(sum(b.c * b.c) AS BIGINT) AS syy
-        | FROM d a CROSS JOIN l JOIN d b ON a.day + l.lag = b.day AND a.g < b.g
-        | GROUP BY 1, 2, 3),
-        |v AS (
-        | SELECT g_a, g_b, lag, n_pairs,
-        |  CAST(floor(1000000.0 * (n_pairs * sxy - sx * sy) /
-        |   (sqrt(CAST(n_pairs * sxx - sx * sx AS DOUBLE)) *
-        |    sqrt(CAST(n_pairs * syy - sy * sy AS DOUBLE)))) AS BIGINT) AS r_ppm
-        | FROM j
-        | WHERE n_pairs * sxx - sx * sx > 0 AND n_pairs * syy - sy * sy > 0)
-        |SELECT g_a, g_b, CAST(lag AS BIGINT) AS best_lag, n_pairs, r_ppm FROM (
-        | SELECT *, row_number() OVER (PARTITION BY g_a, g_b
-        |   ORDER BY r_ppm DESC, abs(lag), lag) AS rn FROM v)
-        |WHERE rn = 1""".stripMargin,
-
-    // q257: integer slope parts; R² is the squared Pearson — no sqrt —
-    // with the one double division in the identical operation order.
-    "q257_trend_fit" ->
-      """WITH mrev AS (
-        | SELECT c.c_nationkey AS nation,
-        |  year(o.o_orderdate) * 12 + month(o.o_orderdate) AS m,
-        |  CAST(sum(CAST(floor(o.o_totalprice) AS BIGINT)) AS BIGINT) AS rev
-        | FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        | GROUP BY 1, 2),
-        |s AS (
-        | SELECT nation, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(m) AS BIGINT) AS sx, CAST(sum(rev) AS BIGINT) AS sy,
-        |  CAST(sum(m * rev) AS BIGINT) AS sxy,
-        |  CAST(sum(m * m) AS BIGINT) AS sxx,
-        |  CAST(sum(rev * rev) AS BIGINT) AS syy
-        | FROM mrev GROUP BY 1)
-        |SELECT nation, n,
-        | CAST(n * sxy - sx * sy AS BIGINT) AS slope_num,
-        | CAST(n * sxx - sx * sx AS BIGINT) AS slope_den,
-        | CASE WHEN n * sxx - sx * sx <= 0 OR n * syy - sy * sy <= 0 THEN NULL
-        |  ELSE CAST(floor(1000000.0 * (n * sxy - sx * sy) * (n * sxy - sx * sy) /
-        |   (CAST(n * sxx - sx * sx AS DOUBLE) * (n * syy - sy * sy))) AS BIGINT)
-        | END AS r2_ppm
-        |FROM s""".stripMargin,
-
-    // q258: identical day integers, (rank-1)//4 window ids, (1000·Σ)//n
-    // PAA truncation, same breakpoint counts, ordered string_agg word.
-    "q258_sax" ->
-      """WITH d AS (
-        | SELECT user_id, epoch_ms(ts) // 1000 // 86400 AS day, count(*) AS c
-        | FROM events GROUP BY 1, 2),
-        |r AS (
-        | SELECT user_id, c,
-        |  (row_number() OVER (PARTITION BY user_id ORDER BY day) - 1) // 4 AS win
-        | FROM d),
-        |p AS (
-        | SELECT user_id, win, (1000 * sum(c)) // count(*) AS paa,
-        |  count(*) AS n
-        | FROM r GROUP BY 1, 2),
-        |s AS (
-        | SELECT user_id, win, n,
-        |  chr(97 + CASE WHEN paa >= 1500 THEN 1 ELSE 0 END
-        |   + CASE WHEN paa >= 2500 THEN 1 ELSE 0 END
-        |   + CASE WHEN paa >= 4000 THEN 1 ELSE 0 END) AS sym
-        | FROM p)
-        |SELECT user_id, CAST(count(*) AS BIGINT) AS n_windows,
-        | CAST(sum(n) AS BIGINT) AS n_points,
-        | string_agg(sym, '' ORDER BY win) AS sax_word
-        |FROM s GROUP BY 1""".stripMargin,
-
-    // q259: rational diversity — both engines truncate the div.
-    "q259_simpson" ->
-      """WITH c AS (
-        | SELECT user_id, event_type, count(*) AS n FROM events GROUP BY 1, 2),
-        |s AS (
-        | SELECT user_id, CAST(count(*) AS BIGINT) AS n_categories,
-        |  CAST(sum(n) AS BIGINT) AS n_rows, CAST(sum(n * n) AS BIGINT) AS s2
-        | FROM c GROUP BY 1)
-        |SELECT user_id, n_categories, n_rows,
-        | CAST((1000000 * (n_rows * n_rows - s2)) // (n_rows * n_rows) AS BIGINT)
-        |  AS gini_simpson_ppm,
-        | CAST((1000 * n_rows * n_rows) // s2 AS BIGINT) AS effective_cats_milli
-        |FROM s""".stripMargin,
-
-    // q260: identical md5-prefix order (lowercase hex both engines), same
-    // whitespace tokenizer, same union-rank estimator.
-    "q260_bottomk_jaccard" ->
-      """WITH e AS (
-        | SELECT DISTINCT g, substring(md5(tok), 1, 16) AS h FROM (
-        |  SELECT source AS g,
-        |   unnest(list_filter(string_split_regex(lower(coalesce(text, '')), '\s+'),
-        |    x -> len(x) > 0)) AS tok
-        |  FROM documents)),
-        |sk AS (
-        | SELECT g, h FROM (
-        |  SELECT g, h, row_number() OVER (PARTITION BY g ORDER BY h) AS rn FROM e)
-        | WHERE rn <= 256),
-        |gs AS (SELECT DISTINCT g FROM sk),
-        |p AS (SELECT a.g AS ga, b.g AS gb FROM gs a JOIN gs b ON a.g < b.g),
-        |m AS (
-        | SELECT ga, gb, h,
-        |  max(CASE WHEN s.g = ga THEN 1 ELSE 0 END) AS ina,
-        |  max(CASE WHEN s.g = gb THEN 1 ELSE 0 END) AS inb
-        | FROM p JOIN sk s ON s.g = ga OR s.g = gb GROUP BY 1, 2, 3),
-        |u AS (SELECT *, row_number() OVER (PARTITION BY ga, gb ORDER BY h) AS rn FROM m)
-        |SELECT ga AS g_a, gb AS g_b, CAST(count(*) AS BIGINT) AS k_used,
-        | CAST(sum(ina * inb) AS BIGINT) AS n_common,
-        | CAST((1000000 * sum(ina * inb)) // count(*) AS BIGINT) AS jaccard_ppm
-        |FROM u WHERE rn <= 256 GROUP BY 1, 2""".stripMargin,
-
-    // q261: identical (count DESC, user) total order, per-term truncated
-    // ppm precision, one more truncation for the mean — both by spec.
-    "q261_avg_precision" ->
-      """WITH c AS (
-        | SELECT event_type, user_id, count(*) AS n FROM events GROUP BY 1, 2),
-        |r AS (
-        | SELECT event_type, user_id, n,
-        |  CASE WHEN user_id % 3 = 0 THEN 1 ELSE 0 END AS rel,
-        |  row_number() OVER (PARTITION BY event_type ORDER BY n DESC, user_id) AS rn
-        | FROM c),
-        |t AS (
-        | SELECT *, sum(rel) OVER (PARTITION BY event_type ORDER BY rn) AS relcnt
-        | FROM r WHERE rn <= 20)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n_ranked,
-        | CAST(sum(rel) AS BIGINT) AS n_rel,
-        | CASE WHEN sum(rel) = 0 THEN NULL ELSE
-        |  CAST(sum(CASE WHEN rel = 1 THEN (1000000 * relcnt) // rn ELSE 0 END)
-        |   // least(sum(rel), 20) AS BIGINT) END AS ap_ppm
-        |FROM t GROUP BY 1""".stripMargin,
-
-    // q262: same q199 co-order graph, same deterministic 64-smallest-ids
-    // cap before the wedge join, exact degrees, edge flag via left join.
-    "q262_link_jaccard" ->
-      """WITH li AS (
-        | SELECT l_orderkey, l_partkey FROM lineitem WHERE l_partkey % 4 = 0),
-        |e AS (
-        | SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        | FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-        |sym AS (SELECT u AS src, v AS dst FROM e UNION SELECT v, u FROM e),
-        |deg AS (SELECT src AS id, CAST(count(*) AS BIGINT) AS d FROM sym GROUP BY 1),
-        |cap AS (SELECT src, dst FROM (
-        | SELECT src, dst, row_number() OVER (PARTITION BY src ORDER BY dst) AS rn
-        | FROM sym) WHERE rn <= 64),
-        |cn AS (
-        | SELECT a.dst AS u, b.dst AS v, CAST(count(*) AS BIGINT) AS n_common
-        | FROM cap a JOIN cap b ON a.src = b.src AND a.dst < b.dst
-        | GROUP BY 1, 2)
-        |SELECT cn.u AS a_id, cn.v AS b_id, cn.n_common,
-        | da.d AS deg_a, db.d AS deg_b,
-        | coalesce(ed.is_e, false) AS is_edge,
-        | CAST((1000000 * cn.n_common) // (da.d + db.d - cn.n_common) AS BIGINT)
-        |  AS jaccard_ppm
-        |FROM cn
-        |JOIN deg da ON da.id = cn.u
-        |JOIN deg db ON db.id = cn.v
-        |LEFT JOIN (SELECT u, v, true AS is_e FROM e) ed
-        | ON ed.u = cn.u AND ed.v = cn.v
-        |WHERE cn.n_common >= 2""".stripMargin,
-
-    // q263: same sparse derivations; three pair rows via UNION ALL over
-    // one aggregate row.
-    "q263_conull" ->
-      """WITH d AS (
-        | SELECT
-        |  CASE WHEN CAST(json_extract_string(props, '$.k') AS BIGINT) % 2 = 0
-        |   THEN CAST(json_extract_string(props, '$.k') AS BIGINT) END AS k_even,
-        |  CASE WHEN event_type = 'purchase' THEN 1 END AS purchase_flag,
-        |  CASE WHEN user_id % 5 = 0 THEN user_id END AS cohort_tag
-        | FROM events),
-        |a AS (
-        | SELECT CAST(count(*) AS BIGINT) AS n,
-        |  CAST(count(CASE WHEN k_even IS NULL THEN 1 END) AS BIGINT) AS nk,
-        |  CAST(count(CASE WHEN purchase_flag IS NULL THEN 1 END) AS BIGINT) AS np,
-        |  CAST(count(CASE WHEN cohort_tag IS NULL THEN 1 END) AS BIGINT) AS nc,
-        |  CAST(count(CASE WHEN k_even IS NULL AND purchase_flag IS NULL THEN 1 END) AS BIGINT) AS bkp,
-        |  CAST(count(CASE WHEN k_even IS NULL AND cohort_tag IS NULL THEN 1 END) AS BIGINT) AS bkc,
-        |  CAST(count(CASE WHEN purchase_flag IS NULL AND cohort_tag IS NULL THEN 1 END) AS BIGINT) AS bpc
-        | FROM d),
-        |p AS (
-        | SELECT 'k_even' AS col_a, 'purchase_flag' AS col_b, n, nk AS null_a, np AS null_b, bkp AS both_null FROM a
-        | UNION ALL
-        | SELECT 'k_even', 'cohort_tag', n, nk, nc, bkc FROM a
-        | UNION ALL
-        | SELECT 'purchase_flag', 'cohort_tag', n, np, nc, bpc FROM a)
-        |SELECT col_a, col_b, n AS n_rows, null_a, null_b, both_null,
-        | CAST((1000000 * both_null) // n AS BIGINT) AS conull_ppm,
-        | CASE WHEN null_a = 0 OR null_b = 0 THEN NULL
-        |  ELSE CAST((1000 * both_null * n) // (null_a * null_b) AS BIGINT)
-        | END AS lift_milli
-        |FROM p""".stripMargin,
-
-    // q264: identical epoch-day/week integers and distinct-triple base.
-    "q264_stickiness" ->
-      """WITH t AS (
-        | SELECT DISTINCT (epoch_ms(ts) // 1000 // 86400) // 7 AS week,
-        |  epoch_ms(ts) // 1000 // 86400 AS day, user_id AS a
-        | FROM events),
-        |d AS (SELECT week, day, count(*) AS dau FROM t GROUP BY 1, 2),
-        |w AS (SELECT week, count(*) AS nd, sum(dau) AS sd FROM d GROUP BY 1),
-        |u AS (SELECT week, count(DISTINCT a) AS wau FROM t GROUP BY 1)
-        |SELECT CAST(w.week AS BIGINT) AS week, CAST(nd AS BIGINT) AS n_active_days,
-        | CAST(wau AS BIGINT) AS wau, CAST(sd // nd AS BIGINT) AS mean_dau,
-        | CAST((1000000 * sd) // (nd * wau) AS BIGINT) AS stickiness_ppm
-        |FROM w JOIN u USING (week)""".stripMargin,
-
-    // q265: same tokenizer, same md5-prefix buckets, counts only.
-    "q265_hash_profile" ->
-      """WITH v AS (
-        | SELECT DISTINCT tok FROM (
-        |  SELECT unnest(list_filter(string_split_regex(lower(coalesce(text, '')), '\s+'),
-        |   x -> len(x) > 0)) AS tok
-        |  FROM documents)),
-        |b AS (SELECT substring(md5(tok), 1, 2) AS bk, count(*) AS load FROM v GROUP BY 1)
-        |SELECT CAST(load AS BIGINT) AS load, CAST(count(*) AS BIGINT) AS n_buckets,
-        | CAST(load * count(*) AS BIGINT) AS n_values
-        |FROM b GROUP BY load""".stripMargin,
-
-    // q266: q89's adjacency/cap CTEs; harmonic weights in exact ppm.
-    "q266_harmonic" ->
-      """WITH li AS (
-        | SELECT l_orderkey, l_partkey FROM lineitem WHERE l_partkey % 4 = 0),
-        |e AS (
-        | SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        | FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-        |sym AS (SELECT u AS src, v AS dst FROM e UNION SELECT v, u FROM e),
-        |mid AS (
-        | SELECT src, dst FROM (
-        |  SELECT src, dst, row_number() OVER (PARTITION BY src ORDER BY dst) AS rn FROM sym)
-        | WHERE rn <= 64),
-        |two AS (
-        | SELECT p.src, q.dst FROM sym p JOIN mid q ON p.dst = q.src WHERE p.src <> q.dst
-        | UNION SELECT src, dst FROM sym)
-        |SELECT o.src AS id, CAST(o.n1 AS BIGINT) AS n_1hop, CAST(t.n2 AS BIGINT) AS n_2hop,
-        | CAST(1000000 * o.n1 + 500000 * (t.n2 - o.n1) AS BIGINT) AS harmonic2_ppm
-        |FROM (SELECT src, count(*) AS n1 FROM sym GROUP BY 1) o
-        | JOIN (SELECT src, count(*) AS n2 FROM two GROUP BY 1) t USING (src)""".stripMargin,
-
-    // q267: distinct (segment, actor) base, actor-keyed pair counts.
-    "q267_audience_overlap" ->
-      """WITH sa AS (SELECT DISTINCT event_type AS s, user_id AS a FROM events),
-        |sz AS (SELECT s, CAST(count(*) AS BIGINT) AS n FROM sa GROUP BY 1),
-        |i AS (
-        | SELECT x.s AS seg_a, y.s AS seg_b, CAST(count(*) AS BIGINT) AS n_common
-        | FROM sa x JOIN sa y ON x.a = y.a AND x.s < y.s GROUP BY 1, 2)
-        |SELECT seg_a, seg_b, za.n AS size_a, zb.n AS size_b, n_common,
-        | CAST((1000000 * n_common) // (za.n + zb.n - n_common) AS BIGINT) AS jaccard_ppm,
-        | CAST((1000000 * n_common) // least(za.n, zb.n) AS BIGINT) AS overlap_ppm
-        |FROM i JOIN sz za ON za.s = seg_a JOIN sz zb ON zb.s = seg_b""".stripMargin,
-
-    // q268: DuckDB nfc_normalize vs the native kernel — same NFC form.
-    "q268_nfc_audit" ->
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(count(CASE WHEN nfc_normalize(coalesce(text, '')) <> coalesce(text, '')
-        |  THEN 1 END) AS BIGINT) AS n_non_nfc,
-        | CAST(sum(length(coalesce(text, ''))
-        |  - length(nfc_normalize(coalesce(text, '')))) AS BIGINT) AS char_delta,
-        | CAST((1000000 * count(CASE WHEN nfc_normalize(coalesce(text, '')) <> coalesce(text, '')
-        |  THEN 1 END)) // count(*) AS BIGINT) AS non_nfc_ppm
-        |FROM documents GROUP BY lang""".stripMargin,
-
-    // q269: the separator-variant Soundex rebuilt in backreference-free
-    // SQL — translate to digit classes, collapse runs by repeated
-    // pair-replace (6 rounds collapse runs to 64), drop the first
-    // collapsed digit, strip zeros, pad. Same variant as the kernel BY
-    // CONSTRUCTION (h/w separate; see StringKernels.soundexSep).
-    "q269_soundex" -> {
-      // 6 rounds of replace('dd','d') per digit: each round halves run
-      // lengths, so runs up to 2^6 collapse — far beyond any p_name.
-      val collapsed = (1 to 6).foldLeft("m") { (acc, _) =>
-        (0 to 6).foldLeft(acc)((a, d) => s"replace($a, '$d$d', '$d')")
-      }
-      s"""WITH b AS (
-         | SELECT p_name,
-         |  upper(regexp_replace(p_name, '[^A-Za-z]', '', 'g')) AS u
-         | FROM part),
-         |t AS (
-         | SELECT p_name, u,
-         |  translate(u, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ',
-         |   '01230120022455012623010202') AS m
-         | FROM b),
-         |c AS (SELECT p_name, u, $collapsed AS mc FROM t),
-         |sx AS (
-         | SELECT p_name,
-         |  CASE WHEN u = '' THEN ''
-         |   ELSE substring(u, 1, 1) ||
-         |    substring(replace(substring(mc, 2), '0', '') || '000', 1, 3)
-         |  END AS sx
-         | FROM c)
-         |SELECT sx, CAST(count(*) AS BIGINT) AS n_parts,
-         | CAST(count(DISTINCT p_name) AS BIGINT) AS n_distinct_names
-         |FROM sx GROUP BY sx""".stripMargin
-    },
-
-    // q270: identical (ms, event_id) total order and first/last picks.
-    "q270_ohlc" ->
-      """WITH r AS (
-        | SELECT event_type, epoch_ms(ts) // 1000 // 86400 AS period,
-        |  CAST(round(value * 100) AS BIGINT) AS v, epoch_ms(ts) AS ms, event_id
-        | FROM events),
-        |w AS (
-        | SELECT event_type, period, v,
-        |  row_number() OVER (PARTITION BY event_type, period ORDER BY ms, event_id) AS rn,
-        |  count(*) OVER (PARTITION BY event_type, period) AS n
-        | FROM r)
-        |SELECT event_type, CAST(period AS BIGINT) AS period,
-        | CAST(count(*) AS BIGINT) AS volume,
-        | CAST(max(CASE WHEN rn = 1 THEN v END) AS BIGINT) AS open,
-        | CAST(max(v) AS BIGINT) AS high, CAST(min(v) AS BIGINT) AS low,
-        | CAST(max(CASE WHEN rn = n THEN v END) AS BIGINT) AS close
-        |FROM w GROUP BY 1, 2""".stripMargin,
-
-    // q271: same histogram prefix-sum and lower-element percentile picks.
-    "q271_fanout" ->
-      """WITH c AS (SELECT l_orderkey, count(*) AS f FROM lineitem GROUP BY 1),
-        |h AS (SELECT f, count(*) AS nk FROM c GROUP BY 1),
-        |r AS (SELECT f, nk, sum(nk) OVER (ORDER BY f) AS cum FROM h),
-        |t AS (SELECT sum(nk) AS ks, sum(f * nk) AS rs, max(f) AS mx FROM h)
-        |SELECT CAST(ks AS BIGINT) AS n_keys, CAST(rs AS BIGINT) AS n_rows,
-        | CAST(mx AS BIGINT) AS max_fanout,
-        | CAST(min(CASE WHEN cum >= ((50 * (ks - 1)) // 100) + 1 THEN f END) AS BIGINT)
-        |  AS p50_fanout,
-        | CAST(min(CASE WHEN cum >= ((90 * (ks - 1)) // 100) + 1 THEN f END) AS BIGINT)
-        |  AS p90_fanout,
-        | CAST((1000 * rs) // ks AS BIGINT) AS mean_fanout_milli
-        |FROM r, t GROUP BY ks, rs, mx""".stripMargin,
-
-    // q272: identical explicit ranges; dominant by the same fixed
-    // precedence (latin > cyrillic > greek > cjk > arabic > digit).
-    "q272_script_profile" ->
-      """WITH s AS (
-        | SELECT lang,
-        |  CAST(length(regexp_replace(coalesce(text, ''), '[^A-Za-zÀ-ɏ]', '', 'g')) AS BIGINT) AS cl,
-        |  CAST(length(regexp_replace(coalesce(text, ''), '[^Ѐ-ӿ]', '', 'g')) AS BIGINT) AS cc,
-        |  CAST(length(regexp_replace(coalesce(text, ''), '[^Ͱ-Ͽ]', '', 'g')) AS BIGINT) AS cg,
-        |  CAST(length(regexp_replace(coalesce(text, ''), '[^一-鿿぀-ヿ]', '', 'g')) AS BIGINT) AS cj,
-        |  CAST(length(regexp_replace(coalesce(text, ''), '[^؀-ۿ]', '', 'g')) AS BIGINT) AS ca,
-        |  CAST(length(regexp_replace(coalesce(text, ''), '[^0-9]', '', 'g')) AS BIGINT) AS cd
-        | FROM documents),
-        |a AS (
-        | SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(cl) AS BIGINT) AS n_latin, CAST(sum(cc) AS BIGINT) AS n_cyrillic,
-        |  CAST(sum(cg) AS BIGINT) AS n_greek, CAST(sum(cj) AS BIGINT) AS n_cjk,
-        |  CAST(sum(ca) AS BIGINT) AS n_arabic, CAST(sum(cd) AS BIGINT) AS n_digit
-        | FROM s GROUP BY 1)
-        |SELECT *,
-        | CASE WHEN greatest(n_latin, n_cyrillic, n_greek, n_cjk, n_arabic, n_digit) = 0
-        |   THEN 'none'
-        |  WHEN n_latin = greatest(n_latin, n_cyrillic, n_greek, n_cjk, n_arabic, n_digit)
-        |   THEN 'latin'
-        |  WHEN n_cyrillic = greatest(n_latin, n_cyrillic, n_greek, n_cjk, n_arabic, n_digit)
-        |   THEN 'cyrillic'
-        |  WHEN n_greek = greatest(n_latin, n_cyrillic, n_greek, n_cjk, n_arabic, n_digit)
-        |   THEN 'greek'
-        |  WHEN n_cjk = greatest(n_latin, n_cyrillic, n_greek, n_cjk, n_arabic, n_digit)
-        |   THEN 'cjk'
-        |  WHEN n_arabic = greatest(n_latin, n_cyrillic, n_greek, n_cjk, n_arabic, n_digit)
-        |   THEN 'arabic'
-        |  ELSE 'digit' END AS dominant
-        |FROM a""".stripMargin,
-
-    // q273: same prefix-sum windows, same truncating per-segment SSE,
-    // same (cost, k) argmin order.
-    "q273_changepoint" ->
-      """WITH d AS (
-        | SELECT event_type, epoch_ms(ts) // 1000 // 86400 AS day, count(*) AS c
-        | FROM events GROUP BY 1, 2),
-        |p AS (
-        | SELECT event_type, c,
-        |  count(*) OVER wk AS k, sum(c) OVER wk AS s, sum(c * c) OVER wk AS q,
-        |  count(*) OVER wt AS n, sum(c) OVER wt AS st, sum(c * c) OVER wt AS qt
-        | FROM d
-        | WINDOW wk AS (PARTITION BY event_type ORDER BY day
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-        |  wt AS (PARTITION BY event_type)),
-        |c2 AS (
-        | SELECT *, (1000 * q - (1000 * s * s) // k)
-        |   + (1000 * (qt - q) - (1000 * (st - s) * (st - s)) // (n - k)) AS cost
-        | FROM p WHERE k < n),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY cost, k) AS rn
-        | FROM c2)
-        |SELECT event_type, CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS best_k,
-        | CAST(cost AS BIGINT) AS split_sse_milli,
-        | CAST(1000 * qt - (1000 * st * st) // n AS BIGINT) AS total_sse_milli,
-        | CAST((1000 * qt - (1000 * st * st) // n) - cost AS BIGINT) AS gain_milli
-        |FROM r WHERE rn = 1""".stripMargin,
-
-    // q274: same double-promoted quantization (q52 precedent), same
-    // zero/non-finite flags, truncated mean.
-    "q274_embedding_audit" ->
-      """WITH b AS (
-        | SELECT label, len(embedding) AS dim,
-        |  CAST(list_sum(list_transform(embedding,
-        |   x -> CASE WHEN isnan(CAST(x AS DOUBLE)) OR isinf(CAST(x AS DOUBLE)) THEN 0
-        |         ELSE CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)
-        |            * CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT) END)) AS BIGINT) AS n2,
-        |  len(list_filter(embedding,
-        |   x -> isnan(CAST(x AS DOUBLE)) OR isinf(CAST(x AS DOUBLE)))) > 0 AS bad
-        | FROM embeddings)
-        |SELECT label, CAST(count(*) AS BIGINT) AS n_vectors,
-        | CAST(count(DISTINCT dim) AS BIGINT) AS n_dims_distinct,
-        | CAST(min(dim) AS BIGINT) AS dim_min, CAST(max(dim) AS BIGINT) AS dim_max,
-        | CAST(count(CASE WHEN n2 = 0 THEN 1 END) AS BIGINT) AS n_zero,
-        | CAST(count(CASE WHEN bad THEN 1 END) AS BIGINT) AS n_nonfinite,
-        | CAST(min(n2) AS BIGINT) AS norm2q_min, CAST(max(n2) AS BIGINT) AS norm2q_max,
-        | CAST(sum(n2) // count(*) AS BIGINT) AS norm2q_mean
-        |FROM b GROUP BY label""".stripMargin,
-
-    // q275: same tokenizer; Σmax via the tot_a + tot_b − Σmin identity.
-    "q275_weighted_jaccard" ->
-      """WITH w AS (
-        | SELECT source AS g, tok, count(*) AS w FROM (
-        |  SELECT source,
-        |   unnest(list_filter(string_split_regex(lower(coalesce(text, '')), '\s+'),
-        |    x -> len(x) > 0)) AS tok
-        |  FROM documents) GROUP BY 1, 2),
-        |t AS (SELECT g, CAST(sum(w) AS BIGINT) AS tot FROM w GROUP BY 1),
-        |m AS (
-        | SELECT a.g AS g_a, b.g AS g_b, CAST(sum(least(a.w, b.w)) AS BIGINT) AS sum_min
-        | FROM w a JOIN w b ON a.tok = b.tok AND a.g < b.g GROUP BY 1, 2)
-        |SELECT g_a, g_b, ta.tot AS tot_a, tb.tot AS tot_b, sum_min,
-        | CAST((1000000 * sum_min) // (ta.tot + tb.tot - sum_min) AS BIGINT)
-        |  AS wjaccard_ppm
-        |FROM m JOIN t ta ON ta.g = g_a JOIN t tb ON tb.g = g_b""".stripMargin,
-
-    // q276: same mask chain (hex-first so ids don't half-survive digit
-    // masking), same deterministic min() example.
-    "q276_log_templates" ->
-      """WITH msg AS (
-        | SELECT event_type || ' user=' || user_id || ' took ' ||
-        |  CAST(CAST(floor(value) AS BIGINT) AS VARCHAR) || 'ms' ||
-        |  ' props=' || props AS m
-        | FROM events),
-        |t AS (
-        | SELECT regexp_replace(regexp_replace(m, '[0-9a-fA-F]{8,}', '<hex>', 'g'),
-        |   '[0-9]+', '<n>', 'g') AS template, m
-        | FROM msg)
-        |SELECT template, CAST(count(*) AS BIGINT) AS n_msgs,
-        | CAST(count(DISTINCT m) AS BIGINT) AS n_distinct_msgs,
-        | min(m) AS example
-        |FROM t GROUP BY 1""".stripMargin,
-
-    // q277: identical month ints, min-cohort join, per-cohort cumsum.
-    "q277_ltv_curve" ->
-      """WITH b AS (
-        | SELECT o_custkey AS c, year(o_orderdate) * 12 + month(o_orderdate) AS m,
-        |  CAST(round(o_totalprice * 100) AS BIGINT) AS amt
-        | FROM orders),
-        |co AS (SELECT c, min(m) AS cohort_month FROM b GROUP BY 1),
-        |sz AS (SELECT cohort_month, CAST(count(*) AS BIGINT) AS cohort_size
-        | FROM co GROUP BY 1),
-        |ag AS (
-        | SELECT co.cohort_month, b.m - co.cohort_month AS age_months,
-        |  CAST(count(DISTINCT b.c) AS BIGINT) AS n_active,
-        |  CAST(sum(b.amt) AS BIGINT) AS revenue_cents
-        | FROM b JOIN co ON b.c = co.c GROUP BY 1, 2),
-        |cum AS (
-        | SELECT *, sum(revenue_cents) OVER (PARTITION BY cohort_month
-        |   ORDER BY age_months ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |  AS cum_revenue_cents
-        | FROM ag)
-        |SELECT CAST(cohort_month AS BIGINT) AS cohort_month,
-        | CAST(age_months AS BIGINT) AS age_months, n_active, revenue_cents,
-        | cohort_size, CAST(cum_revenue_cents AS BIGINT) AS cum_revenue_cents,
-        | CAST((1000 * cum_revenue_cents) // (100 * cohort_size) AS BIGINT)
-        |  AS cum_rev_per_user_milli
-        |FROM cum JOIN sz USING (cohort_month)""".stripMargin,
-
-    // q278: the reflection identity layered as stacked window passes on
-    // the same (ms, event_id) order.
-    "q278_clamped_balance" ->
-      """WITH d AS (
-        | SELECT user_id, event_id, epoch_ms(ts) AS ms,
-        |  CASE WHEN event_type = 'purchase'
-        |   THEN -3 * CAST(floor(value) AS BIGINT)
-        |   ELSE CAST(floor(value) AS BIGINT) END AS delta
-        | FROM events),
-        |s AS (
-        | SELECT user_id, event_id, ms, delta, sum(delta) OVER w AS rs
-        | FROM d WINDOW w AS (PARTITION BY user_id ORDER BY ms, event_id
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |r AS (
-        | SELECT user_id, event_id, ms, delta, rs, min(rs) OVER w AS rmin
-        | FROM s WINDOW w AS (PARTITION BY user_id ORDER BY ms, event_id
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |b AS (
-        | SELECT user_id, event_id, ms, delta,
-        |  rs - least(CAST(0 AS BIGINT), rmin) AS balance
-        | FROM r),
-        |f AS (
-        | SELECT *, coalesce(lag(balance) OVER (PARTITION BY user_id
-        |   ORDER BY ms, event_id), 0) AS prev
-        | FROM b)
-        |SELECT user_id, event_id, delta, CAST(balance AS BIGINT) AS balance,
-        | CAST(CASE WHEN delta < 0 THEN balance - prev - delta ELSE 0 END AS BIGINT)
-        |  AS shortfall
-        |FROM f""".stripMargin,
-
-    // q279: lag-1 month self-join from the base side, min() caps GRR.
-    "q279_revenue_retention" ->
-      """WITH m AS (
-        | SELECT o_custkey AS c, year(o_orderdate) * 12 + month(o_orderdate) AS m,
-        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS rev
-        | FROM orders GROUP BY 1, 2),
-        |j AS (
-        | SELECT p.m + 1 AS month, p.rev AS base, c.rev AS cur
-        | FROM m p LEFT JOIN m c ON c.c = p.c AND c.m = p.m + 1)
-        |SELECT CAST(month AS BIGINT) AS month,
-        | CAST(count(*) AS BIGINT) AS n_base_customers,
-        | CAST(sum(base) AS BIGINT) AS base_cents,
-        | CAST(sum(CASE WHEN cur IS NULL THEN 0 ELSE least(base, cur) END) AS BIGINT)
-        |  AS retained_cents,
-        | CAST(sum(coalesce(cur, 0)) AS BIGINT) AS carried_cents,
-        | CAST(count(CASE WHEN cur IS NULL THEN 1 END) AS BIGINT) AS n_churned,
-        | CAST((1000000 * sum(CASE WHEN cur IS NULL THEN 0 ELSE least(base, cur) END))
-        |  // sum(base) AS BIGINT) AS grr_ppm,
-        | CAST((1000000 * sum(coalesce(cur, 0))) // sum(base) AS BIGINT) AS nrr_ppm
-        |FROM j GROUP BY 1""".stripMargin,
-
-    // q280: identical epoch-week ints, per-user lag/lead/min windows.
-    "q280_growth_accounting" ->
-      """WITH wk AS (
-        | SELECT DISTINCT user_id AS a, epoch_ms(ts) // 1000 // 86400 // 7 AS week
-        | FROM events),
-        |t AS (
-        | SELECT a, week,
-        |  min(week) OVER (PARTITION BY a) AS fw,
-        |  lag(week) OVER (PARTITION BY a ORDER BY week) AS pw,
-        |  lead(week) OVER (PARTITION BY a ORDER BY week) AS nw
-        | FROM wk),
-        |st AS (
-        | SELECT week,
-        |  CAST(count(CASE WHEN week = fw THEN 1 END) AS BIGINT) AS n_new,
-        |  CAST(count(CASE WHEN pw = week - 1 THEN 1 END) AS BIGINT) AS n_retained,
-        |  CAST(count(CASE WHEN week <> fw AND (pw IS NULL OR pw < week - 1) THEN 1 END)
-        |   AS BIGINT) AS n_resurrected,
-        |  CAST(count(*) AS BIGINT) AS n_active
-        | FROM t GROUP BY 1),
-        |ch AS (
-        | SELECT week + 1 AS week, CAST(count(*) AS BIGINT) AS n_churned
-        | FROM t WHERE nw IS NULL OR nw > week + 1 GROUP BY 1)
-        |SELECT CAST(week AS BIGINT) AS week,
-        | coalesce(n_new, 0) AS n_new, coalesce(n_retained, 0) AS n_retained,
-        | coalesce(n_resurrected, 0) AS n_resurrected,
-        | coalesce(n_active, 0) AS n_active, coalesce(n_churned, 0) AS n_churned,
-        | CASE WHEN coalesce(n_churned, 0) = 0 THEN NULL
-        |  ELSE CAST((1000 * (coalesce(n_new, 0) + coalesce(n_resurrected, 0)))
-        |   // n_churned AS BIGINT) END AS quick_ratio_milli
-        |FROM st FULL OUTER JOIN ch USING (week)""".stripMargin,
-
-    // q281: a plain inequality join is exact at oracle scale — the
-    // bucket-grid path must produce the identical pair set.
-    "q281_interval_overlap" ->
-      """WITH a AS (
-        | SELECT o_orderkey AS a_id, o_orderdate AS a_start,
-        |  o_orderdate + INTERVAL 3 DAY AS a_end
-        | FROM orders WHERE o_orderkey % 50 = 0),
-        |b AS (
-        | SELECT o_orderkey AS b_id, o_orderdate + INTERVAL 1 DAY AS b_start,
-        |  o_orderdate + INTERVAL 4 DAY AS b_end
-        | FROM orders WHERE o_orderkey % 70 = 0)
-        |SELECT a_id, b_id,
-        | CAST(epoch_us(least(a_end, b_end)) - epoch_us(greatest(a_start, b_start))
-        |  AS BIGINT) AS overlap_micros
-        |FROM a JOIN b ON a_start < b_end AND b_start < a_end""".stripMargin,
-
-    // q282: one frame window, identical suff-stat arithmetic.
-    "q282_rolling_slope" ->
-      """WITH d AS (
-        | SELECT event_type, epoch_ms(ts) // 1000 // 86400 AS day, count(*) AS c
-        | FROM events GROUP BY 1, 2)
-        |SELECT event_type, CAST(day AS BIGINT) AS day, CAST(c AS BIGINT) AS c,
-        | CAST(n * sxy - sx * sy AS BIGINT) AS slope_num,
-        | CAST(n * sxx - sx * sx AS BIGINT) AS slope_den,
-        | CASE WHEN n * sxx - sx * sx = 0 THEN NULL
-        |  ELSE CAST((1000 * (n * sxy - sx * sy)) // (n * sxx - sx * sx) AS BIGINT)
-        | END AS slope_milli,
-        | CAST(n AS BIGINT) AS n_window
-        |FROM (
-        | SELECT event_type, day, c,
-        |  count(*) OVER w AS n, sum(day) OVER w AS sx, sum(c) OVER w AS sy,
-        |  sum(day * c) OVER w AS sxy, sum(day * day) OVER w AS sxx
-        | FROM d
-        | WINDOW w AS (PARTITION BY event_type ORDER BY day
-        |   ROWS BETWEEN 6 PRECEDING AND CURRENT ROW))""".stripMargin,
-
-    // q283: count-join replicate; suppressed rows null their quasi cells.
-    "q283_k_suppress" ->
-      """WITH b AS (
-        | SELECT event_id, event_type,
-        |  CAST(json_extract_string(props, '$.k') AS BIGINT) // 10 AS k_band,
-        |  user_id % 25 AS cohort
-        | FROM events),
-        |c AS (SELECT event_type, k_band, cohort, count(*) AS gs
-        | FROM b GROUP BY 1, 2, 3)
-        |SELECT CASE WHEN gs >= 4 THEN b.event_type END AS event_type,
-        | CAST(CASE WHEN gs >= 4 THEN b.k_band END AS BIGINT) AS k_band,
-        | CAST(CASE WHEN gs >= 4 THEN b.cohort END AS BIGINT) AS cohort,
-        | event_id, gs < 4 AS suppressed
-        |FROM b JOIN c ON b.event_type IS NOT DISTINCT FROM c.event_type
-        | AND b.k_band IS NOT DISTINCT FROM c.k_band
-        | AND b.cohort IS NOT DISTINCT FROM c.cohort""".stripMargin,
-
-    // q284: per-(user, step) min-ts then user-level span, same seconds.
-    "q284_set_completion" ->
-      """WITH f AS (
-        | SELECT user_id, event_type AS step,
-        |  min(epoch_ms(ts) // 1000) AS t
-        | FROM events WHERE event_type IN ('view', 'click', 'purchase')
-        | GROUP BY 1, 2),
-        |u AS (
-        | SELECT user_id, CAST(count(*) AS BIGINT) AS n_steps_seen,
-        |  max(t) AS tl, min(t) AS tf
-        | FROM f GROUP BY 1)
-        |SELECT user_id, n_steps_seen, n_steps_seen = 3 AS completed,
-        | CAST(CASE WHEN n_steps_seen = 3 THEN tl - tf END AS BIGINT) AS span_seconds
-        |FROM u""".stripMargin,
-
-    // q285: q199's graph; per-threshold edge filters through degrees.
-    "q285_rich_club" ->
-      """WITH li AS (
-        | SELECT l_orderkey, l_partkey FROM lineitem WHERE l_partkey % 4 = 0),
-        |e AS (
-        | SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        | FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-        |deg AS (SELECT id, count(*) AS d FROM
-        | (SELECT u AS id FROM e UNION ALL SELECT v AS id FROM e) GROUP BY 1),
-        |th AS (SELECT unnest([4, 8, 16, 24, 32]) AS k),
-        |nodes AS (
-        | SELECT k, CAST(count(*) AS BIGINT) AS n_rich
-        | FROM th JOIN deg ON deg.d > th.k GROUP BY 1),
-        |edges AS (
-        | SELECT k, CAST(count(*) AS BIGINT) AS n_edges
-        | FROM th JOIN e ON true
-        |  JOIN deg du ON du.id = e.u JOIN deg dv ON dv.id = e.v
-        | WHERE du.d > th.k AND dv.d > th.k GROUP BY 1)
-        |SELECT CAST(k AS BIGINT) AS k, n_rich, coalesce(n_edges, 0) AS n_edges,
-        | CASE WHEN n_rich < 2 THEN NULL
-        |  ELSE CAST((1000000 * 2 * coalesce(n_edges, 0)) // (n_rich * (n_rich - 1))
-        |   AS BIGINT) END AS phi_ppm
-        |FROM nodes LEFT JOIN edges USING (k)""".stripMargin,
-
-    // q286: same tokenizer and function-word list; pinned-double cosine.
-    "q286_stylometry" ->
-      """WITH c AS (
-        | SELECT source AS g, tok, count(*) AS c FROM (
-        |  SELECT source,
-        |   unnest(list_filter(string_split_regex(lower(coalesce(text, '')), '\s+'),
-        |    x -> len(x) > 0)) AS tok
-        |  FROM documents)
-        | WHERE tok IN ('the','of','and','a','to','in','is','it','that','was',
-        |  'for','on','with','as','but','at','by','from','or','an')
-        | GROUP BY 1, 2),
-        |n AS (SELECT g, CAST(sum(c * c) AS BIGINT) AS n2,
-        |  CAST(sum(c) AS BIGINT) AS tot FROM c GROUP BY 1),
-        |d AS (
-        | SELECT a.g AS g_a, b.g AS g_b, CAST(sum(a.c * b.c) AS BIGINT) AS dot
-        | FROM c a JOIN c b ON a.tok = b.tok AND a.g < b.g GROUP BY 1, 2)
-        |SELECT g_a, g_b, na.tot AS fw_tokens_a, nb.tot AS fw_tokens_b, dot,
-        | CAST(floor(1000000.0 * dot / (sqrt(na.n2) * sqrt(nb.n2))) AS BIGINT)
-        |  AS cosine_ppm
-        |FROM d JOIN n na ON na.g = g_a JOIN n nb ON nb.g = g_b""".stripMargin,
-
-    // q287: per-segment truncation exactly as specified in the op.
-    "q287_mix_shift" ->
-      """WITH b AS (
-        | SELECT event_type AS segment,
-        |  CASE WHEN day(ts) <= 15 THEN 'h1' ELSE 'h2' END AS p,
-        |  CAST(json_extract_string(props, '$.k') AS BIGINT) >= 50 AS ok
-        | FROM events),
-        |s AS (
-        | SELECT segment,
-        |  CAST(count(CASE WHEN p = 'h1' THEN 1 END) AS BIGINT) AS n_a,
-        |  CAST(count(CASE WHEN p = 'h1' AND ok THEN 1 END) AS BIGINT) AS pos_a,
-        |  CAST(count(CASE WHEN p = 'h2' THEN 1 END) AS BIGINT) AS n_b,
-        |  CAST(count(CASE WHEN p = 'h2' AND ok THEN 1 END) AS BIGINT) AS pos_b
-        | FROM b GROUP BY 1),
-        |t AS (SELECT sum(n_a) AS ta, sum(n_b) AS tb FROM s),
-        |e AS (
-        | SELECT segment, n_a, pos_a, n_b, pos_b,
-        |  (1000000 * n_a) // ta AS share_a_ppm,
-        |  (1000000 * n_b) // tb AS share_b_ppm,
-        |  CASE WHEN n_a = 0 THEN 0 ELSE (1000000 * pos_a) // n_a END AS rate_a_ppm,
-        |  CASE WHEN n_b = 0 THEN 0 ELSE (1000000 * pos_b) // n_b END AS rate_b_ppm
-        | FROM s, t)
-        |SELECT segment, n_a, pos_a, n_b, pos_b,
-        | CAST(share_a_ppm AS BIGINT) AS share_a_ppm,
-        | CAST(share_b_ppm AS BIGINT) AS share_b_ppm,
-        | CAST(rate_a_ppm AS BIGINT) AS rate_a_ppm,
-        | CAST(rate_b_ppm AS BIGINT) AS rate_b_ppm,
-        | CAST(((share_b_ppm - share_a_ppm) * rate_a_ppm) // 1000000 AS BIGINT)
-        |  AS mix_effect_ppm,
-        | CAST((share_b_ppm * (rate_b_ppm - rate_a_ppm)) // 1000000 AS BIGINT)
-        |  AS rate_effect_ppm
-        |FROM e""".stripMargin,
-
-    // q288: descending cumulative curve, before-the-key class cuts.
-    "q288_abc_class" ->
-      """WITH s AS (
-        | SELECT l_partkey, CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
-        |  AS BIGINT) AS v
-        | FROM lineitem GROUP BY 1),
-        |r AS (
-        | SELECT l_partkey, v,
-        |  row_number() OVER (ORDER BY v DESC, l_partkey) AS rank,
-        |  sum(v) OVER (ORDER BY v DESC, l_partkey
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        | FROM s),
-        |t AS (SELECT sum(v) AS tot FROM s)
-        |SELECT l_partkey, v AS value, CAST(rank AS BIGINT) AS rank,
-        | CAST((1000000 * cum) // tot AS BIGINT) AS cum_share_ppm,
-        | CASE WHEN (1000000 * (cum - v)) // tot < 800000 THEN 'A'
-        |  WHEN (1000000 * (cum - v)) // tot < 950000 THEN 'B'
-        |  ELSE 'C' END AS abc_class
-        |FROM r, t""".stripMargin,
-
-    // q289: identical dow ints, lower-median picks at both levels.
-    "q289_seasonal_outliers" ->
-      """WITH b AS (
-        | SELECT event_type, event_id, CAST(round(value * 100) AS BIGINT) AS cents,
-        |  ((epoch_ms(ts) // 1000 // 86400 + 4) % 7 + 7) % 7 AS dow
-        | FROM events),
-        |sm AS (
-        | SELECT event_type, dow, min(CASE WHEN 2 * cum >= tot THEN cents END) AS baseline
-        | FROM (
-        |  SELECT event_type, dow, cents,
-        |   sum(w) OVER (PARTITION BY event_type, dow ORDER BY cents) AS cum,
-        |   sum(w) OVER (PARTITION BY event_type, dow) AS tot
-        |  FROM (SELECT event_type, dow, cents, count(*) AS w FROM b GROUP BY 1, 2, 3))
-        | GROUP BY 1, 2),
-        |r AS (
-        | SELECT b.event_type, b.event_id, b.cents, sm.baseline,
-        |  b.cents - sm.baseline AS residual
-        | FROM b JOIN sm ON b.event_type = sm.event_type AND b.dow = sm.dow),
-        |mr AS (
-        | SELECT event_type, min(CASE WHEN 2 * cum >= tot THEN residual END) AS med_residual
-        | FROM (
-        |  SELECT event_type, residual,
-        |   sum(w) OVER (PARTITION BY event_type ORDER BY residual) AS cum,
-        |   sum(w) OVER (PARTITION BY event_type) AS tot
-        |  FROM (SELECT event_type, residual, count(*) AS w FROM r GROUP BY 1, 2))
-        | GROUP BY 1),
-        |d AS (
-        | SELECT r.*, mr.med_residual, abs(r.residual - mr.med_residual) AS dev
-        | FROM r JOIN mr USING (event_type)),
-        |md AS (
-        | SELECT event_type, min(CASE WHEN 2 * cum >= tot THEN dev END) AS mad
-        | FROM (
-        |  SELECT event_type, dev,
-        |   sum(w) OVER (PARTITION BY event_type ORDER BY dev) AS cum,
-        |   sum(w) OVER (PARTITION BY event_type) AS tot
-        |  FROM (SELECT event_type, dev, count(*) AS w FROM d GROUP BY 1, 2))
-        | GROUP BY 1)
-        |SELECT d.event_type, d.event_id, d.cents, d.baseline, d.residual,
-        | d.med_residual, md.mad,
-        | CASE WHEN md.mad = 0 THEN d.dev > 0 ELSE d.dev > 3 * md.mad END AS is_outlier
-        |FROM d JOIN md USING (event_type)""".stripMargin,
-
-    // q290: identical (value desc, user) total orders and decile rule.
-    "q290_decile_migration" ->
-      """WITH v AS (
-        | SELECT CASE WHEN day(ts) <= 15 THEN 'p1' ELSE 'p2' END AS p,
-        |  user_id AS a, sum(CAST(round(value * 100) AS BIGINT)) AS v
-        | FROM events GROUP BY 1, 2),
-        |r AS (
-        | SELECT p, a,
-        |  row_number() OVER (PARTITION BY p ORDER BY v DESC, a) AS rk,
-        |  count(*) OVER (PARTITION BY p) AS n
-        | FROM v),
-        |d AS (SELECT p, a, (10 * (rk - 1)) // n AS dec FROM r),
-        |da AS (SELECT a, dec FROM d WHERE p = 'p1'),
-        |db AS (SELECT a, dec FROM d WHERE p = 'p2')
-        |SELECT CAST(coalesce(da.dec, -1) AS BIGINT) AS decile_a,
-        | CAST(coalesce(db.dec, -1) AS BIGINT) AS decile_b,
-        | CAST(count(*) AS BIGINT) AS n_actors
-        |FROM da FULL OUTER JOIN db USING (a) GROUP BY 1, 2""".stripMargin,
-
-    // q291: identical day ints, rolling 7-row frame, one truncation per
-    // ratio.
-    "q291_slo_burn" ->
-      """WITH d AS (
-        | SELECT user_id % 2 AS src, epoch_ms(ts) // 1000 // 86400 AS day,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(count(CASE WHEN event_type <> 'error' THEN 1 END) AS BIGINT) AS n_good
-        | FROM events GROUP BY 1, 2),
-        |r AS (
-        | SELECT src, day, n, n_good,
-        |  sum(n) OVER w AS window_n, sum(n_good) OVER w AS window_good
-        | FROM d WINDOW w AS (PARTITION BY src ORDER BY day
-        |   ROWS BETWEEN 6 PRECEDING AND CURRENT ROW))
-        |SELECT CAST(src AS BIGINT) AS src, CAST(day AS BIGINT) AS day, n, n_good,
-        | CAST(window_n AS BIGINT) AS window_n,
-        | CAST(window_good AS BIGINT) AS window_good,
-        | CAST((1000000 * window_good) // window_n AS BIGINT) AS compliance_ppm,
-        | CAST((1000 * (1000000 - (1000000 * window_good) // window_n)) // 10000
-        |  AS BIGINT) AS burn_rate_milli
-        |FROM r""".stripMargin,
-
-    // q292: the same subsets as distinct struct counts.
-    "q292_candidate_keys" ->
-      """WITH a AS (
-        | SELECT CAST(count(*) AS BIGINT) AS n,
-        |  CAST(count(DISTINCT l_orderkey) AS BIGINT) AS d0,
-        |  CAST(count(DISTINCT (l_orderkey, l_linenumber)) AS BIGINT) AS d1,
-        |  CAST(count(DISTINCT (l_partkey, l_suppkey)) AS BIGINT) AS d2,
-        |  CAST(count(DISTINCT (l_orderkey, l_partkey, l_suppkey)) AS BIGINT) AS d3
-        | FROM lineitem),
-        |p AS (
-        | SELECT 'l_orderkey' AS columns, n, d0 AS n_distinct FROM a
-        | UNION ALL SELECT 'l_orderkey,l_linenumber', n, d1 FROM a
-        | UNION ALL SELECT 'l_partkey,l_suppkey', n, d2 FROM a
-        | UNION ALL SELECT 'l_orderkey,l_partkey,l_suppkey', n, d3 FROM a)
-        |SELECT columns, n AS n_rows, n_distinct,
-        | CAST((1000000 * n_distinct) // n AS BIGINT) AS uniqueness_ppm,
-        | CAST(n - n_distinct AS BIGINT) AS n_collisions
-        |FROM p""".stripMargin,
-
-    // q293: same quantization and truncating per-dim means.
-    "q293_centroid_separation" ->
-      """WITH q AS (
-        | SELECT CAST(label AS BIGINT) AS l,
-        |  generate_subscripts(embedding, 1) - 1 AS pos,
-        |  CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000) AS BIGINT) AS qv
-        | FROM embeddings),
-        |c AS (
-        | SELECT l, pos, CAST(sum(qv) // count(*) AS BIGINT) AS c
-        | FROM q GROUP BY 1, 2)
-        |SELECT a.l AS label_a, b.l AS label_b, CAST(count(*) AS BIGINT) AS dim,
-        | CAST(sum((a.c - b.c) * (a.c - b.c)) AS BIGINT) AS dist_sq_q
-        |FROM c a JOIN c b ON a.pos = b.pos AND a.l < b.l
-        |GROUP BY 1, 2""".stripMargin,
-
-    // q294: identical epoch-ms lag rule, same burst-end flags.
-    "q294_bursts" ->
-      """WITH r AS (
-        | SELECT user_id, event_type, epoch_ms(ts) AS ms,
-        |  lag(epoch_ms(ts), 2) OVER (PARTITION BY user_id, event_type
-        |   ORDER BY epoch_ms(ts)) AS lag_ms
-        | FROM events)
-        |SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n_events,
-        | CAST(count(CASE WHEN lag_ms IS NOT NULL AND ms - lag_ms <= 600000
-        |  THEN 1 END) AS BIGINT) AS n_bursts
-        |FROM r GROUP BY 1, 2""".stripMargin,
-
-    // q295: same day key and tokenizer; full-outer lag-1 vocab join.
-    "q295_vocab_retention" ->
-      """WITH pt AS (
-        | SELECT DISTINCT doc_id % 20 AS p, tok FROM (
-        |  SELECT doc_id,
-        |   unnest(list_filter(string_split_regex(lower(coalesce(text, '')), '\s+'),
-        |    x -> len(x) > 0)) AS tok
-        |  FROM documents)),
-        |pr AS (SELECT p + 1 AS period, tok, 1 AS in_prev FROM pt),
-        |cu AS (SELECT p AS period, tok, 1 AS in_cur FROM pt),
-        |j AS (SELECT period, in_prev, in_cur FROM pr FULL OUTER JOIN cu USING (period, tok))
-        |SELECT CAST(period AS BIGINT) AS period,
-        | CAST(count(CASE WHEN in_prev IS NOT NULL THEN 1 END) AS BIGINT) AS prev_vocab,
-        | CAST(count(CASE WHEN in_prev IS NOT NULL AND in_cur IS NOT NULL THEN 1 END)
-        |  AS BIGINT) AS retained,
-        | CAST(count(CASE WHEN in_prev IS NOT NULL AND in_cur IS NULL THEN 1 END)
-        |  AS BIGINT) AS dropped,
-        | CAST(count(CASE WHEN in_prev IS NULL THEN 1 END) AS BIGINT) AS entered,
-        | CAST((1000000 * count(CASE WHEN in_prev IS NOT NULL AND in_cur IS NOT NULL
-        |  THEN 1 END)) // count(CASE WHEN in_prev IS NOT NULL THEN 1 END) AS BIGINT)
-        |  AS retention_ppm
-        |FROM j GROUP BY 1
-        |HAVING count(CASE WHEN in_prev IS NOT NULL THEN 1 END) > 0""".stripMargin,
-
-    // q296: distinct-value gaps, widest-5 boundaries, ties toward the
-    // smaller value.
-    "q296_gap_breaks" ->
-      """WITH v AS (
-        | SELECT DISTINCT CAST(round(o_totalprice * 100) AS BIGINT) AS c FROM orders),
-        |r AS (SELECT c, row_number() OVER (ORDER BY c) AS rk FROM v),
-        |g AS (
-        | SELECT a.c AS lower_value, b.c AS upper_value, b.c - a.c AS gap
-        | FROM r a JOIN r b ON b.rk = a.rk + 1),
-        |top AS (SELECT * FROM g ORDER BY gap DESC, lower_value LIMIT 5)
-        |SELECT CAST(row_number() OVER (ORDER BY lower_value) AS BIGINT)
-        |  AS boundary_rank,
-        | lower_value, upper_value, CAST(gap AS BIGINT) AS gap
-        |FROM top""".stripMargin,
-
-    // q297: identical word split, halves by floor-div, list set ops.
-    "q297_half_overlap" ->
-      """WITH w AS (
-        | SELECT doc_id,
-        |  list_filter(string_split_regex(lower(coalesce(text, '')), '\s+'),
-        |   x -> len(x) > 0) AS ws
-        | FROM documents),
-        |h AS (
-        | SELECT doc_id, len(ws) AS n,
-        |  list_distinct(ws[1:len(ws) // 2]) AS v1,
-        |  list_distinct(ws[len(ws) // 2 + 1:len(ws)]) AS v2
-        | FROM w),
-        |m AS (
-        | SELECT doc_id, n, len(v1) AS vf, len(v2) AS vb,
-        |  len(list_intersect(v1, v2)) AS inter
-        | FROM h)
-        |SELECT doc_id, CAST(n AS BIGINT) AS n_words,
-        | CAST(vf AS BIGINT) AS vocab_front, CAST(vb AS BIGINT) AS vocab_back,
-        | CAST(inter AS BIGINT) AS n_common,
-        | CASE WHEN vf + vb - inter = 0 THEN NULL
-        |  ELSE CAST((1000000 * inter) // (vf + vb - inter) AS BIGINT)
-        | END AS overlap_ppm
-        |FROM m""".stripMargin,
-
-    // q298: identical day ints, per-key lag gaps, horizon cross join.
-    "q298_silences" ->
-      """WITH d AS (
-        | SELECT DISTINCT user_id, epoch_ms(ts) // 1000 // 86400 AS day FROM events),
-        |h AS (SELECT max(day) AS horizon FROM d),
-        |g AS (
-        | SELECT user_id, day,
-        |  day - lag(day) OVER (PARTITION BY user_id ORDER BY day) AS gap
-        | FROM d)
-        |SELECT user_id, CAST(count(*) AS BIGINT) AS n_active_days,
-        | CAST(max(day) AS BIGINT) AS last_seen_day,
-        | CAST(coalesce(max(gap), 0) AS BIGINT) AS max_gap_days,
-        | CAST(count(CASE WHEN gap > 2 THEN 1 END) AS BIGINT) AS n_silences,
-        | max(h.horizon) - max(day) > 2 AS silent_now
-        |FROM g, h GROUP BY user_id""".stripMargin,
-
-    // q299: same cent amounts, left join from the header side.
-    "q299_reconcile" ->
-      """WITH s AS (
-        | SELECT l_orderkey, CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
-        |  AS BIGINT) AS cs
-        | FROM lineitem GROUP BY 1)
-        |SELECT o.o_orderkey,
-        | CAST(round(o.o_totalprice * 100) AS BIGINT) AS parent_amount,
-        | CAST(coalesce(s.cs, 0) AS BIGINT) AS child_sum,
-        | CAST(round(o.o_totalprice * 100) AS BIGINT) - coalesce(s.cs, 0) AS diff,
-        | CAST(CASE WHEN CAST(round(o.o_totalprice * 100) AS BIGINT) = 0
-        |  THEN CASE WHEN coalesce(s.cs, 0) = 0 THEN 0 ELSE 1000000 END
-        |  ELSE (1000000 * abs(CAST(round(o.o_totalprice * 100) AS BIGINT)
-        |   - coalesce(s.cs, 0))) // abs(CAST(round(o.o_totalprice * 100) AS BIGINT))
-        | END AS BIGINT) AS mismatch_ppm,
-        | CASE WHEN CAST(round(o.o_totalprice * 100) AS BIGINT) = 0
-        |  THEN coalesce(s.cs, 0) = 0
-        |  ELSE (1000000 * abs(CAST(round(o.o_totalprice * 100) AS BIGINT)
-        |   - coalesce(s.cs, 0))) // abs(CAST(round(o.o_totalprice * 100) AS BIGINT))
-        |   <= 800000 END AS reconciled
-        |FROM orders o LEFT JOIN s ON s.l_orderkey = o.o_orderkey""".stripMargin,
-
-    // q300: md5-digest dup share, nfc_normalize flags, HHI — unioned.
-    "q300_release_gate" ->
-      """WITH base AS (
-        | SELECT coalesce(text, '') AS t, source FROM documents),
-        |dup AS (
-        | SELECT 'exact_dup_ppm' AS "check",
-        |  CAST((1000000 * (count(*) - count(DISTINCT md5(t)))) // count(*) AS BIGINT)
-        |   AS value, CAST(100000 AS BIGINT) AS threshold
-        | FROM base),
-        |fl AS (
-        | SELECT CAST(count(*) AS BIGINT) AS n,
-        |  CAST(count(CASE WHEN nfc_normalize(t) <> t THEN 1 END) AS BIGINT) AS nn,
-        |  CAST(count(CASE WHEN length(t) = 0 THEN 1 END) AS BIGINT) AS e
-        | FROM base),
-        |f2 AS (
-        | SELECT 'non_nfc_ppm' AS "check", CAST((1000000 * nn) // n AS BIGINT) AS value,
-        |  CAST(1000 AS BIGINT) AS threshold FROM fl
-        | UNION ALL
-        | SELECT 'empty_doc_ppm', CAST((1000000 * e) // n AS BIGINT),
-        |  CAST(1000 AS BIGINT) FROM fl),
-        |hh AS (
-        | SELECT 'source_hhi_ppm' AS "check",
-        |  CAST((1000000 * sum(c * c)) // (sum(c) * sum(c)) AS BIGINT) AS value,
-        |  CAST(500000 AS BIGINT) AS threshold
-        | FROM (SELECT source, count(*) AS c FROM base GROUP BY 1))
-        |SELECT "check", value, threshold, value <= threshold AS pass
-        |FROM (SELECT * FROM dup UNION ALL SELECT * FROM f2
-        |  UNION ALL SELECT * FROM hh)""".stripMargin,
-
-    // q301: q291 densified to calendar days — per-src day range via
-    // generate_series, zero-filled, same 7-row frame (now = 7 calendar
-    // days by construction).
-    "q301_slo_calendar" ->
-      """WITH d AS (
-        | SELECT user_id % 2 AS src, epoch_ms(ts) // 1000 // 86400 AS day,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(count(CASE WHEN event_type <> 'error' THEN 1 END) AS BIGINT) AS n_good
-        | FROM events
-        | WHERE (epoch_ms(ts) // 1000 // 86400) % 3 = 0
-        | GROUP BY 1, 2),
-        |sp AS (SELECT src, min(day) AS d0, max(day) AS d1 FROM d GROUP BY 1),
-        |cal AS (
-        | SELECT src, unnest(generate_series(d0, d1)) AS day FROM sp),
-        |base AS (
-        | SELECT cal.src, cal.day, coalesce(d.n, 0) AS n, coalesce(d.n_good, 0) AS n_good
-        | FROM cal LEFT JOIN d ON d.src = cal.src AND d.day = cal.day),
-        |r AS (
-        | SELECT src, day, n, n_good,
-        |  sum(n) OVER w AS window_n, sum(n_good) OVER w AS window_good
-        | FROM base WINDOW w AS (PARTITION BY src ORDER BY day
-        |   ROWS BETWEEN 6 PRECEDING AND CURRENT ROW))
-        |SELECT CAST(src AS BIGINT) AS src, CAST(day AS BIGINT) AS day,
-        | CAST(n AS BIGINT) AS n, CAST(n_good AS BIGINT) AS n_good,
-        | CAST(window_n AS BIGINT) AS window_n,
-        | CAST(window_good AS BIGINT) AS window_good,
-        | CAST((1000000 * window_good) // window_n AS BIGINT) AS compliance_ppm,
-        | CAST((1000 * (1000000 - (1000000 * window_good) // window_n)) // 10000
-        |  AS BIGINT) AS burn_rate_milli
-        |FROM r""".stripMargin,
-
-    // q302: the salted plan must produce the PLAIN inner-join multiset —
-    // the oracle is the unsalted three-way join, aggregated per client.
-    "q302_skew_correlate" ->
-      """WITH ev AS (
-        | SELECT CAST(o_custkey AS VARCHAR) AS clientId,
-        |  CAST(o_orderkey AS VARCHAR) AS traceId FROM orders),
-        |sp AS (
-        | SELECT CAST(l_orderkey AS VARCHAR) AS traceId,
-        |  CAST(l_orderkey AS VARCHAR) || '_' || CAST(l_linenumber AS VARCHAR) AS spanId
-        | FROM lineitem),
-        |lg AS (
-        | SELECT CAST(l_orderkey AS VARCHAR) || '_' || CAST(l_linenumber AS VARCHAR) AS spanId,
-        |  l_returnflag AS eventType FROM lineitem)
-        |SELECT ev.clientId, CAST(count(*) AS BIGINT) AS n_correlated,
-        | CAST(count(CASE WHEN lg.eventType = 'R' THEN 1 END) AS BIGINT) AS n_returned
-        |FROM ev JOIN sp ON ev.traceId = sp.traceId JOIN lg ON sp.spanId = lg.spanId
-        |GROUP BY 1""".stripMargin,
-
-    // q303: both HITS rounds unrolled — each round one in-sum + max-
-    // normalize, one out-sum + max-normalize, all integer div.
-    "q303_hits" ->
-      """WITH b AS (SELECT doc_id AS a FROM documents WHERE doc_id % 20 = 0),
-        |e0 AS (
-        | SELECT a AS s, a + 1 AS d FROM b
-        | UNION ALL SELECT a + 1, a + 2 FROM b
-        | UNION ALL SELECT a, a + 5 FROM b
-        | UNION ALL SELECT a + 5, a + 22 FROM b WHERE a % 40 = 0),
-        |e AS (SELECT DISTINCT s, d FROM e0),
-        |n AS (SELECT s AS id FROM e UNION SELECT d FROM e),
-        |a1 AS (SELECT n.id, coalesce(cnt.c * 1000000, 0) AS v
-        | FROM n LEFT JOIN (SELECT d, count(*) AS c FROM e GROUP BY 1) cnt ON cnt.d = n.id),
-        |a1n AS (SELECT id, CASE WHEN mx <= 0 THEN 0 ELSE (v * 1000000) // mx END AS v
-        | FROM a1, (SELECT max(v) AS mx FROM a1)),
-        |h1 AS (SELECT n.id, coalesce(t.v, 0) AS v FROM n LEFT JOIN (
-        | SELECT e.s AS id, sum(a1n.v) AS v FROM e JOIN a1n ON a1n.id = e.d GROUP BY 1) t
-        | ON t.id = n.id),
-        |h1n AS (SELECT id, CASE WHEN mx <= 0 THEN 0 ELSE (v * 1000000) // mx END AS v
-        | FROM h1, (SELECT max(v) AS mx FROM h1)),
-        |a2 AS (SELECT n.id, coalesce(t.v, 0) AS v FROM n LEFT JOIN (
-        | SELECT e.d AS id, sum(h1n.v) AS v FROM e JOIN h1n ON h1n.id = e.s GROUP BY 1) t
-        | ON t.id = n.id),
-        |a2n AS (SELECT id, CASE WHEN mx <= 0 THEN 0 ELSE (v * 1000000) // mx END AS v
-        | FROM a2, (SELECT max(v) AS mx FROM a2)),
-        |h2 AS (SELECT n.id, coalesce(t.v, 0) AS v FROM n LEFT JOIN (
-        | SELECT e.s AS id, sum(a2n.v) AS v FROM e JOIN a2n ON a2n.id = e.d GROUP BY 1) t
-        | ON t.id = n.id),
-        |h2n AS (SELECT id, CASE WHEN mx <= 0 THEN 0 ELSE (v * 1000000) // mx END AS v
-        | FROM h2, (SELECT max(v) AS mx FROM h2))
-        |SELECT CAST(n.id AS BIGINT) AS id, CAST(a2n.v AS BIGINT) AS auth,
-        | CAST(h2n.v AS BIGINT) AS hub
-        |FROM n JOIN a2n ON a2n.id = n.id JOIN h2n ON h2n.id = n.id""".stripMargin,
-
-    // q304: pinned sf0.01 support histogram from the INDEPENDENT Python
-    // reference peeler (tools/pin_ktruss.py — definition-direct, no
-    // orientation tricks), making this a true cross-implementation
-    // oracle; `KTrussSpec` additionally replays random graphs against a
-    // Scala reference peeler.
-    "q304_ktruss" ->
-      """SELECT CAST(support AS BIGINT) AS support, CAST(n_edges AS BIGINT) AS n_edges,
-        | CAST(sum_a AS BIGINT) AS sum_a, CAST(sum_b AS BIGINT) AS sum_b
-        |FROM (VALUES (3,387,259856,530024),(4,123,75720,143772),(5,11,9040,16680),
-        | (6,11,10528,17364),(7,35,27840,47280),(8,1,184,1508),(10,1,120,1272))
-        | AS t(support, n_edges, sum_a, sum_b)""".stripMargin,
-
-    // q305: pinned per-component-size MSF invariants from an independent
-    // Python Kruskal (tools/pin_msf.py). The co-order part graph at
-    // sf0.01 is one 500-node component: any correct MSF has exactly 499
-    // edges totaling 400666666 — invariant under weight ties, so the
-    // cross-implementation check does not depend on tie-breaking.
-    "q305_spanning_forest" ->
-      """SELECT CAST(n_edges AS BIGINT) AS n_edges,
-        | CAST(n_components AS BIGINT) AS n_components,
-        | CAST(sum_weight AS BIGINT) AS sum_weight
-        |FROM (VALUES (499,1,400666666)) AS t(n_edges, n_components, sum_weight)""".stripMargin,
-
-    // q306: the DEFINITION of single-linkage at the threshold — connected
-    // components (recursive closure, min reachable id) of the graph
-    // restricted to weight <= 50, singletons keeping their own id. The
-    // Spark side answers via the Borůvka forest; agreement is the MSF
-    // minimax-path property, tie-safe.
-    "q306_single_linkage" ->
-      """WITH RECURSIVE b AS (
-        | SELECT doc_id AS a FROM documents WHERE doc_id % 20 = 0),
-        |edges0 AS (
-        | SELECT a AS u, a + 1 AS v FROM b
-        | UNION ALL SELECT a + 1, a + 2 FROM b
-        | UNION ALL SELECT a, a + 5 FROM b
-        | UNION ALL SELECT a + 5, a + 22 FROM b WHERE a % 40 = 0),
-        |nodes AS (SELECT u AS id FROM edges0 UNION SELECT v FROM edges0),
-        |kept0 AS (SELECT u, v FROM edges0 WHERE (u * 7 + v * 13) % 100 <= 50),
-        |kept AS (SELECT u, v FROM kept0 UNION SELECT v, u FROM kept0),
-        |reach(id, r) AS (
-        | SELECT id, id FROM nodes
-        | UNION
-        | SELECT k.u, reach.r FROM kept k JOIN reach ON k.v = reach.id)
-        |SELECT CAST(id AS BIGINT) AS id, CAST(min(r) AS BIGINT) AS cluster
-        |FROM reach GROUP BY id""".stripMargin,
-
-    // q307: q304's pin projected to the histogram the aggregate variant
-    // returns (same independent reference peeler, tools/pin_ktruss.py).
-    "q307_truss_histogram" ->
-      """SELECT CAST(support AS BIGINT) AS support, CAST(n_edges AS BIGINT) AS n_edges
-        |FROM (VALUES (3,387),(4,123),(5,11),(6,11),(7,35),(8,1),(10,1))
-        | AS t(support, n_edges)""".stripMargin,
-
-    // q308: pinned sf0.01 coreness histogram from the INDEPENDENT
-    // sequential min-degree peel (tools/pin_coreness.py — Batagelj-
-    // Zaversnik by definition) vs the Spark side's h-index fixpoint:
-    // different algorithm, same unique decomposition.
-    "q308_coreness" ->
-      """SELECT CAST(coreness AS BIGINT) AS coreness, CAST(n_nodes AS BIGINT) AS n_nodes,
-        | CAST(sum_ids AS BIGINT) AS sum_ids
-        |FROM (VALUES (10,1,1092),(11,2,1856),(14,2,2080),(15,5,4060),(16,12,11868),
-        | (17,16,13904),(18,22,17936),(19,36,33828),(20,404,412376))
-        | AS t(coreness, n_nodes, sum_ids)""".stripMargin,
-
-    // q309: the modularity DEFINITION replayed — per-community internal
-    // edges + degree mass over the canonical doc-chain edge set, ppm
-    // contribution with division forced to TRUNCATE (DuckDB's // floors;
-    // Spark's div truncates — they differ on the negative contributions
-    // sparse communities produce).
-    "q309_modularity" ->
-      """WITH b AS (SELECT doc_id AS a FROM documents WHERE doc_id % 20 = 0),
-        |edges0 AS (
-        | SELECT a AS u, a + 1 AS v FROM b
-        | UNION ALL SELECT a + 1, a + 2 FROM b
-        | UNION ALL SELECT a, a + 5 FROM b
-        | UNION ALL SELECT a + 5, a + 22 FROM b WHERE a % 40 = 0),
-        |e AS (SELECT DISTINCT least(u, v) AS u, greatest(u, v) AS v FROM edges0),
-        |mm AS (SELECT CAST(count(*) AS HUGEINT) AS m FROM e),
-        |le AS (SELECT u, v, u // 64 AS cu, v // 64 AS cv FROM e),
-        |deg AS (SELECT c, count(*) AS degree_sum
-        | FROM (SELECT cu AS c FROM le UNION ALL SELECT cv AS c FROM le) GROUP BY 1),
-        |intl AS (SELECT cu AS c, count(*) AS n_internal FROM le WHERE cu = cv GROUP BY 1),
-        |raw AS (
-        | SELECT d.c, coalesce(i.n_internal, 0) AS n_internal, d.degree_sum,
-        |  CAST(1000000 AS HUGEINT) *
-        |   (4 * mm.m * coalesce(i.n_internal, 0) -
-        |    CAST(d.degree_sum AS HUGEINT) * d.degree_sum) AS num,
-        |  4 * mm.m * mm.m AS den
-        | FROM deg d LEFT JOIN intl i ON i.c = d.c CROSS JOIN mm)
-        |SELECT CAST(c AS BIGINT) AS community, CAST(n_internal AS BIGINT) AS n_internal,
-        | CAST(degree_sum AS BIGINT) AS degree_sum,
-        | CAST(CASE WHEN num < 0 THEN -((-num) // den) ELSE num // den END AS BIGINT) AS q_ppm
-        |FROM raw""".stripMargin,
-
-    // q310: the BFS replayed exactly — recursive closure bounded at the
-    // SAME depth as the operator, min dist per (source, node), closeness
-    // from the reached set (all terms positive, so // matches div).
-    "q310_closeness" ->
-      """WITH RECURSIVE b AS (SELECT doc_id AS a FROM documents WHERE doc_id % 20 = 0),
-        |edges0 AS (
-        | SELECT a AS u, a + 1 AS v FROM b
-        | UNION ALL SELECT a + 1, a + 2 FROM b
-        | UNION ALL SELECT a, a + 5 FROM b
-        | UNION ALL SELECT a + 5, a + 22 FROM b WHERE a % 40 = 0),
-        |e AS (SELECT DISTINCT least(u, v) AS u, greatest(u, v) AS v FROM edges0),
-        |sym AS (SELECT u AS src, v AS dst FROM e UNION ALL SELECT v, u FROM e),
-        |srcs AS (SELECT doc_id AS s FROM documents WHERE doc_id % 100 = 0),
-        |walk(source, node, dist) AS (
-        | SELECT s, s, 0 FROM srcs
-        | UNION
-        | SELECT w.source, m.dst, w.dist + 1
-        | FROM walk w JOIN sym m ON m.src = w.node WHERE w.dist < 8),
-        |d AS (SELECT source, node, min(dist) AS dist FROM walk GROUP BY 1, 2)
-        |SELECT CAST(source AS BIGINT) AS source,
-        | CAST(count(*) - 1 AS BIGINT) AS n_reached,
-        | CAST(sum(dist) AS BIGINT) AS sum_dist,
-        | CAST(CASE WHEN sum(dist) > 0
-        |  THEN ((count(*) - 1) * 1000000) // sum(dist) ELSE 0 END AS BIGINT) AS closeness_ppm
-        |FROM d GROUP BY source""".stripMargin,
-
-    // q311: the 3-hop earliest-arrival DP unrolled stage by stage, each
-    // stage min-folded per (source, node) — semantically identical to
-    // the operator's delta-BFS (full-frontier expansion computes the
-    // same per-hop minimum), and the fold keeps every stage node-sized
-    // where a recursive closure would carry one row per distinct
-    // arrival. The -1 floor plays Long.MinValue's role (all edge times
-    // are positive epoch days, so only the comparisons matter).
-    "q311_temporal_reach" ->
-      """WITH fwd AS (
-        | SELECT o.o_custkey * 2 AS src, l.l_suppkey * 2 + 1 AS dst,
-        |  CAST(CAST(o.o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS t
-        | FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-        |e AS (SELECT src, dst, t FROM fwd
-        | UNION ALL SELECT dst AS src, src AS dst, t + 1 AS t FROM fwd),
-        |a0 AS (SELECT DISTINCT o_custkey * 2 AS source, o_custkey * 2 AS node,
-        |  CAST(-1 AS BIGINT) AS arr FROM orders WHERE o_custkey % 100 = 0),
-        |c1 AS (SELECT a.source, e.dst AS node, min(e.t) AS cand
-        | FROM a0 a JOIN e ON e.src = a.node AND e.t >= a.arr GROUP BY 1, 2),
-        |a1 AS (SELECT coalesce(a.source, c.source) AS source, coalesce(a.node, c.node) AS node,
-        |  CASE WHEN a.arr IS NULL THEN c.cand WHEN c.cand IS NULL THEN a.arr
-        |       WHEN c.cand < a.arr THEN c.cand ELSE a.arr END AS arr
-        | FROM a0 a FULL JOIN c1 c ON a.source = c.source AND a.node = c.node),
-        |c2 AS (SELECT a.source, e.dst AS node, min(e.t) AS cand
-        | FROM a1 a JOIN e ON e.src = a.node AND e.t >= a.arr GROUP BY 1, 2),
-        |a2 AS (SELECT coalesce(a.source, c.source) AS source, coalesce(a.node, c.node) AS node,
-        |  CASE WHEN a.arr IS NULL THEN c.cand WHEN c.cand IS NULL THEN a.arr
-        |       WHEN c.cand < a.arr THEN c.cand ELSE a.arr END AS arr
-        | FROM a1 a FULL JOIN c2 c ON a.source = c.source AND a.node = c.node),
-        |c3 AS (SELECT a.source, e.dst AS node, min(e.t) AS cand
-        | FROM a2 a JOIN e ON e.src = a.node AND e.t >= a.arr GROUP BY 1, 2),
-        |a3 AS (SELECT coalesce(a.source, c.source) AS source, coalesce(a.node, c.node) AS node,
-        |  CASE WHEN a.arr IS NULL THEN c.cand WHEN c.cand IS NULL THEN a.arr
-        |       WHEN c.cand < a.arr THEN c.cand ELSE a.arr END AS arr
-        | FROM a2 a FULL JOIN c3 c ON a.source = c.source AND a.node = c.node)
-        |SELECT CAST(source AS BIGINT) AS source, CAST(count(*) AS BIGINT) AS n_reached,
-        | CAST(min(arr) AS BIGINT) AS first_contact, CAST(sum(arr) AS BIGINT) AS sum_arrival
-        |FROM a3 WHERE arr <> -1 GROUP BY source""".stripMargin,
-
-    // q312: every hop replayed — the per-walk argmin over
-    // (md5(walk:step:nbr), nbr) is a window rank in SQL; md5 hex
-    // ordering and BIGINT→string casts agree between the engines (the
-    // Sampling md5-coin contract), so the whole corpus matches
-    // bit-for-bit.
-    "q312_random_walks" ->
-      """WITH b AS (SELECT doc_id AS a FROM documents WHERE doc_id % 20 = 0),
-        |edges0 AS (
-        | SELECT a AS u, a + 1 AS v FROM b
-        | UNION ALL SELECT a + 1, a + 2 FROM b
-        | UNION ALL SELECT a, a + 5 FROM b
-        | UNION ALL SELECT a + 5, a + 22 FROM b WHERE a % 40 = 0),
-        |e AS (SELECT DISTINCT least(u, v) AS u, greatest(u, v) AS v FROM edges0),
-        |sym AS (SELECT u AS src, v AS dst FROM e UNION ALL SELECT v, u FROM e),
-        |w0 AS (SELECT doc_id AS walk_id, doc_id AS node FROM documents WHERE doc_id % 100 = 0),
-        |s1 AS (SELECT walk_id, dst, row_number() OVER (PARTITION BY walk_id
-        |  ORDER BY md5(CAST(walk_id AS VARCHAR) || ':1:' || CAST(dst AS VARCHAR)), dst) AS rn
-        | FROM w0 JOIN sym ON sym.src = w0.node),
-        |w1 AS (SELECT walk_id, dst AS node FROM s1 WHERE rn = 1),
-        |s2 AS (SELECT walk_id, dst, row_number() OVER (PARTITION BY walk_id
-        |  ORDER BY md5(CAST(walk_id AS VARCHAR) || ':2:' || CAST(dst AS VARCHAR)), dst) AS rn
-        | FROM w1 JOIN sym ON sym.src = w1.node),
-        |w2 AS (SELECT walk_id, dst AS node FROM s2 WHERE rn = 1),
-        |s3 AS (SELECT walk_id, dst, row_number() OVER (PARTITION BY walk_id
-        |  ORDER BY md5(CAST(walk_id AS VARCHAR) || ':3:' || CAST(dst AS VARCHAR)), dst) AS rn
-        | FROM w2 JOIN sym ON sym.src = w2.node),
-        |w3 AS (SELECT walk_id, dst AS node FROM s3 WHERE rn = 1),
-        |s4 AS (SELECT walk_id, dst, row_number() OVER (PARTITION BY walk_id
-        |  ORDER BY md5(CAST(walk_id AS VARCHAR) || ':4:' || CAST(dst AS VARCHAR)), dst) AS rn
-        | FROM w3 JOIN sym ON sym.src = w3.node),
-        |w4 AS (SELECT walk_id, dst AS node FROM s4 WHERE rn = 1)
-        |SELECT CAST(walk_id AS BIGINT) AS walk_id, CAST(0 AS BIGINT) AS step,
-        | CAST(node AS BIGINT) AS node FROM w0
-        |UNION ALL SELECT walk_id, 1, node FROM w1
-        |UNION ALL SELECT walk_id, 2, node FROM w2
-        |UNION ALL SELECT walk_id, 3, node FROM w3
-        |UNION ALL SELECT walk_id, 4, node FROM w4""".stripMargin,
-
-    // q313: both sweeps replayed as bounded recursive closures (q310's
-    // BFS pattern); the pivot — farthest node, ties to the smallest id
-    // — is a LIMIT 1 subquery the second closure seeds from, mirroring
-    // the operator's one-row driver fetch.
-    "q313_double_sweep" ->
-      """WITH RECURSIVE b AS (SELECT doc_id AS a FROM documents WHERE doc_id % 20 = 0),
-        |edges0 AS (
-        | SELECT a AS u, a + 1 AS v FROM b
-        | UNION ALL SELECT a + 1, a + 2 FROM b
-        | UNION ALL SELECT a, a + 5 FROM b
-        | UNION ALL SELECT a + 5, a + 22 FROM b WHERE a % 40 = 0),
-        |e AS (SELECT DISTINCT least(u, v) AS u, greatest(u, v) AS v FROM edges0),
-        |sym AS (SELECT u AS src, v AS dst FROM e UNION ALL SELECT v, u FROM e),
-        |walk1(node, dist) AS (
-        | SELECT CAST(20 AS BIGINT), CAST(0 AS BIGINT)
-        | UNION
-        | SELECT m.dst, w.dist + 1 FROM walk1 w JOIN sym m ON m.src = w.node
-        | WHERE w.dist < 16),
-        |d1 AS (SELECT node, min(dist) AS dist FROM walk1 GROUP BY 1),
-        |piv AS (SELECT node, dist FROM d1 ORDER BY dist DESC, node ASC LIMIT 1),
-        |walk2(node, dist) AS (
-        | SELECT node, CAST(0 AS BIGINT) FROM piv
-        | UNION
-        | SELECT m.dst, w.dist + 1 FROM walk2 w JOIN sym m ON m.src = w.node
-        | WHERE w.dist < 16),
-        |d2 AS (SELECT node, min(dist) AS dist FROM walk2 GROUP BY 1)
-        |SELECT CAST(20 AS BIGINT) AS start_id,
-        | CAST((SELECT dist FROM piv) AS BIGINT) AS ecc_start,
-        | CAST((SELECT count(*) FROM d1) AS BIGINT) AS n_reached,
-        | CAST((SELECT node FROM piv) AS BIGINT) AS peripheral_id,
-        | CAST((SELECT max(dist) FROM d2) AS BIGINT) AS diameter_lb""".stripMargin,
-
-    // q314: q262's capped wedge kernel with the RA weight riding on the
-    // shared-neighbor side — 1e9 // deg(w) is exact integer arithmetic
-    // on both engines (true degree, computed before the cap).
-    "q314_link_ra" ->
-      """WITH li AS (
-        | SELECT l_orderkey, l_partkey FROM lineitem WHERE l_partkey % 4 = 0),
-        |e AS (
-        | SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        | FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-        |sym AS (SELECT u AS src, v AS dst FROM e UNION SELECT v, u FROM e),
-        |deg AS (SELECT src AS id, CAST(count(*) AS BIGINT) AS d FROM sym GROUP BY 1),
-        |capw AS (SELECT src, dst, 1000000000 // d AS w FROM (
-        | SELECT s.src, s.dst, dg.d,
-        |  row_number() OVER (PARTITION BY s.src ORDER BY s.dst) AS rn
-        | FROM sym s JOIN deg dg ON dg.id = s.src) WHERE rn <= 64),
-        |cn AS (
-        | SELECT a.dst AS u, b.dst AS v, CAST(count(*) AS BIGINT) AS n_common,
-        |  CAST(sum(a.w) AS BIGINT) AS ra
-        | FROM capw a JOIN capw b ON a.src = b.src AND a.dst < b.dst
-        | GROUP BY 1, 2)
-        |SELECT cn.u AS a_id, cn.v AS b_id, cn.n_common, cn.ra AS ra_score_e9,
-        | coalesce(ed.is_e, false) AS is_edge
-        |FROM cn
-        |LEFT JOIN (SELECT u, v, true AS is_e FROM e) ed
-        | ON ed.u = cn.u AND ed.v = cn.v
-        |WHERE cn.n_common >= 2""".stripMargin,
-
-    // q315: the capped event lists replayed with the same earliest-first
-    // row_number truncation, then the relay join with identical window
-    // predicates — ties inside the cap are between IDENTICAL rows, so
-    // the selected multiset is deterministic on both engines.
-    "q315_temporal_relay" ->
-      """WITH fwd AS (
-        | SELECT o.o_custkey * 2 AS src, l.l_suppkey * 2 + 1 AS dst,
-        |  CAST(CAST(o.o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS t
-        | FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-        |e AS (SELECT src, dst, t FROM fwd
-        | UNION ALL SELECT dst AS src, src AS dst, t + 1 AS t FROM fwd),
-        |inn AS (SELECT node, u, t1 FROM (
-        | SELECT dst AS node, src AS u, t AS t1,
-        |  row_number() OVER (PARTITION BY dst ORDER BY t, src) AS rn FROM e)
-        | WHERE rn <= 64),
-        |outt AS (SELECT node, w, t2 FROM (
-        | SELECT src AS node, dst AS w, t AS t2,
-        |  row_number() OVER (PARTITION BY src ORDER BY t, dst) AS rn FROM e)
-        | WHERE rn <= 64)
-        |SELECT CAST(i.node AS BIGINT) AS node, CAST(count(*) AS BIGINT) AS n_relays,
-        | CAST(count(DISTINCT i.u) AS BIGINT) AS n_sources
-        |FROM inn i JOIN outt o ON o.node = i.node
-        |WHERE o.t2 > i.t1 AND o.t2 <= i.t1 + 7 AND i.u <> o.w
-        |GROUP BY 1""".stripMargin,
-
-    // q316: the whole Brandes pipeline replayed level by level — forward
-    // σ-counting BFS unrolled to depth 4 (σ of a new node = sum over its
-    // previous-level predecessors, aggregated BEFORE the anti-join),
-    // the dist(w) = dist(v)+1 shortest-path DAG, then the backward
-    // dependency recurrence in HUGEINT floor division, which on these
-    // all-positive values equals Spark's DECIMAL(38,0) truncating `div`
-    // exactly. Levels never overlap per source (BFS dist is unique), so
-    // the UNION ALL of per-level deltas is the operator's accumulated
-    // frame bit-for-bit.
-    "q316_betweenness" ->
-      """WITH b AS (SELECT doc_id AS a FROM documents WHERE doc_id % 20 = 0),
-        |edges0 AS (
-        | SELECT a AS u, a + 1 AS v FROM b
-        | UNION ALL SELECT a + 1, a + 2 FROM b
-        | UNION ALL SELECT a, a + 5 FROM b
-        | UNION ALL SELECT a + 2, a + 5 FROM b
-        | UNION ALL SELECT a + 5, a + 22 FROM b WHERE a % 40 = 0),
-        |e AS (SELECT DISTINCT least(u, v) AS u, greatest(u, v) AS v FROM edges0),
-        |sym AS (SELECT u AS src, v AS dst FROM e UNION ALL SELECT v, u FROM e),
-        |l0 AS (SELECT a AS source, a AS node, CAST(1 AS BIGINT) AS sigma FROM b),
-        |n1 AS (SELECT l.source, s.dst AS node, CAST(sum(l.sigma) AS BIGINT) AS sigma
-        | FROM l0 l JOIN sym s ON s.src = l.node GROUP BY 1, 2),
-        |l1 AS (SELECT * FROM n1 WHERE NOT EXISTS (
-        | SELECT 1 FROM l0 v WHERE v.source = n1.source AND v.node = n1.node)),
-        |n2 AS (SELECT l.source, s.dst AS node, CAST(sum(l.sigma) AS BIGINT) AS sigma
-        | FROM l1 l JOIN sym s ON s.src = l.node GROUP BY 1, 2),
-        |l2 AS (SELECT * FROM n2 WHERE NOT EXISTS (
-        | SELECT 1 FROM (SELECT source, node FROM l0 UNION ALL SELECT source, node FROM l1) v
-        | WHERE v.source = n2.source AND v.node = n2.node)),
-        |n3 AS (SELECT l.source, s.dst AS node, CAST(sum(l.sigma) AS BIGINT) AS sigma
-        | FROM l2 l JOIN sym s ON s.src = l.node GROUP BY 1, 2),
-        |l3 AS (SELECT * FROM n3 WHERE NOT EXISTS (
-        | SELECT 1 FROM (SELECT source, node FROM l0 UNION ALL SELECT source, node FROM l1
-        |   UNION ALL SELECT source, node FROM l2) v
-        | WHERE v.source = n3.source AND v.node = n3.node)),
-        |n4 AS (SELECT l.source, s.dst AS node, CAST(sum(l.sigma) AS BIGINT) AS sigma
-        | FROM l3 l JOIN sym s ON s.src = l.node GROUP BY 1, 2),
-        |l4 AS (SELECT * FROM n4 WHERE NOT EXISTS (
-        | SELECT 1 FROM (SELECT source, node FROM l0 UNION ALL SELECT source, node FROM l1
-        |   UNION ALL SELECT source, node FROM l2 UNION ALL SELECT source, node FROM l3) v
-        | WHERE v.source = n4.source AND v.node = n4.node)),
-        |vis AS (
-        | SELECT source, node, 0 AS dist, sigma FROM l0
-        | UNION ALL SELECT source, node, 1, sigma FROM l1
-        | UNION ALL SELECT source, node, 2, sigma FROM l2
-        | UNION ALL SELECT source, node, 3, sigma FROM l3
-        | UNION ALL SELECT source, node, 4, sigma FROM l4),
-        |dag AS (
-        | SELECT v.source, v.node AS v, w.node AS w, v.dist AS dv,
-        |  v.sigma AS sv, w.sigma AS sw
-        | FROM vis v JOIN sym s ON s.src = v.node
-        | JOIN vis w ON w.source = v.source AND w.node = s.dst AND w.dist = v.dist + 1),
-        |d3 AS (SELECT source, v AS node,
-        |  CAST(sum((CAST(sv AS HUGEINT) * 1000000000) // sw) AS BIGINT) AS delta
-        | FROM dag WHERE dv = 3 GROUP BY 1, 2),
-        |d2 AS (SELECT dag.source, dag.v AS node,
-        |  CAST(sum((CAST(sv AS HUGEINT) * (1000000000 + coalesce(d3.delta, 0))) // sw)
-        |   AS BIGINT) AS delta
-        | FROM dag LEFT JOIN d3 ON d3.source = dag.source AND d3.node = dag.w
-        | WHERE dv = 2 GROUP BY 1, 2),
-        |d1 AS (SELECT dag.source, dag.v AS node,
-        |  CAST(sum((CAST(sv AS HUGEINT) * (1000000000 + coalesce(d2.delta, 0))) // sw)
-        |   AS BIGINT) AS delta
-        | FROM dag LEFT JOIN d2 ON d2.source = dag.source AND d2.node = dag.w
-        | WHERE dv = 1 GROUP BY 1, 2),
-        |dd AS (SELECT * FROM d3 UNION ALL SELECT * FROM d2 UNION ALL SELECT * FROM d1)
-        |SELECT CAST(node AS BIGINT) AS node, CAST(sum(delta) AS BIGINT) AS bc_e9,
-        | CAST(count(*) AS BIGINT) AS n_sources
-        |FROM dd WHERE node <> source GROUP BY 1 HAVING sum(delta) > 0""".stripMargin,
-
-    // q317: the concatenated stream replayed with a window prefix sum;
-    // each document fans out to the window range its token span crosses
-    // (generate_series = Spark's sequence), span arithmetic identical.
-    "q317_concat_chunk" ->
-      """WITH d AS (SELECT doc_id,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS n
-        | FROM documents),
-        |p AS (SELECT doc_id, n,
-        |  CAST(sum(n) OVER (ORDER BY doc_id) - n AS BIGINT) AS s
-        | FROM d WHERE n > 0),
-        |x AS (SELECT doc_id, n, s,
-        |  unnest(generate_series(s // 256, (s + n - 1) // 256)) AS w FROM p)
-        |SELECT CAST(w AS BIGINT) AS window_id, doc_id,
-        | CAST(greatest(w * 256, s) - w * 256 AS BIGINT) AS offset_in_window,
-        | CAST(least((w + 1) * 256, s + n) - greatest(w * 256, s) AS BIGINT) AS n_in_window,
-        | s >= w * 256 AS is_head, s + n <= (w + 1) * 256 AS is_tail
-        |FROM x""".stripMargin,
-
-    // q318: the jump function (max j with S_j ≤ S_i + 256) built by an
-    // inequality join + max, then the window boundaries walked with a
-    // recursive CTE — the sequential recurrence the operator's
-    // pointer-doubling orbit computes without one. Assignment = the last
-    // boundary strictly before each doc's cumulative position.
-    "q318_pack_nextfit" ->
-      """WITH RECURSIVE d AS (SELECT doc_id,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS n
-        | FROM documents),
-        |p AS (SELECT doc_id, n,
-        |  CAST(row_number() OVER (ORDER BY doc_id) AS BIGINT) AS rk,
-        |  CAST(sum(n) OVER (ORDER BY doc_id) AS BIGINT) AS cum
-        | FROM d WHERE n > 0),
-        |s0 AS (SELECT rk, cum FROM p
-        | UNION ALL SELECT CAST(0 AS BIGINT), CAST(0 AS BIGINT)),
-        |j AS (SELECT t.rk AS i, CAST(max(b.rk) AS BIGINT) AS jmp
-        | FROM s0 t JOIN s0 b ON b.cum <= t.cum + 1024 GROUP BY 1),
-        |wb(b, w) AS (
-        | SELECT CAST(0 AS BIGINT) AS b, CAST(0 AS BIGINT) AS w
-        | UNION ALL
-        | SELECT j.jmp, wb.w + 1 FROM wb JOIN j ON j.i = wb.b WHERE j.jmp > wb.b),
-        |bnd AS (SELECT wb.w, s0.cum AS bc FROM wb JOIN s0 ON s0.rk = wb.b)
-        |SELECT p.doc_id,
-        | CAST((SELECT max(bnd.w) FROM bnd WHERE bnd.bc < p.cum) AS BIGINT) AS window_id,
-        | p.n AS n_tokens
-        |FROM p""".stripMargin,
-
-    // q319: the incremental merge is DEFINED as equality with a from-
-    // scratch recompute, so the oracle computes components of the UNION
-    // graph (chains + a%40 bridges + the new a%60 links) directly — the
-    // q54 closure with one extra edge family.
-    "q319_incremental_components" ->
-      """WITH RECURSIVE b AS (SELECT doc_id AS a FROM documents WHERE doc_id % 20 = 0),
-        |edges0 AS (
-        | SELECT a AS u, a + 1 AS v FROM b
-        | UNION ALL SELECT a + 1, a + 2 FROM b
-        | UNION ALL SELECT a, a + 5 FROM b
-        | UNION ALL SELECT a + 5, a + 22 FROM b WHERE a % 40 = 0
-        | UNION ALL SELECT a + 2, a + 20 FROM b WHERE a % 60 = 0),
-        |edges AS (
-        | SELECT u, v FROM edges0 UNION SELECT v, u FROM edges0),
-        |nodes AS (SELECT DISTINCT u AS id FROM edges),
-        |reach(id, r) AS (
-        | SELECT id, id FROM nodes
-        | UNION
-        | SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.id)
-        |SELECT id, min(r) AS component FROM reach GROUP BY id""".stripMargin,
-
-    // q320: both MM iterations unrolled — denominator terms and the
-    // win/denominator quotient in HUGEINT floor division (= Spark's
-    // truncating DECIMAL `div` on these all-positive values), each round
-    // closed by the same max-normalization with its ε-floor of 1.
-    "q320_bradley_terry" ->
-      """WITH li AS (SELECT l_orderkey, l_linenumber, l_suppkey % 100 AS p,
-        |  CAST(l_quantity AS BIGINT) AS q FROM lineitem WHERE l_linenumber <= 2),
-        |a AS (SELECT l_orderkey AS ok, p AS pa, q AS qa FROM li WHERE l_linenumber = 1),
-        |b AS (SELECT l_orderkey AS ok, p AS pb, q AS qb FROM li WHERE l_linenumber = 2),
-        |duel AS (SELECT
-        |  CASE WHEN qa > qb OR (qa = qb AND pa < pb) THEN pa ELSE pb END AS w,
-        |  CASE WHEN qa > qb OR (qa = qb AND pa < pb) THEN pb ELSE pa END AS l
-        | FROM a JOIN b USING (ok) WHERE pa <> pb),
-        |dct AS (SELECT w, l, CAST(count(*) AS BIGINT) AS c FROM duel GROUP BY 1, 2),
-        |sym AS (SELECT i, j, CAST(sum(c) AS BIGINT) AS n FROM (
-        | SELECT w AS i, l AS j, c FROM dct UNION ALL SELECT l, w, c FROM dct)
-        | GROUP BY 1, 2),
-        |stats AS (SELECT g.i, CAST(coalesce(wn.wins, 0) AS BIGINT) AS wins, g.games
-        | FROM (SELECT i, CAST(sum(n) AS BIGINT) AS games FROM sym GROUP BY 1) g
-        | LEFT JOIN (SELECT w AS i, CAST(sum(c) AS BIGINT) AS wins FROM dct GROUP BY 1) wn
-        |  ON wn.i = g.i),
-        |s0 AS (SELECT i, CAST(1000000 AS BIGINT) AS s FROM stats),
-        |d1 AS (SELECT sym.i,
-        |  CAST(sum((CAST(n AS HUGEINT) * 1000000 * 1000000) // (si.s + sj.s)) AS BIGINT) AS d
-        | FROM sym JOIN s0 si ON si.i = sym.i JOIN s0 sj ON sj.i = sym.j GROUP BY 1),
-        |r1 AS (SELECT stats.i, greatest(CAST(1 AS BIGINT),
-        |  CAST((CAST(wins AS HUGEINT) * 1000000 * 1000000) // d AS BIGINT)) AS s
-        | FROM stats JOIN d1 ON d1.i = stats.i),
-        |s1 AS (SELECT i, greatest(CAST(1 AS BIGINT),
-        |  CAST((CAST(s AS HUGEINT) * 1000000) // (SELECT max(s) FROM r1) AS BIGINT)) AS s
-        | FROM r1),
-        |d2 AS (SELECT sym.i,
-        |  CAST(sum((CAST(n AS HUGEINT) * 1000000 * 1000000) // (si.s + sj.s)) AS BIGINT) AS d
-        | FROM sym JOIN s1 si ON si.i = sym.i JOIN s1 sj ON sj.i = sym.j GROUP BY 1),
-        |r2 AS (SELECT stats.i, greatest(CAST(1 AS BIGINT),
-        |  CAST((CAST(wins AS HUGEINT) * 1000000 * 1000000) // d AS BIGINT)) AS s
-        | FROM stats JOIN d2 ON d2.i = stats.i),
-        |s2 AS (SELECT i, greatest(CAST(1 AS BIGINT),
-        |  CAST((CAST(s AS HUGEINT) * 1000000) // (SELECT max(s) FROM r2) AS BIGINT)) AS s
-        | FROM r2)
-        |SELECT s2.i AS id, s2.s AS strength_e6, stats.wins, stats.games
-        |FROM s2 JOIN stats ON stats.i = s2.i""".stripMargin,
-
-    // q321: priorities replayed with the shared hex-prefix uniform (+1
-    // keeps the divisor in [1, 2^32]), top-201 ordered identically, the
-    // threshold as a scalar CASE over the (k+1) count, selection LIMIT k.
-    "q321_priority_sample" -> {
-      val u32 = hexPrefixOracle("md5(CAST(id AS VARCHAR))", 8)
-      s"""WITH d AS (SELECT doc_id AS id,
-         |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS weight
-         | FROM documents),
-         |p AS (SELECT id, weight,
-         |  CAST((weight * 4294967296) // ($u32 + 1) AS BIGINT) AS priority
-         | FROM d WHERE weight > 0),
-         |top AS (SELECT * FROM p ORDER BY priority DESC, id ASC LIMIT 201),
-         |tau AS (SELECT CASE WHEN count(*) = 201 THEN min(priority) ELSE CAST(0 AS BIGINT) END AS t
-         | FROM top)
-         |SELECT id, weight, priority,
-         | greatest(weight, (SELECT t FROM tau)) AS est_weight
-         |FROM (SELECT * FROM top ORDER BY priority DESC, id ASC LIMIT 200)""".stripMargin
-    },
-    // q322/q323: the positional self-join |i-j| in [1, w] replays the
-    // slice+zip_with symmetric window exactly (each ordered occurrence
-    // once per direction).
-    "q322_skipgrams" ->
-      s"""WITH $TokenPosCte,
-         |p AS (SELECT a.word AS center, b.word AS context
-         |      FROM t a JOIN t b ON a.doc_id = b.doc_id
-         |       AND abs(b.pos - a.pos) BETWEEN 1 AND 3)
-         |SELECT center, context, CAST(count(*) AS BIGINT) AS n
-         |FROM p GROUP BY 1, 2 HAVING count(*) >= 5""".stripMargin,
-    "q323_skipgram_lift" ->
-      s"""WITH $TokenPosCte,
-         |p AS (SELECT a.word AS center, b.word AS context
-         |      FROM t a JOIN t b ON a.doc_id = b.doc_id
-         |       AND abs(b.pos - a.pos) BETWEEN 1 AND 2),
-         |co AS (SELECT center, context, count(*) AS n FROM p GROUP BY 1, 2),
-         |r AS (SELECT center, sum(n) AS n_center FROM co GROUP BY 1),
-         |c AS (SELECT context, sum(n) AS n_context FROM co GROUP BY 1),
-         |tt AS (SELECT sum(n) AS n_total FROM co)
-         |SELECT co.center, co.context, CAST(co.n AS BIGINT) AS n,
-         | CAST((CAST(tt.n_total AS HUGEINT) * co.n * 1000000)
-         |   // (CAST(r.n_center AS HUGEINT) * c.n_context) AS BIGINT) AS lift_e6
-         |FROM co JOIN r USING (center) JOIN c USING (context), tt
-         |WHERE co.n >= 20""".stripMargin,
-    // q324/q325: recursive transitive closure of the directed sccPairs
-    // graph; SCC label = min over mutually-reachable peers (cycle nodes
-    // reach themselves through the cycle, singletons fall back to id).
-    "q324_scc" ->
-      s"""WITH RECURSIVE $SccClosureCte
-         |SELECT n.id,
-         | CAST(least(coalesce(min(m.peer), n.id), n.id) AS BIGINT) AS component
-         |FROM nodes n LEFT JOIN mut m ON n.id = m.id
-         |GROUP BY n.id""".stripMargin,
-    "q325_scc_condensation" ->
-      s"""WITH RECURSIVE $SccClosureCte,
-         |scc AS (
-         | SELECT n.id, least(coalesce(min(m.peer), n.id), n.id) AS comp
-         | FROM nodes n LEFT JOIN mut m ON n.id = m.id GROUP BY n.id)
-         |SELECT CAST(sa.comp AS BIGINT) AS src_scc,
-         | CAST(sb.comp AS BIGINT) AS dst_scc,
-         | CAST(count(*) AS BIGINT) AS n_edges
-         |FROM e0 JOIN scc sa ON e0.src = sa.id JOIN scc sb ON e0.dst = sb.id
-         |WHERE sa.comp <> sb.comp GROUP BY 1, 2""".stripMargin,
-    // q326/q327: the q78 int8-lattice quantization replayed, split into
-    // 4 x 16-dim subspaces; codes/ADC are exact BIGINT arithmetic.
-    "q326_pq_codes" ->
-      s"""WITH $PqCodesCte
-         |SELECT vec_id, s, j AS code, d2
-         |FROM (SELECT *, row_number() OVER (PARTITION BY vec_id, s
-         |        ORDER BY d2, j) AS rn FROM d)
-         |WHERE rn = 1""".stripMargin,
-    "q327_pq_adc_topk" ->
-      s"""WITH $PqCodesCte,
-         |codes AS (
-         | SELECT vec_id, s, j AS code
-         | FROM (SELECT *, row_number() OVER (PARTITION BY vec_id, s
-         |         ORDER BY d2, j) AS rn FROM d)
-         | WHERE rn = 1),
-         |lut AS (SELECT vec_id AS query_id, s, j AS code, d2 AS qd2
-         |        FROM d WHERE vec_id < 8),
-         |adc AS (
-         | SELECT l.query_id, c.vec_id AS neighbor_id,
-         |  CAST(sum(l.qd2) AS BIGINT) AS adc_d2
-         | FROM codes c JOIN lut l ON c.s = l.s AND c.code = l.code
-         | WHERE c.vec_id <> l.query_id
-         | GROUP BY 1, 2)
-         |SELECT query_id, neighbor_id, adc_d2, rank FROM (
-         | SELECT *, row_number() OVER (PARTITION BY query_id
-         |   ORDER BY adc_d2, neighbor_id) AS rank FROM adc)
-         |WHERE rank <= 10""".stripMargin,
-    // q328: longest path = max depth over ALL walks ending at a node; the
-    // recursive walk table is bounded by nodes × depth (UNION dedups).
-    "q328_dag_layers" ->
-      """WITH RECURSIVE b AS (
-        | SELECT doc_id AS n FROM documents WHERE doc_id % 10 = 0 AND doc_id > 0),
-        |e0 AS (
-        | SELECT n AS src, n // 2 AS dst FROM b
-        | UNION ALL SELECT n, n - 30 FROM b WHERE n % 40 = 0),
-        |e AS (SELECT DISTINCT src, dst FROM e0),
-        |nodes AS (SELECT DISTINCT id FROM (SELECT src AS id FROM e UNION ALL SELECT dst FROM e)),
-        |walk(id, d) AS (
-        | SELECT id, CAST(0 AS BIGINT) FROM nodes
-        | UNION
-        | SELECT e.dst, ww.d + 1 FROM walk ww JOIN e ON e.src = ww.id)
-        |SELECT id, CAST(max(d) AS BIGINT) AS layer FROM walk GROUP BY id""".stripMargin,
-    "q329_glove_cooc" ->
-      s"""WITH $TokenPosCte,
-         |p AS (SELECT a.word AS center, b.word AS context,
-         |  1000000 // abs(b.pos - a.pos) AS w
-         |      FROM t a JOIN t b ON a.doc_id = b.doc_id
-         |       AND abs(b.pos - a.pos) BETWEEN 1 AND 3)
-         |SELECT center, context, CAST(count(*) AS BIGINT) AS n,
-         | CAST(sum(w) AS BIGINT) AS w_e6
-         |FROM p GROUP BY 1, 2 HAVING count(*) >= 5""".stripMargin,
-    // q330: all-pairs eps-graph is fine at oracle scale; clusters replay
-    // as the q54-idiom min-closure over the core-core subgraph.
-    "q330_dbscan" ->
-      """WITH RECURSIVE p AS (
-        | SELECT CAST(c_custkey AS BIGINT) AS id,
-        |  (CAST(c_custkey AS BIGINT) * CAST(c_custkey AS BIGINT) * 7919
-        |   + CAST(c_custkey AS BIGINT) * 104729) % 100003 AS x,
-        |  (CAST(c_custkey AS BIGINT) * CAST(c_custkey AS BIGINT) * 6983
-        |   + CAST(c_custkey AS BIGINT) * 92821) % 99991 AS y
-        | FROM customer),
-        |pr AS (
-        | SELECT a.id AS a_id, b.id AS b_id FROM p a JOIN p b ON a.id < b.id
-        |  AND (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) <= 6250000),
-        |deg AS (SELECT id, count(*) AS nn FROM
-        | (SELECT a_id AS id FROM pr UNION ALL SELECT b_id FROM pr) GROUP BY 1),
-        |core AS (SELECT p.id FROM p LEFT JOIN deg USING (id)
-        |         WHERE coalesce(nn, 0) + 1 >= 4),
-        |ce0 AS (SELECT a_id AS u, b_id AS v FROM pr
-        |        WHERE a_id IN (SELECT id FROM core) AND b_id IN (SELECT id FROM core)),
-        |ce AS (SELECT u, v FROM ce0 UNION SELECT v, u FROM ce0),
-        |reach(id, r) AS (
-        | SELECT id, id FROM core
-        | UNION
-        | SELECT ce.u, reach.r FROM ce JOIN reach ON ce.v = reach.id),
-        |clab AS (SELECT id, min(r) AS cluster FROM reach GROUP BY id),
-        |adj AS (SELECT a_id AS id, b_id AS nb FROM pr UNION ALL SELECT b_id, a_id FROM pr),
-        |border AS (
-        | SELECT adj.id, min(cl.cluster) AS cluster
-        | FROM adj JOIN clab cl ON adj.nb = cl.id
-        | WHERE adj.id NOT IN (SELECT id FROM core) GROUP BY adj.id)
-        |SELECT id, CAST(cluster AS BIGINT) AS cluster, 'core' AS kind FROM clab
-        |UNION ALL SELECT id, CAST(cluster AS BIGINT), 'border' FROM border
-        |UNION ALL SELECT id, CAST(-1 AS BIGINT), 'noise' FROM p
-        | WHERE id NOT IN (SELECT id FROM clab)
-        |   AND id NOT IN (SELECT id FROM border)""".stripMargin,
-    // q331: the Poisson(1) draw replayed from the shared cumulative
-    // thresholds (Sampling.PoissonCum — ONE source for both engines).
-    "q331_bootstrap_sums" -> {
-      val u = hexPrefixOracle("md5(id || ':' || CAST(replicate AS VARCHAR))", 8)
-      val kCase = Sampling.PoissonCum.zipWithIndex.reverse
-        .map { case (t, i) => s"WHEN u >= $t THEN ${i + 1}" }
-        .mkString("CASE ", " ", " ELSE 0 END")
-      s"""WITH li AS (
-         | SELECT CAST(l_orderkey * 10 + l_linenumber AS VARCHAR) AS id,
-         |  CAST(l_quantity AS BIGINT) AS v
-         | FROM lineitem),
-         |x AS (SELECT id, v, r.r AS replicate FROM li, range(0, 32) r(r)),
-         |uu AS (SELECT replicate, v, $u AS u FROM x),
-         |k AS (SELECT replicate, v, $kCase AS k FROM uu)
-         |SELECT replicate, CAST(sum(k) AS BIGINT) AS n_rows,
-         | CAST(sum(k * v) AS BIGINT) AS sum_value
-         |FROM k GROUP BY 1""".stripMargin
-    },
-    // q332: the md5-fixed HLL replayed register by register; the rank is
-    // the same descending comparison chain the operator codegens.
-    "q332_hll_profile" -> {
-      val u = hexPrefixOracle("md5(CAST(l_partkey AS VARCHAR))", 8)
-      val rankCase = (1 to 26)
-        .map(r => s"WHEN w >= ${1L << (26 - r)} THEN $r")
-        .mkString("CASE ", " ", " ELSE 27 END")
-      s"""WITH uu AS (SELECT $u AS u FROM lineitem),
-         |s AS (SELECT u // 67108864 AS bucket, u % 67108864 AS w FROM uu),
-         |r AS (SELECT bucket, max($rankCase) AS register FROM s GROUP BY 1),
-         |z AS (SELECT g.b AS bucket, coalesce(r.register, 0) AS register
-         |      FROM range(0, 64) g(b) LEFT JOIN r ON g.b = r.bucket),
-         |agg AS (SELECT count(*) AS m,
-         |  sum(CASE WHEN register = 0 THEN 1 ELSE 0 END) AS n_zero_registers,
-         |  sum(CAST(1 AS BIGINT) << (27 - register)) AS s_num FROM z)
-         |SELECT CAST(m AS BIGINT) AS m,
-         | CAST(n_zero_registers AS BIGINT) AS n_zero_registers,
-         | CAST(s_num AS BIGINT) AS s_num,
-         | CAST((CAST(709340 AS BIGINT) * 4096 * (CAST(1 AS BIGINT) << 27))
-         |   // s_num AS BIGINT) AS est_e6,
-         | (SELECT CAST(count(DISTINCT l_partkey) AS BIGINT) FROM lineitem) AS n_exact
-         |FROM agg""".stripMargin
-    },
-    "q333_kmv_distinct" -> {
-      val u = hexPrefixOracle("md5(CAST(l_partkey AS VARCHAR))", 8)
-      s"""WITH uu AS (SELECT DISTINCT $u AS u FROM lineitem),
-         |bottom AS (SELECT u FROM uu ORDER BY u LIMIT 256),
-         |a AS (SELECT count(*) AS n_in, max(u) AS kth FROM bottom),
-         |e AS (SELECT count(*) AS n_exact FROM uu)
-         |SELECT CAST(256 AS BIGINT) AS k,
-         | CAST(CASE WHEN n_in < 256 THEN 0 ELSE kth END AS BIGINT) AS kth_min,
-         | CAST(CASE WHEN n_in < 256 THEN n_exact
-         |      ELSE (255 * 4294967296) // kth END AS BIGINT) AS est,
-         | CAST(n_exact AS BIGINT) AS n_exact
-         |FROM a, e""".stripMargin
-    },
-    "q334_count_min" -> {
-      val ub = hexPrefixOracle("md5(value || ':' || CAST(r AS VARCHAR))", 8)
-      s"""WITH v AS (SELECT CAST(o_custkey AS VARCHAR) AS value FROM orders),
-         |fan AS (SELECT value, r.r AS r FROM v, range(0, 4) r(r)),
-         |cells AS (SELECT r, $ub % 512 AS b, count(*) AS c
-         |          FROM fan GROUP BY 1, 2),
-         |top AS (SELECT value, count(*) AS n_exact FROM v GROUP BY 1
-         |        ORDER BY n_exact DESC, value ASC LIMIT 20),
-         |tr AS (SELECT value, n_exact,
-         |  row_number() OVER (ORDER BY n_exact DESC, value ASC) AS rank FROM top),
-         |j AS (SELECT value, n_exact, rank, r.r AS r, $ub % 512 AS b
-         |      FROM tr, range(0, 4) r(r))
-         |SELECT j.value, CAST(j.n_exact AS BIGINT) AS n_exact,
-         | CAST(min(c.c) AS BIGINT) AS cm_est, CAST(j.rank AS BIGINT) AS rank
-         |FROM j JOIN cells c ON j.r = c.r AND j.b = c.b
-         |GROUP BY 1, 2, 4""".stripMargin
-    },
-    "q335_bloom_audit" -> {
-      def bitOf(vExpr: String, hExpr: String) =
-        hexPrefixOracle(s"md5($vExpr || '#' || CAST($hExpr AS VARCHAR))", 8) + " % 2048"
-      s"""WITH m AS (SELECT DISTINCT CAST(c_custkey AS VARCHAR) AS v
-         |           FROM customer WHERE c_custkey % 7 = 0),
-         |bitset AS (SELECT DISTINCT ${bitOf("m.v", "h.h")} AS bit
-         |           FROM m, range(0, 4) h(h)),
-         |p AS (SELECT DISTINCT CAST(o_custkey AS VARCHAR) AS v FROM orders),
-         |pm AS (SELECT p.v, CASE WHEN m.v IS NOT NULL THEN 1 ELSE 0 END AS is_m
-         |       FROM p LEFT JOIN m ON p.v = m.v),
-         |hits AS (SELECT pm.v, pm.is_m, count(*) AS nh
-         | FROM pm, range(0, 4) h(h)
-         | WHERE (${bitOf("pm.v", "h.h")}) IN (SELECT bit FROM bitset)
-         | GROUP BY 1, 2),
-         |pos AS (SELECT count(*) AS n_positive, coalesce(sum(is_m), 0) AS n_true
-         |        FROM hits WHERE nh = 4),
-         |tot AS (SELECT count(*) AS n_probed, sum(is_m) AS n_member_probed FROM pm)
-         |SELECT CAST(n_probed AS BIGINT) AS n_probed,
-         | CAST(n_member_probed AS BIGINT) AS n_member_probed,
-         | CAST(n_positive AS BIGINT) AS n_positive,
-         | CAST(n_positive - n_true AS BIGINT) AS n_false_positive,
-         | CAST((1000000 * (n_positive - n_true))
-         |   // greatest(n_probed - n_member_probed, 1) AS BIGINT) AS fp_ppm
-         |FROM pos, tot""".stripMargin
-    },
-    // q336: q23's coarse routing CTEs composed with the PQ chain — the
-    // candidate set is the probed lists, the distance is the ADC sum.
-    // (Chain shared with q360's recall oracle via IvfPqAnnCtes.)
-    "q336_ivfpq_topk" ->
-      s"""WITH $IvfPqAnnCtes
-         |SELECT query_id, neighbor_id, adc_d2, rank FROM ivfpq""".stripMargin,
-    "q337_kmv_vocab_jaccard" -> {
-      val u = hexPrefixOracle("md5(word)", 8)
-      def toks(where: String) =
-        s"""SELECT DISTINCT $u AS u FROM (
-           | SELECT unnest(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-           |   w -> len(w) > 0)) AS word
-           | FROM documents WHERE $where)""".stripMargin
-      s"""WITH ta AS (${toks("lang = 'en'")}),
-         |tb AS (${toks("lang <> 'en'")}),
-         |un AS (SELECT u FROM ta UNION SELECT u FROM tb),
-         |bottom AS (SELECT u FROM un ORDER BY u LIMIT 256),
-         |sh AS (SELECT count(*) AS n_shared FROM bottom
-         |       WHERE u IN (SELECT u FROM ta) AND u IN (SELECT u FROM tb)),
-         |ns AS (SELECT count(*) AS n_sketch FROM bottom),
-         |ue AS (SELECT count(*) AS n_union_exact FROM un),
-         |ie AS (SELECT count(*) AS n_inter_exact FROM ta WHERE u IN (SELECT u FROM tb))
-         |SELECT CAST(256 AS BIGINT) AS k, CAST(n_sketch AS BIGINT) AS n_sketch,
-         | CAST(n_shared AS BIGINT) AS n_shared,
-         | CAST((1000000 * n_shared) // n_sketch AS BIGINT) AS jaccard_est_ppm,
-         | CAST(n_inter_exact AS BIGINT) AS n_inter_exact,
-         | CAST(n_union_exact AS BIGINT) AS n_union_exact,
-         | CAST((1000000 * n_inter_exact) // n_union_exact AS BIGINT) AS jaccard_exact_ppm
-         |FROM sh, ns, ue, ie""".stripMargin
-    },
-    // q338: the q321 priority contract replayed per group; tau = the
-    // group's (k+1)-th priority via the same window rank.
-    "q338_priority_per_group" -> {
-      val u32 = hexPrefixOracle("md5(CAST(id AS VARCHAR))", 8)
-      s"""WITH d AS (SELECT source, doc_id AS id,
-         |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS weight
-         | FROM documents),
-         |p AS (SELECT source, id, weight,
-         |  CAST((weight * 4294967296) // ($u32 + 1) AS BIGINT) AS priority
-         | FROM d WHERE weight > 0),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY source
-         |        ORDER BY priority DESC, id ASC) AS rk FROM p),
-         |tau AS (SELECT source,
-         |  max(CASE WHEN rk = 41 THEN priority ELSE 0 END) AS t
-         | FROM r WHERE rk <= 41 GROUP BY source)
-         |SELECT r.source AS "group", r.id, r.weight, r.priority,
-         | greatest(r.weight, tau.t) AS est_weight
-         |FROM r JOIN tau USING (source) WHERE rk <= 40""".stripMargin
-    },
-    // q339: shared Audit.BenfordPpm constants; floor() before the digit
-    // (double→int CASTs round half-even in the oracle engine, floor is
-    // engine-neutral).
-    "q339_benford" -> {
-      val probs = Audit.BenfordPpm.zipWithIndex
-        .map { case (p, i) => s"(${i + 1}, $p)" }.mkString(", ")
-      s"""WITH v AS (SELECT CAST(floor(o_totalprice) AS BIGINT) AS v FROM orders),
-         |d AS (SELECT CAST(substring(CAST(v AS VARCHAR), 1, 1) AS BIGINT) AS digit,
-         |  count(*) AS n FROM v WHERE v > 0 GROUP BY 1),
-         |bp AS (SELECT * FROM (VALUES $probs) t(digit, benford_ppm)),
-         |tot AS (SELECT sum(n) AS tot FROM d)
-         |SELECT CAST(bp.digit AS BIGINT) AS digit,
-         | CAST(coalesce(d.n, 0) AS BIGINT) AS n,
-         | CAST(bp.benford_ppm AS BIGINT) AS benford_ppm,
-         | CAST((1000000 * coalesce(d.n, 0)) // greatest(tot.tot, 1) AS BIGINT) AS share_ppm,
-         | CAST((1000000 * coalesce(d.n, 0)) // greatest(tot.tot, 1)
-         |   - bp.benford_ppm AS BIGINT) AS dev_ppm
-         |FROM bp LEFT JOIN d ON bp.digit = d.digit, tot""".stripMargin
-    },
-    // q340: bounded-cost recursive walk enumeration (all true shortest
-    // distances on this dense mod-300 graph sit far below the 50 bound),
-    // then min per (source, node).
-    "q340_weighted_sssp" ->
-      """WITH RECURSIVE e0 AS (
-        | SELECT user_id % 300 AS src, event_id % 300 AS dst,
-        |  event_id % 7 + 1 AS w
-        | FROM events),
-        |e AS (SELECT src, dst, CAST(min(w) AS BIGINT) AS w
-        |      FROM e0 WHERE src <> dst GROUP BY 1, 2),
-        |walk(source, node, d) AS (
-        | SELECT s.s, s.s, CAST(0 AS BIGINT)
-        | FROM (VALUES (0), (1), (2), (3)) s(s)
-        | UNION
-        | SELECT ww.source, e.dst, ww.d + e.w
-        | FROM walk ww JOIN e ON e.src = ww.node WHERE ww.d + e.w <= 50)
-        |SELECT CAST(source AS BIGINT) AS source, CAST(node AS BIGINT) AS node,
-        | CAST(min(d) AS BIGINT) AS dist
-        |FROM walk GROUP BY 1, 2""".stripMargin,
-    // q341: pinned sequential-greedy matching over the derived sf0.01
-    // event graph (regenerate: python3 tools/pin_matching.py) — the
-    // q304/q305 independent-reference fixture-pin pattern;
-    // PathsAndMatchingSpec carries the generalization burden (random
-    // graphs vs an in-memory sequential greedy).
-    // q341: FULL iterative replay (upgraded r13 from the pinned VALUES):
-    // locally-minimal-edge rounds unrolled generously — each round takes
-    // every edge that is the (w,u,v)-minimal incident edge of BOTH its
-    // endpoints, then drops matched vertices; once the edge table
-    // empties, the remaining rounds are no-ops, so over-unrolling is
-    // harmless while under-unrolling fails loudly as missing rows.
-    // MATERIALIZED for the same 2^N-inlining reason as q345.
-    // tools/pin_matching.py remains as an independent third derivation.
-    "q341_greedy_matching" -> {
-      val nRounds = 24
-      val rounds = (1 to nRounds).map { r =>
-        val prev = if (r == 1) "e0" else s"e${r - 1}"
-        s"""nom$r AS MATERIALIZED (
-           | SELECT node, w, u, v FROM (
-           |  SELECT node, w, u, v,
-           |   row_number() OVER (PARTITION BY node ORDER BY w, u, v) AS rn
-           |  FROM (SELECT u AS node, w, u, v FROM $prev
-           |        UNION ALL SELECT v AS node, w, u, v FROM $prev))
-           | WHERE rn = 1),
-           |t$r AS MATERIALIZED (
-           | SELECT e.u, e.v, e.w FROM $prev e
-           | JOIN nom$r a ON a.node = e.u AND a.w = e.w AND a.u = e.u AND a.v = e.v
-           | JOIN nom$r b ON b.node = e.v AND b.w = e.w AND b.u = e.u AND b.v = e.v),
-           |e$r AS MATERIALIZED (
-           | SELECT * FROM $prev
-           | WHERE u NOT IN (SELECT u AS node FROM t$r UNION SELECT v FROM t$r)
-           |  AND v NOT IN (SELECT u AS node FROM t$r UNION SELECT v FROM t$r))""".stripMargin
-      }.mkString(",\n")
-      val sel = (1 to nRounds).map(r => s"SELECT u, v, w FROM t$r")
-        .mkString("\n UNION ALL ")
-      s"""WITH raw AS (SELECT user_id % 120 AS a, event_id % 120 AS b,
-         |  event_id % 97 + 1 AS w FROM events),
-         |e0 AS MATERIALIZED (
-         | SELECT least(a, b) AS u, greatest(a, b) AS v, min(w) AS w
-         | FROM raw WHERE least(a, b) <> greatest(a, b)
-         | GROUP BY 1, 2),
-         |$rounds
-         |SELECT CAST(u AS BIGINT) AS u, CAST(v AS BIGINT) AS v,
-         | CAST(w AS BIGINT) AS w
-         |FROM ($sel)""".stripMargin
-    },
-    // q342: the q19 cosine ranking (restricted to the 8 shared queries)
-    // full-outer-joined with the q327 ADC ranking, integer RRF scores.
-    "q342_rrf_fusion" ->
-      s"""WITH $PqCodesCte,
-         |codes AS (
-         | SELECT vec_id, s, j AS code
-         | FROM (SELECT *, row_number() OVER (PARTITION BY vec_id, s
-         |         ORDER BY d2, j) AS rn FROM d)
-         | WHERE rn = 1),
-         |lut AS (SELECT vec_id AS query_id, s, j AS code, d2 AS qd2
-         |        FROM d WHERE vec_id < 8),
-         |adc0 AS (
-         | SELECT l.query_id, c.vec_id AS neighbor_id,
-         |  CAST(sum(l.qd2) AS BIGINT) AS adc_d2
-         | FROM codes c JOIN lut l ON c.s = l.s AND c.code = l.code
-         | WHERE c.vec_id <> l.query_id
-         | GROUP BY 1, 2),
-         |adcr AS (
-         | SELECT query_id, neighbor_id, rank FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY adc_d2, neighbor_id) AS rank FROM adc0)
-         | WHERE rank <= 10),
-         |bf AS (
-         | SELECT query_id, neighbor_id, rank FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |   row_number() OVER (PARTITION BY q.vec_id
-         |     ORDER BY list_cosine_similarity(c.embedding, q.embedding) DESC, c.vec_id) AS rank
-         |  FROM embeddings c, embeddings q
-         |  WHERE q.vec_id < 8 AND c.vec_id <> q.vec_id)
-         | WHERE rank <= 10),
-         |fa AS (SELECT query_id, neighbor_id, 1000000 // (60 + rank) AS c FROM bf),
-         |fb AS (SELECT query_id, neighbor_id, 1000000 // (60 + rank) AS c FROM adcr),
-         |f AS (
-         | SELECT coalesce(fa.query_id, fb.query_id) AS query_id,
-         |  coalesce(fa.neighbor_id, fb.neighbor_id) AS neighbor_id,
-         |  coalesce(fa.c, 0) + coalesce(fb.c, 0) AS rrf_e6
-         | FROM fa FULL JOIN fb
-         |  ON fa.query_id = fb.query_id AND fa.neighbor_id = fb.neighbor_id)
-         |SELECT query_id, neighbor_id, CAST(rrf_e6 AS BIGINT) AS rrf_e6, rank FROM (
-         | SELECT *, row_number() OVER (PARTITION BY query_id
-         |   ORDER BY rrf_e6 DESC, neighbor_id) AS rank FROM f)
-         |WHERE rank <= 10""".stripMargin,
-    // q343: q332's register/estimator arithmetic keyed by event_type;
-    // empty registers enter as (64 - present)·2^27.
-    "q343_hll_by_group" -> {
-      val u = hexPrefixOracle("md5(CAST(user_id AS VARCHAR))", 8)
-      val rankCase = (1 to 26)
-        .map(r => s"WHEN w >= ${1L << (26 - r)} THEN $r")
-        .mkString("CASE ", " ", " ELSE 27 END")
-      s"""WITH uu AS (SELECT event_type AS grp, $u AS u FROM events),
-         |s AS (SELECT grp, u // 67108864 AS bucket, u % 67108864 AS w FROM uu),
-         |r AS (SELECT grp, bucket, max($rankCase) AS register FROM s GROUP BY 1, 2),
-         |a AS (SELECT grp, count(*) AS present,
-         |      sum(CAST(1 AS BIGINT) << (27 - register)) AS sp FROM r GROUP BY 1),
-         |e AS (SELECT event_type AS grp, count(DISTINCT user_id) AS n_exact
-         |      FROM events GROUP BY 1)
-         |SELECT a.grp AS "group",
-         | CAST(64 - present AS BIGINT) AS n_zero_registers,
-         | CAST((64 - present) * (CAST(1 AS BIGINT) << 27) + sp AS BIGINT) AS s_num,
-         | CAST((CAST(709340 AS BIGINT) * 4096 * (CAST(1 AS BIGINT) << 27))
-         |   // ((64 - present) * (CAST(1 AS BIGINT) << 27) + sp) AS BIGINT) AS est_e6,
-         | CAST(n_exact AS BIGINT) AS n_exact
-         |FROM a JOIN e USING (grp)""".stripMargin
-    },
-    // q344: q342's two rankings joined on (query, item); each shared
-    // item contributes the cumulative truncated-RBO weight of its max
-    // rank — constants generated from the SAME Similarity.rboCumWeights.
-    "q344_rank_agreement" -> {
-      val cum = Similarity.rboCumWeights(10, 900000L)
-      val cCase = cum.zipWithIndex
-        .map { case (c, i) => s"WHEN ${i + 1} THEN $c" }
-        .mkString("CASE greatest(bf.rank, adcr.rank) ", " ", " ELSE 0 END")
-      s"""WITH $PqCodesCte,
-         |codes AS (
-         | SELECT vec_id, s, j AS code
-         | FROM (SELECT *, row_number() OVER (PARTITION BY vec_id, s
-         |         ORDER BY d2, j) AS rn FROM d)
-         | WHERE rn = 1),
-         |lut AS (SELECT vec_id AS query_id, s, j AS code, d2 AS qd2
-         |        FROM d WHERE vec_id < 8),
-         |adc0 AS (
-         | SELECT l.query_id, c.vec_id AS neighbor_id,
-         |  CAST(sum(l.qd2) AS BIGINT) AS adc_d2
-         | FROM codes c JOIN lut l ON c.s = l.s AND c.code = l.code
-         | WHERE c.vec_id <> l.query_id
-         | GROUP BY 1, 2),
-         |adcr AS (
-         | SELECT query_id, neighbor_id, rank FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY adc_d2, neighbor_id) AS rank FROM adc0)
-         | WHERE rank <= 10),
-         |bf AS (
-         | SELECT query_id, neighbor_id, rank FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |   row_number() OVER (PARTITION BY q.vec_id
-         |     ORDER BY list_cosine_similarity(c.embedding, q.embedding) DESC, c.vec_id) AS rank
-         |  FROM embeddings c, embeddings q
-         |  WHERE q.vec_id < 8 AND c.vec_id <> q.vec_id)
-         | WHERE rank <= 10)
-         |SELECT bf.query_id, CAST(count(*) AS BIGINT) AS n_shared,
-         | CAST(sum($cCase) AS BIGINT) AS score_e9,
-         | CAST(${cum.sum} AS BIGINT) AS max_score_e9
-         |FROM bf JOIN adcr USING (query_id, neighbor_id)
-         |GROUP BY 1""".stripMargin
-    },
-    // q345: FULL sequential replay (upgraded r13 from the pinned VALUES —
-    // the q347 "replay the whole algorithm" pattern): ten chained greedy
-    // rounds, each an argmax (gain desc, id asc) over the uncovered pair
-    // table followed by the winner's-tokens anti-join shrink — exactly
-    // the Spark loop's structure; running coverage via a window sum.
-    // tools/pin_coverage.py remains as an independent third derivation.
-    "q345_greedy_coverage" -> {
-      // MATERIALIZED is load-bearing: each round references its
-      // predecessor twice, so inlined CTEs would expand to 2^10 scans of
-      // the documents parquet (observed as "too many open files").
-      val rounds = (1 to 10).map { r =>
-        val prev = if (r == 1) "tok" else s"p${r - 1}"
-        s"""w$r AS MATERIALIZED (SELECT id, CAST(count(*) AS BIGINT) AS gain FROM $prev
-           | GROUP BY id ORDER BY gain DESC, id ASC LIMIT 1),
-           |p$r AS MATERIALIZED (SELECT t.* FROM $prev t WHERE t.token NOT IN
-           |  (SELECT token FROM $prev WHERE id = (SELECT id FROM w$r)))""".stripMargin
-      }.mkString(",\n")
-      val sel = (1 to 10).map(r => s"SELECT $r AS pick, id, gain FROM w$r")
-        .mkString("\n UNION ALL ")
-      s"""WITH tw AS (SELECT doc_id,
-         |  list_filter(string_split_regex(trim(lower(text)), '\\s+'), w -> len(w) > 0) AS w
-         | FROM documents),
-         |tok AS MATERIALIZED (SELECT DISTINCT doc_id AS id,
-         |  w[CAST(i AS INT) + 1] || ' ' || w[CAST(i AS INT) + 2] AS token
-         | FROM (SELECT doc_id, w, unnest(range(len(w) - 1)) AS i
-         |        FROM tw WHERE len(w) >= 2)),
-         |$rounds,
-         |sel AS ($sel)
-         |SELECT CAST(pick AS BIGINT) AS pick, CAST(id AS BIGINT) AS doc_id, gain,
-         | CAST(sum(gain) OVER (ORDER BY pick) AS BIGINT) AS covered_total
-         |FROM sel""".stripMargin
-    },
-    // q346: the register MERGE replayed — per-half registers, folded by
-    // greatest, then the q332 estimator over the merged set (the oracle
-    // replays the merge itself, not the mathematically-equal whole-table
-    // build, so the mergeable path is what's being checked).
-    "q346_hll_merge" -> {
-      val u = hexPrefixOracle("md5(CAST(l_partkey AS VARCHAR))", 8)
-      val rankCase = (1 to 26)
-        .map(r => s"WHEN w >= ${1L << (26 - r)} THEN $r")
-        .mkString("CASE ", " ", " ELSE 27 END")
-      s"""WITH uu AS (SELECT l_orderkey % 2 AS h, $u AS u FROM lineitem),
-         |s AS (SELECT h, u // 67108864 AS bucket, u % 67108864 AS w FROM uu),
-         |r AS (SELECT h, bucket, max($rankCase) AS register FROM s GROUP BY 1, 2),
-         |za AS (SELECT g.b AS bucket, coalesce(r.register, 0) AS register
-         |       FROM range(0, 64) g(b) LEFT JOIN r ON g.b = r.bucket AND r.h = 0),
-         |zb AS (SELECT g.b AS bucket, coalesce(r.register, 0) AS register
-         |       FROM range(0, 64) g(b) LEFT JOIN r ON g.b = r.bucket AND r.h = 1),
-         |mz AS (SELECT za.bucket, greatest(za.register, zb.register) AS register
-         |       FROM za JOIN zb USING (bucket)),
-         |agg AS (SELECT count(*) AS m,
-         |  sum(CASE WHEN register = 0 THEN 1 ELSE 0 END) AS n_zero_registers,
-         |  sum(CAST(1 AS BIGINT) << (27 - register)) AS s_num FROM mz)
-         |SELECT CAST(m AS BIGINT) AS m,
-         | CAST(n_zero_registers AS BIGINT) AS n_zero_registers,
-         | CAST(s_num AS BIGINT) AS s_num,
-         | CAST((CAST(709340 AS BIGINT) * 4096 * (CAST(1 AS BIGINT) << 27))
-         |   // s_num AS BIGINT) AS est_e6
-         |FROM agg""".stripMargin
-    },
-    // q347: the q312 hop-by-hop replay with the node2vec class weights —
-    // each step classifies every candidate by distance to the PREVIOUS
-    // node (return / near / far via a left join on the symmetric edge
-    // list) and ranks by (md5₃₂ // weight, id), the operator's exact
-    // integer race.
-    "q347_node2vec_walks" -> {
-      def u(i: Int) = hexPrefixOracle(
-        s"md5(CAST(walk_id AS VARCHAR) || ':$i:' || CAST(dst AS VARCHAR))", 8)
-      val stepCtes = (1 to 4).map { i =>
-        s"""c$i AS (SELECT w.walk_id, w.prev, w.node, s.dst
-           |  FROM w${i - 1} w JOIN sym s ON s.src = w.node),
-           |f$i AS (SELECT c.walk_id, c.node, c.dst,
-           |  CASE WHEN c.dst = c.prev THEN 1
-           |       WHEN a.src IS NOT NULL THEN 2 ELSE 4 END AS wgt
-           |  FROM c$i c LEFT JOIN sym a ON a.src = c.prev AND a.dst = c.dst),
-           |r$i AS (SELECT walk_id, node, dst, row_number() OVER (PARTITION BY walk_id
-           |  ORDER BY (${u(i)}) // wgt, dst) AS rn FROM f$i),
-           |w$i AS (SELECT walk_id, node AS prev, dst AS node FROM r$i WHERE rn = 1)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH b AS (SELECT doc_id AS a FROM documents WHERE doc_id % 20 = 0),
-         |edges0 AS (
-         | SELECT a AS u, a + 1 AS v FROM b
-         | UNION ALL SELECT a + 1, a + 2 FROM b
-         | UNION ALL SELECT a, a + 5 FROM b
-         | UNION ALL SELECT a + 5, a + 22 FROM b WHERE a % 40 = 0),
-         |e AS (SELECT DISTINCT least(u, v) AS u, greatest(u, v) AS v FROM edges0),
-         |sym AS (SELECT u AS src, v AS dst FROM e UNION ALL SELECT v, u FROM e),
-         |w0 AS (SELECT doc_id AS walk_id, doc_id AS prev, doc_id AS node
-         |       FROM documents WHERE doc_id % 100 = 0),
-         |$stepCtes
-         |SELECT CAST(walk_id AS BIGINT) AS walk_id, CAST(0 AS BIGINT) AS step,
-         | CAST(node AS BIGINT) AS node FROM w0
-         |UNION ALL SELECT walk_id, 1, node FROM w1
-         |UNION ALL SELECT walk_id, 2, node FROM w2
-         |UNION ALL SELECT walk_id, 3, node FROM w3
-         |UNION ALL SELECT walk_id, 4, node FROM w4""".stripMargin
-    },
-    // q348: q125's hot-window machinery (gram STRINGS stand in for the
-    // op's collision-free positional hashes, as in q125), then the
-    // rewrite itself — surviving words re-joined in position order.
-    "q348_span_remove" ->
-      """WITH tok AS (
-        | SELECT doc_id,
-        |  list_filter(string_split_regex(trim(lower(text)), '\s+'), w -> len(w) > 0) AS w
-        | FROM documents),
-        |g AS (
-        | SELECT doc_id, unnest(list_transform(range(0, greatest(len(w) - 2, 0)),
-        |   i -> {'i': i, 'g': w[i+1] || ' ' || w[i+2] || ' ' || w[i+3]})) AS s
-        | FROM tok),
-        |gg AS (SELECT doc_id, CAST(s.i AS BIGINT) AS i, s.g AS g FROM g),
-        |hot AS (
-        | SELECT g FROM (SELECT g, count(DISTINCT doc_id) AS nd FROM gg GROUP BY 1)
-        | WHERE nd >= 3),
-        |cov AS (
-        | SELECT DISTINCT gg.doc_id, gg.i + o.k AS j
-        | FROM gg JOIN hot ON gg.g = hot.g
-        | CROSS JOIN (VALUES (0), (1), (2)) o(k)),
-        |wp AS (SELECT doc_id, CAST(generate_subscripts(w, 1) - 1 AS BIGINT) AS j,
-        |       unnest(w) AS word FROM tok),
-        |kept AS (
-        | SELECT wp.doc_id, wp.j, wp.word
-        | FROM wp LEFT JOIN cov ON cov.doc_id = wp.doc_id AND cov.j = wp.j
-        | WHERE cov.j IS NULL),
-        |r AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS kept_words,
-        |      string_agg(word, ' ' ORDER BY j) AS text FROM kept GROUP BY 1)
-        |SELECT t.doc_id, CAST(len(t.w) AS BIGINT) AS n_words,
-        | CAST(coalesce(r.kept_words, 0) AS BIGINT) AS kept_words,
-        | coalesce(r.text, '') AS text
-        |FROM tok t LEFT JOIN r USING (doc_id)""".stripMargin,
-    // q349: the dHash replayed from the q150 analytic pixel function
-    // (pixel-array byte j = text byte j % len, rows bottom-up): grays
-    // sampled at the 9x8 grid centers in image orientation, horizontal
-    // comparisons summed into the 64-bit hash (bit 63 wraps negative in
-    // both engines; DuckDB's HUGEINT sum casts back exactly).
-    "q349_image_dhash" ->
-      s"""WITH $DhashCte
-         |SELECT dh.media_id, CAST(p.w AS BIGINT) AS width,
-         | CAST(p.h AS BIGINT) AS height, dh.dhash
-         |FROM dh JOIN par p ON p.doc_id = dh.media_id""".stripMargin,
-    // q350: the oracle brute-forces ALL image pairs — matching it proves
-    // the operator's 8x8 banding is lossless for hamming <= 7.
-    "q350_dhash_neardup" ->
-      s"""WITH $DhashCte
-         |SELECT a.media_id AS a_id, b.media_id AS b_id,
-         | CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS hamming
-         |FROM dh a JOIN dh b ON a.media_id < b.media_id
-         |WHERE bit_count(xor(a.dhash, b.dhash)) <= 7""".stripMargin,
-    // q351: the shared quantization replay ([[QuantGramCtes]]), then the
-    // upper-triangle product census cell by cell.
-    "q351_quantized_gram" ->
-      s"""WITH $QuantGramCtes
-         |SELECT CAST(i AS BIGINT) AS i, CAST(j AS BIGINT) AS j, g, n_vectors
-         |FROM gcells""".stripMargin,
-    // q352: the q69 unroll with weights — per-edge product in HUGEINT
-    // (mirrors the op's decimal(38,0)), floor-div by 100·wsum.
-    "q352_weighted_pagerank" -> {
-      val base =
-        """WITH e0 AS (
-          | SELECT o_custkey * 2 AS s, l_suppkey * 2 + 1 AS d,
-          |  CAST(count(*) AS BIGINT) AS w
-          | FROM orders JOIN lineitem ON l_orderkey = o_orderkey GROUP BY 1, 2),
-          |e AS (SELECT s, d, w FROM e0 UNION ALL SELECT d AS s, s AS d, w FROM e0),
-          |ws AS (SELECT s, CAST(sum(w) AS BIGINT) AS wsum FROM e GROUP BY 1),
-          |nodes AS (SELECT DISTINCT s AS id FROM e),
-          |r0 AS (SELECT id, CAST(1000000 AS BIGINT) AS rank FROM nodes)""".stripMargin
-      val iters = (1 to 3).map { i =>
-        s""",
-           |c$i AS (
-           | SELECT e.d AS id,
-           |  CAST(sum((CAST(r.rank AS HUGEINT) * 85 * e.w) // (100 * ws.wsum)) AS BIGINT) AS c
-           | FROM e JOIN r${i - 1} r ON e.s = r.id JOIN ws ON ws.s = e.s GROUP BY 1),
-           |r$i AS (
-           | SELECT n.id, CAST(150000 + coalesce(c$i.c, 0) AS BIGINT) AS rank
-           | FROM nodes n LEFT JOIN c$i ON n.id = c$i.id)""".stripMargin
-      }.mkString
-      base + iters + "\nSELECT id AS node_id, rank FROM r3"
-    },
-    // q353: brute-forced pairs over the SAME pinned simhash table q17's
-    // oracle uses — matching it proves the 4x16 banding loses nothing at
-    // hamming <= 3 on real text fingerprints.
-    "q353_simhash_neardup" ->
-      s"""WITH h AS (SELECT CAST(id AS BIGINT) AS id, CAST(simhash AS BIGINT) AS h
-         |  FROM ($SimhashPin) AS t(id, simhash))
-         |SELECT a.id AS a_id, b.id AS b_id,
-         | CAST(bit_count(xor(a.h, b.h)) AS BIGINT) AS hamming
-         |FROM h a JOIN h b ON a.id < b.id
-         |WHERE bit_count(xor(a.h, b.h)) <= 3""".stripMargin,
-    // q354: the URL derivation rebuilt from doc_id, then every
-    // normalization rule replayed with DuckDB's regex/list machinery.
-    "q354_url_canonical" ->
-      """WITH u AS (SELECT doc_id,
-        |  (CASE WHEN doc_id % 2 = 0 THEN 'HTTP' ELSE 'https' END) || '://WWW.' ||
-        |  upper(source) || '.ExAmPle.' ||
-        |  (CASE WHEN doc_id % 3 = 0 THEN 'co.uk' WHEN doc_id % 3 = 1 THEN 'com' ELSE 'org' END) ||
-        |  (CASE WHEN doc_id % 4 = 0 THEN ':80' ELSE '' END) ||
-        |  '/Docs/' || CAST(doc_id AS VARCHAR) ||
-        |  (CASE WHEN doc_id % 5 = 0 THEN '/' ELSE '' END) ||
-        |  (CASE WHEN doc_id % 2 = 0 THEN '?utm_source=feed&z=9&a=1' ELSE '?b=2' END) ||
-        |  (CASE WHEN doc_id % 7 = 0 THEN '#sec2' ELSE '' END) AS url
-        | FROM documents),
-        |p AS (SELECT doc_id, url,
-        |  lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-        |  lower(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)) AS hostport,
-        |  regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1) AS rawpath,
-        |  regexp_extract(url, '\?([^#]*)', 1) AS query FROM u),
-        |q AS (SELECT *, regexp_extract(hostport, '^([^:]*)', 1) AS host,
-        |  regexp_extract(hostport, ':([0-9]+)$', 1) AS port FROM p),
-        |r AS (SELECT *,
-        |  CASE WHEN regexp_replace(rawpath, '/+$', '') = '' THEN '/'
-        |       ELSE regexp_replace(rawpath, '/+$', '') END AS path,
-        |  list_sort(list_filter(string_split(query, '&'),
-        |    x -> x <> '' AND NOT regexp_matches(x, '^(utm_[^=]*|fbclid|gclid)(=|$)'))) AS params,
-        |  string_split(host, '.') AS hl FROM q)
-        |SELECT doc_id,
-        | scheme || '://' || host ||
-        | (CASE WHEN port <> '' AND NOT (scheme = 'http' AND port = '80')
-        |       AND NOT (scheme = 'https' AND port = '443')
-        |   THEN ':' || port ELSE '' END) ||
-        | path ||
-        | (CASE WHEN len(params) > 0 THEN '?' || array_to_string(params, '&') ELSE '' END)
-        |   AS canonical_url,
-        | host,
-        | CASE WHEN len(hl) >= 3 AND len(hl[len(hl)]) = 2
-        |        AND hl[len(hl) - 1] IN ('co', 'com', 'org', 'net', 'ac', 'gov')
-        |   THEN array_to_string(hl[len(hl) - 2:], '.')
-        |   ELSE array_to_string(hl[len(hl) - 1:], '.') END AS registered_domain
-        |FROM r""".stripMargin,
-    // q355: the PSL algorithm replayed in SQL against the SAME rule table
-    // the Spark op broadcasts (rendered from the loaded snapshot at
-    // oracle-build time, so op and oracle cannot drift): candidate
-    // suffixes per rule depth, exception precedence, longest match with
-    // wildcards counting their * label, implicit-default fallback.
-    "q355_psl_domain" ->
-      s"""WITH rules(suffix, nlab, kind) AS (VALUES $PslRulesValues),
-        |h AS (SELECT doc_id,
-        |  CASE doc_id % 12
-        |   WHEN 0 THEN 'a' || CAST(doc_id AS VARCHAR) || '.github.io'
-        |   WHEN 1 THEN 'b' || CAST(doc_id AS VARCHAR) || '.s3.amazonaws.com'
-        |   WHEN 2 THEN 'w' || CAST(doc_id AS VARCHAR) || '.pref.aichi.jp'
-        |   WHEN 3 THEN 'f' || CAST(doc_id AS VARCHAR) || '.bar.ck'
-        |   WHEN 4 THEN 'www.ck'
-        |   WHEN 5 THEN 's' || CAST(doc_id AS VARCHAR) || '.co.uk'
-        |   WHEN 6 THEN 'x' || CAST(doc_id AS VARCHAR) || '.example.com'
-        |   WHEN 7 THEN 'p' || CAST(doc_id AS VARCHAR) || '.city.kawasaki.jp'
-        |   WHEN 8 THEN 'ne.jp'
-        |   WHEN 9 THEN 'lb' || CAST(doc_id AS VARCHAR) || '.us-east-1.elb.amazonaws.com'
-        |   WHEN 10 THEN 'z' || CAST(doc_id AS VARCHAR) || '.blogspot.co.uk'
-        |   ELSE 'ward.kawasaki.jp' END AS host
-        | FROM documents),
-        |l AS (SELECT doc_id, host, string_split(host, '.') AS labs,
-        |  len(string_split(host, '.')) AS n FROM h),
-        |m AS (SELECT l.doc_id, l.n, ks.k, r.kind
-        | FROM l CROSS JOIN (VALUES $PslDepthsValues) ks(k)
-        | JOIN rules r ON l.n >= ks.k
-        |  AND array_to_string(l.labs[l.n - ks.k + 1:l.n], '.') = r.suffix),
-        |a AS (SELECT doc_id,
-        |  max(CASE WHEN kind = 2 THEN k - 1 END) AS exc,
-        |  max(CASE WHEN kind = 0 THEN k WHEN kind = 1 AND n > k THEN k + 1 END) AS best
-        | FROM m GROUP BY doc_id),
-        |j AS (SELECT l.doc_id, l.host, l.labs, l.n,
-        |  coalesce(a.exc, a.best, 1) AS pslen
-        | FROM l LEFT JOIN a USING (doc_id))
-        |SELECT doc_id, host,
-        | CASE WHEN n > pslen THEN array_to_string(labs[n - pslen:n], '.') END
-        |   AS registered_domain
-        |FROM j""".stripMargin,
-    // q356: the energy-difference hash replayed analytically from the WAV
-    // writer's sample formula — window energies in BIGINT, bit assembly in
-    // HUGEINT (bit 63 is the sign bit; DuckDB's 1<<63 throws, so it
-    // contributes -(2^63) and the two's-complement sum casts back).
-    "q356_audio_ehash" ->
-      s"""WITH ${AudioEhashCte("(128, 0)")}
-        |SELECT mid AS media_id, CAST(rate AS BIGINT) AS sample_rate,
-        | CAST(n AS BIGINT) AS n_samples, ehash
-        |FROM eh""".stripMargin,
-    // q357: brute-forced Hamming pairs over BOTH encodes (amp 128 under
-    // the doc id, amp 127 re-encode under id + 1e9) — proving banding
-    // drops nothing AND that every original/re-encode pair surfaces.
-    "q357_audio_ehash_neardup" ->
-      s"""WITH ${AudioEhashCte("(128, 0), (127, 1000000000)")}
-        |SELECT a.mid AS a_id, b.mid AS b_id,
-        | CAST(bit_count(xor(a.ehash, b.ehash)) AS BIGINT) AS hamming
-        |FROM eh a JOIN eh b ON a.mid < b.mid
-        |WHERE bit_count(xor(a.ehash, b.ehash)) <= 7""".stripMargin,
-    // q358: the markup-strip regex chain replayed step-for-step (DuckDB
-    // regexp_replace needs the explicit 'g' flag; Spark's replaces all by
-    // default — same result).
-    "q358_html_strip" ->
-      s"""WITH $HtmlFixtureCte,
-        |s1 AS (SELECT doc_id, regexp_replace(html, '(?is)<script[^>]*>.*?</script>', ' ', 'g') AS x FROM h),
-        |s2 AS (SELECT doc_id, regexp_replace(x, '(?is)<style[^>]*>.*?</style>', ' ', 'g') AS x FROM s1),
-        |s3 AS (SELECT doc_id, regexp_replace(x, '(?s)<!--.*?-->', ' ', 'g') AS x FROM s2),
-        |s4 AS (SELECT doc_id, regexp_replace(x, '<[^>]*>', ' ', 'g') AS x FROM s3),
-        |s5 AS (SELECT doc_id, replace(replace(replace(replace(replace(replace(x,
-        |  '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''),
-        |  '&apos;', ''''), '&nbsp;', ' ') AS x FROM s4),
-        |s6 AS (SELECT doc_id, replace(x, '&amp;', '&') AS x FROM s5)
-        |SELECT doc_id, trim(regexp_replace(x, '\\s+', ' ', 'g')) AS clean_text FROM s6""".stripMargin,
-    // q359: the line filter replayed — split on chr(10) with positions,
-    // per-line clean chain, anchor-text chars via regexp_extract_all +
-    // list_sum, the integer density predicate, and an order-preserving
-    // list() re-join; docs with zero kept lines re-enter as '' via the
-    // left join (Spark's array_join over an empty array).
-    "q359_main_content" ->
-      s"""WITH $HtmlFixtureCte,
-        |$MainContentCtes
-        |SELECT h.doc_id, coalesce(m.main_text, '') AS main_text
-        |FROM h LEFT JOIN m USING (doc_id)""".stripMargin,
-    // q360: q336's full IVF-PQ chain, the q127 brute-force-cosine exact
-    // side (vec_id < 8), and the recall math re-derived — this checks
-    // both approximation layers' composition AND the recall arithmetic.
-    "q360_ivfpq_recall" ->
-      s"""WITH $IvfPqAnnCtes,
-         |exact AS (
-         | SELECT query_id, neighbor_id FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |   row_number() OVER (PARTITION BY q.vec_id
-         |     ORDER BY list_cosine_similarity(c.embedding, q.embedding) DESC, c.vec_id) AS rank
-         |  FROM embeddings c, embeddings q
-         |  WHERE q.vec_id < 8 AND c.vec_id <> q.vec_id) WHERE rank <= 10),
-         |h AS (
-         | SELECT a.query_id, CAST(count(*) AS BIGINT) AS n_hits
-         | FROM ivfpq a JOIN exact e
-         |  ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id GROUP BY 1)
-         |SELECT q.query_id, CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-         | CAST(floor(1000000 * coalesce(h.n_hits, 0) / 10) AS BIGINT) AS recall_ppm
-         |FROM (SELECT DISTINCT query_id FROM exact) q LEFT JOIN h USING (query_id)""".stripMargin,
-    // q361: banded retrieval replayed over the SAME pinned simhash table
-    // q17/q353 use — band bits via arithmetic shift + mask exactly like
-    // the Spark op — against exact Hamming ranking, recall re-derived.
-    "q361_simhash_recall" ->
-      s"""WITH hs AS (SELECT CAST(id AS BIGINT) AS id, CAST(simhash AS BIGINT) AS h
-         |  FROM ($SimhashPin) AS t(id, simhash)),
-         |bb(b) AS (VALUES (0), (1), (2), (3)),
-         |bq AS (SELECT id AS query_id, h AS qh, b, (h >> (b * 16)) & 65535 AS bits
-         |       FROM hs CROSS JOIN bb WHERE id < 8),
-         |bc AS (SELECT id, h, b, (h >> (b * 16)) & 65535 AS bits FROM hs CROSS JOIN bb),
-         |cand AS (
-         | SELECT DISTINCT q.query_id, c.id AS neighbor_id,
-         |  bit_count(xor(q.qh, c.h)) AS hamming
-         | FROM bq q JOIN bc c ON q.b = c.b AND q.bits = c.bits AND c.id <> q.query_id),
-         |ann AS (
-         | SELECT query_id, neighbor_id FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY hamming, neighbor_id) AS rk FROM cand) WHERE rk <= 10),
-         |exact AS (
-         | SELECT query_id, neighbor_id FROM (
-         |  SELECT q.id AS query_id, c.id AS neighbor_id,
-         |   row_number() OVER (PARTITION BY q.id
-         |     ORDER BY bit_count(xor(q.h, c.h)), c.id) AS rk
-         |  FROM hs q JOIN hs c ON c.id <> q.id WHERE q.id < 8) WHERE rk <= 10),
-         |hh AS (
-         | SELECT a.query_id, CAST(count(*) AS BIGINT) AS n_hits
-         | FROM ann a JOIN exact e
-         |  ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id GROUP BY 1)
-         |SELECT q.query_id, CAST(coalesce(hh.n_hits, 0) AS BIGINT) AS n_hits,
-         | CAST(floor(1000000 * coalesce(hh.n_hits, 0) / 10) AS BIGINT) AS recall_ppm
-         |FROM (SELECT DISTINCT query_id FROM exact) q LEFT JOIN hh USING (query_id)""".stripMargin,
-    // q362: INDEPENDENT derivation — the oracle never parses HTML or
-    // resolves URLs; it computes each link's expected registered domain
-    // straight from the id formula (abs → example.org, protocol-relative
-    // → example.co.uk, the four same-site refs → the page's github.io
-    // domain, mailto → dropped). Any misfire in extraction, resolution,
-    // canonicalization or the PSL breaks the match.
-    "q362_outlink_domains" ->
-      """WITH d AS (SELECT doc_id,
-        |  'site' || CAST(doc_id % 4 AS VARCHAR) || '.github.io' AS pd
-        | FROM documents),
-        |l AS (
-        | SELECT pd, 'example.org' AS td FROM d
-        | UNION ALL SELECT pd, 'example.co.uk' FROM d
-        | UNION ALL SELECT pd, pd FROM d
-        | UNION ALL SELECT pd, pd FROM d
-        | UNION ALL SELECT pd, pd FROM d
-        | UNION ALL SELECT pd, pd FROM d)
-        |SELECT pd AS page_domain, td AS target_domain,
-        | CAST(count(*) AS BIGINT) AS n_links
-        |FROM l GROUP BY 1, 2""".stripMargin,
-    // q363: independent derivation, the q362 idiom — expected decisions
-    // computed straight from the id formula (star-group rules by id:
-    // /private disallowed, /private/ok{0} allowed only for even ids,
-    // /tmp{m3} disallowed, foreign groups invisible, no match allowed).
-    "q363_robots_allowed" ->
-      """SELECT doc_id,
-        | CASE doc_id % 5
-        |  WHEN 0 THEN '/private/ok' || CAST(doc_id % 2 AS VARCHAR) || '/page'
-        |  WHEN 1 THEN '/private/secret'
-        |  WHEN 2 THEN '/public/a'
-        |  WHEN 3 THEN '/tmp' || CAST(doc_id % 3 AS VARCHAR) || '/x'
-        |  ELSE '/x/y' END AS path,
-        | CASE doc_id % 5
-        |  WHEN 0 THEN doc_id % 2 = 0
-        |  WHEN 1 THEN false
-        |  WHEN 2 THEN true
-        |  WHEN 3 THEN false
-        |  ELSE true END AS allowed
-        |FROM documents""".stripMargin,
-    // q364: identity derivation — a correct compress/decompress roundtrip
-    // must reproduce the text column and its byte length exactly (text is
-    // pure ASCII in this corpus, so strlen == octet_length; asserted by
-    // the q149-family oracles).
-    "q364_gzip_roundtrip" ->
-      """SELECT doc_id AS media_id,
-        | CAST(strlen(coalesce(text, '')) AS BIGINT) AS n_bytes,
-        | coalesce(text, '') AS text_out
-        |FROM documents""".stripMargin,
-    // q365: the q359 replay chain over the same HTML fixture, admission
-    // and canonical URL derived straight from the id formula (robots
-    // drops doc_id % 7 = 0; the path has no port/query/fragment so its
-    // canonical form is the lowercased-host concatenation), token count
-    // via the standard pre-tokenizer extract-all.
-    "q365_crawl_ingest" ->
-      s"""WITH $HtmlFixtureCte,
-         |$MainContentCtes,
-         |adm AS (SELECT h.doc_id, coalesce(m.main_text, '') AS mt
-         |        FROM h LEFT JOIN m USING (doc_id) WHERE h.doc_id % 7 <> 0)
-         |SELECT doc_id,
-         | 'https://www.site' || CAST(doc_id % 4 AS VARCHAR) || '.github.io/dir/page'
-         |   || CAST(doc_id AS VARCHAR) AS canonical_url,
-         | 'site' || CAST(doc_id % 4 AS VARCHAR) || '.github.io' AS registered_domain,
-         | CAST(len(regexp_extract_all(mt, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT)
-         |   AS n_tokens
-         |FROM adm""".stripMargin,
-    // q366: independent derivation — both queued spellings canonicalize
-    // to the same lowercase-host, tracking-param-free form straight from
-    // the id formula; max-priority dedup and the per-host window replay
-    // in SQL.
-    "q366_crawl_schedule" ->
-      """WITH f AS (
-        | SELECT 'http://host' || CAST(doc_id % 20 AS VARCHAR) || '.example.com/p/'
-        |   || CAST(doc_id AS VARCHAR)
-        |   || CASE WHEN doc_id % 3 = 0 THEN '?b=2' ELSE '' END AS url,
-        |  CAST(doc_id * 7919 % 101 AS BIGINT) AS priority
-        | FROM documents
-        | UNION ALL
-        | SELECT 'http://host' || CAST(doc_id % 20 AS VARCHAR) || '.example.com/p/'
-        |   || CAST(doc_id AS VARCHAR) || '?b=2' AS url,
-        |  CAST(doc_id * 7919 % 101 + 50 AS BIGINT) AS priority
-        | FROM documents WHERE doc_id % 3 = 0),
-        |d AS (
-        | SELECT regexp_extract(url, '^http://([^/]*)', 1) AS host, url,
-        |  max(priority) AS priority
-        | FROM f GROUP BY 1, 2),
-        |r AS (
-        | SELECT host, url, priority,
-        |  row_number() OVER (PARTITION BY host ORDER BY priority DESC, url ASC) AS rn
-        | FROM d)
-        |SELECT host, url, priority, CAST((rn - 1) * 100 AS BIGINT) AS fetch_offset_ms
-        |FROM r WHERE rn <= 8""".stripMargin,
-    // q367: the direct bottom-k replay (hash, take the k smallest by
-    // (u, v), rank by (v, u), lower empirical quantile); est_merged is
-    // asserted equal to the direct estimate — bottom-k of a union is the
-    // bottom-k of the parts' bottom-ks, so the op's merge path must land
-    // on the same rows.
-    "q367_kmv_quantiles" -> {
-      val u = hexPrefixOracle("md5(CAST(l_orderkey * 10 + l_linenumber AS VARCHAR))", 8)
-      s"""WITH s AS (SELECT $u AS u,
-         |  CAST(round(l_extendedprice * 100) AS BIGINT) AS v FROM lineitem),
-         |b AS (SELECT u, v FROM s ORDER BY u, v LIMIT 512),
-         |r AS (SELECT v, u, row_number() OVER (ORDER BY v, u) AS rn,
-         |  CAST(count(*) OVER () AS BIGINT) AS n_sample FROM b),
-         |q AS (SELECT CAST(q_ppm AS BIGINT) AS q_ppm FROM (VALUES
-         |  (10000), (250000), (500000), (750000), (990000)) t(q_ppm))
-         |SELECT q.q_ppm, r.v AS est, r.n_sample, r.v AS est_merged
-         |FROM q JOIN r ON r.rn = greatest(1, (q.q_ppm * r.n_sample + 999999) // 1000000)""".stripMargin
-    },
-    // q368: full replay — the shared Gram chain, the mirror to a full
-    // matrix, 4 power-iteration steps with the sign-split ±2^20 rescale
-    // (operands kept nonnegative so HUGEINT // and the op's BigInt /
-    // agree), then the per-vector projection and the Rayleigh quotient.
-    "q368_principal_projection" -> {
-      val iters = (1 to 4).map { i =>
-        s""",
-           |w$i AS MATERIALIZED (SELECT f.i, sum(CAST(f.g AS HUGEINT) * v${i - 1}.v) AS w
-           |        FROM gfull f JOIN v${i - 1} ON v${i - 1}.i = f.j GROUP BY 1),
-           |m$i AS MATERIALIZED (SELECT max(abs(w)) AS m FROM w$i),
-           |v$i AS MATERIALIZED (SELECT i, CASE WHEN (SELECT m FROM m$i) = 0 THEN w
-           |         WHEN w < 0 THEN -(((-w) * 1048576) // (SELECT m FROM m$i))
-           |         ELSE (w * 1048576) // (SELECT m FROM m$i) END AS v FROM w$i)""".stripMargin
-      }.mkString
-      s"""WITH $QuantGramCtes,
-         |gfull AS MATERIALIZED (SELECT i, j, g FROM gcells
-         |          UNION ALL SELECT j AS i, i AS j, g FROM gcells WHERE i < j),
-         |v0 AS (SELECT r.r AS i, CAST(1 AS HUGEINT) AS v FROM range(0, 64) r(r))$iters,
-         |eig AS (SELECT CAST(
-         |   (SELECT sum(CAST(f.g AS HUGEINT) * a.v * b.v)
-         |    FROM gfull f JOIN v4 a ON a.i = f.i JOIN v4 b ON b.i = f.j)
-         |   // (SELECT sum(v * v) FROM v4) AS BIGINT) AS eigenvalue_est)
-         |SELECT q.vec_id, CAST(sum(q.v[CAST(d.r AS INT) + 1] * v4.v) AS BIGINT) AS score,
-         | (SELECT eigenvalue_est FROM eig) AS eigenvalue_est
-         |FROM gqv q CROSS JOIN range(0, 64) d(r) JOIN v4 ON v4.i = d.r
-         |GROUP BY 1""".stripMargin
-    },
-    // q369: independent derivation, the q362 idiom — every (target
-    // domain, anchor text) pair computed straight from the id formula
-    // (abs → example.org with the markup-stripped squished text;
-    // protocol-relative → example.co.uk with the entity-decoded text;
-    // root-relative → the page's own domain; mailto drops).
-    "q369_anchor_text" ->
-      """WITH d AS (SELECT doc_id FROM documents),
-        |l AS (
-        | SELECT 'example.org' AS td, 'Read more' AS anchor_text FROM d
-        | UNION ALL SELECT 'example.co.uk', 'R&D ' || CAST(doc_id % 3 AS VARCHAR) FROM d
-        | UNION ALL SELECT 'site' || CAST(doc_id % 4 AS VARCHAR) || '.github.io', 'Home' FROM d)
-        |SELECT td AS target_domain, anchor_text, CAST(count(*) AS BIGINT) AS n_links
-        |FROM l GROUP BY 1, 2""".stripMargin,
-    // q370: full window replay — the same lag-based change flags over the
-    // event_id fetch clock, then the per-URL fold and the exact-integer
-    // rate/age/priority arithmetic.
-    "q370_recrawl_priority" ->
-      """WITH h AS (SELECT 'u' || CAST(event_id % 100 AS VARCHAR) AS url,
-        |  event_id AS ts,
-        |  CAST((event_id // 100) * (1 + event_id % 100) % 5 AS VARCHAR) AS ch
-        | FROM events),
-        |c AS (SELECT url, ts,
-        |  CASE WHEN lag(ch) OVER (PARTITION BY url ORDER BY ts, ch) IS NULL THEN 0
-        |       WHEN ch <> lag(ch) OVER (PARTITION BY url ORDER BY ts, ch) THEN 1
-        |       ELSE 0 END AS chg
-        | FROM h),
-        |a AS (SELECT url, CAST(count(*) AS BIGINT) AS n_fetches,
-        |  CAST(sum(chg) AS BIGINT) AS n_changes, max(ts) AS last_ts
-        | FROM c GROUP BY 1),
-        |m AS (SELECT max(event_id) + 1000 AS as_of FROM events)
-        |SELECT url, n_fetches, n_changes,
-        | CAST(CASE WHEN n_fetches > 1
-        |   THEN (1000000 * n_changes) // (n_fetches - 1) ELSE 0 END AS BIGINT)
-        |   AS change_rate_ppm,
-        | CAST(m.as_of - last_ts AS BIGINT) AS age_ms,
-        | CAST((CASE WHEN n_fetches > 1
-        |   THEN (1000000 * n_changes) // (n_fetches - 1) ELSE 0 END
-        |   * (m.as_of - last_ts)) // 1000 AS BIGINT) AS priority
-        |FROM a, m""".stripMargin,
-    // q371: the Hamilton apportionment replay — floor shares by exact
-    // division, leftover slots to the largest remainders with the
-    // domain-name tie-break, summing to the budget by construction.
-    "q371_budget_allocation" ->
-      """WITH w AS (SELECT 'd' || CAST(l_suppkey % 97 AS VARCHAR) AS domain,
-        |  CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS w
-        | FROM lineitem GROUP BY 1),
-        |t AS (SELECT sum(w) AS tw FROM w),
-        |b AS (SELECT domain, w,
-        |  CAST((10000 * CAST(w AS HUGEINT)) // tw AS BIGINT) AS fl,
-        |  CAST((10000 * CAST(w AS HUGEINT)) % tw AS BIGINT) AS rem
-        | FROM w, t),
-        |r AS (SELECT domain, w, fl, rem,
-        |  sum(fl) OVER () AS spent,
-        |  row_number() OVER (ORDER BY rem DESC, domain ASC) AS rk
-        | FROM b)
-        |SELECT domain, w AS weight,
-        | CAST(fl + CASE WHEN rk <= 10000 - spent THEN 1 ELSE 0 END AS BIGINT) AS alloc
-        |FROM r""".stripMargin,
-    // q372: independent derivation — every sitemap entry (loc trimmed,
-    // lastmod nullable, the loc-less entry dropped, the index entry only
-    // on every 4th doc) computed straight from the id formula, with the
-    // post-filter array positions.
-    "q372_sitemap" ->
-      """WITH d AS (SELECT doc_id,
-        |  's' || CAST(doc_id % 6 AS VARCHAR) || '.example.com' AS h FROM documents),
-        |e AS (
-        | SELECT doc_id, 0 AS pos,
-        |  'https://' || h || '/p/' || CAST(doc_id AS VARCHAR) AS loc,
-        |  '2024-0' || CAST(doc_id % 9 + 1 AS VARCHAR) || '-01' AS lastmod,
-        |  false AS is_index FROM d
-        | UNION ALL SELECT doc_id, 1,
-        |  'https://' || h || '/q/' || CAST(doc_id AS VARCHAR), NULL, false FROM d
-        | UNION ALL SELECT doc_id, 2,
-        |  'https://' || h || '/sitemap2.xml', NULL, true FROM d WHERE doc_id % 4 = 0)
-        |SELECT doc_id, CAST(pos AS BIGINT) AS pos, loc, lastmod, is_index FROM e""".stripMargin,
-    // q373: independent derivation, the q362/q366 idiom — the admitted
-    // frontier (the /private link never survives robots), its inlink
-    // counts, and the per-host window all replayed from the id formula.
-    "q373_frontier_composite" ->
-      """WITH d AS (SELECT doc_id FROM documents),
-        |f AS (
-        | SELECT 'h' || CAST(doc_id % 10 AS VARCHAR) || '.example.org' AS host,
-        |  'https://h' || CAST(doc_id % 10 AS VARCHAR) || '.example.org/page'
-        |    || CAST(doc_id % 25 AS VARCHAR) AS url FROM d
-        | UNION ALL
-        | SELECT 'site' || CAST(doc_id % 4 AS VARCHAR) || '.github.io',
-        |  'https://site' || CAST(doc_id % 4 AS VARCHAR) || '.github.io/local/l'
-        |    || CAST(doc_id % 8 AS VARCHAR) FROM d),
-        |g AS (SELECT host, url, CAST(count(*) AS BIGINT) AS priority
-        |      FROM f GROUP BY 1, 2),
-        |r AS (SELECT host, url, priority,
-        |  row_number() OVER (PARTITION BY host ORDER BY priority DESC, url ASC) AS rn
-        | FROM g)
-        |SELECT host, url, priority, CAST((rn - 1) * 200 AS BIGINT) AS fetch_offset_ms
-        |FROM r WHERE rn <= 4""".stripMargin,
-    // q374: every avih field is a pure function of the anchor id; the
-    // clamp keeps only anchors whose 4 frame sources exist. (Shared with
-    // q382, whose gzip roundtrip must land on the identical bytes.)
-    "q374_video_meta" -> VideoMetaOracleSql,
-    // q375: the evenly-spaced index rule ((i·n)//take) and the BMP size
-    // formula of each sampled frame's SOURCE doc geometry.
-    "q375_video_frame_sample" -> FrameSampleOracleSql,
-    // q428: the SAME derivation verbatim — the MP4 sampler must land on
-    // byte-identical frames (the cross-container identity).
-    "q428_mp4_frame_sample" -> FrameSampleOracleSql,
-    // q430: header counts and coding labels from the id routing; every
-    // leg decodes (zstd is now a supported coding), so text_out is the
-    // document text verbatim — the decode identity IS the check.
-    "q430_zstd_coding" ->
-      """SELECT doc_id,
-        | CAST(CASE doc_id % 4 WHEN 1 THEN 3 WHEN 3 THEN 1 ELSE 2 END
-        |   AS BIGINT) AS n_headers,
-        | CASE doc_id % 4 WHEN 0 THEN 'zstd' WHEN 1 THEN 'zstd'
-        |   WHEN 2 THEN 'gzip, zstd' END AS content_encoding,
-        | TRUE AS body_decoded,
-        | coalesce(text, '') AS text_out
-        |FROM documents""".stripMargin,
-    // q437: the parity routing — vorbis rate formula on even docs,
-    // opus 48k on odd, channel formulas per dialect.
-    "q437_ogg_meta" ->
-      """SELECT doc_id AS media_id,
-        | CASE WHEN doc_id % 2 = 0 THEN 'vorbis' ELSE 'opus' END AS codec,
-        | CAST(CASE WHEN doc_id % 2 = 0 THEN 8000 + (doc_id % 4) * 4000
-        |  ELSE 48000 END AS INT) AS sample_rate,
-        | CAST(CASE WHEN doc_id % 2 = 0 THEN 1 + (doc_id // 2) % 2
-        |  ELSE 1 + doc_id % 3 END AS INT) AS channels
-        |FROM documents""".stripMargin,
-    // q435: rate/total formulas, the 9≡0 unknown-total leg null.
-    "q435_flac_meta" ->
-      """SELECT doc_id AS media_id, 'flac' AS format, TRUE AS parsed,
-        | CAST(32000 + (doc_id % 5) * 8000 AS INT) AS sample_rate,
-        | CAST(CASE WHEN doc_id % 9 = 0 THEN NULL
-        |  ELSE ((44100 + (doc_id % 1000) * 50) * 1000000) //
-        |       (32000 + (doc_id % 5) * 8000) END AS BIGINT) AS duration_us
-        |FROM documents""".stripMargin,
-    // q436: the minus-one canvas fields undone by the id formulas.
-    "q436_webp_dims" ->
-      """SELECT doc_id AS media_id, 'webp' AS format, TRUE AS parsed,
-        | CAST(10 + doc_id % 100 AS INT) AS width,
-        | CAST(5 + doc_id % 50 AS INT) AS height
-        |FROM documents""".stripMargin,
-    // q434: both keyframes map to the ANCHOR doc's geometry (frame 3
-    // repeats frame 0 by construction), frame indices pinned to the
-    // stss picks {0, 3}.
-    "q434_mp4_keyframes" ->
-      """WITH v AS (SELECT doc_id AS vid FROM documents
-        |  WHERE doc_id % 10 = 0 AND doc_id + 6 <= (SELECT max(doc_id) FROM documents)),
-        |fr AS (SELECT vid, f.f AS frame_idx FROM v
-        |       CROSS JOIN (VALUES (0), (3)) f(f)),
-        |geom AS (SELECT vid, frame_idx,
-        |  8 + vid % 24 AS w, 8 + vid % 16 AS h FROM fr)
-        |SELECT vid AS media_id, CAST(frame_idx AS BIGINT) AS frame_idx,
-        | CAST(54 + ((24 * w + 31) // 32) * 4 * h AS BIGINT) AS n_bytes
-        |FROM geom""".stripMargin,
-    // q433: the four frame formulas in tag order — the v2.3/v2.4 wire
-    // split is invisible to the decoded values (ASCII text in both
-    // encodings), which is exactly the reader's job.
-    "q433_id3_tags" ->
-      """WITH f AS (
-        | SELECT doc_id, 0 AS pos, 'TIT2' AS frame_id,
-        |  'Title ' || CAST(doc_id AS VARCHAR) AS value FROM documents
-        | UNION ALL SELECT doc_id, 1, 'TPE1',
-        |  'Artist ' || CAST(doc_id % 7 AS VARCHAR) FROM documents
-        | UNION ALL SELECT doc_id, 2, 'TALB',
-        |  'Album ' || CAST(doc_id % 3 AS VARCHAR) FROM documents
-        | UNION ALL SELECT doc_id, 3, 'TRCK',
-        |  CAST(doc_id % 12 + 1 AS VARCHAR) FROM documents WHERE doc_id % 4 = 1)
-        |SELECT doc_id AS media_id, CAST(pos AS INT) AS frame_pos, frame_id, value
-        |FROM f""".stripMargin,
-    // q429: the nine-family routing replayed as a CASE union — each
-    // family's header fields from its own id formulas, the gzip wrap
-    // on even docs invisible to everything but the gzipped flag, and
-    // the raw-bytes family parsed=false with all fields null.
-    "q429_media_triage" -> (MixedMediaCte +
-      """SELECT id AS media_id, format, id % 2 = 0 AS gzipped, parsed,
-        | width, height, n_frames, sample_rate, duration_us
-        |FROM m""".stripMargin),
-    // q432: the same family metadata through the archive lens — the
-    // declared Content-Type from the id routing (mislabeled to
-    // image/png on 10≡9 docs), type_matches true on honest sniffable
-    // rows, false on mislabels (unless the lie is accidentally true:
-    // a 10≡9 doc whose family really is png), null where the declared
-    // type has no sniffable family.
-    "q432_archive_media_triage" -> (MixedMediaCte +
-      """SELECT id AS doc_id,
-        | CASE WHEN id % 10 = 9 THEN 'image/png' ELSE
-        |   CASE r WHEN 0 THEN 'image/bmp' WHEN 1 THEN 'image/png'
-        |          WHEN 2 THEN 'image/gif' WHEN 3 THEN 'image/jpeg'
-        |          WHEN 4 THEN 'audio/wav' WHEN 5 THEN 'video/x-msvideo'
-        |          WHEN 6 THEN 'video/mp4' WHEN 7 THEN 'audio/mpeg'
-        |          ELSE 'application/octet-stream' END
-        | END AS content_type,
-        | format,
-        | CAST(CASE WHEN id % 10 = 9 THEN format = 'png'
-        |      WHEN r = 8 THEN NULL ELSE TRUE END AS VARCHAR) AS type_matches,
-        | parsed, width, height, n_frames, sample_rate, duration_us
-        |FROM m""".stripMargin),
-    // q376: the q349 analytic dHash chain joined to the frame table on
-    // the frame-source identity (frame f of video v = image of doc
-    // v + 2f) — sampler, movi walk, and BMP decode all on the hook.
-    "q376_video_frame_dhash" ->
-      s"""WITH $DhashCte,
-         |v AS (SELECT doc_id AS vid FROM documents
-         |  WHERE doc_id % 10 = 0 AND doc_id + 6 <= (SELECT max(doc_id) FROM documents)),
-         |fr AS (SELECT vid, f.f AS frame_idx,
-         |  CASE WHEN f.f = 3 THEN vid ELSE vid + 2 * f.f END AS src
-         |       FROM v CROSS JOIN range(4) f(f))
-         |SELECT fr.vid AS media_id, CAST(fr.frame_idx AS BIGINT) AS frame_idx, dh.dhash
-         |FROM fr JOIN dh ON dh.media_id = fr.src""".stripMargin,
-    // q377: brute-forced pairs over the q376 frame-fingerprint table —
-    // matching it proves the 8x8 banding is lossless on video frames too.
-    "q377_video_neardup" ->
-      s"""WITH $DhashCte,
-         |v AS (SELECT doc_id AS vid FROM documents
-         |  WHERE doc_id % 10 = 0 AND doc_id + 6 <= (SELECT max(doc_id) FROM documents)),
-         |fr AS (SELECT vid, f.f AS frame_idx,
-         |  CASE WHEN f.f = 3 THEN vid ELSE vid + 2 * f.f END AS src
-         |       FROM v CROSS JOIN range(4) f(f)),
-         |fh AS (SELECT fr.vid * 4 + fr.frame_idx AS id, dh.dhash AS h
-         |       FROM fr JOIN dh ON dh.media_id = fr.src)
-         |SELECT a.id AS a_id, b.id AS b_id,
-         | CAST(bit_count(xor(a.h, b.h)) AS BIGINT) AS hamming
-         |FROM fh a JOIN fh b ON a.id < b.id
-         |WHERE bit_count(xor(a.h, b.h)) <= 7""".stripMargin,
-    // q378: every one of the 8x8x3 thumbnail bytes recomputed from the
-    // source formula — nearest-neighbor source pixel (X*w//8, Y*h//8),
-    // bottom-up offset, text-byte cycle — then the channel sums.
-    "q378_image_resize" ->
-      """WITH d AS (
-        | SELECT doc_id, coalesce(text, '') AS t FROM documents WHERE doc_id % 2 = 0),
-        |par AS (SELECT doc_id, t, strlen(t) AS l, 8 + doc_id % 24 AS w,
-        |  8 + doc_id % 16 AS h FROM d),
-        |geom AS (SELECT *, ((24 * w + 31) // 32) * 4 AS row_size FROM par),
-        |px AS (
-        | SELECT doc_id,
-        |  (h - 1 - (yy.y * h) // 8) * row_size + 3 * ((xx.x * w) // 8) + cc.c AS o,
-        |  cc.c AS c, l, t
-        | FROM geom CROSS JOIN range(8) yy(y) CROSS JOIN range(8) xx(x)
-        |   CROSS JOIN range(3) cc(c)),
-        |v AS (SELECT doc_id, c,
-        |  CASE WHEN l = 0 THEN 0
-        |   ELSE ascii(substring(t, CAST(o % l AS INT) + 1, 1)) END AS v
-        | FROM px)
-        |SELECT doc_id AS media_id, CAST(8 AS BIGINT) AS width,
-        | CAST(8 AS BIGINT) AS height, CAST(64 AS BIGINT) AS n_pixels,
-        | CAST(sum(CASE WHEN c = 0 THEN v ELSE 0 END) AS BIGINT) AS sum_b,
-        | CAST(sum(CASE WHEN c = 1 THEN v ELSE 0 END) AS BIGINT) AS sum_g,
-        | CAST(sum(CASE WHEN c = 2 THEN v ELSE 0 END) AS BIGINT) AS sum_r
-        |FROM v GROUP BY doc_id""".stripMargin,
-    // q379: the per-group bottom-k replay — hash, rank within group by
-    // (u, v), keep k, then rank by (v, u) and the lower-empirical-
-    // quantile arithmetic per group.
-    "q379_group_quantiles" -> {
-      val u = hexPrefixOracle("md5(CAST(doc_id AS VARCHAR))", 8)
-      s"""WITH s AS (SELECT source AS g, $u AS u,
-         |  CAST(strlen(coalesce(text, '')) AS BIGINT) AS v FROM documents),
-         |b AS (SELECT g, u, v, row_number() OVER
-         |  (PARTITION BY g ORDER BY u, v) AS brn FROM s),
-         |sk AS (SELECT g, u, v FROM b WHERE brn <= 128),
-         |r AS (SELECT g, v, u,
-         |  row_number() OVER (PARTITION BY g ORDER BY v, u) AS rn,
-         |  CAST(count(*) OVER (PARTITION BY g) AS BIGINT) AS n_sample FROM sk),
-         |q AS (SELECT CAST(q_ppm AS BIGINT) AS q_ppm FROM (VALUES
-         |  (250000), (500000), (750000), (990000)) t(q_ppm))
-         |SELECT r.g AS source, q.q_ppm, r.v AS est, r.n_sample
-         |FROM q JOIN r ON r.rn = greatest(1, (q.q_ppm * r.n_sample + 999999) // 1000000)""".stripMargin
-    },
-    // q380: independent derivation — per-host delay from the robots
-    // formula ((h%3+1)*1000+500 ms, 700 default on every 5th host), then
-    // the per-host window with delay-scaled offsets.
-    "q380_crawl_delay_schedule" ->
-      """WITH f AS (
-        | SELECT 'host' || CAST(doc_id % 20 AS VARCHAR) || '.example.com' AS host,
-        |  'http://host' || CAST(doc_id % 20 AS VARCHAR) || '.example.com/p/'
-        |    || CAST(doc_id AS VARCHAR) AS url,
-        |  CAST(doc_id * 7919 % 101 AS BIGINT) AS priority,
-        |  CAST(CASE WHEN (doc_id % 20) % 5 = 0 THEN 700
-        |       ELSE ((doc_id % 20) % 3 + 1) * 1000 + 500 END AS BIGINT) AS delay_ms
-        | FROM documents),
-        |d AS (SELECT host, url, max(priority) AS priority, max(delay_ms) AS delay_ms
-        |      FROM f GROUP BY 1, 2),
-        |r AS (SELECT host, url, priority, delay_ms,
-        |  row_number() OVER (PARTITION BY host ORDER BY priority DESC, url ASC) AS rn
-        | FROM d)
-        |SELECT host, url, priority, delay_ms,
-        | CAST((rn - 1) * delay_ms AS BIGINT) AS fetch_offset_ms
-        |FROM r WHERE rn <= 6""".stripMargin,
-    // q381: the q149 analytic sample formula at the nearest-neighbor
-    // remapped index (i·srcRate // 6000), output length n·6000 // srcRate
-    // — then the same integer PCM statistics.
-    "q381_audio_resample" ->
-      """WITH d AS (
-        | SELECT doc_id, coalesce(text, '') AS t FROM documents WHERE doc_id % 2 = 1),
-        |par AS (
-        | SELECT doc_id, t, strlen(t) AS l, 500 + doc_id % 1000 AS n,
-        |  8000 + (doc_id % 8) * 1000 AS rate
-        | FROM d),
-        |res AS (SELECT *, (n * 6000) // rate AS n_out FROM par),
-        |ix AS (SELECT doc_id, n_out, t, l, rate, unnest(range(n_out)) AS i FROM res),
-        |v AS (
-        | SELECT doc_id, n_out,
-        |  CASE WHEN l = 0 THEN 0
-        |   ELSE ascii(substring(t, CAST(((i * rate) // 6000) % l AS INT) + 1, 1)) * 128 END AS s
-        | FROM ix)
-        |SELECT doc_id AS media_id, CAST(6000 AS BIGINT) AS sample_rate,
-        | CAST(n_out AS BIGINT) AS n_samples,
-        | CAST(sum(CAST(s AS BIGINT) * s) AS BIGINT) AS energy,
-        | CAST(sum(s) // n_out AS BIGINT) AS mean_abs,
-        | CAST(max(s) AS BIGINT) AS peak_abs
-        |FROM v GROUP BY doc_id, n_out""".stripMargin,
-    // q382: q374's derivation verbatim — the gzip/gunzip roundtrip must
-    // reproduce the container bytes exactly for the parse to agree.
-    "q382_gzip_video_ingest" -> VideoMetaOracleSql,
-    // q383: q378's 8x8 resample arithmetic applied per FRAME through the
-    // q376 frame-source identity — sampler, decoder, resampler and stats
-    // walk all replayed from the id formulas.
-    "q383_video_thumbnails" ->
-      """WITH vv AS (SELECT doc_id AS vid FROM documents
-        |  WHERE doc_id % 10 = 0 AND doc_id + 6 <= (SELECT max(doc_id) FROM documents)),
-        |fr AS (SELECT vid, f.f AS frame_idx,
-        |  CASE WHEN f.f = 3 THEN vid ELSE vid + 2 * f.f END AS src
-        | FROM vv CROSS JOIN range(4) f(f)),
-        |d AS (SELECT doc_id, coalesce(text, '') AS t FROM documents),
-        |par AS (SELECT fr.vid, fr.frame_idx, d.t, strlen(d.t) AS l,
-        |  8 + fr.src % 24 AS w, 8 + fr.src % 16 AS h
-        | FROM fr JOIN d ON d.doc_id = fr.src),
-        |geom AS (SELECT *, ((24 * w + 31) // 32) * 4 AS row_size FROM par),
-        |px AS (
-        | SELECT vid, frame_idx,
-        |  (h - 1 - (yy.y * h) // 8) * row_size + 3 * ((xx.x * w) // 8) + cc.c AS o,
-        |  cc.c AS c, l, t
-        | FROM geom CROSS JOIN range(8) yy(y) CROSS JOIN range(8) xx(x)
-        |   CROSS JOIN range(3) cc(c)),
-        |v2 AS (SELECT vid, frame_idx, c,
-        |  CASE WHEN l = 0 THEN 0
-        |   ELSE ascii(substring(t, CAST(o % l AS INT) + 1, 1)) END AS v
-        | FROM px)
-        |SELECT vid * 4 + frame_idx AS media_id, CAST(8 AS BIGINT) AS width,
-        | CAST(8 AS BIGINT) AS height, CAST(64 AS BIGINT) AS n_pixels,
-        | CAST(sum(CASE WHEN c = 0 THEN v ELSE 0 END) AS BIGINT) AS sum_b,
-        | CAST(sum(CASE WHEN c = 1 THEN v ELSE 0 END) AS BIGINT) AS sum_g,
-        | CAST(sum(CASE WHEN c = 2 THEN v ELSE 0 END) AS BIGINT) AS sum_r
-        |FROM v2 GROUP BY vid, frame_idx""".stripMargin,
-    // q384: identity derivation — a correct member walk + record framing
-    // must reproduce each file's records in order: one fixed warcinfo
-    // per file (21-byte body), then the file's documents in doc-id order
-    // with URI/type/length/text straight from the table (text is pure
-    // ASCII, so strlen == octet_length — the q364 precedent).
-    "q384_warc_ingest" -> WarcIngestOracleSql,
-    // q431: the SAME oracle verbatim - the zstd container layout must
-    // be invisible to parse-back (one frame per record, same rows).
-    "q431_warc_zst_ingest" -> WarcIngestOracleSql,
-    // q385: the q359 replay chain over the same HTML fixture (q365's
-    // oracle shape), admission and canonical URL derived straight from
-    // the WARC Target-URI id formula — robots drops doc_id % 7 = 0, the
-    // URI is already canonical (lowercase host, no port/query/fragment),
-    // and hostN.example.com's registered domain is example.com.
-    "q385_warc_crawl" ->
-      s"""WITH $HtmlFixtureCte,
-         |$MainContentCtes,
-         |adm AS (SELECT h.doc_id, coalesce(m.main_text, '') AS mt
-         |        FROM h LEFT JOIN m USING (doc_id) WHERE h.doc_id % 7 <> 0)
-         |SELECT doc_id,
-         | 'https://host' || CAST(doc_id % 20 AS VARCHAR) || '.example.com/dir/page'
-         |   || CAST(doc_id AS VARCHAR) AS canonical_url,
-         | 'example.com' AS registered_domain,
-         | CAST(len(regexp_extract_all(mt, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT)
-         |   AS n_tokens
-         |FROM adm""".stripMargin,
-    // q386: the q150 idiom minus row padding — PNG scanlines are
-    // unpadded, so byte j of the pixel stream is channel j%3 (RGB order:
-    // 0→r, 1→g, 2→b) and the cycled-text formula is a plain modulus.
-    "q386_png_stats" ->
-      """WITH d AS (SELECT doc_id, coalesce(text, '') AS t FROM documents),
-        |par AS (SELECT doc_id, t, strlen(t) AS l, 8 + doc_id % 24 AS w,
-        |  8 + doc_id % 16 AS h FROM d),
-        |ix AS (SELECT doc_id, w, h, t, l, unnest(range(3 * w * h)) AS j FROM par),
-        |px AS (SELECT doc_id, w, h, j % 3 AS c,
-        |  CASE WHEN l = 0 THEN 0
-        |   ELSE ascii(substring(t, CAST(j % l AS INT) + 1, 1)) END AS v
-        | FROM ix)
-        |SELECT doc_id AS media_id, CAST(w AS BIGINT) AS width,
-        | CAST(h AS BIGINT) AS height, CAST(w * h AS BIGINT) AS n_pixels,
-        | CAST(sum(CASE WHEN c = 2 THEN v ELSE 0 END) AS BIGINT) AS sum_b,
-        | CAST(sum(CASE WHEN c = 1 THEN v ELSE 0 END) AS BIGINT) AS sum_g,
-        | CAST(sum(CASE WHEN c = 0 THEN v ELSE 0 END) AS BIGINT) AS sum_r
-        |FROM px GROUP BY doc_id, w, h""".stripMargin,
-    // q387: the q349 grid replay in PNG geometry — top-down rows, no row
-    // padding, base = 3·(y·w + x); gray is channel-order-free.
-    "q387_png_dhash" ->
-      """WITH d AS (SELECT doc_id, coalesce(text, '') AS t FROM documents),
-        |par AS (SELECT doc_id, t, strlen(t) AS l, 8 + doc_id % 24 AS w,
-        |  8 + doc_id % 16 AS h FROM d),
-        |cells AS (
-        | SELECT doc_id, l, t,
-        |  3 * ((((2 * cy.cy + 1) * h) // 16) * w + ((2 * cx.cx + 1) * w) // 18) AS base,
-        |  cy.cy AS cy, cx.cx AS cx
-        | FROM par CROSS JOIN range(8) cy(cy) CROSS JOIN range(9) cx(cx)),
-        |gcell AS (
-        | SELECT doc_id, cy, cx,
-        |  ((CASE WHEN l = 0 THEN 0 ELSE ascii(substring(t, CAST(base % l AS INT) + 1, 1)) END)
-        |   + (CASE WHEN l = 0 THEN 0 ELSE ascii(substring(t, CAST((base + 1) % l AS INT) + 1, 1)) END)
-        |   + (CASE WHEN l = 0 THEN 0 ELSE ascii(substring(t, CAST((base + 2) % l AS INT) + 1, 1)) END)) // 3 AS gray
-        | FROM cells),
-        |dh AS (
-        | SELECT a.doc_id AS media_id,
-        |  CAST(coalesce(sum(CASE WHEN a.gray < b.gray THEN
-        |    CASE WHEN a.cy * 8 + a.cx = 63 THEN CAST(-9223372036854775807 AS HUGEINT) - 1
-        |         ELSE CAST(CAST(1 AS BIGINT) << (a.cy * 8 + a.cx) AS HUGEINT) END
-        |    ELSE CAST(0 AS HUGEINT) END), 0) AS BIGINT) AS dhash
-        | FROM gcell a JOIN gcell b
-        |   ON a.doc_id = b.doc_id AND a.cy = b.cy AND b.cx = a.cx + 1
-        | WHERE a.cx < 8
-        | GROUP BY 1)
-        |SELECT dh.media_id, CAST(p.w AS BIGINT) AS width,
-        | CAST(p.h AS BIGINT) AS height, dh.dhash
-        |FROM dh JOIN par p ON p.doc_id = dh.media_id""".stripMargin,
-    // q388: the integer source-pixel map replayed — target (x, y) of the
-    // 8×8 thumbnail reads source (x·w//8, y·h//8), then the q386 channel
-    // sums over the 64 sampled pixels.
-    "q388_png_resize" ->
-      """WITH d AS (SELECT doc_id, coalesce(text, '') AS t FROM documents),
-        |par AS (SELECT doc_id, t, strlen(t) AS l, 8 + doc_id % 24 AS w,
-        |  8 + doc_id % 16 AS h FROM d),
-        |tgt AS (
-        | SELECT doc_id, t, l,
-        |  3 * (((yy.y * h) // 8) * w + (xx.x * w) // 8) AS base
-        | FROM par CROSS JOIN range(8) yy(y) CROSS JOIN range(8) xx(x)),
-        |ch AS (
-        | SELECT doc_id, cc.c AS c,
-        |  CASE WHEN l = 0 THEN 0
-        |   ELSE ascii(substring(t, CAST((base + cc.c) % l AS INT) + 1, 1)) END AS v
-        | FROM tgt CROSS JOIN range(3) cc(c))
-        |SELECT doc_id AS media_id, CAST(8 AS BIGINT) AS width,
-        | CAST(8 AS BIGINT) AS height, CAST(64 AS BIGINT) AS n_pixels,
-        | CAST(sum(CASE WHEN c = 2 THEN v ELSE 0 END) AS BIGINT) AS sum_b,
-        | CAST(sum(CASE WHEN c = 1 THEN v ELSE 0 END) AS BIGINT) AS sum_g,
-        | CAST(sum(CASE WHEN c = 0 THEN v ELSE 0 END) AS BIGINT) AS sum_r
-        |FROM ch GROUP BY doc_id""".stripMargin,
-    // q389: transcoding must be pixel-invisible, so the oracle is q349's
-    // replay VERBATIM — if the BMP decoder, PNG encoder and PNG decoder
-    // disagree anywhere, the hashes diverge and this query goes red.
-    "q389_transcode_dhash" ->
-      s"""WITH $DhashCte
-         |SELECT dh.media_id, CAST(p.w AS BIGINT) AS width,
-         | CAST(p.h AS BIGINT) AS height, dh.dhash
-         |FROM dh JOIN par p ON p.doc_id = dh.media_id""".stripMargin,
-    // q390: pure identity derivation — each leg's label/flags are fixed
-    // by the residue and the transcoded text is the ASCII text plus the
-    // leg's known non-ASCII tail (chr(233) = é, identical in latin-1 and
-    // windows-1252 for bytes ≥ 0xA0); the BOM'd legs strip their BOM.
-    // Declared iso-8859-1 aliases to windows-1252 per WHATWG (the
-    // mislabeled-page rule), so legs 3 and 4 share the label.
-    "q390_charset_decode" ->
-      """SELECT doc_id,
-        | CASE WHEN doc_id % 5 = 2 THEN 'utf-16le'
-        |  WHEN doc_id % 5 IN (3, 4) THEN 'windows-1252' ELSE 'utf-8' END AS encoding,
-        | doc_id % 5 IN (1, 2) AS bom,
-        | doc_id % 5 = 4 AS mojibake_risk,
-        | CASE doc_id % 5
-        |  WHEN 1 THEN coalesce(text, '') || ' ' || chr(233)
-        |  WHEN 3 THEN '<meta charset="iso-8859-1">' || coalesce(text, '') || chr(233)
-        |  WHEN 4 THEN coalesce(text, '') || chr(233)
-        |  ELSE coalesce(text, '') END AS text_out
-        |FROM documents""".stripMargin,
-    // q391: the q136 encode replay ([[BpeEncodeCtes]], pinned merges)
-    // feeds the q317 window replay — per-doc n := n_subwords, then the
-    // identical prefix-sum/fan-out arithmetic at window 256.
-    "q391_bpe_pack_chunk" ->
-      s"""WITH $BpeEncodeCtes,
-        |d2 AS (SELECT doc_id, n_subwords AS n FROM per),
-        |p2 AS (SELECT doc_id, n,
-        |  CAST(sum(n) OVER (ORDER BY doc_id) - n AS BIGINT) AS s
-        | FROM d2 WHERE n > 0),
-        |x AS (SELECT doc_id, n, s,
-        |  unnest(generate_series(s // 256, (s + n - 1) // 256)) AS w FROM p2)
-        |SELECT CAST(w AS BIGINT) AS window_id, doc_id,
-        | CAST(greatest(w * 256, s) - w * 256 AS BIGINT) AS offset_in_window,
-        | CAST(least((w + 1) * 256, s + n) - greatest(w * 256, s) AS BIGINT) AS n_in_window,
-        | s >= w * 256 AS is_head, s + n <= (w + 1) * 256 AS is_tail
-        |FROM x""".stripMargin,
-    // q392: the q318 jump-function/recursive-boundary replay over the
-    // composed BPE counts at capacity 8192.
-    "q392_bpe_pack_nextfit" ->
-      s"""WITH RECURSIVE $BpeEncodeCtes,
-        |d2 AS (SELECT doc_id, n_subwords AS n FROM per),
-        |p2 AS (SELECT doc_id, n,
-        |  CAST(row_number() OVER (ORDER BY doc_id) AS BIGINT) AS rk,
-        |  CAST(sum(n) OVER (ORDER BY doc_id) AS BIGINT) AS cum
-        | FROM d2 WHERE n > 0),
-        |s0 AS (SELECT rk, cum FROM p2
-        | UNION ALL SELECT CAST(0 AS BIGINT), CAST(0 AS BIGINT)),
-        |j AS (SELECT t.rk AS i, CAST(max(b.rk) AS BIGINT) AS jmp
-        | FROM s0 t JOIN s0 b ON b.cum <= t.cum + 8192 GROUP BY 1),
-        |wb(b, w) AS (
-        | SELECT CAST(0 AS BIGINT) AS b, CAST(0 AS BIGINT) AS w
-        | UNION ALL
-        | SELECT j.jmp, wb.w + 1 FROM wb JOIN j ON j.i = wb.b WHERE j.jmp > wb.b),
-        |bnd AS (SELECT wb.w, s0.cum AS bc FROM wb JOIN s0 ON s0.rk = wb.b)
-        |SELECT p2.doc_id,
-        | CAST((SELECT max(bnd.w) FROM bnd WHERE bnd.bc < p2.cum) AS BIGINT) AS window_id,
-        | p2.n AS n_tokens
-        |FROM p2""".stripMargin,
-    // q393: pure identity derivation — status/content-type/header-count
-    // from the id formulas, body the roundtrip identity (the q384
-    // precedent, one framing layer deeper).
-    "q393_http_split" ->
-      """SELECT doc_id,
-        | CAST(200 + (doc_id % 3) * 2 AS BIGINT) AS status,
-        | CASE WHEN doc_id % 2 = 1 THEN 'text/html; charset=iso-8859-1'
-        |  ELSE 'text/html' END AS content_type,
-        | CAST(2 AS BIGINT) AS n_headers,
-        | coalesce(text, '') AS text_out
-        |FROM documents""".stripMargin,
-    // q394: the q359 replay chain over the fixture html EXTENDED with
-    // the é paragraph (chr(233) — both encoding legs must deliver the
-    // identical decoded page or the token counts diverge), encoding
-    // label from the leg formula. The base fixture CTE is renamed h0 by
-    // a literal string substitution on the SHARED HtmlFixtureCte value
-    // so the two cannot drift.
-    "q394_warc_http_ingest" ->
-      s"""WITH ${HtmlFixtureCte.replace("h AS (SELECT doc_id,", "h0 AS (SELECT doc_id,")},
-         |h AS (SELECT doc_id, html || chr(10) || '<p>caf' || chr(233)
-         |  || ' filler prose line stays in the corpus</p>' AS html FROM h0),
-         |$MainContentCtes
-         |SELECT h.doc_id,
-         | CASE WHEN h.doc_id % 2 = 1 THEN 'windows-1252' ELSE 'utf-16le' END AS encoding,
-         | CAST(200 AS BIGINT) AS status,
-         | CAST(len(regexp_extract_all(coalesce(m.main_text, ''),
-         |   '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS n_tokens
-         |FROM h LEFT JOIN m USING (doc_id)""".stripMargin,
-    // q395: the flat-block derivation — every 8×8 block decodes to its
-    // formula value exactly (even values make dequantization the
-    // identity), so channel sums are Σ 64·v over the block grid; gray
-    // and color legs share the formula (gray pixels through YCbCr are
-    // exact).
-    "q395_jpeg_stats" -> JpegFlatStatsSql,
-    // q396: the q349/q387 grid replay where gray at a sample point IS
-    // the block formula of its 8×8 cell.
-    "q396_jpeg_dhash" ->
-      """WITH par AS (SELECT doc_id, 8 * (1 + doc_id % 3) AS w,
-        |  8 * (1 + doc_id % 2) AS h FROM documents),
-        |cells AS (
-        | SELECT doc_id, cy.cy AS cy, cx.cx AS cx,
-        |  (((2 * cx.cx + 1) * w) // 18) // 8 AS bx,
-        |  (((2 * cy.cy + 1) * h) // 16) // 8 AS byy
-        | FROM par CROSS JOIN range(8) cy(cy) CROSS JOIN range(9) cx(cx)),
-        |gcell AS (
-        | SELECT doc_id, cy, cx,
-        |  2 * ((doc_id * 7 + bx * 13 + byy * 29) % 128) AS gray
-        | FROM cells),
-        |dh AS (
-        | SELECT a.doc_id AS media_id,
-        |  CAST(coalesce(sum(CASE WHEN a.gray < b.gray THEN
-        |    CASE WHEN a.cy * 8 + a.cx = 63 THEN CAST(-9223372036854775807 AS HUGEINT) - 1
-        |         ELSE CAST(CAST(1 AS BIGINT) << (a.cy * 8 + a.cx) AS HUGEINT) END
-        |    ELSE CAST(0 AS HUGEINT) END), 0) AS BIGINT) AS dhash
-        | FROM gcell a JOIN gcell b
-        |   ON a.doc_id = b.doc_id AND a.cy = b.cy AND b.cx = a.cx + 1
-        | WHERE a.cx < 8
-        | GROUP BY 1)
-        |SELECT dh.media_id, CAST(p.w AS BIGINT) AS width,
-        | CAST(p.h AS BIGINT) AS height, dh.dhash
-        |FROM dh JOIN par p ON p.doc_id = dh.media_id""".stripMargin,
-    // q397: transcoding must be pixel-invisible across the THIRD format
-    // too — the oracle is q395's verbatim.
-    "q397_jpeg_transcode" -> JpegFlatStatsSql,
-    // q398: the q384 identity idiom with the conversion envelope —
-    // conversion records carry 7 header fields (4 base + Refers-To +
-    // Content-Type + Content-Length), warcinfo 4.
-    "q398_wet_export" ->
-      """WITH conv AS (
-        | SELECT CAST(doc_id // 8 AS BIGINT) AS file_id,
-        |  CAST(row_number() OVER (PARTITION BY doc_id // 8 ORDER BY doc_id)
-        |    AS BIGINT) AS record_idx,
-        |  'conversion' AS warc_type,
-        |  'https://host' || CAST(doc_id % 20 AS VARCHAR) || '.example.com/p/'
-        |    || CAST(doc_id AS VARCHAR) AS target_uri,
-        |  CAST(7 AS BIGINT) AS n_headers,
-        |  CAST(strlen(coalesce(text, '')) AS BIGINT) AS n_bytes,
-        |  coalesce(text, '') AS text_out
-        | FROM documents),
-        |info AS (
-        | SELECT DISTINCT CAST(doc_id // 8 AS BIGINT) AS file_id,
-        |  CAST(0 AS BIGINT) AS record_idx, 'warcinfo' AS warc_type,
-        |  CAST(NULL AS VARCHAR) AS target_uri, CAST(4 AS BIGINT) AS n_headers,
-        |  CAST(21 AS BIGINT) AS n_bytes,
-        |  'software: graft/0.1' || chr(13) || chr(10) AS text_out
-        | FROM documents)
-        |SELECT * FROM info UNION ALL SELECT * FROM conv""".stripMargin,
-    // q399: both declarations derived from the id formula; the foreign-
-    // group one only exists for doc_id % 3 = 0 and its trailing comment
-    // must strip.
-    "q399_robots_sitemaps" ->
-      """SELECT doc_id, CAST(0 AS BIGINT) AS pos,
-        | 'https://s' || CAST(doc_id % 6 AS VARCHAR) || '.example.com/sitemap'
-        |   || CAST(doc_id % 4 AS VARCHAR) || '.xml' AS sitemap_url
-        |FROM documents
-        |UNION ALL
-        |SELECT doc_id, CAST(1 AS BIGINT) AS pos,
-        | 'https://m' || CAST(doc_id % 5 AS VARCHAR) || '.example.org/root.xml' AS sitemap_url
-        |FROM documents WHERE doc_id % 3 = 0""".stripMargin,
-    // q400: both resolutions derived from the id formula — the rooted
-    // anchor swaps path only, the relative anchor merges with the
-    // base's directory (RFC 3986), and the base applies only on even
-    // ids (first-base-wins: the second declaration must not).
-    "q400_base_href" ->
-      """SELECT doc_id, CAST(0 AS BIGINT) AS pos,
-        | CASE WHEN doc_id % 2 = 0
-        |  THEN 'https://cdn' || CAST(doc_id % 3 AS VARCHAR) || '.example.net/local/'
-        |    || CAST(doc_id AS VARCHAR)
-        |  ELSE 'https://site' || CAST(doc_id % 4 AS VARCHAR) || '.github.io/local/'
-        |    || CAST(doc_id AS VARCHAR) END AS url
-        |FROM documents
-        |UNION ALL
-        |SELECT doc_id, CAST(1 AS BIGINT) AS pos,
-        | CASE WHEN doc_id % 2 = 0
-        |  THEN 'https://cdn' || CAST(doc_id % 3 AS VARCHAR) || '.example.net/assets/rel/p'
-        |    || CAST(doc_id % 5 AS VARCHAR) || '.html'
-        |  ELSE 'https://site' || CAST(doc_id % 4 AS VARCHAR) || '.github.io/dir/rel/p'
-        |    || CAST(doc_id % 5 AS VARCHAR) || '.html' END AS url
-        |FROM documents""".stripMargin,
-    // q401: every field straight from the id formula — the title's
-    // entity decodes and squishes, both meta attribute orders land the
-    // same description, og:title exists only on every 4th doc.
-    "q401_page_meta" ->
-      """SELECT doc_id,
-        | 'Doc ' || CAST(doc_id AS VARCHAR) || ' & Co' AS title,
-        | 'Summary ' || CAST(doc_id % 7 AS VARCHAR) || ' here.' AS description,
-        | CASE WHEN doc_id % 4 = 0 THEN 'OG ' || CAST(doc_id % 5 AS VARCHAR) END AS og_title
-        |FROM documents""".stripMargin,
-    // q402: both edge families from the id formula — the relative
-    // Location resolves against the record URI's directory root
-    // (RFC 3986 '/'-rooted), the absolute one passes through; 200s
-    // contribute nothing.
-    "q402_redirect_edges" ->
-      """SELECT
-        | 'https://host' || CAST(doc_id % 20 AS VARCHAR) || '.example.com/dir/p'
-        |   || CAST(doc_id AS VARCHAR) AS from_url,
-        | 'https://host' || CAST(doc_id % 20 AS VARCHAR) || '.example.com/moved/m'
-        |   || CAST(doc_id AS VARCHAR) AS to_url
-        |FROM documents WHERE doc_id % 4 = 0
-        |UNION ALL
-        |SELECT
-        | 'https://host' || CAST(doc_id % 20 AS VARCHAR) || '.example.com/dir/p'
-        |   || CAST(doc_id AS VARCHAR) AS from_url,
-        | 'https://next' || CAST(doc_id % 3 AS VARCHAR) || '.example.org/p'
-        |   || CAST(doc_id AS VARCHAR) AS to_url
-        |FROM documents WHERE doc_id % 4 = 1""".stripMargin,
-    // q403: every decodable leg's body is the roundtrip identity, and
-    // the mislabeled-br leg's "raw" body IS the plain text — so text_out
-    // is the identity on all six legs and only headers/flags vary, all
-    // from the id formula. Legs: 0 identity, 1 chunked, 2 gzip,
-    // 3 deflate, 4 chunked-over-gzip, 5 unsupported-br (flagged).
-    "q403_http_content_decode" ->
-      """SELECT doc_id,
-        | CAST(CASE WHEN doc_id % 6 = 0 THEN 2 WHEN doc_id % 6 = 4 THEN 4
-        |  ELSE 3 END AS BIGINT) AS n_headers,
-        | CASE WHEN doc_id % 6 IN (2, 4) THEN 'gzip'
-        |  WHEN doc_id % 6 = 3 THEN 'deflate'
-        |  WHEN doc_id % 6 = 5 THEN 'br' END AS content_encoding,
-        | doc_id % 6 <> 5 AS body_decoded,
-        | coalesce(text, '') AS text_out
-        |FROM documents""".stripMargin,
-    // q404: the envelope STRING rebuilt byte-for-byte from the id
-    // formulas (field order is interchange surface); metadata records
-    // carry 7 header fields (4 base + Refers-To + Content-Type +
-    // Content-Length), warcinfo 4 — the q398 grouping shape.
-    "q404_wat_export" ->
-      """WITH env AS (
-        | SELECT doc_id,
-        |  '{"status":' || CAST(200 + (doc_id % 3) * 2 AS VARCHAR)
-        |  || ',"content_type":"text/html","title":"Doc ' || CAST(doc_id AS VARCHAR)
-        |  || '","meta_desc":"Summary ' || CAST(doc_id % 7 AS VARCHAR)
-        |  || ' here.","base":"https://cdn' || CAST(doc_id % 3 AS VARCHAR)
-        |  || '.example.net/assets/","links":["https://a' || CAST(doc_id % 4 AS VARCHAR)
-        |  || '.example.org/x","/local/' || CAST(doc_id AS VARCHAR) || '"]}' AS envelope
-        | FROM documents),
-        |meta AS (
-        | SELECT CAST(doc_id // 8 AS BIGINT) AS file_id,
-        |  CAST(row_number() OVER (PARTITION BY doc_id // 8 ORDER BY doc_id)
-        |    AS BIGINT) AS record_idx,
-        |  'metadata' AS warc_type,
-        |  'https://host' || CAST(doc_id % 20 AS VARCHAR) || '.example.com/p/'
-        |    || CAST(doc_id AS VARCHAR) AS target_uri,
-        |  CAST(7 AS BIGINT) AS n_headers,
-        |  envelope
-        | FROM env),
-        |info AS (
-        | SELECT DISTINCT CAST(doc_id // 8 AS BIGINT) AS file_id,
-        |  CAST(0 AS BIGINT) AS record_idx, 'warcinfo' AS warc_type,
-        |  CAST(NULL AS VARCHAR) AS target_uri, CAST(4 AS BIGINT) AS n_headers,
-        |  'software: graft/0.1' || chr(13) || chr(10) AS envelope
-        | FROM documents)
-        |SELECT * FROM info UNION ALL SELECT * FROM meta""".stripMargin,
-    // q405: per doc the declared file's residues (a, b) fix every
-    // entry; the index entry exists only on even a; the unfetched
-    // declaration never lands (inner join).
-    "q405_sitemap_discovery" ->
-      """WITH base AS (
-        | SELECT doc_id, doc_id % 6 AS a, doc_id % 4 AS b,
-        |  'https://s' || CAST(doc_id % 6 AS VARCHAR) || '.example.com' AS h,
-        |  'https://s' || CAST(doc_id % 6 AS VARCHAR) || '.example.com/sitemap'
-        |    || CAST(doc_id % 4 AS VARCHAR) || '.xml.gz' AS sm
-        | FROM documents)
-        |SELECT doc_id, sm AS sitemap_url, CAST(0 AS BIGINT) AS entry_pos,
-        | h || '/p' || CAST(b AS VARCHAR) || '/1' AS loc,
-        | '2024-0' || CAST((a + b) % 9 + 1 AS VARCHAR) || '-01' AS lastmod,
-        | FALSE AS is_index
-        |FROM base
-        |UNION ALL
-        |SELECT doc_id, sm, CAST(1 AS BIGINT),
-        | h || '/p' || CAST(b AS VARCHAR) || '/2', CAST(NULL AS VARCHAR), FALSE
-        |FROM base
-        |UNION ALL
-        |SELECT doc_id, sm, CAST(2 AS BIGINT),
-        | h || '/more' || CAST(b AS VARCHAR) || '.xml.gz', CAST(NULL AS VARCHAR), TRUE
-        |FROM base WHERE a % 2 = 0""".stripMargin,
-    // q406: q395's flat-block derivation verbatim — the progressive
-    // scan accumulation must reconstruct the identical pixels.
-    "q406_jpeg_progressive" -> JpegFlatStatsSql,
-    // q407: the WHOLE chain replayed in SQL — the html fixture retargeted
-    // at the clone-content id (literal substitutions on the SHARED
-    // HtmlFixtureCte, so the two cannot drift), the q359 main-content
-    // replay, then the pinned-merge encode + q317 window arithmetic over
-    // the survivors. The dedup outcome derives from the construction:
-    // main_text embeds the content id, so verified text equality holds
-    // EXACTLY for the % 10 = 7 clones — raw fingerprint collisions
-    // (which exist at sf0.01) are vetoed by the verify stage on the
-    // Spark side and never dropped. Charset legs cancel out by
-    // construction — both decode to the identical page.
-    "q407_corpus_composite" ->
-      s"""WITH src0 AS (SELECT doc_id AS real_id,
-         |  CASE WHEN doc_id % 10 = 7 THEN doc_id - 1 ELSE doc_id END AS cid
-         | FROM documents),
-         |${HtmlFixtureCte
-            .replace("d AS (SELECT doc_id, coalesce(text, '') AS t FROM documents)",
-              "d AS (SELECT s.real_id, s.cid AS doc_id, coalesce(x.text, '') AS t" +
-                " FROM src0 s JOIN documents x ON x.doc_id = s.cid)")
-            .replace("h AS (SELECT doc_id,", "h0 AS (SELECT real_id, doc_id,")},
-         |h AS (SELECT real_id AS doc_id, html || chr(10) || '<p>caf' || chr(233)
-         |  || ' filler prose line stays in the corpus</p>' AS html FROM h0),
-         |$MainContentCtes,
-         |kept AS (
-         | SELECT doc_id, main_text AS text FROM m WHERE doc_id % 10 <> 7),
-         |${BpeEncodeCtes.replace("FROM documents)", "FROM kept)")},
-         |d2 AS (SELECT doc_id, n_subwords AS n FROM per),
-         |pp2 AS (SELECT doc_id, n,
-         |  CAST(sum(n) OVER (ORDER BY doc_id) - n AS BIGINT) AS s
-         | FROM d2 WHERE n > 0),
-         |x AS (SELECT doc_id, n, s,
-         |  unnest(generate_series(s // 256, (s + n - 1) // 256)) AS w FROM pp2)
-         |SELECT CAST(w AS BIGINT) AS window_id, doc_id,
-         | CAST(greatest(w * 256, s) - w * 256 AS BIGINT) AS offset_in_window,
-         | CAST(least((w + 1) * 256, s + n) - greatest(w * 256, s) AS BIGINT) AS n_in_window,
-         | s >= w * 256 AS is_head, s + n <= (w + 1) * 256 AS is_tail
-         |FROM x""".stripMargin,
-    // q408: the quarantine set is exactly the corruption residue —
-    // every truncated file fails the member walk, every intact file
-    // parses.
-    "q408_warc_quarantine" ->
-      """SELECT DISTINCT CAST(doc_id // 8 AS BIGINT) AS file_id
-        |FROM documents WHERE (doc_id // 8) % 5 = 2""".stripMargin,
-    // q409: responses pass through with their own text; the residue
-    // docs resolve to the PREDECESSOR's text with the revisit flag up.
-    "q409_warc_revisit" ->
-      """SELECT doc_id,
-        | '<urn:graft:rec:' || CAST(doc_id AS VARCHAR) || '>' AS record_id,
-        | FALSE AS was_revisit, coalesce(text, '') AS text_out
-        |FROM documents WHERE doc_id % 10 <> 7
-        |UNION ALL
-        |SELECT a.doc_id,
-        | '<urn:graft:rec:' || CAST(a.doc_id AS VARCHAR) || '>' AS record_id,
-        | TRUE AS was_revisit, coalesce(b.text, '') AS text_out
-        |FROM documents a JOIN documents b ON b.doc_id = a.doc_id - 1
-        |WHERE a.doc_id % 10 = 7""".stripMargin,
-    // q410: every envelope field straight from the id formula, plus the
-    // Refers-To pointer into the response-record id namespace.
-    "q410_wat_ingest" ->
-      """SELECT doc_id,
-        | '<urn:graft:rec:' || CAST(doc_id AS VARCHAR) || '>' AS refers_to,
-        | CAST(200 + (doc_id % 3) * 2 AS BIGINT) AS status,
-        | 'text/html' AS content_type,
-        | 'Doc ' || CAST(doc_id AS VARCHAR) AS title,
-        | 'Summary ' || CAST(doc_id % 7 AS VARCHAR) || ' here.' AS meta_desc,
-        | 'https://cdn' || CAST(doc_id % 3 AS VARCHAR) || '.example.net/assets/' AS base,
-        | CAST(2 AS BIGINT) AS n_links,
-        | '/local/' || CAST(doc_id AS VARCHAR) AS last_link
-        |FROM documents""".stripMargin,
-    // q411: the full frequency replay — explode lines with positions,
-    // per-(host, line) distinct-page counts, anti-join the template set,
-    // rejoin in line order. Thresholds emergent, valid at every sf.
-    "q411_template_removal" ->
-      """WITH pg AS (SELECT doc_id, 'h' || CAST(doc_id % 5 AS VARCHAR) AS host,
-        |  'Cookie banner accept' || chr(10) ||
-        |  'NavBar for host ' || CAST(doc_id % 5 AS VARCHAR) || chr(10) ||
-        |  'unique prose ' || CAST(doc_id AS VARCHAR) || ' ' || coalesce(text, '') || chr(10) ||
-        |  'rare pair ' || CAST(doc_id // 250 AS VARCHAR) ||
-        |  (CASE WHEN doc_id % 2 = 0
-        |    THEN chr(10) || 'promo banner ' || CAST(doc_id % 5 AS VARCHAR)
-        |    ELSE '' END) AS text
-        | FROM documents),
-        |lx AS (SELECT doc_id, host, string_split(text, chr(10)) AS ls FROM pg),
-        |li AS (SELECT doc_id, host, ls, unnest(range(len(ls))) AS i FROM lx),
-        |ln AS (SELECT doc_id, host, i, ls[CAST(i AS INT) + 1] AS line FROM li),
-        |tmpl AS (SELECT host, line FROM ln
-        | GROUP BY host, line HAVING count(DISTINCT doc_id) >= 3),
-        |keep AS (SELECT ln.doc_id, ln.i, ln.line FROM ln
-        | ANTI JOIN tmpl ON ln.host = tmpl.host AND ln.line = tmpl.line),
-        |outp AS (SELECT doc_id,
-        |  array_to_string(list(line ORDER BY i), chr(10)) AS clean_text
-        | FROM keep GROUP BY doc_id)
-        |SELECT p.doc_id, coalesce(o.clean_text, '') AS clean_text
-        |FROM pg p LEFT JOIN outp o USING (doc_id)""".stripMargin,
-    // q412: both fetch sides from the id formula.
-    "q412_warc_request_pairs" ->
-      """SELECT doc_id, 'GET' AS method,
-        | '/p/' || CAST(doc_id AS VARCHAR) AS target,
-        | 'host' || CAST(doc_id % 20 AS VARCHAR) || '.example.com' AS host,
-        | 'graft/0.1' AS user_agent,
-        | CAST(2 AS BIGINT) AS req_headers,
-        | CAST(200 + (doc_id % 3) * 2 AS BIGINT) AS status,
-        | 'text/html' AS content_type
-        |FROM documents""".stripMargin,
-    // q413: depth-1 rows are the index's two pointers, depth-2 the
-    // children's entries minus the never-fetched (a=5, child 1) family.
-    "q413_sitemap_recursive" ->
-      """WITH base AS (
-        | SELECT doc_id, doc_id % 6 AS a, doc_id % 4 AS b,
-        |  'https://s' || CAST(doc_id % 6 AS VARCHAR) || '.example.com' AS h,
-        |  'https://s' || CAST(doc_id % 6 AS VARCHAR) || '.example.com/index'
-        |    || CAST(doc_id % 4 AS VARCHAR) || '.xml.gz' AS idx
-        | FROM documents),
-        |d1 AS (
-        | SELECT doc_id, idx AS sitemap_url, CAST(c AS BIGINT) AS entry_pos,
-        |  h || '/child' || CAST(b AS VARCHAR) || '_' || CAST(c AS VARCHAR)
-        |    || '.xml.gz' AS loc,
-        |  CAST(NULL AS VARCHAR) AS lastmod, TRUE AS is_index,
-        |  CAST(1 AS BIGINT) AS depth
-        | FROM base CROSS JOIN (VALUES (0), (1)) t(c)),
-        |d2 AS (
-        | SELECT doc_id,
-        |  h || '/child' || CAST(b AS VARCHAR) || '_' || CAST(c AS VARCHAR)
-        |    || '.xml.gz' AS sitemap_url,
-        |  CAST(p AS BIGINT) AS entry_pos,
-        |  h || '/p' || CAST(b AS VARCHAR) || '/' || CAST(c AS VARCHAR) || '/'
-        |    || CAST(p + 1 AS VARCHAR) AS loc,
-        |  CASE WHEN p = 0
-        |   THEN '2024-0' || CAST((a + c) % 9 + 1 AS VARCHAR) || '-02' END AS lastmod,
-        |  FALSE AS is_index, CAST(2 AS BIGINT) AS depth
-        | FROM base CROSS JOIN (VALUES (0), (1)) t(c) CROSS JOIN (VALUES (0), (1)) u(p)
-        | WHERE NOT (a = 5 AND c = 1))
-        |SELECT * FROM d1 UNION ALL SELECT * FROM d2""".stripMargin,
-    // q414: the q129 KN derivation (same integer rational, same
-    // minCount = 3 prune) extended with doc-keyed bigrams, the left
-    // join (unseen -> 0) and the integral mean.
-    "q414_lm_fluency" ->
-      """WITH tok AS (
-        | SELECT doc_id,
-        |  list_filter(string_split_regex(trim(lower(text)), '\s+'), w -> len(w) > 0) AS w
-        | FROM documents),
-        |bg0 AS (
-        | SELECT doc_id, unnest(list_transform(range(0, greatest(len(w) - 1, 0)),
-        |   i -> w[i+1] || ' ' || w[i+2])) AS bigram
-        | FROM tok),
-        |bi AS (
-        | SELECT string_split(bigram, ' ')[1] AS w1, string_split(bigram, ' ')[2] AS w2,
-        |  CAST(count(*) AS BIGINT) AS n_12
-        | FROM bg0 GROUP BY 1, 2),
-        |c1 AS (SELECT w1, CAST(sum(n_12) AS BIGINT) AS c_1 FROM bi GROUP BY 1),
-        |r1 AS (SELECT w1, CAST(count(*) AS BIGINT) AS r_1 FROM bi GROUP BY 1),
-        |l1 AS (SELECT w2, CAST(count(*) AS BIGINT) AS l_1 FROM bi GROUP BY 1),
-        |bb AS (SELECT CAST(count(*) AS BIGINT) AS n_bigrams FROM bi),
-        |probs AS (
-        | SELECT bi.w1, bi.w2,
-        |  CAST(floor((1000000 * (bb.n_bigrams * (4 * bi.n_12 - 3) + 3 * r1.r_1 * l1.l_1))
-        |    / (4 * c1.c_1 * bb.n_bigrams)) AS BIGINT) AS p_ppm
-        | FROM bi JOIN c1 USING (w1) JOIN r1 USING (w1) JOIN l1 USING (w2), bb
-        | WHERE bi.n_12 >= 3),
-        |db AS (
-        | SELECT doc_id, string_split(bigram, ' ')[1] AS w1,
-        |  string_split(bigram, ' ')[2] AS w2
-        | FROM bg0),
-        |sc AS (
-        | SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-        |  CAST(sum(coalesce(p_ppm, 0)) AS BIGINT) AS s
-        | FROM db LEFT JOIN probs USING (w1, w2) GROUP BY 1)
-        |SELECT d.doc_id, coalesce(sc.n_bigrams, CAST(0 AS BIGINT)) AS n_bigrams,
-        | coalesce(sc.s // sc.n_bigrams, CAST(0 AS BIGINT)) AS fluency_ppm
-        |FROM documents d LEFT JOIN sc USING (doc_id)""".stripMargin,
-    // q415: the q363 idiom with GROUP SELECTION in the formula — the
-    // images agent picks the longest token (its own group, only /img
-    // blocked), the crawler token keeps the q363-style private/ok rules,
-    // the foreign agent falls through to the star disallow-all.
-    "q415_robots_agent_groups" ->
-      """SELECT doc_id,
-        | CASE doc_id % 4
-        |  WHEN 0 THEN 'graftbot/1.0'
-        |  WHEN 1 THEN 'graftbot-images/2.0'
-        |  WHEN 2 THEN 'otherbot'
-        |  ELSE 'GraftBot' END AS agent,
-        | CASE doc_id % 5
-        |  WHEN 0 THEN '/private/ok' || CAST(doc_id % 2 AS VARCHAR) || '/page'
-        |  WHEN 1 THEN '/private/secret'
-        |  WHEN 2 THEN '/img/banner'
-        |  WHEN 3 THEN '/public/a'
-        |  ELSE '/x' END AS path,
-        | CASE
-        |  WHEN doc_id % 4 = 2 THEN false
-        |  WHEN doc_id % 4 = 1 THEN doc_id % 5 <> 2
-        |  ELSE CASE doc_id % 5
-        |   WHEN 0 THEN doc_id % 2 = 0
-        |   WHEN 1 THEN false
-        |   ELSE true END
-        | END AS allowed
-        |FROM documents""".stripMargin,
-    // q416: the envelope rebuilt byte-for-byte from the id formulas —
-    // offsets ANALYTIC from the record-framing arithmetic: a response
-    // record is 141 fixed header/framing bytes + len(id) + len(uri) +
-    // len(str(content_length)) + the payload, after a 146 + len(file_id)
-    // warcinfo lead record; the payload is the 44-byte HTTP envelope +
-    // the text.
-    "q416_cdx_export" -> (CdxOracleCtes +
-      s"""SELECT fid AS media_id, CAST(rn AS BIGINT) AS record_idx,
-        | surt_key, '20240101000000' AS ts, uri AS url,
-        | CAST(status AS INT) AS status, 'text/html' AS mime, digest,
-        | CAST(off AS BIGINT) AS "offset", CAST(rec_size AS BIGINT) AS length,
-        | fname AS filename,
-        | $CdxLineSqlExpr AS cdxj_line
-        |FROM o""".stripMargin),
-    // q417: the same derivation through the parse-back lens — typed
-    // fields only, no line assembly.
-    "q417_cdx_ingest" -> (CdxOracleCtes +
-      """SELECT surt_key, '20240101000000' AS ts, uri AS url, digest,
-        | 'text/html' AS mime, CAST(status AS INT) AS status,
-        | CAST(off AS BIGINT) AS "offset", CAST(rec_size AS BIGINT) AS length,
-        | fname AS filename
-        |FROM o""".stripMargin),
-    // q418: every pixel from the palette/index formulas — interlace and
-    // the second frame are invisible to order-free sums BY DESIGN (the
-    // sbt spec pins row order via dHash parity with a BMP of the same
-    // pixels and via javax.imageio cross-decode).
-    "q418_gif_decode" ->
-      """WITH par AS (SELECT doc_id, 8 + (doc_id % 3) * 7 AS w,
-        |  5 + (doc_id % 4) * 3 AS h FROM documents),
-        |px AS (
-        | SELECT doc_id, w, h, (x.x * 5 + y.y * 11 + doc_id) % 64 AS i
-        | FROM par CROSS JOIN range(22) x(x) CROSS JOIN range(14) y(y)
-        | WHERE x.x < w AND y.y < h),
-        |s AS (SELECT doc_id, w, h,
-        |  CAST(sum(255 - 3 * i) AS BIGINT) AS sb,
-        |  CAST(sum((i * 7) % 256) AS BIGINT) AS sg,
-        |  CAST(sum(4 * i) AS BIGINT) AS sr
-        | FROM px GROUP BY 1, 2, 3)
-        |SELECT doc_id AS media_id, CAST(w AS BIGINT) AS width,
-        | CAST(h AS BIGINT) AS height, CAST(w * h AS BIGINT) AS n_pixels,
-        | sb AS sum_b, sg AS sum_g, sr AS sum_r
-        |FROM s""".stripMargin,
-    // q419: the full chain replayed — the q14 lang-ID CTE partitions the
-    // corpus, the q414 KN derivation runs PER LANGUAGE (every key gains
-    // lang), the integral-mean gate keeps each language's upper docs,
-    // and q166's largest-remainder apportionment splits the 100k budget
-    // by surviving token mass.
-    "q419_lang_quality_gate" ->
-      s"""WITH g AS ($langIdOracle),
-         |dl AS (
-         | SELECT d.doc_id, d.text, g.lang_guess AS lang
-         | FROM documents d JOIN g USING (doc_id)),
-         |tok AS (
-         | SELECT doc_id, lang,
-         |  list_filter(string_split_regex(trim(lower(text)), '\\s+'), w -> len(w) > 0) AS w
-         | FROM dl),
-         |bg0 AS (
-         | SELECT doc_id, lang, unnest(list_transform(range(0, greatest(len(w) - 1, 0)),
-         |   i -> w[i+1] || ' ' || w[i+2])) AS bigram
-         | FROM tok),
-         |bi AS (
-         | SELECT lang, string_split(bigram, ' ')[1] AS w1,
-         |  string_split(bigram, ' ')[2] AS w2,
-         |  CAST(count(*) AS BIGINT) AS n_12
-         | FROM bg0 GROUP BY 1, 2, 3),
-         |c1 AS (SELECT lang, w1, CAST(sum(n_12) AS BIGINT) AS c_1 FROM bi GROUP BY 1, 2),
-         |r1 AS (SELECT lang, w1, CAST(count(*) AS BIGINT) AS r_1 FROM bi GROUP BY 1, 2),
-         |l1 AS (SELECT lang, w2, CAST(count(*) AS BIGINT) AS l_1 FROM bi GROUP BY 1, 2),
-         |bb AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_bigrams FROM bi GROUP BY 1),
-         |probs AS (
-         | SELECT bi.lang, bi.w1, bi.w2,
-         |  CAST(floor((1000000 * (bb.n_bigrams * (4 * bi.n_12 - 3) + 3 * r1.r_1 * l1.l_1))
-         |    / (4 * c1.c_1 * bb.n_bigrams)) AS BIGINT) AS p_ppm
-         | FROM bi JOIN c1 USING (lang, w1) JOIN r1 USING (lang, w1)
-         |  JOIN l1 USING (lang, w2) JOIN bb USING (lang)
-         | WHERE bi.n_12 >= 3),
-         |db AS (
-         | SELECT doc_id, lang, string_split(bigram, ' ')[1] AS w1,
-         |  string_split(bigram, ' ')[2] AS w2
-         | FROM bg0),
-         |sc AS (
-         | SELECT doc_id, lang, CAST(count(*) AS BIGINT) AS n_bigrams,
-         |  CAST(sum(coalesce(p_ppm, 0)) AS BIGINT) AS s
-         | FROM db LEFT JOIN probs USING (lang, w1, w2) GROUP BY 1, 2),
-         |sca AS (
-         | SELECT dl.doc_id, dl.lang,
-         |  coalesce(sc.s // sc.n_bigrams, CAST(0 AS BIGINT)) AS fl
-         | FROM dl LEFT JOIN sc ON dl.doc_id = sc.doc_id AND dl.lang = sc.lang),
-         |thr AS (
-         | SELECT lang, CAST(sum(fl) // count(*) AS BIGINT) AS thr,
-         |  CAST(count(*) AS BIGINT) AS n_docs
-         | FROM sca GROUP BY 1),
-         |dtok AS (
-         | SELECT doc_id, CAST(len(regexp_extract_all(text,
-         |  '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS tok
-         | FROM dl),
-         |kc AS (
-         | SELECT sca.lang, CAST(count(*) AS BIGINT) AS n_kept,
-         |  CAST(sum(dtok.tok) AS BIGINT) AS tokens
-         | FROM sca JOIN thr USING (lang) JOIN dtok USING (doc_id)
-         | WHERE sca.fl >= thr.thr GROUP BY 1),
-         |tt AS (SELECT CAST(sum(tokens) AS BIGINT) AS tot FROM kc),
-         |ap AS (
-         | SELECT lang, tokens,
-         |  CAST((100000 * tokens) // tot AS BIGINT) AS flr,
-         |  CAST((100000 * tokens) % tot AS BIGINT) AS rem
-         | FROM kc, tt),
-         |dd AS (SELECT CAST(100000 - sum(flr) AS BIGINT) AS deficit FROM ap),
-         |rk AS (
-         | SELECT lang, tokens, flr,
-         |  row_number() OVER (ORDER BY rem DESC, lang) AS rk
-         | FROM ap)
-         |SELECT rk.lang, thr.n_docs, thr.thr, kc.n_kept, rk.tokens,
-         | CAST(rk.flr + CASE WHEN rk.rk <= dd.deficit THEN 1 ELSE 0 END AS BIGINT) AS alloc
-         |FROM rk CROSS JOIN dd JOIN kc USING (lang) JOIN thr USING (lang)""".stripMargin,
-    // q420: both discovery legs straight from the id formulas — the RSS
-    // leg (declared on id%3≠2, host id%12, shard id%4, host 11 never
-    // fetched) and the atom leg (even ids, shard id%5, shard 4 never
-    // fetched), two entries each in document order.
-    "q420_feed_discovery" ->
-      """WITH rss AS (
-        | SELECT doc_id,
-        |  'https://host' || CAST(doc_id % 12 AS VARCHAR) || '.example.com/feed' ||
-        |   CAST(doc_id % 4 AS VARCHAR) || '.xml' AS feed_url,
-        |  'rss' AS feed_type, CAST(e.p AS BIGINT) AS entry_pos,
-        |  'https://host' || CAST(doc_id % 12 AS VARCHAR) || '.example.com/a/' ||
-        |   CAST(doc_id % 4 AS VARCHAR) || '/' || CAST(e.p + 1 AS VARCHAR) AS loc,
-        |  'rss' AS dialect
-        | FROM documents CROSS JOIN (VALUES (0), (1)) e(p)
-        | WHERE doc_id % 3 <> 2 AND doc_id % 12 <> 11),
-        |atom AS (
-        | SELECT doc_id,
-        |  'https://feeds.example.org/atom' || CAST(doc_id % 5 AS VARCHAR) ||
-        |   '.xml' AS feed_url,
-        |  'atom' AS feed_type, CAST(e.p AS BIGINT) AS entry_pos,
-        |  'https://ex.org/e/' || CAST(doc_id % 5 AS VARCHAR) || '/' ||
-        |   CAST(e.p + 1 AS VARCHAR) AS loc,
-        |  'atom' AS dialect
-        | FROM documents CROSS JOIN (VALUES (0), (1)) e(p)
-        | WHERE doc_id % 2 = 0 AND doc_id % 5 <> 4)
-        |SELECT * FROM rss UNION ALL SELECT * FROM atom""".stripMargin,
-    // q421: hints from the (agent, host) formula — even ids select the
-    // fastbot group (250 ms), odd ids fall through to star ((h%3+1).5 s,
-    // absent on h%5=0) — then the q380 fold/window replay with the
-    // host-level max-or-default delay joined back.
-    "q421_agent_delay_schedule" ->
-      """WITH f AS (
-        | SELECT 'host' || CAST(doc_id % 20 AS VARCHAR) || '.example.com' AS host,
-        |  'http://host' || CAST(doc_id % 20 AS VARCHAR) || '.example.com/p/'
-        |    || CAST(doc_id AS VARCHAR) AS url,
-        |  CAST(doc_id * 7919 % 101 AS BIGINT) AS priority,
-        |  CASE WHEN doc_id % 2 = 0 THEN CAST(250 AS BIGINT)
-        |   WHEN (doc_id % 20) % 5 = 0 THEN NULL
-        |   ELSE CAST(((doc_id % 20) % 3 + 1) * 1000 + 500 AS BIGINT) END AS hint
-        | FROM documents),
-        |d AS (SELECT host, url, max(priority) AS priority, max(hint) AS hint
-        |      FROM f GROUP BY 1, 2),
-        |hd AS (SELECT host, coalesce(max(hint), 700) AS delay_ms FROM d GROUP BY 1),
-        |r AS (SELECT host, url, priority,
-        |  row_number() OVER (PARTITION BY host ORDER BY priority DESC, url ASC) AS rn
-        | FROM d)
-        |SELECT r.host, r.url, r.priority, CAST(hd.delay_ms AS BIGINT) AS delay_ms,
-        | CAST((rn - 1) * hd.delay_ms AS BIGINT) AS fetch_offset_ms
-        |FROM r JOIN hd USING (host) WHERE rn <= 6""".stripMargin,
-    // q422: all three legs from the id formulas (sitemap s5 / feed
-    // shard 3 never fetched), /private dropped, discovery-count
-    // priorities, the q373 window replay.
-    "q422_discovery_frontier" ->
-      """WITH a AS (
-        | SELECT 'https://h' || CAST(doc_id % 10 AS VARCHAR) || '.example.org/page' ||
-        |   CAST(doc_id % 25 AS VARCHAR) AS url FROM documents
-        | UNION ALL
-        | SELECT 'https://h' || CAST((doc_id + 3) % 10 AS VARCHAR) ||
-        |   '.example.org/private/p' || CAST(doc_id % 5 AS VARCHAR) FROM documents
-        | UNION ALL
-        | SELECT 'https://site' || CAST(doc_id % 4 AS VARCHAR) || '.github.io/local/l' ||
-        |   CAST(doc_id % 8 AS VARCHAR) FROM documents),
-        |sm AS (
-        | SELECT 'https://h' || CAST(doc_id % 6 AS VARCHAR) || '.example.org/page' ||
-        |   CAST(doc_id % 6 AS VARCHAR) AS url FROM documents WHERE doc_id % 6 <> 5
-        | UNION ALL
-        | SELECT 'https://h' || CAST(doc_id % 6 AS VARCHAR) || '.example.org/sm/' ||
-        |   CAST(doc_id % 6 AS VARCHAR) FROM documents WHERE doc_id % 6 <> 5),
-        |fd AS (
-        | SELECT 'https://h' || CAST(doc_id % 4 + 6 AS VARCHAR) || '.example.org/feed/' ||
-        |   CAST(doc_id % 4 AS VARCHAR) || '/' || CAST(e.p + 1 AS VARCHAR) AS url
-        | FROM documents CROSS JOIN (VALUES (0), (1)) e(p)
-        | WHERE doc_id % 4 <> 3),
-        |u AS (SELECT url FROM a UNION ALL SELECT url FROM sm
-        |      UNION ALL SELECT url FROM fd),
-        |adm AS (SELECT url FROM u WHERE url NOT LIKE '%/private/%'),
-        |g AS (
-        | SELECT regexp_extract(url, '^https://([^/]*)', 1) AS host, url,
-        |  CAST(count(*) AS BIGINT) AS priority
-        | FROM adm GROUP BY 1, 2),
-        |r AS (
-        | SELECT host, url, priority,
-        |  row_number() OVER (PARTITION BY host ORDER BY priority DESC, url ASC) AS rn
-        | FROM g)
-        |SELECT host, url, priority, CAST((rn - 1) * 200 AS BIGINT) AS fetch_offset_ms
-        |FROM r WHERE rn <= 4""".stripMargin,
-    // q423: every line rebuilt (the shared q416 expression), sorted by
-    // key, 50-line shard arithmetic replayed with byte-exact offsets.
-    "q423_cdx_cluster_idx" -> (CdxOracleCtes +
-      s""",l AS (
-         | SELECT surt_key, strlen($CdxLineSqlExpr) + 1 AS len
-         | FROM o),
-         |r AS (
-         | SELECT surt_key, len,
-         |  row_number() OVER (ORDER BY surt_key) AS rk,
-         |  sum(len) OVER (ORDER BY surt_key ROWS UNBOUNDED PRECEDING) AS cum
-         | FROM l)
-         |SELECT CAST((rk - 1) // 50 AS BIGINT) AS shard_id,
-         | min(surt_key) AS first_key, max(surt_key) AS last_key,
-         | CAST(count(*) AS BIGINT) AS n_lines,
-         | CAST(sum(len) AS BIGINT) AS shard_bytes,
-         | CAST(min(cum - len) AS BIGINT) AS byte_offset
-         |FROM r GROUP BY 1""".stripMargin),
-    // q424: the queried subset through the SAME offset (q416) and shard
-    // (q423) arithmetic, body served from the documents table, both
-    // miss URLs absent by construction; digest_ok is the reader's
-    // recomputed-SHA-256 check, TRUE for every untampered record.
-    "q424_random_access" -> (CdxOracleCtes +
-      """,r AS (
-        | SELECT o.*, row_number() OVER (ORDER BY surt_key) AS rk FROM o),
-        |sh AS (
-        | SELECT (rk - 1) // 50 AS sid, CAST(count(*) AS BIGINT) AS shard_n_lines
-        | FROM r GROUP BY 1)
-        |SELECT r.uri AS url, r.surt_key,
-        | CAST((r.rk - 1) // 50 AS BIGINT) AS shard_id,
-        | sh.shard_n_lines, r.fname AS filename,
-        | CAST(r.off AS BIGINT) AS "offset", CAST(r.rec_size AS BIGINT) AS length,
-        | CAST(r.status AS INT) AS status, TRUE AS digest_ok,
-        | CAST(r.n - 44 AS BIGINT) AS n_body_bytes,
-        | coalesce(d.text, '') AS body
-        |FROM r JOIN sh ON (r.rk - 1) // 50 = sh.sid
-        | JOIN documents d ON r.doc_id = d.doc_id
-        |WHERE r.doc_id % 13 = 5""".stripMargin),
-    // q425: both track legs straight from the id formulas — the video
-    // leg on every doc (µs clock, so track_duration = n·delta), the
-    // audio leg on even docs with the 8 kHz → µs movie-clock rescale
-    // (n·320/8000 s = n·40000 µs) feeding the movie duration max.
-    "q425_mp4_tracks" ->
-      """WITH v AS (
-        | SELECT doc_id, 3 + doc_id % 4 AS nv,
-        |  20000 + (doc_id % 3) * 5000 AS dv
-        | FROM documents),
-        |a AS (
-        | SELECT doc_id, 5 + doc_id % 7 AS na
-        | FROM documents WHERE doc_id % 2 = 0),
-        |md AS (
-        | SELECT v.doc_id, greatest(v.nv * v.dv, coalesce(a.na * 40000, 0)) AS mdur
-        | FROM v LEFT JOIN a USING (doc_id))
-        |SELECT v.doc_id AS media_id, CAST(1000000 AS BIGINT) AS movie_timescale,
-        | CAST(md.mdur AS BIGINT) AS movie_duration, CAST(1 AS BIGINT) AS track_id,
-        | 'vide' AS handler, 'avc1' AS codec,
-        | CAST(16 + (v.doc_id % 8) * 4 AS INT) AS width,
-        | CAST(12 + (v.doc_id % 5) * 4 AS INT) AS height,
-        | CAST(1000000 AS BIGINT) AS track_timescale,
-        | CAST(nv * dv AS BIGINT) AS track_duration,
-        | CAST(nv AS BIGINT) AS n_samples, CAST(dv AS BIGINT) AS sample_delta
-        |FROM v JOIN md USING (doc_id)
-        |UNION ALL
-        |SELECT a.doc_id, 1000000, md.mdur, 2, 'soun', 'mp4a', 0, 0, 8000,
-        | na * 320, na, 320
-        |FROM a JOIN md USING (doc_id)""".stripMargin,
-    // q427: version, clock, frame count, floor-µs duration and the
-    // bitrate-table lookups replayed straight from the id formulas
-    // (VBR files report frame 0's bitrate, i.e. the base index).
-    "q427_mp3_meta" ->
-      """WITH p AS (
-        | SELECT doc_id,
-        |  CASE WHEN doc_id % 7 = 3 THEN '2' ELSE '1' END AS ver,
-        |  20 + doc_id % 9 AS n,
-        |  4 + (doc_id % 4) * 3 AS bi
-        | FROM documents),
-        |r AS (
-        | SELECT doc_id, ver, n, bi,
-        |  CASE WHEN ver = '1' THEN
-        |    CASE doc_id % 3 WHEN 0 THEN 44100 WHEN 1 THEN 48000 ELSE 32000 END
-        |  ELSE
-        |    CASE doc_id % 3 WHEN 0 THEN 22050 WHEN 1 THEN 24000 ELSE 16000 END
-        |  END AS rate,
-        |  CASE WHEN ver = '1' THEN 1152 ELSE 576 END AS spf,
-        |  CASE WHEN ver = '1' THEN
-        |    CASE bi WHEN 4 THEN 56 WHEN 7 THEN 96 WHEN 10 THEN 160 ELSE 256 END
-        |  ELSE
-        |    CASE bi WHEN 4 THEN 32 WHEN 7 THEN 56 WHEN 10 THEN 96 ELSE 144 END
-        |  END AS kbps
-        | FROM p)
-        |SELECT doc_id AS media_id, ver AS mpeg_version, CAST(3 AS INT) AS layer,
-        | CAST(rate AS INT) AS sample_rate, CAST(n AS BIGINT) AS n_frames,
-        | CAST((n * spf * 1000000) // rate AS BIGINT) AS duration_us,
-        | CAST(kbps AS INT) AS bitrate_kbps,
-        | doc_id % 6 = 1 AS vbr
-        |FROM r""".stripMargin,
-    // q426: the roundtrip identity straight from the change formulas —
-    // every new-crawl capture comes back body-equal to the CURRENT
-    // text (revisits reconstructed from the prior archive, changed and
-    // /alt pages archived in full), was_revisit true exactly where the
-    // digest was unchanged.
-    "q426_revisit_emit" ->
-      """WITH base AS (
-        | SELECT doc_id,
-        |  'https://host' || CAST(doc_id % 20 AS VARCHAR) || '.example.com/p/' ||
-        |   CAST(doc_id AS VARCHAR) AS url,
-        |  coalesce(text, '') AS t
-        | FROM documents),
-        |main AS (
-        | SELECT url, doc_id % 5 <> 0 AS was_revisit,
-        |  CASE WHEN doc_id % 5 = 0 THEN t || ' v2' ELSE t END AS body
-        | FROM base),
-        |alt AS (
-        | SELECT url || '/alt' AS url, FALSE AS was_revisit, 'alt ' || t AS body
-        | FROM base WHERE doc_id % 11 = 7)
-        |SELECT url, was_revisit, body FROM main
-        |UNION ALL
-        |SELECT url, was_revisit, body FROM alt""".stripMargin
-  )
-
-  /** The q416 CDXJ line rebuilt byte-for-byte as a SQL expression over
-    * [[CdxOracleCtes]]'s `o` columns — shared by q416 and the q423
-    * cluster-index replay so the two cannot disagree about line bytes.
-    * `||` stays at line ends (the stripMargin interpolation rule).
-    */
-  private lazy val CdxLineSqlExpr: String =
-    """surt_key || ' 20240101000000 {"url":"' || uri || '","digest":"' ||
-      |  digest || '","mime":"text/html","status":"' ||
-      |  CAST(status AS VARCHAR) || '","offset":"' || CAST(off AS VARCHAR) ||
-      |  '","length":"' || CAST(rec_size AS VARCHAR) || '","filename":"' ||
-      |  fname || '"}'""".stripMargin
-
-  /** q416/q417's shared offset-arithmetic replay, ending in CTE
-    * `o(doc_id, fid, rn, uri, surt_key, status, digest, n, rec_size,
-    * off, fname)`.
-    */
-  private lazy val CdxOracleCtes: String =
-    """WITH f AS (
-      | SELECT doc_id, doc_id // 8 AS fid,
-      |  'https://host' || CAST(doc_id % 20 AS VARCHAR) || '.example.com/p/' ||
-      |   CAST(doc_id AS VARCHAR) AS uri,
-      |  'com,example,host' || CAST(doc_id % 20 AS VARCHAR) || ')/p/' ||
-      |   CAST(doc_id AS VARCHAR) AS surt_key,
-      |  200 + (doc_id % 3) * 2 AS status,
-      |  sha256(coalesce(text, '')) AS digest,
-      |  44 + strlen(coalesce(text, '')) AS n
-      | FROM documents),
-      |sz AS (
-      | SELECT *,
-      |  141 + strlen(CAST(doc_id AS VARCHAR)) + strlen(uri) +
-      |   strlen(CAST(n AS VARCHAR)) + n AS rec_size,
-      |  row_number() OVER (PARTITION BY fid ORDER BY doc_id) AS rn
-      | FROM f),
-      |o AS (
-      | SELECT *,
-      |  146 + strlen(CAST(fid AS VARCHAR)) +
-      |   coalesce(sum(rec_size) OVER (PARTITION BY fid ORDER BY doc_id
-      |     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off,
-      |  'crawl-' || CAST(fid AS VARCHAR) || '.warc' AS fname
-      | FROM sz)
-      |""".stripMargin
-
-  /** The flat-block JPEG stats derivation, shared verbatim by q395 and
-    * the q397 transcode invariant (a transcode that changes any pixel
-    * breaks the second consumer).
-    */
-  private lazy val JpegFlatStatsSql: String =
-    """WITH par AS (SELECT doc_id, 8 * (1 + doc_id % 3) AS w,
-      |  8 * (1 + doc_id % 2) AS h FROM documents),
-      |blk AS (
-      | SELECT doc_id, w, h,
-      |  2 * ((doc_id * 7 + bx.bx * 13 + byy.byy * 29) % 128) AS v
-      | FROM par CROSS JOIN range(3) bx(bx) CROSS JOIN range(2) byy(byy)
-      | WHERE bx.bx < w // 8 AND byy.byy < h // 8),
-      |s AS (SELECT doc_id, w, h, CAST(sum(64 * v) AS BIGINT) AS sv
-      |      FROM blk GROUP BY 1, 2, 3)
-      |SELECT doc_id AS media_id, CAST(w AS BIGINT) AS width,
-      | CAST(h AS BIGINT) AS height, CAST(w * h AS BIGINT) AS n_pixels,
-      | sv AS sum_b, sv AS sum_g, sv AS sum_r
-      |FROM s""".stripMargin
-
-  /** The nine-family mixed-media metadata derivation — family label
-    * and per-family header fields from the id formulas, ending in CTE
-    * `m(id, r, format, parsed, width, height, n_frames, sample_rate,
-    * duration_us)` — shared by q429 (standalone payloads) and q432
-    * (the same payloads as archived HTTP bodies), so the two lenses
-    * cannot drift.
-    */
-  private lazy val MixedMediaCte: String =
-    """WITH b AS (SELECT doc_id AS id, doc_id % 9 AS r FROM documents),
-      |m AS (
-      | SELECT id, r,
-      |  CASE r WHEN 0 THEN 'bmp' WHEN 1 THEN 'png' WHEN 2 THEN 'gif'
-      |         WHEN 3 THEN 'jpeg' WHEN 4 THEN 'wav' WHEN 5 THEN 'avi'
-      |         WHEN 6 THEN 'mp4' WHEN 7 THEN 'mp3' ELSE 'unknown' END AS format,
-      |  r <> 8 AS parsed,
-      |  CAST(CASE r WHEN 0 THEN 8 + id % 24 WHEN 1 THEN 4 + id % 9
-      |         WHEN 2 THEN 6 + id % 5 WHEN 3 THEN 8 * (1 + id % 3)
-      |         WHEN 5 THEN 8 + id % 24 WHEN 6 THEN 16 + (id % 8) * 4
-      |         ELSE NULL END AS INT) AS width,
-      |  CAST(CASE r WHEN 0 THEN 8 + id % 16 WHEN 1 THEN 3 + id % 7
-      |         WHEN 2 THEN 4 + id % 6 WHEN 3 THEN 8 * (1 + id % 2)
-      |         WHEN 5 THEN 8 + id % 16 WHEN 6 THEN 12 + (id % 5) * 4
-      |         ELSE NULL END AS INT) AS height,
-      |  CAST(CASE r WHEN 5 THEN 2 WHEN 6 THEN 3 + id % 4
-      |         ELSE NULL END AS BIGINT) AS n_frames,
-      |  CAST(CASE r WHEN 4 THEN 8000 + (id % 4) * 4000
-      |         WHEN 7 THEN CASE id % 3 WHEN 0 THEN 44100 WHEN 1 THEN 48000
-      |                     ELSE 32000 END
-      |         ELSE NULL END AS INT) AS sample_rate,
-      |  CAST(CASE r
-      |   WHEN 4 THEN ((100 + id % 50) * 1000000) // (8000 + (id % 4) * 4000)
-      |   WHEN 5 THEN 2 * (33000 + (id % 5) * 1000)
-      |   WHEN 6 THEN (3 + id % 4) * (20000 + (id % 3) * 5000)
-      |   WHEN 7 THEN ((20 + id % 9) * 1152 * 1000000) //
-      |     (CASE id % 3 WHEN 0 THEN 44100 WHEN 1 THEN 48000 ELSE 32000 END)
-      |   ELSE NULL END AS BIGINT) AS duration_us
-      | FROM b)
-      |""".stripMargin
-
-  /** The `.warc` ingest parse-back derivation (warcinfo lead member +
-    * per-file response rows from the id formulas) — shared VERBATIM by
-    * q384 (`.warc.gz`) and q431 (`.warc.zst`): the container compression
-    * layout must be invisible to parse-back.
-    */
-  private lazy val WarcIngestOracleSql: String =
-      """WITH resp AS (
-        | SELECT CAST(doc_id // 8 AS BIGINT) AS file_id,
-        |  CAST(row_number() OVER (PARTITION BY doc_id // 8 ORDER BY doc_id)
-        |    AS BIGINT) AS record_idx,
-        |  'response' AS warc_type,
-        |  'https://host' || CAST(doc_id % 20 AS VARCHAR) || '.example.com/p/'
-        |    || CAST(doc_id AS VARCHAR) AS target_uri,
-        |  CAST(strlen(coalesce(text, '')) AS BIGINT) AS n_bytes,
-        |  coalesce(text, '') AS text_out
-        | FROM documents),
-        |info AS (
-        | SELECT DISTINCT CAST(doc_id // 8 AS BIGINT) AS file_id,
-        |  CAST(0 AS BIGINT) AS record_idx, 'warcinfo' AS warc_type,
-        |  CAST(NULL AS VARCHAR) AS target_uri, CAST(21 AS BIGINT) AS n_bytes,
-        |  'software: graft/0.1' || chr(13) || chr(10) AS text_out
-        | FROM documents)
-        |SELECT * FROM info UNION ALL SELECT * FROM resp""".stripMargin
-
-  /** The k=2 evenly-spaced frame-sample derivation (indices 0 and 2,
-    * BMP byte sizes from the geometry formulas) — shared VERBATIM by
-    * q375 (AVI `movi` walk) and q428 (MP4 sample-table walk): the two
-    * containers carry the same frames, so one oracle pins both and the
-    * cross-container identity cannot drift.
-    */
-  private lazy val FrameSampleOracleSql: String =
-    """WITH v AS (SELECT doc_id AS vid FROM documents
-      |  WHERE doc_id % 10 = 0 AND doc_id + 6 <= (SELECT max(doc_id) FROM documents)),
-      |fr AS (SELECT vid, (f.f * 4) // 2 AS frame_idx FROM v CROSS JOIN range(2) f(f)),
-      |geom AS (SELECT vid, frame_idx,
-      |  8 + (vid + 2 * frame_idx) % 24 AS w, 8 + (vid + 2 * frame_idx) % 16 AS h
-      | FROM fr)
-      |SELECT vid AS media_id, CAST(frame_idx AS BIGINT) AS frame_idx,
-      | CAST(54 + ((24 * w + 31) // 32) * 4 * h AS BIGINT) AS n_bytes
-      |FROM geom""".stripMargin
-
-  /** q374's avih derivation, shared verbatim with q382 (whose gzip
-    * roundtrip must land on identical container bytes).
-    */
-  private lazy val VideoMetaOracleSql: String =
-    """SELECT doc_id AS media_id,
-      | CAST(8 + doc_id % 24 AS BIGINT) AS width,
-      | CAST(8 + doc_id % 16 AS BIGINT) AS height,
-      | CAST(4 AS BIGINT) AS n_frames,
-      | CAST(33000 + (doc_id % 5) * 1000 AS BIGINT) AS usec_per_frame
-      |FROM documents
-      |WHERE doc_id % 10 = 0 AND doc_id + 6 <= (SELECT max(doc_id) FROM documents)""".stripMargin
-
-  /** q351's int8 quantization + upper-triangle Gram replay as a
-    * reusable CTE list ending in `gqv(vec_id, v)` and
-    * `gcells(i, j, g, n_vectors)` — shared by the q351 result oracle
-    * and q368's power-iteration oracle so the two cannot drift.
-    */
-  private lazy val QuantGramCtes: String =
-    """gm AS (
-      | SELECT vec_id, embedding,
-      |  list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS max_abs
-      | FROM embeddings),
-      |gqv AS MATERIALIZED (
-      | SELECT vec_id,
-      |  CASE WHEN max_abs > 0
-      |   THEN list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 127.0 / max_abs) AS BIGINT))
-      |   ELSE list_transform(embedding, x -> CAST(0 AS BIGINT)) END AS v
-      | FROM gm),
-      |gcells AS MATERIALIZED (
-      | SELECT i.i AS i, j.j AS j,
-      |  CAST(sum(v[CAST(i.i AS INT) + 1] * v[CAST(j.j AS INT) + 1]) AS BIGINT) AS g,
-      |  CAST(count(*) AS BIGINT) AS n_vectors
-      | FROM gqv CROSS JOIN range(0, 64) i(i) CROSS JOIN range(0, 64) j(j)
-      | WHERE j.j >= i.i GROUP BY 1, 2)""".stripMargin
-
-  /** q336's IVF-PQ chain (coarse routing + PQ codes + ADC ranking) as a
-    * reusable CTE list ending in `ivfpq(query_id, neighbor_id, adc_d2,
-    * rank ≤ 10)` — shared by the q336 result oracle and q360's recall
-    * oracle so the two cannot drift.
-    */
-  private lazy val IvfPqAnnCtes: String =
-    s"""$PqCodesCte,
-       |codes AS (
-       | SELECT vec_id, s, j AS code
-       | FROM (SELECT *, row_number() OVER (PARTITION BY vec_id, s
-       |         ORDER BY d2, j) AS rn FROM d)
-       | WHERE rn = 1),
-       |lut AS (SELECT vec_id AS query_id, s, j AS code, d2 AS qd2
-       |        FROM d WHERE vec_id < 8),
-       |cent AS (SELECT vec_id AS c_id, embedding FROM embeddings WHERE vec_id % 97 = 0),
-       |assigned AS (
-       | SELECT neighbor_id, c_id FROM (
-       |  SELECT e.vec_id AS neighbor_id, c.c_id,
-       |   row_number() OVER (PARTITION BY e.vec_id
-       |     ORDER BY list_cosine_similarity(e.embedding, c.embedding) DESC, c.c_id) AS rn
-       |  FROM embeddings e CROSS JOIN cent c) WHERE rn = 1),
-       |qprobe AS (
-       | SELECT query_id, c_id FROM (
-       |  SELECT q.vec_id AS query_id, c.c_id,
-       |   row_number() OVER (PARTITION BY q.vec_id
-       |     ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC, c.c_id) AS rn
-       |  FROM embeddings q CROSS JOIN cent c WHERE q.vec_id < 8) WHERE rn <= 2),
-       |cand AS (SELECT p.query_id, a.neighbor_id FROM qprobe p JOIN assigned a USING (c_id)),
-       |adc AS (
-       | SELECT c.query_id, c.neighbor_id, CAST(sum(l.qd2) AS BIGINT) AS adc_d2
-       | FROM cand c JOIN codes co ON co.vec_id = c.neighbor_id
-       | JOIN lut l ON l.query_id = c.query_id AND l.s = co.s AND l.code = co.code
-       | WHERE c.neighbor_id <> c.query_id GROUP BY 1, 2),
-       |ivfpq AS (
-       | SELECT query_id, neighbor_id, adc_d2, rank FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |    ORDER BY adc_d2, neighbor_id) AS rank FROM adc)
-       | WHERE rank <= 10)""".stripMargin
-
-  /** The q359 line-filter replay as a reusable CTE list (expects a CTE
-    * `h(doc_id, html)` upstream, emits `m(doc_id, main_text)`) — shared
-    * by the q359 oracle and q365's composite so the two cannot drift.
-    * Plain (non-interpolated) string: regex backslashes are single here.
-    */
-  private val MainContentCtes: String =
-    """p1 AS (SELECT doc_id, regexp_replace(html, '(?is)<script[^>]*>.*?</script>', ' ', 'g') AS html FROM h),
-      |p2 AS (SELECT doc_id, regexp_replace(html, '(?is)<style[^>]*>.*?</style>', ' ', 'g') AS html FROM p1),
-      |p3 AS (SELECT doc_id, regexp_replace(html, '(?s)<!--.*?-->', ' ', 'g') AS html FROM p2),
-      |lx AS (SELECT doc_id, string_split(html, chr(10)) AS ls FROM p3),
-      |li AS (SELECT doc_id, ls, unnest(range(len(ls))) AS i FROM lx),
-      |ln AS (SELECT doc_id, i, ls[CAST(i AS INT) + 1] AS line FROM li),
-      |c1 AS (SELECT doc_id, i, line, regexp_replace(line, '(?is)<script[^>]*>.*?</script>', ' ', 'g') AS x FROM ln),
-      |c2 AS (SELECT doc_id, i, line, regexp_replace(x, '(?is)<style[^>]*>.*?</style>', ' ', 'g') AS x FROM c1),
-      |c3 AS (SELECT doc_id, i, line, regexp_replace(x, '(?s)<!--.*?-->', ' ', 'g') AS x FROM c2),
-      |c4 AS (SELECT doc_id, i, line, regexp_replace(x, '<[^>]*>', ' ', 'g') AS x FROM c3),
-      |c5 AS (SELECT doc_id, i, line, replace(replace(replace(replace(replace(replace(x,
-      |  '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''),
-      |  '&apos;', ''''), '&nbsp;', ' ') AS x FROM c4),
-      |c6 AS (SELECT doc_id, i, line,
-      |  trim(regexp_replace(replace(x, '&amp;', '&'), '\s+', ' ', 'g')) AS clean FROM c5),
-      |ck AS (SELECT doc_id, i, clean,
-      |  coalesce(list_sum(list_transform(
-      |    regexp_extract_all(line, '(?is)<a(?:\s[^>]*)?>(.*?)</a>', 1),
-      |    a -> length(trim(regexp_replace(regexp_replace(a, '<[^>]*>', ' ', 'g'), '\s+', ' ', 'g'))))), 0) AS linkchars
-      | FROM c6),
-      |keep AS (SELECT doc_id, i, clean FROM ck
-      | WHERE length(clean) >= 5 AND linkchars * 100 <= 50 * length(clean)),
-      |m AS (SELECT doc_id, array_to_string(list(clean ORDER BY i), ' ') AS main_text
-      | FROM keep GROUP BY doc_id)""".stripMargin
-
-  /** Shared synthetic-HTML fixture CTE for q358/q359 — the byte-exact
-    * SQL twin of [[syntheticHtml]].
-    */
-  private val HtmlFixtureCte: String =
-    """d AS (SELECT doc_id, coalesce(text, '') AS t FROM documents),
-      |h AS (SELECT doc_id,
-      |  '<html><head><style>body{color:red}</style><script>var n=' || CAST(doc_id AS VARCHAR) || ';</script></head>' || chr(10) ||
-      |  '<body><!-- hidden ' || CAST(doc_id AS VARCHAR) || ' -->' || chr(10) ||
-      |  '<h1>Doc ' || CAST(doc_id AS VARCHAR) || '</h1>' || chr(10) ||
-      |  '<p>' || t || ' &amp; more &lt;raw&gt; &#39;tail&#39;</p>' || chr(10) ||
-      |  '<div><a href=/h>Home</a> <a href=/a>About</a> <a href=/c>Contact</a></div>' || chr(10) ||
-      |  (CASE WHEN doc_id % 3 = 0
-      |    THEN '<ul><li><a href=/l1>Long link one</a></li><li><a href=/l2>Long link two</a></li></ul>'
-      |    ELSE '<p>A plain filler paragraph with no links at all.</p>' END) || chr(10) ||
-      |  '<p>Mixed line with one <a href=/m>tiny link</a> and plenty of surrounding prose to stay.</p>' || chr(10) ||
-      |  '</body></html>' AS html
-      | FROM d)""".stripMargin
-
-  /** Shared energy-hash replay CTE for q356/q357: the q149 analytic WAV
-    * sample formula (ascii byte at i mod len, × amp) bucketed into the 65
-    * windows of [[graft.functions.BinaryCodecs.wavEnergyHash]]
-    * (`w = i·65 div n`; n ≥ 500 > 65 in this fixture, so every window is
-    * populated and all 64 adjacent pairs exist). `ampValues` rows are
-    * `(amp, media-id offset)` — q356 replays the syntheticMedia encode,
-    * q357 adds the amplitude re-encode leg. Emits `eh(mid, rate, n,
-    * ehash)`.
-    */
-  private def AudioEhashCte(ampValues: String): String =
-    s"""d AS (SELECT doc_id, coalesce(text, '') AS t FROM documents
-      |  WHERE doc_id % 2 = 1),
-      |amps(amp, off) AS (VALUES $ampValues),
-      |par AS (SELECT doc_id + off AS mid, t, strlen(t) AS l,
-      |  500 + doc_id % 1000 AS n, 8000 + (doc_id % 8) * 1000 AS rate, amp
-      | FROM d CROSS JOIN amps),
-      |ix AS (SELECT mid, rate, n, t, l, amp, unnest(range(n)) AS i FROM par),
-      |v AS (SELECT mid, rate, n, CAST((i * 65) // n AS INT) AS w,
-      |  CASE WHEN l = 0 THEN 0
-      |   ELSE ascii(substring(t, CAST(i % l AS INT) + 1, 1)) * amp END AS s
-      | FROM ix),
-      |e AS (SELECT mid, rate, n, w, sum(CAST(s AS BIGINT) * s) AS en
-      | FROM v GROUP BY mid, rate, n, w),
-      |bits AS (SELECT a.mid, a.rate, a.n,
-      |  CASE WHEN a.en < b.en THEN
-      |    CASE WHEN a.w = 63 THEN CAST(-9223372036854775807 AS HUGEINT) - 1
-      |         ELSE CAST(CAST(1 AS BIGINT) << a.w AS HUGEINT) END
-      |  ELSE CAST(0 AS HUGEINT) END AS contrib
-      | FROM e a JOIN e b ON a.mid = b.mid AND b.w = a.w + 1
-      | WHERE a.w < 64),
-      |eh AS (SELECT mid, any_value(rate) AS rate, any_value(n) AS n,
-      |  CAST(sum(contrib) AS BIGINT) AS ehash FROM bits GROUP BY mid)""".stripMargin
-
-  /** [[graft.ops.Urls.pslRules]] rendered as DuckDB VALUES rows
-    * `(suffix, nlab, kind)` — generated from the SAME loaded snapshot
-    * the Spark op broadcast-joins, so the q355 oracle and the op cannot
-    * drift apart when the snapshot changes.
-    */
-  private lazy val PslRulesValues: String =
-    Urls.pslRules.map { case (s, k, kind) => s"('$s',$k,$kind)" }.mkString(",")
-
-  /** The distinct rule depths of the snapshot as VALUES rows. */
-  private lazy val PslDepthsValues: String =
-    Urls.pslRules.map(_._2).distinct.sorted.map(k => s"($k)").mkString(",")
-
-  /** q136's BPE-encode replay as a reusable CTE list ending in
-    * `per(doc_id, n_words, n_subwords)` (plus `tok` for the empty-doc
-    * join) — each word becomes its spaced symbol string (every symbol
-    * wrapped ' x ', so adjacent pair patterns never share delimiter
-    * spaces) and the PINNED sf0.01 merges apply as a chain of string
-    * replaces whose left-to-right non-overlapping scan IS the trainer's
-    * leftmost-greedy rewrite. Shared by the q136 fertility oracle and
-    * the token-exact packers q391/q392 so the encode replay cannot
-    * drift between them.
-    */
-  private lazy val BpeEncodeCtes: String = {
-    val chain = PinnedQ135Merges.foldLeft("spaced") { case (acc, (_, l, rt, _)) =>
-      s"replace($acc, ' ${sqlEsc(l)}  ${sqlEsc(rt)} ', ' ${sqlEsc(l + rt)} ')"
-    }
-    s"""tok AS (
-       | SELECT doc_id,
-       |  list_filter(string_split_regex(trim(lower(text)), '\\s+'), w -> len(w) > 0) AS w
-       | FROM documents),
-       |words AS (SELECT doc_id, unnest(w) AS word FROM tok),
-       |enc AS (
-       | SELECT doc_id,
-       |  array_to_string(list_transform(range(len(word)), i -> ' ' || word[i+1] || ' '), '') ||
-       |   ' </w> ' AS spaced
-       | FROM words),
-       |sub AS (
-       | SELECT doc_id,
-       |  CAST(len(string_split_regex(trim($chain), ' +')) AS BIGINT) AS n_sub
-       | FROM enc),
-       |per AS (
-       | SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-       |  CAST(sum(n_sub) AS BIGINT) AS n_subwords
-       | FROM sub GROUP BY 1)""".stripMargin
-  }
-
-  /** Shared dHash replay CTE for q349/q350: the q150 analytic pixel
-    * function sampled at the dHash grid. `dh` = (media_id, dhash); `par`
-    * carries (doc_id, w, h).
-    */
-  private val DhashCte: String =
-    """d AS (SELECT doc_id, coalesce(text, '') AS t FROM documents WHERE doc_id % 2 = 0),
-      |par AS (SELECT doc_id, t, strlen(t) AS l, 8 + doc_id % 24 AS w,
-      |  8 + doc_id % 16 AS h FROM d),
-      |geom AS (SELECT *, ((24 * w + 31) // 32) * 4 AS row_size FROM par),
-      |cells AS (
-      | SELECT doc_id, l, t,
-      |  (h - 1 - ((2 * cy.cy + 1) * h) // 16) * row_size
-      |    + 3 * (((2 * cx.cx + 1) * w) // 18) AS base,
-      |  cy.cy AS cy, cx.cx AS cx
-      | FROM geom CROSS JOIN range(8) cy(cy) CROSS JOIN range(9) cx(cx)),
-      |gcell AS (
-      | SELECT doc_id, cy, cx,
-      |  ((CASE WHEN l = 0 THEN 0 ELSE ascii(substring(t, CAST(base % l AS INT) + 1, 1)) END)
-      |   + (CASE WHEN l = 0 THEN 0 ELSE ascii(substring(t, CAST((base + 1) % l AS INT) + 1, 1)) END)
-      |   + (CASE WHEN l = 0 THEN 0 ELSE ascii(substring(t, CAST((base + 2) % l AS INT) + 1, 1)) END)) // 3 AS gray
-      | FROM cells),
-      |dh AS (
-      | SELECT a.doc_id AS media_id,
-      |  CAST(coalesce(sum(CASE WHEN a.gray < b.gray THEN
-      |    CASE WHEN a.cy * 8 + a.cx = 63 THEN CAST(-9223372036854775807 AS HUGEINT) - 1
-      |         ELSE CAST(CAST(1 AS BIGINT) << (a.cy * 8 + a.cx) AS HUGEINT) END
-      |    ELSE CAST(0 AS HUGEINT) END), 0) AS BIGINT) AS dhash
-      | FROM gcell a JOIN gcell b
-      |   ON a.doc_id = b.doc_id AND a.cy = b.cy AND b.cx = a.cx + 1
-      | WHERE a.cx < 8
-      | GROUP BY 1)""".stripMargin
-
-  /** Shared (doc, word, pos) tokenization CTE for the skip-gram oracles
-    * (the q84 idiom: whitespace split of trimmed lowercase text).
-    */
-  private val TokenPosCte: String =
-    """tok AS (
-      | SELECT doc_id,
-      |  list_filter(string_split_regex(trim(lower(text)), '\s+'), w -> len(w) > 0) AS w
-      | FROM documents),
-      |t AS (SELECT doc_id, unnest(w) AS word, generate_subscripts(w, 1) AS pos FROM tok)""".stripMargin
-
-  /** Shared closure CTE for the [[sccPairs]] graph (callers prepend
-    * `WITH RECURSIVE `): e0 = the derived directed edges, reach = the
-    * transitive closure, mut = mutually-reachable pairs.
-    */
-  private val SccClosureCte: String =
-    """b AS (SELECT doc_id AS n FROM documents WHERE doc_id % 10 = 0),
-      |e0 AS (
-      | SELECT n AS src, n + 1 AS dst FROM b
-      | UNION ALL SELECT n + 1, n + 2 FROM b
-      | UNION ALL SELECT n + 2, n FROM b
-      | UNION ALL SELECT n, n // 2 FROM b WHERE n % 20 = 0 AND n > 0
-      | UNION ALL SELECT n + 2, n + 5 FROM b WHERE n % 30 = 0
-      | UNION ALL SELECT n + 5, n + 7 FROM b WHERE n % 30 = 0),
-      |nodes AS (SELECT DISTINCT id FROM (SELECT src AS id FROM e0 UNION ALL SELECT dst FROM e0)),
-      |e AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
-      |reach(a, d) AS (
-      | SELECT src, dst FROM e
-      | UNION
-      | SELECT r.a, e.dst FROM reach r JOIN e ON r.d = e.src),
-      |mut AS (
-      | SELECT r1.a AS id, r1.d AS peer
-      | FROM reach r1 JOIN reach r2 ON r1.a = r2.d AND r1.d = r2.a)""".stripMargin
-
-  /** Shared PQ CTE chain: q78's int8 quantization, the 4×16-dim subspace
-    * split (embeddings are dim-64), the 16-entry sampled codebook and the
-    * all-pairs lattice distances `d` the code/ADC oracles both rank.
-    */
-  private val PqCodesCte: String =
-    """m AS (
-      | SELECT vec_id, embedding,
-      |  list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS max_abs
-      | FROM embeddings),
-      |qv AS (
-      | SELECT vec_id,
-      |  CASE WHEN max_abs > 0
-      |   THEN list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 127.0 / max_abs) AS BIGINT))
-      |   ELSE list_transform(embedding, x -> CAST(0 AS BIGINT)) END AS v
-      | FROM m),
-      |sub AS (
-      | SELECT vec_id, CAST(r.s AS BIGINT) AS s, v[r.s * 16 + 1 : r.s * 16 + 16] AS vs
-      | FROM qv, range(0, 4) r(s)),
-      |cbids AS (
-      | SELECT vec_id, row_number() OVER (ORDER BY vec_id) - 1 AS j
-      | FROM qv ORDER BY vec_id LIMIT 16),
-      |cb AS (SELECT c.j, s.s, s.vs AS cvec FROM cbids c JOIN sub s ON c.vec_id = s.vec_id),
-      |d AS (
-      | SELECT sub.vec_id, sub.s, CAST(cb.j AS BIGINT) AS j,
-      |  CAST(list_sum(list_transform(range(1, 17),
-      |    i -> (sub.vs[i] - cb.cvec[i]) * (sub.vs[i] - cb.cvec[i]))) AS BIGINT) AS d2
-      | FROM sub JOIN cb ON sub.s = cb.s)""".stripMargin
-
-  /** Pinned sf0.01 simhash table (q17's oracle VALUES) — shared with
-    * q353's pair oracle so both read the same fixture.
-    */
-  private val SimhashPin: String =
-    """VALUES (0,-660171688865428084),(1,-3272259197861905140),(2,-3299421260377813732),(3,8564256341137927440),(4,6683021735635823872),(5,-2987300953275848420),(6,-3269901429278824051),(7,-2987336235224253091),(8,-2985119245181670120),(9,-965254763995222760),(10,-7593601306044813988),(11,8563096978997919069),(12,-3272223839535252196),(13,6091778874401402132),(14,-808789357720785580),(15,-3253681576662749928),(16,6197684815512103180),(17,-371905559251732212),(18,-3254210695156224748),(19,4217123226784694324),(20,6241454292745502164),(21,-2964818221934445092),(22,-2988494748026032868),(23,6092888215991008524),(24,-660168920750572068),(25,-2984133947471385332),(26,-3251888530904795128),(27,-2970482544234022628),(28,-2988496135297976036),(29,-2981917825948612268),(30,-2389553260719928056),(31,8853544279716388636),(32,-2405456850317366004),(33,8833267309669449548),(34,-2970482824256246500),(35,-3254209320754573928),(36,-3270166618592790204),(37,-2983994444794872548),(38,-2982968653855838392),(39,-1530386061234492131),(40,-3110199964445722276),(41,-664640719370143468),(42,-7595680757458555636),(43,-2979490847306240755),(44,8706040805335152908),(45,-3114632917764489956),(46,-374333278246098668),(47,-2395183148941985524),(48,-516619436287160956),(49,9134069276215392572),(50,3811937392878599452),(51,-3128284727385850596),(52,4509892531100749208),(53,6685050336728562972),(54,-665800915660654244),(55,-2695938768616199796),(56,-678150610936218276),(57,-678220977533305572),(58,6238253579791875336),(59,5950978872947773272),(60,-682651821483778788),(61,-664640705407599340),(62,-2983992363856020004),(63,6090759625780149532),(64,-3258711081059697380),(65,-5992151468855482108),(66,-678150334984962724),(67,6834874324754214156),(68,-3275073736651327020),(69,6239343200657321244),(70,6259468970192637272),(71,-660137859547092732),(72,-2984026604434178612),(73,-3275566339853652195),(74,6289993641266314505),(75,4512107614290748696),(76,-664637333865186020),(77,-678181122249916964),(78,8562108822857104668),(79,-7888412840199930872),(80,8544062519734595484),(81,-2956972849167255276),(82,-657884089419252468),(83,-3272967283358827428),(84,-2389624037225816804),(85,-660646113092514532),(86,5819232744085895508),(87,-683774350919254180),(88,-83676557487460980),(89,-227823923450636004),(90,3788769392255413528),(91,8557605225648139548),(92,-2975021364615303926),(93,9104796293110491945),(94,-3276877253026530276),(95,-660133740541829860),(96,6237125792521305356),(97,-663546654829474344),(98,-660172496310716132),(99,-3114562587550835444),(100,-3276727593783808740),(101,6203315502579330516),(102,-2968228542709383396),(103,-2987370336324965092),(104,-3108950524365529844),(105,-101690960300689140),(106,4810613885734757657),(107,5953402157499264345),(108,-948420189780915968),(109,-683780937251635880),(110,-657884072276644467),(111,-2968228543264605924),(112,-678186685440709356),(113,6241594999950994844),(114,-3132642985872811684),(115,-117592870559675956),(116,181887367090125853),(117,-3272186662191630052),(118,-2405281892675633908),(119,3787017717228938516),(120,-88179072635783140),(121,-3115723671993336548),(122,-101866174229266612),(123,-7874956693697876736),(124,-2988496909476516595),(125,-2984024168107266724),(126,8546382444162428380),(127,-660171117609571956),(128,-804284383173296804),(129,-660171119784317688),(130,4361236908675349788),(131,-2971609611575415540),(132,-84836271672734440),(133,5950972380676930332),(134,8503563666235539292),(135,-678185518283703012),(136,-664637336005858020),(137,8828948477586877724),(138,-2966117826673985252),(139,9121505670088076572),(140,-2986387804050314988),(141,-2988528018987697900),(142,-678148134887965348),(143,9133927986823806268),(144,-806502857789362935),(145,-804285248066110130),(146,-86948120282453524),(147,-227755465454740196),(148,-2547284917429027571),(149,-2542676041039626980),(150,-2988527850410295972),(151,-2391805453537399540),(152,-103994361587462908),(153,9135051674827598108),(154,8401106514856819996),(155,8547473278341004636),(156,-2963797805611239076),(157,-3276199656133300327),(158,-657933613007332908),(159,5970290810708409661),(160,8401069850475048220),(161,-678185790476866292),(162,-2971608653531075300),(163,-3308402067058476780),(164,-7577699337746925540),(165,-3146156499099533988),(166,-678182234780849780),(167,-826804305986081524),(168,-682654294181200548),(169,-104117388652339884),(170,8509143133830447004),(171,6239202767574445340),(172,1339428433342039444),(173,8559825074934103316),(174,1945091029328510220),(175,-9027964247954310064),(176,-232259065065005796),(177,-2985084109136151204),(178,-104135236783207164),(179,-97185984127816420),(180,-822302633190839020),(181,3645166767768272444),(182,-2387228875973358328),(183,8257521321450743193),(184,-2988497027569042084),(185,-664640705409708780),(186,-7289575204122450660),(187,-822300995717448420),(188,8563238176182615304),(189,-2970517730787919588),(190,-83710921520988900),(191,-675864811070910514),(192,4509997534195776700),(193,-2986273796678304419),(194,6812461845363338509),(195,-3006544326604702440),(196,-2971609609696035428),(197,-660135939698348772),(198,9121545016695733596),(199,3951620274595621900),(200,-2988497217113834148),(201,-3255369305536546540),(202,-2984024150933455540),(203,8545041378708060444),(204,-2983004899083014820),(205,-2988462119023039204),(206,-1957733382813078116),(207,-2987404094757491364),(208,-3108950903541089976),(209,-804249474042905124),(210,6257393087940242844),(211,8256956140272232852),(212,-2676763542948049904),(213,8547403232795208968),(214,3933405665229921437),(215,-822265818205541092),(216,5948863532432605144),(217,-2983991161290179300),(218,5946503961133038876),(219,-2982341135249184364),(220,9139556114116820252),(221,-2981917431895773940),(222,9121577037430639644),(223,-2387442318661874412),(224,-2984028803974840556),(225,5964659114327457044),(226,-4430915454474646504),(227,-7595855562585563876),(228,6236986087976742172),(229,-2970656282103669416),(230,-950618386788401892),(231,8562111301326028252),(232,-2966014490758234852),(233,6543231068796390684),(234,-660135939698807540),(235,-7140778437275304696),(236,8258789023999912200),(237,8545190914470456732),(238,-3114595585921008312),(239,-966556511664272948),(240,-2405351026609844984),(241,9134032150523264284),(242,-2965944056599823076),(243,-966416186291454820),(244,-2409855123387859620),(245,-2985119244644799208),(246,9121576624165420556),(247,-3128109972036043492),(248,-808719816831877876),(249,8563236101452999964),(250,-3130483824605020916),(251,-678185522578150052),(252,5970464549920091404),(253,9142124707498700045),(254,-83465317851811796),(255,-3110129420381475572),(256,-9023327366956336099),(257,-2427877884861432547),(258,-2963830502904525544),(259,9118198991948810588),(260,-2965662324871889656),(261,-2985155531212247780),(262,8549692280714870044),(263,-966413746961404648),(264,-678185522578084516),(265,9139804601618271485),(266,-3270077421827735732),(267,-3114632917764424420),(268,9119378908190911764),(269,6097480082441153868),(270,-678324125475853044),(271,-3274510703472694956),(272,5946644717950778649),(273,-3004257426184816308),(274,8997796902974565652),(275,1193523038698679760),(276,-2970517732909576884),(277,-2898422807030882999),(278,-666329488696496740),(279,8558732226914299292),(280,6239345708376829212),(281,-3253225142984721080),(282,-2682288810327688908),(283,6241454292510227932),(284,-83781307453170420),(285,-660169006389543604),(286,-3276912051891946212),(287,-7021613140229965716),(288,6241489464014187924),(289,6250497779911436756),(290,-660172496310847204),(291,6524055448300629468),(292,8544344189602123229),(293,6247261053924523288),(294,-2965978962873172708),(295,6234873653141323036),(296,9137412000411594064),(297,-101865524951077624),(298,-2971643907694093924),(299,-2966014133282489000),(300,-2981741903559545512),(301,-660168920490197684),(302,5945520383551520124),(303,-2965976745307488996),(304,-660135955807552228),(305,-3978173189870146284),(306,-3418626168028680940),(307,-3270007103841256176),(308,6053574150028470676),(309,-3128109651686019820),(310,3951550598417006012),(311,-676074473137853092),(312,6262989705198812428),(313,-516197234908111556),(314,4368133111893830920),(315,-101689465654104824),(316,-89339939750175476),(317,-2983958450818532916),(318,6095265429766258012),(319,-2963727144537182900),(320,9116052952489832220),(321,-2532542702980977396),(322,-2965961631618306660),(323,-678186907705267956),(324,-3123640167484674744),(325,-664674721548559076),(326,-676039133611906740),(327,-2963728104728810232),(328,-3270112725672809188),(329,-7739759657349436132),(330,6257357903582772508),(331,-2986245142401275564),(332,-2394585038245349348),(333,-2965909954320355956),(334,8540575649988783388),(335,9137295589366336796),(336,-3253048292332815096),(337,-87191283844732548),(338,-9037429427632796400),(339,-660734344626071084),(340,-3111185213576725168),(341,-2984134376965984996),(342,-3004435683953767980),(343,-949322993894466275),(344,-2983991161281528484),(345,6241454363369221388),(346,-2971606604837831332),(347,-826804600225153764),(348,-3150655138122982128),(349,-84765953395868404),(350,-2984167890595828324),(351,-3276727338241382116),(352,8833311342141680916),(353,-228881108728574696),(354,-2981917533890888356),(355,-7881833876940801260),(356,-2965976762495746728),(357,9139838141268540796),(358,-683457799624183829),(359,9118445557705616669),(360,-678322974416590508),(361,-2969391757857444468),(362,-2954578692396761748),(363,8563200568110808468),(364,-2984028548703011492),(365,-678045692065833652),(366,-665766536596772588),(367,-801999461645964012),(368,-222984977020643058),(369,-678183594003747812),(370,-665731645093987924),(371,-660172220896072300),(372,-7433690448875977468),(373,8563200912781782428),(374,6234874752653049116),(375,-660137038136660708),(376,6107682487342710024),(377,-2984026604434178612),(378,6526483003005840668),(379,-808789942945796852),(380,6815698429640617244),(381,-949493312030786284),(382,-4830469195487330536),(383,8835527682166857500),(384,-2405352400721232612),(385,-2984028820091441892),(386,9121506494996458764),(387,-3251955205967860391),(388,-7577735611796505332),(389,3645305823755779260),(390,6545474051001912605),(391,6814782469874597148),(392,-2976635707666351784),(393,-2986281770150843116),(394,6240385842086226372),(395,-5276326945831076580),(396,6253981028485541140),(397,-678149236411941556),(398,-1804051344594523748),(399,-88178925268792060),(400,8546236498487193432),(401,-2983039259089389236),(402,4221660451706695513),(403,-2984025228827546164),(404,-2963762191743054391),(405,-84273596332376932),(406,-4695362597390467812),(407,-808685800702038770),(408,3648570800980279048),(409,-83708048179360504),(410,-2407673624672617188),(411,-660171141257061092),(412,-101865507763213043),(413,-3114632917764424420),(414,9121541713732078620),(415,6239343197964713244),(416,-2986245399569449652),(417,-2981776796133970668),(418,-105098069800997604),(419,6395694058530913564),(420,-2986281770150843116),(421,-3253048103346262772),(422,-1092517804998279916),(423,-2676761073888162536),(424,-657881936027865660),(425,9097897815688383768),(426,-660137331274564324),(427,4509963449582796092),(428,-660136214608561764),(429,-2409784392792691444),(430,-678186622089917180),(431,-678185520430703332),(432,-101724770282861236),(433,6243697571344059732),(434,-2966014163346871012),(435,8545471290069888460),(436,-678080947651105524),(437,-2966014150462096056),(438,8565489963384974812),(439,-5435042552301769964),(440,-3129271080878883492),(441,8544102361452166488),(442,6818126376523902216),(443,8557607428964007196),(444,6235825190256617800),(445,-660171124070543988),(446,8707351429637912844),(447,6259471169216154972),(448,5953402267012480269),(449,-4850735253921223415),(450,-2975021364078138082),(451,5912825563637037404),(452,-2409785562089214708),(453,8563200637908397324),(454,-4427433374152806640),(455,-2963656780363548392),(456,9119256382849060184),(457,-676039133611906739),(458,8563200637924997396),(459,-660168920213713516),(460,-660135940804014708),(461,-660136231756124900),(462,8563199538413353236),(463,8563238021298699548),(464,-3128143988846772908),(465,-2981813373428060916),(466,8563200912786369820),(467,8972992953858297116),(468,6237126826279221533),(469,-2844421631310582499),(470,-2965976750976025316),(471,9139558173825338780),(472,-2974981217552978676),(473,-2981776744871510692),(474,-2965978995095519988),(475,-2698093851103675123),(476,8558980166837115996),(477,8257930945597679948),(478,6235859981643327828),(479,9118585883148070236),(480,-83675462275787748),(481,6511098369439402256),(482,-3113436854870885107),(483,5953294508701035864),(484,-83673572493775608),(485,-7289575191241450224),(486,8545185142168759756),(487,-2986243012634560164),(488,4512070665517969460),(489,-3254243130203992620),(490,-7595853359251081124),(491,-2968265858477015795),(492,8526081675070908820),(493,8846962976218787096),(494,-2538101800518578944),(495,-232294249978349308),(496,-2389658929808949956),(497,-2983484616327229996),(498,-660133775035257460),(499,9123830437100236104)"""
-
-  private def sqlEsc(s: String): String = s.replace("'", "''")
-
-  /** Pinned sf0.01 BPE merge table (regenerate via tools/pin_oracle.py) —
-    * q135's oracle VALUES and the replace chain q136's oracle applies.
-    * Verified in round 7: batched election (batch = 8, conflict-free
-    * prefix rule) produces the IDENTICAL table to sequential BPE on this
-    * corpus, so the pin covers both modes.
-    */
-  private val PinnedQ135Merges: Seq[(Long, String, String, Long)] = Seq(
-    (1L, "e", "r", 4568L), (2L, "e", "</w>", 4473L), (3L, "n", "</w>", 2834L),
-    (4L, "er", "</w>", 2779L), (5L, "o", "w", 2747L), (6L, "ow", "</w>", 2747L),
-    (7L, "o", "r", 2696L), (8L, "s", "t", 2676L), (9L, "h", "</w>", 1884L),
-    (10L, "a", "t", 1845L), (11L, "l", "u", 1831L), (12L, "i", "n", 1796L),
-    (13L, "a", "</w>", 1788L), (14L, "g", "</w>", 1777L), (15L, "y", "</w>", 1767L),
-    (16L, "a", "r", 1758L))
+  def oracleSql: Map[String, String] = QueryCase.byName(catalog)(_.oracleSql)
 }

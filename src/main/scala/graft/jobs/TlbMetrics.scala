@@ -111,7 +111,7 @@ object TlbMetrics {
     * backslash and U+0000–U+001F escaped, the short forms where JSON has
     * them, like Python's `json.dumps`.
     */
-  private[jobs] def jsonEscape(s: String): String = {
+  private[graft] def jsonEscape(s: String): String = {
     val b = new StringBuilder(s.length)
     s.foreach {
       case '"'  => b ++= "\\\""

@@ -55,22 +55,35 @@ private[graft] final class Fixpoint(op: String, reliable: Boolean) extends Loggi
     * frontier-sized frame (see the class doc).
     */
   def stage(df: DataFrame, keys: Seq[String] = Nil): DataFrame = {
-    val s = if (keys.isEmpty) Staging.stage(df, reliable) else Staging.stageHash(df, keys, reliable)
-    frames += s; s
+    val s = staged(df, keys); frames += s; s
   }
+
+  private def staged(df: DataFrame, keys: Seq[String]): DataFrame =
+    if (keys.isEmpty) Staging.stage(df, reliable) else Staging.stageHash(df, keys, reliable)
 
   /** [[stage]] that also returns the BIGINT aggregate `m` over the
     * staged rows, read off the staging job ([[measured]]).
     */
   def stage(df: DataFrame, m: Column): (DataFrame, Long) = {
-    val (s, Seq(v)) = measured(m.cast("long"))(_ => df); frames += s
+    val (s, v) = stageMeasured(df, m.cast("long"))
     (s, v.asInstanceOf[java.lang.Long].longValue) // a null aggregate throws, never reads as 0
   }
 
-  /** Stages the frame `build` returns and gives the aggregate `m` (a
-    * BIGINT, or a struct when one number is not enough) over the rows of
-    * every frame `build` passes through its argument, in call order, then
-    * over the staged frame. A frame passed through must be one the staged
+  /** [[stage]] of `df` with the declared layout `keys` (none when
+    * empty) that also returns the aggregate `m` over the staged rows —
+    * a BIGINT as a `java.lang.Long`, a struct as a `Row` — read off the
+    * staging job ([[measured]]).
+    */
+  def stageMeasured(df: DataFrame, m: Column, keys: Seq[String] = Nil): (DataFrame, Any) = {
+    val (s, Seq(v)) = measured(m, keys)(_ => df); frames += s
+    (s, v)
+  }
+
+  /** Stages the frame `build` returns (with the declared layout `keys`,
+    * none when empty) and gives the aggregate `m` (a BIGINT, or a struct
+    * when one number is not enough) over the rows of every frame `build`
+    * passes through its argument, in call order, then over the staged
+    * frame. A frame passed through must be one the staged
     * plan computes exactly once.
     *
     * Default posture: each value is a `Dataset.observe` metric of the
@@ -80,12 +93,12 @@ private[graft] final class Fixpoint(op: String, reliable: Boolean) extends Loggi
     * materializes the staged frame and measures every frame, recomputing
     * the passed-through ones from their staged inputs.
     */
-  private def measured(m: Column)(
+  private def measured(m: Column, keys: Seq[String] = Nil)(
       build: (DataFrame => DataFrame) => DataFrame): (DataFrame, Seq[Any]) = {
     val v = m.as("v")
     if (reliable) {
       val inner = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      val s = Staging.stage(build { df => inner += df; df }, reliable)
+      val s = staged(build { df => inner += df; df }, keys)
       val values = (inner :+ s).zipWithIndex
         .map { case (f, i) => f.agg(v).select(lit(i).as("i"), col("v")) }
         .reduce(_ unionByName _).collect().sortBy(_.getInt(0)).map(_.get(1))
@@ -95,7 +108,7 @@ private[graft] final class Fixpoint(op: String, reliable: Boolean) extends Loggi
       def observe(df: DataFrame): DataFrame = {
         val o = Observation(); obs += o; df.observe(o, v)
       }
-      val s = Staging.stage(observe(build(observe)), reliable)
+      val s = staged(observe(build(observe)), keys)
       (s, obs.map { o =>
         try Await.result(o.future, observationWait).get(0)
         catch {

@@ -208,7 +208,7 @@ object Html {
     aggregate(
       // (?:\s[^>]*)? — attrs only after whitespace, so `<abbr …>` and
       // `<area …>` don't count as anchors (bare `<a>` still does);
-      // byte-synced with the oracle replay CTE in SparkEntry
+      // byte-synced with the oracle replay CTE in CrawlCatalog
       regexp_extract_all(line, lit("(?is)<a(?:\\s[^>]*)?>(.*?)</a>"), lit(1)),
       lit(0),
       (acc, x) => acc + length(squish(stripTags(x))))

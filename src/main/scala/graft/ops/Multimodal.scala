@@ -543,58 +543,6 @@ object Multimodal {
     }.toDF("media_id", "codec", "sample_rate", "channels")
   }
 
-  /** [[syntheticMp3s]] with REAL ID3v2 metadata: every doc's stream
-    * leads with a tag carrying TIT2/TPE1/TALB from id formulas (plus
-    * TRCK on 4≡1 docs) — v2.3 ISO-8859-1 on even docs, v2.4 UTF-8
-    * with synchsafe frame sizes on odd docs, so both wire formats
-    * parse at every scale.
-    */
-  def syntheticTaggedMp3s(docs: DataFrame): Dataset[MediaRow] = {
-    import docs.sparkSession.implicits._
-    import graft.functions.BinaryCodecs
-    graft.io.Spread.toDefaultParallelism(docs.select(col("doc_id")))
-      .as[Long]
-      .map { id =>
-        val frames = Seq(
-          "TIT2" -> s"Title $id",
-          "TPE1" -> s"Artist ${id % 7}",
-          "TALB" -> s"Album ${id % 3}") ++
-          (if (id % 4 == 1) Seq("TRCK" -> s"${id % 12 + 1}") else Nil)
-        val payload = BinaryCodecs.id3v2(frames,
-          version = if (id % 2 == 0) 3 else 4) ++
-          BinaryCodecs.mp3("1", (id % 3).toInt, Seq.fill(5)(9))
-        MediaRow(id, "audio", payload, "audio/mpeg", payload.length.toLong)
-      }
-  }
-
-  /** Synthetic MPEG audio corpus — one Layer III stream per document,
-    * every field a pure function of `doc_id`: MPEG2 on 7≡3 docs (576
-    * samples/frame, the 72000 length coefficient) else MPEG1, sample
-    * rate by `id%3` on the version's own clock table, `20 + id%9`
-    * frames at bitrate index `4 + (id%4)*3` — except 6≡1 docs, which
-    * alternate two bitrate indices per frame parity (the VBR leg). A
-    * leading ID3v2 tag of `id%17` content bytes on even docs and a
-    * trailing ID3v1 tag on 5≡2 docs exercise both skip paths.
-    */
-  def syntheticMp3s(docs: DataFrame): Dataset[MediaRow] = {
-    import docs.sparkSession.implicits._
-    import graft.functions.BinaryCodecs
-    graft.io.Spread.toDefaultParallelism(docs.select(col("doc_id")))
-      .as[Long]
-      .map { id =>
-        val version = if (id % 7 == 3) "2" else "1"
-        val n = 20 + (id % 9).toInt
-        val base = 4 + (id % 4).toInt * 3
-        val idxs =
-          if (id % 6 == 1) (0 until n).map(f => if (f % 2 == 0) base else 5)
-          else Seq.fill(n)(base)
-        val payload = BinaryCodecs.mp3(version, (id % 3).toInt, idxs,
-          id3v2Bytes = if (id % 2 == 0) (id % 17).toInt else 0,
-          id3v1 = id % 5 == 2)
-        MediaRow(id, "audio", payload, "audio/mpeg", payload.length.toLong)
-      }
-  }
-
   /** One triaged payload: its sniffed container family, whether it
     * arrived gzip-wrapped, whether the family's parser accepted it,
     * and the family's header-grain metadata (nulls where the modality
@@ -735,74 +683,6 @@ object Multimodal {
           mimeFormat(col("content_type")) === col("format")))
   }
 
-  /** Mixed-container synthetic corpus for the triage composite — each
-    * document becomes ONE payload whose container family is
-    * `doc_id % 9` (bmp, png, gif, jpeg, wav, avi, mp4, mp3, raw-bytes
-    * unknown) with that family's id-formula parameters, and every even
-    * doc's payload additionally gzip-wraps — so the triage exercises
-    * every route, the re-sniff leg, and the parsed=false leg at every
-    * scale.
-    */
-  def syntheticMixedMedia(docs: DataFrame): Dataset[MediaRow] = {
-    import docs.sparkSession.implicits._
-    import graft.functions.{BinaryCodecs => C}
-    graft.io.Spread.toDefaultParallelism(
-      docs.select(col("doc_id"), coalesce(col("text"), lit("")).as("text")))
-      .as[(Long, String)]
-      .map { case (id, text) =>
-        val inner = mixedMediaPayload(id, text)
-        val payload = if (id % 2 == 0) C.gzip(inner) else inner
-        MediaRow(id, "mixed", payload, "application/octet-stream",
-          payload.length.toLong)
-      }
-  }
-
-  /** The nine-family payload formula behind [[syntheticMixedMedia]]
-    * (and the q432 crawl-archive fixture): `doc_id % 9` picks the
-    * container, every parameter an id formula — one definition, so
-    * the standalone and HTTP-embedded fixtures cannot drift.
-    */
-  private[graft] def mixedMediaPayload(id: Long, text: String): Array[Byte] = {
-    import graft.functions.{BinaryCodecs => C, JpegCodec}
-    val bytes = text.getBytes("UTF-8")
-    (id % 9) match {
-      case 0 => C.bmp(8 + (id % 24).toInt, 8 + (id % 16).toInt, bytes)
-      case 1 => C.png(4 + (id % 9).toInt, 3 + (id % 7).toInt, bytes)
-      case 2 =>
-        val w = 6 + (id % 5).toInt
-        val h = 4 + (id % 6).toInt
-        C.gif(w, h, Array.tabulate(4)(i => i * 0x111111),
-          Array.tabulate(w * h)(p => (p % 4).toByte))
-      case 3 => JpegCodec.encodeGray(8 * (1 + (id % 3).toInt),
-        8 * (1 + (id % 2).toInt), bytes)
-      case 4 => C.wav(8000 + (id % 4).toInt * 4000,
-        Array.tabulate(100 + (id % 50).toInt)(i => (i * 31 + id).toShort))
-      case 5 => C.avi(8 + (id % 24).toInt, 8 + (id % 16).toInt,
-        33000 + (id % 5).toInt * 1000, Seq(bytes, bytes))
-      case 6 => C.mp4(Seq(C.Mp4Track(1L, "vide", "avc1",
-        16 + (id % 8).toInt * 4, 12 + (id % 5).toInt * 4,
-        1000000L, 20000L + (id % 3) * 5000L, 3L + id % 4)), 1000000L)
-      case 7 => C.mp3("1", (id % 3).toInt,
-        Seq.fill(20 + (id % 9).toInt)(4 + (id % 4).toInt * 3))
-      case _ => ("?" + text).getBytes("UTF-8") // deterministic unknown
-    }
-  }
-
-  /** The MIME label each [[mixedMediaPayload]] family would be served
-    * with — the declared-type half of the q432 integrity check.
-    */
-  private[graft] def mixedMediaMime(id: Long): String = (id % 9) match {
-    case 0 => "image/bmp"
-    case 1 => "image/png"
-    case 2 => "image/gif"
-    case 3 => "image/jpeg"
-    case 4 => "audio/wav"
-    case 5 => "video/x-msvideo"
-    case 6 => "video/mp4"
-    case 7 => "audio/mpeg"
-    case _ => "application/octet-stream"
-  }
-
   /** The sniffed-format family a declared MIME type promises — the
     * comparison rule of [[archiveMediaTriage]]'s `type_matches`
     * column: null (no verdict) for types outside the sniffable set.
@@ -906,79 +786,6 @@ object Multimodal {
     }
   }
 
-  /** Synthetic 4-frame AVI corpus from the documents table — every
-    * container parameter a pure function of doc ids so oracles replay
-    * analytically: videos anchor at every 10th doc id (clamped so all 4
-    * frame sources exist), `avih` geometry/rate from the anchor id, and
-    * frame f IS the [[syntheticMedia]] BMP of doc `id + 2f` for f < 3
-    * while frame 3 REUSES frame 0's source (every video ends on a
-    * repeat of its opening shot — the planted duplicate that guarantees
-    * [[videoFrameDhash]] + hammingPairs finds at least one exact pair
-    * per video at every scale), so a sampled frame's dHash equals the
-    * q349 image fingerprint of its source doc — the cross-modal
-    * identity q376's oracle pins.
-    */
-  def syntheticFrameVideos(docs: DataFrame): Dataset[MediaRow] = {
-    import docs.sparkSession.implicits._
-    import graft.functions.BinaryCodecs
-    val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-    val anchors = docs.select(col("doc_id"), col("text"))
-      .where(col("doc_id") % 10 === 0 && col("doc_id") + 6 <= maxId)
-    val sources = docs.select(col("doc_id").as("__src"), col("text").as("__stext"))
-    val joined = anchors.select(col("doc_id"))
-      .crossJoin(spark_range4(docs))
-      .withColumn("__src",
-        when(col("f") === 3, col("doc_id")).otherwise(col("doc_id") + col("f") * 2))
-      .join(sources, Seq("__src"))
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(
-        struct(col("f").as("_1"), col("__stext").as("_2")))).as("__fr"))
-      .as[(Long, Seq[(Long, String)])]
-    joined.map { case (id, frames) =>
-      val frameBytes = frames.map { case (f, text) =>
-        val src = if (f == 3) id else id + f * 2
-        val w = 8 + (src % 24).toInt
-        val h = 8 + (src % 16).toInt
-        BinaryCodecs.bmp(w, h, Option(text).getOrElse("").getBytes("UTF-8"))
-      }
-      val payload = BinaryCodecs.avi(
-        8 + (id % 24).toInt, 8 + (id % 16).toInt,
-        33000 + (id % 5).toInt * 1000, frameBytes)
-      MediaRow(id, "video", payload, "video/x-msvideo", payload.length.toLong)
-    }
-  }
-
-  /** Synthetic ISO-BMFF corpus — one MP4 per document, every field a
-    * pure function of `doc_id` so the oracle is analytic: a video
-    * track (id 1, `avc1`, µs media clock, `3 + id%4` samples of
-    * `20000 + (id%3)·5000` µs) on every doc, plus an audio track
-    * (id 2, `mp4a`, 8 kHz clock, `5 + id%7` samples of 320 ticks =
-    * 40 ms) on even docs — so the fixture exercises multi-track walks,
-    * cross-clock rescaling and sound-track 0×0 dims. The `mdat`
-    * payload is the doc text (free bytes; metadata-only container,
-    * matching [[graft.functions.BinaryCodecs.mp4Meta]]'s scope).
-    */
-  def syntheticMp4s(docs: DataFrame): Dataset[MediaRow] = {
-    import docs.sparkSession.implicits._
-    import graft.functions.BinaryCodecs
-    graft.io.Spread.toDefaultParallelism(
-      docs.select(col("doc_id"), coalesce(col("text"), lit("")).as("text")))
-      .as[(Long, String)]
-      .map { case (id, text) =>
-        val video = BinaryCodecs.Mp4Track(1L, "vide", "avc1",
-          16 + (id % 8).toInt * 4, 12 + (id % 5).toInt * 4,
-          1000000L, 20000L + (id % 3) * 5000L, 3L + id % 4)
-        val tracks =
-          if (id % 2 == 0)
-            Seq(video, BinaryCodecs.Mp4Track(2L, "soun", "mp4a", 0, 0,
-              8000L, 320L, 5L + id % 7))
-          else Seq(video)
-        val payload = BinaryCodecs.mp4(tracks, 1000000L,
-          mdat = text.getBytes("UTF-8"))
-        MediaRow(id, "video", payload, "video/mp4", payload.length.toLong)
-      }
-  }
-
   /** KEYFRAME-preferring frame sampling: like [[sampleVideoFrames]],
     * but when the payload is an MP4 whose video track carries an
     * `stss` sync-sample table, the k evenly-spaced picks come from the
@@ -1034,58 +841,6 @@ object Multimodal {
     }
   }
 
-  /** [[syntheticFrameVideos]] in the ISO-BMFF container — the SAME
-    * 4-frame BMP layout (frame f = the doc `id + 2f` image for f < 3,
-    * frame 3 repeats frame 0) carried as real stsz/stsc/stco-indexed
-    * samples (3 samples in chunk 1, the fourth in chunk 2, so the
-    * extractor crosses a chunk boundary on every file), avih's fields
-    * mapped onto the video track (µs clock ⇒ `sampleDelta` IS
-    * usec-per-frame). A frame sampled from the MP4 corpus is
-    * byte-identical to the one sampled from the AVI corpus — the
-    * cross-container identity the q428 oracle (q375's, reused
-    * verbatim) pins.
-    */
-  def syntheticFrameMp4s(docs: DataFrame): Dataset[MediaRow] = {
-    import docs.sparkSession.implicits._
-    import graft.functions.BinaryCodecs
-    val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-    val anchors = docs.select(col("doc_id"), col("text"))
-      .where(col("doc_id") % 10 === 0 && col("doc_id") + 6 <= maxId)
-    val sources = docs.select(col("doc_id").as("__src"), col("text").as("__stext"))
-    val joined = anchors.select(col("doc_id"))
-      .crossJoin(spark_range4(docs))
-      .withColumn("__src",
-        when(col("f") === 3, col("doc_id")).otherwise(col("doc_id") + col("f") * 2))
-      .join(sources, Seq("__src"))
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(
-        struct(col("f").as("_1"), col("__stext").as("_2")))).as("__fr"))
-      .as[(Long, Seq[(Long, String)])]
-    joined.map { case (id, frames) =>
-      val frameBytes = frames.map { case (f, text) =>
-        val src = if (f == 3) id else id + f * 2
-        val w = 8 + (src % 24).toInt
-        val h = 8 + (src % 16).toInt
-        BinaryCodecs.bmp(w, h, Option(text).getOrElse("").getBytes("UTF-8"))
-      }
-      val payload = BinaryCodecs.mp4WithSamples(
-        Seq(BinaryCodecs.Mp4Track(1L, "vide", "avc1",
-          8 + (id % 24).toInt, 8 + (id % 16).toInt,
-          1000000L, 33000L + (id % 5) * 1000L, 4L)),
-        movieTimescale = 1000000L, videoSamples = frameBytes,
-        samplesPerChunk = 3,
-        // frames 0 and 3 are the sync samples (1-based stss) — frame 3
-        // repeats frame 0, so the keyframe sampler lands on the
-        // planted-duplicate pair, distinguishable from even spacing
-        syncSamples = Seq(1, 4))
-      MediaRow(id, "video", payload, "video/mp4", payload.length.toLong)
-    }
-  }
-
-  /** The 4-row frame-index frame (f = 0..3) for [[syntheticFrameVideos]]. */
-  private def spark_range4(docs: DataFrame): DataFrame =
-    docs.sparkSession.range(4).select(col("id").as("f"))
-
   final case class TextPayload(media_id: Long, n_bytes: Long, text_out: String)
 
   /** Distributed gunzip of the binary column into UTF-8 text — the
@@ -1110,128 +865,6 @@ object Multimodal {
         }
       }
     }
-  }
-
-  /** gzip each document's text into a binary media row — the writer half
-    * of the q364 roundtrip (compression happens distributed too; the
-    * compressed bytes are JVM-deflate-specific and never compared
-    * cross-engine, only roundtripped).
-    */
-  def syntheticGzipDocs(docs: DataFrame): Dataset[MediaRow] = {
-    import docs.sparkSession.implicits._
-    import graft.functions.BinaryCodecs
-    graft.io.Spread.toDefaultParallelism(docs)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .map { case (id, text) =>
-        val payload = BinaryCodecs.gzip(Option(text).getOrElse("").getBytes("UTF-8"))
-        MediaRow(id, "text", payload, "application/gzip", payload.length.toLong)
-      }
-  }
-
-  /** RE-ENCODED audio corpus for perceptual dedup exercises: each odd-id
-    * document's WAV at TWO amplitudes — the [[syntheticMedia]] encode
-    * (byte × 128) under the original id, and an amplitude-rescaled
-    * re-encode (byte × 127) under `id + reencodeOffset`. Positive
-    * rescaling preserves every energy inequality, so the two encodes'
-    * [[audioEnergyHash]] fingerprints are bit-IDENTICAL — the controlled
-    * near-duplicate that makes the downstream Hamming join's match set
-    * provable instead of incidental.
-    */
-  def syntheticAudioReencodes(
-      docs: DataFrame,
-      reencodeOffset: Long = 1000000000L): Dataset[MediaRow] = {
-    import docs.sparkSession.implicits._
-    import graft.functions.BinaryCodecs
-    graft.io.Spread.toDefaultParallelism(docs)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .flatMap { case (id, text) =>
-        if (id % 2 == 0) Iterator.empty
-        else {
-          val bytes = Option(text).getOrElse("").getBytes("UTF-8")
-          val rate = 8000 + (id % 8).toInt * 1000
-          val n = 500 + (id % 1000).toInt
-          def enc(amp: Int, mid: Long): MediaRow = {
-            val samples = Array.tabulate(n)(i =>
-              (if (bytes.isEmpty) 0 else bytes(i % bytes.length) * amp).toShort)
-            val payload = BinaryCodecs.wav(rate, samples)
-            MediaRow(mid, "audio", payload, "audio/wav", payload.length.toLong)
-          }
-          Iterator(enc(128, id), enc(127, id + reencodeOffset))
-        }
-      }
-  }
-
-  /** Synthesize VALID media binaries from the documents table — real BMP
-    * for even ids, real WAV for odd — with container parameters that are
-    * pure functions of the id (so any engine can replay the expected
-    * metadata) and payload content drawn from the text bytes. This is how
-    * the binary pipeline is exercised end-to-end without native codecs:
-    * writer and parser must agree byte-for-byte or the roundtrip breaks.
-    */
-  def syntheticMedia(docs: DataFrame): Dataset[MediaRow] = {
-    import docs.sparkSession.implicits._
-    import graft.functions.BinaryCodecs
-    graft.io.Spread.toDefaultParallelism(docs)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .map { case (id, text) =>
-        val bytes = Option(text).getOrElse("").getBytes("UTF-8")
-        if (id % 2 == 0) {
-          val w = 8 + (id % 24).toInt
-          val h = 8 + (id % 16).toInt
-          val payload = BinaryCodecs.bmp(w, h, bytes)
-          MediaRow(id, "image", payload, "image/bmp", payload.length.toLong)
-        } else {
-          val rate = 8000 + (id % 8).toInt * 1000
-          val n = 500 + (id % 1000).toInt
-          val samples = Array.tabulate(n)(i =>
-            (if (bytes.isEmpty) 0 else bytes(i % bytes.length) * 128).toShort)
-          val payload = BinaryCodecs.wav(rate, samples)
-          MediaRow(id, "audio", payload, "audio/wav", payload.length.toLong)
-        }
-      }
-  }
-
-  /** [[syntheticMedia]] extended to all three modalities — id%3==0 a real
-    * BMP, id%3==1 a real WAV, id%3==2 an 8-frame "video" whose payload is
-    * a real BMP (frame sampling is byte-window based, so a valid BMP is a
-    * valid frame source) — so [[extractFeatures]]' dimension path runs the
-    * REAL container parser ([[graft.functions.BinaryCodecs.bmpDimensions]])
-    * on two of three legs; only the audio leg falls through to the stub's
-    * deterministic header read (dims (128, 352), a pure function of the
-    * 'RI' RIFF magic). Container params are pure functions of the id, so
-    * the expected metadata replays analytically in any engine.
-    */
-  def syntheticMediaTri(docs: DataFrame): Dataset[MediaRow] = {
-    import docs.sparkSession.implicits._
-    import graft.functions.BinaryCodecs
-    graft.io.Spread.toDefaultParallelism(docs)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .map { case (id, text) =>
-        val bytes = Option(text).getOrElse("").getBytes("UTF-8")
-        (id % 3) match {
-          case 0 =>
-            val w = 8 + (id % 24).toInt
-            val h = 8 + (id % 16).toInt
-            val payload = BinaryCodecs.bmp(w, h, bytes)
-            MediaRow(id, "image", payload, "image/bmp", payload.length.toLong)
-          case 1 =>
-            val rate = 8000 + (id % 8).toInt * 1000
-            val n = 500 + (id % 1000).toInt
-            val samples = Array.tabulate(n)(i =>
-              (if (bytes.isEmpty) 0 else bytes(i % bytes.length) * 128).toShort)
-            val payload = BinaryCodecs.wav(rate, samples)
-            MediaRow(id, "audio", payload, "audio/wav", payload.length.toLong)
-          case _ =>
-            val w = 8 + (id % 24).toInt
-            val h = 8 + (id % 16).toInt
-            val payload = BinaryCodecs.bmp(w, h, bytes)
-            MediaRow(id, "video", payload, "video/x-bmp-frames", payload.length.toLong)
-        }
-      }
   }
 
   final case class DecodedText(
@@ -1259,158 +892,6 @@ object Multimodal {
         }
       }
     }
-  }
-
-  /** Mixed-encoding synthetic corpus for the charset-ingest oracle —
-    * five legs by id residue, each a pure byte function of the (ASCII)
-    * text so the expected decode replays analytically: plain ASCII,
-    * BOM'd UTF-8 with a non-ASCII tail, BOM'd UTF-16LE, meta-declared
-    * latin-1 with a 0xE9 byte, and UNDECLARED latin-1 with the same
-    * byte — the leg that must fall back flagged.
-    */
-  def syntheticEncodedDocs(docs: DataFrame): Dataset[MediaRow] = {
-    import docs.sparkSession.implicits._
-    import java.nio.charset.StandardCharsets._
-    graft.io.Spread.toDefaultParallelism(docs)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .map { case (id, text) =>
-        val t = Option(text).getOrElse("")
-        val payload = (id % 5) match {
-          case 0 => t.getBytes(US_ASCII)
-          case 1 => Array(0xEF, 0xBB, 0xBF).map(_.toByte) ++ (t + " \u00e9").getBytes(UTF_8)
-          case 2 => Array(0xFF, 0xFE).map(_.toByte) ++ t.getBytes(UTF_16LE)
-          case 3 => ("<meta charset=\"iso-8859-1\">" + t + "\u00e9").getBytes(ISO_8859_1)
-          case _ => (t + "\u00e9").getBytes(ISO_8859_1)
-        }
-        MediaRow(id, "text", payload, "application/octet-stream", payload.length.toLong)
-      }
-  }
-
-  /** Synthetic PNG corpus from the documents table — every doc a real
-    * 8-bit RGB PNG (zlib-deflated, CRC'd chunks) whose geometry comes
-    * from the [[syntheticMedia]] id formula and whose pixel array cycles
-    * the text bytes row-major top-down, UNPADDED (PNG scanlines carry no
-    * row padding, so the oracle's byte formula is a plain modulus —
-    * simpler than the BMP twin). The compressed bytes are
-    * JVM-deflate-specific and never compared cross-engine; only the
-    * decoded pixels are (the q364 compression-roundtrip rule).
-    */
-  def syntheticPngMedia(docs: DataFrame): Dataset[MediaRow] = {
-    import docs.sparkSession.implicits._
-    import graft.functions.BinaryCodecs
-    graft.io.Spread.toDefaultParallelism(docs)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .map { case (id, text) =>
-        val w = 8 + (id % 24).toInt
-        val h = 8 + (id % 16).toInt
-        val payload = BinaryCodecs.png(w, h, Option(text).getOrElse("").getBytes("UTF-8"))
-        MediaRow(id, "image", payload, "image/png", payload.length.toLong)
-      }
-  }
-
-  /** Synthetic GIF corpus from the documents table — every doc a REAL
-    * GIF89a through the real LZW compressor: a fixed 64-color global
-    * palette (`palette[i] = (r = 4i, g = 7i mod 256, b = 255 − 3i)`),
-    * pixel indices from `index(x, y) = (5x + 11y + id) mod 64`, so
-    * every decoded pixel replays from the id formula. Even ids write
-    * INTERLACED (the decode must undo the 4-pass row order), odd ids
-    * carry a Graphic Control Extension (the skip-and-capture path),
-    * and every 5th id appends a SECOND frame — the first-frame
-    * contract must ignore it.
-    */
-  def syntheticGifMedia(docs: DataFrame): Dataset[MediaRow] = {
-    import docs.sparkSession.implicits._
-    import graft.functions.BinaryCodecs
-    graft.io.Spread.toDefaultParallelism(docs)
-      .select(col("doc_id"))
-      .as[Long]
-      .map { id =>
-        val w = 8 + (id % 3).toInt * 7
-        val h = 5 + (id % 4).toInt * 3
-        val pal = Array.tabulate(64)(i =>
-          ((4 * i) << 16) | ((7 * i % 256) << 8) | (255 - 3 * i))
-        val idx = Array.tabulate(w * h)(p =>
-          (((p % w) * 5 + (p / w) * 11 + id) % 64).toByte)
-        val gif = BinaryCodecs.gif(w, h, pal, idx,
-          interlace = id % 2 == 0, withGce = id % 2 == 1)
-        val payload =
-          if (id % 5 == 0) {
-            // splice a throwaway second frame (same canvas, flat index
-            // 0) before the trailer: animation the first-frame decode
-            // must NOT composite
-            val f2 = BinaryCodecs.gif(w, h, pal, new Array[Byte](w * h))
-            val descPos = 13 + 3 * pal.length // header + LSD + GCT
-            gif.dropRight(1) ++ f2.slice(descPos, f2.length - 1) :+ 0x3b.toByte
-          } else gif
-        MediaRow(id, "image", payload, "image/gif", payload.length.toLong)
-      }
-  }
-
-  /** Synthetic baseline-JPEG corpus from the documents table — REAL
-    * lossy-codec files built so the decode is analytically exact: every
-    * 8×8 block is a flat EVEN value (`2·((id·7 + bx·13 + by·29) mod
-    * 128)` — DC = 8·(v−128) divisible by the Annex K Q₀₀ = 16, zero
-    * AC), so quantization is the identity on the fixture and every
-    * pixel replays from the id formula through a genuine Huffman+DCT
-    * roundtrip. Geometry from the id (block-multiples); even ids
-    * grayscale, odd ids the 4:4:4 COLOR path with gray pixel values
-    * (Y = v, Cb = Cr = 128 exactly — the color machinery runs, the
-    * formula stays analytic).
-    */
-  def syntheticJpegMedia(docs: DataFrame): Dataset[MediaRow] = {
-    import docs.sparkSession.implicits._
-    import graft.functions.JpegCodec
-    graft.io.Spread.toDefaultParallelism(docs)
-      .select(col("doc_id"))
-      .as[Long]
-      .map { id =>
-        val w = 8 * (1 + (id % 3).toInt)
-        val h = 8 * (1 + (id % 2).toInt)
-        def v(bx: Int, by: Int): Int = 2 * (((id * 7 + bx * 13 + by * 29) % 128).toInt)
-        val gray = Array.tabulate(w * h) { i =>
-          v((i % w) / 8, (i / w) / 8).toByte
-        }
-        // leg rotates through ALL THREE supported layouts — gray, 4:4:4
-        // and subsampled 4:2:0; gray pixel values keep every leg exact
-        // (Y = v, Cb = Cr = 128 flat at any subsampling)
-        val payload = (id % 3) match {
-          case 0 => JpegCodec.encodeGray(w, h, gray)
-          case 1 => JpegCodec.encodeColor444(w, h, gray.flatMap(b => Array(b, b, b)))
-          case _ => JpegCodec.encodeColor420(w, h, gray.flatMap(b => Array(b, b, b)))
-        }
-        MediaRow(id, "image", payload, "image/jpeg", payload.length.toLong)
-      }
-  }
-
-  /** Progressive-JPEG twin of [[syntheticJpegMedia]]: the SAME flat
-    * even-valued blocks emitted as SOF2 scan scripts (spectral
-    * selection + DC/AC successive approximation, the shape real
-    * progressive encoders write) — even ids grayscale, odd ids the
-    * 4:4:4 color path. Decoded pixels equal the baseline fixture's by
-    * construction, so the q395 stats oracle replays VERBATIM: any
-    * disagreement between the progressive scan accumulation and the
-    * baseline path goes red.
-    */
-  def syntheticProgressiveJpegMedia(docs: DataFrame): Dataset[MediaRow] = {
-    import docs.sparkSession.implicits._
-    import graft.functions.JpegCodec
-    graft.io.Spread.toDefaultParallelism(docs)
-      .select(col("doc_id"))
-      .as[Long]
-      .map { id =>
-        val w = 8 * (1 + (id % 3).toInt)
-        val h = 8 * (1 + (id % 2).toInt)
-        def v(bx: Int, by: Int): Int = 2 * (((id * 7 + bx * 13 + by * 29) % 128).toInt)
-        val gray = Array.tabulate(w * h) { i =>
-          v((i % w) / 8, (i / w) / 8).toByte
-        }
-        val payload =
-          if (id % 2 == 0) JpegCodec.encodeGrayProgressive(w, h, gray)
-          else JpegCodec.encodeColor444Progressive(w, h, gray.flatMap(b => Array(b, b, b)))
-        MediaRow(id, "image", payload, "image/jpeg", payload.length.toLong)
-      }
   }
 
   /** Test-path adapter: treat document text bytes as opaque media payloads

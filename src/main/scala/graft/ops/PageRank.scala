@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Fixed-point integer PageRank — graph centrality over an edge list,
@@ -150,37 +150,36 @@ object PageRank {
     // weight + null census per folded edge) instead of scanning the raw
     // edge plan separately — a standalone limit-1 probe would execute
     // the caller's whole upstream join once just to check signs, then
-    // staging would execute it again.
-    val eAll = fx.stage(
+    // staging would execute it again. The global stats (the verdict and
+    // the max weight the precision bound below needs) are observed on
+    // the staging job itself; the culprit row is fetched only on the
+    // failure path.
+    val (eAll, stats) = fx.stageMeasured(
       raw.groupBy(col("s"), col("d")).agg(sum(col("w")).as("w"),
         min(col("w")).as("__mn"),
-        (count(lit(1)) - count(col("w"))).as("__nn")))
-    // ONE tiny global-stats aggregation on the staged leaf (r18) carries
-    // the weight-quality verdict AND the max weight the precision probe
-    // below needs — previously a limit-1 filter job plus a separate
-    // max(w) job. The culprit row is fetched only on the failure path.
-    val st = eAll.agg(
-      coalesce(min(col("__mn")), lit(1L)).as("mn"),
-      coalesce(sum(col("__nn")), lit(0L)).as("nn"),
-      coalesce(max(col("w")), lit(1L)).as("mw")).head()
+        (count(lit(1)) - count(col("w"))).as("__nn")),
+      struct(
+        coalesce(min(col("__mn")), lit(1L)).as("mn"),
+        coalesce(sum(col("__nn")), lit(0L)).as("nn"),
+        coalesce(max(col("w")), lit(1L)).as("mw")))
+    val st = stats.asInstanceOf[Row]
     if (st.getLong(0) <= 0L || st.getLong(1) > 0L) {
       val bad = eAll.where(col("__mn") <= 0L || col("__nn") > 0L).limit(1).collect()
       require(bad.isEmpty,
         s"weightedRanksFixedPoint: non-positive or null weight on edge ${bad.headOption.map(r => (r.get(0), r.get(1))).getOrElse("")} — weights must be >= 1")
     }
     val e = eAll.select(col("s"), col("d"), col("w"))
-    val nodes = fx.stage(nodeIds(e), Seq("id"))
+    val (nodes, n) = fx.stageMeasured(nodeIds(e), count(lit(1)), Seq("id"))
     // Adaptive precision: total rank mass is invariant-bounded by
     // n·scale (teleport injects n·(1−d)·scale per round, damping keeps
     // ≤ d of the rest), so the per-edge product rank·d·w is bounded by
-    // n·scale·d·maxW. n comes from one bounded count on the staged node
-    // leaf; maxW rode the weight-stats aggregation above (r18 — no
-    // separate max(w) job). Take the codegen'd Long path when the bound
+    // n·scale·d·maxW. n is observed on the node staging job, maxW on the
+    // edge staging job. Take the codegen'd Long path when the bound
     // clears 2^62 — decimal(38,0) otherwise (the correctness floor; same
     // overflow posture as skipGramLift). Identical values either way:
     // exact integer floor division on both paths.
-    val longSafe =
-      BigInt(nodes.count()) * scale * dampingNum.max(1L) * st.getLong(2) < BigInt(1L << 62)
+    val longSafe = BigInt(n.asInstanceOf[java.lang.Long].longValue) * scale *
+      dampingNum.max(1L) * st.getLong(2) < BigInt(1L << 62)
     iterate(fx, nodes, e, sum(col("w")).as("wsum"),
       if (longSafe) s"(rank * $dampingNum * w) div (100 * wsum)"
       else s"cast((cast(rank as decimal(38,0)) * $dampingNum * w) div (100 * cast(wsum as decimal(38,0))) as bigint)",

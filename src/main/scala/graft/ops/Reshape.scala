@@ -4,8 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 /** Wide↔long reshaping. The wide→long direction ("melt") is the inverse
-  * of [[graft.SparkEntry]]'s pivot query (q38): k measure columns become
-  * k rows of (variable, value) — the shape chart/ML-feature pipelines
+  * of the catalogue's pivot query (q38 in
+  * [[graft.catalog.TabularCatalog]]): k measure columns become k rows of
+  * (variable, value) — the shape chart/ML-feature pipelines
   * want, and the first step of any "audit every metric column the same
   * way" job (e.g. feeding [[Audit.constraints]]-style checks
   * generically).

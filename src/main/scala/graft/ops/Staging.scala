@@ -111,9 +111,18 @@ private[graft] object Staging {
   def stage(df: DataFrame, reliable: Boolean): DataFrame = {
     maybeExplain(df, stageCalls.get() + 1, "stage")
     stageCalls.incrementAndGet()
+    materialize(df, reliable, None)
+  }
+
+  /** The one posture dispatch behind [[stage]], [[stageHash]] and
+    * [[pin]]; `layout` is the hash partitioning the returned leaf
+    * declares.
+    */
+  private def materialize(
+      df: DataFrame, reliable: Boolean, layout: Option[(Seq[String], Int)]): DataFrame =
     if (reliable && reliablePin(df)) {
       requireCheckpointDir(df)
-      GraftStagedLeaf.cappedCheckpoint(df.checkpoint(), df)
+      GraftStagedLeaf.cappedCheckpoint(df.checkpoint(), df, layout)
     } else if (reliable) {
       // Leaf-wrapped persist (see scaladoc): the RDD carries the
       // fault-tolerance lineage; the DataFrame plan over it is a leaf,
@@ -123,9 +132,8 @@ private[graft] object Staging {
       // (`count()` then `unpersist()`) works on it, and uncaching matches
       // because the returned object IS the persisted one (uncache is
       // sameResult-based; a projection would silently no-op).
-      GraftStagedLeaf(df).persist(StorageLevel.DISK_ONLY)
-    } else GraftStagedLeaf.cappedCheckpoint(df.localCheckpoint(), df)
-  }
+      GraftStagedLeaf(df, layout).persist(StorageLevel.DISK_ONLY)
+    } else GraftStagedLeaf.cappedCheckpoint(df.localCheckpoint(), df, layout)
 
   /** [[stage]] that both RE-SHAPES and DECLARES a hash layout (r18): the
     * staged frame is repartitioned `hash(keys, defaultParallelism)` (an
@@ -143,7 +151,7 @@ private[graft] object Staging {
     * explicitly repartitioned before materialization. The declaration is
     * physically true by construction — checkpointed partition i holds
     * exactly the repartition exchange's bucket i (see
-    * [[org.apache.spark.sql.GraftStagedLeaf.cappedCheckpointHash]] for
+    * [[org.apache.spark.sql.GraftStagedLeaf.cappedCheckpoint]] for
     * the full contract).
     */
   def stageHash(df: DataFrame, keys: Seq[String], reliable: Boolean): DataFrame = {
@@ -152,12 +160,7 @@ private[graft] object Staging {
     val shaped = df.repartition(p, keys.map(col): _*)
     maybeExplain(shaped, stageCalls.get() + 1, "stage")
     stageCalls.incrementAndGet()
-    if (reliable && reliablePin(df)) {
-      requireCheckpointDir(df)
-      GraftStagedLeaf.cappedCheckpointHash(shaped.checkpoint(), shaped, keys, p)
-    } else if (reliable) {
-      GraftStagedLeaf.applyHash(shaped, keys, p).persist(StorageLevel.DISK_ONLY)
-    } else GraftStagedLeaf.cappedCheckpointHash(shaped.localCheckpoint(), shaped, keys, p)
+    materialize(shaped, reliable, Some((keys, p)))
   }
 
   /** Eager materialization whose RESULT must be pinned exactly once —
@@ -176,9 +179,6 @@ private[graft] object Staging {
     */
   def pin(df: DataFrame): DataFrame = {
     maybeExplain(df, stageCalls.get(), "pin")
-    if (reliablePin(df)) {
-      requireCheckpointDir(df)
-      GraftStagedLeaf.cappedCheckpoint(df.checkpoint(), df)
-    } else GraftStagedLeaf.cappedCheckpoint(df.localCheckpoint(), df)
+    materialize(df, reliable = reliablePin(df), None)
   }
 }

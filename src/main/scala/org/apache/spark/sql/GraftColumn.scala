@@ -64,15 +64,16 @@ object GraftStagedLeaf {
     * for staging postures that materialize via the CacheManager
     * (`persist`) rather than a checkpoint: the wrapper is what gets
     * persisted, so its one scan layer runs once at materialization and
-    * cached reads bypass it.
+    * cached reads bypass it. With a `layout`, the leaf DECLARES that
+    * hash partitioning ([[cappedCheckpoint]] has the caller contract).
     */
-  def apply(df: DataFrame): DataFrame = {
+  def apply(df: DataFrame, layout: Option[(Seq[String], Int)] = None): DataFrame = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     val capped = cap(ds.queryExecution.optimizedPlan.stats)
     val meta = LogicalRDD.fromDataset(ds.queryExecution.toRdd, ds, isStreaming = false)
     val plan = LogicalRDD(
-      meta.output, meta.rdd, meta.outputPartitioning, meta.outputOrdering,
-      meta.isStreaming, None)(ds.sparkSession, Some(capped), None)
+      meta.output, meta.rdd, partitioning(meta.output, meta.outputPartitioning, layout),
+      meta.outputOrdering, meta.isStreaming, None)(ds.sparkSession, Some(capped), None)
     classic.Dataset.ofRows(ds.sparkSession, plan)
   }
 
@@ -83,78 +84,53 @@ object GraftStagedLeaf {
     * staged edge list each iteration). `ckpt` must be the result of
     * `localCheckpoint()`/`checkpoint()` on a plan equivalent to
     * `origin` — its analyzed plan IS the leaf we re-stat.
+    *
+    * With a `layout` = (keys, numPartitions), the leaf DECLARES that
+    * hash partitioning (r18). Under AQE, `LogicalRDD.fromDataset` cannot
+    * rewrite the executed plan's output partitioning (the physical plan
+    * is an `AdaptiveSparkPlanExec`, whose partitioning reads as Unknown
+    * at leaf-build time), so every checkpoint/cache boundary DROPS the
+    * layout and every downstream consumer re-exchanges — measured on
+    * q69_pagerank: the staged-and-cached edge list re-shuffled once per
+    * iteration, nodes four times per run. The declaration lets the
+    * staging layer re-attach the layout it just PAID FOR.
+    *
+    * Layout contract (caller-guaranteed, [[graft.ops.Staging
+    * .stageHash]] is the one caller): the staged plan's TOPMOST exchange
+    * is `repartition(numPartitions, keys)` with no partition-disturbing
+    * operator above it. Then partition i holds exactly the rows with
+    * `pmod(murmur3(keys), n) = i` — the declared `HashPartitioning` is
+    * physically true, and co-partitioned joins/aggregations on `keys`
+    * may (correctly) skip their exchange. An explicit-count repartition
+    * is exempt from AQE coalescing and sits above any join AQE might
+    * rewrite, so no AQE local-read / coalesce optimization can disturb
+    * the layout underneath it.
     */
-  def cappedCheckpoint(ckpt: DataFrame, origin: DataFrame): DataFrame = {
+  def cappedCheckpoint(
+      ckpt: DataFrame, origin: DataFrame,
+      layout: Option[(Seq[String], Int)] = None): DataFrame = {
     val ds = ckpt.asInstanceOf[classic.Dataset[Row]]
     val capped = cap(origin.asInstanceOf[classic.Dataset[Row]].queryExecution.optimizedPlan.stats)
     ds.queryExecution.analyzed match {
       case lr: LogicalRDD =>
         classic.Dataset.ofRows(ds.sparkSession, LogicalRDD(
-          lr.output, lr.rdd, lr.outputPartitioning, lr.outputOrdering,
-          lr.isStreaming, None)(ds.sparkSession, Some(capped), None))
+          lr.output, lr.rdd, partitioning(lr.output, lr.outputPartitioning, layout),
+          lr.outputOrdering, lr.isStreaming, None)(ds.sparkSession, Some(capped), None))
       case other =>
         throw new IllegalArgumentException(
           s"cappedCheckpoint expects a checkpointed frame (LogicalRDD leaf), got: ${other.nodeName}")
     }
   }
 
-  /** [[cappedCheckpoint]] with a DECLARED hash partitioning (r18).
-    *
-    * Under AQE, `LogicalRDD.fromDataset` cannot rewrite the executed
-    * plan's output partitioning (the physical plan is an
-    * `AdaptiveSparkPlanExec`, whose partitioning reads as Unknown at
-    * leaf-build time), so every checkpoint/cache boundary DROPS the
-    * layout and every downstream consumer re-exchanges — measured on
-    * q69_pagerank: the staged-and-cached edge list re-shuffled once per
-    * iteration, nodes four times per run. This constructor lets the
-    * staging layer re-attach the layout it just PAID FOR.
-    *
-    * Correctness contract (caller-guaranteed, [[graft.ops.Staging
-    * .stageHash]] is the one caller): `ckpt` must checkpoint a plan whose
-    * TOPMOST exchange is `repartition(numPartitions, keys)` with no
-    * partition-disturbing operator above it. Then checkpointed partition
-    * i holds exactly the rows with `pmod(murmur3(keys), n) = i` — the
-    * declared `HashPartitioning` is physically true, and co-partitioned
-    * joins/aggregations on `keys` may (correctly) skip their exchange.
-    * An explicit-count repartition is exempt from AQE coalescing and
-    * sits above any join AQE might rewrite, so no AQE local-read /
-    * coalesce optimization can disturb the layout underneath it.
-    */
-  def cappedCheckpointHash(
-      ckpt: DataFrame, origin: DataFrame,
-      keys: Seq[String], numPartitions: Int): DataFrame = {
-    val ds = ckpt.asInstanceOf[classic.Dataset[Row]]
-    val capped = cap(origin.asInstanceOf[classic.Dataset[Row]].queryExecution.optimizedPlan.stats)
-    ds.queryExecution.analyzed match {
-      case lr: LogicalRDD =>
-        classic.Dataset.ofRows(ds.sparkSession, LogicalRDD(
-          lr.output, lr.rdd, declaredHash(lr.output, keys, numPartitions),
-          lr.outputOrdering, lr.isStreaming, None)(ds.sparkSession, Some(capped), None))
-      case other =>
-        throw new IllegalArgumentException(
-          s"cappedCheckpointHash expects a checkpointed frame (LogicalRDD leaf), got: ${other.nodeName}")
-    }
-  }
-
-  /** [[apply]] with a DECLARED hash partitioning — the persist-posture
-    * twin of [[cappedCheckpointHash]] (same caller contract: the wrapped
-    * plan's topmost exchange is `repartition(numPartitions, keys)`).
-    */
-  def applyHash(df: DataFrame, keys: Seq[String], numPartitions: Int): DataFrame = {
-    val ds = df.asInstanceOf[classic.Dataset[Row]]
-    val capped = cap(ds.queryExecution.optimizedPlan.stats)
-    val meta = LogicalRDD.fromDataset(ds.queryExecution.toRdd, ds, isStreaming = false)
-    val plan = LogicalRDD(
-      meta.output, meta.rdd, declaredHash(meta.output, keys, numPartitions),
-      meta.outputOrdering, meta.isStreaming, None)(ds.sparkSession, Some(capped), None)
-    classic.Dataset.ofRows(ds.sparkSession, plan)
-  }
-
-  private def declaredHash(
+  /** `found`, or the declared hash partitioning of `layout`. */
+  private def partitioning(
       output: Seq[catalyst.expressions.Attribute],
-      keys: Seq[String], numPartitions: Int) =
-    catalyst.plans.physical.HashPartitioning(
-      keys.map(k => output.find(_.name == k).getOrElse(throw new IllegalArgumentException(
-        s"declared hash key '$k' not among output columns ${output.map(_.name).mkString(", ")}"))),
-      numPartitions)
+      found: catalyst.plans.physical.Partitioning,
+      layout: Option[(Seq[String], Int)]): catalyst.plans.physical.Partitioning =
+    layout.fold(found) { case (keys, numPartitions) =>
+      catalyst.plans.physical.HashPartitioning(
+        keys.map(k => output.find(_.name == k).getOrElse(throw new IllegalArgumentException(
+          s"declared hash key '$k' not among output columns ${output.map(_.name).mkString(", ")}"))),
+        numPartitions)
+    }
 }

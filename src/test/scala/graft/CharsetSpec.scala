@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets._
 
 import graft.functions.BinaryCodecs
 import graft.ops.{Html, Multimodal}
+import graft.fixtures.MediaFixtures
 
 /** Charset sniffing at crawl ingest: BOM precedence, meta declarations
   * (both forms), declaration-vs-bytes contradiction, strict UTF-8
@@ -97,7 +98,7 @@ class CharsetSpec extends SparkSpec {
   test("decodeCharset + stripMarkup: decode-before-strip yields clean text on every leg") {
     val docs = Seq((0L, "plain zero"), (1L, "one"), (2L, "two"), (3L, "three"), (4L, "four"))
       .toDF("doc_id", "text")
-    val decoded = Multimodal.decodeCharset(Multimodal.syntheticEncodedDocs(docs))
+    val decoded = Multimodal.decodeCharset(MediaFixtures.syntheticEncodedDocs(docs))
     val rows = decoded.collect().sortBy(_.media_id)
     assert(rows.map(_.encoding).toSeq ==
       Seq("utf-8", "utf-8", "utf-16le", "windows-1252", "windows-1252"))

@@ -13,10 +13,17 @@ class DocsDriftSpec extends org.scalatest.funsuite.AnyFunSuite {
   private val ids: Set[Int] =
     SparkEntry.queries.keySet.map(k => k.drop(1).takeWhile(_.isDigit).toInt)
 
-  test("queries and oracleSql declare the same keys") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert(q == o, s"queries-only: ${(q -- o).toSeq.sorted}; oracle-only: ${(o -- q).toSeq.sorted}")
+  test("catalog declares each query name once") {
+    // queries and oracleSql are both derived from the one catalog list;
+    // a name in two catalog files would make `toMap` keep just one case
+    val names = SparkEntry.catalog.map(_.name)
+    val twice = names.diff(names.distinct).distinct.sorted
+    assert(twice.isEmpty, s"query names declared twice: $twice")
+    assert(SparkEntry.queries.keySet == names.toSet)
+    assert(SparkEntry.oracleSql.keySet == names.toSet)
+    val dup = SparkEntry.catalog :+ SparkEntry.catalog.head
+    val e = intercept[IllegalArgumentException](graft.catalog.QueryCase.byName(dup)(_.name))
+    assert(e.getMessage.contains(dup.head.name))
   }
 
   test("query ids are unique and contiguous from 1") {

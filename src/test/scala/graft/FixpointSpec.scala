@@ -190,7 +190,7 @@ class FixpointSpec extends SparkSpec {
       (0L until 80L by 10L).toDF("seed"), "seed", iterations = 3)
   }
 
-  check("weightedRanksFixedPoint (q352 shape)", 4, 17) {
+  check("weightedRanksFixedPoint (q352 shape)", 4, 13) {
     PageRank.weightedRanksFixedPoint(coOrders.withColumn("w", lit(1L)), "s", "d", "w",
       iterations = 3)
   }

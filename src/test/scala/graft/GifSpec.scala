@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.BinaryCodecs
 import graft.ops.Multimodal
+import graft.fixtures.MediaFixtures
 
 /** GIF codec: LZW roundtrips (width growth, dictionary reset, KwKwK),
   * javax.imageio cross-validation in BOTH directions (the real-world
@@ -137,7 +138,7 @@ class GifSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     val docs = (0L until 40L).map(i => (i, s"t$i")).toDF("doc_id", "text")
-    val media = Multimodal.syntheticGifMedia(docs.select(col("doc_id")))
+    val media = MediaFixtures.syntheticGifMedia(docs.select(col("doc_id")))
     val stats = Multimodal.imageStats(media).collect().map(s => s.media_id -> s).toMap
     assert(stats.size == 40)
     // replay one doc's expected sums from the formulas (id 10: second

@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.JpegCodec
+import graft.fixtures.MediaFixtures
 
 /** Baseline JPEG codec: exact flat-block roundtrips (the oracle
   * foundation), tolerance roundtrips on smooth content, byte stuffing,
@@ -117,7 +118,7 @@ class JpegSpec extends SparkSpec {
     import graft.ops.Multimodal
     import graft.functions.BinaryCodecs
     val docs = Seq((0L, "a"), (1L, "b"), (2L, "c"), (3L, "d")).toDF("doc_id", "text")
-    val jpgs = Multimodal.syntheticJpegMedia(docs)
+    val jpgs = MediaFixtures.syntheticJpegMedia(docs)
     val stats = Multimodal.imageStats(jpgs).collect().sortBy(_.media_id)
     assert(stats.length == 4)
     // gray and color legs: all three channel sums equal (gray content)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.BinaryCodecs
 import graft.functions.BinaryCodecs.Mp4Track
 import graft.ops.Multimodal
+import graft.fixtures.MediaFixtures
 
 /** ISO-BMFF (MP4) container metadata: the box-tree walk (big-endian
   * sizes, 64-bit largesize, to-end size-0), the moov descent
@@ -186,11 +187,21 @@ class Mp4Spec extends SparkSpec {
     assert(all == Set((1L, 0L), (1L, 3L), (2L, 0L), (2L, 3L)))
   }
 
+  test("syntheticFrameVideos: empty and one-row documents give no videos in either container") {
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val one = Seq((10L, "pixels")).toDF("doc_id", "text")
+    for (docs <- Seq(empty, one); mp4 <- Seq(false, true)) {
+      val videos = MediaFixtures.syntheticFrameVideos(docs, mp4)
+      assert(videos.schema == MediaFixtures.syntheticFrameVideos(one, mp4).schema)
+      assert(videos.count() == 0L, s"mp4=$mp4 on ${docs.count()} docs")
+    }
+  }
+
   test("sampleVideoFrames routes MP4 next to AVI; frames byte-identical across containers") {
     val docs = (0L until 20L).map(i => (i, s"pixels $i")).toDF("doc_id", "text")
-    val avi = Multimodal.sampleVideoFrames(Multimodal.syntheticFrameVideos(docs), k = 4)
+    val avi = Multimodal.sampleVideoFrames(MediaFixtures.syntheticFrameVideos(docs), k = 4)
       .collect().map(f => (f.media_id, f.frame_idx) -> f.payload.toSeq).toMap
-    val mp4 = Multimodal.sampleVideoFrames(Multimodal.syntheticFrameMp4s(docs), k = 4)
+    val mp4 = Multimodal.sampleVideoFrames(MediaFixtures.syntheticFrameVideos(docs, mp4 = true), k = 4)
       .collect().map(f => (f.media_id, f.frame_idx) -> f.payload.toSeq).toMap
     assert(avi.nonEmpty && avi.keySet == mp4.keySet)
     // the cross-container identity: same doc, same frame, same bytes —

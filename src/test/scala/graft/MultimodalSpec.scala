@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.ops.Multimodal
 import graft.ops.Multimodal.{DecodeStub, MediaRow}
+import graft.fixtures.{CrawlFixtures, MediaFixtures}
 
 /** Multimodal plumbing: binary payload column + typed metadata through the
   * batched per-partition decode. The codec is a stub; the schema, batching
@@ -43,7 +44,7 @@ class MultimodalSpec extends SparkSpec {
   test("syntheticMediaTri: real BMP dims on image AND video legs, stub RIFF read on audio") {
     val docs = Seq((0L, "abc"), (1L, "defg"), (2L, "hij"), (3L, ""), (25L, "xyz"))
       .toDF("doc_id", "text")
-    val feats = Multimodal.extractFeatures(Multimodal.syntheticMediaTri(docs))
+    val feats = Multimodal.extractFeatures(MediaFixtures.syntheticMediaTri(docs))
       .collect().map(f => f.media_id -> f).toMap
     // image (id%3==0): dims are the writer's params decoded by the REAL parser
     assert(feats(0L).kind == "image" && feats(0L).width == 8 && feats(0L).height == 8)
@@ -99,7 +100,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("synthetic media parses back to its formula metadata") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val metas = Multimodal.parseMeta(Multimodal.syntheticMedia(docs)).collect()
+    val metas = Multimodal.parseMeta(MediaFixtures.syntheticMedia(docs)).collect()
     assert(metas.length == docs.count())
     metas.foreach { m =>
       if (m.media_id % 2 == 0) {
@@ -314,7 +315,7 @@ class MultimodalSpec extends SparkSpec {
     val docs = Seq(
       (1L, "alpha beta gamma"), (2L, "even ids skipped"), (3L, "delta epsilon"))
       .toDF("doc_id", "text")
-    val media = Multimodal.syntheticAudioReencodes(docs, reencodeOffset = 100L)
+    val media = MediaFixtures.syntheticAudioReencodes(docs, reencodeOffset = 100L)
     val hashes = Multimodal.audioEnergyHash(media).collect()
       .map(h => h.media_id -> h.ehash).toMap
     assert(hashes.keySet == Set(1L, 101L, 3L, 103L))
@@ -353,7 +354,7 @@ class MultimodalSpec extends SparkSpec {
     // dataset path: roundtrip through the binary column, UTF-8 preserved
     import spark.implicits._
     val docs = Seq((1L, "plain"), (2L, "unicode üß")).toDF("doc_id", "text")
-    val got = Multimodal.gunzipText(Multimodal.syntheticGzipDocs(docs))
+    val got = Multimodal.gunzipText(MediaFixtures.syntheticGzipDocs(docs))
       .collect().map(t => t.media_id -> (t.n_bytes, t.text_out)).toMap
     assert(got(1L) == ((5L, "plain")))
     assert(got(2L) == (("unicode üß".getBytes("UTF-8").length.toLong, "unicode üß")))
@@ -468,10 +469,10 @@ class MultimodalSpec extends SparkSpec {
       (0L, "alpha beta gamma delta"), (2L, "epsilon zeta"), (4L, "eta theta iota"),
       (6L, "kappa"), (10L, "lambda mu nu xi omicron"), (12L, "pi rho"),
       (14L, "sigma tau"), (16L, "upsilon phi chi")).toDF("doc_id", "text")
-    val videos = Multimodal.syntheticFrameVideos(docs)
+    val videos = MediaFixtures.syntheticFrameVideos(docs)
     val got = Multimodal.videoFrameDhash(videos, k = 4).collect()
       .map(v => (v.media_id, v.frame_idx) -> v.dhash).toMap
-    val want = Multimodal.imageDhash(Multimodal.syntheticMedia(docs))
+    val want = Multimodal.imageDhash(MediaFixtures.syntheticMedia(docs))
       .collect().map(i => i.media_id -> i.dhash).toMap
     def src(id: Long, f: Long) = if (f == 3) id else id + f * 2
     assert(got.nonEmpty && got.forall { case ((id, f), d) => want(src(id, f)) == d },
@@ -616,7 +617,7 @@ class MultimodalSpec extends SparkSpec {
       .toDF("doc_id", "payload", "uri")
     val got = graft.ops.Multimodal.archiveMediaTriage(
       graft.ops.Warc.httpResponses(
-        graft.ops.Warc.parseWarc(graft.ops.Warc.syntheticWarcBytes(docs))))
+        graft.ops.Warc.parseWarc(CrawlFixtures.syntheticWarcBytes(docs))))
       .collect().map(r => r.getAs[String]("target_uri").split("/").last.toLong -> r).toMap
     def verdict(id: Long): Any =
       if (got(id).isNullAt(got(id).fieldIndex("type_matches"))) null

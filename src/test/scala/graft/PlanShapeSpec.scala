@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import graft.ops.{Chunking, Dedup, PageRank, Repetition, RuntimeFilter}
+import graft.fixtures.CrawlFixtures
 
 /** Plan-shape assertions pinning the scale CONTRACTS of the corpus
   * operators — not what they compute, but what they shuffle. A regression
@@ -858,7 +859,7 @@ class PlanShapeSpec extends SparkSpec {
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
     import graft.ops.{Multimodal, Warc}
     val rdocs = (0L until 24L).map(i => (i, s"page $i")).toDF("doc_id", "text")
-    val media = Warc.syntheticWarc(rdocs, docsPerFile = 8)
+    val media = CrawlFixtures.syntheticWarc(rdocs, docsPerFile = 8)
     val lines = Warc.toCdxj(media)
     val urls = Seq("https://host1.example.com/p/1").toDF("url")
     val plan = initialPlan(Warc.randomAccessFetch(urls,

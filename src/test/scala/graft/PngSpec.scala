@@ -4,6 +4,7 @@ import java.nio.{ByteBuffer, ByteOrder}
 
 import graft.functions.BinaryCodecs
 import graft.ops.Multimodal
+import graft.fixtures.MediaFixtures
 
 /** PNG codec: writer/decoder roundtrip, all five scanline filters
   * reconstructed against hand-computed vectors, quarantine on every
@@ -146,7 +147,7 @@ class PngSpec extends SparkSpec {
   test("Dataset ops route PNG: imageStats/imageDhash/resizeImages/transcodeToPng") {
     val docs = Seq((0L, "alpha bravo"), (2L, "charlie delta echo"), (4L, ""))
       .toDF("doc_id", "text")
-    val pngs = Multimodal.syntheticPngMedia(docs)
+    val pngs = MediaFixtures.syntheticPngMedia(docs)
     val stats = Multimodal.imageStats(pngs).collect().sortBy(_.media_id)
     assert(stats.length == 3 && stats.head.width == 8 && stats.head.height == 8)
     val hashes = Multimodal.imageDhash(pngs).collect()
@@ -154,7 +155,7 @@ class PngSpec extends SparkSpec {
     val resized = Multimodal.resizeImages(pngs, 8, 8).collect()
     assert(resized.length == 3 && resized.forall(_.mime_type == "image/png"))
     // transcode: BMP corpus → PNG corpus with identical fingerprints
-    val bmps = Multimodal.syntheticMedia(docs) // even ids → BMP
+    val bmps = MediaFixtures.syntheticMedia(docs) // even ids → BMP
     val before = Multimodal.imageDhash(bmps).collect().map(d => d.media_id -> d.dhash).toMap
     val after = Multimodal.imageDhash(Multimodal.transcodeToPng(bmps)).collect()
     assert(after.nonEmpty && after.forall(d => before(d.media_id) == d.dhash))

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.functions.BinaryCodecs
 import graft.ops.{Multimodal, Warc}
+import graft.fixtures.CrawlFixtures
 
 /** WARC container ingest: the gzip member walk (RFC 1952 concatenated
   * members), strict record framing (ISO 28500), roundtrip identity, and
@@ -117,7 +118,7 @@ class WarcSpec extends SparkSpec {
 
   test("quarantinedFiles: the drops parseWarc makes, surfaced as rows") {
     val docs = (0L until 40L).map(i => (i, s"doc $i text")).toDF("doc_id", "text")
-    val media = Warc.syntheticWarc(docs, docsPerFile = 8) // files 0..4
+    val media = CrawlFixtures.syntheticWarc(docs, docsPerFile = 8) // files 0..4
     val corrupted = media.map { m =>
       if (m.media_id % 2 == 1) m.copy(payload = m.payload.dropRight(3)) else m
     }
@@ -139,7 +140,7 @@ class WarcSpec extends SparkSpec {
     val docs = Seq(
       (0L, "alpha text"), (1L, "beta"), (2L, ""), (3L, "delta longer body"),
       (8L, "ninth doc opens file 1"), (9L, "tenth")).toDF("doc_id", "text")
-    val files = Warc.syntheticWarc(docs, docsPerFile = 8)
+    val files = CrawlFixtures.syntheticWarc(docs, docsPerFile = 8)
     assert(files.count() == 2) // files 0 and 1
     val recs = Warc.parseWarc(files).collect().sortBy(r => (r.media_id, r.record_idx))
     // file 0: warcinfo + 4 responses; file 1: warcinfo + 2
@@ -158,7 +159,7 @@ class WarcSpec extends SparkSpec {
     // caller-supplied uri column wins over the formula
     val withUri = docs.withColumn("uri",
       concat(lit("https://u/"), col("doc_id").cast("string")))
-    val u = Warc.parseWarc(Warc.syntheticWarc(withUri, docsPerFile = 8))
+    val u = Warc.parseWarc(CrawlFixtures.syntheticWarc(withUri, docsPerFile = 8))
       .filter(_.warc_type == "response").collect().map(_.target_uri).sorted
     assert(u.forall(_.startsWith("https://u/")))
   }
@@ -317,7 +318,7 @@ class WarcSpec extends SparkSpec {
       // NOT an HTTP message → quarantines out of httpResponses
       (3L, "just bytes, no status line".getBytes(US_ASCII), "https://a/3"))
       .toDF("doc_id", "payload", "uri")
-    val pages = Warc.decodePages(Warc.parseWarc(Warc.syntheticWarcBytes(rows, docsPerFile = 8)))
+    val pages = Warc.decodePages(Warc.parseWarc(CrawlFixtures.syntheticWarcBytes(rows, docsPerFile = 8)))
       .collect().sortBy(_.record_idx)
     assert(pages.length == 3) // doc 3 dropped
     assert(pages.map(_.encoding).toSeq == Seq("windows-1252", "utf-16le", "utf-8"))
@@ -378,7 +379,7 @@ class WarcSpec extends SparkSpec {
   test("requestResponsePairs: both fetch sides pair via Concurrent-To; orphans drop") {
     import org.apache.spark.sql.functions.col
     val docs = (0L until 10L).map(i => (i, s"body $i")).toDF("doc_id", "text")
-    val recs = Warc.parseWarc(Warc.syntheticWarcRequestPairs(docs, docsPerFile = 8))
+    val recs = Warc.parseWarc(CrawlFixtures.syntheticWarcRequestPairs(docs, docsPerFile = 8))
     val got = Warc.requestResponsePairs(recs)
       .select(col("target"), col("method"), col("host"), col("user_agent"),
         col("status"), col("content_type"))
@@ -398,7 +399,7 @@ class WarcSpec extends SparkSpec {
   test("resolveRevisits: body-less revisits inherit the original's payload; orphans drop") {
     import org.apache.spark.sql.functions.col
     val docs = (0L until 20L).map(i => (i, s"page $i body")).toDF("doc_id", "text")
-    val recs = Warc.parseWarc(Warc.syntheticWarcRevisits(docs, docsPerFile = 8))
+    val recs = Warc.parseWarc(CrawlFixtures.syntheticWarcRevisits(docs, docsPerFile = 8))
     // ids on the residue archived as revisit records with no body
     val raw = recs.collect()
     val revisits = raw.filter(_.warc_type == "revisit")
@@ -421,7 +422,7 @@ class WarcSpec extends SparkSpec {
   test("toCdxj: revisit records index too; warcinfo and request records don't") {
     import org.apache.spark.sql.functions.col
     val docs = (0L until 10L).map(i => (i, s"page $i body")).toDF("doc_id", "text")
-    val lines = Warc.toCdxj(Warc.syntheticWarcRevisits(docs, docsPerFile = 10))
+    val lines = Warc.toCdxj(CrawlFixtures.syntheticWarcRevisits(docs, docsPerFile = 10))
     val byType = lines.groupBy("warc_type").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(byType == Map("response" -> 9L, "revisit" -> 1L))
@@ -432,7 +433,7 @@ class WarcSpec extends SparkSpec {
     assert(rv.getAs[String]("ts") == "20240101000000")
     // pairing corpora: requests never index (no HTTP response to point at)
     val pairLines = Warc.toCdxj(
-      Warc.syntheticWarcRequestPairs(docs, docsPerFile = 10))
+      CrawlFixtures.syntheticWarcRequestPairs(docs, docsPerFile = 10))
     assert(pairLines.select("warc_type").distinct().collect()
       .map(_.getString(0)).toSeq == Seq("response"))
     assert(pairLines.count() == 10)
@@ -453,7 +454,7 @@ class WarcSpec extends SparkSpec {
 
   test("cdxClusterIndex: shards tile the sorted concatenated index byte-for-byte") {
     val docs = (0L until 23L).map(i => (i, s"page $i")).toDF("doc_id", "text")
-    val lines = Warc.toCdxj(Warc.syntheticWarc(docs, docsPerFile = 8))
+    val lines = Warc.toCdxj(CrawlFixtures.syntheticWarc(docs, docsPerFile = 8))
     val idx = Warc.cdxClusterIndex(lines, linesPerShard = 5)
       .collect().sortBy(_.getLong(0))
     assert(idx.length == 5 && idx.map(_.getLong(3)).sum == 23L) // 5+5+5+5+3
@@ -477,8 +478,8 @@ class WarcSpec extends SparkSpec {
   test("randomAccessFetch: two-seek path — only selected shards/containers matter, misses drop, tampering surfaces") {
     val docs = (0L until 40L).map(i => (i, s"page $i")).toDF("doc_id", "text")
     for (gz <- Seq(true, false)) {
-      val media = Warc.syntheticWarc(docs, docsPerFile = 8) // gz toggled below
-      val m = if (gz) media else Warc.syntheticWarcBytes(
+      val media = CrawlFixtures.syntheticWarc(docs, docsPerFile = 8) // gz toggled below
+      val m = if (gz) media else CrawlFixtures.syntheticWarcBytes(
         docs.selectExpr("doc_id", "cast(text as binary) as payload",
           "concat('https://host', doc_id % 20, '.example.com/p/', doc_id) as uri"),
         docsPerFile = 8, gzipPerRecord = false)
@@ -592,7 +593,7 @@ class WarcSpec extends SparkSpec {
     // when bodies outweigh the revisit record's extra headers
     def bodyOf(i: Long) = s"body $i " + ("lorem ipsum " * 40)
     val docs = (0L until 20L).map(i => (i, bodyOf(i))).toDF("doc_id", "text")
-    val prior = Warc.parseWarc(Warc.syntheticWarc(docs, docsPerFile = 8))
+    val prior = Warc.parseWarc(CrawlFixtures.syntheticWarc(docs, docsPerFile = 8))
     val idx = Warc.cdxDigestIndex(prior)
     assert(idx.count() == 20 && idx.columns.toSet ==
       Set("surt_key", "url", "digest", "record_id"))
@@ -656,7 +657,7 @@ class WarcSpec extends SparkSpec {
 
   test("cdxShardFiles: blobs concatenated in shard order ARE the sorted index file the cluster index offsets point into") {
     val docs = (0L until 23L).map(i => (i, s"page $i")).toDF("doc_id", "text")
-    val lines = Warc.toCdxj(Warc.syntheticWarc(docs, docsPerFile = 8))
+    val lines = Warc.toCdxj(CrawlFixtures.syntheticWarc(docs, docsPerFile = 8))
     val idx = Warc.cdxClusterIndex(lines, linesPerShard = 5)
       .collect().sortBy(_.getLong(0))
     val blobs = Warc.cdxShardFiles(lines, linesPerShard = 5)
@@ -682,7 +683,7 @@ class WarcSpec extends SparkSpec {
   test("warcRecordsWithSpans: spans are random-access pointers, gzip and plain") {
     val docs = (0L until 10L).map(i => (i, s"body $i")).toDF("doc_id", "text")
     for (gz <- Seq(true, false)) {
-      val media = Warc.syntheticWarcBytes(
+      val media = CrawlFixtures.syntheticWarcBytes(
         docs.selectExpr("doc_id", "cast(text as binary) as payload",
           "concat('https://h/', doc_id) as uri"),
         docsPerFile = 10, gzipPerRecord = gz).collect().head
@@ -709,7 +710,7 @@ class WarcSpec extends SparkSpec {
   test("resolveRevisits / requestResponsePairs: re-ingested files (duplicate record ids) do not fan out") {
     import org.apache.spark.sql.functions.col
     val docs = (0L until 20L).map(i => (i, s"page $i body")).toDF("doc_id", "text")
-    val media = Warc.syntheticWarcRevisits(docs, docsPerFile = 8)
+    val media = CrawlFixtures.syntheticWarcRevisits(docs, docsPerFile = 8)
     val twice = media.union(media.map(m => m.copy(media_id = m.media_id + 100)))
     val resolved = Warc.resolveRevisits(Warc.parseWarc(twice))
     // 2 copies × (18 responses + 2 revisits): each revisit resolves ONCE
@@ -720,7 +721,7 @@ class WarcSpec extends SparkSpec {
       .select(col("payload").cast("string")).distinct()
       .collect().map(_.getString(0)).sorted.toSeq == Seq("page 16 body", "page 6 body"))
     val docs10 = (0L until 10L).map(i => (i, s"body $i")).toDF("doc_id", "text")
-    val pm = Warc.syntheticWarcRequestPairs(docs10, docsPerFile = 8)
+    val pm = CrawlFixtures.syntheticWarcRequestPairs(docs10, docsPerFile = 8)
     val pmTwice = pm.union(pm.map(m => m.copy(media_id = m.media_id + 100)))
     // 20 requests, each pairing exactly once despite the duplicated ids
     assert(Warc.requestResponsePairs(Warc.parseWarc(pmTwice)).count() == 20)

@@ -7,8 +7,8 @@ Zaversnik by definition: repeatedly remove a minimum-degree node; its
 coreness is the running maximum of the minimum degree seen) — a totally
 different algorithm from the Spark side's distributed h-index fixpoint,
 so agreement is a true cross-implementation check. Prints the
-(coreness, n_nodes, sum_ids) histogram VALUES to embed in
-SparkEntry.oracleSql.
+(coreness, n_nodes, sum_ids) histogram VALUES to embed in the
+query's oracle in its catalog file (src/main/scala/graft/catalog/).
 
 Usage: python3 tools/pin_coreness.py [sf_dir]
 """

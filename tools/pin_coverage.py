@@ -25,7 +25,7 @@ docsets = {int(d): set(w) for d, w in rows}
 
 covered = set()
 total = 0
-print("paste into SparkEntry oracle (VALUES body):")
+print("paste into the query's oracle in src/main/scala/graft/catalog/ (VALUES body):")
 out = []
 for pick in range(1, k + 1):
     best = max(docsets.items(),

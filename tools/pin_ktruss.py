@@ -5,7 +5,7 @@ Rebuilds the co-order part graph from the sf0.01 lineitem parquet, peels
 the 5-truss by DIRECT DEFINITION (recompute per-edge common-neighbor
 support, delete below k-2, repeat to fixpoint — no orientation tricks),
 and prints the (support, n_edges, sum_a, sum_b) histogram VALUES to embed
-in SparkEntry.oracleSql. Because this implementation shares nothing with
+in the query's oracle in its catalog file (src/main/scala/graft/catalog/). Because this implementation shares nothing with
 the Spark one, agreement is a true cross-implementation check.
 
 Usage: python3 tools/pin_ktruss.py [sf_dir] [k]

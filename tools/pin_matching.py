@@ -31,5 +31,5 @@ matched.sort()
 print(f"-- sequential greedy matching over {len(rows)} canonical edges "
       f"-> {len(matched)} matched pairs")
 values = ",\n".join(f"        | ({u}, {v}, {w})" for u, v, w in matched)
-print("paste into SparkEntry oracle (VALUES body):")
+print("paste into the query's oracle in src/main/scala/graft/catalog/ (VALUES body):")
 print(values)

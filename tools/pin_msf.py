@@ -4,7 +4,8 @@
 Rebuilds the weighted co-order part graph ((order, part) deduped, weight
 = 1000000 // co-order count) from the sf0.01 lineitem parquet, runs a
 plain Kruskal union-find MSF, and prints the per-component-size invariant
-rows (n_edges, n_components, sum_weight) to embed in SparkEntry.oracleSql.
+rows (n_edges, n_components, sum_weight) to embed in the query's oracle in
+its catalog file (src/main/scala/graft/catalog/).
 Edge count and total weight per component are invariant across ALL
 correct MSFs (even under weight ties), so agreement with the Spark
 Boruvka is a true cross-implementation check.

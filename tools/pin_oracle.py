@@ -6,7 +6,8 @@ q17_simhash, q20_ann_lsh and q21_embedding_neardup are deterministic
 oracles are the sf0.01 result pinned as a literal
 VALUES table (same contract as q64's Count-Min pin). If seeds, LSH
 parameters, or the testdata ever change, re-run graft.Verify at sf0.01
-and paste this script's output back into SparkEntry.oracleSql.
+and paste this script's output back into the queries' oracles in their
+catalog files (src/main/scala/graft/catalog/).
 NOT part of the shipped library — dev tooling.
 
 Usage: python3 tools/pin_oracle.py /tmp/verify_out
