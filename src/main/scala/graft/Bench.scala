@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): run every SparkEntry query against
   * `SPARK_GRAFT_SF_DIR`, print one JSON line with per-query seconds.
+  * Per-query timing history and adjudications live in
+  * `docs/bench-notes.md`.
   *
   * Each query is forced through a `noop` write — unlike `count()`, that
   * computes every output column (no silent column-pruning shortcuts), which
@@ -48,23 +50,10 @@ object Bench {
     // scratch), so dropping it all between runs is safe — and the System.gc
     // lets the ContextCleaner reap unreferenced checkpoint blocks now
     // instead of mid-measurement.
-    // Scoped to queries that actually LEFT debris: most of the 205 are
-    // cache-free, and paying clearCache + System.gc (~0.1 s) before every
-    // timed run added ~40 s of pure overhead per bench pass. The block
-    // manager tells us directly whether the previous query persisted or
-    // checkpointed anything — evict only then.
-    def evictDebris(): Unit = {
-      val persisted = spark.sparkContext.getPersistentRDDs
-      val cached = !spark.sharedState.cacheManager.isEmpty
-      if (persisted.nonEmpty || cached) {
-        spark.catalog.clearCache()
-        persisted.values.foreach(_.unpersist(blocking = false))
-        System.gc()
-      }
-    }
+    // [[evictDebris]] does it only when the previous query left any.
     def timed(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         deepClean: Boolean = false): Either[String, Double] = {
-      evictDebris()
+      evictDebris(spark)
       if (deepClean) { spark.catalog.clearCache(); System.gc() }
       val r = attempt(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
       r.left.foreach(e => System.err.println(s"[bench] failed: $e"))
@@ -164,50 +153,30 @@ object Bench {
     // also drop the FULL JSON (all per-query timings) at a stable path — the
     // working directory (sbt runs from the project root), overridable via
     // SPARK_GRAFT_BENCH_OUT.
-    // Workload-change provenance so cross-round trend comparisons don't
-    // silently mix different workloads under one query name.
-    val notes =
-      """{"q86_fuzzy_block":"workload changed in round 3 (partkey%2 slice + length-band guard); r3+ timings not comparable to r1/r2",""" +
-        """"q16_minhash_lsh":"round 4 adds exact-Jaccard verification (lshVerifiedPairs); r4+ not comparable to r1-r3 candidates-only",""" +
-        """"q79_triangles":"round 4 switched to degree-ordered orientation (adds two degree joins; bounds power-law wedges)",""" +
-        """"q89_khop":"round 4 adds the maxDegree=64 second-hop cap (inert on this homogeneous graph, binds on power-law); r6's 20.6s adjudicated as host noise — r7 idle-host isolated rerun: 6.56s (r5: 6.35s, 1.03x); r10->r11 5.25->6.95 adjudicated r12: the full q89 path (partPairs + neighborhoodSize + Staging) is byte-identical r10->HEAD per git diff, so a plan regression is impossible - interleaved A/B bands overlap (r10 6.8-7.8, HEAD 7.6-8.2) with the window itself drifting up across reps",""" +
-        """"q125_span_coverage":"r6's 11.3s adjudicated as host noise — r7 idle-host isolated rerun: 2.61s (r5: 3.36s)",""" +
-        """"q130_prefix_jaccard":"r8: idle-host FULL 210-query run times it at 3.4s best-of-2 (code cache, heap, block manager all verified clean in-run), overturning r7's shared-JVM-context adjudication — the r6/r7 43-52s was host contention on both timed windows; r8 adds heavy-tail rescue passes (up to 2 extra deep-cleaned attempts for any query whose best-of-2 exceeds 2.5s, min reported) so two noisy windows can no longer set the score; r12's 5.66 (+27% on unchanged code, flagged to watch) resolved itself r13 WITHOUT any code change to the op: 2.39s in r13's full run — window drift both directions, exactly the r12 attempt-vector [22.7, 14.0, 12.5, 4.5] noise class, no adjudication warranted for a downward move; r15's 2.95 (+42% on a path the r15 diff provably never touched) adjudicated r16 by interleaved same-window worktree A/B (r14 jar 1de26ee vs r15 tip, 5 alternating reps, per-rep floors): r14 [2.29, 2.02, 2.45, 3.75, 3.94] vs HEAD [2.32, 3.30, 4.11, 2.64, 2.33] - bands overlap completely with NO consistent ordering (r14 floored ABOVE HEAD in reps 4-5, and r14's own attempt vectors carried 23.4s and 49.6s spikes), so the r15 number was window inflation; floor-of-floors r14 2.02 vs HEAD 2.32",""" +
-        """"q23_ivf_ann":"r15's 1.46 (+28% on an untouched path) adjudicated r16 by the same interleaved A/B protocol as q130 (5 alternating reps, per-rep floors): r14 [0.98, 1.07, 1.04, 1.02, 1.35] vs HEAD [1.05, 1.05, 1.16, 1.08, 1.03] - overlapping bands (r14's rep-5 floor sits above every HEAD rep), floor-of-floors 0.98 vs 1.03 (+5%, inside rep-to-rep spread): window noise, no regression",""" +
-        """"q4_enrich_join":"r15's 0.34 (+26% on an untouched path) adjudicated r16 by the same interleaved A/B: r14 [0.39, 0.335, 0.40, 0.36, 0.42] vs HEAD [0.37, 0.49, 0.39, 0.40, 0.41] - floors 0.335 vs 0.373 with fully overlapping bands: window noise, no regression (the broadcast enrich plan is byte-identical)",""" +
-        """"q69_pagerank":"cold-JVM timings overstate its scaling (10x data appeared 33x until profiled warm per-phase: linear); ScaleSmoke warms every query untimed at sf0.01 before timing sf1; the r9-r11 2.70->3.50->5.21 rise adjudicated r12 by interleaved same-host A/B (r10 worktree vs HEAD, 3 reps): r10's own code timed 6.4-6.5s flat in today's window (1.8x its recorded 3.50) while HEAD floored at 4.37s - host-window drift, HEAD faster on equal footing",""" +
-        """"q106_rfm":"round 7 replaces the three global ntile windows with denseIds two-phase ranking (range repartition + 3 localCheckpoint jobs) — scale-correct shape, slightly more fixed overhead at bench scale",""" +
-        """"q170_coverage_curve":"round 7 replaces the global vocabulary rank window with a range-partitioned two-phase scan (rankedPrefixSum)",""" +
-        """"q211_damerau_pairs":"r9 attempt vector [2.83, 2.76, 2.89, 2.84] proves ~2.8s is the real kernel cost, not noise — it motivated r10's variance-aware rescue, later refined in-round: a pure pass1/pass2 gate turned out to also skip queries whose agreeing pair sits far above the floor (same-window A/B: q69 [6.9, 6.4, 6.7, 4.0] — only the last deep-cleaned attempt finds 4.0), so heavy queries now always take one deep-cleaned attempt and the gate only waives the fourth (flat triple recorded in rescue_skipped_stable)",""" +
-        """"q318_pack_nextfit":"~4-6s at sf0.1 is mostly fixed scheduling latency (the O(log windows) orbit-doubling rounds each stage + count tiny frames), not data cost — the same loop at 10x data adds ~1 round (sf1 smoke: 14.5s at 10x, sublinear); capacity went 256 -> 1024 in-round for scaled-corpus headroom, which also shrank the orbit",""" +
-        """"q392_bpe_pack_nextfit":"the composition of two known scheduling-latency classes by construction: the q135 BPE trainer's driver election rounds (16 merges at batch 8 = ~2 vocabulary aggregations) feeding q318's orbit-doubling next-fit loop — its ~5.7s is q318's ~4.8s plus the trainer rounds, and both constituents carry their own scaling adjudications (q318 sublinear at 10x; the trainer is vocabulary-sized per round)",""" +
-        """"q266_harmonic":"r10 full-run elevation across ALL heavy queries (q69 4.1 vs r9 2.7, q89 5.4 vs 4.4, q266 5.8 vs 4.8) adjudicated as host drift by a same-window A/B: identical harness, same hour, r10 code q69 3.11s / q89 4.53s / q54 1.34s vs r9 code 3.58 / 5.10 / 1.47 — the r10 staging (capped-stats leaf) is FASTER than r9 on equal footing; cross-round absolute totals are not comparable across host windows (keyed here under q266 to keep workload_notes one-key-per-query: q69/q89 carry their own earlier notes); r13's 44.4s sf1 tail entry asked for a 20x scaling verdict and r14 ran the q311-idiom probe: SAME-WINDOW interleaved spark-submit runs (10x/20x/10x/20x on disjoint replica sets, per-scale floors) timed 9.7s at 10x vs 10.8s at 20x — 1.11x for 2x data, SUBLINEAR, so the maxDegree=64-capped radius-2 wedge join needs no further bounding; the 44.4s full-run number was the usual full-suite window inflation (isolated floor 9.7s same code); r16 adjudicated the r15 WHOLE-SUITE +9.8% per-query rise by full-suite pairs run in BOTH orders (r14 jar vs r15-tip jar, sf0.1, shared-402 totals): r14-first pair r14 454.8 / head 495.4 (+8.9%), head-first pair head 422.3 / r14 431.3 (+2.1% r14-slower) - the SECOND run of a pair is slower in both orders (the window degrades over a ~70-min pair), and per-jar floor-of-two totals land r14 420.4 vs head 416.6 (head 0.9% FASTER on equal footing): the r15 rise was window drift, no code regression anywhere in the suite",""" +
-        """"q305_spanning_forest":"r11's 7.66 vs r9's 6.33 adjudicated r12 by the same interleaved A/B: floors within 5.6% (r10 code 8.05 vs HEAD 8.50) and BOTH above r11's recorded number - window drift; the batched pointer-doubling contraction is unchanged",""" +
-        """"q324_scc":"~4.5s at sf0.1 is fixed per-round scheduling latency (trim 3 rounds + coloring 3 + backward reach 3, each a staged tiny frame + limit-1 probe — ~30 small jobs), not data cost; the round COUNT is set by the fixture's graph structure, not its size, so 10x data reruns the same rounds with fatter partitions (sf1 smoke point). Attempt vectors are flat (4.5-4.6s) — a real floor, same class as q318's orbit loop",""" +
-        """"q325_scc_condensation":"recomputes q324's SCC labeling end-to-end (driver queries are independent by contract) plus two label joins — its time is q324 + epsilon by construction",""" +
-        """"q330_dbscan":"~6s at sf0.1: the sf0.1 point cloud is 10x denser than sf0.01 at the same eps (lambda ~29 eps-neighbors vs ~3), so nearly every point is core and connectedComponents runs over one giant ~15k-node eps-component — the large-star/small-star rounds are the cost, not the grid-blocked pair join (q213's shape, ~1.8s). The constituent shapes both carry sf1 smoke points (q54 components, q213 banded radius join); a 10x dbscan point at constant eps would measure densification (~100x pairs), not data scaling — the same reason q213 smokes banded",""" +
-        """"q328_dag_layers":"longest-path fixpoint rounds = DAG depth, which grows with log(max doc id) — sf0.1's halving chains are ~9 deep, so ~9 staged join/probe rounds of tiny frames: scheduling latency, q318/q324's class; attempt tail [3.7, 3.2] is the floor",""" +
-        """"q341_greedy_matching":"locally-minimal-edge rounds: the round count is set by the edge-order dependency structure (~matching depth), not data size — the 120-node fixture needs the same rounds at every sf while per-round frames stay tiny; q318/q324/q328's scheduling-latency class",""" +
-        """"q352_weighted_pagerank":"structurally ~1.5x q69: the same 3-iteration loop plus a weight FOLD (groupBy over the orders-lineitem join output, staged) and a wsum join that q69 does not pay; in-round r12 A/B found the original standalone weight probe double-executing the upstream join (8.95 -> 7.1s after fusing the probe into the fold), and contribution math picks Long vs decimal from the n*scale*d*maxW mass bound",""" +
-        """"q407_corpus_composite":"the flagship day-one chain (.warc.gz -> record framing -> HTTP split with wire-coding decode -> charset -> main content -> SimHash candidates verified by exact text -> BPE token-exact packing) measured as ONE job so the multiplied constants a user actually experiences have a number: r15 same-window interleaved spark-submit probes (10x/20x/10x/20x on disjoint replica sets, per-scale floors) timed 32.5s at 10x vs 39.0s at 20x - 1.20x for 2x data, STRONGLY SUBLINEAR (the chain is map-dominated: container/HTTP/charset/main-content are per-row compute, the only shuffles are the dedup band join and the packer prefix-sum, and the trainer's fixed election rounds amortize); dedup is candidates-then-VERIFY because raw 64-bit simhash equality over-collapses - a live collision between two similar-but-distinct docs was observed at sf0.01 and is vetoed by the text-equality verify stage",""" +
-        """"q419_lang_quality_gate":"r16 same-window interleaved 10x/20x probes (per-scale floors, disjoint replica sets): 17.8s at 10x vs 18.0s at 20x - 1.01x for 2x data, STRONGLY SUBLINEAR at probe scale because the chain's fixed term dominates (staging the lang frame + the grouped-KN stage count; the 10x attempt vector [17.8, 38.9] shows the usual window noise - floors are the read); the honest asymptotic model is q414's (linear in the doc-bigram stream - both tables scale with data) plus that fixed term, so expect the q414 slope once data swamps the stages; in-round staging adjudication: computing the lang-ID column once (Staging.stage) instead of per-branch took the sf0.1 floor 11.9 -> 9.0s, and the same aliasing discipline took q415 4.95 -> 0.46s and q421 11.0 -> 1.6s (Catalyst inlines non-cheap aliases per REFERENCE inside nested HOF folds)",""" +
-        """"q422_discovery_frontier":"r16 same-window interleaved 10x/20x probes (per-scale floors): 12.7s at 10x vs 14.7s at 20x - 1.15x for 2x data, SUBLINEAR: the sitemap/feed file sets are frontier metadata (scale-constant broadcast sides), only the page-side channels and the count fold grow with data",""" +
-        """"q423_cdx_cluster_idx":"r16 same-window interleaved 10x/20x probes (per-scale floors): 2.9s at 10x vs 3.3s at 20x - 1.15x for 2x data, sublinear; the range-partitioned two-phase sort and the container walk both scale with rows while the shard fold stays shard-count-sized",""" +
-        """"q424_random_access":"r17 same-window interleaved 10x/20x probes (per-scale floors, disjoint replica sets, both orders): 5.35s at 10x vs 5.96s at 20x - 1.11x for 2x data, SUBLINEAR: the cluster-index lookup is a broadcast against a shard-count-sized frame, shard parsing touches only the shards the query set selects, and container payloads move once per referenced file; what grows with data is the index build (q423's shape) and the queried span set",""" +
-        """"q426_revisit_emit":"r17 same-window interleaved 10x/20x probes (per-scale floors, disjoint replica sets, both orders): 5.64s at 10x vs 6.19s at 20x - 1.10x for 2x data, SUBLINEAR: the digest index is metadata-sized (payloads never survive its projection), emitRevisits' one shuffle keys captures on the surt key, and the resolve join moves prior payloads only for records that revisits actually reference (q409's class, with the container build's fixed stages amortizing)",""" +
-        """"q432_archive_media_triage":"r17 same-window interleaved 10x/20x probes (per-scale floors, both orders): 2.04s at 10x vs 2.05s at 20x - 1.00x for 2x data at probe scale, the fixed container/HTTP/sniff stage costs dominating; the honest asymptotic model is linear in archived bodies (every stage is per-row map work, no shuffle anywhere in the chain)",""" +
-        """"q414_lm_fluency":"r15 same-window interleaved 10x/20x probes (per-scale floors): 3.63s at 10x vs 7.38s at 20x - 2.03x for 2x data, LINEAR and honestly so: the doc-bigram stream and the replica-disjoint vocabulary both scale with the data, the KN table join is vocabulary-sized on both sides, and there is no fixed-cost term to amortize; at-or-below-linear is the smoke's bar and linear is the true cost model for this shape (the 20x attempt vector [15.2, 7.4] shows the usual window noise - floors are the read)",""" +
-        """"q409_warc_revisit":"r15 same-window interleaved 10x/20x probes (per-scale floors): 1.93s at 10x vs 2.25s at 20x - 1.16x for 2x data, sublinear; the record-id shuffle join moves payloads once and only for referenced records",""" +
-        """"q411_template_removal":"r15 same-window interleaved 10x/20x probes (per-scale floors): 1.08s at 10x vs 1.37s at 20x - 1.27x for 2x data, sublinear; the frequency table shuffles (host, line-hash, doc_id) only - line bodies move once into the doc-order rebuild - and replica-prefixed vocabularies keep per-host line populations disjoint across replicas (10x pages = 10x lines, never denser hosts)",""" +
-        """"q311_temporal_reach":"r12 flagged the worst 10x scaler (4.4x) and asked for a 20x point; r13 ran one: SAME-WINDOW spark-submit probes (interleaved host window, replicas=10 then 20 on disjoint replica sets) timed 79.7s at 10x vs 141.4s at 20x - 1.77x for 2x data, SUBLINEAR, so the dense bipartite frontier needs no bounding; the r12 35.5s 10x point was a faster host window (today's window times everything ~2x up, the known multi-x drift), which is why the 20x probe was paired with its own 10x control instead of read against the recorded number",""" +
-        """"q345_greedy_coverage":"k=10 SEQUENTIAL greedy rounds (each pick depends on the previous cover — inherent to submodular greedy), each an anti-join over the staged bigram-pair table + a distributed top-1 + a one-row fetch: ~4 jobs x 10 rounds of scheduling latency; the per-round data cost is one pass over (id, bigram) pairs, linear in corpus"}"""
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${toJson(results)},"n_failed":${failed.size},"failed":$failedJson,"rescue_attempts":$rescueJson,"rescue_skipped_stable":${vecJson(skippedStable)},"workload_notes":$notes,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${toJson(results)},"n_failed":${failed.size},"failed":$failedJson,"rescue_attempts":$rescueJson,"rescue_skipped_stable":${vecJson(skippedStable)},"sf":"$sfDir"}"""
     val benchOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       java.nio.file.Paths.get(sys.props("user.dir"), "bench_last.json").toString)
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(benchOut), fullLine + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] mirror write to $benchOut failed: ${e.getMessage}") }
     spark.stop()
+  }
+
+  /** Drops what the previous query left in the block manager: cached
+    * relations and persisted or localCheckpoint'd RDDs. Scoped to queries
+    * that actually LEFT debris: most queries are cache-free, and paying
+    * clearCache + System.gc (~0.1 s) before every timed run added ~40 s
+    * of pure overhead per bench pass. The block manager tells us directly
+    * whether the previous query persisted or checkpointed anything —
+    * evict only then.
+    */
+  def evictDebris(spark: SparkSession): Unit = {
+    val persisted = spark.sparkContext.getPersistentRDDs
+    if (persisted.nonEmpty || !spark.sharedState.cacheManager.isEmpty) {
+      spark.catalog.clearCache()
+      persisted.values.foreach(_.unpersist(blocking = false))
+      System.gc()
+    }
   }
 
   /** Times one run. A run that throws is a failure — its message, never a

@@ -37,7 +37,7 @@ object DocsGen {
     val oracles = SparkEntry.oracleSql
     val names = oracles.keys.toSeq.sortBy(n => split(n)._1)
     val rows = names.map { n =>
-      s"| `$n` | ${split(n)._2} | hash | ${tablesOf(oracles(n)).mkString(", ")} |"
+      s"| `$n` | ${split(n)._2} | ${tablesOf(oracles(n)).mkString(", ")} |"
     }
     // rows are appended AFTER stripMargin — their leading table pipes
     // would otherwise be eaten as margin characters
@@ -46,9 +46,9 @@ object DocsGen {
        |GENERATED by `sbt 'runMain graft.DocsGen'` from `SparkEntry.queries`
        |and `SparkEntry.oracleSql` — do not edit by hand (`DocsDriftSpec`
        |regenerates and diffs this file). Each row is one driver-verified
-       |query: *check* `hash` means the DuckDB oracle compares rows, schema
-       |and a value hash; *tables* lists the testdata tables the oracle
-       |reads (navigation metadata derived from the SQL). Implementations
+       |query, whose rows, schema and value hash the DuckDB oracle checks;
+       |*tables* lists the testdata tables the oracle reads (navigation
+       |metadata derived from the SQL). Implementations
        |live in `src/main/scala/graft/ops/` — grep the query key in
        |`src/main/scala/graft/catalog/` for the exact operator call, its
        |scaladoc and its oracle.
@@ -56,7 +56,7 @@ object DocsGen {
        |${names.size} queries, ${names.size} hash-oracled.
        |
        |""".stripMargin +
-      "| query | operator | check | tables |\n|---|---|---|---|\n" +
+      "| query | operator | tables |\n|---|---|---|\n" +
       rows.mkString("", "\n", "\n")
   }
 

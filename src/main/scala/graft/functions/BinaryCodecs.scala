@@ -47,24 +47,57 @@ object BinaryCodecs {
     buf.array()
   }
 
-  /** (width, height) if the payload is a parseable BMP, else None. The
-    * 2-byte magic alone is far too weak (any text starting with "BM"
-    * matches), so the fixed header fields already in hand are validated
-    * too: BITMAPINFOHEADER size, plane count, and a legal bit depth.
+  /** The BITMAPFILEHEADER + BITMAPINFOHEADER fields the BMP readers
+    * here use: pixel-array offset, width, signed height (negative =
+    * top-down rows), bit depth and compression.
     */
-  def bmpDimensions(payload: Array[Byte]): Option[(Int, Int)] =
+  private final case class BmpHeader(
+      dataOff: Int, width: Int, height: Int, bpp: Int, compression: Int)
+
+  private val LegalBmpBpp = Set[Short](1, 4, 8, 16, 24, 32)
+
+  /** The one BMP header read. The 2-byte magic alone is far too weak
+    * (any text starting with "BM" matches), so the fixed header fields
+    * are validated too: BITMAPINFOHEADER size, plane count, a legal bit
+    * depth, a positive width and a nonzero height.
+    */
+  private def bmpHeader(payload: Array[Byte]): Option[BmpHeader] =
     if (payload.length < 54 || payload(0) != 'B' || payload(1) != 'M') None
     else {
       val buf = ByteBuffer.wrap(payload).order(ByteOrder.LITTLE_ENDIAN)
-      val dibSize = buf.getInt(14)
       val w = buf.getInt(18)
       val h = buf.getInt(22)
-      val planes = buf.getShort(26)
       val bpp = buf.getShort(28)
-      val legalBpp = Set[Short](1, 4, 8, 16, 24, 32)
-      if (dibSize == 40 && planes == 1 && legalBpp(bpp) && w > 0 && h != 0)
-        Some((w, math.abs(h))) // negative h = top-down
+      if (buf.getInt(14) == 40 && buf.getShort(26) == 1 && LegalBmpBpp(bpp) &&
+        w > 0 && h != 0)
+        Some(BmpHeader(buf.getInt(10), w, h, bpp, buf.getInt(30)))
       else None
+    }
+
+  /** (width, height) if the payload is a parseable BMP of any legal bit
+    * depth and row order, else None.
+    */
+  def bmpDimensions(payload: Array[Byte]): Option[(Int, Int)] =
+    bmpHeader(payload).map(hd => (hd.width, math.abs(hd.height)))
+
+  /** A 24bpp uncompressed bottom-up BMP as a zero-copy [[Raster]] over
+    * its payload: BGR, padded rows, top image row stored last (so the
+    * stride is negative). None for any other BMP, and when the padded
+    * rows overrun the payload.
+    */
+  private[graft] def bmpRaster(payload: Array[Byte]): Option[Raster] =
+    bmpHeader(payload).flatMap { hd =>
+      // rowSize in Long: a crafted header with w ≳ 89.5M wraps 24*w
+      // negative in Int, which would pass the bounds check and crash the
+      // pixel walk
+      val rowSizeL = ((24L * hd.width + 31) / 32) * 4
+      if (hd.bpp != 24 || hd.compression != 0 || hd.height < 0 || hd.dataOff < 54 ||
+        hd.dataOff.toLong + rowSizeL * hd.height > payload.length) None
+      else {
+        val rowSize = rowSizeL.toInt // safe: bounded by payload.length above
+        Some(Raster(hd.width, hd.height, 3, payload,
+          hd.dataOff + (hd.height - 1) * rowSize, -rowSize, bgr = true))
+      }
     }
 
   // ---------------------------------------------------------------- WAV --
@@ -1051,8 +1084,12 @@ object BinaryCodecs {
     * in version 0 and 64-bit in version 1.
     */
   private def bmffU(payload: Array[Byte], off: Long, v: Int): Long =
-    if (v == 0) ByteBuffer.wrap(payload).getInt(off.toInt).toLong & 0xFFFFFFFFL
+    if (v == 0) bmffU32(payload, off)
     else ByteBuffer.wrap(payload).getLong(off.toInt)
+
+  /** The unsigned big-endian 32-bit field at `off`. */
+  private def bmffU32(payload: Array[Byte], off: Long): Long =
+    ByteBuffer.wrap(payload).getInt(off.toInt).toLong & 0xFFFFFFFFL
 
   /** ISO-BMFF (MP4/MOV) metadata — the moov/mvhd/trak/tkhd/mdhd/hdlr/
     * stsd/stts walk, metadata only, no codec decode (frame EXTRACTION
@@ -1145,6 +1182,28 @@ object BinaryCodecs {
         mts, delta, n)
     }
 
+  /** The `stbl` box of the first `vide` track — the walk [[mp4Samples]]
+    * and [[mp4SyncSamples]] share: `ftyp` lead box, then `moov`, the
+    * first `trak` whose `hdlr` names `vide`, then mdia/minf/stbl. None
+    * when any step is missing or malformed.
+    */
+  private def mp4VideoStbl(payload: Array[Byte]): Option[(String, Long, Long)] = {
+    if (payload.length < 12 ||
+      new String(payload, 4, 4, "US-ASCII") != "ftyp") return None
+    for {
+      top <- bmffBoxes(payload, 0L, payload.length.toLong)
+      moov <- top.find(_._1 == "moov")
+      kids <- bmffBoxes(payload, moov._2, moov._3)
+      trak <- kids.filter(_._1 == "trak").find(t =>
+        bmffChild(payload, t, "mdia").flatMap(bmffChild(payload, _, "hdlr"))
+          .exists(h => h._3 - h._2 >= 12 &&
+            new String(payload, h._2.toInt + 8, 4, "US-ASCII") == "vide"))
+      stbl <- bmffChild(payload, trak, "mdia")
+        .flatMap(bmffChild(payload, _, "minf"))
+        .flatMap(bmffChild(payload, _, "stbl"))
+    } yield stbl
+  }
+
   /** The requested video samples (by 0-based index, returned as
     * (index, bytes) in index order) from the first `vide` track's
     * stsz/stsc/stco sample tables — [[aviFrames]]' ISO-BMFF twin, one
@@ -1162,25 +1221,12 @@ object BinaryCodecs {
   def mp4Samples(
       payload: Array[Byte], indices: Seq[Int]): Option[Seq[(Int, Array[Byte])]] = {
     val wanted = indices.filter(_ >= 0).toSet
-    if (payload.length < 12 ||
-      new String(payload, 4, 4, "US-ASCII") != "ftyp") return None
-    val buf = ByteBuffer.wrap(payload)
-    def u32(off: Long): Long = buf.getInt(off.toInt).toLong & 0xFFFFFFFFL
     for {
-      top <- bmffBoxes(payload, 0L, payload.length.toLong)
-      moov <- top.find(_._1 == "moov")
-      kids <- bmffBoxes(payload, moov._2, moov._3)
-      trak <- kids.filter(_._1 == "trak").find(t =>
-        bmffChild(payload, t, "mdia").flatMap(bmffChild(payload, _, "hdlr"))
-          .exists(h => h._3 - h._2 >= 12 &&
-            new String(payload, h._2.toInt + 8, 4, "US-ASCII") == "vide"))
-      stbl <- bmffChild(payload, trak, "mdia")
-        .flatMap(bmffChild(payload, _, "minf"))
-        .flatMap(bmffChild(payload, _, "stbl"))
+      stbl <- mp4VideoStbl(payload)
       stsz <- bmffChild(payload, stbl, "stsz")
       if stsz._3 - stsz._2 >= 12
-      uniform = u32(stsz._2 + 4)
-      nSamples = u32(stsz._2 + 8)
+      uniform = bmffU32(payload, stsz._2 + 4)
+      nSamples = bmffU32(payload, stsz._2 + 8)
       // EVERY count must be bounded before it drives allocation: the
       // per-sample leg by its own box, the uniform leg by the file
       // itself (uniform·count bytes of samples cannot exceed it)
@@ -1188,13 +1234,14 @@ object BinaryCodecs {
         (if (uniform == 0L) 12L + 4L * nSamples <= stsz._3 - stsz._2
          else uniform * nSamples <= payload.length)
       sizes = (0 until nSamples.toInt).map(i =>
-        if (uniform != 0L) uniform else u32(stsz._2 + 12 + 4L * i))
+        if (uniform != 0L) uniform else bmffU32(payload, stsz._2 + 12 + 4L * i))
       stsc <- bmffChild(payload, stbl, "stsc")
       if stsc._3 - stsc._2 >= 8
-      nRuns = u32(stsc._2 + 4)
+      nRuns = bmffU32(payload, stsc._2 + 4)
       if 8L + 12L * nRuns <= stsc._3 - stsc._2
       runs = (0 until nRuns.toInt).map(i =>
-        (u32(stsc._2 + 8 + 12L * i), u32(stsc._2 + 12 + 12L * i)))
+        (bmffU32(payload, stsc._2 + 8 + 12L * i),
+          bmffU32(payload, stsc._2 + 12 + 12L * i)))
       if runs.nonEmpty && runs.head._1 == 1L &&
         runs.sliding(2).forall(w => w.length < 2 || w(0)._1 < w(1)._1) &&
         // upper bound matters too: a u32 samples-per-chunk past
@@ -1205,11 +1252,11 @@ object BinaryCodecs {
         .orElse(bmffChild(payload, stbl, "co64").map((_, true)))
       (coBox, wide) = co
       if coBox._3 - coBox._2 >= 8
-      nChunks = u32(coBox._2 + 4)
+      nChunks = bmffU32(payload, coBox._2 + 4)
       if 8L + (if (wide) 8L else 4L) * nChunks <= coBox._3 - coBox._2
       offsets = (0 until nChunks.toInt).map(i =>
-        if (wide) buf.getLong((coBox._2 + 8 + 8L * i).toInt)
-        else u32(coBox._2 + 8 + 4L * i))
+        if (wide) ByteBuffer.wrap(payload).getLong((coBox._2 + 8 + 8L * i).toInt)
+        else bmffU32(payload, coBox._2 + 8 + 4L * i))
       res <- mp4ExtractSpans(payload, sizes, runs, offsets, wanted)
     } yield res
   }
@@ -1222,28 +1269,14 @@ object BinaryCodecs {
     * "every sample is a sync sample", so callers fall back to
     * all-samples sampling, never to a guess.
     */
-  def mp4SyncSamples(payload: Array[Byte]): Option[Vector[Long]] = {
-    if (payload.length < 12 ||
-      new String(payload, 4, 4, "US-ASCII") != "ftyp") return None
-    val buf = ByteBuffer.wrap(payload)
-    def u32(off: Long): Long = buf.getInt(off.toInt).toLong & 0xFFFFFFFFL
+  def mp4SyncSamples(payload: Array[Byte]): Option[Vector[Long]] =
     for {
-      top <- bmffBoxes(payload, 0L, payload.length.toLong)
-      moov <- top.find(_._1 == "moov")
-      kids <- bmffBoxes(payload, moov._2, moov._3)
-      trak <- kids.filter(_._1 == "trak").find(t =>
-        bmffChild(payload, t, "mdia").flatMap(bmffChild(payload, _, "hdlr"))
-          .exists(h => h._3 - h._2 >= 12 &&
-            new String(payload, h._2.toInt + 8, 4, "US-ASCII") == "vide"))
-      stbl <- bmffChild(payload, trak, "mdia")
-        .flatMap(bmffChild(payload, _, "minf"))
-        .flatMap(bmffChild(payload, _, "stbl"))
+      stbl <- mp4VideoStbl(payload)
       stss <- bmffChild(payload, stbl, "stss")
       if stss._3 - stss._2 >= 8
-      n = u32(stss._2 + 4)
+      n = bmffU32(payload, stss._2 + 4)
       if 8L + 4L * n <= stss._3 - stss._2
-    } yield (0 until n.toInt).map(i => u32(stss._2 + 8 + 4L * i)).toVector
-  }
+    } yield (0 until n.toInt).map(i => bmffU32(payload, stss._2 + 8 + 4L * i)).toVector
 
   /** The chunk-expansion loop behind [[mp4Samples]]: walk the stsc runs
     * chunk by chunk, resolve each sample's absolute span, copy the
@@ -1638,31 +1671,84 @@ object BinaryCodecs {
   def pngDimensions(payload: Array[Byte]): Option[(Int, Int)] =
     pngWalk(payload, 1 << 26).map { case (w, h, _, _) => (w, h) }
 
-  /** Integer-exact per-channel pixel sums from a PNG payload — the
-    * [[bmpPixelStats]] twin for the format web images actually use,
-    * returned in the SAME (Σblue, Σgreen, Σred) order so the two feed
-    * one stats frame (PNG stores RGB; the sums swap accordingly). RGBA
-    * alpha is excluded — stats are color statistics.
-    */
-  def pngPixelStats(payload: Array[Byte]): Option[(Int, Int, Long, Long, Long)] =
-    pngDecode(payload).map { case (w, h, ch, px) =>
-      var sumR = 0L; var sumG = 0L; var sumB = 0L
-      var i = 0
-      while (i < px.length) {
-        sumR += px(i) & 0xff
-        sumG += px(i + 1) & 0xff
-        sumB += px(i + 2) & 0xff
-        i += ch
-      }
-      (w, h, sumB, sumG, sumR)
-    }
+  // -------------------------------------------------------------- IMAGE --
 
-  /** The 9×8-grid 64-bit difference hash shared by [[bmpDhash]] and
-    * [[pngDhash]] — one implementation of the grid walk, two gray
-    * accessors, so the two formats CANNOT fingerprint differently on
-    * identical pixels (the transcode-identity invariant q389 pins).
+  /** A decoded image as the image ops read it: pixel (x, y), top row
+    * first, starts at byte `top + y·stride + channels·x` of `bytes`.
+    * `channels` is 1 (gray), 3, or 4 (alpha last, never read); `bgr`
+    * names the order of the three color bytes. A BMP raster is a
+    * zero-copy view over its payload ([[bmpRaster]]); PNG, JPEG and GIF
+    * rasters wrap their decoders' top-down RGB/RGBA/gray arrays.
     */
-  private def dhash64(w: Int, h: Int, gray: (Int, Int) => Int): Long = {
+  final case class Raster(
+      width: Int, height: Int, channels: Int, bytes: Array[Byte],
+      top: Int, stride: Int, bgr: Boolean)
+
+  private def topDownRaster(decoded: (Int, Int, Int, Array[Byte])): Raster = {
+    val (w, h, ch, px) = decoded
+    Raster(w, h, ch, px, 0, ch * w, bgr = false)
+  }
+
+  /** The payload's pixels, trying 24bpp BMP, PNG, JPEG (baseline or
+    * progressive) and GIF (the background-composited first frame) in
+    * that order; None when none of them parses.
+    */
+  def decodeImage(payload: Array[Byte]): Option[Raster] =
+    bmpRaster(payload)
+      .orElse(pngDecode(payload).map(topDownRaster))
+      .orElse(JpegCodec.decode(payload).map(topDownRaster))
+      .orElse(gifDecode(payload).map(topDownRaster))
+
+  /** Byte offsets of red, green and blue within one pixel (all three 0
+    * for gray, so a gray pixel reads as (v, v, v)).
+    */
+  private def rgbOffsets(img: Raster): (Int, Int, Int) =
+    if (img.channels == 1) (0, 0, 0) else if (img.bgr) (2, 1, 0) else (0, 1, 2)
+
+  /** Integer-exact per-channel pixel sums (Σblue, Σgreen, Σred), bytes
+    * read unsigned, row padding and alpha excluded; a gray pixel counts
+    * as (v, v, v). Exact in 64-bit (255·w·h overflows only past
+    * ~3.6×10¹⁶ pixels).
+    */
+  def pixelStats(img: Raster): (Long, Long, Long) = {
+    val (ro, go, bo) = rgbOffsets(img)
+    val px = img.bytes
+    var sumB = 0L
+    var sumG = 0L
+    var sumR = 0L
+    var y = 0
+    while (y < img.height) {
+      var p = img.top + y * img.stride
+      val end = p + img.channels * img.width
+      while (p < end) {
+        sumB += px(p + bo) & 0xff
+        sumG += px(p + go) & 0xff
+        sumR += px(p + ro) & 0xff
+        p += img.channels
+      }
+      y += 1
+    }
+    (sumB, sumG, sumR)
+  }
+
+  /** 64-bit DIFFERENCE HASH (dHash) — the classic perceptual
+    * near-duplicate fingerprint: sample a 9×8 grayscale grid
+    * (nearest-neighbor at cell centers — integer-exact for ANY source
+    * size, where a block average would need w ≥ 9), and set bit
+    * (row·8 + col) when gray(col, row) < gray(col+1, row). Gray =
+    * (R + G + B) div 3, bytes unsigned, so identical pixels fingerprint
+    * identically in every format (the transcode-identity invariant q389
+    * pins). Only the 72 grid samples are read.
+    */
+  def dhash(img: Raster): Long = {
+    val (ro, go, bo) = rgbOffsets(img)
+    val px = img.bytes
+    def gray(x: Int, y: Int): Int = {
+      val p = img.top + y * img.stride + img.channels * x
+      ((px(p + ro) & 0xff) + (px(p + go) & 0xff) + (px(p + bo) & 0xff)) / 3
+    }
+    val w = img.width
+    val h = img.height
     var hash = 0L
     var cy = 0
     while (cy < 8) {
@@ -1679,167 +1765,80 @@ object BinaryCodecs {
     hash
   }
 
-  /** The dHash grid over an already-decoded top-down pixel array
-    * (1 = gray, 3 = RGB, 4 = RGBA; gray of a 1-channel pixel is the
-    * pixel) — the shared back half of [[pngDhash]] and the JPEG path.
+  /** Integer nearest-neighbor resample into `out`: target pixel (X, Y)
+    * copies source pixel (⌊X·w/tw⌋, ⌊Y·h/th⌋) verbatim (no blending, so
+    * any engine replays every output byte from the decoded input), as
+    * three bytes in BGR or RGB order per `bgr` (gray replicated, alpha
+    * dropped), target row Y starting at `top + Y·stride`.
     */
-  private[graft] def pixelsDhash(w: Int, h: Int, ch: Int, px: Array[Byte]): Long =
-    dhash64(w, h, (x, y) => {
-      val p = ch * (y * w + x)
-      if (ch == 1) px(p) & 0xff
-      else ((px(p) & 0xff) + (px(p + 1) & 0xff) + (px(p + 2) & 0xff)) / 3
-    })
-
-  /** [[bmpDhash]] for PNG payloads: same grid, same gray ((R+G+B) div 3
-    * is channel-order-free), pixels already top-down. Returns
-    * (width, height, dhash); None on unsupported payloads.
-    */
-  def pngDhash(payload: Array[Byte]): Option[(Int, Int, Long)] =
-    pngDecode(payload).map { case (w, h, ch, px) =>
-      (w, h, pixelsDhash(w, h, ch, px))
-    }
-
-  /** JPEG → PNG transcode: the REAL baseline JPEG decode
-    * ([[JpegCodec.decode]]) re-emitted losslessly-from-decode as RGB
-    * PNG (gray planes expand to R = G = B) — the third leg of
-    * format normalization at ingest, and the right thumbnail route for
-    * JPEG inputs (re-encoding a tiny thumbnail lossily would stack a
-    * second generation loss). None on unsupported payloads.
-    */
-  def jpegToPng(payload: Array[Byte]): Option[Array[Byte]] =
-    JpegCodec.decode(payload).flatMap { case (w, h, ch, px) =>
-      if (3L * w * h + h > Int.MaxValue - 64) None
-      else {
-        val rgb =
-          if (ch == 3) px
-          else {
-            val out = new Array[Byte](3 * w * h)
-            var i = 0
-            while (i < w * h) {
-              out(3 * i) = px(i); out(3 * i + 1) = px(i); out(3 * i + 2) = px(i)
-              i += 1
-            }
-            out
-          }
-        Some(png(w, h, rgb))
-      }
-    }
-
-  /** Integer-exact per-channel sums from a baseline JPEG — the third
-    * member of the [[bmpPixelStats]]/[[pngPixelStats]] family, same
-    * (Σblue, Σgreen, Σred) order; a gray JPEG's pixel is (v, v, v).
-    */
-  def jpegPixelStats(payload: Array[Byte]): Option[(Int, Int, Long, Long, Long)] =
-    JpegCodec.decode(payload).map { case (w, h, ch, px) =>
-      var sumR = 0L; var sumG = 0L; var sumB = 0L
-      var i = 0
-      while (i < px.length) {
-        if (ch == 1) { val v = (px(i) & 0xff).toLong; sumR += v; sumG += v; sumB += v }
-        else { sumR += px(i) & 0xff; sumG += px(i + 1) & 0xff; sumB += px(i + 2) & 0xff }
-        i += ch
-      }
-      (w, h, sumB, sumG, sumR)
-    }
-
-  /** [[bmpDhash]]/[[pngDhash]] for baseline JPEG payloads. */
-  def jpegDhash(payload: Array[Byte]): Option[(Int, Int, Long)] =
-    JpegCodec.decode(payload).map { case (w, h, ch, px) =>
-      (w, h, pixelsDhash(w, h, ch, px))
-    }
-
-  /** [[bmpResize]] for PNG payloads: the same integer nearest-neighbor
-    * map (target (X, Y) copies source (⌊X·sw/tw⌋, ⌊Y·sh/th⌋)), top-down
-    * on both sides, RGBA alpha dropped (the writer is RGB). Returns a
-    * valid PNG; None on unsupported payloads.
-    */
-  /** Integer nearest-neighbor resample of decoded top-down pixels
-    * (1 = gray, replicated to RGB; 3 = RGB; 4 = RGBA, alpha dropped)
-    * into a 3·tw·th RGB array — the kernel [[pngResize]] and
-    * [[jpegResizeToPng]] share.
-    */
-  private def resizeToRgb(
-      w: Int, h: Int, ch: Int, px: Array[Byte], tw: Int, th: Int): Array[Byte] = {
-    val out = new Array[Byte](3 * tw * th)
+  private def resample(
+      img: Raster, tw: Int, th: Int,
+      out: Array[Byte], top: Int, stride: Int, bgr: Boolean): Unit = {
+    val (ro, go, bo) = rgbOffsets(img)
+    val (first, third) = if (bgr) (bo, ro) else (ro, bo)
+    val px = img.bytes
+    val srcX = Array.tabulate(tw)(x => img.channels * (x.toLong * img.width / tw).toInt)
     var y = 0
     while (y < th) {
-      val sy = (y.toLong * h / th).toInt
+      val srcRow = img.top + (y.toLong * img.height / th).toInt * img.stride
+      var d = top + y * stride
       var x = 0
       while (x < tw) {
-        val sx = (x.toLong * w / tw).toInt
-        val s = ch * (sy * w + sx)
-        val d = 3 * (y * tw + x)
-        if (ch == 1) { out(d) = px(s); out(d + 1) = px(s); out(d + 2) = px(s) }
-        else { out(d) = px(s); out(d + 1) = px(s + 1); out(d + 2) = px(s + 2) }
+        val s = srcRow + srcX(x)
+        out(d) = px(s + first)
+        out(d + 1) = px(s + go)
+        out(d + 2) = px(s + third)
+        d += 3
         x += 1
       }
       y += 1
     }
-    out
   }
 
-  def pngResize(payload: Array[Byte], tw: Int, th: Int): Option[Array[Byte]] = {
-    require(tw > 0 && th > 0, s"pngResize target must be positive: $tw x $th")
-    require(3L * tw * th + th <= Int.MaxValue - 64,
-      s"pngResize: target $tw x $th exceeds the PNG size ceiling")
-    pngDecode(payload).map { case (w, h, ch, px) =>
-      png(tw, th, resizeToRgb(w, h, ch, px, tw, th))
-    }
-  }
-
-  /** JPEG thumbnail in ONE decode: baseline decode → nearest-neighbor
-    * resample → PNG out (re-encoding a tiny thumbnail lossily would
-    * stack a second generation loss, and round-tripping through a
-    * full-size PNG first would pay a pointless deflate+inflate of the
-    * full-resolution image).
+  /** Nearest-neighbor thumbnail at `tw × th` ([[resample]]'s map) as
+    * `(mime type, payload)`. A BGR raster (a BMP) stays a 24bpp BMP;
+    * every other raster leaves as RGB PNG — re-encoding a tiny
+    * thumbnail lossily or palette-quantized would stack a second
+    * generation loss.
     */
-  def jpegResizeToPng(payload: Array[Byte], tw: Int, th: Int): Option[Array[Byte]] = {
-    require(tw > 0 && th > 0, s"jpegResizeToPng target must be positive: $tw x $th")
-    require(3L * tw * th + th <= Int.MaxValue - 64,
-      s"jpegResizeToPng: target $tw x $th exceeds the PNG size ceiling")
-    JpegCodec.decode(payload).map { case (w, h, ch, px) =>
-      png(tw, th, resizeToRgb(w, h, ch, px, tw, th))
+  def resizeImage(img: Raster, tw: Int, th: Int): (String, Array[Byte]) = {
+    require(tw > 0 && th > 0, s"resizeImage target must be positive: $tw x $th")
+    if (img.bgr) {
+      // target geometry in Long: rowT·th as an Int product can wrap
+      // POSITIVE for absurd targets and corrupt silently instead of failing
+      val rowTL = ((24L * tw + 31) / 32) * 4
+      require(rowTL * th + 54 <= Int.MaxValue,
+        s"resizeImage: target $tw x $th exceeds the BMP size ceiling")
+      val rowT = rowTL.toInt
+      // exact-size pixel array (padding included, rows bottom-up) so the
+      // bmp() writer's cyclic fill is the identity on it
+      val px = new Array[Byte](rowT * th)
+      resample(img, tw, th, px, (th - 1) * rowT, -rowT, bgr = true)
+      ("image/bmp", bmp(tw, th, px))
+    } else {
+      require(3L * tw * th + th <= Int.MaxValue - 64,
+        s"resizeImage: target $tw x $th exceeds the PNG size ceiling")
+      val px = new Array[Byte](3 * tw * th)
+      resample(img, tw, th, px, 0, 3 * tw, bgr = false)
+      ("image/png", png(tw, th, px))
     }
   }
 
-  /** Transcode a 24bpp BMP to PNG losslessly: decode the padded
-    * bottom-up BGR pixel walk, re-emit unpadded top-down RGB — the
-    * format-normalization step a real ingest runs so every downstream
-    * image op sees one layout. Pixel-exact by construction ([[bmpDhash]]
-    * and [[pngDhash]] of the two files are bit-identical — q389's
-    * oracle); None when the source isn't parseable bottom-up 24bpp BMP.
+  /** Lossless transcode to RGB PNG — the format-normalization step a
+    * real ingest runs so every downstream image op sees one layout.
+    * Pixel-exact (gray expands to R = G = B, alpha drops), so the PNG's
+    * [[dhash]] equals the source's; None past the PNG size ceiling.
     */
-  def bmpToPng(payload: Array[Byte]): Option[Array[Byte]] = {
-    if (payload.length < 54 || payload(0) != 'B' || payload(1) != 'M') return None
-    val buf = ByteBuffer.wrap(payload).order(ByteOrder.LITTLE_ENDIAN)
-    val dataOff = buf.getInt(10)
-    val dibSize = buf.getInt(14)
-    val w = buf.getInt(18)
-    val h = buf.getInt(22)
-    val planes = buf.getShort(26)
-    val bpp = buf.getShort(28)
-    val compression = buf.getInt(30)
-    if (dibSize != 40 || planes != 1 || bpp != 24 || compression != 0 ||
-      w <= 0 || h <= 0) return None
-    val rowSizeL = ((24L * w + 31) / 32) * 4
-    if (dataOff < 54 || dataOff.toLong + rowSizeL * h > payload.length) return None
-    if (3L * w * h + h > Int.MaxValue - 64) return None
-    val rowSize = rowSizeL.toInt
-    val px = new Array[Byte](3 * w * h)
-    var y = 0
-    while (y < h) {
-      val src = dataOff + (h - 1 - y) * rowSize // stored bottom-up
-      val dst = 3 * y * w
-      var x = 0
-      while (x < w) {
-        // BGR on disk → RGB in the PNG pixel array
-        px(dst + 3 * x) = payload(src + 3 * x + 2)
-        px(dst + 3 * x + 1) = payload(src + 3 * x + 1)
-        px(dst + 3 * x + 2) = payload(src + 3 * x)
-        x += 1
-      }
-      y += 1
+  def toPng(img: Raster): Option[Array[Byte]] = {
+    val (w, h) = (img.width, img.height)
+    if (3L * w * h + h > Int.MaxValue - 64) None
+    else if (img.channels == 3 && !img.bgr && img.top == 0 && img.stride == 3 * w)
+      Some(png(w, h, img.bytes))
+    else {
+      val rgb = new Array[Byte](3 * w * h)
+      resample(img, w, h, rgb, 0, 3 * w, bgr = false)
+      Some(png(w, h, rgb))
     }
-    Some(png(w, h, px))
   }
 
   // ----------------------------------------------------------------- GIF --
@@ -2192,47 +2191,6 @@ object BinaryCodecs {
     None // ran out of blocks with no image
   }
 
-  /** [[pngPixelStats]] for GIF payloads — same (Σblue, Σgreen, Σred)
-    * order, canvas-sized (background-composited first frame).
-    */
-  def gifPixelStats(payload: Array[Byte]): Option[(Int, Int, Long, Long, Long)] =
-    gifDecode(payload).map { case (w, h, ch, px) =>
-      var sumR = 0L; var sumG = 0L; var sumB = 0L
-      var i = 0
-      while (i < px.length) {
-        sumR += px(i) & 0xff
-        sumG += px(i + 1) & 0xff
-        sumB += px(i + 2) & 0xff
-        i += ch
-      }
-      (w, h, sumB, sumG, sumR)
-    }
-
-  /** [[pngDhash]] for GIF payloads: same grid, same gray, so a GIF and
-    * a BMP/PNG/JPEG encoding of the same pixels land in the same dedup
-    * bucket.
-    */
-  def gifDhash(payload: Array[Byte]): Option[(Int, Int, Long)] =
-    gifDecode(payload).map { case (w, h, ch, px) =>
-      (w, h, pixelsDhash(w, h, ch, px))
-    }
-
-  /** GIF → PNG transcode — the fourth leg of format normalization at
-    * ingest ([[bmpToPng]]/[[jpegToPng]]'s sibling), pixel-exact from the
-    * first-frame decode.
-    */
-  def gifToPng(payload: Array[Byte]): Option[Array[Byte]] =
-    gifDecode(payload).map { case (w, h, _, px) => png(w, h, px) }
-
-  /** GIF thumbnail via the shared nearest-neighbor resample, emitted as
-    * PNG ([[jpegResizeToPng]]'s judgment: palette-quantizing a thumbnail
-    * would stack a second generation loss).
-    */
-  def gifResizeToPng(payload: Array[Byte], tw: Int, th: Int): Option[Array[Byte]] =
-    gifDecode(payload).map { case (w, h, ch, px) =>
-      png(tw, th, resizeToRgb(w, h, ch, px, tw, th))
-    }
-
   // ------------------------------------------------------------- CHARSET --
 
   /** A charset-sniffed decode: the label actually used, whether a BOM
@@ -2334,6 +2292,25 @@ object BinaryCodecs {
 
   // --------------------------------------------------------------- HTTP --
 
+  private val Latin1 = java.nio.charset.StandardCharsets.ISO_8859_1
+  private val Utf8 = java.nio.charset.StandardCharsets.UTF_8
+
+  /** The CRLF-terminated line of `buf` starting at `off`, searched up to
+    * `end` → (text decoded as `cs`, offset past the CRLF); null when no
+    * CRLF ends before `end`. Raw byte arithmetic, NOT text.getBytes: an
+    * undecodable byte would decode to a replacement char and
+    * desynchronize the byte offsets. The line reader of the HTTP and
+    * WARC header parsers.
+    */
+  private def crlfLine(
+      buf: Array[Byte], off: Int, end: Int,
+      cs: java.nio.charset.Charset): (String, Int) = {
+    var i = off
+    while (i + 1 < end && !(buf(i) == '\r' && buf(i + 1) == '\n')) i += 1
+    if (i + 1 >= end) null
+    else (new String(buf, off, i - off, cs), i + 2)
+  }
+
   /** One parsed HTTP response message: status code, the raw
     * `Content-Type`, `Location`, `Transfer-Encoding` and
     * `Content-Encoding` values (null when absent), header count, body
@@ -2380,13 +2357,7 @@ object BinaryCodecs {
   def parseHttpResponse(
       payload: Array[Byte], maxBodyBytes: Int = 1 << 26): Option[HttpMessage] = {
     if (payload == null || payload.length < 12) return None
-    def lineAt(off: Int): (String, Int) = {
-      var i = off
-      while (i + 1 < payload.length && !(payload(i) == '\r' && payload(i + 1) == '\n')) i += 1
-      if (i + 1 >= payload.length) null
-      else (new String(payload, off, i - off, java.nio.charset.StandardCharsets.ISO_8859_1), i + 2)
-    }
-    val sl = lineAt(0)
+    val sl = crlfLine(payload, 0, payload.length, Latin1)
     if (sl == null) return None
     val mStat = java.util.regex.Pattern
       .compile("HTTP/\\d\\.\\d (\\d{3})(?: .*)?").matcher(sl._1)
@@ -2400,7 +2371,7 @@ object BinaryCodecs {
     var nHeaders = 0
     var open = true
     while (open) {
-      val ln = lineAt(off)
+      val ln = crlfLine(payload, off, payload.length, Latin1)
       if (ln == null) return None
       off = ln._2
       if (ln._1.isEmpty) open = false
@@ -2638,13 +2609,7 @@ object BinaryCodecs {
     */
   def parseHttpRequest(payload: Array[Byte]): Option[HttpRequest] = {
     if (payload == null || payload.length < 14) return None
-    def lineAt(off: Int): (String, Int) = {
-      var i = off
-      while (i + 1 < payload.length && !(payload(i) == '\r' && payload(i + 1) == '\n')) i += 1
-      if (i + 1 >= payload.length) null
-      else (new String(payload, off, i - off, java.nio.charset.StandardCharsets.ISO_8859_1), i + 2)
-    }
-    val rl = lineAt(0)
+    val rl = crlfLine(payload, 0, payload.length, Latin1)
     if (rl == null) return None
     val m = java.util.regex.Pattern
       .compile("([A-Z]+) (\\S+) HTTP/\\d\\.\\d").matcher(rl._1)
@@ -2655,7 +2620,7 @@ object BinaryCodecs {
     var nHeaders = 0
     var open = true
     while (open) {
-      val ln = lineAt(off)
+      val ln = crlfLine(payload, off, payload.length, Latin1)
       if (ln == null) return None
       off = ln._2
       if (ln._1.isEmpty) open = false
@@ -2958,17 +2923,8 @@ object BinaryCodecs {
   private def parseWarcRecordAt(
       buf: Array[Byte], start: Int, end: Int,
       keepPayload: Boolean = true): WarcParse.Result = {
-    // CRLF-terminated line starting at off → (text, offset past CRLF);
-    // raw byte arithmetic, NOT text.getBytes (invalid UTF-8 would decode
-    // to replacement chars and desynchronize the byte offsets)
-    def lineAt(off: Int): (String, Int) = {
-      var i = off
-      while (i + 1 < end && !(buf(i) == '\r' && buf(i + 1) == '\n')) i += 1
-      if (i + 1 >= end) null
-      else (new String(buf, off, i - off, "UTF-8"), i + 2)
-    }
     // ---- version line
-    val vl = lineAt(start)
+    val vl = crlfLine(buf, start, end, Utf8)
     if (vl == null) return WarcParse.NeedMore
     if (!vl._1.matches("WARC/\\d+\\.\\d+")) return WarcParse.Malformed
     var off = vl._2
@@ -2983,7 +2939,7 @@ object BinaryCodecs {
     var nHeaders = 0
     var open = true
     while (open) {
-      val ln = lineAt(off)
+      val ln = crlfLine(buf, off, end, Utf8)
       if (ln == null) return WarcParse.NeedMore
       val l = ln._1
       off = ln._2
@@ -3025,137 +2981,6 @@ object BinaryCodecs {
         concurrentTo, warcDate), o)
   }
 
-  /** Integer-exact per-channel pixel statistics from a 24bpp bottom-up BMP
-    * payload — a REAL image decode (header parse + padded-row pixel walk,
-    * row padding excluded), not a stub: (width, height, Σblue, Σgreen,
-    * Σred) with bytes read unsigned. Sums are exact in 64-bit (255·w·h
-    * overflows only past ~3.6×10¹⁶ pixels).
-    */
-  def bmpPixelStats(payload: Array[Byte]): Option[(Int, Int, Long, Long, Long)] = {
-    if (payload.length < 54 || payload(0) != 'B' || payload(1) != 'M') return None
-    val buf = ByteBuffer.wrap(payload).order(ByteOrder.LITTLE_ENDIAN)
-    val dataOff = buf.getInt(10)
-    val dibSize = buf.getInt(14)
-    val w = buf.getInt(18)
-    val h = buf.getInt(22)
-    val planes = buf.getShort(26)
-    val bpp = buf.getShort(28)
-    val compression = buf.getInt(30)
-    if (dibSize != 40 || planes != 1 || bpp != 24 || compression != 0 ||
-      w <= 0 || h <= 0) return None // bottom-up 24bpp uncompressed only
-    // rowSize in Long: a crafted header with w ≳ 89.5M wraps 24*w negative
-    // in Int, which would pass the bounds check and crash the pixel walk.
-    val rowSizeL = ((24L * w + 31) / 32) * 4
-    if (dataOff < 54 || dataOff.toLong + rowSizeL * h > payload.length) return None
-    val rowSize = rowSizeL.toInt // safe: bounded by payload.length above
-    var sumB = 0L
-    var sumG = 0L
-    var sumR = 0L
-    var row = 0
-    while (row < h) {
-      val base = dataOff + row * rowSize
-      var c = 0
-      while (c < w) {
-        val p = base + 3 * c
-        sumB += payload(p) & 0xff
-        sumG += payload(p + 1) & 0xff
-        sumR += payload(p + 2) & 0xff
-        c += 1
-      }
-      row += 1
-    }
-    Some((w, h, sumB, sumG, sumR))
-  }
-
-  /** REAL nearest-neighbor resize of a 24bpp bottom-up BMP to `tw × th`:
-    * target IMAGE pixel (X, Y) copies source image pixel
-    * (⌊X·sw/tw⌋, ⌊Y·sh/th⌋) verbatim — the classic integer-exact
-    * thumbnail map (no blending, so any engine replays every output
-    * byte from the decoded input). Returns a valid BMP; None when the
-    * payload isn't parseable bottom-up 24bpp (same validation and
-    * Long-bounds discipline as [[bmpPixelStats]]).
-    */
-  def bmpResize(payload: Array[Byte], tw: Int, th: Int): Option[Array[Byte]] = {
-    require(tw > 0 && th > 0, s"bmpResize target must be positive: $tw x $th")
-    if (payload.length < 54 || payload(0) != 'B' || payload(1) != 'M') return None
-    val buf = ByteBuffer.wrap(payload).order(ByteOrder.LITTLE_ENDIAN)
-    val dataOff = buf.getInt(10)
-    val dibSize = buf.getInt(14)
-    val w = buf.getInt(18)
-    val h = buf.getInt(22)
-    val planes = buf.getShort(26)
-    val bpp = buf.getShort(28)
-    val compression = buf.getInt(30)
-    if (dibSize != 40 || planes != 1 || bpp != 24 || compression != 0 ||
-      w <= 0 || h <= 0) return None
-    val rowSizeL = ((24L * w + 31) / 32) * 4
-    if (dataOff < 54 || dataOff.toLong + rowSizeL * h > payload.length) return None
-    val rowSize = rowSizeL.toInt
-    // target geometry in Long: rowT·th as an Int product can wrap
-    // POSITIVE for absurd targets and corrupt silently instead of failing
-    val rowTL = ((24L * tw + 31) / 32) * 4
-    require(rowTL * th + 54 <= Int.MaxValue,
-      s"bmpResize: target $tw x $th exceeds the BMP size ceiling")
-    val rowT = rowTL.toInt
-    // exact-size pixel array (padding included) so the bmp() writer's
-    // cyclic fill is the identity on it
-    val px = new Array[Byte](rowT * th)
-    var y = 0
-    while (y < th) {
-      val sy = (y.toLong * h / th).toInt
-      val srcRow = dataOff + (h - 1 - sy) * rowSize
-      val dstRow = (th - 1 - y) * rowT
-      var x = 0
-      while (x < tw) {
-        val sx = (x.toLong * w / tw).toInt
-        val s = srcRow + 3 * sx
-        val d = dstRow + 3 * x
-        px(d) = payload(s)
-        px(d + 1) = payload(s + 1)
-        px(d + 2) = payload(s + 2)
-        x += 1
-      }
-      y += 1
-    }
-    Some(bmp(tw, th, px))
-  }
-
-  /** 64-bit DIFFERENCE HASH (dHash) from a 24bpp bottom-up BMP payload —
-    * the classic perceptual near-duplicate fingerprint: sample a 9×8
-    * grayscale grid (nearest-neighbor at cell centers — integer-exact
-    * for ANY source size, where a block average would need w ≥ 9), and
-    * set bit (row·8 + col) when gray(col, row) < gray(col+1, row).
-    * Gray = (B + G + R) div 3, bytes unsigned; the grid samples in
-    * IMAGE orientation (top-down rows; the stored rows are bottom-up).
-    * Returns (width, height, dhash); None on a non-BMP payload. Every
-    * step is integer arithmetic on decoded bytes, so any engine replays
-    * the hash bit-for-bit from the same pixels.
-    */
-  def bmpDhash(payload: Array[Byte]): Option[(Int, Int, Long)] = {
-    if (payload.length < 54 || payload(0) != 'B' || payload(1) != 'M') return None
-    val buf = ByteBuffer.wrap(payload).order(ByteOrder.LITTLE_ENDIAN)
-    val dataOff = buf.getInt(10)
-    val dibSize = buf.getInt(14)
-    val w = buf.getInt(18)
-    val h = buf.getInt(22)
-    val planes = buf.getShort(26)
-    val bpp = buf.getShort(28)
-    val compression = buf.getInt(30)
-    if (dibSize != 40 || planes != 1 || bpp != 24 || compression != 0 ||
-      w <= 0 || h <= 0) return None // bottom-up 24bpp uncompressed only
-    // rowSize in Long — same crafted-header overflow guard as bmpPixelStats.
-    val rowSizeL = ((24L * w + 31) / 32) * 4
-    if (dataOff < 54 || dataOff.toLong + rowSizeL * h > payload.length) return None
-    val rowSize = rowSizeL.toInt // safe: bounded by payload.length above
-    // the grid walk itself is [[dhash64]], shared with the PNG decoder —
-    // identical pixels MUST fingerprint identically across formats
-    val hash = dhash64(w, h, (x, y) => {
-      val p = dataOff + (h - 1 - y) * rowSize + 3 * x
-      ((payload(p) & 0xff) + (payload(p + 1) & 0xff) + (payload(p + 2) & 0xff)) / 3
-    })
-    Some((w, h, hash))
-  }
-
   /** Chunk-walk a 16-bit mono PCM WAV header: (sampleRate, dataOff,
     * nSamples); None on anything else. The shared front half of
     * [[wavPcmStats]] and [[wavEnergyHash]].
@@ -3191,7 +3016,7 @@ object BinaryCodecs {
   /** REAL nearest-neighbor sample-rate conversion of a 16-bit mono PCM
     * WAV to `dstRate`: output sample i copies input sample
     * `⌊i·srcRate/dstRate⌋`, output length `⌊n·dstRate/srcRate⌋` — the
-    * audio analogue of [[bmpResize]]'s integer thumbnail map (no
+    * audio analogue of [[resizeImage]]'s integer thumbnail map (no
     * interpolation, so any engine replays every output sample from the
     * decoded input). Returns a valid WAV at the new rate; None when the
     * payload isn't parseable 16-bit mono PCM.
@@ -3206,7 +3031,7 @@ object BinaryCodecs {
       // Int.MaxValue (negative-size crash or silent truncation). The
       // expansion is also an amplification bomb without a ceiling —
       // quarantine (None) past the same output-size cap discipline
-      // bmpResize and gunzip enforce, instead of allocating unbounded.
+      // resizeImage and gunzip enforce, instead of allocating unbounded.
       val nOutL = n.toLong * dstRate / srcRate
       if (44L + 2L * nOutL > Int.MaxValue) None
       else {
@@ -3219,7 +3044,7 @@ object BinaryCodecs {
   }
 
   /** 64-bit ENERGY-DIFFERENCE HASH from a 16-bit mono WAV payload — the
-    * audio analogue of [[bmpDhash]] and the classic shape of perceptual
+    * audio analogue of [[dhash]] and the classic shape of perceptual
     * audio fingerprints (energy deltas over fixed frame windows): split
     * the sample stream into 65 contiguous windows (sample i lands in
     * window `i·65 div n` — integer-exact for ANY n), take each window's

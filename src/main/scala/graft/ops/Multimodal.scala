@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Multimodal columns for training-data pipelines: image/audio/video travel
   * as opaque `binary` columns with typed metadata, and decode / feature
-  * extraction runs as batched per-partition transforms.
+  * extraction runs as per-row map-side transforms.
   *
   * The codec layer is REAL for the formats that matter: BMP, PNG
   * (zlib + all five scanline filters) and baseline JPEG (Huffman + DCT)
@@ -18,10 +18,10 @@ import org.apache.spark.sql.functions._
   * byte-window resample say so explicitly; swapping in libjpeg-turbo/
   * ffmpeg at deployment changes only those bodies.
   *
-  * `mapPartitions` + `Iterator.grouped(batchSize)` is the JVM analog of a
-  * vectorized batch UDF: a codec initializes per-batch state exactly where
-  * the group materializes, and multi-KB binary decode is not an
-  * `Expression` fit — batching shape and signatures are the contract.
+  * Every codec op is a typed `map`/`flatMap` over the rows: multi-KB
+  * binary decode is not an `Expression` fit, no codec keeps state across
+  * rows, and `Dataset.flatMap` runs inside each partition's iterator, so
+  * the plans stay partition-local and shuffle-free.
   */
 object Multimodal {
 
@@ -87,47 +87,36 @@ object Multimodal {
     }
   }
 
-  /** Batched decode + feature extraction. Batching shape matters: a real
-    * codec amortizes setup per batch; `batchSize` bounds memory for large
-    * payloads. One output row per input row, pipelined per partition — no
-    * shuffle, scales linearly with partitions at 100 TB.
+  /** Decode + feature extraction. One output row per input row,
+    * pipelined per partition — no shuffle, scales linearly with
+    * partitions at 100 TB.
     */
-  def extractFeatures(media: Dataset[MediaRow], batchSize: Int = 64, featureDim: Int = 16): Dataset[MediaFeatures] = {
+  def extractFeatures(media: Dataset[MediaRow], featureDim: Int = 16): Dataset[MediaFeatures] = {
     import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        // real codec: initialize native decoder once per batch here
-        batch.iterator.map { m =>
-          // real container parse when the magic is recognized; stub otherwise
-          val (w, h) = graft.functions.BinaryCodecs.bmpDimensions(m.payload)
-            .getOrElse(DecodeStub.dimensions(m.payload))
-          val frames =
-            if (m.kind == "video") DecodeStub.sampleFrames(m.payload, maxFrames = 8) else Seq(m.payload)
-          val feats = frames
-            .map(DecodeStub.features(_, featureDim))
-            .reduceOption((a, b) => a.zip(b).map { case (x, y) => x + y })
-            .getOrElse(new Array[Float](featureDim))
-          MediaFeatures(m.media_id, m.kind, w, h, frames.size, feats)
-        }
-      }
+    media.map { m =>
+      // real container parse when the magic is recognized; stub otherwise
+      val (w, h) = graft.functions.BinaryCodecs.bmpDimensions(m.payload)
+        .getOrElse(DecodeStub.dimensions(m.payload))
+      val frames =
+        if (m.kind == "video") DecodeStub.sampleFrames(m.payload, maxFrames = 8) else Seq(m.payload)
+      val feats = frames
+        .map(DecodeStub.features(_, featureDim))
+        .reduceOption((a, b) => a.zip(b).map { case (x, y) => x + y })
+        .getOrElse(new Array[Float](featureDim))
+      MediaFeatures(m.media_id, m.kind, w, h, frames.size, feats)
     }
   }
 
-  /** Batched resize to a uniform target resolution — the standard
-    * normalization pass before feature extraction. Same partition-batched
+  /** Resize to a uniform target resolution — the standard
+    * normalization pass before feature extraction. Same map-side
     * shape as [[extractFeatures]]; payloads are rewritten, metadata
     * (dims encoded by the stub header contract) updated in place.
     */
-  def resizeAll(media: Dataset[MediaRow], w: Int, h: Int, batchSize: Int = 64): Dataset[MediaRow] = {
+  def resizeAll(media: Dataset[MediaRow], w: Int, h: Int): Dataset[MediaRow] = {
     import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        // real codec: one native resampler instance per batch here
-        batch.iterator.map { m =>
-          val resized = DecodeStub.resize(m.payload, w, h)
-          m.copy(payload = resized, size_bytes = resized.length.toLong)
-        }
-      }
+    media.map { m =>
+      val resized = DecodeStub.resize(m.payload, w, h)
+      m.copy(payload = resized, size_bytes = resized.length.toLong)
     }
   }
 
@@ -145,26 +134,22 @@ object Multimodal {
 
   /** REAL header decode over the binary column: BMP dimensions and WAV
     * sample-rate/duration via [[graft.functions.BinaryCodecs]] (actual
-    * byte-level container parsing, not the stub). Batched exactly like
+    * byte-level container parsing, not the stub). Map-side like
     * [[extractFeatures]]; unknown magic → null metadata rather than a
     * guess. */
-  def parseMeta(media: Dataset[MediaRow], batchSize: Int = 64): Dataset[MediaMeta] = {
+  def parseMeta(media: Dataset[MediaRow]): Dataset[MediaMeta] = {
     import media.sparkSession.implicits._
     import graft.functions.BinaryCodecs
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { m =>
-          BinaryCodecs.bmpDimensions(m.payload) match {
-            case Some((w, h)) => MediaMeta(m.media_id, m.kind, Some(w), Some(h), None, None)
-            case None =>
-              BinaryCodecs.wavMeta(m.payload) match {
-                case Some((rate, nSamples)) =>
-                  MediaMeta(m.media_id, m.kind, None, None, Some(rate),
-                    Some(nSamples * 1000L / rate))
-                case None => MediaMeta(m.media_id, m.kind, None, None, None, None)
-              }
+    media.map { m =>
+      BinaryCodecs.bmpDimensions(m.payload) match {
+        case Some((w, h)) => MediaMeta(m.media_id, m.kind, Some(w), Some(h), None, None)
+        case None =>
+          BinaryCodecs.wavMeta(m.payload) match {
+            case Some((rate, nSamples)) =>
+              MediaMeta(m.media_id, m.kind, None, None, Some(rate),
+                Some(nSamples * 1000L / rate))
+            case None => MediaMeta(m.media_id, m.kind, None, None, None, None)
           }
-        }
       }
     }
   }
@@ -178,19 +163,15 @@ object Multimodal {
     * int16 sample scan ([[graft.functions.BinaryCodecs.wavPcmStats]]) —
     * no stub anywhere on this path. Rows whose payload is not parseable
     * 16-bit mono PCM are dropped (the caller's schema gate). Same
-    * partition-batched, shuffle-free shape as [[parseMeta]].
+    * map-side, shuffle-free shape as [[parseMeta]].
     */
-  def audioStats(media: Dataset[MediaRow], batchSize: Int = 64): Dataset[AudioStats] = {
+  def audioStats(media: Dataset[MediaRow]): Dataset[AudioStats] = {
     import media.sparkSession.implicits._
     import graft.functions.BinaryCodecs
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { m =>
-          BinaryCodecs.wavPcmStats(m.payload).map { case (rate, n, sumSq, sumAbs, peak) =>
-            AudioStats(m.media_id, rate.toLong, n, sumSq,
-              if (n > 0) sumAbs / n else 0L, peak.toLong)
-          }
-        }
+    media.flatMap { m =>
+      BinaryCodecs.wavPcmStats(m.payload).map { case (rate, n, sumSq, sumAbs, peak) =>
+        AudioStats(m.media_id, rate.toLong, n, sumSq,
+          if (n > 0) sumAbs / n else 0L, peak.toLong)
       }
     }
   }
@@ -200,28 +181,20 @@ object Multimodal {
       sum_b: Long, sum_g: Long, sum_r: Long)
 
   /** REAL image feature extraction over the binary column: integer-exact
-    * per-channel pixel sums from an actual pixel walk — the 24bpp BMP
-    * decoder ([[graft.functions.BinaryCodecs.bmpPixelStats]], row padding
-    * excluded) or, when the magic says PNG, the full zlib+filter PNG
-    * decoder ([[graft.functions.BinaryCodecs.pngPixelStats]] — the format
-    * web images actually use). Bytes unsigned, no stub anywhere on this
-    * path; rows in neither format drop. Same partition-batched,
-    * shuffle-free shape as [[audioStats]].
+    * per-channel pixel sums ([[graft.functions.BinaryCodecs.pixelStats]],
+    * row padding and alpha excluded) from an actual decode — 24bpp BMP,
+    * PNG, JPEG or GIF ([[graft.functions.BinaryCodecs.decodeImage]]).
+    * Bytes unsigned, no stub anywhere on this path; rows in no decodable
+    * format drop. Same map-side, shuffle-free shape as [[audioStats]].
     */
-  def imageStats(media: Dataset[MediaRow], batchSize: Int = 64): Dataset[ImageStats] = {
+  def imageStats(media: Dataset[MediaRow]): Dataset[ImageStats] = {
     import media.sparkSession.implicits._
     import graft.functions.BinaryCodecs
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { m =>
-          BinaryCodecs.bmpPixelStats(m.payload)
-            .orElse(BinaryCodecs.pngPixelStats(m.payload))
-            .orElse(BinaryCodecs.jpegPixelStats(m.payload))
-            .orElse(BinaryCodecs.gifPixelStats(m.payload))
-            .map { case (w, h, sumB, sumG, sumR) =>
-              ImageStats(m.media_id, w.toLong, h.toLong, w.toLong * h, sumB, sumG, sumR)
-            }
-        }
+    media.flatMap { m =>
+      BinaryCodecs.decodeImage(m.payload).map { img =>
+        val (sumB, sumG, sumR) = BinaryCodecs.pixelStats(img)
+        ImageStats(m.media_id, img.width.toLong, img.height.toLong,
+          img.width.toLong * img.height, sumB, sumG, sumR)
       }
     }
   }
@@ -229,30 +202,23 @@ object Multimodal {
   final case class ImageDhash(media_id: Long, width: Long, height: Long, dhash: Long)
 
   /** Perceptual near-duplicate fingerprints over the binary image
-    * column: the 64-bit dHash from a REAL 24bpp BMP decode
-    * ([[graft.functions.BinaryCodecs.bmpDhash]] — 9×8 nearest-neighbor
-    * grayscale grid, horizontal difference bits). Rows whose payload is
-    * not parseable BMP are dropped. Pair with
+    * column: the 64-bit dHash of a REAL decode
+    * ([[graft.functions.BinaryCodecs.dhash]] — 9×8 nearest-neighbor
+    * grayscale grid, horizontal difference bits), the same for
+    * identical pixels in any format. Rows whose payload does not decode
+    * are dropped. Pair with
     * [[graft.ops.Dedup.hammingPairs]] for the banded near-dup join —
     * together they are image-level MinHash/LSH: fingerprint map-side,
-    * bucket-join, verify exactly. Same partition-batched, shuffle-free
+    * bucket-join, verify exactly. Same map-side, shuffle-free
     * shape as [[imageStats]].
     */
-  def imageDhash(media: Dataset[MediaRow], batchSize: Int = 64): Dataset[ImageDhash] = {
+  def imageDhash(media: Dataset[MediaRow]): Dataset[ImageDhash] = {
     import media.sparkSession.implicits._
     import graft.functions.BinaryCodecs
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { m =>
-          BinaryCodecs.bmpDhash(m.payload)
-            .orElse(BinaryCodecs.pngDhash(m.payload))
-            .orElse(BinaryCodecs.jpegDhash(m.payload))
-            .orElse(BinaryCodecs.gifDhash(m.payload))
-            .map { case (w, h, d) =>
-              ImageDhash(m.media_id, w.toLong, h.toLong, d)
-            }
-        }
-      }
+    media.flatMap { m =>
+      BinaryCodecs.decodeImage(m.payload).map(img =>
+        ImageDhash(m.media_id, img.width.toLong, img.height.toLong,
+          BinaryCodecs.dhash(img)))
     }
   }
 
@@ -267,81 +233,59 @@ object Multimodal {
     * identically). Rows whose payload is not parseable PCM WAV are
     * dropped. Pair with [[graft.ops.Dedup.hammingPairs]] for the banded
     * near-dup join — the audio leg of the same image-level LSH story as
-    * [[imageDhash]]. Same partition-batched, shuffle-free shape.
+    * [[imageDhash]]. Same map-side, shuffle-free shape.
     */
-  def audioEnergyHash(media: Dataset[MediaRow], batchSize: Int = 64): Dataset[AudioEhash] = {
+  def audioEnergyHash(media: Dataset[MediaRow]): Dataset[AudioEhash] = {
     import media.sparkSession.implicits._
     import graft.functions.BinaryCodecs
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { m =>
-          BinaryCodecs.wavEnergyHash(m.payload).map { case (rate, n, h) =>
-            AudioEhash(m.media_id, rate.toLong, n, h)
-          }
-        }
+    media.flatMap { m =>
+      BinaryCodecs.wavEnergyHash(m.payload).map { case (rate, n, h) =>
+        AudioEhash(m.media_id, rate.toLong, n, h)
       }
     }
   }
 
-  /** REAL thumbnailing over the binary image column: every parseable
-    * 24bpp BMP resizes to `w × h` by the integer nearest-neighbor map
-    * ([[graft.functions.BinaryCodecs.bmpResize]]) — an actual pixel
-    * resample producing a valid BMP, unlike [[resizeAll]]'s documented
-    * byte-window stub for codecs this environment can't decode. Non-BMP
-    * rows drop (route them to [[resizeAll]] if a stub thumbnail is
-    * better than none). Partition-batched, shuffle-free; output bytes
-    * per row collapse to the fixed thumbnail size — the 100 TB point of
-    * thumbnailing at ingest.
+  /** REAL thumbnailing over the binary image column: every decodable
+    * image resizes to `w × h` by the integer nearest-neighbor map
+    * ([[graft.functions.BinaryCodecs.resizeImage]]) — an actual pixel
+    * resample, unlike [[resizeAll]]'s documented byte-window stub for
+    * codecs this environment can't decode. BMP stays BMP; PNG, JPEG and
+    * GIF thumbnails leave as PNG. Rows that do not decode drop (route
+    * them to [[resizeAll]] if a stub thumbnail is better than none).
+    * Map-side, shuffle-free; output bytes per row collapse to the fixed
+    * thumbnail size — the 100 TB point of thumbnailing at ingest.
     */
   def resizeImages(
       media: Dataset[MediaRow],
       w: Int,
-      h: Int,
-      batchSize: Int = 64): Dataset[MediaRow] = {
+      h: Int): Dataset[MediaRow] = {
     import media.sparkSession.implicits._
     import graft.functions.BinaryCodecs
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { m =>
-          BinaryCodecs.bmpResize(m.payload, w, h)
-            .map(p => MediaRow(m.media_id, m.kind, p, "image/bmp", p.length.toLong))
-            .orElse(BinaryCodecs.pngResize(m.payload, w, h)
-              .map(p => MediaRow(m.media_id, m.kind, p, "image/png", p.length.toLong)))
-            // JPEG/GIF thumbnails leave as PNG: re-encoding a tiny
-            // thumbnail lossily (or palette-quantized) would stack a
-            // second generation loss
-            .orElse(BinaryCodecs.jpegResizeToPng(m.payload, w, h)
-              .map(p => MediaRow(m.media_id, m.kind, p, "image/png", p.length.toLong)))
-            .orElse(BinaryCodecs.gifResizeToPng(m.payload, w, h)
-              .map(p => MediaRow(m.media_id, m.kind, p, "image/png", p.length.toLong)))
-        }
+    media.flatMap { m =>
+      BinaryCodecs.decodeImage(m.payload).map { img =>
+        val (mime, p) = BinaryCodecs.resizeImage(img, w, h)
+        MediaRow(m.media_id, m.kind, p, mime, p.length.toLong)
       }
     }
   }
 
-  /** Format normalization at ingest: every parseable 24bpp BMP re-encodes
-    * as a pixel-exact PNG ([[graft.functions.BinaryCodecs.bmpToPng]] —
-    * decoded padded bottom-up BGR, re-emitted unpadded top-down RGB
-    * through the real zlib writer), so one on-disk layout feeds every
-    * downstream image op. Already-PNG rows pass through untouched;
-    * other payloads drop. The q389 invariant: a transcoded image's
-    * [[imageDhash]] is bit-identical to its source's. Partition-batched,
-    * shuffle-free.
+  /** Format normalization at ingest: every decodable BMP, JPEG or GIF
+    * re-encodes as a pixel-exact RGB PNG
+    * ([[graft.functions.BinaryCodecs.toPng]] through the real zlib
+    * writer), so one on-disk layout feeds every downstream image op.
+    * Rows that are structurally PNG
+    * ([[graft.functions.BinaryCodecs.pngDimensions]]) pass through
+    * untouched, without a decode; other payloads drop. The q389
+    * invariant: a transcoded image's [[imageDhash]] is bit-identical to
+    * its source's. Map-side, shuffle-free.
     */
-  def transcodeToPng(media: Dataset[MediaRow], batchSize: Int = 64): Dataset[MediaRow] = {
+  def transcodeToPng(media: Dataset[MediaRow]): Dataset[MediaRow] = {
     import media.sparkSession.implicits._
     import graft.functions.BinaryCodecs
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { m =>
-          BinaryCodecs.bmpToPng(m.payload)
-            .orElse(BinaryCodecs.jpegToPng(m.payload))
-            .orElse(BinaryCodecs.gifToPng(m.payload))
-            .map(p => MediaRow(m.media_id, m.kind, p, "image/png", p.length.toLong))
-            .orElse(
-              if (BinaryCodecs.pngDimensions(m.payload).nonEmpty) Some(m) else None)
-        }
-      }
+    media.flatMap { m =>
+      if (BinaryCodecs.pngDimensions(m.payload).nonEmpty) Some(m)
+      else BinaryCodecs.decodeImage(m.payload).flatMap(BinaryCodecs.toPng)
+        .map(p => MediaRow(m.media_id, m.kind, p, "image/png", p.length.toLong))
     }
   }
 
@@ -349,40 +293,31 @@ object Multimodal {
     * parseable 16-bit mono PCM WAV resamples to `dstRate` by the
     * integer nearest-neighbor map
     * ([[graft.functions.BinaryCodecs.wavResample]]) — the audio
-    * analogue of [[resizeImages]]. Non-PCM rows drop. Partition-batched,
+    * analogue of [[resizeImages]]. Non-PCM rows drop. Map-side,
     * shuffle-free; output bytes per row scale by `dstRate/srcRate` —
     * downsampling at ingest is the audio thumbnailing.
     */
   def resampleAudio(
       media: Dataset[MediaRow],
-      dstRate: Int,
-      batchSize: Int = 64): Dataset[MediaRow] = {
+      dstRate: Int): Dataset[MediaRow] = {
     import media.sparkSession.implicits._
     import graft.functions.BinaryCodecs
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { m =>
-          BinaryCodecs.wavResample(m.payload, dstRate).map(p =>
-            MediaRow(m.media_id, m.kind, p, "audio/wav", p.length.toLong))
-        }
-      }
+    media.flatMap { m =>
+      BinaryCodecs.wavResample(m.payload, dstRate).map(p =>
+        MediaRow(m.media_id, m.kind, p, "audio/wav", p.length.toLong))
     }
   }
 
   /** Writer half of compressed-binary ingest: gzip every payload
-    * (WARC-style corpora ship members gzip'd). Partition-batched,
+    * (WARC-style corpora ship members gzip'd). Map-side,
     * shuffle-free.
     */
-  def gzipMedia(media: Dataset[MediaRow], batchSize: Int = 64): Dataset[MediaRow] = {
+  def gzipMedia(media: Dataset[MediaRow]): Dataset[MediaRow] = {
     import media.sparkSession.implicits._
     import graft.functions.BinaryCodecs
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { m =>
-          val p = BinaryCodecs.gzip(m.payload)
-          MediaRow(m.media_id, m.kind, p, "application/gzip", p.length.toLong)
-        }
-      }
+    media.map { m =>
+      val p = BinaryCodecs.gzip(m.payload)
+      MediaRow(m.media_id, m.kind, p, "application/gzip", p.length.toLong)
     }
   }
 
@@ -390,21 +325,16 @@ object Multimodal {
     * [[gunzipText]] sibling for media bytes — a gzip'd AVI/BMP/WAV
     * member decodes back into the container parsers' input), with the
     * same HARD zip-bomb cap; over-cap, non-gzip and corrupt rows
-    * quarantine (drop). Partition-batched, shuffle-free.
+    * quarantine (drop). Map-side, shuffle-free.
     */
   def gunzipMedia(
       media: Dataset[MediaRow],
-      maxBytes: Int = 1 << 26,
-      batchSize: Int = 64): Dataset[MediaRow] = {
+      maxBytes: Int = 1 << 26): Dataset[MediaRow] = {
     import media.sparkSession.implicits._
     import graft.functions.BinaryCodecs
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { m =>
-          BinaryCodecs.gunzip(m.payload, maxBytes).map(p =>
-            MediaRow(m.media_id, m.kind, p, "application/octet-stream", p.length.toLong))
-        }
-      }
+    media.flatMap { m =>
+      BinaryCodecs.gunzip(m.payload, maxBytes).map(p =>
+        MediaRow(m.media_id, m.kind, p, "application/octet-stream", p.length.toLong))
     }
   }
 
@@ -419,24 +349,20 @@ object Multimodal {
     * from its `stts` sample runs, and `usec_per_frame` rescaled from
     * the track's own media clock (`delta · 10⁶ / timescale`, floor).
     * Rows that parse as neither — or whose MP4 has no video track —
-    * drop. Same partition-batched, shuffle-free shape as
+    * drop. Same map-side, shuffle-free shape as
     * [[imageStats]].
     */
-  def videoMeta(media: Dataset[MediaRow], batchSize: Int = 64): Dataset[VideoMeta] = {
+  def videoMeta(media: Dataset[MediaRow]): Dataset[VideoMeta] = {
     import media.sparkSession.implicits._
     import graft.functions.BinaryCodecs
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { m =>
-          BinaryCodecs.aviMeta(m.payload).map { case (w, h, n, mspf) =>
-            VideoMeta(m.media_id, w.toLong, h.toLong, n.toLong, mspf.toLong)
-          }.orElse {
-            BinaryCodecs.mp4Meta(m.payload).flatMap { info =>
-              info.tracks.find(t => t.handler == "vide" && t.timescale > 0)
-                .map(t => VideoMeta(m.media_id, t.width.toLong, t.height.toLong,
-                  t.nSamples, t.sampleDelta * 1000000L / t.timescale))
-            }
-          }
+    media.flatMap { m =>
+      BinaryCodecs.aviMeta(m.payload).map { case (w, h, n, mspf) =>
+        VideoMeta(m.media_id, w.toLong, h.toLong, n.toLong, mspf.toLong)
+      }.orElse {
+        BinaryCodecs.mp4Meta(m.payload).flatMap { info =>
+          info.tracks.find(t => t.handler == "vide" && t.timescale > 0)
+            .map(t => VideoMeta(m.media_id, t.width.toLong, t.height.toLong,
+              t.nSamples, t.sampleDelta * 1000000L / t.timescale))
         }
       }
     }
@@ -450,20 +376,16 @@ object Multimodal {
     * any decode (keep H.264 video under 4K, route audio by codec,
     * flag zero-sample tracks). Non-BMFF payloads drop (quarantine —
     * pair with [[videoMeta]]'s AVI route for RIFF input). Map-side,
-    * shuffle-free, partition-batched.
+    * shuffle-free.
     */
-  def mp4Tracks(media: Dataset[MediaRow], batchSize: Int = 64): DataFrame = {
+  def mp4Tracks(media: Dataset[MediaRow]): DataFrame = {
     import media.sparkSession.implicits._
     import graft.functions.BinaryCodecs
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { m =>
-          BinaryCodecs.mp4Meta(m.payload).toSeq.flatMap { info =>
-            info.tracks.map(t => (m.media_id, info.timescale, info.duration,
-              t.trackId, t.handler, t.codec, t.width, t.height,
-              t.timescale, t.sampleDelta * t.nSamples, t.nSamples, t.sampleDelta))
-          }
-        }
+    media.flatMap { m =>
+      BinaryCodecs.mp4Meta(m.payload).toSeq.flatMap { info =>
+        info.tracks.map(t => (m.media_id, info.timescale, info.duration,
+          t.trackId, t.handler, t.codec, t.width, t.height,
+          t.timescale, t.sampleDelta * t.nSamples, t.nSamples, t.sampleDelta))
       }
     }.toDF("media_id", "movie_timescale", "movie_duration", "track_id",
       "handler", "codec", "width", "height", "track_timescale",
@@ -477,20 +399,16 @@ object Multimodal {
     * sample clock, exact frame count, floor-µs duration, frame 0's
     * bitrate and a VBR flag (any frame's bitrate differing). Rows that
     * don't parse as a clean MPEG stream drop (quarantine). Same
-    * partition-batched, shuffle-free shape as [[videoMeta]].
+    * map-side, shuffle-free shape as [[videoMeta]].
     */
-  def mp3Meta(media: Dataset[MediaRow], batchSize: Int = 64): DataFrame = {
+  def mp3Meta(media: Dataset[MediaRow]): DataFrame = {
     import media.sparkSession.implicits._
     import graft.functions.BinaryCodecs
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { m =>
-          BinaryCodecs.mp3Meta(m.payload).filter(_.nFrames > 0).map { a =>
-            (m.media_id, a.version, a.layer, a.sampleRate, a.nFrames,
-              a.durationUs, a.frameBitratesKbps.head,
-              a.frameBitratesKbps.exists(_ != a.frameBitratesKbps.head))
-          }
-        }
+    media.flatMap { m =>
+      BinaryCodecs.mp3Meta(m.payload).filter(_.nFrames > 0).map { a =>
+        (m.media_id, a.version, a.layer, a.sampleRate, a.nFrames,
+          a.durationUs, a.frameBitratesKbps.head,
+          a.frameBitratesKbps.exists(_ != a.frameBitratesKbps.head))
       }
     }.toDF("media_id", "mpeg_version", "layer", "sample_rate", "n_frames",
       "duration_us", "bitrate_kbps", "vbr")
@@ -503,19 +421,15 @@ object Multimodal {
     * ([[graft.functions.BinaryCodecs.id3TextFrames]]' contract:
     * v2.3 + v2.4, all four text encodings, padding/extended-header
     * handling; unsynchronised and v2.2 tags quarantine, untagged
-    * payloads drop). Map-side, shuffle-free, partition-batched.
+    * payloads drop). Map-side, shuffle-free.
     */
-  def audioTags(media: Dataset[MediaRow], batchSize: Int = 64): DataFrame = {
+  def audioTags(media: Dataset[MediaRow]): DataFrame = {
     import media.sparkSession.implicits._
     import graft.functions.BinaryCodecs
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { m =>
-          BinaryCodecs.id3TextFrames(m.payload).toSeq.flatMap { frames =>
-            frames.zipWithIndex.map { case (f, i) =>
-              (m.media_id, i, f.frameId, f.text)
-            }
-          }
+    media.flatMap { m =>
+      BinaryCodecs.id3TextFrames(m.payload).toSeq.flatMap { frames =>
+        frames.zipWithIndex.map { case (f, i) =>
+          (m.media_id, i, f.frameId, f.text)
         }
       }
     }.toDF("media_id", "frame_pos", "frame_id", "value")
@@ -527,18 +441,14 @@ object Multimodal {
     * ([[graft.functions.BinaryCodecs.oggAudioMeta]]); non-Ogg,
     * CRC-corrupt and neither-dialect payloads drop. The third audio
     * container next to WAV and MP3, and the one podcasts actually
-    * ship in. Map-side, shuffle-free, partition-batched.
+    * ship in. Map-side, shuffle-free.
     */
-  def oggMeta(media: Dataset[MediaRow], batchSize: Int = 64): DataFrame = {
+  def oggMeta(media: Dataset[MediaRow]): DataFrame = {
     import media.sparkSession.implicits._
     import graft.functions.BinaryCodecs
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { m =>
-          BinaryCodecs.oggAudioMeta(m.payload).map { case (codec, rate, ch) =>
-            (m.media_id, codec, rate, ch)
-          }
-        }
+    media.flatMap { m =>
+      BinaryCodecs.oggAudioMeta(m.payload).map { case (codec, rate, ch) =>
+        (m.media_id, codec, rate, ch)
       }
     }.toDF("media_id", "codec", "sample_rate", "channels")
   }
@@ -564,20 +474,15 @@ object Multimodal {
     * never a dropped row — when the family's parser rejects it or the
     * magic is unknown: triage EXISTS to count and route the junk, so
     * quarantining-by-drop here would be self-defeating. Map-side,
-    * partition-batched, shuffle-free; at 100 TB this is the pass that
+    * shuffle-free; at 100 TB this is the pass that
     * decides what the decode fleet actually fetches.
     */
   def mediaTriage(
       media: Dataset[MediaRow],
-      batchSize: Int = 64,
       maxGunzipBytes: Int = 1 << 26): Dataset[TriageRow] = {
     import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map(m =>
-          triageOne(m.media_id, m.payload, gzipped0 = false, maxGunzipBytes))
-      }
-    }
+    media.map(m =>
+      triageOne(m.media_id, m.payload, gzipped0 = false, maxGunzipBytes))
   }
 
   /** One payload through the triage rules — the shared core of
@@ -658,23 +563,18 @@ object Multimodal {
     * format — null (no verdict) when the declared type is outside the
     * sniffable set, false on the mislabels every real archive carries
     * (the integrity signal a decode fleet filters on before paying for
-    * a decode the label lied about). Map-side, partition-batched,
+    * a decode the label lied about). Map-side,
     * shuffle-free.
     */
   def archiveMediaTriage(
       responses: Dataset[graft.ops.Warc.HttpRecordRow],
-      batchSize: Int = 64,
       maxGunzipBytes: Int = 1 << 26): DataFrame = {
     import responses.sparkSession.implicits._
-    responses.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { h =>
-          val t = triageOne(h.media_id, h.body, gzipped0 = false, maxGunzipBytes)
-          (h.media_id, h.record_idx, h.target_uri, h.content_type,
-            t.format, t.parsed, t.width, t.height, t.n_frames,
-            t.sample_rate, t.duration_us)
-        }
-      }
+    responses.map { h =>
+      val t = triageOne(h.media_id, h.body, gzipped0 = false, maxGunzipBytes)
+      (h.media_id, h.record_idx, h.target_uri, h.content_type,
+        t.format, t.parsed, t.width, t.height, t.n_frames,
+        t.sample_rate, t.duration_us)
     }.toDF("media_id", "record_idx", "target_uri", "content_type",
       "format", "parsed", "width", "height", "n_frames",
       "sample_rate", "duration_us")
@@ -716,30 +616,24 @@ object Multimodal {
     * routing one level deeper. The classic decode-free pre-step of
     * every video featurizer: sample at ingest, ship only the sampled
     * frames onward. Rows that don't parse drop; a video with no frames
-    * yields no rows. Partition-batched, shuffle-free; output bytes ≤ k
+    * yields no rows. Map-side, shuffle-free; output bytes ≤ k
     * frames per video by construction.
     */
   def sampleVideoFrames(
       media: Dataset[MediaRow],
-      k: Int,
-      batchSize: Int = 64): Dataset[FrameRow] = {
+      k: Int): Dataset[FrameRow] = {
     import media.sparkSession.implicits._
-    import graft.functions.BinaryCodecs
     require(k >= 1, s"k must be >= 1: $k")
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        // frame COUNT from whichever container walk recognizes the
-        // payload (AVI avih, else the MP4 video track's stts), then
-        // ONE chunk-table walk for all k frames — per-index extraction
-        // would re-scan from byte 0 every time
-        batch.iterator.flatMap(m => sampleVideoFramesOne(m, k))
-      }
-    }
+    // frame COUNT from whichever container walk recognizes the
+    // payload (AVI avih, else the MP4 video track's stts), then
+    // ONE chunk-table walk for all k frames — per-index extraction
+    // would re-scan from byte 0 every time
+    media.flatMap(m => sampleVideoFramesOne(m, k))
   }
 
   /** Uniform video THUMBNAILS: [[sampleVideoFrames]] then the real
-    * nearest-neighbor [[graft.functions.BinaryCodecs.bmpResize]] per
-    * sampled frame — the preprocessing shape a vision encoder wants
+    * nearest-neighbor [[graft.functions.BinaryCodecs.resizeImage]] per
+    * sampled BMP frame — the preprocessing shape a vision encoder wants
     * (fixed geometry per frame, k frames per video, all decided at
     * ingest). Frames that aren't parseable BMP drop. Output bytes per
     * video collapse to k × the fixed thumbnail size.
@@ -748,14 +642,13 @@ object Multimodal {
       media: Dataset[MediaRow],
       k: Int,
       w: Int,
-      h: Int,
-      batchSize: Int = 64): Dataset[FrameRow] = {
+      h: Int): Dataset[FrameRow] = {
     import media.sparkSession.implicits._
     import graft.functions.BinaryCodecs
-    sampleVideoFrames(media, k, batchSize).mapPartitions { rows =>
-      rows.flatMap { fr =>
-        BinaryCodecs.bmpResize(fr.payload, w, h).map(p =>
-          FrameRow(fr.media_id, fr.frame_idx, p, p.length.toLong))
+    sampleVideoFrames(media, k).flatMap { fr =>
+      BinaryCodecs.bmpRaster(fr.payload).map { img =>
+        val (_, p) = BinaryCodecs.resizeImage(img, w, h)
+        FrameRow(fr.media_id, fr.frame_idx, p, p.length.toLong)
       }
     }
   }
@@ -763,7 +656,7 @@ object Multimodal {
   final case class VideoFrameDhash(media_id: Long, frame_idx: Long, dhash: Long)
 
   /** Perceptual fingerprints of SAMPLED video frames: [[sampleVideoFrames]]
-    * then the real BMP dHash per frame — the video leg of the banded
+    * then the real BMP [[graft.functions.BinaryCodecs.dhash]] per frame — the video leg of the banded
     * near-dup family ([[imageDhash]] for images, [[audioEnergyHash]] for
     * audio): two videos sharing visually-near sampled frames surface via
     * [[graft.ops.Dedup.hammingPairs]] over `(media_id·k + frame_idx)`
@@ -773,16 +666,12 @@ object Multimodal {
     */
   def videoFrameDhash(
       media: Dataset[MediaRow],
-      k: Int,
-      batchSize: Int = 64): Dataset[VideoFrameDhash] = {
+      k: Int): Dataset[VideoFrameDhash] = {
     import media.sparkSession.implicits._
     import graft.functions.BinaryCodecs
-    sampleVideoFrames(media, k, batchSize).mapPartitions { rows =>
-      rows.flatMap { fr =>
-        BinaryCodecs.bmpDhash(fr.payload).map { case (_, _, d) =>
-          VideoFrameDhash(fr.media_id, fr.frame_idx, d)
-        }
-      }
+    sampleVideoFrames(media, k).flatMap { fr =>
+      BinaryCodecs.bmpRaster(fr.payload).map(img =>
+        VideoFrameDhash(fr.media_id, fr.frame_idx, BinaryCodecs.dhash(img)))
     }
   }
 
@@ -794,30 +683,25 @@ object Multimodal {
     * from a real codec stream buys a grey smear). Files with no stss
     * (ISO: every sample is sync) and AVI payloads fall back to
     * [[sampleVideoFrames]]'s all-samples spacing — the same rule, one
-    * level up. Same partition-batched, shuffle-free shape.
+    * level up. Same map-side, shuffle-free shape.
     */
   def sampleKeyframes(
       media: Dataset[MediaRow],
-      k: Int,
-      batchSize: Int = 64): Dataset[FrameRow] = {
+      k: Int): Dataset[FrameRow] = {
     import media.sparkSession.implicits._
     import graft.functions.BinaryCodecs
     require(k >= 1, s"k must be >= 1: $k")
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { m =>
-          BinaryCodecs.mp4SyncSamples(m.payload) match {
-            case Some(sync) if sync.nonEmpty =>
-              val take = math.min(k, sync.length)
-              val idxs = (0 until take)
-                .map(i => (sync((i.toLong * sync.length / take).toInt) - 1).toInt)
-              BinaryCodecs.mp4Samples(m.payload, idxs).toSeq.flatten.map {
-                case (idx, f) => FrameRow(m.media_id, idx.toLong, f, f.length.toLong)
-              }
-            case _ =>
-              sampleVideoFramesOne(m, k)
+    media.flatMap { m =>
+      BinaryCodecs.mp4SyncSamples(m.payload) match {
+        case Some(sync) if sync.nonEmpty =>
+          val take = math.min(k, sync.length)
+          val idxs = (0 until take)
+            .map(i => (sync((i.toLong * sync.length / take).toInt) - 1).toInt)
+          BinaryCodecs.mp4Samples(m.payload, idxs).toSeq.flatten.map {
+            case (idx, f) => FrameRow(m.media_id, idx.toLong, f, f.length.toLong)
           }
-        }
+        case _ =>
+          sampleVideoFramesOne(m, k)
       }
     }
   }
@@ -847,22 +731,17 @@ object Multimodal {
     * WET/WARC-style compressed-corpus ingest step, with
     * [[graft.functions.BinaryCodecs.gunzip]]'s zip-bomb cap per row
     * (over-cap, non-gzip and corrupt payloads drop — the quarantine
-    * contract). Same partition-batched, shuffle-free shape as the other
+    * contract). Same map-side, shuffle-free shape as the other
     * codec paths.
     */
   def gunzipText(
       media: Dataset[MediaRow],
-      maxBytes: Int = 1 << 26,
-      batchSize: Int = 64): Dataset[TextPayload] = {
+      maxBytes: Int = 1 << 26): Dataset[TextPayload] = {
     import media.sparkSession.implicits._
     import graft.functions.BinaryCodecs
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { m =>
-          BinaryCodecs.gunzip(m.payload, maxBytes).map { bytes =>
-            TextPayload(m.media_id, bytes.length.toLong, new String(bytes, "UTF-8"))
-          }
-        }
+    media.flatMap { m =>
+      BinaryCodecs.gunzip(m.payload, maxBytes).map { bytes =>
+        TextPayload(m.media_id, bytes.length.toLong, new String(bytes, "UTF-8"))
       }
     }
   }
@@ -879,18 +758,14 @@ object Multimodal {
     * per-document encoding label and mojibake-risk flag — the ~5–10 % of
     * real crawls that is not UTF-8 otherwise corrupts silently upstream
     * of every dedup/quality op. Total (every row decodes; the flag says
-    * how trustworthy); partition-batched, shuffle-free.
+    * how trustworthy); map-side, shuffle-free.
     */
-  def decodeCharset(media: Dataset[MediaRow], batchSize: Int = 64): Dataset[DecodedText] = {
+  def decodeCharset(media: Dataset[MediaRow]): Dataset[DecodedText] = {
     import media.sparkSession.implicits._
     import graft.functions.BinaryCodecs
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { m =>
-          val s = BinaryCodecs.sniffCharset(m.payload)
-          DecodedText(m.media_id, s.encoding, s.bom, s.mojibakeRisk, s.text)
-        }
-      }
+    media.map { m =>
+      val s = BinaryCodecs.sniffCharset(m.payload)
+      DecodedText(m.media_id, s.encoding, s.bom, s.mojibakeRisk, s.text)
     }
   }
 

@@ -17,7 +17,7 @@ import graft.ops.Multimodal.MediaRow
   * Byte-level parsing lives in [[graft.functions.BinaryCodecs]]
   * (gzip member walk + strict record framing); this layer is the
   * Dataset plumbing: one input row = one WARC FILE, exploded to record
-  * rows by a partition-batched `mapPartitions` walk — multi-KB binary
+  * rows by a map-side `flatMap` walk — multi-KB binary
   * container decode is not an `Expression` fit (same judgment as the
   * BMP/WAV/AVI paths). Shuffle-free, linear in partitions: at 100 TB the
   * unit of work is the crawl file (~1 GB each), records never leave
@@ -55,28 +55,24 @@ object Warc {
     * (default 4 GiB — sized for real ~1 GB crawl files, which inflate
     * to several GB, and caller-widenable). The cap is ALSO the peak-heap
     * bound per in-flight file: the all-or-nothing quarantine means a
-    * file's records materialize together before any row is emitted, so
-    * size executor memory as batchSize-in-flight × maxBytesTotal worst
-    * case (real files sit far below the cap).
+    * file's records materialize together before any row is emitted.
+    * Each task has one file in flight at a time, so size executor
+    * memory as task slots × maxBytesTotal worst case (real files sit
+    * far below the cap).
     */
   def parseWarc(
       media: Dataset[MediaRow],
       maxBytesPerMember: Int = 1 << 26,
-      batchSize: Int = 16,
       maxBytesTotal: Long = 1L << 32): Dataset[WarcRecordRow] = {
     import media.sparkSession.implicits._
     import graft.functions.BinaryCodecs
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { m =>
-          BinaryCodecs.warcRecords(m.payload, maxBytesPerMember,
-            maxBytesTotal = maxBytesTotal).toSeq.flatMap { recs =>
-            recs.zipWithIndex.map { case (r, i) =>
-              WarcRecordRow(m.media_id, i.toLong, r.warcType, r.targetUri,
-                r.nHeaders, r.payload.length.toLong, r.payload,
-                r.recordId, r.refersTo, r.concurrentTo)
-            }
-          }
+    media.flatMap { m =>
+      BinaryCodecs.warcRecords(m.payload, maxBytesPerMember,
+        maxBytesTotal = maxBytesTotal).toSeq.flatMap { recs =>
+        recs.zipWithIndex.map { case (r, i) =>
+          WarcRecordRow(m.media_id, i.toLong, r.warcType, r.targetUri,
+            r.nHeaders, r.payload.length.toLong, r.payload,
+            r.recordId, r.refersTo, r.concurrentTo)
         }
       }
     }
@@ -151,22 +147,17 @@ object Warc {
     * corrupts every downstream text op. Records whose payload is not a
     * parseable HTTP response — or whose DECLARED codings are framing-
     * corrupt — drop (quarantine); unsupported codings survive with
-    * `body_decoded = false`. Partition-batched, shuffle-free.
+    * `body_decoded = false`. Map-side, shuffle-free.
     */
   def httpResponses(
-      records: Dataset[WarcRecordRow],
-      batchSize: Int = 64): Dataset[HttpRecordRow] = {
+      records: Dataset[WarcRecordRow]): Dataset[HttpRecordRow] = {
     import records.sparkSession.implicits._
     import graft.functions.BinaryCodecs
-    records.filter(_.warc_type == "response").mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { r =>
-          BinaryCodecs.parseHttpResponse(r.payload).map { h =>
-            HttpRecordRow(r.media_id, r.record_idx, r.target_uri,
-              h.status, h.contentType, h.location, h.nHeaders, h.body,
-              h.contentEncoding, h.bodyDecoded)
-          }
-        }
+    records.filter(_.warc_type == "response").flatMap { r =>
+      BinaryCodecs.parseHttpResponse(r.payload).map { h =>
+        HttpRecordRow(r.media_id, r.record_idx, r.target_uri,
+          h.status, h.contentType, h.location, h.nHeaders, h.body,
+          h.contentEncoding, h.bodyDecoded)
       }
     }
   }
@@ -180,8 +171,8 @@ object Warc {
     * [[Urls.canonicalize]] + the politeness stage like any discovered
     * URL.
     */
-  def redirectEdges(records: Dataset[WarcRecordRow], batchSize: Int = 64): DataFrame =
-    httpResponses(records, batchSize).toDF()
+  def redirectEdges(records: Dataset[WarcRecordRow]): DataFrame =
+    httpResponses(records).toDF()
       .where(col("status").between(300, 399) && col("location").isNotNull)
       .select(col("target_uri").as("from_url"),
         Urls.resolve(col("target_uri"), col("location")).as("to_url"))
@@ -324,15 +315,14 @@ object Warc {
     * WHATWG precedence: BOM → transport → meta → validation →
     * flagged fallback). What comes out is UTF-8 text ready for
     * [[Html.mainContent]] and everything downstream — the day-one path
-    * from a `.warc.gz` on disk to clean corpus text. Partition-batched,
+    * from a `.warc.gz` on disk to clean corpus text. Map-side,
     * shuffle-free.
     */
   def decodePages(
-      records: Dataset[WarcRecordRow],
-      batchSize: Int = 64): Dataset[DecodedPage] = {
+      records: Dataset[WarcRecordRow]): Dataset[DecodedPage] = {
     import records.sparkSession.implicits._
     import graft.functions.BinaryCodecs
-    httpResponses(records, batchSize).mapPartitions { rows =>
+    httpResponses(records).mapPartitions { rows =>
       rows.map { h =>
         val s = BinaryCodecs.sniffCharset(h.body,
           BinaryCodecs.contentTypeCharset(h.content_type))
@@ -385,17 +375,12 @@ object Warc {
   def toCdxj(
       media: Dataset[MediaRow],
       filenameCol: org.apache.spark.sql.Column =
-        concat(lit("crawl-"), col("media_id"), lit(".warc.gz")),
-      batchSize: Int = 16): DataFrame = {
+        concat(lit("crawl-"), col("media_id"), lit(".warc.gz"))): DataFrame = {
     import media.sparkSession.implicits._
-    val recs = media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { m =>
-          cdxWalk(m.payload).map { w =>
-            CdxRecord(m.media_id, w.record_idx, w.url, w.warc_type,
-              w.warc_date, w.status, w.mime, w.digest, w.offset, w.length)
-          }
-        }
+    val recs = media.flatMap { m =>
+      cdxWalk(m.payload).map { w =>
+        CdxRecord(m.media_id, w.record_idx, w.url, w.warc_type,
+          w.warc_date, w.status, w.mime, w.digest, w.offset, w.length)
       }
     }
     cdxAssemble(recs.toDF().withColumn("filename", filenameCol))
@@ -410,18 +395,14 @@ object Warc {
     * the live sidecar ([[graft.streaming.StreamingOps.cdxjStream]]) and
     * the batch export are literally one code path and cannot diverge.
     */
-  def toCdxjFiles(files: DataFrame, batchSize: Int = 16): DataFrame = {
+  def toCdxjFiles(files: DataFrame): DataFrame = {
     import files.sparkSession.implicits._
     val recs = files.select(col("filename"), col("payload"))
       .as[(String, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.grouped(batchSize).flatMap { batch =>
-          batch.iterator.flatMap { case (fname, payload) =>
-            cdxWalk(payload).map(w => CdxFileRecord(fname, w.record_idx,
-              w.url, w.warc_type, w.warc_date, w.status, w.mime, w.digest,
-              w.offset, w.length))
-          }
-        }
+      .flatMap { case (fname, payload) =>
+        cdxWalk(payload).map(w => CdxFileRecord(fname, w.record_idx,
+          w.url, w.warc_type, w.warc_date, w.status, w.mime, w.digest,
+          w.offset, w.length))
       }
     cdxAssemble(recs.toDF())
       .select(col("filename"), col("record_idx"), col("surt_key"), col("ts"),

@@ -56,9 +56,9 @@ class DocsDriftSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("bench adjudications name real queries and stay in sync with the bench artifact") {
     // Stale adjudications rot loudly: every query id cited in README's
-    // "Bench reading notes" must be a live query, and when a bench mirror
-    // exists, must be covered by Bench's canonical workload_notes — the
-    // one place per-query timing caveats are versioned with the code.
+    // "Bench reading notes" must be a live query with an entry in
+    // docs/bench-notes.md — the one place per-query timing caveats are
+    // versioned with the code — and every entry must name a live query.
     val readme = read("README.md")
     val section = readme.split("## Bench reading notes")(1).split("\n## ")(0)
     val cited = "q\\d+_\\w+".r.findAllIn(section).toSet
@@ -66,15 +66,11 @@ class DocsDriftSpec extends org.scalatest.funsuite.AnyFunSuite {
     val live = SparkEntry.queries.keySet
     assert(cited.subsetOf(live),
       s"README bench notes cite dead queries: ${(cited -- live).toSeq.sorted}")
-    val mirror = java.nio.file.Paths.get("bench_last.json")
-    if (java.nio.file.Files.exists(mirror)) {
-      val benchJson = read(mirror.toString)
-      if (benchJson.contains("workload_notes")) {
-        val noted = "q\\d+_\\w+".r
-          .findAllIn(benchJson.split("\"workload_notes\":")(1)).toSet
-        assert(cited.subsetOf(noted),
-          s"README adjudicates queries Bench's workload_notes does not: ${(cited -- noted).toSeq.sorted}")
-      }
-    }
+    val noted = "(?m)^## (q\\d+_\\w+)$".r
+      .findAllMatchIn(read("docs/bench-notes.md")).map(_.group(1)).toSet
+    assert(noted.subsetOf(live),
+      s"docs/bench-notes.md has entries for dead queries: ${(noted -- live).toSeq.sorted}")
+    assert(cited.subsetOf(noted),
+      s"README adjudicates queries docs/bench-notes.md does not: ${(cited -- noted).toSeq.sorted}")
   }
 }

@@ -159,8 +159,10 @@ class GifSpec extends SparkSpec {
     val w = 24; val h = 16
     val idx = Array.tabulate(w * h)(p => (((p % w) * 5 + (p / w) * 11) % 64).toByte)
     val rgb = expand(pal64, idx)
-    val gifHash = BinaryCodecs.gifDhash(BinaryCodecs.gif(w, h, pal64, idx)).get
-    val pngHash = BinaryCodecs.pngDhash(BinaryCodecs.png(w, h, rgb)).get
+    def dhash(p: Array[Byte]): Option[(Int, Int, Long)] =
+      BinaryCodecs.decodeImage(p).map(i => (i.width, i.height, BinaryCodecs.dhash(i)))
+    val gifHash = dhash(BinaryCodecs.gif(w, h, pal64, idx)).get
+    val pngHash = dhash(BinaryCodecs.png(w, h, rgb)).get
     assert(gifHash == pngHash)
     val bgrBottomUp = new Array[Byte](3 * w * h)
     for (y <- 0 until h; x <- 0 until w) {
@@ -168,13 +170,13 @@ class GifSpec extends SparkSpec {
       bgrBottomUp(d) = rgb(s + 2); bgrBottomUp(d + 1) = rgb(s + 1)
       bgrBottomUp(d + 2) = rgb(s)
     }
-    val bmpHash = BinaryCodecs.bmpDhash(BinaryCodecs.bmp(w, h, bgrBottomUp)).get
+    val bmpHash = dhash(BinaryCodecs.bmp(w, h, bgrBottomUp)).get
     assert(gifHash == bmpHash,
       "GIF and BMP encodings of the same pixels must land in the same dedup bucket")
     // transcode + thumbnail routes
-    assert(BinaryCodecs.gifToPng(BinaryCodecs.gif(w, h, pal64, idx))
-      .flatMap(BinaryCodecs.pngDhash).get == gifHash)
-    assert(BinaryCodecs.gifResizeToPng(BinaryCodecs.gif(w, h, pal64, idx), 8, 8).nonEmpty)
+    val gifImg = BinaryCodecs.decodeImage(BinaryCodecs.gif(w, h, pal64, idx)).get
+    assert(BinaryCodecs.toPng(gifImg).flatMap(dhash).get == gifHash)
+    assert(BinaryCodecs.resizeImage(gifImg, 8, 8)._1 == "image/png")
   }
 
   test("malformed GIFs quarantine; non-GIF payloads route past the decoder") {

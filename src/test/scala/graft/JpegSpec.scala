@@ -185,12 +185,14 @@ class JpegSpec extends SparkSpec {
     // the image-dedup invariant: both encodings of the same pixels
     // fingerprint identically, so progressive files join the dedup
     // buckets instead of silently vanishing
-    val dhBase = BinaryCodecs.jpegDhash(JpegCodec.encodeGray(w, h, src)).get
-    val dhProg = BinaryCodecs.jpegDhash(JpegCodec.encodeGrayProgressive(w, h, src)).get
+    def dhash(p: Array[Byte]): Option[(Int, Int, Long)] =
+      BinaryCodecs.decodeImage(p).map(i => (i.width, i.height, BinaryCodecs.dhash(i)))
+    val dhBase = dhash(JpegCodec.encodeGray(w, h, src)).get
+    val dhProg = dhash(JpegCodec.encodeGrayProgressive(w, h, src)).get
     assert(dhBase == dhProg)
     val rgb = src.flatMap(b => Array(b, b, b))
-    val dhcBase = BinaryCodecs.jpegDhash(JpegCodec.encodeColor444(w, h, rgb)).get
-    val dhcProg = BinaryCodecs.jpegDhash(JpegCodec.encodeColor444Progressive(w, h, rgb)).get
+    val dhcBase = dhash(JpegCodec.encodeColor444(w, h, rgb)).get
+    val dhcProg = dhash(JpegCodec.encodeColor444Progressive(w, h, rgb)).get
     assert(dhcBase == dhcProg)
   }
 

@@ -18,7 +18,7 @@ class MultimodalSpec extends SparkSpec {
     MediaRow(3L, "audio", Array.emptyByteArray, "application/x-fake-audio", 0L))
 
   test("extractFeatures: one row per input, deterministic, video frame-sampled") {
-    val out = Multimodal.extractFeatures(rows.toDS(), batchSize = 2)
+    val out = Multimodal.extractFeatures(rows.toDS())
       .collect().sortBy(_.media_id)
     assert(out.length == 3)
     assert(out.map(_.kind).toSeq == Seq("image", "video", "audio"))
@@ -26,7 +26,7 @@ class MultimodalSpec extends SparkSpec {
     assert(out(0).n_frames == 1) // image is a single frame
     assert(out.forall(_.features.length == 16))
     // deterministic across runs (stub contract — same payload, same features)
-    val again = Multimodal.extractFeatures(rows.toDS(), batchSize = 64)
+    val again = Multimodal.extractFeatures(rows.toDS())
       .collect().sortBy(_.media_id)
     assert(out.map(_.features.toSeq).toSeq == again.map(_.features.toSeq).toSeq)
     // empty payload doesn't crash, yields zero features
@@ -151,7 +151,9 @@ class MultimodalSpec extends SparkSpec {
     // cycled pixel fill also writes — the decoder must NOT count them.
     val pixels = Array.tabulate[Byte](16)(i => (i * 16 + 200 % 251).toByte)
     val payload = BinaryCodecs.bmp(2, 2, pixels)
-    val Some((w, h, sumB, sumG, sumR)) = BinaryCodecs.bmpPixelStats(payload)
+    val img = BinaryCodecs.bmpRaster(payload).get
+    val (w, h) = (img.width, img.height)
+    val (sumB, sumG, sumR) = BinaryCodecs.pixelStats(img)
     assert(w == 2 && h == 2)
     val expected = (0 until 2).flatMap { row =>
       (0 until 2).flatMap { c =>
@@ -161,8 +163,8 @@ class MultimodalSpec extends SparkSpec {
     assert(sumB == expected.collect { case (0, v) => v.toLong }.sum)
     assert(sumG == expected.collect { case (1, v) => v.toLong }.sum)
     assert(sumR == expected.collect { case (2, v) => v.toLong }.sum)
-    assert(BinaryCodecs.bmpPixelStats("BMjunk".getBytes("US-ASCII")).isEmpty)
-    assert(BinaryCodecs.bmpPixelStats(
+    assert(BinaryCodecs.bmpRaster("BMjunk".getBytes("US-ASCII")).isEmpty)
+    assert(BinaryCodecs.bmpRaster(
       BinaryCodecs.wav(8000, Array[Short](1, 2))).isEmpty)
   }
 
@@ -197,16 +199,18 @@ class MultimodalSpec extends SparkSpec {
       if (o < 3 * w) ((o / 3) * 14).toByte else 0
     }
     val payload = BinaryCodecs.bmp(w, h, padded)
-    val Some((gw, gh, hash)) = BinaryCodecs.bmpDhash(payload)
+    val img = BinaryCodecs.bmpRaster(payload).get
+    val (gw, gh, hash) = (img.width, img.height, BinaryCodecs.dhash(img))
     assert(gw == w && gh == h)
     assert(hash == -1L, s"gradient must set all 64 bits, got $hash")
     // a flat image has no rising comparisons → hash 0
     val flat = BinaryCodecs.bmp(9, 8, Array[Byte](77))
-    assert(BinaryCodecs.bmpDhash(flat).get._3 == 0L)
+    assert(BinaryCodecs.dhash(BinaryCodecs.bmpRaster(flat).get) == 0L)
     // in-memory replay of the exact kernel contract on the cycled fill
     val pix = Array.tabulate[Byte](23)(i => (i * 37).toByte)
     val p2 = BinaryCodecs.bmp(10, 9, pix)
-    val Some((w2, h2, got)) = BinaryCodecs.bmpDhash(p2)
+    val img2 = BinaryCodecs.bmpRaster(p2).get
+    val (w2, h2, got) = (img2.width, img2.height, BinaryCodecs.dhash(img2))
     def v(j: Int): Int = pix(j % pix.length) & 0xff
     val rs = ((24 * 10 + 31) / 32) * 4
     def gray(x: Int, y: Int): Int = {
@@ -220,7 +224,7 @@ class MultimodalSpec extends SparkSpec {
         want |= 1L << (cy * 8 + cx)
     }
     assert(got == want)
-    assert(BinaryCodecs.bmpDhash(BinaryCodecs.wav(8000, Array[Short](1))).isEmpty)
+    assert(BinaryCodecs.bmpRaster(BinaryCodecs.wav(8000, Array[Short](1))).isEmpty)
   }
 
   test("hammingPairs: banding is lossless vs brute force, bounds enforced") {
@@ -336,8 +340,8 @@ class MultimodalSpec extends SparkSpec {
     val buf = java.nio.ByteBuffer.wrap(evil).order(java.nio.ByteOrder.LITTLE_ENDIAN)
     buf.putInt(18, 90000000) // declared width
     buf.putInt(22, 4)
-    assert(BinaryCodecs.bmpDhash(evil).isEmpty)
-    assert(BinaryCodecs.bmpPixelStats(evil).isEmpty)
+    assert(BinaryCodecs.bmpRaster(evil).isEmpty)
+    assert(BinaryCodecs.decodeImage(evil).isEmpty)
   }
 
   test("gzip roundtrip; the bomb guard caps inflation; non-gzip quarantines") {
@@ -420,7 +424,8 @@ class MultimodalSpec extends SparkSpec {
       .collect().sortBy(_.frame_idx)
     assert(got.map(_.frame_idx).toSeq == Seq(0L, 1L, 2L))
     got.foreach { fr =>
-      val direct = BinaryCodecs.bmpResize(frames(fr.frame_idx.toInt), 4, 4).get
+      val direct = BinaryCodecs.resizeImage(
+        BinaryCodecs.bmpRaster(frames(fr.frame_idx.toInt)).get, 4, 4)._2
       assert(fr.payload.sameElements(direct), s"frame ${fr.frame_idx} diverges from direct resize")
     }
   }

@@ -119,29 +119,37 @@ class PngSpec extends SparkSpec {
     val (w, h, ch, px) = BinaryCodecs.pngDecode(file).get
     assert((w, h, ch) == (2, 1, 4))
     assert(px.map(_ & 0xff).toSeq == Seq(10, 20, 30, 40, 50, 60, 70, 80))
-    val (_, _, sb, sg, sr) = BinaryCodecs.pngPixelStats(file).get
+    val (sb, sg, sr) = BinaryCodecs.pixelStats(BinaryCodecs.decodeImage(file).get)
     assert((sr, sg, sb) == (10L + 50, 20L + 60, 30L + 70)) // alphas 40/80 excluded
   }
 
   test("pngPixelStats/pngDhash/pngResize agree with the BMP twins on identical pixels") {
     val src = "the quick brown fox jumps over the lazy dog 0123456789".getBytes
     val bmp = BinaryCodecs.bmp(20, 12, src)
-    val png = BinaryCodecs.bmpToPng(bmp).get
+    def decode(p: Array[Byte]) = BinaryCodecs.decodeImage(p).get
+    def stats(p: Array[Byte]): Option[(Int, Int, Long, Long, Long)] =
+      BinaryCodecs.decodeImage(p).map { i =>
+        val (b, g, r) = BinaryCodecs.pixelStats(i)
+        (i.width, i.height, b, g, r)
+      }
+    val bmpImg = BinaryCodecs.bmpRaster(bmp).get
+    val png = BinaryCodecs.toPng(bmpImg).get
     // stats: same sums (BMP walks padded BGR bottom-up; PNG unpadded RGB
     // top-down — identical pixels either way)
-    assert(BinaryCodecs.bmpPixelStats(bmp) == BinaryCodecs.pngPixelStats(png))
+    assert(stats(bmp) == stats(png))
     // dhash: bit-identical (the q389 invariant)
-    val Some((bw, bh, bd)) = BinaryCodecs.bmpDhash(bmp)
-    val Some((pw, ph, pd)) = BinaryCodecs.pngDhash(png)
+    val (bw, bh, bd) = (bmpImg.width, bmpImg.height, BinaryCodecs.dhash(bmpImg))
+    val pngImg = decode(png)
+    val (pw, ph, pd) = (pngImg.width, pngImg.height, BinaryCodecs.dhash(pngImg))
     assert((bw, bh) == (pw, ph) && bd == pd)
     // resize: the same nearest-neighbor map → the same resized pixels
-    val rb = BinaryCodecs.bmpResize(bmp, 8, 8).get
-    val rp = BinaryCodecs.pngResize(png, 8, 8).get
-    assert(BinaryCodecs.bmpPixelStats(rb) == BinaryCodecs.pngPixelStats(rp))
+    val (bmpMime, rb) = BinaryCodecs.resizeImage(bmpImg, 8, 8)
+    val (pngMime, rp) = BinaryCodecs.resizeImage(pngImg, 8, 8)
+    assert(bmpMime == "image/bmp" && pngMime == "image/png")
+    assert(stats(rb) == stats(rp))
     // identity resize preserves everything
-    assert(BinaryCodecs.pngPixelStats(BinaryCodecs.pngResize(png, 20, 12).get) ==
-      BinaryCodecs.pngPixelStats(png))
-    assert(BinaryCodecs.bmpToPng("nope".getBytes).isEmpty)
+    assert(stats(BinaryCodecs.resizeImage(pngImg, 20, 12)._2) == stats(png))
+    assert(BinaryCodecs.decodeImage("nope".getBytes).isEmpty)
   }
 
   test("Dataset ops route PNG: imageStats/imageDhash/resizeImages/transcodeToPng") {
