@@ -552,7 +552,7 @@ private[graft] object CrawlCatalog {
         Urls.canonicalize(admitted)
           .where(col("canonical_url").isNotNull)
           .groupBy(col("canonical_url").as("url"))
-          .agg(count(lit(1)).as("priority")), reliable = false)
+          .agg(count(lit(1)).as("priority")))
       Crawl.politenessSchedule(frontier, delayMs = 200L, maxPerHost = 4)
     },
       // q373: independent derivation, the q362/q366 idiom — the admitted
@@ -1195,7 +1195,7 @@ private[graft] object CrawlCatalog {
       val content = graft.ops.Staging.stage(
         Html.mainContent(pages).select(
           regexp_extract(col("target_uri"), "([0-9]+)$", 1).cast("long").as("doc_id"),
-          col("main_text").as("text")), reliable = false)
+          col("main_text").as("text")))
       // SimHash dedup with the repo's LSH discipline: banded candidates,
       // then VERIFY by exact text before dropping — raw 64-bit
       // fingerprint equality alone over-collapses (similar short docs
@@ -1773,10 +1773,9 @@ private[graft] object CrawlCatalog {
       // politeness window now plans over a leaf).
       val admitted = graft.ops.Staging.stage(
         Crawl.discoveryAdmitted(docs, smFiles, feedFiles,
-          lit("User-agent: *\nDisallow: /private")), reliable = false)
+          lit("User-agent: *\nDisallow: /private")))
       val frontier = graft.ops.Staging.stage(
-        admitted.groupBy(col("url")).agg(count(lit(1)).as("priority")),
-        reliable = false)
+        admitted.groupBy(col("url")).agg(count(lit(1)).as("priority")))
       Crawl.politenessSchedule(frontier, delayMs = 200L, maxPerHost = 4)
     },
       // q422: all three legs from the id formulas (sitemap s5 / feed
@@ -1861,12 +1860,11 @@ private[graft] object CrawlCatalog {
       import s.implicits._
       val media = graft.ops.Staging.stage(
         CrawlFixtures.syntheticWarcBytes(cdxHttpDocs(s, dir),
-          docsPerFile = 8, gzipPerRecord = false).toDF(), reliable = false)
+          docsPerFile = 8, gzipPerRecord = false).toDF())
         .as[graft.ops.Multimodal.MediaRow]
       val lines = graft.ops.Staging.stage(
         graft.ops.Warc.toCdxj(media,
-          filenameCol = concat(lit("crawl-"), col("media_id"), lit(".warc"))),
-        reliable = false)
+          filenameCol = concat(lit("crawl-"), col("media_id"), lit(".warc"))))
       val urls = t(s, dir, "documents").where(col("doc_id") % 13 === 5)
         .select(concat(lit("https://host"), (col("doc_id") % 20).cast("string"),
           lit(".example.com/p/"), col("doc_id").cast("string")).as("url"))
@@ -1992,7 +1990,7 @@ private[graft] object CrawlCatalog {
       val prior = graft.ops.Staging.stage(
         graft.ops.Warc.parseWarc(
           CrawlFixtures.syntheticWarc(t(s, dir, "documents"), docsPerFile = 8))
-          .toDF(), reliable = false)
+          .toDF())
         .as[graft.ops.Warc.WarcRecordRow](
           org.apache.spark.sql.Encoders.product[graft.ops.Warc.WarcRecordRow])
       val base = t(s, dir, "documents").select(col("doc_id"),

@@ -2640,8 +2640,7 @@ private[graft] object TextCatalog {
       val docs = graft.ops.Staging.stage(
         t(s, dir, "documents").select(col("doc_id"), col("text"),
           TextFunctions.langGuessFromPadded(
-            TextFunctions.paddedText(col("text"))).as("lang")),
-        reliable = false)
+            TextFunctions.paddedText(col("text"))).as("lang")))
       // Staged (r17 optimization): `scored` is referenced by thr AND kept,
       // and `counts` three more times downstream (apportion reads it twice,
       // the assembly join once) — unstaged, the corpus-tokenize + KN-join
@@ -2650,11 +2649,11 @@ private[graft] object TextCatalog {
       // per language); staging them runs the chain once. Measured
       // 11.2 s -> ~4.5 s, identical results.
       val scored = graft.ops.Staging.stage(
-        Ngrams.lmFluencyPpmBy(docs, "lang", minCount = 3), reliable = false)
+        Ngrams.lmFluencyPpmBy(docs, "lang", minCount = 3))
       val thr = graft.ops.Staging.stage(
         scored.groupBy("lang").agg(
           expr("sum(fluency_ppm) div count(1)").as("thr"),
-          count(lit(1)).as("n_docs")), reliable = false)
+          count(lit(1)).as("n_docs")))
       val toks = docs.select(col("doc_id"),
         TextFunctions.tokenCount(col("text")).as("tok"))
       val kept = scored.join(thr.select("lang", "thr"), Seq("lang"))
@@ -2662,8 +2661,7 @@ private[graft] object TextCatalog {
         .join(toks, Seq("doc_id"))
       val counts = graft.ops.Staging.stage(
         kept.groupBy("lang")
-          .agg(count(lit(1)).as("n_kept"), sum("tok").as("tokens")),
-        reliable = false)
+          .agg(count(lit(1)).as("n_kept"), sum("tok").as("tokens")))
       Sampling.apportion(counts.select(col("lang"), col("tokens")),
           "lang", "tokens", budget = 100000L)
         .join(counts.select("lang", "n_kept"), Seq("lang"))

@@ -16,8 +16,7 @@ import org.apache.spark.sql.functions._
   * naive min-label propagation needs O(diameter) rounds, which a single
   * 100M-node duplicate chain turns into thousands of jobs. Nothing is
   * ever collected to the driver; per-round state is the (shrinking) edge
-  * list, staged each round ([[Staging.stage]], caller-selectable fault
-  * tolerance) to keep the plan flat.
+  * list, staged each round ([[Staging.stage]]) to keep the plan flat.
   */
 object Components {
 
@@ -34,14 +33,10 @@ object Components {
       pairs: DataFrame,
       aCol: String = "a_id",
       bCol: String = "b_id",
-      maxIter: Int = 50,
-      reliable: Boolean = false): DataFrame = {
-    // Canonical (u < v) long edges, self-loops dropped. Staged with the
-    // caller-selectable posture ([[Staging.stage]]): `reliable = true`
-    // keeps lineage (persist DISK_ONLY) so a lost executor recomputes the
-    // partition instead of failing the whole O(log n)-round job — the
-    // preemptible-cluster posture; contraction is deterministic, so
-    // recompute is bit-identical.
+      maxIter: Int = 50): DataFrame = {
+    // Canonical (u < v) long edges, self-loops dropped; each round is
+    // staged ([[Staging.stage]]), so with a checkpoint dir a lost executor
+    // re-reads the round instead of failing the whole O(log n)-round job.
     val canonical = pairs
       .select(col(aCol).cast("long").as("x"), col(bCol).cast("long").as("y"))
       .where(col("x") =!= col("y") && col("x").isNotNull && col("y").isNotNull)
@@ -85,7 +80,7 @@ object Components {
     // sum overflows under ANSI.
     val signature = struct(count(lit(1)),
       coalesce(sum(xxhash64(col("u"), col("v")).cast("decimal(28,0)")), lit(BigDecimal(0))))
-    val fx = new Fixpoint("connectedComponents", reliable)
+    val fx = new Fixpoint("connectedComponents")
     val edges = fx.peel(canonical, maxIter,
       Fixpoint.Fail(s"maxIter=$maxIter", "the contraction did not converge — O(log n) rounds " +
         "suffice for any input, so this is a bug, not a big graph"),
@@ -94,12 +89,8 @@ object Components {
     // Fixpoint edges form stars (root = component minimum): u is the root
     // on canonical edges. Roots map to themselves.
     // explode, not union-of-selects: one scan of the fixpoint leaf (r18).
-    // Pinned on the reliable posture, so a caller can release the result.
-    val out = fx.finish(
-      edges.select(explode(array(col("v"), col("u"))).as("id"), col("u").as("component"))
-        .groupBy("id").agg(min(col("component")).as("component")))
-    fx.release(edges)
-    out
+    edges.select(explode(array(col("v"), col("u"))).as("id"), col("u").as("component"))
+      .groupBy("id").agg(min(col("component")).as("component"))
   }
 
   /** Canonical-member election per cluster: given a membership table
@@ -173,8 +164,7 @@ object Components {
       componentCol: String = "component",
       aCol: String = "a_id",
       bCol: String = "b_id",
-      maxIter: Int = 50,
-      reliable: Boolean = false): DataFrame = {
+      maxIter: Int = 50): DataFrame = {
     val stars = prevLabels.select(col(idCol).cast("long").as("a_id"),
       col(componentCol).cast("long").as("b_id"))
       .where(col("a_id") =!= col("b_id"))
@@ -185,7 +175,7 @@ object Components {
     val fresh = newPairs.select(col(aCol).cast("long").as("a_id"),
       col(bCol).cast("long").as("b_id"))
     val merged = connectedComponents(stars.unionByName(fresh),
-      maxIter = maxIter, reliable = reliable)
+      maxIter = maxIter)
     // ids present before but untouched by any edge (old singletons, or
     // members whose whole component had no new edge AND was a singleton
     // star) keep their old label; merged labels win elsewhere

@@ -37,10 +37,9 @@ object Coverage {
       pairs: DataFrame,
       k: Int,
       idCol: String = "doc_id",
-      featureCol: String = "token",
-      reliable: Boolean = false): DataFrame = {
+      featureCol: String = "token"): DataFrame = {
     require(k >= 1 && k <= 1000, s"k must be in [1,1000]: $k")
-    val fx = new Fixpoint("greedyMaxCoverage", reliable)
+    val fx = new Fixpoint("greedyMaxCoverage")
     val picks = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
     fx.loop(fx.stage(pairs
       .select(col(idCol).cast("long").as("id"),
@@ -70,7 +69,7 @@ object Coverage {
         }
       }
     }
-    fx.finish(pairs.sparkSession.createDataFrame(picks.toSeq)
-      .toDF("pick", "doc_id", "gain", "covered_total"), eager = true)
+    fx.stage(pairs.sparkSession.createDataFrame(picks.toSeq)
+      .toDF("pick", "doc_id", "gain", "covered_total"))
   }
 }

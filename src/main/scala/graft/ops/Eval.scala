@@ -480,15 +480,14 @@ object Eval {
       winnerCol: String = "winner",
       loserCol: String = "loser",
       iterations: Int = 3,
-      scale: Long = 1000000L,
-      reliable: Boolean = false): DataFrame = {
+      scale: Long = 1000000L): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
     require(scale >= 2, s"scale must be >= 2: $scale")
     val d = duels.select(col(winnerCol).cast("long").as("w"),
       col(loserCol).cast("long").as("l"))
       .where(col("w").isNotNull && col("l").isNotNull && col("w") =!= col("l"))
     val directed = d.groupBy(col("w"), col("l")).agg(count(lit(1)).as("c"))
-    val fx = new Fixpoint("bradleyTerry", reliable)
+    val fx = new Fixpoint("bradleyTerry")
     // symmetric opponent table: (i, j, n_ij) both ways — the denominator
     // scans each item's opponent list once per round
     val sym = fx.stage(directed
@@ -518,8 +517,7 @@ object Eval {
         greatest(lit(1L), expr(s"(cast(s as decimal(38,0)) * ${scale}L) div ${mx}L")
           .cast("long")).as("s"))), true)
     }
-    fx.finish(s.join(stats, Seq("i"))
-      .select(col("i").as("id"), col("s").as("strength_e6"), col("wins"), col("games")),
-      eager = true)
+    fx.stage(s.join(stats, Seq("i"))
+      .select(col("i").as("id"), col("s").as("strength_e6"), col("wins"), col("games")))
   }
 }

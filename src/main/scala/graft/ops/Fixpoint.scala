@@ -10,9 +10,8 @@ import org.apache.spark.sql.functions._
 /** The staged fixpoint loop of the graph operators, written once.
   *
   * One instance serves one run of the operator `op`. Every round is
-  * staged through [[Staging.stage]] with the run's `reliable` flag, so
-  * the loop's plan stays flat on both postures. Two loop shapes are
-  * written here:
+  * staged through [[Staging.stage]], so the loop's plan stays flat on
+  * both postures. Two loop shapes are written here:
   *  - [[relax]]: semi-naive min-merge (BFS depths, earliest arrivals,
   *    shortest distances). Each round expands only last round's
   *    improved rows; an empty frontier is the fixpoint.
@@ -21,18 +20,16 @@ import org.apache.spark.sql.functions._
   *    fixpoint.
   * Loops of any other shape (SCC phases, matching rounds, pointer
   * jumping, walks, fixed-count iterations, driver-elected picks) run
-  * their rounds through [[loop]] and stage them through [[stage]];
-  * [[finish]] pins the result and releases the run, and [[release]]
-  * lets a frame go earlier.
+  * their rounds through [[loop]] and stage them through [[stage]].
   *
   * Convergence is read off the job that stages the round: the value a
   * loop decides on (improved-row count, peel value, frontier or
   * remaining-row count) is a `Dataset.observe` metric of the frame
-  * being staged, so a round runs no probe job of its own. The reliable
-  * posture's persist is lazy and runs no job when staged; there one
-  * action both materializes the round and measures it, and no
-  * observation is ever waited on. Each [[relax]] and [[peel]] round
-  * logs its operator, number and measured value at DEBUG.
+  * being staged, so a round runs no probe job of its own. Both staging
+  * postures are eager, so the observation arrives with the staging job
+  * either way. Each [[relax]] and [[peel]] round logs its operator,
+  * number and measured value at DEBUG; a round of any other [[loop]]
+  * logs whether it changed the state.
   *
   * The round cap says what reaching it means ([[Fixpoint.OnCap]]): a
   * BFS depth bound truncates by definition, while every other loop
@@ -44,22 +41,15 @@ import org.apache.spark.sql.functions._
   * interleaved 2×2 A/B at sf0.1): the pinned layout fragments the small
   * per-round frames that AQE coalesces correctly.
   */
-private[graft] final class Fixpoint(op: String, reliable: Boolean) extends Logging {
+private[graft] final class Fixpoint(op: String) extends Logging {
   import Fixpoint._
 
-  private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  /** Stages `df` as one of this run's frames, released by [[finish]].
-    * With `keys`, the frame is a loop invariant staged with that declared
-    * hash layout ([[Staging.stageHash]]); never declare one on a
-    * frontier-sized frame (see the class doc).
+  /** Stages `df`. With `keys`, the frame is a loop invariant staged with
+    * that declared hash layout ([[Staging.stageHash]]); never declare one
+    * on a frontier-sized frame (see the class doc).
     */
-  def stage(df: DataFrame, keys: Seq[String] = Nil): DataFrame = {
-    val s = staged(df, keys); frames += s; s
-  }
-
-  private def staged(df: DataFrame, keys: Seq[String]): DataFrame =
-    if (keys.isEmpty) Staging.stage(df, reliable) else Staging.stageHash(df, keys, reliable)
+  def stage(df: DataFrame, keys: Seq[String] = Nil): DataFrame =
+    if (keys.isEmpty) Staging.stage(df) else Staging.stageHash(df, keys)
 
   /** [[stage]] that also returns the BIGINT aggregate `m` over the
     * staged rows, read off the staging job ([[measured]]).
@@ -75,7 +65,7 @@ private[graft] final class Fixpoint(op: String, reliable: Boolean) extends Loggi
     * staging job ([[measured]]).
     */
   def stageMeasured(df: DataFrame, m: Column, keys: Seq[String] = Nil): (DataFrame, Any) = {
-    val (s, Seq(v)) = measured(m, keys)(_ => df); frames += s
+    val (s, Seq(v)) = measured(m, keys)(_ => df)
     (s, v)
   }
 
@@ -86,37 +76,25 @@ private[graft] final class Fixpoint(op: String, reliable: Boolean) extends Loggi
     * frame. A frame passed through must be one the staged
     * plan computes exactly once.
     *
-    * Default posture: each value is a `Dataset.observe` metric of the
-    * staging job, read with a bounded wait; one that never arrives
-    * throws `IllegalStateException` (a missing value is never taken for
-    * convergence). Reliable posture: staging runs no job, so ONE action
-    * materializes the staged frame and measures every frame, recomputing
-    * the passed-through ones from their staged inputs.
+    * Each value is a `Dataset.observe` metric of the staging job, read
+    * with a bounded wait; one that never arrives throws
+    * `IllegalStateException` (a missing value is never taken for
+    * convergence).
     */
   private def measured(m: Column, keys: Seq[String] = Nil)(
       build: (DataFrame => DataFrame) => DataFrame): (DataFrame, Seq[Any]) = {
-    val v = m.as("v")
-    if (reliable) {
-      val inner = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      val s = staged(build { df => inner += df; df }, keys)
-      val values = (inner :+ s).zipWithIndex
-        .map { case (f, i) => f.agg(v).select(lit(i).as("i"), col("v")) }
-        .reduce(_ unionByName _).collect().sortBy(_.getInt(0)).map(_.get(1))
-      (s, values.toSeq)
-    } else {
-      val obs = scala.collection.mutable.ArrayBuffer.empty[Observation]
-      def observe(df: DataFrame): DataFrame = {
-        val o = Observation(); obs += o; df.observe(o, v)
-      }
-      val s = staged(observe(build(observe)), keys)
-      (s, obs.map { o =>
-        try Await.result(o.future, observationWait).get(0)
-        catch {
-          case _: TimeoutException => throw new IllegalStateException(
-            s"$op: the staging job's observation did not arrive within $observationWait")
-        }
-      }.toSeq)
+    val obs = scala.collection.mutable.ArrayBuffer.empty[Observation]
+    def observe(df: DataFrame): DataFrame = {
+      val o = Observation(); obs += o; df.observe(o, m.as("v"))
     }
+    val s = stage(observe(build(observe)), keys)
+    (s, obs.map { o =>
+      try Await.result(o.future, observationWait).get(0)
+      catch {
+        case _: TimeoutException => throw new IllegalStateException(
+          s"$op: the staging job's observation did not arrive within $observationWait")
+      }
+    }.toSeq)
   }
 
   /** Semi-naive min-merge from `seed` (columns `keys`, the BIGINT
@@ -138,7 +116,7 @@ private[graft] final class Fixpoint(op: String, reliable: Boolean) extends Loggi
     val cols = seed.columns.toSeq.map(col)
     val improved = col("old").isNull || col(value) < col("old")
     val start = stage(seed)
-    val ((state, _), improving) = loop((start, start), maxRounds, onCap) {
+    val ((state, _), improving) = iterate((start, start), maxRounds, onCap) {
       case ((state, frontier), round) =>
         val (merged, n) = stage(state.withColumn("old", col(value))
           .unionByName(expand(frontier).withColumn("old", lit(null).cast("long")))
@@ -158,55 +136,42 @@ private[graft] final class Fixpoint(op: String, reliable: Boolean) extends Loggi
     * first update that left it unchanged. An unchanged `size` must mean
     * the state before that update was the fixpoint: a count or sum that
     * is monotone over updates, or (with `batch` 1) a signature of the
-    * whole state. Each round releases the previous state on the reliable
-    * posture; the returned state stays staged. Reaching `maxRounds`
-    * rounds while still changing throws the error of `cap`.
+    * whole state. Reaching `maxRounds` rounds while still changing throws
+    * the error of `cap`.
     */
   def peel(seed: DataFrame, maxRounds: Long, cap: Fail, size: Column, batch: Int = 1)(
       step: DataFrame => DataFrame): DataFrame = {
     val (start, Seq(n0)) = measured(size)(_ => seed)
     if (n0 == 0L) start
-    else loop((start, n0), maxRounds, cap) { case ((cur, n), round) =>
+    else iterate((start, n0), maxRounds, cap) { case ((cur, n), round) =>
       val (next, sizes) = measured(size) { through =>
         step((1 until batch).foldLeft(cur)((s, _) => through(step(s))))
       }
       logDebug(s"$op round $round: size ${sizes.mkString(", ")}")
-      release(cur)
       val m = sizes.last
       ((next, m), m != 0L && (n +: sizes).sliding(2).forall { case Seq(a, b) => a != b })
     }._1._1
   }
 
-  /** The operator's result. On the reliable posture `out` is staged and
-    * materialized, then every frame of the run is released (a reliable
-    * persist is lazy: a frame can go only once what reads it is on
-    * disk). Otherwise `out` is staged only when `eager`.
-    */
-  def finish(out: DataFrame, eager: Boolean = false): DataFrame =
-    if (!reliable && !eager) out
-    else {
-      val pinned = Staging.stage(out, reliable)
-      if (reliable) {
-        pinned.count()
-        frames.foreach(_.unpersist())
-      }
-      pinned
-    }
-
-  /** Releases `df` now on the reliable posture (a frame of this run, or
-    * the pinned result of a nested run) instead of at [[finish]]. Call it
-    * only once every frame that reads `df` is materialized.
-    */
-  def release(df: DataFrame): Unit =
-    if (reliable) { df.unpersist(); frames -= df }
-
   /** Runs `round(state, r)` for r = 1, 2, … until it reports no change
     * or `maxRounds` rounds ran; returns the last state and the number of
     * rounds that changed it. A round that reports no change is counted
     * against `maxRounds` too, so a loop that charges only changing rounds
-    * passes its budget + 1.
+    * passes its budget + 1. Each round logs at DEBUG whether it changed
+    * the state.
     */
   def loop[S](init: S, maxRounds: Long, onCap: OnCap)(
+      round: (S, Int) => (S, Boolean)): (S, Int) =
+    iterate(init, maxRounds, onCap) { (s, r) =>
+      val next = round(s, r)
+      logDebug(s"$op round $r: ${if (next._2) "changed" else "fixpoint"}")
+      next
+    }
+
+  /** [[loop]] without its log line, for [[relax]] and [[peel]], which
+    * log their measured values instead.
+    */
+  private def iterate[S](init: S, maxRounds: Long, onCap: OnCap)(
       round: (S, Int) => (S, Boolean)): (S, Int) = {
     var state = init
     var rounds = 0

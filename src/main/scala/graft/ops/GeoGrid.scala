@@ -100,12 +100,9 @@ object GeoGrid {
       xCol: Column,
       yCol: Column,
       eps: Long,
-      minPts: Int,
-      reliable: Boolean = false): DataFrame = {
+      minPts: Int): DataFrame = {
     require(minPts >= 1, s"minPts must be >= 1: $minPts")
-    // the posture covers EVERY staged frame here, not just the nested
-    // components loop
-    val fx = new Fixpoint("dbscan", reliable)
+    val fx = new Fixpoint("dbscan")
     val pts = fx.stage(points.select(col(idCol).cast("long").as("id")))
     val pairs = fx.stage(
       radiusPairs(points, idCol, xCol, yCol, eps).select(col("a_id"), col("b_id")))
@@ -123,8 +120,7 @@ object GeoGrid {
     val coreEdges = pairs
       .join(core.select(col("id").as("a_id")), Seq("a_id"), "left_semi")
       .join(core.select(col("id").as("b_id")), Seq("b_id"), "left_semi")
-    val comp = Components.connectedComponents(coreEdges,
-      aCol = "a_id", bCol = "b_id", reliable = reliable)
+    val comp = Components.connectedComponents(coreEdges, aCol = "a_id", bCol = "b_id")
     val coreLabels = fx.stage(core.join(comp, Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("cluster")))
     // union-of-swap kept deliberately — same A/B evidence as `deg` above
@@ -140,8 +136,6 @@ object GeoGrid {
         .unionByName(border))
     val noise = pts.join(assigned.select(col("id")), Seq("id"), "left_anti")
       .select(col("id"), lit(-1L).as("cluster"), lit("noise").as("kind"))
-    val out = fx.finish(assigned.unionByName(noise), eager = true)
-    fx.release(comp)
-    out
+    fx.stage(assigned.unionByName(noise))
   }
 }

@@ -124,13 +124,8 @@ object GraphMetrics {
       pairs: DataFrame,
       aCol: String = "a_id",
       bCol: String = "b_id",
-      rounds: Int = 2,
-      reliable: Boolean = false): DataFrame = {
+      rounds: Int = 2): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0: $rounds")
-    // Caller-selectable staging posture ([[Staging.stage]]) — the
-    // propagation is deterministic, so the lineage-keeping reliable path
-    // recomputes lost partitions bit-identically.
-    //
     // Declared-layout staging (r18): the previous `repartition(p,
     // dst).cache()` intended a loop-invariant dst-hashed layout, but
     // under AQE a cache boundary reports UnknownPartitioning at planning
@@ -139,7 +134,7 @@ object GraphMetrics {
     // physically AND declares it on the staged leaf; the explode
     // symmetrize builds the canonical edge set once, not once per union
     // branch.
-    val fx = new Fixpoint("labelPropagation", reliable)
+    val fx = new Fixpoint("labelPropagation")
     val sym = fx.stage(symmetrize(canonicalEdges(pairs, aCol, bCol)), Seq("dst"))
     val labels0 = fx.stage(sym.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("label")))
@@ -161,7 +156,7 @@ object GraphMetrics {
       // otherwise.
       (if (i == rounds || i % 4 == 0) fx.stage(next) else next, true)
     }
-    fx.finish(labels)
+    labels
   }
 
   /** Exact 2-hop neighborhood size per node: (id, n_1hop, n_2hop) where
@@ -186,17 +181,11 @@ object GraphMetrics {
       pairs: DataFrame,
       aCol: String = "a_id",
       bCol: String = "b_id",
-      maxDegree: Int = Int.MaxValue,
-      reliable: Boolean = false): DataFrame = {
+      maxDegree: Int = Int.MaxValue): DataFrame = {
     require(maxDegree >= 1, s"maxDegree must be >= 1: $maxDegree")
     // Materialize the adjacency once: it feeds BOTH sides of the wedge
     // join, the union and the 1-hop count — without this the caller's
     // (possibly expensive) pair-building plan re-runs four times.
-    // Caller-selectable posture ([[Staging.stage]]): the default
-    // localCheckpoint is eager and non-fault-tolerant (fastest; executor
-    // loss kills the query); `reliable = true` swaps in a lazy
-    // persist(DISK_ONLY) that recomputes lost blocks from lineage — the
-    // right call on preemptible nodes.
     //
     // r18 refinements over the r17 explicit-repartition fix (which pinned
     // core-count parallelism because AQE byte-coalesced the wedge join to
@@ -210,7 +199,7 @@ object GraphMetrics {
     // symmetrize to a duplicate-free set by construction, so the distinct
     // was a pure edge-scale exchange + agg.
     val oneHop = Staging.stageHash(
-      symmetrize(canonicalEdges(pairs, aCol, bCol)), Seq("src"), reliable)
+      symmetrize(canonicalEdges(pairs, aCol, bCol)), Seq("src"))
     val part = pairs.sparkSession.sparkContext.defaultParallelism
     val mid =
       if (maxDegree == Int.MaxValue) oneHop
@@ -292,20 +281,18 @@ object GraphMetrics {
     * while a path peels one layer per round. A peel cut short by `maxRounds` is not the k-core (it
     * keeps nodes a later round would delete), so exhausting the bound
     * throws `IllegalStateException`; raise it for deep cascades. Each
-    * round is staged ([[Fixpoint.peel]], caller-selectable fault
-    * tolerance via `reliable`): the loop's plan would otherwise double
-    * per round.
+    * round is staged ([[Fixpoint.peel]]): the loop's plan would
+    * otherwise double per round.
     */
   def kCore(
       pairs: DataFrame,
       k: Int,
       aCol: String = "a_id",
       bCol: String = "b_id",
-      maxRounds: Int = 50,
-      reliable: Boolean = false): DataFrame = {
+      maxRounds: Int = 50): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
-    val core = new Fixpoint("kCore", reliable).peel(symmetrize(canonicalEdges(pairs, aCol, bCol)),
+    val core = new Fixpoint("kCore").peel(symmetrize(canonicalEdges(pairs, aCol, bCol)),
       maxRounds, Fixpoint.Fail(s"maxRounds=$maxRounds"), count(lit(1))) { sym =>
       val keep = sym.groupBy("src").agg(count(lit(1)).as("__d"))
         .where(col("__d") >= k).select(col("src").as("__keep"))
@@ -457,9 +444,8 @@ object GraphMetrics {
       pairs: DataFrame,
       aCol: String = "a_id",
       bCol: String = "b_id",
-      maxDegree: Int = Int.MaxValue,
-      reliable: Boolean = false): DataFrame =
-    neighborhoodSize(pairs, aCol, bCol, maxDegree, reliable)
+      maxDegree: Int = Int.MaxValue): DataFrame =
+    neighborhoodSize(pairs, aCol, bCol, maxDegree)
       .select(col("id"), col("n_1hop"), col("n_2hop"),
         (lit(1000000L) * col("n_1hop")
           + lit(500000L) * (col("n_2hop") - col("n_1hop"))).as("harmonic2_ppm"))
@@ -492,10 +478,9 @@ object GraphMetrics {
       aCol: String = "a_id",
       bCol: String = "b_id",
       sourceCol: String = "id",
-      maxDepth: Int = 10,
-      reliable: Boolean = false): DataFrame = {
+      maxDepth: Int = 10): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be >= 1: $maxDepth")
-    val fx = new Fixpoint("multiSourceCloseness", reliable)
+    val fx = new Fixpoint("multiSourceCloseness")
     val sym = fx.stage(symmetrize(canonicalEdges(pairs, aCol, bCol)))
     // min(dist) keeps the first-reach depth: round r's frontier sits at
     // depth r − 1, so its candidates arrive at depth r, beyond every dist
@@ -507,12 +492,12 @@ object GraphMetrics {
       frontier.join(sym, col("node") === col("src"))
         .select(col("source"), col("dst").as("node"), (col("dist") + 1L).as("dist"))
     }
-    fx.finish(visited.groupBy("source")
+    visited.groupBy("source")
       .agg((count(lit(1)) - 1L).as("n_reached"), sum(col("dist")).as("sum_dist"))
       .select(col("source"), col("n_reached"), col("sum_dist"),
         when(col("sum_dist") > 0L,
           expr("(n_reached * 1000000L) div sum_dist")).otherwise(lit(0L))
-          .as("closeness_ppm")))
+          .as("closeness_ppm"))
   }
 
   /** TIME-RESPECTING reachability (temporal BFS): from each source, the
@@ -550,10 +535,9 @@ object GraphMetrics {
       dstCol: String = "dst",
       timeCol: String = "t",
       sourceCol: String = "id",
-      maxHops: Int = 10,
-      reliable: Boolean = false): DataFrame = {
+      maxHops: Int = 10): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1: $maxHops")
-    val fx = new Fixpoint("temporalReachability", reliable)
+    val fx = new Fixpoint("temporalReachability")
     val e = fx.stage(edges.select(
       col(srcCol).cast("long").as("e_src"), col(dstCol).cast("long").as("e_dst"),
       col(timeCol).cast("long").as("e_t"))
@@ -567,7 +551,7 @@ object GraphMetrics {
         .where(col("e_t") >= col("arr"))
         .select(col("source"), col("e_dst").as("node"), col("e_t").as("arr"))
     }
-    fx.finish(arrivals.where(col("arr") =!= Long.MinValue))
+    arrivals.where(col("arr") =!= Long.MinValue)
   }
 
   def linkJaccard(
@@ -589,7 +573,7 @@ object GraphMetrics {
     // canonical edge list is read back off the staged leaf (src < dst
     // rows) instead of recomputed.
     val sym = Staging.stageHash(
-      symmetrize(canonicalEdges(pairs, aCol, bCol)), Seq("src"), reliable = false)
+      symmetrize(canonicalEdges(pairs, aCol, bCol)), Seq("src"))
     val e = sym.where(col("src") < col("dst"))
       .select(col("src").as("u"), col("dst").as("v"))
     val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("__d"))
@@ -658,12 +642,11 @@ object GraphMetrics {
       k: Int,
       aCol: String = "a_id",
       bCol: String = "b_id",
-      maxRounds: Int = 50,
-      reliable: Boolean = false): DataFrame = {
+      maxRounds: Int = 50): DataFrame = {
     require(k >= 3, s"k must be >= 3: $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
     var oriented: Option[DataFrame] = None
-    val truss = try new Fixpoint("kTruss", reliable).peel(
+    val truss = try new Fixpoint("kTruss").peel(
       canonicalEdges(pairs, aCol, bCol).withColumn("support", lit(0L)),
       maxRounds, Fixpoint.Fail(s"maxRounds=$maxRounds"), count(lit(1))) { cur =>
       oriented.foreach(_.unpersist())
@@ -690,9 +673,8 @@ object GraphMetrics {
       k: Int,
       aCol: String = "a_id",
       bCol: String = "b_id",
-      maxRounds: Int = 50,
-      reliable: Boolean = false): DataFrame =
-    kTruss(pairs, k, aCol, bCol, maxRounds, reliable)
+      maxRounds: Int = 50): DataFrame =
+    kTruss(pairs, k, aCol, bCol, maxRounds)
       .groupBy("support").agg(count(lit(1)).as("n_edges"))
 
   /** Per-node CORENESS (k-core number): the largest k such that the node
@@ -729,10 +711,9 @@ object GraphMetrics {
       pairs: DataFrame,
       aCol: String = "a_id",
       bCol: String = "b_id",
-      maxRounds: Int = 100,
-      reliable: Boolean = false): DataFrame = {
+      maxRounds: Int = 100): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
-    val fx = new Fixpoint("coreDecomposition", reliable)
+    val fx = new Fixpoint("coreDecomposition")
     val sym = fx.stage(symmetrize(canonicalEdges(pairs, aCol, bCol)))
     // H-index from the VALUE HISTOGRAM, not per-neighbor ranks: with
     // c_v = #neighbors at value ≥ v, H = max over present values v of
@@ -771,8 +752,6 @@ object GraphMetrics {
     val h = fx.peel(
       sym.groupBy("src").agg(count(lit(1)).as("h")), (maxRounds + batch - 1) / batch,
       Fixpoint.Fail(s"maxRounds=$maxRounds"), coalesce(sum(col("h")), lit(0L)), batch)(update)
-    // the peel leaves h materialized, so the edge list can go
-    fx.release(sym)
     h.select(col("src").as("id"), col("h").as("coreness"))
   }
 
@@ -804,15 +783,14 @@ object GraphMetrics {
       aCol: String = "a_id",
       bCol: String = "b_id",
       idCol: String = "id",
-      communityCol: String = "community",
-      reliable: Boolean = false): DataFrame = {
+      communityCol: String = "community"): DataFrame = {
     val e = canonicalEdges(pairs, aCol, bCol)
     // distinct: a duplicated (id, community) row in an externally
     // produced labeling would multiply edge rows through the joins and
     // inflate m, degree_sum and n_internal all at once
     val lab = labels.select(col(idCol).cast("long").as("__id"),
       col(communityCol).cast("long").as("__c")).distinct()
-    val fx = new Fixpoint("modularity", reliable)
+    val fx = new Fixpoint("modularity")
     // unlabeled nodes become singleton communities keyed by own id; m is
     // counted on the staging job
     val (labeled, m) = fx.stage(e
@@ -837,7 +815,7 @@ object GraphMetrics {
             (1000000L * (4L * cast(${m}L as decimal(38,0)) * n_internal
                          - cast(degree_sum as decimal(38,0)) * degree_sum))
             div (4L * cast(${m}L as decimal(38,0)) * ${m}L) as bigint)"""))
-    fx.finish(out)
+    out
   }
 
   /** Integer HITS (Kleinberg hubs & authorities) on a DIRECTED edge
@@ -865,18 +843,16 @@ object GraphMetrics {
     * score table twice (max side + normalize side) and add a
     * per-half-round broadcast exchange; with the literal, the score
     * chain is referenced once per round and the plan stays one join
-    * shallower on every posture. (Since [[Staging.stage]] leaf-wraps the
-    * reliable persist, double references no longer compound across
-    * rounds — the literal is now a per-round simplification, not a
-    * blow-up guard.)
+    * shallower. (Staged frames are leaves, so double references would
+    * not compound across rounds either — the literal is a per-round
+    * simplification, not a blow-up guard.)
     */
   def hits(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
       iterations: Int,
-      scale: Long = 1000000L,
-      reliable: Boolean = false): DataFrame = {
+      scale: Long = 1000000L): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
     require(scale >= 1, s"scale must be >= 1: $scale")
     // One plain staged edge copy (r18 note): a dual declared-layout
@@ -885,7 +861,7 @@ object GraphMetrics {
     // interleaved 2x2 A/B at sf0.1 — the extra materialization plus the
     // pinned 32-way layouts cost more than the tiny per-iteration
     // exchanges they replaced (the same class as the BFS-loop reverts).
-    val fx = new Fixpoint("hits", reliable)
+    val fx = new Fixpoint("hits")
     val e = fx.stage(
       edges.select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d")).distinct())
     val nodes = fx.stage(e.select(explode(array(col("s"), col("d"))).as("id")).distinct())
@@ -919,7 +895,7 @@ object GraphMetrics {
           .select(col("id"), coalesce(col("hub"), lit(0L)).as("hub")), "hub")
         ((auths, next), true)
     }
-    fx.finish(auths.join(hubs, Seq("id")))
+    auths.join(hubs, Seq("id"))
   }
 
   /** Deterministic hash-seeded random walks — the DeepWalk/node2vec
@@ -951,8 +927,7 @@ object GraphMetrics {
     * adjacency once; `maxDegree` caps that deterministically
     * (row_number by neighbor id, the same documented truncation as
     * [[linkJaccard]]) when hub degrees would dominate. Nothing
-    * collects; per-step state is staged and released on the reliable
-    * posture once the corpus is pinned.
+    * collects; per-step state is staged.
     */
   def randomWalks(
       pairs: DataFrame,
@@ -962,9 +937,8 @@ object GraphMetrics {
       aCol: String = "a_id",
       bCol: String = "b_id",
       maxDegree: Int = Int.MaxValue,
-      reliable: Boolean = false,
       walkCol: String = ""): DataFrame =
-    walk("randomWalks", pairs, starts, steps, startCol, aCol, bCol, maxDegree, reliable,
+    walk("randomWalks", pairs, starts, steps, startCol, aCol, bCol, maxDegree,
         walkCol)(identity) { (pos, sym, step) =>
       // the choice hash binds (walk, step, candidate): independent
       // draws per walk and per step, replayable as a SQL expression
@@ -987,13 +961,12 @@ object GraphMetrics {
     * `(walk_id, step, node)` including step 0, staged.
     */
   private def walk(op: String, pairs: DataFrame, starts: DataFrame, steps: Int,
-      startCol: String, aCol: String, bCol: String, maxDegree: Int, reliable: Boolean,
-      walkCol: String)(seed: DataFrame => DataFrame)(
+      startCol: String, aCol: String, bCol: String, maxDegree: Int, walkCol: String)(seed: DataFrame => DataFrame)(
       hop: (DataFrame, DataFrame, Int) => DataFrame): DataFrame = {
     require(steps >= 1, s"steps must be >= 1: $steps")
     require(maxDegree >= 1, s"maxDegree must be >= 1: $maxDegree")
     import org.apache.spark.sql.expressions.Window
-    val fx = new Fixpoint(op, reliable)
+    val fx = new Fixpoint(op)
     // explode symmetrize: one canonicalEdges pass, not two (r18)
     val symAll = symmetrize(canonicalEdges(pairs, aCol, bCol))
     val sym = fx.stage(
@@ -1010,12 +983,12 @@ object GraphMetrics {
           col(startCol).cast("long").as("node")).distinct()
     val (pos, walkers) = fx.stage(seed(startRows), count(lit(1)))
     val start = pos.select(col("walk_id"), lit(0L).as("step"), col("node"))
-    fx.finish(if (walkers == 0L) start else fx.loop((pos, start), steps, Fixpoint.Truncate) {
+    fx.stage(if (walkers == 0L) start else fx.loop((pos, start), steps, Fixpoint.Truncate) {
       case ((pos, corpus), step) =>
         val (nxt, moved) = fx.stage(hop(pos, sym, step), count(lit(1)))
         ((nxt, corpus.unionByName(
           nxt.select(col("walk_id"), lit(step.toLong).as("step"), col("node")))), moved > 0L)
-    }._1._2, eager = true)
+    }._1._2)
   }
 
   /** node2vec-BIASED deterministic walks (Grover & Leskovec, "node2vec:
@@ -1057,11 +1030,10 @@ object GraphMetrics {
       aCol: String = "a_id",
       bCol: String = "b_id",
       maxDegree: Int = Int.MaxValue,
-      reliable: Boolean = false,
       walkCol: String = ""): DataFrame = {
     require(returnWeight >= 1L && nearWeight >= 1L && farWeight >= 1L,
       s"class weights must be >= 1: ($returnWeight, $nearWeight, $farWeight)")
-    walk("node2vecWalks", pairs, starts, steps, startCol, aCol, bCol, maxDegree, reliable,
+    walk("node2vecWalks", pairs, starts, steps, startCol, aCol, bCol, maxDegree,
         walkCol)(_.select(col("walk_id"), col("node").as("prev"), col("node"))) {
       (pos, sym, step) =>
         pos
@@ -1110,10 +1082,9 @@ object GraphMetrics {
       startId: Long,
       aCol: String = "a_id",
       bCol: String = "b_id",
-      maxDepth: Int = 32,
-      reliable: Boolean = false): DataFrame = {
+      maxDepth: Int = 32): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be >= 1: $maxDepth")
-    val fx = new Fixpoint("doubleSweep", reliable)
+    val fx = new Fixpoint("doubleSweep")
     val sym = fx.stage(symmetrize(canonicalEdges(pairs, aCol, bCol)))
     val spark = sym.sparkSession
     def bfs(source: Long): DataFrame = fx.relax(
@@ -1129,10 +1100,10 @@ object GraphMetrics {
     val (farNode, eccStart) = (pivot.getLong(0), pivot.getLong(1))
     val nReached = first.count()
     val second = bfs(farNode)
-    fx.finish(second.agg(max(col("dist")).as("diameter_lb"))
+    fx.stage(second.agg(max(col("dist")).as("diameter_lb"))
       .select(lit(startId).as("start_id"), lit(eccStart).as("ecc_start"),
         lit(nReached).as("n_reached"), lit(farNode).as("peripheral_id"),
-        col("diameter_lb")), eager = true)
+        col("diameter_lb")))
   }
 
   /** Resource-allocation link prediction — [[linkJaccard]]'s weighted
@@ -1168,7 +1139,7 @@ object GraphMetrics {
     // symmetrized canonical edges; the is_edge join reads the canonical
     // list back off the staged leaf.
     val sym = Staging.stageHash(
-      symmetrize(canonicalEdges(pairs, aCol, bCol)), Seq("src"), reliable = false)
+      symmetrize(canonicalEdges(pairs, aCol, bCol)), Seq("src"))
     val e = sym.where(col("src") < col("dst"))
       .select(col("src").as("u"), col("dst").as("v"))
     val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("__d"))
@@ -1248,8 +1219,7 @@ object GraphMetrics {
     * symmetric edges + one min/σ-merge aggregation with the ball,
     * [[Fixpoint.relax]]), ONE 3-way equi-join building the DAG,
     * `maxDepth − 1` backward rounds (DAG level ⋈ deeper deltas + agg),
-    * one final agg. Nothing collects; every staged frame is released
-    * once the result is pinned on the reliable posture.
+    * one final agg. Nothing collects.
     */
   def betweennessSampled(
       pairs: DataFrame,
@@ -1257,10 +1227,9 @@ object GraphMetrics {
       aCol: String = "a_id",
       bCol: String = "b_id",
       sourceCol: String = "id",
-      maxDepth: Int = 4,
-      reliable: Boolean = false): DataFrame = {
+      maxDepth: Int = 4): DataFrame = {
     require(maxDepth >= 2, s"maxDepth must be >= 2: $maxDepth")
-    val fx = new Fixpoint("betweennessSampled", reliable)
+    val fx = new Fixpoint("betweennessSampled")
     val sym = fx.stage(symmetrize(canonicalEdges(pairs, aCol, bCol)))
     // forward: ball membership (source, node, dist, sigma). A node
     // already in the ball keeps its recorded σ (min over its one old
@@ -1310,11 +1279,11 @@ object GraphMetrics {
           .cast("long").as("delta"))
       fx.stage(deltas.unionByName(lv))
     }
-    fx.finish(deltas
+    fx.stage(deltas
       .where(col("node") =!= col("source"))
       .groupBy("node")
       .agg(sum(col("delta")).as("bc_e9"), count(lit(1)).as("n_sources"))
-      .where(col("bc_e9") > 0L), eager = true)
+      .where(col("bc_e9") > 0L))
   }
 
   def temporalRelayCount(

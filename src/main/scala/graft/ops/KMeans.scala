@@ -48,16 +48,13 @@ object KMeans {
       idCol: String,
       vecCol: String,
       k: Int,
-      iterations: Int,
-      reliable: Boolean = false): (DataFrame, DataFrame) = {
+      iterations: Int): (DataFrame, DataFrame) = {
     require(k > 0 && iterations >= 0, "k and iterations must be positive")
-    val fx = new Fixpoint("KMeans", reliable)
+    val fx = new Fixpoint("KMeans")
     // Quantize to the non-negative lattice [0, 254] (shift keeps integer
     // division = floor division in every engine). Staged ([[Staging
-    // .stage]], caller-selectable fault tolerance — quantization is a
-    // pure function of the input, so the reliable persist(DISK_ONLY)
-    // path recomputes lost blocks bit-identically): q feeds every
-    // round — unstaged, the source would rescan iterations+1 times.
+    // .stage]]): q feeds every round — unstaged, the source would rescan
+    // iterations+1 times.
     val q = fx.stage(points
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("__v"))
       .withColumn("__m", VectorFunctions.maxAbs(col("__v")))
@@ -106,10 +103,10 @@ object KMeans {
         .select(col("cid"), coalesce(col("cvec_new"), col("cvec")).as("cvec"))), true)
     }
     // the final codebook is on the driver already: the centroids are
-    // returned from it, so only the assignments need pinning
+    // returned from it
     val last = codebook(centroids)
     (q.sparkSession.createDataFrame(java.util.Arrays.asList(last: _*), centroids.schema),
-      fx.finish(assign(last).drop("qv")))
+      assign(last).drop("qv"))
   }
 
   /** Per-cluster summary after `iterations` rounds: size, total squared
@@ -122,9 +119,8 @@ object KMeans {
       idCol: String,
       vecCol: String,
       k: Int,
-      iterations: Int,
-      reliable: Boolean = false): DataFrame = {
-    val (centroids, assigned) = fit(points, idCol, vecCol, k, iterations, reliable)
+      iterations: Int): DataFrame = {
+    val (centroids, assigned) = fit(points, idCol, vecCol, k, iterations)
     assigned.groupBy("cid")
       .agg(count(lit(1)).as("n"), sum(col("dist")).as("inertia"))
       .join(centroids.select(col("cid"),

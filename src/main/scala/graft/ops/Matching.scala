@@ -44,11 +44,10 @@ object Matching {
       aCol: String = "a_id",
       bCol: String = "b_id",
       weightCol: String = "w",
-      maxIter: Int = 60,
-      reliable: Boolean = false): DataFrame = {
+      maxIter: Int = 60): DataFrame = {
     require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
     val spark = edges.sparkSession
-    val fx = new Fixpoint("greedyMatching", reliable)
+    val fx = new Fixpoint("greedyMatching")
     val a = col(aCol).cast("long"); val b = col(bCol).cast("long")
     val (e0, n0) = fx.stage(edges
       .select(least(a, b).as("u"), greatest(a, b).as("v"),
@@ -84,6 +83,6 @@ object Matching {
       // O(1) depth) — staging the accumulator would only buy a job
       ((rest, matched.unionByName(taken)), left > 0L)
     }._1._2
-    fx.finish(matched, eager = true)
+    fx.stage(matched)
   }
 }

@@ -403,25 +403,20 @@ object Ngrams {
       textCol: String = "text",
       rounds: Int = 16,
       endOfWord: String = "</w>",
-      batch: Int = 1,
-      reliable: Boolean = false): DataFrame = {
+      batch: Int = 1): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
     require(batch >= 1, s"batch must be >= 1: $batch")
-    val fx = new Fixpoint("bpeMerges", reliable)
-    // Word-type table staged with the caller-selectable posture
-    // ([[Staging.stage]]): `reliable = true` keeps lineage so an
-    // executor loss mid-training recomputes the lost partition instead
-    // of killing a multi-hundred-round vocabulary run; the rewrite chain
-    // is deterministic, so recompute is bit-identical.
+    val fx = new Fixpoint("bpeMerges")
+    // Word-type table staged ([[Staging.stage]]): with a checkpoint dir
+    // an executor loss mid-training re-reads the staged table instead of
+    // killing a multi-hundred-round vocabulary run.
     val vocab0 = fx.stage(Dedup.parallelize(docs)
       .select(explode(Dedup.wordTokens(col(textCol))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("n"))
       .select(concat(split(col("word"), ""), array(lit(endOfWord))).as("syms"), col("n")))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
-    // state: the vocabulary, its latest staged snapshot, the snapshot
-    // staged before that one, and the merges applied since the latest
-    val ((_, latest, older, _), _) = fx.loop((vocab0, vocab0, Option.empty[DataFrame], 0),
-        rounds, Fixpoint.Truncate) { case ((vocab, latest, older, since), _) =>
+    // state: the vocabulary and the merges applied since it was staged
+    fx.loop((vocab0, 0), rounds, Fixpoint.Truncate) { case ((vocab, since), _) =>
       val want = math.min(batch, rounds - merges.size)
       val top = vocab.select(col("n"),
           explode(zip_with(
@@ -432,9 +427,7 @@ object Ngrams {
         .agg(sum("n").as("cnt"))
         .orderBy(col("cnt").desc, col("l"), col("rt"))
         .limit(want).collect()
-      // the election read the latest snapshot: at most two stay on disk
-      older.foreach(fx.release)
-      if (top.isEmpty) ((vocab, latest, None, since), false)
+      if (top.isEmpty) ((vocab, since), false)
       else {
         // Maximal conflict-free prefix of the election order: the first
         // pair always applies; later candidates apply only while no
@@ -454,14 +447,10 @@ object Ngrams {
           }.as("syms"), col("n"))
         // linear lineage; truncate periodically like the other fixpoints
         val state =
-          if (since + selected.size >= 4) { val s = fx.stage(next); (s, s, Some(latest), 0) }
-          else (next, latest, None, since + selected.size)
+          if (since + selected.size >= 4) (fx.stage(next), 0) else (next, since + selected.size)
         (state, merges.size < rounds)
       }
     }
-    // the merge table lives on the driver: no snapshot outlives the call
-    older.foreach(fx.release)
-    fx.release(latest)
     // merge_rank/left_sym/right_sym: names chosen to stay clear of the
     // SQL keywords rank/left/right in every oracle engine.
     docs.sparkSession.createDataFrame(merges.toSeq)
@@ -712,7 +701,7 @@ object Ngrams {
       textCol: String = "text",
       window: Int = 3,
       minCount: Long = 1L): DataFrame = {
-    val co = Staging.stage(skipGrams(docs, textCol, window, 1L), reliable = false)
+    val co = Staging.stage(skipGrams(docs, textCol, window, 1L))
     val rowm = co.groupBy("center").agg(sum(col("n")).as("n_center"))
     val colm = co.groupBy("context").agg(sum(col("n")).as("n_context"))
     val tot = co.groupBy().agg(sum(col("n")).as("n_total"))

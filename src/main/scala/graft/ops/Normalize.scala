@@ -203,7 +203,7 @@ object Normalize {
     val p = df.sparkSession.sparkContext.defaultParallelism
     // Eager pin for the same reason as denseIds: offsets and ranked rows
     // must see one physical split of the sampled range boundaries
-    // ([[Staging.pin]]; `spark.graft.reliablePin` opts into checkpoint()).
+    // ([[Staging.pin]]; a checkpoint dir makes it a reliable checkpoint()).
     val ranged = Staging.pin(df.repartitionByRange(p, orderBy: _*)
       .withColumn("__pid", spark_partition_id()))
     val offsets = ranged.groupBy("__pid")
@@ -265,8 +265,8 @@ object Normalize {
     // ranked rows must see the SAME physical partitioning, and range
     // boundaries are sampled per execution — two independent evaluations
     // of the repartition could split rows differently and desynchronize
-    // pids from offsets. `spark.graft.reliablePin=true` swaps in a real
-    // checkpoint() so the pinned split survives executor loss.
+    // pids from offsets. With a checkpoint dir the pin is a reliable
+    // checkpoint(), so the pinned split survives executor loss.
     val ranged = Staging.pin(df.repartitionByRange(p, col(orderCol), col(tieCol))
       .withColumn("__pid", spark_partition_id()))
     val offsets = ranged.groupBy("__pid").agg(count(lit(1)).as("__n"))

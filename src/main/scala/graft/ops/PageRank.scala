@@ -20,9 +20,8 @@ import org.apache.spark.sql.functions._
   * Scale shape per iteration: one equi-join of the (static) out-degree
   * edge list with the current ranks on the source id + one aggregation on
   * the destination id — both shuffle on node ids, exactly like any wide
-  * join; ranks are staged every few rounds ([[Staging.stage]], caller-
-  * selectable fault tolerance via `reliable`) so the plan stays flat
-  * instead of growing a deep lineage. No driver-side state; edge
+  * join; ranks are staged every few rounds ([[Staging.stage]]) so the
+  * plan stays flat instead of growing a deep lineage. No driver-side state; edge
   * degrees are computed once and reused.
   *
   * Simplification (documented contract): dangling-node mass is NOT
@@ -43,18 +42,13 @@ object PageRank {
       dstCol: String,
       iterations: Int,
       scale: Long = 1000000L,
-      dampingNum: Long = 85L,
-      reliable: Boolean = false): DataFrame = {
+      dampingNum: Long = 85L): DataFrame = {
     checkArgs(iterations, scale, dampingNum)
-    val fx = new Fixpoint("ranksFixedPoint", reliable)
+    val fx = new Fixpoint("ranksFixedPoint")
     // Materialize the (possibly expensive) upstream edge computation
     // once — nodes, degrees and the degree-joined edge list all derive
     // from it, and without this each derivation re-runs the caller's
-    // whole edge-building plan. Posture is caller-selectable
-    // ([[Staging.stage]]): `reliable = true` keeps lineage so a lost
-    // executor recomputes instead of failing — the preemptible-cluster
-    // posture; the loop below is integer-exact, so recompute reproduces
-    // every partition bit-identically.
+    // whole edge-building plan.
     val e = fx.stage(
       edges.select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d")))
     iterate(fx, fx.stage(nodeIds(e), Seq("id")), e, count(lit(1)).as("outdeg"),
@@ -84,10 +78,9 @@ object PageRank {
       seedCol: String,
       iterations: Int,
       scale: Long = 1000000L,
-      dampingNum: Long = 85L,
-      reliable: Boolean = false): DataFrame = {
+      dampingNum: Long = 85L): DataFrame = {
     checkArgs(iterations, scale, dampingNum)
-    val fx = new Fixpoint("personalizedFixedPoint", reliable)
+    val fx = new Fixpoint("personalizedFixedPoint")
     val e = fx.stage(
       edges.select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d")))
     val seedFlag = seeds.select(col(seedCol).cast("long").as("id"))
@@ -140,10 +133,9 @@ object PageRank {
       weightCol: String,
       iterations: Int,
       scale: Long = 1000000L,
-      dampingNum: Long = 85L,
-      reliable: Boolean = false): DataFrame = {
+      dampingNum: Long = 85L): DataFrame = {
     checkArgs(iterations, scale, dampingNum)
-    val fx = new Fixpoint("weightedRanksFixedPoint", reliable)
+    val fx = new Fixpoint("weightedRanksFixedPoint")
     val raw = edges.select(col(srcCol).cast("long").as("s"),
       col(dstCol).cast("long").as("d"), col(weightCol).cast("long").as("w"))
     // The weight-quality probe RIDES the weight-fold aggregation (min
@@ -233,13 +225,10 @@ object PageRank {
       // Rank lineage grows LINEARLY (each iteration references the prior
       // ranks exactly once), so staging every iteration buys nothing
       // structurally while costing one materialization each round. Stage
-      // every 4th round and always on the last. Plan depth per posture:
-      // localCheckpoint and the reliablePin checkpoint() truncate to a
-      // leaf; the lineage-keeping reliable persist leaves the analyzed
-      // tree linear in rounds (execution stays flat — cache substitution
-      // plans each persisted subtree as a leaf; see [[Staging]]).
+      // every 4th round and always on the last; either staging posture
+      // truncates the plan to a leaf ([[Staging]]).
       (if (i == iterations || i % 4 == 0) fx.stage(next) else next, true)
     }
-    fx.finish(ranks)
+    ranks
   }
 }

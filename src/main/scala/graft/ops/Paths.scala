@@ -35,10 +35,9 @@ object Paths {
       dstCol: String = "dst",
       weightCol: String = "w",
       sourceCol: String = "id",
-      maxIter: Int = 60,
-      reliable: Boolean = false): DataFrame = {
+      maxIter: Int = 60): DataFrame = {
     require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
-    val fx = new Fixpoint("weightedSssp", reliable)
+    val fx = new Fixpoint("weightedSssp")
     val raw = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"), col(weightCol).cast("long").as("w"))
     // The weight-sign census is observed on the job that stages the
@@ -64,7 +63,7 @@ object Paths {
       frontier.join(e, col("node") === col("src"))
         .select(col("source"), col("dst").as("node"), (col("dist") + col("w")).as("dist"))
     }
-    fx.finish(dist, eager = true)
+    fx.stage(dist)
   }
 
 }

@@ -541,8 +541,7 @@ object Sampling {
     // top-(k+1) stays a DataFrame (distributed heap-merge); staged so
     // the threshold agg and the final selection execute it once
     val top = Staging.stage(
-      pri.orderBy(col("priority").desc, col("id").asc).limit(k + 1),
-      reliable = false)
+      pri.orderBy(col("priority").desc, col("id").asc).limit(k + 1))
     // ONE row to the driver: the (k+1)-th priority IS the estimator's
     // threshold — population ≤ k rows → τ = 0 → est_weight = weight
     // exactly (the sample is the population, estimator degenerate-exact).

@@ -51,9 +51,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape per round: node-keyed equi-joins and map-side-combined
   * min-aggs only — no cross join, no collect. Every round is staged
-  * ([[Fixpoint]]) so self-joining lineage stays flat, and on the
-  * `reliable` posture the final labels are pinned eagerly and every
-  * intermediate frame released.
+  * ([[Fixpoint]]) so self-joining lineage stays flat, and the final
+  * labels are staged.
   *
   * Returns `(id, component)` with `component` = min node id of the SCC;
   * isolated nodes of `edges`' endpoint universe label themselves.
@@ -64,11 +63,10 @@ object Scc {
       edges: DataFrame,
       srcCol: String = "src",
       dstCol: String = "dst",
-      maxIter: Int = 60,
-      reliable: Boolean = false): DataFrame = {
+      maxIter: Int = 60): DataFrame = {
     require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
     val spark = edges.sparkSession
-    val fx = new Fixpoint("stronglyConnected", reliable)
+    val fx = new Fixpoint("stronglyConnected")
     // self-loops are cycle-irrelevant (a node is always mutually
     // reachable with itself); duplicates only inflate the joins. The
     // node UNIVERSE keeps self-loop-only nodes — they are singleton SCCs.
@@ -193,7 +191,7 @@ object Scc {
           labels.unionByName(reach.select(col("id"), col("component"))))))
       }
     }
-    fx.finish(peel(trim((nodes0, n0, e0, labels0))), eager = true)
+    fx.stage(peel(trim((nodes0, n0, e0, labels0))))
   }
 
   /** Longest-path LAYERING of a DAG: `layer(v)` = the length of the
@@ -218,10 +216,9 @@ object Scc {
       edges: DataFrame,
       srcCol: String = "src",
       dstCol: String = "dst",
-      maxIter: Int = 60,
-      reliable: Boolean = false): DataFrame = {
+      maxIter: Int = 60): DataFrame = {
     require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
-    val fx = new Fixpoint("dagLayers", reliable)
+    val fx = new Fixpoint("dagLayers")
     val raw = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
     val (e, loops) = fx.stage(raw.distinct(), count(when(col("src") === col("dst"), true)))
@@ -257,7 +254,7 @@ object Scc {
         count(when(col("nl") > col("layer"), true)))
       (merged.select(col("id"), col("nl").as("layer")), raised > 0L)
     }._1
-    fx.finish(layers, eager = true)
+    fx.stage(layers)
   }
 
   /** Edges of the CONDENSATION — the DAG obtained by contracting every
@@ -271,9 +268,8 @@ object Scc {
       edges: DataFrame,
       srcCol: String = "src",
       dstCol: String = "dst",
-      maxIter: Int = 60,
-      reliable: Boolean = false): DataFrame = {
-    val labels = stronglyConnected(edges, srcCol, dstCol, maxIter, reliable)
+      maxIter: Int = 60): DataFrame = {
+    val labels = stronglyConnected(edges, srcCol, dstCol, maxIter)
     edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .join(labels.select(col("id").as("src"), col("component").as("src_scc")), Seq("src"))

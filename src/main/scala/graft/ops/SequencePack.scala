@@ -88,11 +88,10 @@ object SequencePack {
       docs: DataFrame,
       capacity: Long,
       idCol: String = "doc_id",
-      nCol: String = "n_tokens",
-      reliable: Boolean = false): DataFrame = {
+      nCol: String = "n_tokens"): DataFrame = {
     require(capacity >= 1, s"capacity must be >= 1: $capacity")
     val spark = docs.sparkSession
-    val fx = new Fixpoint("nextFitWindows", reliable)
+    val fx = new Fixpoint("nextFitWindows")
     val base = docs.select(col(idCol).cast("long").as("doc_id"),
       col(nCol).cast("long").as("n")).where(col("n") > 0)
     // the n ≤ capacity contract is what makes the 2-bucket as-of exact —
@@ -187,12 +186,11 @@ object SequencePack {
         expr(s"t div ${capacity}L"), expr(s"t div ${capacity}L - 1L"))))
     val bndSide = windows.select(col("__wid"), col("cum"),
       expr(s"cum div ${capacity}L").as("__bkt"))
-    fx.finish(
+    fx.stage(
       AsOfJoin.backward(docProbes, bndSide, key = "__bkt",
         probeOrder = "t", buildOrder = "cum", valueCols = Seq("__wid"), inner = false)
         .groupBy(col("doc_id"), col("n"))
         .agg(max(col("__wid")).as("window_id"))
-        .select(col("doc_id"), col("window_id"), col("n").as("n_tokens")),
-      eager = true)
+        .select(col("doc_id"), col("window_id"), col("n").as("n_tokens")))
   }
 }

@@ -142,8 +142,7 @@ object Sketch {
     require(k >= 2, s"k must be >= 2: $k")
     val hashes = Staging.stage(
       df.select(graft.functions.TextFunctions.md5Prefix(col(valueCol).cast("string"), 8).as("u"))
-        .distinct(),
-      reliable = false)
+        .distinct())
     val bottom = hashes.orderBy(col("u").asc).limit(k)
     val agg = bottom.agg(count(lit(1)).as("n_in_sketch"), max(col("u")).as("kth"))
       .crossJoin(broadcast(hashes.agg(count(lit(1)).as("n_exact"))))
@@ -227,12 +226,11 @@ object Sketch {
     require(k >= 2, s"k must be >= 2: $k")
     def hashes(df: DataFrame): DataFrame = Staging.stage(
       df.select(graft.functions.TextFunctions.md5Prefix(col(valueCol).cast("string"), 8).as("u"))
-        .distinct(),
-      reliable = false)
+        .distinct())
     val ua = hashes(a)
     val ub = hashes(b)
-    val union = Staging.stage(ua.union(ub).distinct(), reliable = false)
-    val bottom = Staging.stage(union.orderBy(col("u").asc).limit(k), reliable = false)
+    val union = Staging.stage(ua.union(ub).distinct())
+    val bottom = Staging.stage(union.orderBy(col("u").asc).limit(k))
     val shared = bottom
       .join(ua, Seq("u"), "left_semi")
       .join(ub, Seq("u"), "left_semi")
@@ -281,14 +279,12 @@ object Sketch {
       .select(col("__v"), explode(sequence(lit(0L), lit(rows.toLong - 1L))).as("__r"))
     val cells = Staging.stage(
       fan.groupBy(col("__r"), bucket(col("__v"), col("__r")).as("__b"))
-        .agg(count(lit(1)).as("__c")),
-      reliable = false)
+        .agg(count(lit(1)).as("__c")))
     val top = Staging.stage(
       df.select(v.as("value")).groupBy("value").agg(count(lit(1)).as("n_exact"))
         .orderBy(col("n_exact").desc, col("value").asc).limit(topK)
         .withColumn("rank",
-          row_number().over(Window.orderBy(col("n_exact").desc, col("value").asc)).cast("long")),
-      reliable = false)
+          row_number().over(Window.orderBy(col("n_exact").desc, col("value").asc)).cast("long")))
     top.select(col("value"), col("n_exact"), col("rank"),
         explode(sequence(lit(0L), lit(rows.toLong - 1L))).as("__qr"))
       .join(cells,
@@ -329,13 +325,11 @@ object Sketch {
         .distinct()
         .select(col("__m"), salts.as("__h"))
         .select(bit(col("__m"), col("__h")).as("__bit"))
-        .distinct(),
-      reliable = false)
+        .distinct())
     val memberKeys = members.select(col(memberCol).cast("string").as("__v")).distinct()
     val probes = Staging.stage(
       df.select(col(valueCol).cast("string").as("__v")).distinct()
-        .join(memberKeys.select(col("__v"), lit(1L).as("__is_member")), Seq("__v"), "left"),
-      reliable = false)
+        .join(memberKeys.select(col("__v"), lit(1L).as("__is_member")), Seq("__v"), "left"))
     val verdicts = probes
       .select(col("__v"), col("__is_member"), salts.as("__h"))
       .join(bitSet, bit(col("__v"), col("__h")) === col("__bit"), "left_semi")

@@ -59,14 +59,8 @@ import org.apache.spark.sql.functions._
   * depth / 2) component-sized pointer-jump rounds, and one
   * relabel-and-compress (two joins + one agg) over the SHRINKING edge
   * table; per-round state (edge table, elected edges, pointer maps) is
-  * staged ([[Fixpoint]], caller-selectable fault tolerance via
-  * `reliable`). Nothing ever collects. Resource lifecycle on the
-  * reliable posture: the final forest is pinned and every per-round
-  * staged frame — including each round's elected-edge frame the forest
-  * union lazily referenced — is then released, so a reliable MSF run
-  * holds O(1), not O(log n), persisted frames after it returns (the
-  * house rule: CacheManager keeps strong references, so un-released
-  * loop frames outlive the query).
+  * staged ([[Fixpoint]]), and so is the final forest. Nothing ever
+  * collects.
   */
 object SpanningForest {
 
@@ -80,10 +74,9 @@ object SpanningForest {
       aCol: String = "a_id",
       bCol: String = "b_id",
       wCol: String = "weight",
-      maxRounds: Int = 50,
-      reliable: Boolean = false): DataFrame = {
+      maxRounds: Int = 50): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
-    val fx = new Fixpoint("boruvka", reliable)
+    val fx = new Fixpoint("boruvka")
     // Loop state: the component-level multigraph compressed to its
     // minimum representative per pair — (w, u, v) is the ORIGINAL edge
     // (canonical u < v, the row the forest will emit), (cu, cv) the
@@ -173,7 +166,7 @@ object SpanningForest {
         elected.select(col("m.u").as("a_id"), col("m.v").as("b_id"), col("m.w").as("weight"))
           .distinct())), n > 0L)
     }._1._2
-    fx.finish(forest, eager = true)
+    fx.stage(forest)
   }
 
   /** Single-linkage clustering at `threshold`: `(id, cluster)` for every
@@ -196,16 +189,15 @@ object SpanningForest {
       threshold: Long,
       aCol: String = "a_id",
       bCol: String = "b_id",
-      wCol: String = "weight",
-      reliable: Boolean = false): DataFrame = {
+      wCol: String = "weight"): DataFrame = {
     val nodes = pairs
       .select(col(aCol).cast("long").as("x"), col(bCol).cast("long").as("y"))
       .where(col("x").isNotNull && col("y").isNotNull && col("x") =!= col("y"))
       .select(explode(array(col("x"), col("y"))).as("id"))
       .distinct()
-    val kept = boruvka(pairs, aCol, bCol, wCol, reliable = reliable)
+    val kept = boruvka(pairs, aCol, bCol, wCol)
       .where(col("weight") <= threshold)
-    val comps = Components.connectedComponents(kept, reliable = reliable)
+    val comps = Components.connectedComponents(kept)
     nodes.join(comps, Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("cluster"))
   }

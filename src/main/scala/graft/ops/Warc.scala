@@ -192,13 +192,12 @@ object Warc {
     * legally cross files, so the join is the honest plan — payloads
     * move once, and only for records that are actually referenced.
     */
-  def resolveRevisits(
-      records: Dataset[WarcRecordRow], reliable: Boolean = false): DataFrame = {
+  def resolveRevisits(records: Dataset[WarcRecordRow]): DataFrame = {
     // stage the upstream parse ONCE ([[Staging.stage]]'s capped-stats
     // leaf): three branches hang off this frame, and without staging
     // Spark re-runs the (expensive) container parse per branch — the
     // exact multi-branch recompute class Staging exists for
-    val staged = Staging.stage(records.toDF(), reliable)
+    val staged = Staging.stage(records.toDF())
     val responses = staged.where(col("warc_type") === "response")
     // One payload per record id: ISO 28500 ids are globally unique, but
     // the same crawl file ingested twice (or an archive with duplicated
@@ -258,7 +257,7 @@ object Warc {
     import graft.functions.BinaryCodecs
     // staged for the same reason as [[resolveRevisits]]: both sides
     // read the materialized frame, so the container parse runs once
-    val staged = Staging.stage(records.toDF(), reliable = false)
+    val staged = Staging.stage(records.toDF())
       .as[WarcRecordRow]
     val requests = staged
       .filter(r => r.warc_type == "request" && r.concurrent_to != null)
@@ -579,7 +578,7 @@ object Warc {
         col("last_key"), col("n_lines").as("shard_n_lines"))),
       col("surt_key") >= col("first_key") && col("surt_key") <= col("last_key"))
       .select(col("__q_url"), col("surt_key"), col("shard_id"),
-        col("shard_n_lines")), reliable = false)
+        col("shard_n_lines")))
     // shard ids in play — bounded by min(#queries, #shards), broadcast
     val selIds = hits.select("shard_id").distinct()
     val lines = shards.join(broadcast(selIds), Seq("shard_id"))

@@ -15,9 +15,8 @@ object GraftColumn {
   def expr(c: Column): Expression = classic.ExpressionUtils.expression(c)
 }
 
-/** A LEAF DataFrame over `df`'s executed `InternalRow` RDD, with fresh
-  * (empty) statistics — the staging boundary used by
-  * `graft.ops.Staging`.
+/** A checkpointed frame's `LogicalRDD` LEAF with capped statistics —
+  * the staging boundary used by `graft.ops.Staging`.
   *
   * Why not `localCheckpoint()` alone: Spark's checkpoint APIs
   * deliberately PRESERVE the origin dataset's estimated statistics on
@@ -35,8 +34,8 @@ object GraftColumn {
   *
   * Why not `createDataFrame(df.rdd, schema)`: that resets stats but
   * detours every downstream read through an `InternalRow` → `Row` →
-  * `InternalRow` conversion. Building the `LogicalRDD` directly over
-  * `queryExecution.toRdd` keeps rows in Tungsten format end to end.
+  * `InternalRow` conversion. Re-statting the checkpoint's own
+  * `LogicalRDD` keeps rows in Tungsten format end to end.
   *
   * The leaf keeps the origin's estimated size/row-count but CAPS both
   * at 2^50 (a petabyte: far above every broadcast/strategy threshold,
@@ -59,23 +58,6 @@ object GraftStagedLeaf {
   private def cap(origin: Statistics): Statistics = Statistics(
     sizeInBytes = origin.sizeInBytes.min(StatCap),
     rowCount = origin.rowCount.map(_.min(StatCap)))
-
-  /** Leaf over `df`'s executed `InternalRow` RDD with capped stats —
-    * for staging postures that materialize via the CacheManager
-    * (`persist`) rather than a checkpoint: the wrapper is what gets
-    * persisted, so its one scan layer runs once at materialization and
-    * cached reads bypass it. With a `layout`, the leaf DECLARES that
-    * hash partitioning ([[cappedCheckpoint]] has the caller contract).
-    */
-  def apply(df: DataFrame, layout: Option[(Seq[String], Int)] = None): DataFrame = {
-    val ds = df.asInstanceOf[classic.Dataset[Row]]
-    val capped = cap(ds.queryExecution.optimizedPlan.stats)
-    val meta = LogicalRDD.fromDataset(ds.queryExecution.toRdd, ds, isStreaming = false)
-    val plan = LogicalRDD(
-      meta.output, meta.rdd, partitioning(meta.output, meta.outputPartitioning, layout),
-      meta.outputOrdering, meta.isStreaming, None)(ds.sparkSession, Some(capped), None)
-    classic.Dataset.ofRows(ds.sparkSession, plan)
-  }
 
   /** Rebuild an already-checkpointed frame's own `LogicalRDD` leaf with
     * `origin`'s stats capped — NO extra scan layer (wrapping the

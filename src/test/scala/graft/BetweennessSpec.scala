@@ -62,11 +62,9 @@ class BetweennessSpec extends SparkSpec {
   }
 
   private def run(
-      edges: Seq[(Long, Long)], sources: Seq[Long], maxDepth: Int,
-      reliable: Boolean = false): Map[Long, (Long, Long)] =
+      edges: Seq[(Long, Long)], sources: Seq[Long], maxDepth: Int): Map[Long, (Long, Long)] =
     GraphMetrics.betweennessSampled(
-      edges.toDF("a_id", "b_id"), sources.toDF("id"),
-      maxDepth = maxDepth, reliable = reliable)
+      edges.toDF("a_id", "b_id"), sources.toDF("id"), maxDepth = maxDepth)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
 
   test("path graph: the middle node carries all the traffic") {
@@ -119,8 +117,7 @@ class BetweennessSpec extends SparkSpec {
 
   test("reliable=true matches the default posture") {
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L), (4L, 5L), (2L, 5L))
-    val cheap = run(edges, Seq(1L, 5L), maxDepth = 3)
-    val rel = run(edges, Seq(1L, 5L), maxDepth = 3, reliable = true)
+    val (cheap, rel) = bothPostures(run(edges, Seq(1L, 5L), maxDepth = 3))
     assert(cheap == rel)
   }
 }

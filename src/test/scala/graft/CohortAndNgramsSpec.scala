@@ -164,10 +164,9 @@ class CohortAndNgramsSpec extends SparkSpec {
   test("GraphMetrics.neighborhoodSize: reliable=true matches the localCheckpoint path") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (10L, 12L), (10L, 13L))
       .toDF("a_id", "b_id")
-    def run(reliable: Boolean) =
-      GraphMetrics.neighborhoodSize(edges, reliable = reliable)
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(run(reliable = true) == run(reliable = false))
+    val (local, reliable) = bothPostures(GraphMetrics.neighborhoodSize(edges)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap)
+    assert(reliable == local)
   }
 
   test("GraphMetrics.neighborhoodSize: cap never overcounts, and is exact when no degree exceeds it") {

@@ -90,11 +90,7 @@ class DbscanSpec extends SparkSpec {
   test("reliable posture matches the default labeling") {
     val rnd = new scala.util.Random(41)
     val pts = (1L to 40L).map(i => (i, rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
-    val base = run(pts, eps = 6, minPts = 3)
-    val rel = GeoGrid.dbscan(pts.toDF("id", "x", "y"), "id",
-      org.apache.spark.sql.functions.col("x"), org.apache.spark.sql.functions.col("y"),
-      eps = 6, minPts = 3, reliable = true)
-      .collect().map(r => (r.getLong(0), (r.getLong(1), r.getString(2)))).toMap
+    val (base, rel) = bothPostures(run(pts, eps = 6, minPts = 3))
     assert(base == rel)
   }
 

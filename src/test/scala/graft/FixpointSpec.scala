@@ -31,9 +31,12 @@ import graft.ops.{Components, Coverage, Eval, GeoGrid, GraphMetrics, KMeans, Mat
   * Degenerate inputs: an empty source set, an edgeless graph and an
   * isolated start node return the operator's normal schema with empty or
   * seed-only rows; so do empty, all-null and self-loop-only edge lists on
-  * both staging postures (`dagLayers` refuses a self-loop by name,
-  * `nextFitWindows` a null document id). A null endpoint is not a node;
-  * the other endpoint of its row is.
+  * both staging postures, outside and inside a checkpoint dir (`dagLayers`
+  * refuses a self-loop by name, `nextFitWindows` a null document id). A
+  * null endpoint is not a node; the other endpoint of its row is.
+  *
+  * Round logs: `relax` and `peel` rounds log their measured value at
+  * DEBUG, and every other `loop` round whether it changed the state.
   */
 class FixpointSpec extends SparkSpec {
   import spark.implicits._
@@ -336,8 +339,14 @@ class FixpointSpec extends SparkSpec {
       override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
     }
     val level = logger.getLevel
-    def run(): Unit =
+    // a monotone-weight path: greedyMatching takes (1, 2), then (3, 4),
+    // then (5, 6), which leaves no edge
+    val path = Seq((1L, 2L, 1L), (2L, 3L, 2L), (3L, 4L, 3L), (4L, 5L, 4L), (5L, 6L, 5L))
+      .toDF("a_id", "b_id", "w")
+    def run(): Unit = {
       GraphMetrics.multiSourceCloseness(chain, Seq(0L).toDF("id"), maxDepth = 3).collect()
+      Matching.greedyMatching(path).collect()
+    }
     capture.start()
     logger.addAppender(capture)
     try {
@@ -354,7 +363,10 @@ class FixpointSpec extends SparkSpec {
     assert(lines.toArray.toSeq == Seq(
       "multiSourceCloseness round 1: frontier 2",
       "multiSourceCloseness round 2: frontier 2",
-      "multiSourceCloseness round 3: frontier 1"))
+      "multiSourceCloseness round 3: frontier 1",
+      "greedyMatching round 1: changed",
+      "greedyMatching round 2: changed",
+      "greedyMatching round 3: fixpoint"))
   }
 
   // ---- degenerate inputs ------------------------------------------------
@@ -437,21 +449,25 @@ class FixpointSpec extends SparkSpec {
     (null, null), (null, 3L), (4L, null)).toDF("a_id", "b_id")
   private val loopEdges = Seq((1L, 1L), (2L, 2L)).toDF("a_id", "b_id")
 
+  /** `body` outside a checkpoint dir, or inside one when `reliable`. */
+  private def posture[T](reliable: Boolean)(body: => T): T =
+    if (reliable) checkpointed(body) else body
+
   /** `run` on the empty, all-null and self-loop-only edge lists (columns
     * `a_id`, `b_id`) returns `normal`'s schema and the rows in `want`, in
     * that order, on both postures.
     */
   private def degenerate(name: String, want: Seq[Seq[String]])(normal: => DataFrame)(
-      run: (DataFrame, Boolean) => DataFrame): Unit =
+      run: DataFrame => DataFrame): Unit =
     test(s"$name: empty, all-null and self-loop-only inputs on both postures") {
       val n = normal
-      for (reliable <- Seq(false, true);
-           (input, rowsWanted) <- Seq(emptyEdges, nullEdges, loopEdges).zip(want)) {
-        val got = run(input, reliable)
-        sameSchema(got, n)
-        assert(rows(got) == rowsWanted, s"reliable = $reliable")
+      for (reliable <- Seq(false, true)) posture(reliable) {
+        for ((input, rowsWanted) <- Seq(emptyEdges, nullEdges, loopEdges).zip(want)) {
+          val got = run(input)
+          sameSchema(got, n)
+          assert(rows(got) == rowsWanted, s"reliable = $reliable")
+        }
       }
-      spark.catalog.clearCache()
     }
 
   private val none = Seq.empty[String]
@@ -459,82 +475,76 @@ class FixpointSpec extends SparkSpec {
   private def weighted(e: DataFrame, w: String) = e.withColumn(w, org.apache.spark.sql.functions.lit(3L))
 
   degenerate("stronglyConnected", Seq(none, Seq("[3,3]", "[4,4]"), Seq("[1,1]", "[2,2]")))(
-    Scc.stronglyConnected(sccGraph)) { (e, r) =>
-    Scc.stronglyConnected(e, "a_id", "b_id", reliable = r)
+    Scc.stronglyConnected(sccGraph)) { e =>
+    Scc.stronglyConnected(e, "a_id", "b_id")
   }
 
-  degenerate("condensationEdges", Seq(none, none, none))(Scc.condensationEdges(sccGraph)) { (e, r) =>
-    Scc.condensationEdges(e, "a_id", "b_id", reliable = r)
+  degenerate("condensationEdges", Seq(none, none, none))(Scc.condensationEdges(sccGraph)) { e =>
+    Scc.condensationEdges(e, "a_id", "b_id")
   }
 
   test("dagLayers: empty and all-null inputs on both postures; self-loops refused") {
     val normal = Scc.dagLayers(directed(Seq((1L, 2L))))
-    for (reliable <- Seq(false, true)) {
+    for (reliable <- Seq(false, true)) posture(reliable) {
       for ((input, want) <- Seq(emptyEdges -> none, nullEdges -> Seq("[3,0]", "[4,0]"))) {
-        val got = Scc.dagLayers(input, "a_id", "b_id", reliable = reliable)
+        val got = Scc.dagLayers(input, "a_id", "b_id")
         sameSchema(got, normal)
         assert(rows(got) == want)
       }
-      val e = intercept[IllegalArgumentException](
-        Scc.dagLayers(loopEdges, "a_id", "b_id", reliable = reliable))
+      val e = intercept[IllegalArgumentException](Scc.dagLayers(loopEdges, "a_id", "b_id"))
       assert(e.getMessage.contains("self-loop at node 1"))
     }
-    spark.catalog.clearCache()
   }
 
   degenerate("connectedComponents", Seq(none, none, none))(Components.connectedComponents(chain)) {
-    (e, r) => Components.connectedComponents(e, reliable = r)
+    e => Components.connectedComponents(e)
   }
 
   degenerate("mergeIncrement", Seq.fill(3)(Seq("[1,1]")))(Components.connectedComponents(chain)) {
-    (e, r) => Components.mergeIncrement(Seq((1L, 1L)).toDF("id", "component"), e, reliable = r)
+    e => Components.mergeIncrement(Seq((1L, 1L)).toDF("id", "component"), e)
   }
 
   degenerate("boruvka", Seq(none, none, none))(
-    SpanningForest.boruvka(Seq((1L, 2L, 3L)).toDF("a_id", "b_id", "weight"))) { (e, r) =>
-    SpanningForest.boruvka(weighted(e, "weight"), reliable = r)
+    SpanningForest.boruvka(Seq((1L, 2L, 3L)).toDF("a_id", "b_id", "weight"))) { e =>
+    SpanningForest.boruvka(weighted(e, "weight"))
   }
 
   degenerate("greedyMatching", Seq(none, none, none))(
-    Matching.greedyMatching(Seq((1L, 2L, 3L)).toDF("a_id", "b_id", "w"))) { (e, r) =>
-    Matching.greedyMatching(weighted(e, "w"), reliable = r)
+    Matching.greedyMatching(Seq((1L, 2L, 3L)).toDF("a_id", "b_id", "w"))) { e =>
+    Matching.greedyMatching(weighted(e, "w"))
   }
 
   degenerate("randomWalks", Seq.fill(3)(startRows))(
-    GraphMetrics.randomWalks(chain, anchors, steps = 2)) { (e, r) =>
-    GraphMetrics.randomWalks(e, twoSources, steps = 3, reliable = r)
+    GraphMetrics.randomWalks(chain, anchors, steps = 2)) { e =>
+    GraphMetrics.randomWalks(e, twoSources, steps = 3)
   }
 
   degenerate("node2vecWalks", Seq.fill(3)(startRows))(
-    GraphMetrics.node2vecWalks(chain, anchors, steps = 2)) { (e, r) =>
-    GraphMetrics.node2vecWalks(e, twoSources, steps = 3, reliable = r)
+    GraphMetrics.node2vecWalks(chain, anchors, steps = 2)) { e =>
+    GraphMetrics.node2vecWalks(e, twoSources, steps = 3)
   }
 
   test("randomWalks and node2vecWalks: no start rows give an empty corpus") {
-    for (reliable <- Seq(false, true)) {
-      val got = GraphMetrics.randomWalks(chain, noSources, steps = 3, reliable = reliable)
+    for (reliable <- Seq(false, true)) posture(reliable) {
+      val got = GraphMetrics.randomWalks(chain, noSources, steps = 3)
       sameSchema(got, GraphMetrics.randomWalks(chain, anchors, steps = 2))
       assert(got.count() == 0L)
-      assert(GraphMetrics.node2vecWalks(chain, noSources, steps = 3, reliable = reliable)
-        .count() == 0L)
+      assert(GraphMetrics.node2vecWalks(chain, noSources, steps = 3).count() == 0L)
     }
-    spark.catalog.clearCache()
   }
 
   test("nextFitWindows: empty, all-null and self-loop-only inputs on both postures") {
     val normal = SequencePack.nextFitWindows(Seq((1L, 5L)).toDF("doc_id", "n_tokens"), capacity = 8)
-    def run(e: DataFrame, reliable: Boolean) =
-      SequencePack.nextFitWindows(e.toDF("doc_id", "n_tokens"), capacity = 8, reliable = reliable)
-    for (reliable <- Seq(false, true)) {
+    def run(e: DataFrame) = SequencePack.nextFitWindows(e.toDF("doc_id", "n_tokens"), capacity = 8)
+    for (reliable <- Seq(false, true)) posture(reliable) {
       for ((input, want) <- Seq(emptyEdges -> none, loopEdges -> Seq("[1,0,1]", "[2,0,2]"))) {
-        val got = run(input, reliable)
+        val got = run(input)
         sameSchema(got, normal)
         assert(rows(got) == want)
       }
       // {(null, 3)} is the one row of the all-null list with tokens
-      val e = intercept[IllegalArgumentException](run(nullEdges, reliable))
+      val e = intercept[IllegalArgumentException](run(nullEdges))
       assert(e.getMessage.contains("nextFitWindows") && e.getMessage.contains("null doc_id"))
     }
-    spark.catalog.clearCache()
   }
 }

@@ -105,12 +105,9 @@ class GraphAndZOrderSpec extends SparkSpec {
       wRanks(Seq((0L, 1L, 0L)), 1)
     }
     assert(e.getMessage.contains("non-positive or null weight"))
-    // reliable posture parity
-    val rel = PageRank.weightedRanksFixedPoint(
-      simple.map { case (s, d) => (s, d, 3L) }.toDF("s", "d", "w"),
-      "s", "d", "w", 5, reliable = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(rel == wRanks(simple.map { case (s, d) => (s, d, 3L) }, 5))
+    // posture parity: rows and staged rounds inside a checkpoint dir
+    val (local, rel) = bothPostures(wRanks(simple.map { case (s, d) => (s, d, 3L) }, 5))
+    assert(rel == local)
   }
 
   test("pagerank: total mass is bounded by nodes*scale and conserved up to floor loss") {

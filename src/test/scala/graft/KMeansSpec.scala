@@ -59,18 +59,19 @@ class KMeansSpec extends SparkSpec {
   }
 
   test("reliable=true (persist DISK_ONLY) reproduces the localCheckpoint path bit-identically") {
-    // The fault-tolerance switch must be invisible to results: every
-    // staged plan is a pure function of the input, so the recompute-
-    // capable persist path and the lineage-truncating localCheckpoint
-    // path land on identical centroids and assignments.
+    // The staging posture must be invisible to results: a run inside a
+    // checkpoint dir (reliable checkpoints) and one outside it (local
+    // checkpoints) land on identical centroids and assignments, in the
+    // same staged rounds.
     val df = blobs(15)
-    def run(reliable: Boolean) = {
-      val (c, a) = KMeans.fit(df, "vec_id", "embedding", k = 3, iterations = 2, reliable = reliable)
+    def run() = {
+      val (c, a) = KMeans.fit(df, "vec_id", "embedding", k = 3, iterations = 2)
       (c.collect().map(r => (r.getLong(0), r.getSeq[Long](1))).sortBy(_._1).toSeq,
         a.collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("cid"), r.getAs[Long]("dist")))
           .sortBy(_._1).toSeq)
     }
-    assert(run(reliable = true) == run(reliable = false))
+    val (local, reliable) = bothPostures(run())
+    assert(reliable == local)
   }
 
   test("zero vectors quantize to the lattice midpoint and cluster together") {

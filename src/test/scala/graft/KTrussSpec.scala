@@ -60,25 +60,25 @@ class KTrussSpec extends SparkSpec {
   test("reliable=true matches the localCheckpoint path") {
     def clique(ids: Seq[Long]) = for { a <- ids; b <- ids if a < b } yield (a, b)
     val edges = (clique(Seq(1L, 2L, 3L, 4L, 5L)) :+ ((5L, 6L))).toDF("a_id", "b_id")
-    def run(reliable: Boolean) = GraphMetrics.kTruss(edges, k = 4, reliable = reliable)
-      .collect().map(_.toString).toSeq.sorted
-    assert(run(reliable = true) == run(reliable = false))
+    val (local, reliable) =
+      bothPostures(GraphMetrics.kTruss(edges, k = 4).collect().map(_.toString).toSeq.sorted)
+    assert(reliable == local)
   }
 
   test("reliable path releases every peel round's staged frame (result-only residue)") {
-    // A clique chain peels over multiple rounds (each deletion cascades);
-    // the per-round staged edge set must be released as soon as the next
-    // round is materialized — the frame the CacheManager holds, not the
-    // projection `e` becomes (uncaching the projection is a no-op).
+    // A clique chain peels over multiple rounds (each deletion cascades).
+    // Inside a checkpoint dir the staged rounds are checkpoint files, and
+    // each round's triangle cache is unpersisted once the round is
+    // staged, so the run leaves no persisted RDD.
     def clique(ids: Seq[Long]) = for { a <- ids; b <- ids if a < b } yield (a, b)
     val edges = (clique(Seq(1L, 2L, 3L, 4L)) ++ clique(Seq(4L, 5L, 6L, 7L)) ++
       clique(Seq(7L, 8L, 9L, 10L)) :+ ((10L, 1L))).toDF("a_id", "b_id")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val got = GraphMetrics.kTruss(edges, k = 4, reliable = true)
-    assert(got.count() > 0L)
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.size <= 1, s"leaked persisted RDDs beyond the converged round: $leaked")
-    spark.catalog.clearCache()
+    val leaked = checkpointed {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      assert(GraphMetrics.kTruss(edges, k = 4).count() > 0L)
+      spark.sparkContext.getPersistentRDDs.keySet -- before
+    }
+    assert(leaked.isEmpty, s"leaked persisted RDDs: $leaked")
   }
 
   test("support histogram variant agrees with the per-edge output") {

@@ -560,8 +560,7 @@ class PlanShapeSpec extends SparkSpec {
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
     // hits' per-half-round max re-enters as a LITERAL — a crossJoin of
     // the score table against its own max would show up here as a
-    // BroadcastNestedLoopJoin (and double the logical plan per round on
-    // the lineage-keeping reliable posture).
+    // BroadcastNestedLoopJoin.
     val edges = (1 to 300).map(i => (i.toLong % 40, (i * 7 % 40).toLong))
       .filter(e => e._1 != e._2).toDF("a", "b")
     val hitsPlan = initialPlan(graft.ops.GraphMetrics.hits(edges, "a", "b", iterations = 2))

@@ -1,16 +1,19 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 import graft.ops.{Components, Coverage, Eval, GeoGrid, GraphMetrics, KMeans, Matching, Ngrams,
   PageRank, Paths, Scc, SequencePack, SpanningForest, Staging}
 
-/** The `reliable` staging switch ([[graft.ops.Staging]]) must be
-  * behavior-neutral: every iterative op threaded through it has to
-  * produce BIT-IDENTICAL results on both postures (localCheckpoint vs
-  * lineage-keeping persist), because the switch changes only fault
-  * tolerance, never semantics. One parity test per threaded op; KMeans
-  * and neighborhoodSize have theirs in their own suites.
+/** The staging posture ([[graft.ops.Staging]]) must be behavior-neutral:
+  * every iterative op has to produce BIT-IDENTICAL results, and stage
+  * the same rounds, whether the SparkContext has a checkpoint dir
+  * (reliable `checkpoint()`) or not (`localCheckpoint()`), because the
+  * dir changes only fault tolerance, never semantics. Each test sets the
+  * dir only for its own runs ([[SparkSpec.checkpointed]]). One parity
+  * test per staged op; KMeans and neighborhoodSize have theirs in their
+  * own suites.
   */
 class ReliableStagingSpec extends SparkSpec {
   import spark.implicits._
@@ -22,163 +25,126 @@ class ReliableStagingSpec extends SparkSpec {
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
 
+  /** Rows of `run` and its staged rounds, inside a checkpoint dir and
+    * outside one; asserts they are equal and returns the rows.
+    */
+  private def parity(run: => DataFrame): Seq[String] = {
+    val (local, reliable) = bothPostures(sortedRows(run))
+    assert(reliable == local)
+    local._1
+  }
+
   test("PageRank.ranksFixedPoint: reliable=true matches the localCheckpoint path") {
-    def run(reliable: Boolean) = sortedRows(
-      PageRank.ranksFixedPoint(edges, "a_id", "b_id", iterations = 6, reliable = reliable))
-    assert(run(reliable = true) == run(reliable = false))
+    parity(PageRank.ranksFixedPoint(edges, "a_id", "b_id", iterations = 6))
   }
 
   test("PageRank.personalizedFixedPoint: reliable=true matches the localCheckpoint path") {
     val seeds = Seq(1L).toDF("id")
-    def run(reliable: Boolean) = sortedRows(
-      PageRank.personalizedFixedPoint(edges, "a_id", "b_id", seeds, "id",
-        iterations = 6, reliable = reliable))
-    assert(run(reliable = true) == run(reliable = false))
+    parity(PageRank.personalizedFixedPoint(edges, "a_id", "b_id", seeds, "id", iterations = 6))
   }
 
   test("Components.connectedComponents: reliable=true matches the localCheckpoint path") {
-    def run(reliable: Boolean) = sortedRows(
-      Components.connectedComponents(edges, reliable = reliable))
-    val got = run(reliable = true)
-    assert(got == run(reliable = false))
+    val got = parity(Components.connectedComponents(edges))
     // sanity: two components, rooted at their minima
     assert(got.size == 8)
   }
 
   test("Ngrams.bpeMerges: reliable=true matches the localCheckpoint path") {
     val docs = Seq("low low low lower lowest", "new newer newest low").toDF("text")
-    def run(reliable: Boolean) = sortedRows(
-      Ngrams.bpeMerges(docs, rounds = 9, reliable = reliable))
-    assert(run(reliable = true) == run(reliable = false))
+    parity(Ngrams.bpeMerges(docs, rounds = 9))
   }
 
   test("GraphMetrics.labelPropagation: reliable=true matches the localCheckpoint path") {
-    def run(reliable: Boolean) = sortedRows(
-      GraphMetrics.labelPropagation(edges, rounds = 5, reliable = reliable))
-    assert(run(reliable = true) == run(reliable = false))
+    parity(GraphMetrics.labelPropagation(edges, rounds = 5))
   }
 
   test("GraphMetrics.kCore: reliable=true matches the localCheckpoint path") {
-    def run(reliable: Boolean) = sortedRows(
-      GraphMetrics.kCore(edges, k = 2, reliable = reliable))
-    val got = run(reliable = true)
-    assert(got == run(reliable = false))
+    val got = parity(GraphMetrics.kCore(edges, k = 2))
     assert(got.nonEmpty) // the two triangles survive k=2
   }
 
   test("GraphMetrics.doubleSweep: reliable=true matches the localCheckpoint path") {
-    def run(reliable: Boolean) = sortedRows(
-      GraphMetrics.doubleSweep(edges, startId = 5L, reliable = reliable))
-    val got = run(reliable = true)
-    assert(got == run(reliable = false))
+    val got = parity(GraphMetrics.doubleSweep(edges, startId = 5L))
     assert(got == Seq("[5,3,5,1,3]")) // 5-4-3-{1,2}: pivot 1, diameter bound 3
   }
 
   test("Paths.weightedSssp: reliable=true matches the localCheckpoint path") {
     val weighted = edges.withColumn("w", (col("a_id") * 3 + col("b_id")) % 5 + 1)
-    def run(reliable: Boolean) = sortedRows(Paths.weightedSssp(
-      weighted, Seq(1L, 10L).toDF("id"), "a_id", "b_id", reliable = reliable))
-    val got = run(reliable = true)
-    assert(got == run(reliable = false))
+    val got = parity(Paths.weightedSssp(weighted, Seq(1L, 10L).toDF("id"), "a_id", "b_id"))
     assert(got.size == 8) // 1 reaches 1..5, 10 reaches 10..12
   }
 
   // The loops below read convergence off an observation of the staging
-  // job by default and off one probe action on the reliable posture, so
-  // both postures must also stage the same rounds.
-  private def rowsAndStages(run: => DataFrame): (Seq[String], Long) = {
-    val before = Staging.stageCalls.get()
-    val rows = sortedRows(run)
-    (rows, Staging.stageCalls.get() - before)
-  }
+  // job, which both postures deliver, so both must stage the same rounds.
+  private def rowsAndStages(run: => DataFrame): ((Seq[String], Long), (Seq[String], Long)) =
+    bothPostures(sortedRows(run))
 
   test("GraphMetrics.coreDecomposition: reliable=true matches rows and staged rounds") {
     // the path 20–28 first reaches its fixpoint at update 4, inside the
     // second batch of three: both postures stop after that batch
     val g = edges.union((20L until 28L).map(i => (i, i + 1)).toDF("a_id", "b_id"))
-    def run(reliable: Boolean) =
-      rowsAndStages(GraphMetrics.coreDecomposition(g, reliable = reliable))
-    val (got, staged) = run(reliable = true)
-    assert((got, staged) == run(reliable = false))
+    val (local, (got, staged)) = rowsAndStages(GraphMetrics.coreDecomposition(g))
+    assert((got, staged) == local)
     assert(got.size == 17 && staged == 4L) // sym + seed + two batches
-    spark.catalog.clearCache()
   }
 
   test("GraphMetrics.kTruss: reliable=true matches rows and staged rounds") {
-    def run(reliable: Boolean) =
-      rowsAndStages(GraphMetrics.kTruss(edges, k = 3, reliable = reliable))
-    val (got, staged) = run(reliable = true)
-    assert((got, staged) == run(reliable = false))
+    val (local, (got, staged)) = rowsAndStages(GraphMetrics.kTruss(edges, k = 3))
+    assert((got, staged) == local)
     assert(got.size == 6) // the two triangles
-    spark.catalog.clearCache()
   }
 
   test("GraphMetrics.multiSourceCloseness: reliable=true matches rows and staged rounds") {
-    def run(reliable: Boolean) = rowsAndStages(GraphMetrics.multiSourceCloseness(
-      edges, Seq(1L, 10L).toDF("id"), reliable = reliable))
-    val (got, staged) = run(reliable = true)
-    val (local, localStaged) = run(reliable = false)
+    val ((local, localStaged), (got, staged)) = rowsAndStages(
+      GraphMetrics.multiSourceCloseness(edges, Seq(1L, 10L).toDF("id")))
     assert(got == local)
     assert(got == Seq("[1,4,7,571428]", "[10,2,2,1000000]"))
-    // the same rounds; the reliable posture also pins the result before
-    // releasing the rounds' frames (Fixpoint.finish)
-    assert(staged == localStaged + 1L)
+    // the same rounds: neither posture stages anything the other does not
+    assert(staged == localStaged)
   }
 
   test("Scc.dagLayers: reliable=true matches rows and staged rounds") {
     val dag = Seq((9L, 4L), (4L, 2L), (2L, 1L), (9L, 8L), (8L, 1L), (7L, 3L))
       .toDF("src", "dst")
-    def run(reliable: Boolean) = rowsAndStages(Scc.dagLayers(dag, reliable = reliable))
-    val (got, staged) = run(reliable = true)
-    assert((got, staged) == run(reliable = false))
+    val (local, (got, staged)) = rowsAndStages(Scc.dagLayers(dag))
+    assert((got, staged) == local)
     assert(got.size == 7)
-    spark.catalog.clearCache()
   }
 
   test("Matching.greedyMatching: reliable=true matches rows and staged rounds") {
     val w = Seq((1L, 2L, 4L), (2L, 3L, 3L), (3L, 4L, 2L), (4L, 5L, 1L), (5L, 6L, 5L),
       (1L, 6L, 6L), (10L, 11L, 1L), (11L, 12L, 1L)).toDF("a_id", "b_id", "w")
-    def run(reliable: Boolean) = rowsAndStages(Matching.greedyMatching(w, reliable = reliable))
-    val (got, staged) = run(reliable = true)
-    assert((got, staged) == run(reliable = false))
+    val (local, (got, staged)) = rowsAndStages(Matching.greedyMatching(w))
+    assert((got, staged) == local)
     assert(got.size == 4)
-    spark.catalog.clearCache()
   }
 
   test("Coverage.greedyMaxCoverage: reliable=true matches rows and staged rounds") {
     val pairs = (0 until 60).map(i => ((i % 9).toLong, s"t${(i * 7) % 23}")).toDF("doc_id", "token")
-    def run(reliable: Boolean) =
-      rowsAndStages(Coverage.greedyMaxCoverage(pairs, k = 4, reliable = reliable))
-    val (got, staged) = run(reliable = true)
-    assert((got, staged) == run(reliable = false))
+    val (local, (got, staged)) = rowsAndStages(Coverage.greedyMaxCoverage(pairs, k = 4))
+    assert((got, staged) == local)
     assert(got.size == 4)
-    spark.catalog.clearCache()
   }
 
   test("GraphMetrics.modularity: reliable=true matches rows and staged rounds") {
     val labels = Seq(1L, 2L, 3L, 10L, 11L, 12L).map(i => (i, i / 10)).toDF("id", "community")
-    def run(reliable: Boolean) = rowsAndStages(GraphMetrics.modularity(edges, labels,
-      reliable = reliable))
-    val (got, staged) = run(reliable = true)
-    val (local, localStaged) = run(reliable = false)
+    val ((local, localStaged), (got, staged)) =
+      rowsAndStages(GraphMetrics.modularity(edges, labels))
     assert(got == local)
     assert(got.size == 4) // communities 0 and 1, singletons 4 and 5
-    // the reliable posture also pins the result (Fixpoint.finish)
-    assert(staged == localStaged + 1L)
-    spark.catalog.clearCache()
+    assert(staged == localStaged)
   }
 
-  // A reliable run persists its rounds; once its result is materialized
-  // only the result's frame may stay persisted (nextFitWindows also keeps
-  // the two range pins of its prefix sums and window ids, which are
-  // `Staging.pin` frames, not rounds; KMeans.fit returns its centroids
-  // from the driver-held codebook, and bpeMerges a driver-built table).
-  private def residue(run: => DataFrame): Int = {
+  // Staging holds no CacheManager entry on either posture, and inside a
+  // checkpoint dir a run leaves no persisted RDD either. Without a dir
+  // each `localCheckpoint`'s blocks are a persisted RDD while its frame
+  // lives (`persistentRdds` holds RDDs weakly, so they go with their
+  // frames), so there only the CacheManager is checked.
+  private def residue(run: => DataFrame): (Int, Boolean) = {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     run.collect()
-    val left = (spark.sparkContext.getPersistentRDDs.keySet -- before).size
-    spark.catalog.clearCache()
-    left
+    ((spark.sparkContext.getPersistentRDDs.keySet -- before).size,
+      spark.sharedState.cacheManager.isEmpty)
   }
 
   test("reliable staged-fixpoint runs leave only their result persisted") {
@@ -189,92 +155,89 @@ class ReliableStagingSpec extends SparkSpec {
     val points = (0L until 30L).map(i => (i, i % 6 * 2 + i / 15 * 40, i / 6 % 3)).toDF("id", "x", "y")
     val vectors = (0 until 30).map(i => (i.toLong, Array.tabulate(4)(d => ((i * (d + 2)) % 9).toFloat)))
       .toDF("vec_id", "embedding")
-    for ((name, allowed, run) <- Seq[(String, Int, () => DataFrame)](
-        ("stronglyConnected", 1, () => Scc.stronglyConnected(directed, reliable = true)),
-        ("condensationEdges", 1, () => Scc.condensationEdges(directed, reliable = true)),
-        ("dagLayers", 1, () => Scc.dagLayers(directed.where(col("src") < col("dst")), reliable = true)),
-        ("connectedComponents", 1, () => Components.connectedComponents(edges, reliable = true)),
-        ("mergeIncrement", 1, () => Components.mergeIncrement(
-          Seq((20L, 20L)).toDF("id", "component"), edges, reliable = true)),
-        ("boruvka", 1, () => SpanningForest.boruvka(w.withColumnRenamed("w", "weight"), reliable = true)),
-        ("greedyMatching", 1, () => Matching.greedyMatching(w, reliable = true)),
-        ("nextFitWindows", 3, () => SequencePack.nextFitWindows(docs, capacity = 32, reliable = true)),
-        ("randomWalks", 1, () => GraphMetrics.randomWalks(edges, starts, steps = 3, reliable = true)),
-        ("node2vecWalks", 1, () => GraphMetrics.node2vecWalks(edges, starts, steps = 3, reliable = true)),
-        ("ranksFixedPoint", 1, () => PageRank.ranksFixedPoint(edges, "a_id", "b_id",
-          iterations = 5, reliable = true)),
-        ("personalizedFixedPoint", 1, () => PageRank.personalizedFixedPoint(edges, "a_id", "b_id",
-          starts, "id", iterations = 5, reliable = true)),
-        ("weightedRanksFixedPoint", 1, () => PageRank.weightedRanksFixedPoint(w, "a_id", "b_id", "w",
-          iterations = 5, reliable = true)),
-        ("labelPropagation", 1, () => GraphMetrics.labelPropagation(edges, rounds = 5, reliable = true)),
-        ("hits", 1, () => GraphMetrics.hits(directed, "src", "dst", iterations = 3, reliable = true)),
-        ("modularity", 1, () => GraphMetrics.modularity(edges, starts.withColumn("community",
-          col("id")), reliable = true)),
-        ("coreDecomposition", 1, () => GraphMetrics.coreDecomposition(edges, reliable = true)),
-        ("bradleyTerry", 1, () => Eval.bradleyTerry(directed, "src", "dst", iterations = 3,
-          reliable = true)),
-        ("greedyMaxCoverage", 1, () => Coverage.greedyMaxCoverage(
-          edges.select(col("a_id").as("doc_id"), col("b_id").cast("string").as("token")), k = 3,
-          reliable = true)),
-        ("dbscan", 1, () => GeoGrid.dbscan(points, "id", col("x"), col("y"), eps = 3L, minPts = 3,
-          reliable = true)),
-        ("KMeans.fit", 1, () => {
-          val (c, a) = KMeans.fit(vectors, "vec_id", "embedding", k = 3, iterations = 3,
-            reliable = true)
+    spark.catalog.clearCache()
+    for ((name, run) <- Seq[(String, () => DataFrame)](
+        ("stronglyConnected", () => Scc.stronglyConnected(directed)),
+        ("condensationEdges", () => Scc.condensationEdges(directed)),
+        ("dagLayers", () => Scc.dagLayers(directed.where(col("src") < col("dst")))),
+        ("connectedComponents", () => Components.connectedComponents(edges)),
+        ("mergeIncrement", () => Components.mergeIncrement(
+          Seq((20L, 20L)).toDF("id", "component"), edges)),
+        ("boruvka", () => SpanningForest.boruvka(w.withColumnRenamed("w", "weight"))),
+        ("greedyMatching", () => Matching.greedyMatching(w)),
+        ("nextFitWindows", () => SequencePack.nextFitWindows(docs, capacity = 32)),
+        ("randomWalks", () => GraphMetrics.randomWalks(edges, starts, steps = 3)),
+        ("node2vecWalks", () => GraphMetrics.node2vecWalks(edges, starts, steps = 3)),
+        ("ranksFixedPoint", () => PageRank.ranksFixedPoint(edges, "a_id", "b_id", iterations = 5)),
+        ("personalizedFixedPoint", () => PageRank.personalizedFixedPoint(edges, "a_id", "b_id",
+          starts, "id", iterations = 5)),
+        ("weightedRanksFixedPoint", () => PageRank.weightedRanksFixedPoint(w, "a_id", "b_id", "w",
+          iterations = 5)),
+        ("labelPropagation", () => GraphMetrics.labelPropagation(edges, rounds = 5)),
+        ("hits", () => GraphMetrics.hits(directed, "src", "dst", iterations = 3)),
+        ("modularity", () => GraphMetrics.modularity(edges, starts.withColumn("community",
+          col("id")))),
+        ("coreDecomposition", () => GraphMetrics.coreDecomposition(edges)),
+        ("bradleyTerry", () => Eval.bradleyTerry(directed, "src", "dst", iterations = 3)),
+        ("greedyMaxCoverage", () => Coverage.greedyMaxCoverage(
+          edges.select(col("a_id").as("doc_id"), col("b_id").cast("string").as("token")), k = 3)),
+        ("dbscan", () => GeoGrid.dbscan(points, "id", col("x"), col("y"), eps = 3L, minPts = 3)),
+        ("KMeans.fit", () => {
+          val (c, a) = KMeans.fit(vectors, "vec_id", "embedding", k = 3, iterations = 3)
           c.collect(); a
         }),
-        ("bpeMerges", 0, () => Ngrams.bpeMerges(Seq("low low lower lowest newer newest").toDF("text"),
-          rounds = 12, reliable = true)))) {
-      val left = residue(run())
+        ("bpeMerges", () => Ngrams.bpeMerges(Seq("low low lower lowest newer newest").toDF("text"),
+          rounds = 12)))) {
+      val (left, uncached) = checkpointed(residue(run()))
       info(s"$name: $left persisted RDDs left")
-      assert(left <= allowed, s"$name left $left persisted RDDs (allowed $allowed)")
+      assert(left == 0, s"$name left $left persisted RDDs")
+      assert(uncached && residue(run())._2, s"$name left a CacheManager entry")
     }
   }
 
-  // Registration order matters for the two pin tests: the shared
-  // SparkContext keeps its checkpoint dir once set, so the no-dir guard
-  // must run BEFORE the test that sets one.
+  /** The RDD under the staged leaf `df`. */
+  private def leafRdd(df: DataFrame): org.apache.spark.rdd.RDD[_] =
+    df.queryExecution.analyzed match {
+      case lr: LogicalRDD => lr.rdd
+      case other => fail(s"not a staged leaf: ${other.nodeName}")
+    }
+
   test("reliablePin without a checkpoint dir fails fast with instructions") {
-    assume(spark.sparkContext.getCheckpointDir.isEmpty,
-      "another suite already set a checkpoint dir on the shared context")
-    spark.conf.set("spark.graft.reliablePin", "true")
+    // without a dir every posture is local: the pin and a staged round
+    // are eager local checkpoints and write nothing
+    assert(spark.sparkContext.getCheckpointDir.isEmpty, "a checkpoint dir leaked into this suite")
     val df = Seq(1L, 2L).toDF("v")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        graft.ops.Normalize.denseIds(df, "v", "v", "rk").collect()
-      }
-      assert(e.getMessage.contains("setCheckpointDir"))
-    } finally spark.conf.unset("spark.graft.reliablePin")
+    for (frame <- Seq(Staging.pin(df), Staging.stage(df)).map(leafRdd)) {
+      assert(frame.isCheckpointed)
+      assert(frame.getCheckpointFile.isEmpty)
+    }
+    assert(sortedRows(graft.ops.Normalize.denseIds(df, "v", "v", "rk")) == Seq("[1,0]", "[2,1]"))
   }
 
   test("denseIds: spark.graft.reliablePin=true (real checkpoint) matches the default path") {
     val df = (0 until 500).map(i => ((i * 37) % 500).toLong).toDF("v")
     def run(): Seq[String] = sortedRows(graft.ops.Normalize.denseIds(df, "v", "v", "rk"))
     val base = run()
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    spark.conf.set("spark.graft.reliablePin", "true")
-    try assert(run() == base)
-    finally spark.conf.unset("spark.graft.reliablePin")
+    checkpointedIn { dir =>
+      assert(leafRdd(Staging.pin(df)).getCheckpointFile.exists(_.contains(dir.getFileName.toString)))
+      assert(run() == base)
+    }
   }
 
   test("reliable + reliablePin escalates loops to real checkpoints (truncated plan, same results)") {
-    // Self-sufficient: set a checkpoint dir if no earlier test has (the
-    // shared context keeps it either way) — this test must never cancel
-    // itself away, it is the only coverage of the escalated stage() path.
-    if (spark.sparkContext.getCheckpointDir.isEmpty)
-      spark.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-ckpt-esc").toString)
-    spark.conf.set("spark.graft.reliablePin", "true")
-    try {
-      val pr = sortedRows(
-        PageRank.ranksFixedPoint(edges, "a_id", "b_id", iterations = 6, reliable = true))
-      assert(pr == sortedRows(
-        PageRank.ranksFixedPoint(edges, "a_id", "b_id", iterations = 6, reliable = false)))
-      val cc = sortedRows(Components.connectedComponents(edges, reliable = true))
-      assert(cc == sortedRows(Components.connectedComponents(edges, reliable = false)))
-    } finally spark.conf.unset("spark.graft.reliablePin")
+    def files(dir: java.nio.file.Path): Long = {
+      val walk = java.nio.file.Files.walk(dir)
+      try walk.filter(java.nio.file.Files.isRegularFile(_)).count() finally walk.close()
+    }
+    val pr = sortedRows(PageRank.ranksFixedPoint(edges, "a_id", "b_id", iterations = 6))
+    val cc = sortedRows(Components.connectedComponents(edges))
+    checkpointedIn { dir =>
+      assert(sortedRows(PageRank.ranksFixedPoint(edges, "a_id", "b_id", iterations = 6)) == pr)
+      val afterPr = files(dir)
+      assert(afterPr > 0L, "PageRank inside a checkpoint dir wrote no checkpoint files")
+      assert(sortedRows(Components.connectedComponents(edges)) == cc)
+      assert(files(dir) > afterPr, "connectedComponents wrote no checkpoint files")
+    }
   }
 
   test("staged-leaf statistics stay capped across self-joining rounds (no compounding)") {
@@ -293,15 +256,31 @@ class ReliableStagingSpec extends SparkSpec {
       j.alias("a").join(j.alias("b"), col("a.p") === col("b.comp"))
         .select(col("a.comp").as("comp"), col("b.p").as("p"))
     }
-    var cur = graft.ops.Staging.stage(
-      Seq((1L, 2L), (2L, 3L), (3L, 3L)).toDF("comp", "p"), reliable = false)
-    for (_ <- 1 to 4) cur = graft.ops.Staging.stage(selfJoinRound(cur), reliable = false)
+    var cur = Staging.stage(Seq((1L, 2L), (2L, 3L), (3L, 3L)).toDF("comp", "p"))
+    for (_ <- 1 to 4) cur = Staging.stage(selfJoinRound(cur))
     val bits = cur.queryExecution.optimizedPlan.stats.sizeInBytes.bitLength
     assert(bits <= 51, s"staged-leaf stats compounding again: $bits bits after 4 rounds")
-    // and the reliable posture's leaf obeys the same cap
-    val rel = graft.ops.Staging.stage(selfJoinRound(cur), reliable = true)
-    val relBits = rel.queryExecution.optimizedPlan.stats.sizeInBytes.bitLength
-    rel.unpersist()
+    // and the checkpoint-dir posture's leaf obeys the same cap
+    val relBits = checkpointed(
+      Staging.stage(selfJoinRound(cur)).queryExecution.optimizedPlan.stats.sizeInBytes.bitLength)
     assert(relBits <= 51, s"reliable staged-leaf stats uncapped: $relBits bits")
+  }
+
+  test("a relax and a peel operator run the same jobs inside and outside a checkpoint dir") {
+    // the observation that ends each round rides the staging job on both
+    // postures: a checkpoint() adds no probe job
+    import org.apache.spark.JobCounter
+    def jobs(run: => DataFrame): Int =
+      JobCounter(spark.sparkContext)(run.write.format("noop").mode("overwrite").save())
+    for ((name, run) <- Seq[(String, () => DataFrame)](
+        ("multiSourceCloseness", () =>
+          GraphMetrics.multiSourceCloseness(edges, Seq(1L, 10L).toDF("id"))),
+        ("kCore", () => GraphMetrics.kCore(edges, k = 2)))) {
+      jobs(run()) // warm-up: the first run of a shape may plan differently
+      val local = jobs(run())
+      val reliable = checkpointed(jobs(run()))
+      info(s"$name: $local jobs without a dir, $reliable with one")
+      assert(reliable == local, s"$name ran $reliable jobs inside a dir, $local outside")
+    }
   }
 }

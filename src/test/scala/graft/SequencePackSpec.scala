@@ -96,9 +96,8 @@ class SequencePackSpec extends SparkSpec {
 
   test("reliable=true matches the default posture") {
     val docs = (1L to 80L).map(i => (i, 1L + (i * 7) % 20)).toDF("doc_id", "n_tokens")
-    def run(rel: Boolean) =
-      SequencePack.nextFitWindows(docs, capacity = 32, reliable = rel)
-        .collect().map(_.toString).sorted.toSeq
-    assert(run(rel = true) == run(rel = false))
+    val (local, rel) = bothPostures(
+      SequencePack.nextFitWindows(docs, capacity = 32).collect().map(_.toString).sorted.toSeq)
+    assert(rel == local)
   }
 }

@@ -73,25 +73,25 @@ class SpanningForestSpec extends SparkSpec {
   test("reliable=true matches the localCheckpoint path") {
     val edges = Seq((1L, 2L, 5L), (2L, 3L, 1L), (3L, 4L, 2L), (4L, 1L, 4L), (1L, 3L, 3L))
       .toDF("a_id", "b_id", "weight")
-    def run(reliable: Boolean) = SpanningForest.boruvka(edges, reliable = reliable)
-      .collect().map(_.toString).toSeq.sorted
-    assert(run(reliable = true) == run(reliable = false))
+    val (local, reliable) =
+      bothPostures(SpanningForest.boruvka(edges).collect().map(_.toString).toSeq.sorted)
+    assert(reliable == local)
   }
 
   test("reliable path releases every per-round frame (result-only residue)") {
-    // A long path forces multiple Borůvka rounds (components halve), so a
-    // leak of any per-round frame (elected edges, labels, parent-pointer
-    // jumps, edge labeling) shows up as extra persisted RDDs. Only the
-    // returned forest's own pin may remain.
+    // A long path forces multiple Borůvka rounds (components halve).
+    // Inside a checkpoint dir every per-round frame (elected edges,
+    // labels, parent-pointer jumps, edge labeling) and the forest are
+    // checkpoint files, so the run leaves no persisted RDD.
     val rnd = new scala.util.Random(41)
     val edges = (0L until 24L).map(i => (i, i + 1, 100L + rnd.nextInt(50)))
       .toDF("a_id", "b_id", "weight")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val forest = SpanningForest.boruvka(edges, reliable = true)
-    assert(forest.count() == 24L)
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.size <= 1, s"leaked persisted RDDs beyond the returned forest: $leaked")
-    spark.catalog.clearCache()
+    val leaked = checkpointed {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      assert(SpanningForest.boruvka(edges).count() == 24L)
+      spark.sparkContext.getPersistentRDDs.keySet -- before
+    }
+    assert(leaked.isEmpty, s"leaked persisted RDDs: $leaked")
   }
 
   test("singleLinkage matches a driver-side union-find at every threshold") {
