@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `explain("formatted")` for named queries to files — the
   * optimization rounds' evidence trail (`plans/rNN/<query>_<suffix>.txt`).
   * Not part of the driver contract; measurement tooling only.
@@ -18,15 +16,7 @@ object PlanDump {
     require(args.length == 3, "usage: PlanDump <outDir> <suffix> <q1,q2,...>")
     val Array(outDir, suffix, names) = args
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(defaultCpus = "32")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val wanted = names.split(",").map(_.trim).filter(_.nonEmpty)
     val byName = SparkEntry.queries

@@ -236,19 +236,11 @@ object ScaleSmoke {
     val out = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR",
       java.nio.file.Paths.get(sys.props("user.dir"), "target", "sf1").toString)
     val replicas = sys.env.getOrElse("SPARK_GRAFT_REPLICAS", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // core (static) conf for the checkpoint probe below — settable
-      // only at session creation: without it a long checkpointed run
-      // keeps every round's checkpoint files until exit
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // core (static) conf for the checkpoint probe below — settable only at
+    // session creation: without it a long checkpointed run keeps every
+    // round's checkpoint files until exit
+    val spark = SparkEntry.localSession(defaultCpus = "32",
+      "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true")
 
     // Generation-scheme version: replicas produced by an older scheme
     // (e.g. without the per-replica date bands q281 needs) would silently

@@ -13,6 +13,25 @@ import graft.ops.Sessionize
   */
 object SparkEntry {
 
+  /** The `local[cpus]` session of the command-line mains (Bench, Verify,
+    * PlanDump, ScaleSmoke): `cpus` task threads and shuffle partitions,
+    * read from `SPARK_GRAFT_CPUS` (else `defaultCpus`), AQE on, UTC, no
+    * UI, WARN logging, and `extra` confs on top.
+    */
+  private[graft] def localSession(defaultCpus: String, extra: (String, String)*): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config(extra.toMap)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** q213's synthetic point cloud — hash-scattered coordinates from the
     * customer key. ONE definition shared by the oracled query
     * (`bandOffset = 0`) and `ScaleSmoke`'s replica-banded sf1 variant

@@ -875,7 +875,9 @@ private[graft] object VectorCatalog {
       val exact = Similarity.bruteForceTopK(emb, queries, k = 10)
         .select(col("query_id"), col("neighbor_id"), col("rank"))
       val adc = Similarity.pqAdcTopK(emb, queries, m = 4, k = 16, topK = 10)
-      Similarity.rrfFuse(exact, adc, kConst = 60, topK = 10)
+      Indexing.rrfFuse(Seq(exact, adc), "query_id", "neighbor_id", "rank", topK = 10)
+        .select(col("query_id").cast("bigint"), col("neighbor_id").cast("bigint"),
+          col("rrf_score").as("rrf_e6"), col("fused_rank").as("rank"))
     },
       // q342: the q19 cosine ranking (restricted to the 8 shared queries)
       // full-outer-joined with the q327 ADC ranking, integer RRF scores.

@@ -146,11 +146,6 @@ object TextFunctions {
     }
   }
 
-  /** Single-expression convenience form (tests / ad-hoc use). Pipelines
-    * should stage [[paddedText]] first — see [[langGuessFromPadded]].
-    */
-  def langGuess(text: Column): Column = langGuessFromPadded(paddedText(text))
-
   /** Rolling polynomial fingerprint (Rabin–Karp shape): fold the character
     * codes left-to-right as `acc·base + code (mod m)`. Unlike [[fingerprint]]
     * (md5), the rolling form extends incrementally — the building block for

@@ -73,9 +73,6 @@ object Io {
     df.where(col("_corrupt_record").isNotNull)
   }
 
-  def readParquet(spark: SparkSession, dir: String, table: String): DataFrame =
-    spark.read.parquet(s"$dir/$table.parquet")
-
   /** Lenient CSV scan — the delimited-text twin of [[readJsonLenient]]:
     * malformed lines land in `_corrupt_record` (PERMISSIVE) instead of
     * failing the scan; split with the same [[goodRecords]] /

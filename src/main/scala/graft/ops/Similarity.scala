@@ -644,43 +644,6 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("adc_d2"), col("rank"))
   }
 
-  /** RECIPROCAL RANK FUSION (Cormack–Clarke–Büttcher, SIGIR 2009) of
-    * two rankings — the standard way to combine lexical (BM25) and
-    * vector (ANN) retrieval without score calibration: each list
-    * contributes `⌊1e6 / (kConst + rank)⌋` per item, items absent from
-    * a list contribute 0, fused order is (score desc, id asc). The
-    * contribution is exact integer division, so fused scores and ranks
-    * replay bit-for-bit — no float score normalization anywhere
-    * (exactly the property RRF is loved for, taken to its integer
-    * conclusion).
-    *
-    * Scale shape: one full-outer equi-join on (query, item) between
-    * two already-top-k-sized rankings (k rows per query per side) and
-    * one window rank per query — every frame here is k-sized per
-    * query, never corpus-sized.
-    */
-  def rrfFuse(
-      a: DataFrame,
-      b: DataFrame,
-      kConst: Int = 60,
-      topK: Int = 10,
-      queryIdCol: String = "query_id",
-      itemCol: String = "neighbor_id",
-      rankCol: String = "rank"): DataFrame = {
-    require(kConst >= 1 && topK >= 1, s"bad rrf params: $kConst/$topK")
-    def side(df: DataFrame, out: String): DataFrame =
-      df.select(col(queryIdCol).cast("long").as("query_id"),
-        col(itemCol).cast("long").as("neighbor_id"),
-        expr(s"1000000L div ($kConst + cast($rankCol as bigint))").as(out))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("rrf_e6").desc, col("neighbor_id").asc)
-    side(a, "__ca").join(side(b, "__cb"), Seq("query_id", "neighbor_id"), "full")
-      .select(col("query_id"), col("neighbor_id"),
-        (coalesce(col("__ca"), lit(0L)) + coalesce(col("__cb"), lit(0L))).as("rrf_e6"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= topK)
-  }
-
   /** Per-rank cumulative weights for [[rankAgreement]]: the truncated
     * rank-biased-overlap weighting (Webber–Moffat–Zobel, TOIS 2010)
     * with persistence p, in a pure-integer chain — W₁ = 1e6 − p_e6,

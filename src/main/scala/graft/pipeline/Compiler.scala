@@ -28,14 +28,12 @@ import graft.ops.{Enrich, Mappings}
 object PipelineCompiler {
 
   /** Resolves a spec-file path/URI to something Spark can read. Tests remap
-    * the reference's absolute paths onto fixture dirs; production would map
-    * `s3` inputs to `s3a://bucket/prefix`.
+    * the reference's absolute paths onto fixture dirs; in production the
+    * `s3a://bucket/prefix` of an `s3` input is read as it is.
     */
   type PathResolver = String => String
 
   val s3aResolver: PathResolver = identity
-
-  final case class StageResult(stage: StageSpec, output: DataFrame)
 
   /** Topologically order stages so every mapping write precedes its reads,
     * preserving declaration order among independent stages.
@@ -43,17 +41,11 @@ object PipelineCompiler {
   def orderStages(spec: PipelineSpec): Vector[StageSpec] = {
     val writerOf: Map[String, String] =
       spec.stages.flatMap(s => s.mappingWrite.map(w => w.mappingName -> s.name)).toMap
-    val indexOf = spec.stages.map(_.name).zipWithIndex.toMap
     val deps: Map[String, Set[String]] = spec.stages.map { s =>
-      s.name -> s.mappingRead.toSet[MappingRead].flatMap { r =>
-        writerOf.get(r.mappingName) match {
-          case Some(w) if w != s.name => Set(w)
-          case Some(_)                => Set.empty[String]
-          case None =>
-            throw new IllegalArgumentException(
-              s"stage ${s.name} reads mapping '${r.mappingName}' that no stage writes")
-        }
-      }
+      s.name -> (s.mappingRead.toSet[MappingRead].map { r =>
+        writerOf.getOrElse(r.mappingName, throw new IllegalArgumentException(
+          s"stage ${s.name} reads mapping '${r.mappingName}' that no stage writes"))
+      } - s.name)
     }.toMap
     val ordered = Vector.newBuilder[StageSpec]
     val placed = scala.collection.mutable.Set.empty[String]
@@ -69,9 +61,10 @@ object PipelineCompiler {
     ordered.result()
   }
 
-  /** Execute the pipeline for one `hour`. Returns each stage's output and
-    * the final mapping DataFrames. Outputs are written as JSON when the
-    * stage declares `output_file` (resolved through `resolve`).
+  /** Execute the pipeline for one `hour`: every stage's input and output
+    * path template is `{hour}`-templated and resolved through `resolve`,
+    * and a stage's enriched records are written as JSON when it declares
+    * `output_file` and `writeOutputs` is set.
     *
     * Work that does not depend on an earlier stage does not wait for it:
     *  - every path is resolved up front on the calling thread, in stage
@@ -92,14 +85,11 @@ object PipelineCompiler {
       spec: PipelineSpec,
       hour: String,
       resolve: PathResolver = s3aResolver,
-      writeOutputs: Boolean = true): (Vector[StageResult], Map[String, DataFrame]) = {
+      writeOutputs: Boolean = true): Unit = {
     val stages = orderStages(spec)
     val paths = stages.map { stage =>
-      val input = stage.input match {
-        case LocalFileInput(p) => resolve(Io.templated(p, hour))
-        case S3Input(bucket, prefix) => resolve(s"s3a://$bucket/${Io.templated(prefix, hour)}")
-      }
-      (input, stage.outputFile.filter(_ => writeOutputs).map(out => resolve(Io.templated(out, hour))))
+      (resolve(Io.templated(stage.input, hour)),
+        stage.outputFile.filter(_ => writeOutputs).map(out => resolve(Io.templated(out, hour))))
     }
     val pool = Executors.newFixedThreadPool(math.max(1, stages.size), { (r: Runnable) =>
       val t = new Thread(r, s"graft-pipeline-$hour")
@@ -134,8 +124,8 @@ object PipelineCompiler {
       }
       val written = writes.map(_.fold[Try[Unit]](Success(()))(settled))
       enriched.zip(written).foreach { case (df, w) => df.get; w.get }
-      (stages.zip(enriched).map { case (stage, df) => StageResult(stage, df.get) },
-        mappings.map { case (name, m) => name -> m.get })
+      // A mapping no stage reads still fails the run when its extraction does.
+      mappings.values.foreach(_.get)
     } finally {
       pool.shutdown()
       pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)

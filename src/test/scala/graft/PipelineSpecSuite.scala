@@ -78,7 +78,116 @@ class PipelineSpecSuite extends SparkSpec {
     assert(spec.stages(1).mappingRead.contains(MappingRead("trace_to_client", "traceId")))
     assert(spec.stages(1).mappingWrite.contains(
       MappingWrite("span_to_trace_client", "spans.spanId", Vector("traceId", "clientId"), single = false)))
-    assert(spec.stages(2).input == S3Input("demo-log-bucket", "logs/{hour}/"))
+    assert(spec.stages(2).input == "s3a://demo-log-bucket/logs/{hour}/")
+  }
+
+  test("YAML forms beyond the canonical layout parse to the same spec") {
+    // Block lists, flow maps, unquoted and single-quoted scalars, and
+    // comments (with commas) after values, as YAML loaders read them.
+    val dialect =
+      s"""# The reference pipeline, in other YAML forms.
+         |pipeline_name: 'observability_correlation_pipeline'  # single quotes
+         |stages:
+         |  stage_1:
+         |    description: Process user experience data
+         |    input: {type: local_file, file_path: "$fixtures/user_exp_{hour}.json"}
+         |    redis_mappings:
+         |      write:
+         |        redis_key_prefix: trace_to_client
+         |        from_fields: {key: traceId, value: clientId}
+         |    output_file: "{out}/user_exp_processed_{hour}.json"  # written, then read back
+         |
+         |  stage_2:
+         |    description: "Enhance trace data"
+         |    input:
+         |      type: s3   # bucket, prefix
+         |      bucket: demo-trace-bucket
+         |      prefix: "traces/{hour}/"
+         |    redis_mappings:
+         |      read: {redis_key_prefix: trace_to_client, key_field: traceId}
+         |      write:
+         |        redis_key_prefix: span_to_trace_client
+         |        from_fields:
+         |          key: spans.spanId
+         |          value:
+         |            - traceId   # first
+         |            - clientId
+         |    output_file: '{out}/trace_processed_{hour}.json'
+         |  stage_3:
+         |    description: Enhance log data
+         |    input: {type: s3, bucket: demo-log-bucket, prefix: 'logs/{hour}/'}
+         |    redis_mappings:
+         |      read:
+         |        redis_key_prefix: span_to_trace_client
+         |        key_field: spanId
+         |    output_file: "{out}/log_processed_{hour}.json"
+         |""".stripMargin
+    assert(PipelineSpec.fromYaml(dialect) == PipelineSpec.fromYaml(yamlText))
+    // A comma or a '#' inside quotes is text, in a flow list or a block one.
+    val quoted = PipelineSpec.fromYaml(dialect.replace(
+      "          value:\n            - traceId   # first\n            - clientId",
+      "          value: [\"trace, id\", 'client # id']"))
+    assert(quoted.stages(1).mappingWrite.map(_.valueFields).contains(Vector("trace, id", "client # id")))
+    val block = PipelineSpec.fromYaml(dialect.replace("- clientId", "- \"client, id # 2\""))
+    assert(block.stages(1).mappingWrite.map(_.valueFields).contains(Vector("traceId", "client, id # 2")))
+    // Unquoted numbers and dates are read as their text.
+    val dated = PipelineSpec.fromYaml(dialect.replace("prefix: \"traces/{hour}/\"", "prefix: 2024-11-16"))
+    assert(dated.stages(1).input == "s3a://demo-trace-bucket/2024-11-16")
+    val numbered = PipelineSpec.fromYaml(dialect.replace("prefix: \"traces/{hour}/\"", "prefix: 2024"))
+    assert(numbered.stages(1).input == "s3a://demo-trace-bucket/2024")
+  }
+
+  /** `yamlText` with the first `key:` entry after `stage:` (and the lines
+    * nested under it) replaced by `lines`.
+    */
+  private def replacing(stage: String, key: String, lines: String*): String = {
+    val all = yamlText.linesIterator.toVector
+    val k = all.indexWhere(_.trim.startsWith(s"$key:"), all.indexWhere(_.trim == s"$stage:"))
+    val indent = all(k).takeWhile(_ == ' ').length
+    val end = all.indexWhere(_.takeWhile(_ == ' ').length <= indent, k + 1) match {
+      case -1 => all.size
+      case e  => e
+    }
+    (all.take(k) ++ lines ++ all.drop(end)).mkString("", "\n", "\n")
+  }
+
+  test("malformed specs fail with an IllegalArgumentException naming the stage and key") {
+    val cases = Seq(
+      // missing required keys
+      yamlText.replace("pipeline_name:", "name:") -> "missing key 'pipeline_name'",
+      replacing("stages", "stages") -> "missing key 'stages'",
+      replacing("stage_1", "input") -> "missing key 'stages.stage_1.input'",
+      replacing("stage_1", "type") -> "missing key 'stages.stage_1.input.type'",
+      replacing("stage_1", "file_path") -> "missing key 'stages.stage_1.input.file_path'",
+      replacing("stage_2", "bucket") -> "missing key 'stages.stage_2.input.bucket'",
+      replacing("stage_3", "prefix") -> "missing key 'stages.stage_3.input.prefix'",
+      replacing("stage_2", "redis_key_prefix") -> "missing key 'stages.stage_2.redis_mappings.read.redis_key_prefix'",
+      replacing("stage_1", "redis_key_prefix") -> "missing key 'stages.stage_1.redis_mappings.write.redis_key_prefix'",
+      replacing("stage_3", "key_field") -> "missing key 'stages.stage_3.redis_mappings.read.key_field'",
+      replacing("stage_1", "from_fields") -> "missing key 'stages.stage_1.redis_mappings.write.from_fields'",
+      replacing("stage_2", "key") -> "missing key 'stages.stage_2.redis_mappings.write.from_fields.key'",
+      replacing("stage_1", "value") -> "missing key 'stages.stage_1.redis_mappings.write.from_fields.value'",
+      // a non-map where a map belongs
+      replacing("stages", "stages", "stages: [stage_1, stage_2]") -> "'stages' is not a map",
+      replacing("stages", "stage_2", "  stage_2: \"Enhance trace data\"") -> "'stages.stage_2' is not a map",
+      replacing("stage_3", "input", "    input: \"s3a://demo-log-bucket/logs/\"") -> "'stages.stage_3.input' is not a map",
+      replacing("stage_1", "from_fields", "        from_fields: [traceId, clientId]") ->
+        "'stages.stage_1.redis_mappings.write.from_fields' is not a map",
+      // a non-scalar where a scalar belongs
+      replacing("stage_2", "bucket", "      bucket: [a, b]") -> "'stages.stage_2.input.bucket' is not a scalar",
+      // an unknown input type
+      yamlText.replace("type: \"local_file\"", "type: \"gcs\"") ->
+        "unknown input type 'gcs' at 'stages.stage_1.input.type'",
+      // duplicate keys: a stage name, and a key inside a stage
+      (yamlText + "  stage_1:\n    input: {type: local_file, file_path: x}\n") -> "duplicate key 'stages.stage_1'",
+      replacing("stage_2", "prefix", "      prefix: \"traces/{hour}/\"", "      prefix: \"spans/{hour}/\"") ->
+        "duplicate key 'stages.stage_2.input.prefix'",
+      // not YAML at all
+      "stages: [" -> "pipeline spec:")
+    cases.foreach { case (text, expected) =>
+      val e = intercept[IllegalArgumentException](PipelineSpec.fromYaml(text))
+      assert(e.getMessage.contains(expected), s"'${e.getMessage}' does not name $expected")
+    }
   }
 
   test("stage ordering follows mapping dependencies even when declared shuffled") {
@@ -250,12 +359,9 @@ class PipelineSpecSuite extends SparkSpec {
     // readable path.
     val spec = PipelineSpec.fromYaml(yamlText)
     val s3Stage = spec.stages(1)
-    assert(s3Stage.input == S3Input("demo-trace-bucket", "traces/{hour}/"))
+    assert(s3Stage.input == "s3a://demo-trace-bucket/traces/{hour}/")
     // default resolver must pass s3a URIs through untouched, hour resolved
-    val uri = s3Stage.input match {
-      case S3Input(b, p) => PipelineCompiler.s3aResolver(s"s3a://$b/${graft.io.Io.templated(p, hour)}")
-      case other         => fail(s"unexpected input $other")
-    }
+    val uri = PipelineCompiler.s3aResolver(graft.io.Io.templated(s3Stage.input, hour))
     assert(uri == s"s3a://demo-trace-bucket/traces/$hour/")
     val s3aPresent =
       try { Class.forName("org.apache.hadoop.fs.s3a.S3AFileSystem"); true }

@@ -719,7 +719,8 @@ class PlanShapeSpec extends SparkSpec {
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
     val a = (1 to 40).map(i => (i.toLong % 4, i.toLong + 100, (i % 10 + 1).toLong))
       .toDF("query_id", "neighbor_id", "rank")
-    val plan = initialPlan(graft.ops.Similarity.rrfFuse(a, a))
+    // the two rankings fuse by a union and one (key, item) aggregation
+    val plan = initialPlan(graft.ops.Indexing.rrfFuse(Seq(a, a), "query_id", "neighbor_id", "rank"))
     assert(plan.collect { case c: CartesianProductExec => c }.isEmpty &&
       plan.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
       "non-equi join in rrfFuse plan")

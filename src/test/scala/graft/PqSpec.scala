@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Similarity
+import graft.ops.{Indexing, Similarity}
 import org.apache.spark.sql.functions._
 
 /** Product quantization: exact in-memory replay of the lattice codes and
@@ -188,8 +188,9 @@ class PqSpec extends SparkSpec {
   test("rrfFuse: exact integer fusion, absences contribute zero, ties to smaller id") {
     val a = Seq((1L, 10L, 1L), (1L, 11L, 2L), (1L, 12L, 3L)).toDF("query_id", "neighbor_id", "rank")
     val b = Seq((1L, 11L, 1L), (1L, 13L, 2L)).toDF("query_id", "neighbor_id", "rank")
-    val got = Similarity.rrfFuse(a, b, kConst = 60, topK = 10)
-      .collect().map(r => (r.getLong(1), (r.getLong(2), r.getLong(3)))).toMap
+    val got = Indexing.rrfFuse(Seq(a, b), "query_id", "neighbor_id", "rank", k0 = 60, topK = 10)
+      .collect().map(r => (r.getAs[Long]("neighbor_id"), (r.getAs[Long]("rrf_score"), r.getAs[Long]("fused_rank"))))
+      .toMap
     // 11: 1e6/62 + 1e6/61 = 16129 + 16393 = 32522 — top
     assert(got(11L) == ((1000000L / 62 + 1000000L / 61, 1L)))
     assert(got(10L) == ((1000000L / 61, 2L)))           // 16393
@@ -219,8 +220,8 @@ class PqSpec extends SparkSpec {
     // item 50 is rank 2 in both lists; 10 and 20 are rank-1 in one only
     val a = Seq((7L, 10L, 1L), (7L, 50L, 2L)).toDF("query_id", "neighbor_id", "rank")
     val b = Seq((7L, 20L, 1L), (7L, 50L, 2L)).toDF("query_id", "neighbor_id", "rank")
-    val top = Similarity.rrfFuse(a, b).where(col("rank") === 1).head()
-    assert(top.getLong(1) == 50L)
+    val top = Indexing.rrfFuse(Seq(a, b), "query_id", "neighbor_id", "rank").where(col("fused_rank") === 1).head()
+    assert(top.getAs[Long]("neighbor_id") == 50L)
   }
 
   test("ADC recall@5 against brute-force cosine clears the floor on clustered data") {
